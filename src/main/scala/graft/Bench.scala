@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Driver-run benchmark: times headline queries at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A warmup pass (table reads + the full query set
@@ -58,35 +58,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkConfDefaults.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache is JVM-wide and defaults to 100
-      // entries; a 60+-query session compiles several codegen stages per
-      // query, so at 100 the passes evict each other's classes and every
-      // re-execution pays Janino again. Size it to hold the whole
-      // suite's classes (static conf — must be set before the session).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // profiling knob: SPARK_GRAFT_AQE=0 disables adaptive execution to
-      // measure how much of the per-query floor is AQE re-planning
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_AQE", "1") != "0").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every remaining unpartitioned window in the registry runs over a
-    // BOUNDED summary frame (≤256 bucket offsets, day/decile spines,
-    // source catalogs — each site carries an inline size note, and
-    // PlanAuditSpec's range-partition guard structurally rejects an
-    // unpartitioned Window over raw data), so WindowExec's
-    // single-partition warning is pure noise here: ~300 identical
-    // lines per suite run that bury real warnings. Silence that one
-    // logger; the guard, not the log level, enforces the property.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = SparkConfDefaults.cpus
+    val spark = SparkConfDefaults.session()
 
     // The pinned ambient-drift control set (the d10/d14 adjudication
     // playbook, BASELINE.md): queries spanning trivial scans to heavy
@@ -191,11 +164,17 @@ object Bench {
     // SPARK_GRAFT_PROFILE=1: per-query execution-shape line (jobs,
     // stages, tasks, summed task time vs wall) — the floor-class
     // decomposition tool (VERDICT r14 #2b): wall >> task time means
-    // the query pays scheduling/driver floor, not compute.
+    // the query pays scheduling/planning floor, not compute — followed by
+    // one `[bench-stage]` line per stage (tasks, task time, the stage's
+    // own submission→completion wall, shuffle read), which separates
+    // stages that run 1-2 coalesced tasks serially from stages that are
+    // pure scheduling floor. Profile one query with
+    // SPARK_GRAFT_BENCH_ONLY=<query> SPARK_GRAFT_PROFILE=1.
     val profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
     val prof = new org.apache.spark.scheduler.SparkListener {
       val jobs = new java.util.concurrent.atomic.AtomicLong
-      val stages = new java.util.concurrent.atomic.AtomicLong
+      val stages = new java.util.concurrent.ConcurrentLinkedQueue[
+        org.apache.spark.scheduler.StageInfo]()
       val tasks = new java.util.concurrent.atomic.AtomicLong
       val taskNanos = new java.util.concurrent.atomic.AtomicLong
       override def onJobStart(
@@ -203,15 +182,14 @@ object Bench {
         jobs.incrementAndGet()
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
+        stages.add(e.stageInfo)
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
         if (e.taskMetrics != null)
           taskNanos.addAndGet(e.taskMetrics.executorRunTime * 1000000L)
       }
-      def snap(): (Long, Long, Long, Long) =
-        (jobs.get, stages.get, tasks.get, taskNanos.get)
+      def snap(): (Long, Long, Long) = (jobs.get, tasks.get, taskNanos.get)
     }
     if (profile) spark.sparkContext.addSparkListener(prof)
 
@@ -219,6 +197,7 @@ object Bench {
     // masquerade as a fast timing — failed queries are excluded from the
     // total, listed in the JSON, and fail the run's exit code.
     def time(name: String): Option[Double] = {
+      if (profile) prof.stages.clear()
       val before = if (profile) prof.snap() else null
       val t0 = System.nanoTime()
       try {
@@ -229,10 +208,22 @@ object Bench {
           // this query; the timing above is already taken
           Thread.sleep(300)
           val a = prof.snap()
+          import scala.jdk.CollectionConverters._
+          val st = prof.stages.asScala.toSeq.sortBy(_.stageId)
           System.err.println(f"[bench-prof] $name $sec%.3fs " +
-            f"jobs=${a._1 - before._1} stages=${a._2 - before._2} " +
-            f"tasks=${a._3 - before._3} " +
-            f"taskTime=${(a._4 - before._4) / 1e9}%.3fs")
+            f"jobs=${a._1 - before._1} stages=${st.size} " +
+            f"tasks=${a._2 - before._2} " +
+            f"taskTime=${(a._3 - before._3) / 1e9}%.3fs")
+          st.foreach { si =>
+            val wall = (for (s <- si.submissionTime; c <- si.completionTime)
+              yield (c - s) / 1e3).getOrElse(-1.0)
+            System.err.println(f"[bench-stage] $name ${si.stageId}%4d " +
+              f"tasks=${si.numTasks}%4d " +
+              f"taskTime=${si.taskMetrics.executorRunTime / 1e3}%7.3fs " +
+              f"wall=$wall%6.3fs shufRead=" +
+              f"${si.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6}%7.2fMB " +
+              si.name.takeWhile(_ != '\n').take(60))
+          }
         }
         System.err.println(f"[bench] $name $sec%.2fs")
         Some(sec)

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of named queries
-  * (all of them when none are named) at SPARK_GRAFT_SF_DIR. Used to
-  * check the shapes that matter at 100 TB — broadcasts on the dim/probe
-  * sides, PushedFilters/ReadSchema on scans, no duplicated subplans, no
+  * (all of them when none are named) at SPARK_GRAFT_SF_DIR, under the
+  * shipped session configuration. Used to check the shapes that matter
+  * at 100 TB — broadcasts on the dim/probe sides,
+  * PushedFilters/ReadSchema on scans, no duplicated subplans, no
   * cartesian products, WholeStageCodegen spans over the hot
   * projections.
   *
@@ -14,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkConfDefaults.session()
     val names =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted

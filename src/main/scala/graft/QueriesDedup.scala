@@ -31,18 +31,10 @@ object QueriesDedup {
     * tokenization per scale dir. The same pattern at 100 TB is
     * "tokenize once → checkpoint → fan out to every signature".
     */
-  private[graft] def docsWithTokens(s: SparkSession, d: String): DataFrame = {
-    val df = DedupOps.spread(
+  private[graft] def docsWithTokens(s: SparkSession, d: String): DataFrame =
+    SessionMemo.persistOnce(DedupOps.spread(
       Tables.documents(s, d)
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")))
-    // storageLevel consults the session CacheManager by plan equality, so
-    // re-invocations reuse the existing cache entry instead of stacking
-    // redundant persist() calls ("Asked to cache already cached data"
-    // warnings). Library consumers can drop the cache via [[unpersistAll]].
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))))
 
   /** Tokenized docs reduced to their distinct 3-shingle hashes, PERSISTED
     * (shared by d2 and d3 via CacheManager plan equality). Materializing
@@ -54,86 +46,9 @@ object QueriesDedup {
     * array. Same discipline as [[docsWithTokens]] — at 100 TB this is
     * "signature once → checkpoint → fan out".
     */
-  private def docsWithShingles(s: SparkSession, d: String): DataFrame = {
-    val df = docsWithTokens(s, d)
-      .select(col("doc_id"), DedupOps.shingleHashes(col("toks"), 3).as("sh"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
-
-  /** Guard-persist: consult the CacheManager (plan equality) so repeat
-    * invocations reuse the existing entry instead of stacking persist()
-    * calls — the house discipline of every shared frame below.
-    */
-  private def guardPersist(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-
-  /** Object-identity memo of eagerly-checkpointed derived frames — the
-    * bpeChainMemo discipline applied to the keeper-pair chain: the
-    * dedup-first caches stack six layers of joins, and although
-    * CacheManager plan-equality made every EXECUTION a cached scan,
-    * each invocation still re-ANALYZED the full expansion tree (~0.3 s
-    * of driver-side Catalyst per consumer at any scale — measured: d2,
-    * a pure cached read, ran 0.34 s wall / 0.02 s task). The
-    * localCheckpoint truncates the plan to a LogicalRDD, so consumers
-    * build shallow plans; the memo shares by object identity because a
-    * LogicalRDD cannot be re-found by plan equality. Context-end
-    * cleanup mirrors Tables.resolved.
-    */
-  private val frameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  private val memoCleanup =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def memoChk(s: SparkSession, d: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    if (memoCleanup.compareAndSet(false, true))
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler
-                .SparkListenerApplicationEnd): Unit = {
-            frameMemo.clear()
-            memoCleanup.set(false)
-          }
-        })
-    // get-then-putIfAbsent rather than computeIfAbsent: cache builds
-    // NEST (verified_pairs builds keeper_pairs builds keeper_index...),
-    // and ConcurrentHashMap forbids recursive updates inside a mapping
-    // function. A racing duplicate build is harmless — the loser's
-    // checkpoint blocks are released and the winner is returned.
-    val key = (s, d, name)
-    val existing = frameMemo.get(key)
-    if (existing != null) existing
-    else {
-      val built = build.localCheckpoint()
-      val prev = frameMemo.putIfAbsent(key, built)
-      if (prev == null) built
-      else {
-        built.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(blocking = false)
-          case _ =>
-        }
-        prev
-      }
-    }
-  }
-
-  /** Drop a memoized frame and free its checkpoint blocks explicitly
-    * (the deterministic-release discipline from QueriesText).
-    */
-  private def dropMemo(s: SparkSession, d: String, name: String): Unit =
-    Option(frameMemo.remove((s, d, name))).foreach {
-      _.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
+  private def docsWithShingles(s: SparkSession, d: String): DataFrame =
+    SessionMemo.persistOnce(docsWithTokens(s, d)
+      .select(col("doc_id"), DedupOps.shingleHashes(col("toks"), 3).as("sh")))
 
   /** d18's ranked frame BUILD (un-checkpointed): deterministic range
     * buckets from seeded-sampled boundaries (withRangeBuckets — a pure
@@ -197,11 +112,11 @@ object QueriesDedup {
     * clone-heavy fixture, and the sf ≤ 1 oracles are unchanged.
     */
   private[graft] def cloneMembers(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "clone_members")(DedupOps.cloneMembership(
-      docsWithTokens(s, d), "doc_id", col("toks")))
+    SessionMemo.checkpoint(s, d, "dedup.clone_members")(
+      DedupOps.cloneMembership(docsWithTokens(s, d), "doc_id", col("toks")))
 
   private def keeperIndex(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "keeper_index") {
+    SessionMemo.checkpoint(s, d, "dedup.keeper_index") {
       val w = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("w"))
         .withColumnRenamed("keeper", "doc_id")
@@ -211,11 +126,11 @@ object QueriesDedup {
     }
 
   private def keeperPairs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "keeper_pairs")(
+    SessionMemo.checkpoint(s, d, "dedup.keeper_pairs")(
       DedupOps.pairIntersectionsFromIndex(keeperIndex(s, d)))
 
   private def cliqueSelf(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "clique_self") {
+    SessionMemo.checkpoint(s, d, "dedup.clique_self") {
       val copies = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("copies"))
         .filter(col("copies") >= 2)
@@ -248,7 +163,7 @@ object QueriesDedup {
     * what d29 had already expanded at B=2).
     */
   private def budgetPairs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "budget_pairs") {
+    SessionMemo.checkpoint(s, d, "dedup.budget_pairs") {
       val (e, buckets) = prefixBucketFrames(s, d)
       DedupOps.prefixVerifiedMinOff(e, buckets, 7, 10, maxB = 8)
     }
@@ -267,7 +182,7 @@ object QueriesDedup {
         .select(col("id").as("doc_id")), "doc_id")
     val (e, buckets) = DedupOps.prefixBuckets(keeperSh, "doc_id", "sh",
       7, 10, maxBucket = 1000L)
-    (e, memoChk(s, d, "keeper_prefix_buckets")(buckets))
+    (e, SessionMemo.checkpoint(s, d, "dedup.keeper_prefix_buckets")(buckets))
   }
 
   /** MinHash signatures over KEEPERS only, memo-checkpointed — the
@@ -276,7 +191,7 @@ object QueriesDedup {
     * otherwise recompute the signature pass per count branch.
     */
   private def keeperSigs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "keeper_sigs") {
+    SessionMemo.checkpoint(s, d, "dedup.keeper_sigs") {
       DedupOps.minhashSigs(
         docsWithShingles(s, d)
           .join(cloneMembers(s, d).filter(col("id") === col("keeper"))
@@ -294,7 +209,7 @@ object QueriesDedup {
     * raw-sized materialization is the answer itself.
     */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "verified_pairs")(
+    SessionMemo.checkpoint(s, d, "dedup.verified_pairs")(
       // spread: the cross ∪ intra expansion doubles partition count,
       // and the iterative consumers (d7's Pregel, d9's PageRank)
       // symmetrize this frame again — without re-bounding, every round
@@ -316,7 +231,7 @@ object QueriesDedup {
       : (DataFrame, DataFrame) = {
     val (e, buckets) = DedupOps.prefixBuckets(docsWithShingles(s, d),
       "doc_id", "sh", 7, 10, maxBucket = 1000L)
-    (e, memoChk(s, d, "prefix_buckets")(buckets))
+    (e, SessionMemo.checkpoint(s, d, "dedup.prefix_buckets")(buckets))
   }
 
   /** d31's body over a tokenized (doc_id, toks) frame: full-token-hash
@@ -385,18 +300,6 @@ object QueriesDedup {
     "dedup.budget_pairs" -> (budgetPairs _),
     "dedup.keeper_buckets" ->
       ((s: SparkSession, d: String) => keeperPrefixFrames(s, d)._2))
-
-  /** Release the shared tokenization/shingle/pair caches (for long-lived
-    * sessions that are done with the dedup query family).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    Seq("keeper_prefix_buckets", "budget_pairs", "prefix_buckets",
-      "verified_pairs", "keeper_sigs", "clique_self", "keeper_pairs",
-      "keeper_index", "clone_members")
-      .foreach(dropMemo(s, d, _))
-    docsWithShingles(s, d).unpersist()
-    docsWithTokens(s, d).unpersist()
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup on a canonicalization (first-5-token prefix hash):

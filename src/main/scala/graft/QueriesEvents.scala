@@ -665,26 +665,12 @@ object QueriesEvents {
     * sample/offsets/main branches each re-execute their input lineage
     * — against the cache those branches read a materialized 1-row-per-
     * user frame instead of re-running the events aggregate. */
-  private[graft] def rfmUsers(s: SparkSession, d: String): DataFrame = {
-    val df = Tables.events(s, d)
+  private[graft] def rfmUsers(s: SparkSession, d: String): DataFrame =
+    SessionMemo.persistOnce(Tables.events(s, d)
       .groupBy("user_id")
       .agg(max(to_date(col("ts"))).as("last_day"),
         count(lit(1)).as("freq"),
-        sum(floor(col("value") * 100).cast("long")).as("cents"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
-
-  /** (session, dir) memo of the ranked frame's eager localCheckpoint —
-    * the QueriesDedup.memoChk discipline: CacheManager plan-equality
-    * reuse would re-ANALYZE the window+broadcast pipeline per
-    * consumer invocation; the checkpointed LogicalRDD shared by object
-    * identity costs nothing to reference.
-    */
-  private val rankedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
+        sum(floor(col("value") * 100).cast("long")).as("cents")))
 
   /** The e11/e14 shared STACKED-RANK frame (VERDICT r15 #5 — fold
     * e14's separate prefix pass into e11's machinery): one
@@ -697,23 +683,12 @@ object QueriesEvents {
     * metric m's descending order (user_id tiebreak) and cum is the
     * inclusive running sum of `freq` in that order (meaningful for
     * m='f', e14's cumulative-events curve; harmless for the others).
+    * Checkpointed through [[SessionMemo]]: CacheManager plan-equality
+    * reuse would re-ANALYZE the window+broadcast pipeline per consumer
+    * invocation.
     */
-  private[graft] def rfmRanked(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    val existing = rankedMemo.get(key)
-    if (existing != null) return existing
-    val built = rfmRankedPlan(s, d).localCheckpoint()
-    val prev = rankedMemo.putIfAbsent(key, built)
-    if (prev == null) built
-    else {
-      built.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-      prev
-    }
-  }
+  private[graft] def rfmRanked(s: SparkSession, d: String): DataFrame =
+    SessionMemo.checkpoint(s, d, "events.rfm_ranked")(rfmRankedPlan(s, d))
 
   /** The raw (un-checkpointed) build pipeline of [[rfmRanked]] — split
     * out so PlanAuditSpec can pin the build's physical properties
@@ -786,12 +761,9 @@ object QueriesEvents {
         .select(col("st").as("i"), lit("(null)").as("j")))
     val n = edges.groupBy("i", "j").agg(count(lit(1)).as("nij"))
     val ni = n.groupBy("i").agg(sum(col("nij")).as("ni"))
-    val df = n.join(ni, Seq("i"))
+    SessionMemo.persistOnce(n.join(ni, Seq("i"))
       .select(col("i"), col("j"),
-        (col("nij").cast("double") / col("ni").cast("double")).as("p"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+        (col("nij").cast("double") / col("ni").cast("double")).as("p")))
   }
 
   /** This family's shared persisted caches (the QueriesDedup.sharedCaches
@@ -803,18 +775,6 @@ object QueriesEvents {
     "events.rfm_users" -> (rfmUsers _),
     "events.rfm_ranked" -> (rfmRanked _),
     "events.markov_edges" -> (markovEdges _))
-
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    rfmUsers(s, d).unpersist()
-    Option(rankedMemo.remove((s, d))).foreach {
-      _.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
-    markovEdges(s, d).unpersist()
-  }
 
   /** The e6/e7 shared sessionization frame: gap>30min boundaries via
     * lag + running boundary count, both windows on ONE user_id

@@ -148,9 +148,7 @@ object QueriesGraph {
     val edges = GraphOps.coOccurrenceWeights(cp, "l_partkey", "o_custkey",
         MaxCustomersPerPart)
       .filter(col("w") >= MinSharedParts).select(col("a"), col("b"))
-    if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      edges.persist()
-    else edges
+    SessionMemo.persistOnce(edges)
   }
 
   /** This family's shared persisted caches (the QueriesDedup.sharedCaches
@@ -160,12 +158,6 @@ object QueriesGraph {
   private[graft] def sharedCaches
       : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "graph.copurchase_edges" -> (coPurchaseEdges _))
-
-  /** Release the shared edge cache (for long-lived sessions done with
-    * the graph query family).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit =
-    coPurchaseEdges(s, d).unpersist()
 
   /** The oracle CTEs are declared MATERIALIZED: DuckDB inlines each CTE
     * reference by default, and this pipeline references `cap` twice,

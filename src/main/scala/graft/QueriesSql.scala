@@ -261,15 +261,12 @@ object QueriesSql {
       // in-memory 80-row relation, not re-scan and re-aggregate
       // lineitem 80 times (the uncached form measured 26 s at
       // sf0.01; cached it is sub-second per level).
-      val files = sqlSession(s, d, "lineitem").sql(
+      val files = SessionMemo.persistOnce(sqlSession(s, d, "lineitem").sql(
         """SELECT month, est, CAST(row_number() OVER (ORDER BY month)
           |  AS BIGINT) AS rk
           |FROM (SELECT date_trunc('month', l_shipdate) AS month,
           |    count(*) * 64 AS est
-          |  FROM lineitem GROUP BY 1)""".stripMargin)
-      if (files.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE)
-        files.persist()
+          |  FROM lineitem GROUP BY 1)""".stripMargin))
       files.createOrReplaceTempView("graft_sql15_files")
       s.sql(
         """WITH RECURSIVE f AS (

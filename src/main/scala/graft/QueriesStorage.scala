@@ -2592,15 +2592,23 @@ object QueriesStorage {
     // discipline every other family uses — so the benched cost is the
     // exchange-free READ path, exactly the economics bucketing buys:
     // pay the shuffle once at write time, amortize over every read.
+    // Revenue is summed EXACTLY: a double sum depends on summation
+    // order, and a group whose exact revenue ends in a half cent then
+    // rounds either way on each engine. Price (whole cents) times
+    // 1 - discount (whole percent) is a whole number of 1e-4 units, so
+    // the sum runs in LONG arithmetic — the value of the oracle's
+    // DECIMAL(15,2) sum without per-row BigDecimal work.
     "stor1_bucketed_join" -> ((s, d) => {
       val (obName, lbName) = bucketedTables(s, d)
+      val hundredths = (c: Column) => floor(c * 100 + lit(0.5))
       s.table(obName).hint("merge")
         .join(s.table(lbName).hint("merge"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"))
+          round(sum(hundredths(col("l_extendedprice")) *
+            hundredths(lit(1) - col("l_discount"))).cast("decimal(38,4)") / 10000, 2)
+            .cast("double").as("revenue"))
     }),
 
     // Zone maps over a range-clustered layout: model each shipdate
@@ -3686,7 +3694,9 @@ object QueriesStorage {
     // orders⋈lineitem aggregate straight off the parquet.
     "stor1_bucketed_join" ->
       """SELECT o_orderpriority, count(*) AS n_items,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+        |    * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)
+        |    AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |GROUP BY 1""".stripMargin,
     "stor2_zonemap" ->

@@ -733,43 +733,14 @@ object QueriesText {
     * rendered 414 nested InMemoryRelations). The fix is the
     * connectedComponents discipline: eagerly localCheckpoint each
     * round (constant-size LogicalRDD plans) and share by OBJECT
-    * IDENTITY through this memo, since a LogicalRDD can't be found by
-    * plan equality. localCheckpoint is the single-process form; a
-    * resilient cluster deployment would use checkpoint() to durable
-    * storage — same shape, same truncation.
+    * IDENTITY through [[SessionMemo]], since a LogicalRDD can't be
+    * found by plan equality. localCheckpoint is the single-process
+    * form; a resilient cluster deployment would use checkpoint() to
+    * durable storage — same shape, same truncation.
     */
-  private val bpeChainMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (Seq[DataFrame], DataFrame)]()
-
-  /** The memo's keys hold SparkSessions strongly; without this, a
-    * session stopped without [[unpersistAll]] would pin its entry (and
-    * the session object) for the life of the JVM (ADVICE r14). One
-    * context-wide listener clears the memo at application end — the
-    * lifetime that actually bounds checkpoint blocks, since stopping
-    * the context drops the block manager anyway.
-    */
-  private val memoCleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def ensureMemoCleanup(s: SparkSession): Unit =
-    if (memoCleanupRegistered.compareAndSet(false, true))
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler
-                .SparkListenerApplicationEnd): Unit = {
-            bpeChainMemo.clear()
-            memoCleanupRegistered.set(false)
-          }
-        })
-
   private def bpeChainFrames(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) = {
-    ensureMemoCleanup(s)
-    bpeChainMemo.computeIfAbsent((s, d),
-      _ => buildBpeChainFrames(s, d))
-  }
+      : (Seq[DataFrame], DataFrame) =
+    SessionMemo(s, d, "text.bpe_chain")(buildBpeChainFrames(s, d))
 
   private def buildBpeChainFrames(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) = {
@@ -846,31 +817,8 @@ object QueriesText {
     "text.lm_bigrams" ->
       ((s: SparkSession, d: String) => lmBigrams(trainToks(s, d))))
 
-  /** Release this family's shared caches — the BPE vocab ladder (one
-    * checkpointed frame per round) and x36's c1/c2 model tables — for
-    * long-lived sessions done with the text queries (the house
-    * unpersistAll discipline). The removed memo entry's checkpointed
-    * frames have their underlying RDD blocks unpersisted EXPLICITLY
-    * (ADVICE r14: relying on GC + ContextCleaner made storage release
-    * nondeterministic — a long-lived session could hold every round's
-    * blocks until a full GC).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    Option(bpeChainMemo.remove((s, d))).foreach { case (frames, _) =>
-      frames.foreach { f =>
-        f.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(blocking = false)
-          case _ =>
-        }
-      }
-    }
-    lmUnigrams(trainToks(s, d)).unpersist()
-    lmBigrams(trainToks(s, d)).unpersist()
-  }
-
   /** x36's training corpus: token arrays of the largest source (docs
-    * desc, source asc tiebreak) — extracted so [[unpersistAll]] can
+    * desc, source asc tiebreak) — extracted so the shared-cache list can
     * re-derive the c1/c2 cache plans.
     */
   private def trainToks(s: SparkSession, d: String): DataFrame = {
@@ -890,9 +838,7 @@ object QueriesText {
   private def lmUnigrams(trainToks: DataFrame): DataFrame = {
     val df = trainToks.select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   private def lmBigrams(trainToks: DataFrame): DataFrame = {
@@ -903,9 +849,7 @@ object QueriesText {
         (a, b) => struct(a.as("wa"), b.as("wb")))).as("p"))
       .groupBy(col("p.wa").as("wa"), col("p.wb").as("wb"))
       .agg(count(lit(1)).as("c2"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   private def lmTrigrams(trainToks: DataFrame): DataFrame =
@@ -1138,9 +1082,7 @@ object QueriesText {
     val df = QueriesDedup.docsWithTokens(s, d)
       .select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   /** Per-document bigram frequencies, PERSISTED (the tfFrame pattern at
@@ -1157,9 +1099,7 @@ object QueriesText {
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => concat(a, lit(" "), b))).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf2"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   private val enList = "['the','a','and','of','to','in','is']"

@@ -39,9 +39,7 @@ object QueriesVector {
   private def prep(s: SparkSession, d: String): DataFrame = {
     val df = VectorOps.prepared(Tables.embeddings(s, d), "vec_id",
       "embedding")
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   /** d23's cell-assigned corpus (id, cid, v, n2), PERSISTED with the
@@ -75,9 +73,7 @@ object QueriesVector {
         VectorOps.assignNearestEuclid(pts, cent0)), 2)
     val df = routed.select(col("id"), col("cid"), col("rk"), col("v"),
       VectorOps.norm2(col("v")).as("n2"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   /** d23/d24's cell-local near-dup pairs at probe depth `np` (shared
@@ -124,10 +120,7 @@ object QueriesVector {
 
   /** v19's routed cosine pairs, PERSISTED with the prep discipline:
     * all three nprobe arms are rk-filters over this ONE cosine join,
-    * so uncached it would re-execute once per arm. Guard-persisted
-    * (storageLevel check) and released in [[unpersistAll]] — the
-    * previous in-closure persist leaked the cache entry for the
-    * session's lifetime. */
+    * so uncached it would re-execute once per arm. */
   private def v19Pairs(s: SparkSession, d: String): DataFrame = {
     val df = v19CorpusCells(s, d)
       .join(broadcast(v19Routed(s, d)), Seq("centroid_id"))
@@ -136,9 +129,7 @@ object QueriesVector {
         VectorOps.dot(col("v_q"), col("v_n")),
         col("n2_q"), col("n2_n")), 6))
       .select(col("id_q"), col("id_n"), col("rk"), col("cos"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   /** v14/v21's PQ-encoded corpus (id_n, codes), PERSISTED (OPT r19,
@@ -154,9 +145,7 @@ object QueriesVector {
       VectorOps.pqEncode(
         VectorOps.pqDistances(col("v"), PqSubs, PqCodes, Dim))
         .as("codes"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
+    SessionMemo.persistOnce(df)
   }
 
   /** This family's shared persisted caches (the QueriesDedup.sharedCaches
@@ -169,16 +158,6 @@ object QueriesVector {
     "vector.semdedup_cells" -> (semdedupCells _),
     "vector.v19_pairs" -> (v19Pairs _),
     "vector.pq_codes" -> (pqCodes _))
-
-  /** Release the shared prep cache (for long-lived sessions done with
-    * the similarity-search family).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    prep(s, d).unpersist()
-    semdedupCells(s, d).unpersist()
-    v19Pairs(s, d).unpersist()
-    pqCodes(s, d).unpersist()
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact top-10 neighbors for the first 5 vectors: corpus scanned once,

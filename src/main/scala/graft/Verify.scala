@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Every query
+  * runs even when an earlier one failed; the exit status is non-zero
+  * when any failed, after all outputs and oracle_sql.json are written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (builder-side
@@ -24,36 +25,23 @@ object Verify {
       require((fs -- known).isEmpty,
         s"unknown families in SPARK_GRAFT_FAMILY: ${fs -- known}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkConfDefaults.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same deliberate silence as Bench: all remaining unpartitioned
-    // windows run over bounded summary frames (inline size notes at
-    // each site; PlanAuditSpec structurally rejects an unpartitioned
-    // Window over raw data), so the per-site WindowExec warning is
-    // noise that buries real warnings in the verify log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = SparkConfDefaults.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) =>
         (only.isEmpty || only(name)) &&
           famEnv.forall(_.contains(family(name))) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -72,5 +60,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ERROR: ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -63,30 +63,13 @@ final case class FormatTableSource(format: String, path: String,
   * trip that a suite invoking hundreds of queries pays hundreds of
   * times (measured: a visible slice of the ~0.25 s floor-class query
   * wall at sf0.1). A real deployment resolves a table once in its
-  * catalog; the memo is that resolution. DataFrames are immutable, so
-  * sharing the object is safe; a context-end listener clears the map so
-  * stopped sessions are not pinned (the bpeChainMemo discipline).
+  * catalog; the memo ([[graft.SessionMemo]]) is that resolution.
+  * DataFrames are immutable, so sharing the object is safe.
   */
 object Tables {
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  private val cleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (cleanupRegistered.compareAndSet(false, true))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler
-                .SparkListenerApplicationEnd): Unit = {
-            resolved.clear()
-            cleanupRegistered.set(false)
-          }
-        })
-    resolved.computeIfAbsent((spark, dir, name),
-      _ => ParquetTableSource(dir, name).load(spark))
-  }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.SessionMemo(spark, dir, "table." + name)(
+      ParquetTableSource(dir, name).load(spark))
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")

@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** O4 conf passthrough (the reference's retry budget): the defaults
   * object must carry the reference's exact Spark-level values and
   * actually apply them through both entry paths. */
-class SparkConfDefaultsSpec extends AnyFunSuite {
+class SparkConfDefaultsSpec extends SparkTestBase {
 
   test("retryConf mirrors the reference's Spark retry budget") {
     assert(SparkConfDefaults.retryConf ==
@@ -21,11 +19,13 @@ class SparkConfDefaultsSpec extends AnyFunSuite {
       assert(c.get(k) == v, s"$k must be set on the SparkConf")
   }
 
-  test("withDefaults(builder) is the Verify/Bench wiring") {
-    // Builder internals are private; assert through the same fold the
-    // builder path uses — a builder accepts each config key without
-    // throwing and returns the builder for chaining.
-    val b = SparkSession.builder()
-    assert(SparkConfDefaults.withDefaults(b) eq b)
+  test("the shared test session runs the shipped configuration") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "256k")
+    assert(conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "1024")
+    assert(conf.get("spark.task.maxFailures") == "12")
+    val cpus = SparkConfDefaults.cpus
+    assert(conf.get("spark.sql.shuffle.partitions") == cpus.toString)
+    assert(spark.sparkContext.master == s"local[$cpus]")
   }
 }

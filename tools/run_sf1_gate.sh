@@ -30,16 +30,25 @@ echo "[sf1-gate] $(date -u +%FT%TZ) Spark side: full registry at sf1" \
   | tee "$LOG"
 rm -rf "$OUT"
 NAMES="${ONLY#--only=}"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  sbt -batch "runMain graft.Verify $SF1 $OUT ${NAMES}" 2>&1 \
+# Both sides always run; each one's exit status is kept (PIPESTATUS,
+# outside set -e) and the gate fails at the end if either failed.
+set +e
+sbt -batch "runMain graft.Verify $SF1 $OUT ${NAMES}" 2>&1 \
   | grep -E "\[verify\]|success|error" | tee -a "$LOG" | tail -3
+spark_rc=${PIPESTATUS[0]}
+set -e
 
 echo "[sf1-gate] $(date -u +%FT%TZ) DuckDB side (threads/mem capped, " \
   "temp on the big partition)" | tee -a "$LOG"
+set +e
 DUCKDB_THREADS="${DUCKDB_THREADS:-28}" \
 DUCKDB_MEMLIMIT="${DUCKDB_MEMLIMIT:-90GB}" \
 DUCKDB_TEMPDIR="${DUCKDB_TEMPDIR:-/root/repo/benchdata/duckdb_tmp}" \
   python3 tools/check_oracle.py "$SF1" "$OUT" \
     ${ONLY:+"$ONLY"} 2>&1 | tee -a "$LOG" | tail -3
+oracle_rc=${PIPESTATUS[0]}
+set -e
 
-echo "[sf1-gate] $(date -u +%FT%TZ) done — full log in $LOG"
+echo "[sf1-gate] $(date -u +%FT%TZ) done (Verify exit $spark_rc," \
+  "oracle exit $oracle_rc) — full log in $LOG" | tee -a "$LOG"
+[ "$spark_rc" -eq 0 ] && [ "$oracle_rc" -eq 0 ]
