@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{DedupOps, MultimodalOps}
 import graft.streaming.StreamingOps
 import graft.sources.Tables
+import graft.storage.CommitLog
 
 /** Event-time windowing (batch-checkable forms of the streaming operators)
   * and multimodal-column queries.
@@ -30,47 +31,38 @@ object QueriesStreaming {
     * hand-rolled sync loop: the engine's checkpoint WAL carries the
     * consumed version, the manifest ledger dedups replays, and the
     * source inherits readIncrement's refusals (rewrite commits,
-    * expired history). Build-once per (dir, fingerprint);
-    * StreamingSpec pins the live-stream properties (per-version
+    * expired history). Built once by
+    * [[QueriesStorage.buildOnce]]; StreamingSpec pins the live-stream properties (per-version
     * pacing, restart resume, loud refusal) on its own tables.
     */
   private[graft] def st12Tables(s: SparkSession,
       d: String): (String, String) = {
-    import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
     val up = QueriesStorage.stor9Table(s, d)
-    val down =
-      s"${System.getProperty("java.io.tmpdir")}/graft_streamsync/" +
-        s"${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
-        CommitLog.srcFingerprint(d, "lineitem")
-    QueriesStreaming.synchronized {
-      // Try-guarded completeness probe (stor14's discipline): a
-      // partially-reaped log must read as "rebuild", never wedge
-      val complete = scala.util.Try(
-        CommitLog.latestVersion(down) >= 3L &&
-          CommitLog.committedBatchIds(down) == Set(0L, 1L, 2L))
-        .getOrElse(false)
-      if (!complete) {
-        CommitLog.deleteRecursively(new java.io.File(down))
-        val q = s.readStream.format(CommitLogStream.Format)
-          .option("path", up)
-          .option("maxVersionsPerBatch", "1")
-          .load()
-          .select(col("l_orderkey"),
-            floor(col("l_quantity") * 100 + lit(0.5)).cast("long")
-              .as("qty_cents"),
-            col("ship"))
-          .writeStream
-          .option("checkpointLocation", s"$down/_streamckpt")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            CommitLog.appendBatch(down, b, id): Unit
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    }
-    (up, down)
+    (up, QueriesStorage.buildOnce(d, "streamsync", "lineitem")(
+        threeBatches) { down =>
+      val q = s.readStream.format(CommitLogStream.Format)
+        .option("path", up)
+        .option("maxVersionsPerBatch", "1")
+        .load()
+        .select(col("l_orderkey"),
+          floor(col("l_quantity") * 100 + lit(0.5)).cast("long")
+            .as("qty_cents"),
+          col("ship"))
+        .writeStream
+        .option("checkpointLocation", s"$down/_streamckpt")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          CommitLog.appendBatch(down, b, id): Unit
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    })
   }
+
+  /** The probe of a downstream fed by three exactly-once micro-batches. */
+  private def threeBatches(down: String): Boolean =
+    CommitLog.latestVersion(down) >= 3L &&
+      CommitLog.committedBatchIds(down) == Set(0L, 1L, 2L)
 
   /** st15's pair: a CDC-shaped UPSTREAM — three append commits of
     * keyed re-pricings over orders 1997 (the base, then price := k on
@@ -80,59 +72,45 @@ object QueriesStreaming {
     * each trigger lands the batch file plus its keys as an equality
     * delete in ONE exactly-once ledgered commit, so the downstream is
     * a keyed LATEST-STATE table (the Hudi streaming-upsert shape)
-    * while st12's appendBatch downstream is an append log. Build-once
-    * per (dir, fingerprint).
+    * while st12's appendBatch downstream is an append log. Both are
+    * built once by [[QueriesStorage.buildOnce]].
     */
   private[graft] def st15Tables(s: SparkSession,
       d: String): (String, String) = {
-    import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
-    val tagd = d.replaceAll("[^A-Za-z0-9]", "_")
-    val fp = CommitLog.srcFingerprint(d, "orders")
-    val up =
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdcup/${tagd}_$fp"
-    val down = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_streamupsert/${tagd}_$fp"
-    QueriesStreaming.synchronized {
-      if (scala.util.Try(CommitLog.latestVersion(up)).getOrElse(0L) < 3L) {
-        CommitLog.deleteRecursively(new java.io.File(up))
-        val dd = CommitLog.dataDir(up)
-        val o97 = graft.sources.Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .filter(year(col("o_orderdate")) === 1997)
-        o97.write.parquet(s"$dd/b1")
-        CommitLog.commit(up, Seq("b1"), Nil, 0L)
-        o97.filter(col("o_orderkey") % 10 === 0)
-          .select(col("o_orderkey"),
-            col("o_orderkey").cast("double").as("o_totalprice"))
-          .write.parquet(s"$dd/b2")
-        CommitLog.commit(up, Seq("b2"), Nil, 1L)
-        o97.filter(col("o_orderkey") % 100 === 0)
-          .select(col("o_orderkey"),
-            (col("o_orderkey") * 2).cast("double").as("o_totalprice"))
-          .write.parquet(s"$dd/b3")
-        CommitLog.commit(up, Seq("b3"), Nil, 2L)
-      }
-      val complete = scala.util.Try(
-        CommitLog.latestVersion(down) >= 3L &&
-          CommitLog.committedBatchIds(down) == Set(0L, 1L, 2L))
-        .getOrElse(false)
-      if (!complete) {
-        CommitLog.deleteRecursively(new java.io.File(down))
-        val q = s.readStream.format(CommitLogStream.Format)
-          .option("path", up)
-          .option("maxVersionsPerBatch", "1")
-          .load()
-          .writeStream
-          .option("checkpointLocation", s"$down/_streamckpt")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            CommitLog.upsertBatch(down, b, Seq("o_orderkey"), id): Unit
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val up = QueriesStorage.buildOnce(d, "cdcup", "orders")(
+        CommitLog.latestVersion(_) >= 3L) { up =>
+      val dd = CommitLog.dataDir(up)
+      val o97 = graft.sources.Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .filter(year(col("o_orderdate")) === 1997)
+      o97.write.parquet(s"$dd/b1")
+      CommitLog.commit(up, Seq("b1"), Nil, 0L)
+      o97.filter(col("o_orderkey") % 10 === 0)
+        .select(col("o_orderkey"),
+          col("o_orderkey").cast("double").as("o_totalprice"))
+        .write.parquet(s"$dd/b2")
+      CommitLog.commit(up, Seq("b2"), Nil, 1L)
+      o97.filter(col("o_orderkey") % 100 === 0)
+        .select(col("o_orderkey"),
+          (col("o_orderkey") * 2).cast("double").as("o_totalprice"))
+        .write.parquet(s"$dd/b3")
+      CommitLog.commit(up, Seq("b3"), Nil, 2L)
     }
-    (up, down)
+    (up, QueriesStorage.buildOnce(d, "streamupsert", "orders")(
+        threeBatches) { down =>
+      val q = s.readStream.format(CommitLogStream.Format)
+        .option("path", up)
+        .option("maxVersionsPerBatch", "1")
+        .load()
+        .writeStream
+        .option("checkpointLocation", s"$down/_streamckpt")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          CommitLog.upsertBatch(down, b, Seq("o_orderkey"), id): Unit
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    })
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -149,7 +127,6 @@ object QueriesStreaming {
     // recomputes every version's state from orders' 1997 era and the
     // %10/%100 re-pricing arithmetic.
     "st15_stream_upsert" -> ((s, d) => {
-      import graft.storage.CommitLog
       val (_, down) = st15Tables(s, d)
       val nBatches = CommitLog.committedBatchIds(down).size
       (1L to 3L).map { v =>
@@ -172,7 +149,6 @@ object QueriesStreaming {
     // recomputes every row from the upstream month windows (one
     // downstream version per upstream commit by the pacing contract).
     "st12_stream_commitlog" -> ((s, d) => {
-      import graft.storage.CommitLog
       val (_, down) = st12Tables(s, d)
       val nBatches = CommitLog.committedBatchIds(down).size
       (1L to 3L).map { v =>
@@ -199,7 +175,6 @@ object QueriesStreaming {
     // source's mode=cdf (StreamingSpec). The oracle recomputes both
     // change sets from raw lineitem window arithmetic.
     "st13_cdf" -> ((s, d) => {
-      import graft.storage.CommitLog
       val t = QueriesStorage.stor15Table(s, d)
       CommitLog.changes(s, t, 0L, 3L)
         .select(col("_commit_version").as("version"),
@@ -226,7 +201,6 @@ object QueriesStreaming {
     // checksums. The oracle recomputes everything from stor13's band
     // arithmetic over raw orders.
     "st14_cdf_update_pairs" -> ((s, d) => {
-      import graft.storage.CommitLog
       val t = QueriesStorage.stor13Table(s, d)
       val feed = CommitLog.changes(s, t, 1L, 2L)
       val minus = feed.filter(col("_change_type")

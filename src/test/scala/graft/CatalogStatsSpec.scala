@@ -101,35 +101,37 @@ class CatalogStatsSpec extends SparkTestBase {
     "append flips the join decision") {
     import graft.storage.CommitLog
     import spark.implicits._
-    val t = Files.createTempDirectory("graft_cta").toFile.getAbsolutePath
-    def stage(rel: String, df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.parquet(s"${CommitLog.dataDir(t)}/$rel")
-    // v1: uniform keys → skew 1 → a large-right join plans "shuffle"
-    stage("f1", (1L to 2000L).toDF("k"))
-    CommitLog.commitAndAnalyze(spark, t, Seq("f1"), Nil, 0L, "k")
-    val st1 = StatsCatalog.readTable(t, "k")
-    assert(st1.isDefined && st1.get.fingerprint === "v1")
-    assert(st1.get.rows === 2000L && st1.get.skew === 1L)
-    assert(RelationalOps.chooseJoinStrategy(
-      rightRows = 2000000L, skewFactor = st1.get.skew) === "shuffle")
-    // a plain commit WITHOUT the refresh leaves the entry stale — the
-    // catalog must say so (None), never serve pre-append stats
-    stage("f2", (2001L to 2100L).toDF("k"))
-    CommitLog.commit(t, Seq("f2"), Nil, 1L)
-    assert(StatsCatalog.readTable(t, "k").isEmpty)
-    // ...and the fallback re-ANALYZE self-heals against the new head
-    val healed = StatsCatalog.readOrAnalyzeTable(spark, t, "k")
-    assert(healed.source === "analyzed" && healed.stats.rows === 2100L)
-    assert(StatsCatalog.readTable(t, "k").exists(_.fingerprint === "v2"))
-    // v3: a HOT-KEY append lands WITH the refresh — the very next
-    // catalog read carries the skew and the decision flips to salted
-    stage("f3", Seq.fill(4000)(7L).toDF("k"))
-    CommitLog.commitAndAnalyze(spark, t, Seq("f3"), Nil, 2L, "k")
-    val st3 = StatsCatalog.readTable(t, "k")
-    assert(st3.isDefined && st3.get.fingerprint === "v3")
-    assert(st3.get.maxKeyRows === 4001L) // key 7's v1 row + 4000 appended
-    assert(st3.get.skew >= 4L, s"skew ${st3.get.skew}")
-    assert(RelationalOps.chooseJoinStrategy(
-      rightRows = 2000000L, skewFactor = st3.get.skew) === "salted")
+    withTempDir("graft_cta") { tmp =>
+      val t = tmp.getAbsolutePath
+      def stage(rel: String, df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.parquet(s"${CommitLog.dataDir(t)}/$rel")
+      // v1: uniform keys → skew 1 → a large-right join plans "shuffle"
+      stage("f1", (1L to 2000L).toDF("k"))
+      CommitLog.commitAndAnalyze(spark, t, Seq("f1"), Nil, 0L, "k")
+      val st1 = StatsCatalog.readTable(t, "k")
+      assert(st1.isDefined && st1.get.fingerprint === "v1")
+      assert(st1.get.rows === 2000L && st1.get.skew === 1L)
+      assert(RelationalOps.chooseJoinStrategy(
+        rightRows = 2000000L, skewFactor = st1.get.skew) === "shuffle")
+      // a plain commit WITHOUT the refresh leaves the entry stale — the
+      // catalog must say so (None), never serve pre-append stats
+      stage("f2", (2001L to 2100L).toDF("k"))
+      CommitLog.commit(t, Seq("f2"), Nil, 1L)
+      assert(StatsCatalog.readTable(t, "k").isEmpty)
+      // ...and the fallback re-ANALYZE self-heals against the new head
+      val healed = StatsCatalog.readOrAnalyzeTable(spark, t, "k")
+      assert(healed.source === "analyzed" && healed.stats.rows === 2100L)
+      assert(StatsCatalog.readTable(t, "k").exists(_.fingerprint === "v2"))
+      // v3: a HOT-KEY append lands WITH the refresh — the very next
+      // catalog read carries the skew and the decision flips to salted
+      stage("f3", Seq.fill(4000)(7L).toDF("k"))
+      CommitLog.commitAndAnalyze(spark, t, Seq("f3"), Nil, 2L, "k")
+      val st3 = StatsCatalog.readTable(t, "k")
+      assert(st3.isDefined && st3.get.fingerprint === "v3")
+      assert(st3.get.maxKeyRows === 4001L) // key 7's v1 row + 4000 appended
+      assert(st3.get.skew >= 4L, s"skew ${st3.get.skew}")
+      assert(RelationalOps.chooseJoinStrategy(
+        rightRows = 2000000L, skewFactor = st3.get.skew) === "salted")
+    }
   }
 }

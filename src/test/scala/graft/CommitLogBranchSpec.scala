@@ -12,11 +12,8 @@ import graft.storage.CommitLog
   */
 class CommitLogBranchSpec extends SparkTestBase {
 
-  private def freshDir(): String = {
-    val f = Files.createTempDirectory("graft_clb_test").toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  private def freshDir(): String =
+    sharedTempDir("graft_clb_test").getAbsolutePath
 
   private def stage(dir: String, rel: String, rows: Seq[(Long, String)])
       : Unit = {

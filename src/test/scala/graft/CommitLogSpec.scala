@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.storage.CommitLog
 
@@ -12,11 +11,8 @@ import graft.storage.CommitLog
   */
 class CommitLogSpec extends SparkTestBase {
 
-  private def freshDir(): String = {
-    val f = Files.createTempDirectory("graft_cl_test").toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  private def freshDir(): String =
+    sharedTempDir("graft_cl_test").getAbsolutePath
 
   private def stage(dir: String, rel: String, rows: Seq[(Long, String)])
       : Unit = {
@@ -155,25 +151,26 @@ class CommitLogSpec extends SparkTestBase {
     val ms = org.apache.spark.sql.execution.streaming
       .runtime.MemoryStream[(Long, String)]
     ms.addData((1L, "a"), (2L, "b"))
-    val ckpt = Files.createTempDirectory("graft_cl_ckpt").toString
-    def run(): Unit = {
-      val q = ms.toDF().toDF("k", "part").writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          CommitLog.appendBatch(t, b, id): Unit
-        }.start()
-      try q.awaitTermination(120000) finally q.stop()
+    withTempDir("graft_cl_ckpt") { ckpt =>
+      def run(): Unit = {
+        val q = ms.toDF().toDF("k", "part").writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            CommitLog.appendBatch(t, b, id): Unit
+          }.start()
+        try q.awaitTermination(120000) finally q.stop()
+      }
+      run()
+      assert(CommitLog.read(spark, t).count() === 2L)
+      // restart from the same checkpoint with one new batch: only the
+      // new rows land, the old batch is not re-committed
+      ms.addData((3L, "c"))
+      run()
+      assert(CommitLog.read(spark, t).count() === 3L)
+      assert(CommitLog.read(spark, t).select("k").as[Long].collect()
+        .toSet === Set(1L, 2L, 3L))
     }
-    run()
-    assert(CommitLog.read(spark, t).count() === 2L)
-    // restart from the same checkpoint with one new batch: only the
-    // new rows land, the old batch is not re-committed
-    ms.addData((3L, "c"))
-    run()
-    assert(CommitLog.read(spark, t).count() === 3L)
-    assert(CommitLog.read(spark, t).select("k").as[Long].collect()
-      .toSet === Set(1L, 2L, 3L))
   }
 
   /** The 8-writer race body, shared by the hard-link and

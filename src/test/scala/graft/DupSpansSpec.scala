@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 /** Hand-computed pins for d25_dup_spans (cross-document maximal
   * duplicate-span extraction, K=5-gram index, min span 8 tokens).
@@ -25,18 +24,19 @@ class DupSpansSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'unit' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
-    val dir = Files.createTempDirectory("graft_d25").toString
-    docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val got = SparkEntry.queries("d25_dup_spans")(spark, dir)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-      .toSet
-    assert(got == Set(
-      (1L, 2L, 0L, 2L, 10L),  // a..j, one island on diag -2
-      (1L, 4L, 0L, 0L, 8L),   // a..h, diag 0
-      (1L, 4L, 4L, 10L, 8L),  // e..l, diag -6 (second island, same pair)
-      (2L, 4L, 2L, 0L, 8L)),  // a..h at different offsets
-      s"got $got")
+    withTempDir("graft_d25") { dir =>
+      docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val got = SparkEntry.queries("d25_dup_spans")(spark, dir.toString)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))
+        .toSet
+      assert(got == Set(
+        (1L, 2L, 0L, 2L, 10L),  // a..j, one island on diag -2
+        (1L, 4L, 0L, 0L, 8L),   // a..h, diag 0
+        (1L, 4L, 4L, 10L, 8L),  // e..l, diag -6 (second island, same pair)
+        (2L, 4L, 2L, 0L, 8L)),  // a..h at different offsets
+        s"got $got")
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.sources.FormatTableSource
@@ -31,16 +30,16 @@ class FormatSourceSpec extends SparkTestBase {
     fixture.schema.fields.map(_.copy(nullable = true)))
 
   private def roundtrip(format: String): Unit = {
-    val dir = Files.createTempDirectory(s"graft_$format").toFile
-    dir.deleteOnExit()
-    val path = s"${dir.getAbsolutePath}/t"
-    fixture.write.format(format).save(path)
-    val back = FormatTableSource(format, path, declared).load(spark)
-    assert(back.schema == declared,
-      s"$format must reproduce the declared schema exactly")
-    assert(back.exceptAll(fixture).isEmpty &&
-      fixture.exceptAll(back).isEmpty,
-      s"$format round trip must be lossless")
+    withTempDir(s"graft_$format") { dir =>
+      val path = s"${dir.getAbsolutePath}/t"
+      fixture.write.format(format).save(path)
+      val back = FormatTableSource(format, path, declared).load(spark)
+      assert(back.schema == declared,
+        s"$format must reproduce the declared schema exactly")
+      assert(back.exceptAll(fixture).isEmpty &&
+        fixture.exceptAll(back).isEmpty,
+        s"$format round trip must be lossless")
+    }
   }
 
   test("csv round trip is lossless under declared schema") {
@@ -60,32 +59,32 @@ class FormatSourceSpec extends SparkTestBase {
   test("malformed rows under a declared schema null out, not crash") {
     // PERMISSIVE (the default) keeps the pipeline alive on dirty landing
     // data: a non-numeric id parses to null instead of failing the job
-    val dir = Files.createTempDirectory("graft_dirty").toFile
-    dir.deleteOnExit()
-    val path = s"${dir.getAbsolutePath}/dirty"
-    Seq("""{"id": 1, "text": "ok", "score": 2.0, "lang": "en"}""",
-      """{"id": "NOT_A_NUMBER", "text": "bad", "score": 1.0, "lang": "en"}""")
-      .toDF("value").coalesce(1).write.text(path)
-    val back = FormatTableSource("json", path, declared).load(spark)
-    assert(back.count() == 2)
-    assert(back.filter(col("id").isNull).count() == 1,
-      "the malformed row must survive with a null id")
+    withTempDir("graft_dirty") { dir =>
+      val path = s"${dir.getAbsolutePath}/dirty"
+      Seq("""{"id": 1, "text": "ok", "score": 2.0, "lang": "en"}""",
+        """{"id": "NOT_A_NUMBER", "text": "bad", "score": 1.0, "lang": "en"}""")
+        .toDF("value").coalesce(1).write.text(path)
+      val back = FormatTableSource("json", path, declared).load(spark)
+      assert(back.count() == 2)
+      assert(back.filter(col("id").isNull).count() == 1,
+        "the malformed row must survive with a null id")
+    }
   }
 
   test("format source composes with the engine's operators") {
-    val dir = Files.createTempDirectory("graft_compose").toFile
-    dir.deleteOnExit()
-    val path = s"${dir.getAbsolutePath}/docs"
-    graft.sources.Tables.documents(spark, sf0001)
-      .write.format("json").save(path)
-    val viaJson = FormatTableSource("json", path,
-      graft.sources.Tables.documents(spark, sf0001).schema).load(spark)
-    // same tokenization result regardless of landing format
-    val a = viaJson.select(col("doc_id"),
-      graft.operators.TextOps.tokenCount(col("text")).as("n"))
-    val b = graft.sources.Tables.documents(spark, sf0001)
-      .select(col("doc_id"),
+    withTempDir("graft_compose") { dir =>
+      val path = s"${dir.getAbsolutePath}/docs"
+      graft.sources.Tables.documents(spark, sf0001)
+        .write.format("json").save(path)
+      val viaJson = FormatTableSource("json", path,
+        graft.sources.Tables.documents(spark, sf0001).schema).load(spark)
+      // same tokenization result regardless of landing format
+      val a = viaJson.select(col("doc_id"),
         graft.operators.TextOps.tokenCount(col("text")).as("n"))
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+      val b = graft.sources.Tables.documents(spark, sf0001)
+        .select(col("doc_id"),
+          graft.operators.TextOps.tokenCount(col("text")).as("n"))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -86,21 +85,22 @@ class HttpSourceSpec extends SparkTestBase {
     withServer { (server, base) =>
       server.createContext("/houston", ex => respond(ex, 200, houston))
       server.createContext("/austin", ex => respond(ex, 200, austin))
-      val dir = Files.createTempDirectory("graft-http-e1").toString
-      val sinks = WeatherSinks(
-        ParquetSink(s"$dir/fact"), ParquetSink(s"$dir/weekly"),
-        ParquetSink(s"$dir/humidity"))
-      val urls = Seq(s"$base/houston", s"$base/austin")
-      val start = lit("2023-11-17 00:00:00").cast("timestamp")
-      val end = lit("2023-11-18 00:00:00").cast("timestamp")
-      val clock = lit("2023-11-25 12:00:00").cast("timestamp")
-      WeatherPipeline.fullLoad(spark,
-        ForecastJsonSource.fromUrls(spark, urls), sinks, start, end, clock)
-      assert(sinks.fact.read(spark).count() == 3)
-      // re-fetch + re-run: the J1 anti-join keeps the fact table deduped
-      WeatherPipeline.fullLoad(spark,
-        ForecastJsonSource.fromUrls(spark, urls), sinks, start, end, clock)
-      assert(sinks.fact.read(spark).count() == 3)
+      withTempDir("graft-http-e1") { dir =>
+        val sinks = WeatherSinks(
+          ParquetSink(s"$dir/fact"), ParquetSink(s"$dir/weekly"),
+          ParquetSink(s"$dir/humidity"))
+        val urls = Seq(s"$base/houston", s"$base/austin")
+        val start = lit("2023-11-17 00:00:00").cast("timestamp")
+        val end = lit("2023-11-18 00:00:00").cast("timestamp")
+        val clock = lit("2023-11-25 12:00:00").cast("timestamp")
+        WeatherPipeline.fullLoad(spark,
+          ForecastJsonSource.fromUrls(spark, urls), sinks, start, end, clock)
+        assert(sinks.fact.read(spark).count() == 3)
+        // re-fetch + re-run: the J1 anti-join keeps the fact table deduped
+        WeatherPipeline.fullLoad(spark,
+          ForecastJsonSource.fromUrls(spark, urls), sinks, start, end, clock)
+        assert(sinks.fact.read(spark).count() == 3)
+      }
     }
   }
 

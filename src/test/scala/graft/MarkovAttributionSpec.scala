@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Hand-computed pins for e18 (Markov removal-effect attribution):
@@ -16,7 +15,7 @@ class MarkovAttributionSpec extends SparkTestBase {
     val ev = rows.map { case (eid, uid, tp, sec) =>
       (eid, uid, tp, 1.0, new Timestamp(1700000000000L + sec * 1000L))
     }.toDF("event_id", "user_id", "event_type", "value", "ts")
-    val dir = Files.createTempDirectory("graft_markov").toString
+    val dir = sharedTempDir("graft_markov").toString
     ev.coalesce(1).write.parquet(s"$dir/events.parquet")
     dir
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 /** Hand-computed pins for the ml family: closed-form OLS and the ridge
   * path over exact integer moments. Fixtures are built so the solve is
@@ -21,7 +20,7 @@ class MlSpec extends SparkTestBase {
         "CAST(x1 AS DOUBLE) AS l_quantity",
         "CAST(x2 AS DOUBLE) / 100.0 AS l_discount",
         "CAST(yq AS DOUBLE) * 10.0 AS l_extendedprice")
-    val dir = Files.createTempDirectory("graft_ml").toString
+    val dir = sharedTempDir("graft_ml").toString
     li.coalesce(1).write.parquet(s"$dir/lineitem.parquet")
     dir
   }

@@ -13,8 +13,7 @@ import graft.sinks.ParquetSink
 class PartitionLayoutSpec extends SparkTestBase {
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_layout")
-      .toFile.getAbsolutePath
+    val d = sharedTempDir("graft_layout").getAbsolutePath
     val sink = ParquetSink(d, partitionCols = Seq("day"))
     sink.append(graft.sources.Tables.events(spark, sf0001)
       .select(col("event_id"), col("user_id"), col("event_type"),

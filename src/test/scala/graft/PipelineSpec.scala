@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.pipeline.{WeatherPipeline, WeatherSinks}
 import graft.sinks.ParquetSink
@@ -21,39 +20,41 @@ class PipelineSpec extends SparkTestBase {
     "Temperature", "Humidity", "WindSpeed", "WeatherDescription")
 
   test("full load twice: fact table deduped, reports appended") {
-    val dir = Files.createTempDirectory("graft-pipe").toString
-    val sinks = WeatherSinks(
-      ParquetSink(s"$dir/fact"), ParquetSink(s"$dir/weekly"),
-      ParquetSink(s"$dir/humidity"))
-    val start = lit("2023-11-17 00:00:00").cast("timestamp")
-    val end = lit("2023-11-18 00:00:00").cast("timestamp")
-    val clock = lit("2023-11-25 12:00:00").cast("timestamp")
+    withTempDir("graft-pipe") { dir =>
+      val sinks = WeatherSinks(
+        ParquetSink(s"$dir/fact"), ParquetSink(s"$dir/weekly"),
+        ParquetSink(s"$dir/humidity"))
+      val start = lit("2023-11-17 00:00:00").cast("timestamp")
+      val end = lit("2023-11-18 00:00:00").cast("timestamp")
+      val clock = lit("2023-11-25 12:00:00").cast("timestamp")
 
-    WeatherPipeline.fullLoad(spark, batch, sinks, start, end, clock)
-    assert(sinks.fact.read(spark).count() == 3)
-    assert(sinks.weekly.read(spark).count() == 2)
-    assert(sinks.humidity.read(spark).count() == 2)
+      WeatherPipeline.fullLoad(spark, batch, sinks, start, end, clock)
+      assert(sinks.fact.read(spark).count() == 3)
+      assert(sinks.weekly.read(spark).count() == 2)
+      assert(sinks.humidity.read(spark).count() == 2)
 
-    // second run, same batch: no new facts (J1), reports append again
-    WeatherPipeline.fullLoad(spark, batch, sinks, start, end, clock)
-    assert(sinks.fact.read(spark).count() == 3)
-    assert(sinks.weekly.read(spark).count() == 4)
+      // second run, same batch: no new facts (J1), reports append again
+      WeatherPipeline.fullLoad(spark, batch, sinks, start, end, clock)
+      assert(sinks.fact.read(spark).count() == 3)
+      assert(sinks.weekly.read(spark).count() == 4)
+    }
   }
 
   test("incremental load applies recency gate before dedup") {
-    val dir = Files.createTempDirectory("graft-pipe-inc").toString
-    val sinks = WeatherSinks(
-      ParquetSink(s"$dir/fact"), ParquetSink(s"$dir/weekly"),
-      ParquetSink(s"$dir/humidity"))
-    val start = lit("2023-11-17 00:00:00").cast("timestamp")
-    val end = lit("2023-11-18 00:00:00").cast("timestamp")
-    val clock = lit("2023-11-25 12:00:00").cast("timestamp")
+    withTempDir("graft-pipe-inc") { dir =>
+      val sinks = WeatherSinks(
+        ParquetSink(s"$dir/fact"), ParquetSink(s"$dir/weekly"),
+        ParquetSink(s"$dir/humidity"))
+      val start = lit("2023-11-17 00:00:00").cast("timestamp")
+      val end = lit("2023-11-18 00:00:00").cast("timestamp")
+      val clock = lit("2023-11-25 12:00:00").cast("timestamp")
 
-    // batch max ts = 03:00; 1h window keeps only the 03:00 row
-    WeatherPipeline.incrementalLoad(spark, batch, sinks, start, end, clock)
-    assert(sinks.fact.read(spark).count() == 1)
-    assert(sinks.fact.read(spark).head().getAs[java.sql.Timestamp]("weatherDate")
-      == ts("2023-11-17 03:00:00"))
+      // batch max ts = 03:00; 1h window keeps only the 03:00 row
+      WeatherPipeline.incrementalLoad(spark, batch, sinks, start, end, clock)
+      assert(sinks.fact.read(spark).count() == 1)
+      assert(sinks.fact.read(spark).head().getAs[java.sql.Timestamp]("weatherDate")
+        == ts("2023-11-17 03:00:00"))
+    }
   }
 
   test("flagship entry returns rows on sf0.001") {

@@ -461,18 +461,18 @@ class RelationalOpsSpec extends SparkTestBase {
       (3L, ts("2024-01-01 10:00:00"), 5L, 0.0, "error"),
       (3L, ts("2024-01-01 11:00:00"), 6L, 4.0, "click")
     ).toDF("user_id", "ts", "event_id", "value", "event_type")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cdc4").toFile
-    ev.write.mode("overwrite")
-      .parquet(new java.io.File(dir, "events.parquet").toString)
-    val out = QueriesRelational.queries("cdc4_tombstones")(
-      spark, dir.toString).collect()
-      .map(r => r.getLong(0) -> (r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-        r.getLong(3), r.getLong(4))).toMap
-    assert(out(1L) == (("deleted", None, 2L, 1L)))
-    assert(out(2L) == (("live", Some(9.0), 2L, 0L)))
-    assert(out(3L) == (("live", Some(4.0), 2L, 1L)))
+    withTempDir("graft_cdc4") { dir =>
+      ev.write.mode("overwrite")
+        .parquet(new java.io.File(dir, "events.parquet").toString)
+      val out = QueriesRelational.queries("cdc4_tombstones")(
+        spark, dir.toString).collect()
+        .map(r => r.getLong(0) -> (r.getString(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)),
+          r.getLong(3), r.getLong(4))).toMap
+      assert(out(1L) == (("deleted", None, 2L, 1L)))
+      assert(out(2L) == (("live", Some(9.0), 2L, 0L)))
+      assert(out(3L) == (("live", Some(4.0), 2L, 1L)))
+    }
   }
 
   test("zValue2 interleaves bits exactly; z-sort bounds BOTH dims") {

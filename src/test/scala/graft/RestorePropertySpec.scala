@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import scala.util.Random
 
@@ -17,11 +16,8 @@ import graft.storage.CommitLog
   */
 class RestorePropertySpec extends SparkTestBase {
 
-  private def freshDir(): String = {
-    val f = Files.createTempDirectory("graft_rprop_test").toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  private def freshDir(): String =
+    sharedTempDir("graft_rprop_test").getAbsolutePath
 
   private def writeRows(dir: String, rel: String,
       rows: Seq[(Long, String)]): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -15,11 +14,8 @@ import graft.storage.CommitLog
   */
 class RestoreSpec extends SparkTestBase {
 
-  private def freshDir(): String = {
-    val f = Files.createTempDirectory("graft_restore_test").toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  private def freshDir(): String =
+    sharedTempDir("graft_restore_test").getAbsolutePath
 
   private def stage(dir: String, rel: String, rows: Seq[(Long, String)])
       : Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -14,11 +13,8 @@ import graft.storage.CommitLog
   */
 class SchemaMappingSpec extends SparkTestBase {
 
-  private def freshDir(): String = {
-    val f = Files.createTempDirectory("graft_schema_test").toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  private def freshDir(): String =
+    sharedTempDir("graft_schema_test").getAbsolutePath
 
   private def stage(dir: String, rel: String, rows: Seq[(Long, String)])
       : Unit = {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared session for all suites (JVM-wide — getOrCreate), built by
   * the same factory as every entry point, so the tests run the shipped
   * configuration. */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestBase.session
   lazy val sf0001 = "/root/testdata/sf0.001"
   lazy val sf001 = "/root/testdata/sf0.01"

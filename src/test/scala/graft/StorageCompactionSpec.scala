@@ -264,12 +264,11 @@ class StorageCompactionSpec extends SparkTestBase {
       .collect().map(_.getString(0))
     assert(touched.nonEmpty)
     val cowBytes = touched.map(p => new File(new java.net.URI(p)).length()).sum
-    val morDir = java.nio.file.Files
-      .createTempDirectory("graft_mor_point").toFile
-    morDir.deleteOnExit()
-    pairs.coalesce(1).write.mode("overwrite")
-      .parquet(s"${morDir.getAbsolutePath}/del")
-    val morBytes = parquetBytesUnder(new File(morDir, "del"))
+    val morBytes = withTempDir("graft_mor_point") { morDir =>
+      pairs.coalesce(1).write.mode("overwrite")
+        .parquet(s"${morDir.getAbsolutePath}/del")
+      parquetBytesUnder(new File(morDir, "del"))
+    }
     assert(morBytes > 0L && cowBytes > morBytes * 2,
       s"point-delete MOR must beat COW rewrite bytes: $morBytes vs $cowBytes")
     info(s"point delete of key $someKey: MOR delete file $morBytes B; " +

@@ -277,59 +277,60 @@ class StreamingSpec extends SparkTestBase {
 
   test("file-source stream: declared schema → watermark → tumbling agg " +
     "matches batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_land").toFile
-    // two landing files so AvailableNow+maxFilesPerTrigger=1 runs two
-    // micro-batches: the sentinel batch advances the watermark past the
-    // real data, flushing its windows in append mode (same mechanics as
-    // a production stream where later arrivals close earlier windows)
-    land(evs.toDF(), dir, "events_0")
-    Thread.sleep(50) // file source orders batches by mod time
-    land(Seq(Ev(99, t("2024-01-02 12:00:00"), 9, 0.0)).toDF(),
-      dir, "events_1")
-    // the deploy contract: schema DECLARED, never inferred — a streaming
-    // source must not depend on what files happen to be present at start
-    val schema = org.apache.spark.sql.Encoders.product[Ev].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val q = StreamingOps.tumblingAgg(
-      stream.withWatermark("ts", "10 minutes"), "ts", "1 hour",
-      Seq("user_id"))
-      .writeStream.format("memory").queryName("file_tumbling_t")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination(120000) finally q.stop()
-    val streamed = spark.table("file_tumbling_t")
-      .filter("user_id != 9") // the sentinel's own window stays open
-      .select("window_start", "user_id", "n_events", "avg_value")
-      .as[(Timestamp, Long, Long, Double)].collect().toSet
-    val batch = StreamingOps.tumblingAgg(evs.toDF(), "ts", "1 hour",
-      Seq("user_id"))
-      .select("window_start", "user_id", "n_events", "avg_value")
-      .as[(Timestamp, Long, Long, Double)].collect().toSet
-    assert(streamed == batch,
-      "file-source streamed windows must equal the batch form")
+    withTempDir("graft_land") { dir =>
+      // two landing files so AvailableNow+maxFilesPerTrigger=1 runs two
+      // micro-batches: the sentinel batch advances the watermark past the
+      // real data, flushing its windows in append mode (same mechanics as
+      // a production stream where later arrivals close earlier windows)
+      land(evs.toDF(), dir, "events_0")
+      Thread.sleep(50) // file source orders batches by mod time
+      land(Seq(Ev(99, t("2024-01-02 12:00:00"), 9, 0.0)).toDF(),
+        dir, "events_1")
+      // the deploy contract: schema DECLARED, never inferred — a streaming
+      // source must not depend on what files happen to be present at start
+      val schema = org.apache.spark.sql.Encoders.product[Ev].schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+      val q = StreamingOps.tumblingAgg(
+        stream.withWatermark("ts", "10 minutes"), "ts", "1 hour",
+        Seq("user_id"))
+        .writeStream.format("memory").queryName("file_tumbling_t")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(120000) finally q.stop()
+      val streamed = spark.table("file_tumbling_t")
+        .filter("user_id != 9") // the sentinel's own window stays open
+        .select("window_start", "user_id", "n_events", "avg_value")
+        .as[(Timestamp, Long, Long, Double)].collect().toSet
+      val batch = StreamingOps.tumblingAgg(evs.toDF(), "ts", "1 hour",
+        Seq("user_id"))
+        .select("window_start", "user_id", "n_events", "avg_value")
+        .as[(Timestamp, Long, Long, Double)].collect().toSet
+      assert(streamed == batch,
+        "file-source streamed windows must equal the batch form")
+    }
   }
 
   test("file-source stream: hourlyIncremental dedups and appends to a " +
     "parquet sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_land2").toFile
-    val sink = java.nio.file.Files.createTempDirectory("graft_sink")
-      .toFile.toString
-    land(Seq(evs.head, evs.head, evs(1)).toDF(), dir, "events_0") // dup
-    val schema = org.apache.spark.sql.Encoders.product[Ev].schema
-    val stream = spark.readStream.schema(schema).parquet(dir.toString)
-    val q = StreamingOps.hourlyIncremental(stream, "ts", "1 hour",
-      Seq("user_id", "value"),
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()) {
-      (batch, _) =>
-        batch.write.mode("append").parquet(sink)
-    }.start()
-    try q.awaitTermination(120000) finally q.stop()
-    val out = spark.read.parquet(sink).select("event_id")
-      .as[Long].collect().toSeq.sorted
-    assert(out == Seq(1L, 2L),
-      "parquet sink must hold exactly the deduped events")
+    withTempDir("graft_land2") { root =>
+      val (dir, sink) = (new java.io.File(root, "land"), s"$root/sink")
+      land(Seq(evs.head, evs.head, evs(1)).toDF(), dir, "events_0") // dup
+      val schema = org.apache.spark.sql.Encoders.product[Ev].schema
+      val stream = spark.readStream.schema(schema).parquet(dir.toString)
+      val q = StreamingOps.hourlyIncremental(stream, "ts", "1 hour",
+        Seq("user_id", "value"),
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()) {
+        (batch, _) =>
+          batch.write.mode("append").parquet(sink)
+      }.start()
+      try q.awaitTermination(120000) finally q.stop()
+      val out = spark.read.parquet(sink).select("event_id")
+        .as[Long].collect().toSeq.sorted
+      assert(out == Seq(1L, 2L),
+        "parquet sink must hold exactly the deduped events")
+    }
   }
 
   test("stream-static enrichment over a MemoryStream matches batch") {
@@ -390,60 +391,59 @@ class StreamingSpec extends SparkTestBase {
     // post-restart event would open a FRESH session (n_events=1) and
     // the pre-restart session would never emit — both asserted against.
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_").toString
-    // file sink, not memory sink: the memory sink rejects checkpoint
-    // recovery outright ("query does not support recovering from
-    // checkpoint location"), while the file sink's _spark_metadata
-    // commit log is the real exactly-once mechanism — a replayed batch
-    // is recorded once, so duplicate rows in the output directory would
-    // be a genuine exactly-once violation, which is what this asserts.
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_out_").toString
-    val ms = MemoryStream[Ev]
-    def start() = StreamingOps.sessionizeWithState(
-        ms.toDF().withWatermark("ts", "10 minutes"),
-        "user_id", "ts", gapSeconds = 1800L, emitOpen = false)
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
+    withTempDir("graft_ckpt_") { root =>
+      val (ckpt, outDir) = (s"$root/ckpt", s"$root/out")
+      // file sink, not memory sink: the memory sink rejects checkpoint
+      // recovery outright ("query does not support recovering from
+      // checkpoint location"), while the file sink's _spark_metadata
+      // commit log is the real exactly-once mechanism — a replayed batch
+      // is recorded once, so duplicate rows in the output directory would
+      // be a genuine exactly-once violation, which is what this asserts.
+      val ms = MemoryStream[Ev]
+      def start() = StreamingOps.sessionizeWithState(
+          ms.toDF().withWatermark("ts", "10 minutes"),
+          "user_id", "ts", gapSeconds = 1800L, emitOpen = false)
+        .writeStream.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
 
-    // phase 1: two under-gap events open ONE session for user 1; the
-    // watermark (10:20 - 10min) is far from its timeout, so NOTHING is
-    // emitted and the open session exists only in the state store when
-    // the query is stopped.
-    val q1 = start()
-    try {
-      ms.addData(
-        Ev(1, t("2024-01-01 10:05:00"), 1, 10.0),
-        Ev(2, t("2024-01-01 10:20:00"), 1, 20.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
+      // phase 1: two under-gap events open ONE session for user 1; the
+      // watermark (10:20 - 10min) is far from its timeout, so NOTHING is
+      // emitted and the open session exists only in the state store when
+      // the query is stopped.
+      val q1 = start()
+      try {
+        ms.addData(
+          Ev(1, t("2024-01-01 10:05:00"), 1, 10.0),
+          Ev(2, t("2024-01-01 10:20:00"), 1, 20.0))
+        q1.processAllAvailable()
+      } finally q1.stop()
 
-    // phase 2: restart from the checkpoint. A 35min-later event (>= the
-    // 30min gap) must CLOSE the recovered session — with n_events=2,
-    // provable only if both pre-restart events survived in state — and
-    // open a new one, which the watermark-advancing sentinel then
-    // times out.
-    val q2 = start()
-    try {
-      ms.addData(Ev(3, t("2024-01-01 10:55:00"), 1, 30.0))
-      q2.processAllAvailable()
-      ms.addData(Ev(99, t("2024-01-02 12:00:00"), 9, 0.0))
-      q2.processAllAvailable()
-    } finally q2.stop()
+      // phase 2: restart from the checkpoint. A 35min-later event (>= the
+      // 30min gap) must CLOSE the recovered session — with n_events=2,
+      // provable only if both pre-restart events survived in state — and
+      // open a new one, which the watermark-advancing sentinel then
+      // times out.
+      val q2 = start()
+      try {
+        ms.addData(Ev(3, t("2024-01-01 10:55:00"), 1, 30.0))
+        q2.processAllAvailable()
+        ms.addData(Ev(99, t("2024-01-02 12:00:00"), 9, 0.0))
+        q2.processAllAvailable()
+      } finally q2.stop()
 
-    // Seq, not Set: a replayed batch double-emitting the closed session
-    // must fail the exactly-once claim, and a Set would mask it.
-    val out = spark.read.parquet(outDir)
-      .filter("user_id != 9") // the sentinel's own session stays open
-      .as[(Long, Timestamp, Timestamp, Long)].collect().toSeq
-      .sortBy(_._2.getTime)
-    assert(out == Seq(
-      (1L, t("2024-01-01 10:05:00"), t("2024-01-01 10:50:00"), 2L),
-      (1L, t("2024-01-01 10:55:00"), t("2024-01-01 11:25:00"), 1L)),
-      s"recovered-state sessions wrong: $out")
+      // Seq, not Set: a replayed batch double-emitting the closed session
+      // must fail the exactly-once claim, and a Set would mask it.
+      val out = spark.read.parquet(outDir)
+        .filter("user_id != 9") // the sentinel's own session stays open
+        .as[(Long, Timestamp, Timestamp, Long)].collect().toSeq
+        .sortBy(_._2.getTime)
+      assert(out == Seq(
+        (1L, t("2024-01-01 10:05:00"), t("2024-01-01 10:50:00"), 2L),
+        (1L, t("2024-01-01 10:55:00"), t("2024-01-01 11:25:00"), 1L)),
+        s"recovered-state sessions wrong: $out")
+    }
   }
 
   test("RocksDB state store: 5k-key state survives checkpoint restart") {
@@ -462,64 +462,63 @@ class StreamingSpec extends SparkTestBase {
     val prev = spark.conf.getOption(provKey)
     spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
       ".state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_rocks_ckpt_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_rocks_out_").toString
-    try {
-      val ms = MemoryStream[Ev]
-      def start() = StreamingOps.sessionizeWithState(
-          ms.toDF().withWatermark("ts", "10 minutes"),
-          "user_id", "ts", gapSeconds = 1800L, emitOpen = false)
-        .writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      val users = 1L to 5000L
-      // phase 1: two under-gap events per user — 5,000 OPEN sessions
-      // live in the state store when the query is killed
-      val q1 = start()
+    withTempDir("graft_rocks_") { root =>
+      val (ckpt, outDir) = (s"$root/ckpt", s"$root/out")
       try {
-        ms.addData(users.map(u =>
-          Ev(u, t("2024-01-01 10:05:00"), u, 1.0)))
-        ms.addData(users.map(u =>
-          Ev(10000 + u, t("2024-01-01 10:20:00"), u, 2.0)))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      // the provider must have written RocksDB state files (zip
-      // snapshots / changelogs), not the HDFS provider's .delta files
-      def stateFiles(suffix: String): Int = {
-        val base = java.nio.file.Paths.get(ckpt, "state")
-        if (!java.nio.file.Files.isDirectory(base)) 0
-        else {
-          val it = java.nio.file.Files.walk(base)
-          try it.filter(p => p.toString.endsWith(suffix)).count().toInt
-          finally it.close()
+        val ms = MemoryStream[Ev]
+        def start() = StreamingOps.sessionizeWithState(
+            ms.toDF().withWatermark("ts", "10 minutes"),
+            "user_id", "ts", gapSeconds = 1800L, emitOpen = false)
+          .writeStream.format("parquet")
+          .option("path", outDir)
+          .option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+        val users = 1L to 5000L
+        // phase 1: two under-gap events per user — 5,000 OPEN sessions
+        // live in the state store when the query is killed
+        val q1 = start()
+        try {
+          ms.addData(users.map(u =>
+            Ev(u, t("2024-01-01 10:05:00"), u, 1.0)))
+          ms.addData(users.map(u =>
+            Ev(10000 + u, t("2024-01-01 10:20:00"), u, 2.0)))
+          q1.processAllAvailable()
+        } finally q1.stop()
+        // the provider must have written RocksDB state files (zip
+        // snapshots / changelogs), not the HDFS provider's .delta files
+        def stateFiles(suffix: String): Int = {
+          val base = java.nio.file.Paths.get(ckpt, "state")
+          if (!java.nio.file.Files.isDirectory(base)) 0
+          else {
+            val it = java.nio.file.Files.walk(base)
+            try it.filter(p => p.toString.endsWith(suffix)).count().toInt
+            finally it.close()
+          }
         }
-      }
-      assert(stateFiles(".zip") + stateFiles(".changelog") > 0,
-        "checkpoint has no RocksDB snapshot/changelog files — the " +
-          "provider conf did not take effect")
-      assert(stateFiles(".delta") == 0,
-        "checkpoint has HDFS-provider .delta files — wrong provider ran")
-      // phase 2: restart from the checkpoint; a far-future sentinel
-      // advances the watermark past every session's timeout, so all
-      // 5,000 recovered sessions must close with BOTH events counted
-      val q2 = start()
-      try {
-        ms.addData(Ev(99999, t("2024-01-02 12:00:00"), 999999L, 0.0))
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val out = spark.read.parquet(outDir)
-        .filter(col("user_id") =!= 999999L)
-        .groupBy("n_events").count()
-        .as[(Long, Long)].collect().toMap
-      assert(out == Map(2L -> 5000L),
-        s"expected 5000 recovered 2-event sessions, got: $out")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
+        assert(stateFiles(".zip") + stateFiles(".changelog") > 0,
+          "checkpoint has no RocksDB snapshot/changelog files — the " +
+            "provider conf did not take effect")
+        assert(stateFiles(".delta") == 0,
+          "checkpoint has HDFS-provider .delta files — wrong provider ran")
+        // phase 2: restart from the checkpoint; a far-future sentinel
+        // advances the watermark past every session's timeout, so all
+        // 5,000 recovered sessions must close with BOTH events counted
+        val q2 = start()
+        try {
+          ms.addData(Ev(99999, t("2024-01-02 12:00:00"), 999999L, 0.0))
+          q2.processAllAvailable()
+        } finally q2.stop()
+        val out = spark.read.parquet(outDir)
+          .filter(col("user_id") =!= 999999L)
+          .groupBy("n_events").count()
+          .as[(Long, Long)].collect().toMap
+        assert(out == Map(2L -> 5000L),
+          s"expected 5000 recovered 2-event sessions, got: $out")
+      } finally {
+        prev match {
+          case Some(v) => spark.conf.set(provKey, v)
+          case None => spark.conf.unset(provKey)
+        }
       }
     }
   }
@@ -537,41 +536,42 @@ class StreamingSpec extends SparkTestBase {
     // zero files), and keeps latest-per-key with one argmax window —
     // the cdc3 shape driven from a stream.
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_upsert_").toString + "/tbl"
-    def readTable(): org.apache.spark.sql.DataFrame =
-      if (new java.io.File(dir).exists()) spark.read.parquet(dir)
-      else Seq.empty[Ev].toDF()
-    def merge(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val merged = readTable().unionByName(batch)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-        .localCheckpoint(true)
-      merged.write.mode("overwrite").parquet(dir)
+    withTempDir("graft_upsert_") { root =>
+      val dir = s"$root/tbl"
+      def readTable(): org.apache.spark.sql.DataFrame =
+        if (new java.io.File(dir).exists()) spark.read.parquet(dir)
+        else Seq.empty[Ev].toDF()
+      def merge(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+        import org.apache.spark.sql.expressions.Window
+        val w = Window.partitionBy("user_id")
+          .orderBy(col("ts").desc, col("event_id").desc)
+        val merged = readTable().unionByName(batch)
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1).drop("rn")
+          .localCheckpoint(true)
+        merged.write.mode("overwrite").parquet(dir)
+      }
+      val ms = MemoryStream[Ev]
+      val q = ms.toDF().writeStream.foreachBatch(merge _)
+        .outputMode("update").start()
+      try {
+        ms.addData(Ev(1, t("2024-01-01 10:00:00"), 1, 10.0),
+          Ev(2, t("2024-01-01 10:00:00"), 2, 5.0))
+        q.processAllAvailable()
+        ms.addData(Ev(3, t("2024-01-01 11:00:00"), 1, 20.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      def snapshot(): Set[(Long, Double)] = readTable()
+        .select(col("user_id"), col("value"))
+        .as[(Long, Double)].collect().toSet
+      val afterStream = snapshot()
+      assert(afterStream == Set((1L, 20.0), (2L, 5.0)),
+        s"latest-per-key merge wrong: $afterStream")
+      // replay the last batch against the committed table: idempotent
+      merge(Seq(Ev(3, t("2024-01-01 11:00:00"), 1, 20.0)).toDF(), 99L)
+      assert(snapshot() == afterStream,
+        "re-applying a delivered batch must not change the table")
     }
-    val ms = MemoryStream[Ev]
-    val q = ms.toDF().writeStream.foreachBatch(merge _)
-      .outputMode("update").start()
-    try {
-      ms.addData(Ev(1, t("2024-01-01 10:00:00"), 1, 10.0),
-        Ev(2, t("2024-01-01 10:00:00"), 2, 5.0))
-      q.processAllAvailable()
-      ms.addData(Ev(3, t("2024-01-01 11:00:00"), 1, 20.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    def snapshot(): Set[(Long, Double)] = readTable()
-      .select(col("user_id"), col("value"))
-      .as[(Long, Double)].collect().toSet
-    val afterStream = snapshot()
-    assert(afterStream == Set((1L, 20.0), (2L, 5.0)),
-      s"latest-per-key merge wrong: $afterStream")
-    // replay the last batch against the committed table: idempotent
-    merge(Seq(Ev(3, t("2024-01-01 11:00:00"), 1, 20.0)).toDF(), 99L)
-    assert(snapshot() == afterStream,
-      "re-applying a delivered batch must not change the table")
   }
 
   // ---- registry-query streaming parity (VERDICT r12 #6) ----------------
@@ -740,282 +740,277 @@ class StreamingSpec extends SparkTestBase {
     // re-read after restart, every count below would double; if state
     // were lost, A's contribution would vanish. This is the
     // crash-recovery contract a production pipeline relies on.
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_restart").toString
-    val (srcDir, ckpt) = (s"$root/src", s"$root/ckpt")
-    val a = evs.take(3)
-    val b = evs.drop(3)
-    a.toDF().write.mode("append").parquet(srcDir)
-    def agg() = StreamingOps.tumblingAgg(
-      spark.readStream.schema(evs.toDF().schema).parquet(srcDir),
-      "ts", "1 hour", Seq("user_id"))
-    val q1 = agg().writeStream.format("memory").queryName("restart_t1")
-      .outputMode("complete").option("checkpointLocation", ckpt).start()
-    try q1.processAllAvailable() finally q1.stop()
-    val phase1 = spark.table("restart_t1")
-      .select("window_start", "user_id", "n_events")
-      .as[(Timestamp, Long, Long)].collect().toSet
-    // batch A is events 1-3: all user 1, all in the 10:00 hour
-    assert(phase1 == Set((t("2024-01-01 10:00:00"), 1L, 3L)),
-      s"phase 1 state: $phase1")
-    b.toDF().write.mode("append").parquet(srcDir)
-    val q2 = agg().writeStream.format("memory").queryName("restart_t2")
-      .outputMode("complete").option("checkpointLocation", ckpt).start()
-    try q2.processAllAvailable() finally q2.stop()
-    val resumed = spark.table("restart_t2")
-      .select("window_start", "user_id", "n_events", "avg_value")
-      .as[(Timestamp, Long, Long, Double)].collect().toSet
-    val batch = StreamingOps.tumblingAgg(evs.toDF(), "ts", "1 hour",
-        Seq("user_id"))
-      .select("window_start", "user_id", "n_events", "avg_value")
-      .as[(Timestamp, Long, Long, Double)].collect().toSet
-    assert(resumed == batch,
-      s"resumed state must equal the single-run batch: $resumed vs $batch")
+    withTempDir("graft_restart") { root =>
+      val (srcDir, ckpt) = (s"$root/src", s"$root/ckpt")
+      val a = evs.take(3)
+      val b = evs.drop(3)
+      a.toDF().write.mode("append").parquet(srcDir)
+      def agg() = StreamingOps.tumblingAgg(
+        spark.readStream.schema(evs.toDF().schema).parquet(srcDir),
+        "ts", "1 hour", Seq("user_id"))
+      val q1 = agg().writeStream.format("memory").queryName("restart_t1")
+        .outputMode("complete").option("checkpointLocation", ckpt).start()
+      try q1.processAllAvailable() finally q1.stop()
+      val phase1 = spark.table("restart_t1")
+        .select("window_start", "user_id", "n_events")
+        .as[(Timestamp, Long, Long)].collect().toSet
+      // batch A is events 1-3: all user 1, all in the 10:00 hour
+      assert(phase1 == Set((t("2024-01-01 10:00:00"), 1L, 3L)),
+        s"phase 1 state: $phase1")
+      b.toDF().write.mode("append").parquet(srcDir)
+      val q2 = agg().writeStream.format("memory").queryName("restart_t2")
+        .outputMode("complete").option("checkpointLocation", ckpt).start()
+      try q2.processAllAvailable() finally q2.stop()
+      val resumed = spark.table("restart_t2")
+        .select("window_start", "user_id", "n_events", "avg_value")
+        .as[(Timestamp, Long, Long, Double)].collect().toSet
+      val batch = StreamingOps.tumblingAgg(evs.toDF(), "ts", "1 hour",
+          Seq("user_id"))
+        .select("window_start", "user_id", "n_events", "avg_value")
+        .as[(Timestamp, Long, Long, Double)].collect().toSet
+      assert(resumed == batch,
+        s"resumed state must equal the single-run batch: $resumed vs $batch")
+    }
   }
 
   test("commit-log stream: one version per micro-batch, exactly-once " +
     "sink, restart resumes from the checkpointed version") {
     import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
-    val up = java.nio.file.Files.createTempDirectory("graft_cls_up")
-      .toFile.getAbsolutePath
-    val down = java.nio.file.Files.createTempDirectory("graft_cls_down")
-      .toFile.getAbsolutePath
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cls_ck")
-      .toFile.getAbsolutePath
-    def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("k", "v").write
-        .parquet(s"${CommitLog.dataDir(up)}/$rel")
-    stage("f1", Seq((1L, 10L), (2L, 20L)))
-    stage("f2", Seq((3L, 30L)))
-    CommitLog.commit(up, Seq("f1"), Nil, 0L)
-    CommitLog.commit(up, Seq("f2"), Nil, 1L)
-    val batchSizes =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def run(): Unit = {
-      val q = spark.readStream.format(CommitLogStream.Format)
+    withTempDir("graft_cls_") { root =>
+      val (up, down, ckpt) = (s"$root/up", s"$root/down", s"$root/ck")
+      def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
+        rows.toDF("k", "v").write
+          .parquet(s"${CommitLog.dataDir(up)}/$rel")
+      stage("f1", Seq((1L, 10L), (2L, 20L)))
+      stage("f2", Seq((3L, 30L)))
+      CommitLog.commit(up, Seq("f1"), Nil, 0L)
+      CommitLog.commit(up, Seq("f2"), Nil, 1L)
+      val batchSizes =
+        scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def run(): Unit = {
+        val q = spark.readStream.format(CommitLogStream.Format)
+          .option("path", up).load()
+          .withColumn("v2", col("v") * 2)
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            batchSizes.synchronized { batchSizes += ((id, b.count())) }
+            CommitLog.appendBatch(down, b, id): Unit
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()
+      // pacing: version 1 (2 rows) and version 2 (1 row) arrived as TWO
+      // micro-batches, never coalesced — batch = one version increment
+      assert(batchSizes.toList === List((0L, 2L), (1L, 1L)),
+        s"got $batchSizes")
+      assert(CommitLog.read(spark, down).count() === 3L)
+      assert(CommitLog.committedBatchIds(down) === Set(0L, 1L))
+      // upstream advances; a RESTARTED query resumes from the
+      // checkpointed version — only the new increment flows, and the
+      // exactly-once ledger shows no replays
+      batchSizes.clear()
+      stage("f3", Seq((4L, 40L), (5L, 50L), (6L, 60L)))
+      CommitLog.commit(up, Seq("f3"), Nil, 2L)
+      run()
+      assert(batchSizes.toList === List((2L, 3L)), s"got $batchSizes")
+      assert(CommitLog.read(spark, down).count() === 6L)
+      assert(CommitLog.committedBatchIds(down) === Set(0L, 1L, 2L))
+      // the transform rode the stream: downstream carries v2 = 2v exactly
+      assert(CommitLog.read(spark, down)
+        .filter(col("v2") =!= col("v") * 2).count() === 0L)
+      // a REWRITE commit upstream poisons the increment contract: the
+      // stream must refuse loudly (inherited from readIncrement), never
+      // silently double-count the rewritten rows
+      stage("f1_rw", Seq((1L, 10L), (2L, 20L)))
+      CommitLog.commit(up, Seq("f1_rw"), Seq("f1"), 3L)
+      val q3 = spark.readStream.format(CommitLogStream.Format)
         .option("path", up).load()
-        .withColumn("v2", col("v") * 2)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          batchSizes.synchronized { batchSizes += ((id, b.count())) }
-          CommitLog.appendBatch(down, b, id): Unit
-        }
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) => () }
         .start()
-      try q.processAllAvailable() finally q.stop()
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q3.processAllAvailable()
+        q3.awaitTermination(30000)
+      }
+      q3.stop()
+      assert(err.getMessage.contains("non-append commit") ||
+        Option(err.getCause).exists(_.getMessage.contains("non-append commit")))
     }
-    run()
-    // pacing: version 1 (2 rows) and version 2 (1 row) arrived as TWO
-    // micro-batches, never coalesced — batch = one version increment
-    assert(batchSizes.toList === List((0L, 2L), (1L, 1L)),
-      s"got $batchSizes")
-    assert(CommitLog.read(spark, down).count() === 3L)
-    assert(CommitLog.committedBatchIds(down) === Set(0L, 1L))
-    // upstream advances; a RESTARTED query resumes from the
-    // checkpointed version — only the new increment flows, and the
-    // exactly-once ledger shows no replays
-    batchSizes.clear()
-    stage("f3", Seq((4L, 40L), (5L, 50L), (6L, 60L)))
-    CommitLog.commit(up, Seq("f3"), Nil, 2L)
-    run()
-    assert(batchSizes.toList === List((2L, 3L)), s"got $batchSizes")
-    assert(CommitLog.read(spark, down).count() === 6L)
-    assert(CommitLog.committedBatchIds(down) === Set(0L, 1L, 2L))
-    // the transform rode the stream: downstream carries v2 = 2v exactly
-    assert(CommitLog.read(spark, down)
-      .filter(col("v2") =!= col("v") * 2).count() === 0L)
-    // a REWRITE commit upstream poisons the increment contract: the
-    // stream must refuse loudly (inherited from readIncrement), never
-    // silently double-count the rewritten rows
-    stage("f1_rw", Seq((1L, 10L), (2L, 20L)))
-    CommitLog.commit(up, Seq("f1_rw"), Seq("f1"), 3L)
-    val q3 = spark.readStream.format(CommitLogStream.Format)
-      .option("path", up).load()
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) => () }
-      .start()
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q3.processAllAvailable()
-      q3.awaitTermination(30000)
-    }
-    q3.stop()
-    assert(err.getMessage.contains("non-append commit") ||
-      Option(err.getCause).exists(_.getMessage.contains("non-append commit")))
   }
 
   test("commit-log stream mode=cdf: insert/delete batches, replace " +
     "no-ops, restart resumes from the checkpointed version") {
     import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
-    val up = java.nio.file.Files.createTempDirectory("graft_cdf_up")
-      .toFile.getAbsolutePath
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdf_ck")
-      .toFile.getAbsolutePath
-    def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("k", "v").write
-        .parquet(s"${CommitLog.dataDir(up)}/$rel")
-    stage("f1", Seq((1L, 10L), (2L, 20L)))
-    CommitLog.commit(up, Seq("f1"), Nil, 0L) // v1: +2
-    CommitLog.deleteRows(spark, up, CommitLog.liveFiles(up, 1L),
-      col("k") === 2L)
-      .coalesce(1).write.parquet(s"${CommitLog.dataDir(up)}/del2")
-    CommitLog.commit(up, Nil, Nil, 1L, Map.empty, Seq("del2")) // v2: -1
-    // v3: the fold, tagged replace — must stream as ZERO change rows
-    CommitLog.read(spark, up, Some(2L))
-      .coalesce(1).write.parquet(s"${CommitLog.dataDir(up)}/f1r")
-    CommitLog.commitTagged(up, Seq("f1r"), Seq("f1", "del2"), 2L,
-      op = Some("replace"))
-    val batches = scala.collection.mutable
-      .ArrayBuffer.empty[(Long, Long, Long)] // (id, inserts, deletes)
-    def run(): Unit = {
-      val q = spark.readStream.format(CommitLogStream.Format)
-        .option("path", up).option("mode", "cdf").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val ins = b.filter(col("_change_type") === "insert").count()
-          val del = b.filter(col("_change_type") === "delete").count()
-          batches.synchronized { batches += ((id, ins, del)) }: Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    withTempDir("graft_cdf_") { root =>
+      val (up, ckpt) = (s"$root/up", s"$root/ck")
+      def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
+        rows.toDF("k", "v").write
+          .parquet(s"${CommitLog.dataDir(up)}/$rel")
+      stage("f1", Seq((1L, 10L), (2L, 20L)))
+      CommitLog.commit(up, Seq("f1"), Nil, 0L) // v1: +2
+      CommitLog.deleteRows(spark, up, CommitLog.liveFiles(up, 1L),
+        col("k") === 2L)
+        .coalesce(1).write.parquet(s"${CommitLog.dataDir(up)}/del2")
+      CommitLog.commit(up, Nil, Nil, 1L, Map.empty, Seq("del2")) // v2: -1
+      // v3: the fold, tagged replace — must stream as ZERO change rows
+      CommitLog.read(spark, up, Some(2L))
+        .coalesce(1).write.parquet(s"${CommitLog.dataDir(up)}/f1r")
+      CommitLog.commitTagged(up, Seq("f1r"), Seq("f1", "del2"), 2L,
+        op = Some("replace"))
+      val batches = scala.collection.mutable
+        .ArrayBuffer.empty[(Long, Long, Long)] // (id, inserts, deletes)
+      def run(): Unit = {
+        val q = spark.readStream.format(CommitLogStream.Format)
+          .option("path", up).option("mode", "cdf").load()
+          .writeStream.option("checkpointLocation", ckpt)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            val ins = b.filter(col("_change_type") === "insert").count()
+            val del = b.filter(col("_change_type") === "delete").count()
+            batches.synchronized { batches += ((id, ins, del)) }: Unit
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()
+      // one version per micro-batch: v1 = 2 inserts, v2 = 1 delete
+      // (with the deleted row's CONTENT), v3 = a replace no-op batch
+      assert(batches.toList === List((0L, 2L, 0L), (1L, 0L, 1L),
+        (2L, 0L, 0L)), s"got $batches")
+      // restart: only the new append flows, from the checkpointed version
+      batches.clear()
+      stage("f2", Seq((5L, 50L)))
+      CommitLog.commit(up, Seq("f2"), Nil, 3L) // v4: +1
+      run()
+      assert(batches.toList === List((3L, 1L, 0L)), s"got $batches")
     }
-    run()
-    // one version per micro-batch: v1 = 2 inserts, v2 = 1 delete
-    // (with the deleted row's CONTENT), v3 = a replace no-op batch
-    assert(batches.toList === List((0L, 2L, 0L), (1L, 0L, 1L),
-      (2L, 0L, 0L)), s"got $batches")
-    // restart: only the new append flows, from the checkpointed version
-    batches.clear()
-    stage("f2", Seq((5L, 50L)))
-    CommitLog.commit(up, Seq("f2"), Nil, 3L) // v4: +1
-    run()
-    assert(batches.toList === List((3L, 1L, 0L)), s"got $batches")
   }
 
   test("commit-log stream mode=cdf: a MERGE changeset streams as " +
     "update pairs") {
     import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
-    val up = java.nio.file.Files.createTempDirectory("graft_cdfm_up")
-      .toFile.getAbsolutePath
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdfm_ck")
-      .toFile.getAbsolutePath
-    def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("k", "v").write
-        .parquet(s"${CommitLog.dataDir(up)}/$rel")
-    stage("f1", Seq((1L, 10L), (2L, 20L), (3L, 30L)))
-    CommitLog.commit(up, Seq("f1"), Nil, 0L) // v1: +3
-    // v2: a COW MERGE — k=2 updated to 99, k=3 deleted, k=4 inserted;
-    // the writer attaches the changeset it already knows
-    stage("f1m", Seq((1L, 10L), (2L, 99L), (4L, 40L)))
-    Seq((3L, 30L, "delete"), (2L, 20L, "update_preimage"),
-      (2L, 99L, "update_postimage"), (4L, 40L, "insert"))
-      .toDF("k", "v", "_change_type")
-      .coalesce(1).write.parquet(s"${CommitLog.dataDir(up)}/cs2")
-    CommitLog.commitTagged(up, Seq("f1m"), Seq("f1"), 1L,
-      op = Some("merge"), changeset = Some("cs2"))
-    val batches = scala.collection.mutable
-      .ArrayBuffer.empty[(Long, Map[String, Long])]
-    val q = spark.readStream.format(CommitLogStream.Format)
-      .option("path", up).option("mode", "cdf").load()
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        val m = b.groupBy("_change_type").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        batches.synchronized { batches += ((id, m)) }: Unit
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    assert(batches.toList === List(
-      (0L, Map("insert" -> 3L)),
-      (1L, Map("delete" -> 1L, "update_preimage" -> 1L,
-        "update_postimage" -> 1L, "insert" -> 1L))), s"got $batches")
+    withTempDir("graft_cdfm_") { root =>
+      val (up, ckpt) = (s"$root/up", s"$root/ck")
+      def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
+        rows.toDF("k", "v").write
+          .parquet(s"${CommitLog.dataDir(up)}/$rel")
+      stage("f1", Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+      CommitLog.commit(up, Seq("f1"), Nil, 0L) // v1: +3
+      // v2: a COW MERGE — k=2 updated to 99, k=3 deleted, k=4 inserted;
+      // the writer attaches the changeset it already knows
+      stage("f1m", Seq((1L, 10L), (2L, 99L), (4L, 40L)))
+      Seq((3L, 30L, "delete"), (2L, 20L, "update_preimage"),
+        (2L, 99L, "update_postimage"), (4L, 40L, "insert"))
+        .toDF("k", "v", "_change_type")
+        .coalesce(1).write.parquet(s"${CommitLog.dataDir(up)}/cs2")
+      CommitLog.commitTagged(up, Seq("f1m"), Seq("f1"), 1L,
+        op = Some("merge"), changeset = Some("cs2"))
+      val batches = scala.collection.mutable
+        .ArrayBuffer.empty[(Long, Map[String, Long])]
+      val q = spark.readStream.format(CommitLogStream.Format)
+        .option("path", up).option("mode", "cdf").load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          val m = b.groupBy("_change_type").count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          batches.synchronized { batches += ((id, m)) }: Unit
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      assert(batches.toList === List(
+        (0L, Map("insert" -> 3L)),
+        (1L, Map("delete" -> 1L, "update_preimage" -> 1L,
+          "update_postimage" -> 1L, "insert" -> 1L))), s"got $batches")
+    }
   }
 
   test("commit-log stream: maxBytesPerBatch splits a backfill; " +
     "Trigger.AvailableNow drains through the pacing and stops") {
     import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
-    val up = java.nio.file.Files.createTempDirectory("graft_bp_up")
-      .toFile.getAbsolutePath
-    def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("k", "v").write
-        .parquet(s"${CommitLog.dataDir(up)}/$rel")
-    (1 to 4).foreach { i =>
-      stage(s"f$i", Seq((i.toLong, i * 10L)))
-      CommitLog.commit(up, Seq(s"f$i"), Nil, i - 1L)
-    }
-    def drain(opts: Map[String, String]): List[Long] = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bp_ck")
-        .toFile.getAbsolutePath
-      val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = spark.readStream.format(CommitLogStream.Format)
-        .option("path", up).options(opts).load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          sizes.synchronized { sizes += b.count() }: Unit
+    withTempDir("graft_bp_up") { upDir =>
+      val up = upDir.getAbsolutePath
+      def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
+        rows.toDF("k", "v").write
+          .parquet(s"${CommitLog.dataDir(up)}/$rel")
+      (1 to 4).foreach { i =>
+        stage(s"f$i", Seq((i.toLong, i * 10L)))
+        CommitLog.commit(up, Seq(s"f$i"), Nil, i - 1L)
+      }
+      def drain(opts: Map[String, String]): List[Long] = {
+        withTempDir("graft_bp_ck") { ckpt =>
+          val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val q = spark.readStream.format(CommitLogStream.Format)
+            .option("path", up).options(opts).load()
+            .writeStream.option("checkpointLocation", ckpt.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+              sizes.synchronized { sizes += b.count() }: Unit
+            }
+            .start()
+          // AvailableNow pins the target at start and STOPS when drained —
+          // awaitTermination, not processAllAvailable
+          try assert(q.awaitTermination(120000),
+            "AvailableNow query must terminate on its own") finally q.stop()
+          sizes.toList
         }
-        .start()
-      // AvailableNow pins the target at start and STOPS when drained —
-      // awaitTermination, not processAllAvailable
-      try assert(q.awaitTermination(120000),
-        "AvailableNow query must terminate on its own") finally q.stop()
-      sizes.toList
+      }
+      // a 1-byte budget forces one version per batch even though the
+      // version cap would allow all four at once: the 4-commit backfill
+      // splits into four memory-bounded batches
+      assert(drain(Map("maxVersionsPerBatch" -> "10",
+        "maxBytesPerBatch" -> "1")) === List(1L, 1L, 1L, 1L))
+      // a generous budget lets the version cap batch the whole backfill
+      assert(drain(Map("maxVersionsPerBatch" -> "10",
+        "maxBytesPerBatch" -> "1000000000")) === List(4L))
     }
-    // a 1-byte budget forces one version per batch even though the
-    // version cap would allow all four at once: the 4-commit backfill
-    // splits into four memory-bounded batches
-    assert(drain(Map("maxVersionsPerBatch" -> "10",
-      "maxBytesPerBatch" -> "1")) === List(1L, 1L, 1L, 1L))
-    // a generous budget lets the version cap batch the whole backfill
-    assert(drain(Map("maxVersionsPerBatch" -> "10",
-      "maxBytesPerBatch" -> "1000000000")) === List(4L))
   }
 
   test("commit-log stream on a branched log follows the main ref, " +
     "never a parked branch head (ADVICE r17)") {
     import graft.storage.CommitLog
     import org.apache.spark.sql.graft.CommitLogStream
-    val up = java.nio.file.Files.createTempDirectory("graft_br_up")
-      .toFile.getAbsolutePath
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_br_ck")
-      .toFile.getAbsolutePath
-    def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("k", "v").write
-        .parquet(s"${CommitLog.dataDir(up)}/$rel")
-    stage("f1", Seq((1L, 10L)))
-    CommitLog.commit(up, Seq("f1"), Nil, 0L) // v1
-    CommitLog.createRef(up, "main", 1L)
-    // an unpublished candidate commits LAST on a branch: the global
-    // max version is now off-main, and an offset tracking it would
-    // wedge every lineage walk with the 'different branches' refusal
-    CommitLog.createRef(up, "wap", 1L)
-    stage("cand", Seq((99L, 990L)))
-    CommitLog.commitToRef(up, "wap", Seq("cand"), Nil) // v2, parked
-    val keys = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def run(): Unit = {
-      val q = spark.readStream.format(CommitLogStream.Format)
-        .option("path", up).load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          val ks = b.select("k").collect().map(_.getLong(0))
-          keys.synchronized { keys ++= ks }: Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    withTempDir("graft_br_") { root =>
+      val (up, ckpt) = (s"$root/up", s"$root/ck")
+      def stage(rel: String, rows: Seq[(Long, Long)]): Unit =
+        rows.toDF("k", "v").write
+          .parquet(s"${CommitLog.dataDir(up)}/$rel")
+      stage("f1", Seq((1L, 10L)))
+      CommitLog.commit(up, Seq("f1"), Nil, 0L) // v1
+      CommitLog.createRef(up, "main", 1L)
+      // an unpublished candidate commits LAST on a branch: the global
+      // max version is now off-main, and an offset tracking it would
+      // wedge every lineage walk with the 'different branches' refusal
+      CommitLog.createRef(up, "wap", 1L)
+      stage("cand", Seq((99L, 990L)))
+      CommitLog.commitToRef(up, "wap", Seq("cand"), Nil) // v2, parked
+      val keys = scala.collection.mutable.ArrayBuffer.empty[Long]
+      def run(): Unit = {
+        val q = spark.readStream.format(CommitLogStream.Format)
+          .option("path", up).load()
+          .writeStream.option("checkpointLocation", ckpt)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            val ks = b.select("k").collect().map(_.getLong(0))
+            keys.synchronized { keys ++= ks }: Unit
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()
+      assert(keys.toList === List(1L),
+        s"the stream must see ONLY main's rows, got $keys")
+      // a clean candidate publishes by fast-forward; the stream follows
+      stage("good", Seq((2L, 20L)))
+      val gv = CommitLog.commitToRef(up, "main", Seq("good"), Nil) // v3
+      assert(gv === 3L)
+      keys.clear()
+      run()
+      assert(keys.toList === List(2L),
+        s"after publish only the increment flows, got $keys")
     }
-    run()
-    assert(keys.toList === List(1L),
-      s"the stream must see ONLY main's rows, got $keys")
-    // a clean candidate publishes by fast-forward; the stream follows
-    stage("good", Seq((2L, 20L)))
-    val gv = CommitLog.commitToRef(up, "main", Seq("good"), Nil) // v3
-    assert(gv === 3L)
-    keys.clear()
-    run()
-    assert(keys.toList === List(2L),
-      s"after publish only the increment flows, got $keys")
   }
 }

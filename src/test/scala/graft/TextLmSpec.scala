@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 /** Hand-computed pins for the round-13 text additions: x35 (BPE-style
   * merge training) and x36 (stupid-backoff trigram LM across a real
@@ -13,7 +12,7 @@ class TextLmSpec extends SparkTestBase {
     val docs = rows.toDF("doc_id", "text", "source")
       .selectExpr("doc_id", "text", "'en' AS lang", "source",
         "CAST(length(text) AS BIGINT) AS n_chars")
-    val dir = Files.createTempDirectory("graft_textlm").toString
+    val dir = sharedTempDir("graft_textlm").toString
     docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
   }

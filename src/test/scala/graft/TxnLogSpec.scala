@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.storage.{CommitLog, TxnLog}
 
@@ -13,11 +12,8 @@ import graft.storage.{CommitLog, TxnLog}
   */
 class TxnLogSpec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val f = Files.createTempDirectory(name).toFile
-    f.deleteOnExit()
-    f.getAbsolutePath
-  }
+  private def freshDir(name: String): String =
+    sharedTempDir(name).getAbsolutePath
 
   /** A coordinator with two one-commit tables (fact-ish and agg-ish). */
   private def pair(): (String, String, String) = {
