@@ -16,11 +16,9 @@ import org.apache.spark.sql.DataFrame
   */
 object Bench {
 
-  /** Headline set, DERIVED from the registry: every ORACLE-BACKED query
-    * (the DuckDB comparison only makes sense for queries the DuckDB
-    * side also runs — `queries ∩ oracleSql`, so a rows-only query can
-    * never silently skew the published ratio) except two
-    * by-construction demonstrations whose cost is a documented
+  /** Headline set, DERIVED from the registry (every query carries its
+    * DuckDB oracle, so the published ratio compares like with like)
+    * except two by-construction demonstrations whose cost is a documented
     * property of their SHAPE, not of data volume or plan quality:
     *  - d6 (brute-force embedding near-dup): quadratic BY CONSTRUCTION
     *    as the test-scale exactness baseline — its scale path (v5
@@ -42,8 +40,7 @@ object Bench {
     val excluded = Set("d6_embedding_neardup", "sql15_reset_binpack")
     excluded.foreach(e => require(SparkEntry.queries.contains(e),
       s"headline exclusion '$e' is not in the registry — renamed?"))
-    ((SparkEntry.queries.keySet
-      intersect SparkEntry.oracleSql.keySet) -- excluded).toSeq.sorted
+    (SparkEntry.queries.keySet -- excluded).toSeq.sorted
   }
 
   /** Fully evaluate a query's output. `.count()` is NOT that: Catalyst
@@ -139,11 +136,8 @@ object Bench {
     // r14: a one-query or control-set run previously paid every
     // family's builds, defeating the control set's "one cheap run
     // prices the ambient band" purpose).
-    // SPARK_GRAFT_NO_CACHE_PREBUILD=1 skips this (profiling knob for
-    // measuring a family's gross first-query cost).
     val caches: Seq[(String, Double)] =
-      if (sys.env.get("SPARK_GRAFT_NO_CACHE_PREBUILD").contains("1")) Nil
-      else SparkEntry.sharedCachesFor(names.toSet).map { case (cname, build) =>
+      SparkEntry.sharedCachesFor(names.toSet).map { case (cname, build) =>
         val t0 = System.nanoTime()
         try {
           force(build(spark, sfDir))

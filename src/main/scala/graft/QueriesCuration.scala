@@ -39,32 +39,49 @@ object QueriesCuration {
         lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
       .otherwise(lit("")))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // PII scrub: match counts + typed-placeholder redaction. One narrow
     // codegen'd projection — zero shuffle, linear at any scale.
-    "x12_pii_redact" -> ((s, d) => {
+    Query("x12_pii_redact", (s, d) => {
       Tables.documents(s, d).select(
         col("doc_id"),
         TextOps.matchCount(piiText, TextOps.EmailRe).as("n_emails"),
         TextOps.matchCount(piiText, TextOps.PhoneRe).as("n_phones"),
         TextOps.redactPii(piiText).as("redacted"))
-    }),
+    },
+      s"""WITH p AS (SELECT doc_id, $piiSql AS pii FROM documents)
+         |SELECT doc_id,
+         |  CAST(len(regexp_extract_all(pii, '$emailSql')) AS BIGINT)
+         |    AS n_emails,
+         |  CAST(len(regexp_extract_all(pii, '$phoneSql')) AS BIGINT)
+         |    AS n_phones,
+         |  regexp_replace(regexp_replace(pii, '$emailSql', '<EMAIL>', 'g'),
+         |    '$phoneSql', '<PHONE>', 'g') AS redacted
+         |FROM p""".stripMargin),
 
     // Canonical normalization + the dedup key it exists for. Narrow
     // projection, zero shuffle.
-    "x13_text_normalize" -> ((s, d) => {
+    Query("x13_text_normalize", (s, d) => {
       val norm = TextOps.normalizeText(col("text"))
       Tables.documents(s, d).select(
         col("doc_id"),
         norm.as("norm_text"),
         TextOps.md5Prefix60(norm).as("norm_hash"))
-    }),
+    },
+      """WITH n AS (SELECT doc_id,
+        |  trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text
+        |  FROM documents)
+        |SELECT doc_id, norm_text,
+        |  CAST(concat('0x', substr(md5(norm_text), 1, 15)) AS BIGINT)
+        |    AS norm_hash
+        |FROM n""".stripMargin),
 
     // Quality gate: drop the bottom quartile per language. percent_rank
     // over (lang) partitions — one shuffle on lang, O(1) rank state per
     // partition stream; the gate compares the exact (rank-1)/(n-1)
     // ratio, rounding only the OUTPUT column.
-    "x14_quality_filter" -> ((s, d) => {
+    Query("x14_quality_filter", (s, d) => {
       val q = Tables.documents(s, d).select(
         col("doc_id"), col("lang"),
         round(TextOps.qualityScore(col("text")), 6).as("quality"))
@@ -74,7 +91,21 @@ object QueriesCuration {
         .filter(col("pr") >= 0.25)
         .select(col("doc_id"), col("lang"), col("quality"),
           round(col("pr"), 6).as("pr"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, lang, text, $toksSql AS toks
+         |           FROM documents),
+         |q AS (SELECT doc_id, lang,
+         |  round(least(1.0, len(toks) / 100.0) *
+         |    (1.0 - CASE WHEN length(text) = 0 THEN 0.0
+         |      ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
+         |        / CAST(length(text) AS DOUBLE) END), 6) AS quality
+         |  FROM t),
+         |r AS (SELECT doc_id, lang, quality,
+         |  percent_rank() OVER (PARTITION BY lang
+         |    ORDER BY quality, doc_id) AS pr
+         |  FROM q)
+         |SELECT doc_id, lang, quality, round(pr, 6) AS pr
+         |FROM r WHERE pr >= 0.25""".stripMargin),
 
     // Per-source token-budget cap (the "no domain dominates the corpus"
     // rule): admit docs per source in seeded-hash order until the
@@ -82,7 +113,7 @@ object QueriesCuration {
     // iff it STARTS under budget, so every source gets at least one doc.
     // One sort-shuffle on source (running sum with an explicit ROWS
     // frame), no joins.
-    "x15_source_cap" -> ((s, d) => {
+    Query("x15_source_cap", (s, d) => {
       val docs = Tables.documents(s, d).select(
         col("doc_id"), col("source"),
         TextOps.tokenCount(col("text")).as("n_tokens"),
@@ -93,7 +124,19 @@ object QueriesCuration {
         .filter(col("cum") - col("n_tokens") < 1000)
         .select(col("source"), col("doc_id"), col("n_tokens"),
           (col("cum") - col("n_tokens")).as("cum_before"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, source,
+         |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
+         |  CAST(concat('0x', substr(md5(concat('cap:',
+         |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS h
+         |  FROM documents),
+         |c AS (SELECT source, doc_id, n_tokens,
+         |  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |    AS cum
+         |  FROM t)
+         |SELECT source, doc_id, n_tokens, cum - n_tokens AS cum_before
+         |FROM c WHERE cum - n_tokens < 1000""".stripMargin),
 
     // Differentially-private aggregate release (Laplace mechanism,
     // ε=1, sensitivity 1) over the (lang, source) count table — the
@@ -133,7 +176,7 @@ object QueriesCuration {
     // times the mix re-reads each source) is one rounded division.
     // O(sources) rows after one doc-level agg; the ranking window
     // sees only the source catalog, never documents.
-    "x31_temperature_mix" -> ((s, d) => {
+    Query("x31_temperature_mix", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val B = 100000L
       val dem = Tables.documents(s, d)
@@ -156,9 +199,34 @@ object QueriesCuration {
           col("alloc"),
           round(col("alloc").cast("double") /
             col("n_tokens").cast("double"), 6).as("epochs"))
-    }),
+    },
+      // x31: same integer temperature allocation; floor(sqrt()) agrees
+      // because IEEE-754 sqrt is correctly rounded on both engines, and
+      // everything after it is exact Long div/mod.
+      s"""WITH dem AS (SELECT source,
+         |    CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
+         |  FROM documents GROUP BY 1),
+         |w AS (SELECT source, n_tokens,
+         |    CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
+         |      AS weight
+         |  FROM dem),
+         |t AS (SELECT CAST(sum(weight) AS BIGINT) AS wsum FROM w),
+         |a AS (SELECT source, n_tokens, weight,
+         |    (100000 * weight) // wsum AS base,
+         |    (100000 * weight) % wsum AS rem
+         |  FROM w, t),
+         |sb AS (SELECT CAST(sum(base) AS BIGINT) AS allocated FROM a),
+         |r AS (SELECT a.*, CAST(row_number() OVER (ORDER BY rem DESC,
+         |    source) AS BIGINT) AS rk FROM a)
+         |SELECT source, n_tokens, weight,
+         |  base + (CASE WHEN rk <= 100000 - allocated
+         |    THEN 1 ELSE 0 END) AS alloc,
+         |  round(CAST(base + (CASE WHEN rk <= 100000 - allocated
+         |      THEN 1 ELSE 0 END) AS DOUBLE)
+         |    / CAST(n_tokens AS DOUBLE), 6) AS epochs
+         |FROM r, sb""".stripMargin),
 
-    "x26_fair_share" -> ((s, d) => {
+    Query("x26_fair_share", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val B = 20000L
       val dem = Tables.documents(s, d)
@@ -193,117 +261,9 @@ object QueriesCuration {
             .as("alloc"),
           (col("cut_idx").isNotNull && col("idx") >= col("cut_idx"))
             .as("is_capped"))
-    }),
-
-    "x25_dp_release" -> ((s, d) => {
-      val g = Tables.documents(s, d)
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_true"))
-      val u = (TextOps.md5Prefix60(concat(lit("dp:"), col("lang"),
-        lit("|"), col("source"))).cast("double") + lit(0.5)) /
-        lit(1.152921504606846976e18)
-      val c = u - lit(0.5)
-      g.select(col("lang"), col("source"), col("n_true"),
-        round(col("n_true").cast("double") -
-          signum(c) * log(lit(1.0) - lit(2.0) * abs(c)), 6)
-          .as("n_released"))
-    })
-  )
-
-  private val toksSql =
-    """list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"""
-
-  /** piiText in DuckDB (same doc_id-derived planting formula). */
-  private val piiSql =
-    """concat(text,
-      |  CASE WHEN doc_id % 3 <> 0
-      |    THEN concat(' contact user', CAST(doc_id AS VARCHAR), '@mail',
-      |      CAST(doc_id % 7 AS VARCHAR), '.org') ELSE '' END,
-      |  CASE WHEN doc_id % 4 = 0
-      |    THEN concat(' call +1-555-',
-      |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')) ELSE '' END)"""
-      .stripMargin
-
-  private val emailSql = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-  private val phoneSql = "\\+1-555-[0-9]{4}"
-
-  def oracle: Map[String, String] = Map(
-    "x12_pii_redact" ->
-      s"""WITH p AS (SELECT doc_id, $piiSql AS pii FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(pii, '$emailSql')) AS BIGINT)
-         |    AS n_emails,
-         |  CAST(len(regexp_extract_all(pii, '$phoneSql')) AS BIGINT)
-         |    AS n_phones,
-         |  regexp_replace(regexp_replace(pii, '$emailSql', '<EMAIL>', 'g'),
-         |    '$phoneSql', '<PHONE>', 'g') AS redacted
-         |FROM p""".stripMargin,
-    "x13_text_normalize" ->
-      """WITH n AS (SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text
-        |  FROM documents)
-        |SELECT doc_id, norm_text,
-        |  CAST(concat('0x', substr(md5(norm_text), 1, 15)) AS BIGINT)
-        |    AS norm_hash
-        |FROM n""".stripMargin,
-    "x14_quality_filter" ->
-      s"""WITH t AS (SELECT doc_id, lang, text, $toksSql AS toks
-         |           FROM documents),
-         |q AS (SELECT doc_id, lang,
-         |  round(least(1.0, len(toks) / 100.0) *
-         |    (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
-         |        / CAST(length(text) AS DOUBLE) END), 6) AS quality
-         |  FROM t),
-         |r AS (SELECT doc_id, lang, quality,
-         |  percent_rank() OVER (PARTITION BY lang
-         |    ORDER BY quality, doc_id) AS pr
-         |  FROM q)
-         |SELECT doc_id, lang, quality, round(pr, 6) AS pr
-         |FROM r WHERE pr >= 0.25""".stripMargin,
-    "x15_source_cap" ->
-      s"""WITH t AS (SELECT doc_id, source,
-         |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |  CAST(concat('0x', substr(md5(concat('cap:',
-         |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS h
-         |  FROM documents),
-         |c AS (SELECT source, doc_id, n_tokens,
-         |  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS cum
-         |  FROM t)
-         |SELECT source, doc_id, n_tokens, cum - n_tokens AS cum_before
-         |FROM c WHERE cum - n_tokens < 1000""".stripMargin,
-    // x31: same integer temperature allocation; floor(sqrt()) agrees
-    // because IEEE-754 sqrt is correctly rounded on both engines, and
-    // everything after it is exact Long div/mod.
-    "x31_temperature_mix" ->
-      s"""WITH dem AS (SELECT source,
-         |    CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
-         |  FROM documents GROUP BY 1),
-         |w AS (SELECT source, n_tokens,
-         |    CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
-         |      AS weight
-         |  FROM dem),
-         |t AS (SELECT CAST(sum(weight) AS BIGINT) AS wsum FROM w),
-         |a AS (SELECT source, n_tokens, weight,
-         |    (100000 * weight) // wsum AS base,
-         |    (100000 * weight) % wsum AS rem
-         |  FROM w, t),
-         |sb AS (SELECT CAST(sum(base) AS BIGINT) AS allocated FROM a),
-         |r AS (SELECT a.*, CAST(row_number() OVER (ORDER BY rem DESC,
-         |    source) AS BIGINT) AS rk FROM a)
-         |SELECT source, n_tokens, weight,
-         |  base + (CASE WHEN rk <= 100000 - allocated
-         |    THEN 1 ELSE 0 END) AS alloc,
-         |  round(CAST(base + (CASE WHEN rk <= 100000 - allocated
-         |      THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(n_tokens AS DOUBLE), 6) AS epochs
-         |FROM r, sb""".stripMargin,
-    // x26: same integer water-filling; DuckDB's // is the same floor
-    // division on the same non-negative integers.
-    "x26_fair_share" ->
+    },
+      // x26: same integer water-filling; DuckDB's // is the same floor
+      // division on the same non-negative integers.
       s"""WITH dem AS (SELECT source,
          |    CAST(sum(len($toksSql)) AS BIGINT) AS demand
          |  FROM documents GROUP BY 1),
@@ -333,11 +293,24 @@ object QueriesCuration {
          |    END AS alloc,
          |  cr.cut_idx IS NOT NULL AND r2.idx >= cr.cut_idx
          |    AS is_capped
-         |FROM r2 LEFT JOIN cr ON TRUE""".stripMargin,
-    // x25: identical inverse-CDF Laplace draw from the same seeded
-    // per-group hash; u can never be exactly 0.5 ((h+0.5)/2^60 with
-    // integer h), so sign(u−½) is never 0.
-    "x25_dp_release" ->
+         |FROM r2 LEFT JOIN cr ON TRUE""".stripMargin),
+
+    Query("x25_dp_release", (s, d) => {
+      val g = Tables.documents(s, d)
+        .groupBy(col("lang"), col("source"))
+        .agg(count(lit(1)).as("n_true"))
+      val u = (TextOps.md5Prefix60(concat(lit("dp:"), col("lang"),
+        lit("|"), col("source"))).cast("double") + lit(0.5)) /
+        lit(1.152921504606846976e18)
+      val c = u - lit(0.5)
+      g.select(col("lang"), col("source"), col("n_true"),
+        round(col("n_true").cast("double") -
+          signum(c) * log(lit(1.0) - lit(2.0) * abs(c)), 6)
+          .as("n_released"))
+    },
+      // x25: identical inverse-CDF Laplace draw from the same seeded
+      // per-group hash; u can never be exactly 0.5 ((h+0.5)/2^60 with
+      // integer h), so sign(u−½) is never 0.
       """WITH g AS (SELECT lang, source, count(*) AS n_true
         |  FROM documents GROUP BY 1, 2),
         |h AS (SELECT lang, source, n_true,
@@ -350,5 +323,23 @@ object QueriesCuration {
         |    - sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)), 6)
         |    AS n_released
         |FROM h""".stripMargin
-  )
+  ))
+
+  private val toksSql =
+    """list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"""
+
+  /** piiText in DuckDB (same doc_id-derived planting formula). */
+  private val piiSql =
+    """concat(text,
+      |  CASE WHEN doc_id % 3 <> 0
+      |    THEN concat(' contact user', CAST(doc_id AS VARCHAR), '@mail',
+      |      CAST(doc_id % 7 AS VARCHAR), '.org') ELSE '' END,
+      |  CASE WHEN doc_id % 4 = 0
+      |    THEN concat(' call +1-555-',
+      |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')) ELSE '' END)"""
+      .stripMargin
+
+  private val emailSql = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
+  private val phoneSql = "\\+1-555-[0-9]{4}"
+
 }

@@ -31,10 +31,12 @@ object QueriesDedup {
     * tokenization per scale dir. The same pattern at 100 TB is
     * "tokenize once → checkpoint → fan out to every signature".
     */
-  private[graft] def docsWithTokens(s: SparkSession, d: String): DataFrame =
-    SessionMemo.persistOnce(DedupOps.spread(
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))))
+  private[graft] lazy val docsWithTokens =
+    SharedFrame.persisted("dedup.tokens") { (s, d) =>
+      DedupOps.spread(
+        Tables.documents(s, d)
+          .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")))
+    }
 
   /** Tokenized docs reduced to their distinct 3-shingle hashes, PERSISTED
     * (shared by d2 and d3 via CacheManager plan equality). Materializing
@@ -46,9 +48,11 @@ object QueriesDedup {
     * array. Same discipline as [[docsWithTokens]] — at 100 TB this is
     * "signature once → checkpoint → fan out".
     */
-  private def docsWithShingles(s: SparkSession, d: String): DataFrame =
-    SessionMemo.persistOnce(docsWithTokens(s, d)
-      .select(col("doc_id"), DedupOps.shingleHashes(col("toks"), 3).as("sh")))
+  private lazy val docsWithShingles =
+    SharedFrame.persisted("dedup.shingles", docsWithTokens) { (s, d) =>
+      docsWithTokens(s, d)
+        .select(col("doc_id"), DedupOps.shingleHashes(col("toks"), 3).as("sh"))
+    }
 
   /** d18's ranked frame BUILD (un-checkpointed): deterministic range
     * buckets from seeded-sampled boundaries (withRangeBuckets — a pure
@@ -111,12 +115,13 @@ object QueriesDedup {
     * executable spec; DedupFirstCacheSpec pins frame equality on a
     * clone-heavy fixture, and the sf ≤ 1 oracles are unchanged.
     */
-  private[graft] def cloneMembers(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.clone_members")(
-      DedupOps.cloneMembership(docsWithTokens(s, d), "doc_id", col("toks")))
+  private[graft] lazy val cloneMembers =
+    SharedFrame.checkpointed("dedup.clone_members", docsWithTokens) { (s, d) =>
+      DedupOps.cloneMembership(docsWithTokens(s, d), "doc_id", col("toks"))
+    }
 
-  private def keeperIndex(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.keeper_index") {
+  private lazy val keeperIndex = SharedFrame.checkpointed(
+      "dedup.keeper_index", docsWithShingles, cloneMembers) { (s, d) =>
       val w = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("w"))
         .withColumnRenamed("keeper", "doc_id")
@@ -125,12 +130,13 @@ object QueriesDedup {
         "doc_id", "sh", "w", maxDocFreq = 1000L)
     }
 
-  private def keeperPairs(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.keeper_pairs")(
-      DedupOps.pairIntersectionsFromIndex(keeperIndex(s, d)))
+  private lazy val keeperPairs =
+    SharedFrame.checkpointed("dedup.keeper_pairs", keeperIndex) { (s, d) =>
+      DedupOps.pairIntersectionsFromIndex(keeperIndex(s, d))
+    }
 
-  private def cliqueSelf(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.clique_self") {
+  private lazy val cliqueSelf = SharedFrame.checkpointed(
+      "dedup.clique_self", keeperIndex, cloneMembers) { (s, d) =>
       val copies = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("copies"))
         .filter(col("copies") >= 2)
@@ -162,8 +168,8 @@ object QueriesDedup {
     * paid once (VERDICT r14 #2a: d32 previously re-expanded at B=8
     * what d29 had already expanded at B=2).
     */
-  private def budgetPairs(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.budget_pairs") {
+  private lazy val budgetPairs = SharedFrame.checkpointed(
+      "dedup.budget_pairs", prefixBucketFrames) { (s, d) =>
       val (e, buckets) = prefixBucketFrames(s, d)
       DedupOps.prefixVerifiedMinOff(e, buckets, 7, 10, maxB = 8)
     }
@@ -175,14 +181,15 @@ object QueriesDedup {
     * rebuilding it per invocation dominated d33's bench time (the
     * budgeted expansion + verify it exists for is the cheap part).
     */
-  private def keeperPrefixFrames(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
+  private lazy val keeperPrefixFrames = SharedFrame.memoized(
+      "dedup.keeper_buckets", docsWithShingles, cloneMembers)(
+      (_: (DataFrame, DataFrame))._2) { (s, d) =>
     val keeperSh = docsWithShingles(s, d)
       .join(cloneMembers(s, d).filter(col("id") === col("keeper"))
         .select(col("id").as("doc_id")), "doc_id")
     val (e, buckets) = DedupOps.prefixBuckets(keeperSh, "doc_id", "sh",
       7, 10, maxBucket = 1000L)
-    (e, SessionMemo.checkpoint(s, d, "dedup.keeper_prefix_buckets")(buckets))
+    (e, buckets.localCheckpoint())
   }
 
   /** MinHash signatures over KEEPERS only, memo-checkpointed — the
@@ -190,8 +197,8 @@ object QueriesDedup {
     * sig-bearing census, d21's two sig joins), each of which would
     * otherwise recompute the signature pass per count branch.
     */
-  private def keeperSigs(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.keeper_sigs") {
+  private lazy val keeperSigs = SharedFrame.checkpointed(
+      "dedup.keeper_sigs", docsWithShingles, cloneMembers) { (s, d) =>
       DedupOps.minhashSigs(
         docsWithShingles(s, d)
           .join(cloneMembers(s, d).filter(col("id") === col("keeper"))
@@ -208,8 +215,9 @@ object QueriesDedup {
     * the keeper-level filter runs before expansion, so the only
     * raw-sized materialization is the answer itself.
     */
-  private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    SessionMemo.checkpoint(s, d, "dedup.verified_pairs")(
+  private lazy val verifiedPairs = SharedFrame.checkpointed(
+      "dedup.verified_pairs", keeperPairs, cliqueSelf, cloneMembers) {
+    (s, d) =>
       // spread: the cross ∪ intra expansion doubles partition count,
       // and the iterative consumers (d7's Pregel, d9's PageRank)
       // symmetrize this frame again — without re-bounding, every round
@@ -217,21 +225,23 @@ object QueriesDedup {
       DedupOps.spread(rawPairsWhere(s, d, jaccardGe08)
         .select(col("id_a"), col("id_b"),
           round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 6)
-            .as("jaccard"))))
+            .as("jaccard")))
+  }
 
   /** The prefix-filter front half (shingle index + rarity-ordered
     * prefix buckets at the d17 7/10 threshold), with the BUCKETS
     * frame memo-checkpointed: four consumers (d17 unbounded, d29
     * budgeted, d32 curve, the budget_pairs expansion) and the per-doc
     * rarity sort + collect_list is the expensive shared part. `e`
-    * rides the shingles cache and is cheap to re-derive, so only
-    * buckets materialize.
+    * rides the shingles cache and stays a lazy plan, so only buckets
+    * materialize.
     */
-  private def prefixBucketFrames(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
+  private lazy val prefixBucketFrames = SharedFrame.memoized(
+      "dedup.prefix_buckets", docsWithShingles)(
+      (_: (DataFrame, DataFrame))._2) { (s, d) =>
     val (e, buckets) = DedupOps.prefixBuckets(docsWithShingles(s, d),
       "doc_id", "sh", 7, 10, maxBucket = 1000L)
-    (e, SessionMemo.checkpoint(s, d, "dedup.prefix_buckets")(buckets))
+    (e, buckets.localCheckpoint())
   }
 
   /** d31's body over a tokenized (doc_id, toks) frame: full-token-hash
@@ -276,42 +286,25 @@ object QueriesDedup {
       .select(col("id_a"), col("id_b"), col("jaccard"),
         col("copies_a"), col("copies_b"))
 
-  /** This family's shared persisted caches, name → builder, in
-    * DEPENDENCY order (shingles read tokens, pairs read shingles):
-    * forcing them in sequence attributes each build to its own line.
-    * Bench pre-builds these before the timed passes so per-query
-    * times are NET of cache builds — without this, a family's cache
-    * cost lands on whichever member query runs first, and per-query
-    * numbers silently move whenever the family grows (the r13
-    * d14/x-family drift class).
-    */
-  private[graft] def sharedCaches
-      : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "dedup.tokens" -> (docsWithTokens _),
-    "dedup.shingles" -> (docsWithShingles _),
-    "dedup.clone_members" -> (cloneMembers _),
-    "dedup.keeper_index" -> (keeperIndex _),
-    "dedup.keeper_pairs" -> (keeperPairs _),
-    "dedup.clique_self" -> (cliqueSelf _),
-    "dedup.keeper_sigs" -> (keeperSigs _),
-    "dedup.verified_pairs" -> (verifiedPairs _),
-    "dedup.prefix_buckets" ->
-      ((s: SparkSession, d: String) => prefixBucketFrames(s, d)._2),
-    "dedup.budget_pairs" -> (budgetPairs _),
-    "dedup.keeper_buckets" ->
-      ((s: SparkSession, d: String) => keeperPrefixFrames(s, d)._2))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // Exact dedup on a canonicalization (first-5-token prefix hash):
     // pure hash aggregation, one shuffle. ~24 multi-copy groups at sf0.01.
-    "d1_exact_dedup" -> ((s, d) => {
+    Query("d1_exact_dedup", (s, d) => {
       val key = md5(concat_ws(" ", slice(col("toks"), 1, 5)))
       DedupOps.exactDedup(docsWithTokens(s, d), "doc_id", key)
-    }),
+    },
+      s"""SELECT md5(array_to_string(list_slice(toks, 1, 5), ' '))
+         |    AS text_hash,
+         |  min(doc_id) AS keeper, count(*) AS n_copies
+         |FROM (SELECT doc_id, $toksSql AS toks FROM documents)
+         |GROUP BY 1""".stripMargin,
+      reads = Seq(docsWithTokens)),
 
     // n-gram Jaccard near-dup: native distinct-shingle hashing ->
     // inverted index (df-capped) -> candidate pairs -> exact Jaccard >= 0.8.
-    "d2_jaccard_pairs" -> ((s, d) => verifiedPairs(s, d)),
+    Query("d2_jaccard_pairs", (s, d) => verifiedPairs(s, d),
+      s"WITH $d2Ctes\n$d2Select",
+      reads = Seq(verifiedPairs)),
 
     // Prefix-filter set-similarity join (PPJoin discipline) at J >= 0.7:
     // the LOSSLESS candidate generator — documents bucket-join only on
@@ -321,10 +314,30 @@ object QueriesDedup {
     // pairs away and d3's banding trades recall probabilistically).
     // All gates in exact integer arithmetic; rides the shared shingle
     // cache.
-    "d17_prefix_filter" -> ((s, d) => {
+    Query("d17_prefix_filter", (s, d) => {
       val (e, buckets) = prefixBucketFrames(s, d)
       DedupOps.prefixFilterPairsFrom(e, buckets, 7, 10)
-    }),
+    },
+      // d17: d2's tokenize/shingle/index CTEs (t, s, e0, e), then the
+      // prefix chain — rarity order via list(s ORDER BY df, s), integer
+      // ceil prefix length, bucket cap, length filter, exact verify.
+      s"""WITH $prefixPreCtes,
+         |pc AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+         |      a.n AS n_a, b.n AS n_b
+         |      FROM pre a JOIN pre b ON a.s = b.s AND a.id < b.id
+         |      JOIN ok ON a.s = ok.s
+         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7),
+         |p AS (SELECT pc.id_a, pc.id_b, pc.n_a, pc.n_b,
+         |      count(*) AS inter
+         |      FROM pc
+         |      JOIN e ea ON ea.id = pc.id_a
+         |      JOIN e eb ON eb.id = pc.id_b AND eb.s = ea.s
+         |      GROUP BY 1, 2, 3, 4)
+         |SELECT id_a, id_b, inter,
+         |  round(inter / CAST(n_a + n_b - inter AS DOUBLE), 6)
+         |    AS jaccard
+         |FROM p WHERE inter * 17 >= (n_a + n_b) * 7""".stripMargin,
+      reads = Seq(prefixBucketFrames)),
 
     // Sorted-neighborhood blocking (the third candidate-generation
     // discipline next to d2's df-capped index and d3's LSH banding):
@@ -355,7 +368,7 @@ object QueriesDedup {
     // rows lands in the SAME partition and is filtered. So the pair
     // set equals the single-sort formulation's, which is what the
     // oracle computes.
-    "d18_sorted_neighborhood" -> ((s, d) => {
+    Query("d18_sorted_neighborhood", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val W = 4
       // Checkpointed ONCE PER INVOCATION (OPT r19, guide §1.2 step 1):
@@ -410,16 +423,51 @@ object QueriesDedup {
           col("n_a"), col("n_b"))
         .filter(jac >= 0.8)
         .select(col("id_a"), col("id_b"), round(jac, 6).as("jaccard"))
-    }),
+    },
+      // d18: rank self-join expresses the same w-window neighborhood the
+      // Spark side expands in-row with lead(); the verify recomputes
+      // d2's Jaccard from in-row hashed-shingle intersections.
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |s AS (SELECT doc_id, $sh3Sql AS sh FROM t),
+         |hs AS (SELECT doc_id,
+         |      list_transform(sh, x -> ${h60("concat('sh:', x)")})
+         |        AS hsh FROM s),
+         |k AS (SELECT doc_id,
+         |      array_to_string(list_slice(toks, 1, 3), ' ') AS bkey
+         |      FROM t),
+         |r AS (SELECT doc_id,
+         |      row_number() OVER (ORDER BY bkey, doc_id) AS rk FROM k),
+         |c AS (SELECT least(a.doc_id, b.doc_id) AS id_a,
+         |      greatest(a.doc_id, b.doc_id) AS id_b
+         |      FROM r a JOIN r b ON b.rk BETWEEN a.rk + 1 AND a.rk + 4),
+         |v AS (SELECT id_a, id_b,
+         |      CAST(len(list_intersect(ha.hsh, hb.hsh)) AS BIGINT)
+         |        AS inter,
+         |      CAST(len(ha.hsh) AS BIGINT) AS n_a,
+         |      CAST(len(hb.hsh) AS BIGINT) AS n_b
+         |      FROM c JOIN hs ha ON c.id_a = ha.doc_id
+         |        JOIN hs hb ON c.id_b = hb.doc_id)
+         |SELECT id_a, id_b,
+         |  round(inter / CAST(n_a + n_b - inter AS DOUBLE), 6) AS jaccard
+         |FROM v
+         |WHERE inter / CAST(n_a + n_b - inter AS DOUBLE) >= 0.8"""
+        .stripMargin,
+      reads = Seq(docsWithShingles, docsWithTokens)),
 
     // MinHash(16) + LSH(4 bands x 4 rows): candidate pairs via equi-join
     // on band signatures. Signatures are computed in one narrow projection
     // (no explode until the 4 band rows).
-    "d3_minhash_lsh" -> ((s, d) => {
+    Query("d3_minhash_lsh", (s, d) => {
       val sigs = DedupOps.minhashSigs(docsWithShingles(s, d),
         "doc_id", "sh", 16)
       DedupOps.lshCandidates(DedupOps.lshBands(sigs, "id", "sig", 4, 4))
-    }),
+    },
+      s"""WITH $d3Ctes
+         |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+         |FROM sig a JOIN sig b
+         |  ON a.band = b.band AND a.sg = b.sg AND a.doc_id < b.doc_id"""
+        .stripMargin,
+      reads = Seq(docsWithShingles)),
 
     // Incremental LSH-dedup maintenance — the MV discipline (mv1–mv4)
     // applied to d3's near-dup index: when a 10% delta batch lands
@@ -434,7 +482,7 @@ object QueriesDedup {
     // discipline: the corpus side is the big side, the delta probe is
     // the small side of the equi-join). Output marks pairs where BOTH
     // endpoints are new (delta-delta) vs delta-base.
-    "mv5_lsh_delta" -> ((s, d) => {
+    Query("mv5_lsh_delta", (s, d) => {
       def isDelta(id: Column): Column =
         TextOps.md5Prefix60(concat(lit("split:"), id.cast("string")))
           .%(100) >= 90
@@ -452,7 +500,24 @@ object QueriesDedup {
         .distinct()
         .select(col("id_a"), col("id_b"),
           (isDelta(col("id_a")) && isDelta(col("id_b"))).as("both_new"))
-    }),
+    },
+      // mv5: d3's signature CTEs + delta-probe restriction (x6's seeded
+      // split marks the delta); the both_new flag recomputes membership
+      // from the ids so it needs no extra join.
+      {
+      def del(idExpr: String) =
+        s"${h60(s"concat('split:', CAST($idExpr AS VARCHAR))")} % 100 >= 90"
+      s"""WITH $d3Ctes
+         |SELECT id_a, id_b,
+         |  (${del("id_a")}) AND (${del("id_b")}) AS both_new
+         |FROM (SELECT DISTINCT least(a.doc_id, b.doc_id) AS id_a,
+         |    greatest(a.doc_id, b.doc_id) AS id_b
+         |  FROM sig a JOIN sig b
+         |    ON a.band = b.band AND a.sg = b.sg
+         |      AND a.doc_id <> b.doc_id
+         |  WHERE ${del("a.doc_id")})""".stripMargin
+    },
+      reads = Seq(docsWithShingles)),
 
     // LSH candidate-generator quality gate — v8_ann_recall's discipline
     // applied to the LEXICAL dedup path: d3's banded candidates scored
@@ -466,7 +531,7 @@ object QueriesDedup {
     // aggregates broadcast together. (On this corpus: 25/25 recall at
     // zero false candidates — the planted near-dups sit far above the
     // 4×4 band threshold.)
-    "d20_lsh_recall" -> ((s, d) => {
+    Query("d20_lsh_recall", (s, d) => {
       // DEDUP-FIRST form (VERDICT r15 #6 — the d33 discipline applied
       // to the quality gate): exact clones share shingle sets, hence
       // MinHash signatures, hence band collisions — so every raw-pair
@@ -525,7 +590,42 @@ object QueriesDedup {
         .select(col("n_truth"), col("n_cand"), col("n_hit"),
           safeRatio(col("n_hit"), col("n_truth")).as("recall"),
           safeRatio(col("n_hit"), col("n_cand")).as("precision"))
-    }),
+    },
+      // d20: d2's chain gives truth AND the hashed shingle index; the
+      // minhash signatures derive from e's 60-bit hashes (h30 = s mod
+      // 2^30, exactly d3's), so the whole gate shares one CTE spine.
+      s"""WITH $d2Ctes,
+         |pairs AS ($d2Select),
+         |e3 AS (SELECT id AS doc_id, s % 1073741824 AS h30 FROM e),
+         |seeds AS (SELECT i,
+         |      (${h60("concat('mh-a:', CAST(i AS VARCHAR))")}
+         |        % 2147483646) + 1 AS a,
+         |      ${h60("concat('mh-b:', CAST(i AS VARCHAR))")}
+         |        % 2147483647 AS b
+         |      FROM (SELECT unnest(range(16)) AS i) r(i)),
+         |mh3 AS (SELECT doc_id, i,
+         |      min((a * h30 + b) % 2147483647) AS h
+         |      FROM e3 CROSS JOIN seeds GROUP BY doc_id, i),
+         |sig3 AS (SELECT doc_id, i // 4 AS band,
+         |      array_to_string(list(h ORDER BY i), ',') AS sg
+         |      FROM mh3 GROUP BY doc_id, i // 4),
+         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+         |      FROM sig3 a JOIN sig3 b
+         |        ON a.band = b.band AND a.sg = b.sg
+         |          AND a.doc_id < b.doc_id),
+         |tn AS (SELECT count(*) AS n_truth FROM pairs),
+         |cn AS (SELECT count(*) AS n_cand FROM cand),
+         |h AS (SELECT count(*) AS n_hit
+         |      FROM pairs JOIN cand USING (id_a, id_b))
+         |SELECT n_truth, n_cand, n_hit,
+         |  round(CASE WHEN n_truth > 0
+         |    THEN CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE)
+         |    ELSE 0.0 END, 6) AS recall,
+         |  round(CASE WHEN n_cand > 0
+         |    THEN CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE)
+         |    ELSE 0.0 END, 6) AS precision
+         |FROM tn, cn, h""".stripMargin,
+      reads = Seq(cliqueSelf, cloneMembers, keeperPairs, keeperSigs)),
 
     // MinHash ESTIMATOR error — d20 gates the banding's recall; this
     // gates the estimator itself: for every exact-verified near-dup
@@ -551,7 +651,7 @@ object QueriesDedup {
     // no float enters the verdict at any scale. This is the table
     // that prices a dedup deployment's aggressiveness BEFORE it runs:
     // pairs ≈ verification cost, drops ≈ data lost.
-    "d27_threshold_curve" -> ((s, d) => {
+    Query("d27_threshold_curve", (s, d) => {
       val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
       // ONE expansion for all five arms (the min-offset trick in θ
       // form): a pair passes arm k iff k ≤ ⌊10·inter/union⌋, so the
@@ -577,7 +677,27 @@ object QueriesDedup {
           coalesce(col("nd"), lit(0L)).as("n_dropped"),
           round(coalesce(col("nd"), lit(0L)).cast("double") /
             col("n_docs").cast("double"), 6).as("pct_dropped"))
-    }),
+    },
+      // d27: the same pair CTE scanned per threshold arm; LEFT JOIN from
+      // the arm spine so a zero-pair threshold still emits its row
+      // (count of all-NULL = 0, matching the Spark side's agg), the
+      // same exact integer cross-multiplication.
+      s"""WITH $d2Ctes,
+         |arms AS (SELECT unnest([5, 6, 7, 8, 9]) AS k),
+         |c AS (SELECT a.k,
+         |    count(p.id_a) AS n_pairs,
+         |    count(DISTINCT p.id_b) AS n_dropped
+         |  FROM arms a LEFT JOIN p
+         |    ON p.inter * 10 >= a.k * (p.n_a + p.n_b - p.inter)
+         |  GROUP BY a.k),
+         |nd AS (SELECT count(*) AS n_docs FROM documents)
+         |SELECT CAST(k AS DOUBLE) / 10.0 AS threshold,
+         |  CAST(n_pairs AS BIGINT) AS n_pairs,
+         |  CAST(n_dropped AS BIGINT) AS n_dropped,
+         |  round(CAST(n_dropped AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
+         |    AS pct_dropped
+         |FROM c, nd""".stripMargin,
+      reads = Seq(cliqueSelf, cloneMembers, keeperPairs)),
 
     // Bounded-emission SimHash pairs (VERDICT r13 #3: the 100 TB
     // valve on the pair GENERATORS): each fingerprint pairs only with
@@ -591,21 +711,81 @@ object QueriesDedup {
     // survives (consecutive successors chain every bucket), so
     // cluster membership is preserved; d5 stays the exactness oracle
     // at sf ≤ 0.01, and d30's curve prices the budget choice.
-    "d28_simhash_budget" -> ((s, d) => {
+    Query("d28_simhash_budget", (s, d) => {
       DedupOps.simhashPairsBudgeted(
         DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
         maxHamming = 3, perDocBudget = 2)
-    }),
+    },
+      // Mirrors d28: the same cf chain, per-bucket row_number in doc_id
+      // order (= Spark's id-sorted posting array), a pair survives iff
+      // the successor offset is within the budget, and trunc_x counts
+      // both dropped successor and predecessor slots per endpoint.
+      s"""WITH $simhashCfCtes,
+         |rn AS (SELECT doc_id, simhash, j, chunk,
+         |      row_number() OVER (PARTITION BY j, chunk
+         |        ORDER BY doc_id) AS rn,
+         |      count(*) OVER (PARTITION BY j, chunk) AS cnt
+         |      FROM cf),
+         |tr AS (SELECT doc_id,
+         |      CAST(sum(greatest(cnt - rn - 2, 0)
+         |        + greatest(rn - 3, 0)) AS BIGINT) AS trunc
+         |      FROM rn GROUP BY doc_id),
+         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b,
+         |      a.simhash AS sim_a, b2.simhash AS sim_b
+         |      FROM rn a JOIN rn b2 ON a.j = b2.j AND a.chunk = b2.chunk
+         |        AND b2.rn - a.rn BETWEEN 1 AND 2),
+         |p AS (SELECT id_a, id_b,
+         |      CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
+         |      FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3)
+         |SELECT p.id_a, p.id_b, p.hamming,
+         |  ta.trunc AS trunc_a, tb.trunc AS trunc_b
+         |FROM p JOIN tr ta ON ta.doc_id = p.id_a
+         |JOIN tr tb ON tb.doc_id = p.id_b""".stripMargin,
+      reads = Seq(docsWithTokens)),
 
     // Bounded-emission prefix-filter pairs: d17's lossless generator
     // with the same B=2 successor window per prefix bucket (d17 read
     // 199 s / 250 k pairs at sf1 — output-bound). Same LOUD-truncation
     // contract as d28; exact-Jaccard verification unchanged.
-    "d29_prefix_budget" -> ((s, d) => {
+    Query("d29_prefix_budget", (s, d) => {
       val (_, buckets) = prefixBucketFrames(s, d)
       DedupOps.prefixFilterPairsBudgetedFromVerified(
         budgetPairs(s, d), buckets, perDocBudget = 2)
-    }),
+    },
+      // Mirrors d29: per-bucket row_number in id order over SURVIVING
+      // buckets (pb joins ok, = Spark's filtered id-sorted arrays), the
+      // B=2 successor window before the length-ratio gate, and the same
+      // exact-intersection verify as d17.
+      s"""WITH $prefixPreCtes,
+         |pb AS MATERIALIZED (SELECT pre.id, pre.n, pre.s,
+         |      row_number() OVER (PARTITION BY pre.s
+         |        ORDER BY pre.id) AS rn,
+         |      count(*) OVER (PARTITION BY pre.s) AS cnt
+         |      FROM pre JOIN ok ON pre.s = ok.s),
+         |tr AS (SELECT id,
+         |      CAST(sum(greatest(cnt - rn - 2, 0)
+         |        + greatest(rn - 3, 0)) AS BIGINT) AS trunc
+         |      FROM pb GROUP BY id),
+         |pc AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+         |      a.n AS n_a, b.n AS n_b
+         |      FROM pb a JOIN pb b ON a.s = b.s
+         |        AND b.rn - a.rn BETWEEN 1 AND 2
+         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7),
+         |p AS (SELECT pc.id_a, pc.id_b, pc.n_a, pc.n_b,
+         |      count(*) AS inter
+         |      FROM pc
+         |      JOIN e ea ON ea.id = pc.id_a
+         |      JOIN e eb ON eb.id = pc.id_b AND eb.s = ea.s
+         |      GROUP BY 1, 2, 3, 4)
+         |SELECT p.id_a, p.id_b, p.inter,
+         |  round(p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE), 6)
+         |    AS jaccard,
+         |  ta.trunc AS trunc_a, tb.trunc AS trunc_b
+         |FROM p
+         |JOIN tr ta ON ta.id = p.id_a
+         |JOIN tr tb ON tb.id = p.id_b
+         |WHERE p.inter * 17 >= (p.n_a + p.n_b) * 7""".stripMargin,
+      reads = Seq(budgetPairs, prefixBucketFrames)),
 
     // The budget OPERATING CURVE (d27's discipline applied to the
     // emission budget): for B ∈ {1,2,4,8}, how many verified pairs
@@ -614,11 +794,43 @@ object QueriesDedup {
     // survives budget B iff its minimal bucket offset ≤ B, so every
     // smaller budget is a filter, not a re-expansion). This is the
     // table that prices a budget before deploying it at scale.
-    "d30_budget_curve" -> ((s, d) => {
+    Query("d30_budget_curve", (s, d) => {
       DedupOps.simhashBudgetCurve(
         DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
         maxHamming = 3, budgets = Seq(1, 2, 4, 8))
-    }),
+    },
+      // Mirrors d30: one offset-windowed expansion at max budget, each
+      // pair's minimal offset decides which budgets keep it; slot
+      // accounting (cnt − rn successors per element) prices the cut.
+      s"""WITH $simhashCfCtes,
+         |rn AS (SELECT doc_id, simhash, j, chunk,
+         |      row_number() OVER (PARTITION BY j, chunk
+         |        ORDER BY doc_id) AS rn,
+         |      count(*) OVER (PARTITION BY j, chunk) AS cnt
+         |      FROM cf),
+         |bud AS (SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS budget),
+         |wide AS (SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
+         |      min(b2.rn - a.rn) AS min_off
+         |      FROM rn a JOIN rn b2 ON a.j = b2.j AND a.chunk = b2.chunk
+         |        AND b2.rn - a.rn BETWEEN 1 AND 8
+         |      WHERE bit_count(xor(a.simhash, b2.simhash)) <= 3
+         |      GROUP BY 1, 2),
+         |kept AS (SELECT budget, count(*) AS pairs_kept
+         |      FROM bud JOIN wide ON min_off <= budget GROUP BY 1),
+         |slots AS (SELECT doc_id, cnt - rn AS n_succ FROM rn),
+         |cut AS (SELECT budget,
+         |      CAST(sum(greatest(n_succ - budget, 0)) AS BIGINT)
+         |        AS slots_dropped,
+         |      count(DISTINCT CASE WHEN n_succ > budget
+         |        THEN doc_id END) AS docs_truncated
+         |      FROM bud CROSS JOIN slots GROUP BY 1)
+         |SELECT bud.budget,
+         |  coalesce(kept.pairs_kept, 0) AS pairs_kept,
+         |  coalesce(cut.slots_dropped, 0) AS slots_dropped,
+         |  coalesce(cut.docs_truncated, 0) AS docs_truncated
+         |FROM bud LEFT JOIN kept USING (budget)
+         |LEFT JOIN cut USING (budget)""".stripMargin,
+      reads = Seq(docsWithTokens)),
 
     // EXACT-DEDUP-FIRST near-dup pairing — the production sequence
     // the sf5 probe proved necessary: at 49-clone duplicate density
@@ -634,20 +846,92 @@ object QueriesDedup {
     // is a filter + lineage join over the cache, and the pair list
     // equals d2's restricted to keepers BY CONSTRUCTION (clones add
     // no information to near-dup structure).
-    "d31_dedup_first_pairs" -> ((s, d) =>
+    Query("d31_dedup_first_pairs", (s, d) =>
       withCopiesLineage(keeperPairs(s, d),
         cloneMembers(s, d).groupBy("keeper")
-          .agg(count(lit(1)).as("copies")))),
+          .agg(count(lit(1)).as("copies"))),
+      // Mirrors d31: full-token-hash clone collapse (min-id keeper +
+      // clique size), then d2's intersection chain restricted to the
+      // keepers — the df cap on the WEIGHTED (raw-corpus) frequency
+      // Σ copies, so the pair list is exactly d2's restricted to
+      // keepers; identical jaccard gate.
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |g AS MATERIALIZED (SELECT min(doc_id) AS doc_id,
+         |      count(*) AS copies
+         |      FROM (SELECT doc_id, md5(array_to_string(toks, ' ')) AS k
+         |            FROM t)
+         |      GROUP BY k),
+         |s AS (SELECT t.doc_id, $sh3Sql AS sh
+         |      FROM t JOIN g ON t.doc_id = g.doc_id),
+         |e0 AS (SELECT doc_id AS id, CAST(len(sh) AS BIGINT) AS n,
+         |      unnest(sh) AS sh_s FROM s),
+         |e AS MATERIALIZED (SELECT id, n,
+         |      ${h60("concat('sh:', sh_s)")} AS s FROM e0),
+         |rare AS (SELECT e.s FROM e JOIN g ON g.doc_id = e.id
+         |      GROUP BY e.s HAVING sum(g.copies) <= 1000),
+         |ec AS MATERIALIZED (SELECT e.* FROM e JOIN rare USING (s)),
+         |p AS (SELECT a.id AS id_a, b.id AS id_b, a.n AS n_a,
+         |      b.n AS n_b, count(*) AS inter
+         |      FROM ec a JOIN ec b ON a.s = b.s AND a.id < b.id
+         |      GROUP BY 1, 2, 3, 4)
+         |SELECT p.id_a, p.id_b,
+         |  round(p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE), 6)
+         |    AS jaccard,
+         |  ga.copies AS copies_a, gb.copies AS copies_b
+         |FROM p JOIN g ga ON ga.doc_id = p.id_a
+         |JOIN g gb ON gb.doc_id = p.id_b
+         |WHERE p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE)
+         |  >= 0.8""".stripMargin,
+      reads = Seq(cloneMembers, keeperPairs)),
 
     // d30's twin for the prefix-filter generator: the same min-offset
     // curve over d29's buckets (B ∈ {1,2,4,8}) — pairs_kept at B=2
     // equals d29's pair count by construction (pinned in spec), so
     // the two budget arms are priced by the same instrument.
-    "d32_prefix_budget_curve" -> ((s, d) => {
+    Query("d32_prefix_budget_curve", (s, d) => {
       val (_, buckets) = prefixBucketFrames(s, d)
       DedupOps.prefixBudgetCurveFromVerified(budgetPairs(s, d), buckets,
         budgets = Seq(1, 2, 4, 8))
-    }),
+    },
+      // Mirrors d32: d29's pb window chain, offsets ≤ 8 with the ratio
+      // gate, min offset per pair, ONE intersection verify, then the
+      // d30-style budget spine (kept/slots/docs per B).
+      s"""WITH $prefixPreCtes,
+         |pb AS MATERIALIZED (SELECT pre.id, pre.n, pre.s,
+         |      row_number() OVER (PARTITION BY pre.s
+         |        ORDER BY pre.id) AS rn,
+         |      count(*) OVER (PARTITION BY pre.s) AS cnt
+         |      FROM pre JOIN ok ON pre.s = ok.s),
+         |bud AS (SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS budget),
+         |wide AS MATERIALIZED (SELECT a.id AS id_a, b.id AS id_b,
+         |      a.n AS n_a, b.n AS n_b, min(b.rn - a.rn) AS min_off
+         |      FROM pb a JOIN pb b ON a.s = b.s
+         |        AND b.rn - a.rn BETWEEN 1 AND 8
+         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7
+         |      GROUP BY 1, 2, 3, 4),
+         |v AS MATERIALIZED (SELECT w.id_a, w.id_b, w.min_off,
+         |      count(*) AS inter
+         |      FROM wide w
+         |      JOIN e ea ON ea.id = w.id_a
+         |      JOIN e eb ON eb.id = w.id_b AND eb.s = ea.s
+         |      GROUP BY 1, 2, 3
+         |      HAVING count(*) * 17 >= (max(w.n_a) + max(w.n_b)) * 7),
+         |kept AS (SELECT budget, count(*) AS pairs_kept
+         |      FROM bud JOIN v ON v.min_off <= budget GROUP BY 1),
+         |slots AS (SELECT id, cnt - rn AS n_succ FROM pb),
+         |cut AS (SELECT budget,
+         |      CAST(sum(greatest(n_succ - budget, 0)) AS BIGINT)
+         |        AS slots_dropped,
+         |      count(DISTINCT CASE WHEN n_succ > budget
+         |        THEN id END) AS docs_truncated
+         |      FROM bud CROSS JOIN slots GROUP BY 1)
+         |SELECT bud.budget,
+         |  coalesce(kept.pairs_kept, 0) AS pairs_kept,
+         |  coalesce(cut.slots_dropped, 0) AS slots_dropped,
+         |  coalesce(cut.docs_truncated, 0) AS docs_truncated
+         |FROM bud LEFT JOIN kept USING (budget)
+         |LEFT JOIN cut USING (budget)""".stripMargin,
+      reads = Seq(budgetPairs, prefixBucketFrames)),
 
     // The COMPOSED production sequence (VERDICT r14 #3): d31's exact-
     // clone collapse FIRST, then d29's budgeted prefix-filter pairing
@@ -660,7 +944,7 @@ object QueriesDedup {
     // collapse's copies lineage, so downstream keeps full accounting.
     // The df cap here is keeper-count (d31's convention — this is a
     // keeper-corpus operator, not a raw-frame reconstruction).
-    "d33_budget_on_keepers" -> ((s, d) => {
+    Query("d33_budget_on_keepers", (s, d) => {
       val copies = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("copies"))
       val (e, buckets) = keeperPrefixFrames(s, d)
@@ -672,9 +956,57 @@ object QueriesDedup {
           col("copies").as("copies_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"), col("inter"), col("jaccard"),
           col("trunc_a"), col("trunc_b"), col("copies_a"), col("copies_b"))
-    }),
+    },
+      // Mirrors d33: d31's clone-collapse CTE feeds d29's prefix-budget
+      // chain (the tSrc splice restricts the corpus to keepers), then
+      // the copies lineage joins back on — trunc counts both dropped
+      // successor and predecessor slots, like d28/d29.
+      {
+      val keeperSrc =
+        s"""t0 AS (SELECT doc_id, $toksSql AS toks FROM documents),
+           |g AS MATERIALIZED (SELECT min(doc_id) AS doc_id,
+           |      count(*) AS copies
+           |      FROM (SELECT doc_id, md5(array_to_string(toks, ' '))
+           |              AS k FROM t0)
+           |      GROUP BY k),
+           |t AS (SELECT t0.doc_id, t0.toks FROM t0
+           |      JOIN g ON t0.doc_id = g.doc_id)""".stripMargin
+      s"""WITH ${prefixPreCtesFrom(keeperSrc)},
+         |pb AS MATERIALIZED (SELECT pre.id, pre.n, pre.s,
+         |      row_number() OVER (PARTITION BY pre.s
+         |        ORDER BY pre.id) AS rn,
+         |      count(*) OVER (PARTITION BY pre.s) AS cnt
+         |      FROM pre JOIN ok ON pre.s = ok.s),
+         |tr AS (SELECT id,
+         |      CAST(sum(greatest(cnt - rn - 2, 0)
+         |        + greatest(rn - 3, 0)) AS BIGINT) AS trunc
+         |      FROM pb GROUP BY id),
+         |pc AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+         |      a.n AS n_a, b.n AS n_b
+         |      FROM pb a JOIN pb b ON a.s = b.s
+         |        AND b.rn - a.rn BETWEEN 1 AND 2
+         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7),
+         |p AS (SELECT pc.id_a, pc.id_b, pc.n_a, pc.n_b,
+         |      count(*) AS inter
+         |      FROM pc
+         |      JOIN e ea ON ea.id = pc.id_a
+         |      JOIN e eb ON eb.id = pc.id_b AND eb.s = ea.s
+         |      GROUP BY 1, 2, 3, 4)
+         |SELECT p.id_a, p.id_b, p.inter,
+         |  round(p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE), 6)
+         |    AS jaccard,
+         |  ta.trunc AS trunc_a, tb.trunc AS trunc_b,
+         |  ga.copies AS copies_a, gb.copies AS copies_b
+         |FROM p
+         |JOIN tr ta ON ta.id = p.id_a
+         |JOIN tr tb ON tb.id = p.id_b
+         |JOIN g ga ON ga.doc_id = p.id_a
+         |JOIN g gb ON gb.doc_id = p.id_b
+         |WHERE p.inter * 17 >= (p.n_a + p.n_b) * 7""".stripMargin
+    },
+      reads = Seq(cloneMembers, keeperPrefixFrames)),
 
-    "d21_minhash_error" -> ((s, d) => {
+    Query("d21_minhash_error", (s, d) => {
       // DEDUP-FIRST form (VERDICT r15 #6): the signature-agreement
       // count n_match is a function of the two docs' shingle SETS, and
       // clones share them — so score KEEPER pairs against keeper sigs
@@ -721,7 +1053,43 @@ object QueriesDedup {
           round(col("n_match").cast("double") / lit(16.0), 6)
             .as("est_j"),
           round(col("inter") / col("uni"), 6).as("jaccard"))
-    }),
+    },
+      // d21: d2's chain gives pairs + per-pair intersections; minhash
+      // values per (doc, i) from d20's derived-h30 chain, matches
+      // counted per pair. The match count joins mh3 THROUGH the
+      // selected pairs (sel) — an earlier all-pairs-per-i form was
+      // O(docs²·16) and exhausted 170+ GB at sf1 before the final join
+      // would have discarded almost all of it (the Spark side always
+      // scored only selected pairs).
+      s"""WITH $d2Ctes,
+         |e3 AS (SELECT id AS doc_id, s % 1073741824 AS h30 FROM e),
+         |seeds AS (SELECT i,
+         |      (${h60("concat('mh-a:', CAST(i AS VARCHAR))")}
+         |        % 2147483646) + 1 AS a,
+         |      ${h60("concat('mh-b:', CAST(i AS VARCHAR))")}
+         |        % 2147483647 AS b
+         |      FROM (SELECT unnest(range(16)) AS i) r(i)),
+         |mh3 AS MATERIALIZED (SELECT doc_id, i,
+         |      min((a * h30 + b) % 2147483647) AS h
+         |      FROM e3 CROSS JOIN seeds GROUP BY doc_id, i),
+         |sel AS MATERIALIZED (SELECT id_a, id_b, n_a, n_b, inter FROM p
+         |  WHERE inter / CAST(n_a + n_b - inter AS DOUBLE) >= 0.8),
+         |m AS (SELECT sel.id_a, sel.id_b,
+         |      CAST(sum(CASE WHEN ma.h = mb.h THEN 1 ELSE 0 END)
+         |        AS BIGINT) AS n_match
+         |      FROM sel JOIN mh3 ma ON ma.doc_id = sel.id_a
+         |                JOIN mh3 mb ON mb.doc_id = sel.id_b
+         |                           AND mb.i = ma.i
+         |      GROUP BY 1, 2)
+         |SELECT sel.id_a, sel.id_b, sel.inter,
+         |  sel.n_a + sel.n_b - sel.inter AS uni, m.n_match,
+         |  round(CAST(m.n_match AS DOUBLE) / 16.0, 6) AS est_j,
+         |  round(sel.inter
+         |    / CAST(sel.n_a + sel.n_b - sel.inter AS DOUBLE), 6)
+         |    AS jaccard
+         |FROM sel JOIN m ON sel.id_a = m.id_a AND sel.id_b = m.id_b"""
+        .stripMargin,
+      reads = Seq(cliqueSelf, cloneMembers, keeperPairs, keeperSigs)),
 
     // Cross-document duplicate-SPAN extraction — the exact-substring
     // dedup primitive (Lee et al. 2021, "Deduplicating Training Data
@@ -741,7 +1109,7 @@ object QueriesDedup {
     // reuse) surface as exact token ranges to cut. The df-cap can
     // split a span whose interior gram is corpus-frequent; the oracle
     // applies the identical cap, so parity is by construction.
-    "d25_dup_spans" -> ((s, d) => {
+    Query("d25_dup_spans", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val K = 5 // gram width (tokens); L = 8 = min reported span
       // Checkpointed ONCE PER INVOCATION (OPT r19, guide §1.2 step 1):
@@ -787,30 +1155,91 @@ object QueriesDedup {
         .filter(col("span_len") >= 8)
         .select(col("id_a"), col("id_b"), col("a_start"), col("b_start"),
           col("span_len"))
-    }),
+    },
+      // d25: identical positional 5-gram hash index (same h60 seed
+      // "sp"), identical df ≤ 1000 cap, identical gaps-and-islands
+      // merge; DuckDB's range() positions are BIGINT, matching the
+      // Spark side's explicit cast.
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |k AS MATERIALIZED (SELECT doc_id, i AS pos,
+         |    ${h60("concat('sp:', array_to_string(" +
+            "list_slice(toks, i + 1, i + 5), ' '))")} AS h
+         |  FROM (SELECT doc_id, toks, unnest(range(len(toks) - 4)) AS i
+         |        FROM t WHERE len(toks) >= 5)),
+         |rare AS (SELECT h FROM k GROUP BY h HAVING count(*) <= 1000),
+         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         |    a.pos AS pos_a, b.pos AS pos_b
+         |  FROM k a JOIN k b ON a.h = b.h
+         |  JOIN rare ON rare.h = a.h
+         |  WHERE a.doc_id < b.doc_id),
+         |r AS (SELECT id_a, id_b, pos_a, pos_b,
+         |    pos_a - pos_b AS diag,
+         |    pos_a - row_number() OVER (
+         |      PARTITION BY id_a, id_b, pos_a - pos_b
+         |      ORDER BY pos_a) AS grp
+         |  FROM p)
+         |SELECT id_a, id_b, min(pos_a) AS a_start,
+         |  min(pos_b) AS b_start,
+         |  max(pos_a) - min(pos_a) + 5 AS span_len
+         |FROM r GROUP BY id_a, id_b, diag, grp
+         |HAVING max(pos_a) - min(pos_a) + 5 >= 8""".stripMargin,
+      reads = Seq(docsWithTokens)),
 
     // 60-bit SimHash fingerprint per document.
-    "d4_simhash" -> ((s, d) => {
+    Query("d4_simhash", (s, d) => {
       DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks"))
         .withColumnRenamed("id", "doc_id")
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tk FROM t),
+         |h AS (SELECT doc_id, ${h60("concat('t:', tk)")} AS h FROM tok),
+         |b AS (SELECT doc_id, j,
+         |      CASE WHEN sum(((h >> j) & 1) * 2 - 1) > 0 THEN 1 ELSE 0 END
+         |        AS bit
+         |      FROM h CROSS JOIN (SELECT unnest(range(60)) AS j) r(j)
+         |      GROUP BY doc_id, j)
+         |SELECT doc_id,
+         |  CAST(sum(bit * (CAST(1 AS BIGINT) << j)) AS BIGINT) AS simhash
+         |FROM b GROUP BY doc_id""".stripMargin,
+      reads = Seq(docsWithTokens)),
 
     // SimHash near-dup pairs: 4x15-bit chunk banding (complete for
     // hamming <= 3 by pigeonhole) + exact hamming verify.
-    "d5_simhash_pairs" -> ((s, d) => {
+    Query("d5_simhash_pairs", (s, d) => {
       DedupOps.simhashPairs(
         DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
         maxHamming = 3)
-    }),
+    },
+      s"""WITH $simhashCfCtes,
+         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+         |      a.simhash AS sim_a, b.simhash AS sim_b
+         |      FROM cf a JOIN cf b ON a.j = b.j AND a.chunk = b.chunk
+         |        AND a.doc_id < b.doc_id)
+         |SELECT id_a, id_b,
+         |  CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
+         |FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3""".stripMargin,
+      reads = Seq(docsWithTokens)),
 
     // Dedup clusters: the verified Jaccard pairs (same params as d2)
     // grouped into connected components — every doc labeled with its
     // component's min doc_id, i.e. the canonical copy to keep. The
     // oracle computes the same closure with a recursive CTE.
-    "d7_dedup_clusters" -> ((s, d) => {
+    Query("d7_dedup_clusters", (s, d) => {
       DedupOps.connectedComponents(verifiedPairs(s, d), "id_a", "id_b")
         .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
-    }),
+    },
+      s"""WITH RECURSIVE $d2Ctes,
+         |pairs AS ($d2Select),
+         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+         |          UNION SELECT id_b, id_a FROM pairs),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM edges
+         |  UNION
+         |  SELECT r.src, e2.dst FROM reach r
+         |    JOIN edges e2 ON r.dst = e2.src)
+         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
+         |FROM reach GROUP BY src""".stripMargin,
+      reads = Seq(verifiedPairs)),
 
     // d7's clustering recomputed by ALTERNATING STAR CONTRACTION
     // (VERDICT r15 #4): identical output contract — every doc labeled
@@ -822,10 +1251,25 @@ object QueriesDedup {
     // of 2^k docs costs min-label 2^k rounds and star contraction ~k
     // (StarContractionSpec pins the round counts on exactly that
     // fixture). Same recursive-CTE oracle as d7.
-    "d34_star_contraction" -> ((s, d) => {
+    Query("d34_star_contraction", (s, d) => {
       DedupOps.starContraction(verifiedPairs(s, d), "id_a", "id_b")._1
         .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
-    }),
+    },
+      // d34: same closure oracle as d7 — the Spark side differs only in
+      // HOW it converges (star contraction vs min-label), the relational
+      // answer is identical by definition.
+      s"""WITH RECURSIVE $d2Ctes,
+         |pairs AS ($d2Select),
+         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+         |          UNION SELECT id_b, id_a FROM pairs),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM edges
+         |  UNION
+         |  SELECT r.src, e2.dst FROM reach r
+         |    JOIN edges e2 ON r.dst = e2.src)
+         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
+         |FROM reach GROUP BY src""".stripMargin,
+      reads = Seq(verifiedPairs)),
 
     // Test-set decontamination: training docs (x6's hash split) that
     // share any 3-shingle with the held-out test split, with the
@@ -834,7 +1278,7 @@ object QueriesDedup {
     // test split here is 10% of the corpus so the join stays a shuffle
     // join — a benchmark-suite-sized held-out set would broadcast (see
     // DedupOps.decontaminate).
-    "d8_decontaminate" -> ((s, d) => {
+    Query("d8_decontaminate", (s, d) => {
       val withSplit = docsWithShingles(s, d).withColumn("bucket",
         TextOps.md5Prefix60(
           concat(lit("split:"), col("doc_id").cast("string"))) % 100)
@@ -843,17 +1287,49 @@ object QueriesDedup {
         withSplit.filter(col("bucket") >= 90),
         "doc_id", "sh")
         .select(col("id").as("doc_id"), col("n_hits"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |s AS (SELECT doc_id, $sh3Sql AS sh FROM t),
+         |b AS (SELECT doc_id, sh,
+         |      ${h60("concat('split:', CAST(doc_id AS VARCHAR))")} % 100
+         |        AS bucket FROM s),
+         |te AS (SELECT DISTINCT ${h60("concat('sh:', sh_s)")} AS sh_h
+         |      FROM (SELECT unnest(sh) AS sh_s FROM b WHERE bucket >= 90)),
+         |tr AS (SELECT doc_id, ${h60("concat('sh:', sh_s)")} AS sh_h
+         |      FROM (SELECT doc_id, unnest(sh) AS sh_s FROM b
+         |            WHERE bucket < 80))
+         |SELECT doc_id, count(*) AS n_hits
+         |FROM tr JOIN te USING (sh_h) GROUP BY 1""".stripMargin,
+      reads = Seq(docsWithShingles)),
 
     // Integer PageRank over the verified near-dup graph (same pairs as
     // d2/d7): centrality of each doc within its duplicate cluster —
     // the doc most-connected to other near-dups is the natural
     // canonical copy when clusters are dense. Two rounds, micro-unit
     // fixed point, floor-div damping (see DedupOps.pageRank).
-    "d9_pagerank" -> ((s, d) => {
+    Query("d9_pagerank", (s, d) => {
       DedupOps.pageRank(verifiedPairs(s, d), "id_a", "id_b", iters = 2)
         .select(col("id").as("doc_id"), col("pagerank_micro"))
-    }),
+    },
+      s"""WITH $d2Ctes,
+         |pairs AS MATERIALIZED ($d2Select),
+         |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
+         |          UNION ALL SELECT id_b, id_a FROM pairs),
+         |dg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
+         |r0 AS MATERIALIZED (SELECT src AS id, deg, CAST(1000000 AS BIGINT) AS r
+         |       FROM dg),
+         |c1 AS (SELECT e.dst, sum(r.r // r.deg) AS in_sum
+         |       FROM edges e JOIN r0 r ON e.src = r.id GROUP BY 1),
+         |r1 AS MATERIALIZED (SELECT r0.id, r0.deg, CAST(150000 +
+         |         (coalesce(c1.in_sum, 0) * 17) // 20 AS BIGINT) AS r
+         |       FROM r0 LEFT JOIN c1 ON r0.id = c1.dst),
+         |c2 AS (SELECT e.dst, sum(r.r // r.deg) AS in_sum
+         |       FROM edges e JOIN r1 r ON e.src = r.id GROUP BY 1),
+         |r2 AS (SELECT r1.id, CAST(150000 +
+         |         (coalesce(c2.in_sum, 0) * 17) // 20 AS BIGINT) AS r
+         |       FROM r1 LEFT JOIN c2 ON r1.id = c2.dst)
+         |SELECT id AS doc_id, r AS pagerank_micro FROM r2""".stripMargin,
+      reads = Seq(verifiedPairs)),
 
     // Embedding-cosine near-dup pairs — the TEST-SCALE-ONLY exactness
     // witness for the LSH path. This is a deliberate all-pairs
@@ -866,7 +1342,7 @@ object QueriesDedup {
     // canonical cluster-killer, and a loud error is the only safe
     // behavior. (Excluded from the bench headline for the same reason;
     // see Bench.headline.)
-    "d6_embedding_neardup" -> ((s, d) => {
+    Query("d6_embedding_neardup", (s, d) => {
       val p = VectorOps.prepared(Tables.embeddings(s, d), "vec_id",
         "embedding")
       // the bound check is IN the plan (assert_true over a broadcast
@@ -892,7 +1368,17 @@ object QueriesDedup {
           VectorOps.dot(col("v_a"), col("v_b")), col("n2_a"), col("n2_b")))
         .filter(col("cos") >= 0.45)
         .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-    }),
+    },
+      s"""WITH d AS (SELECT vec_id,
+         |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |      FROM embeddings),
+         |n AS (SELECT vec_id, v,
+         |      list_reduce(list_prepend(0.0, list_transform(range(len(v)),
+         |        i -> v[i+1] * v[i+1])), (x, y) -> x + y) AS n2 FROM d)
+         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |FROM n a JOIN n b ON a.vec_id < b.vec_id
+         |WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.45""".stripMargin),
 
     // Asymmetric containment pairs: |A∩B|/|A| (and /|B|) ≥ 0.9 in
     // either direction over the same df-capped shingle index as d2 —
@@ -902,13 +1388,22 @@ object QueriesDedup {
     // `greatest` predicate is symmetric, so the keeper-level filter +
     // expansion reproduces the raw chain exactly); only the final
     // predicate differs from d2.
-    "d14_containment" -> ((s, d) => {
+    Query("d14_containment", (s, d) => {
       rawPairsWhere(s, d, greatest(col("inter") / col("n_a"),
           col("inter") / col("n_b")) >= 0.9)
         .select(col("id_a"), col("id_b"),
           round(col("inter") / col("n_a"), 6).as("cont_ab"),
           round(col("inter") / col("n_b"), 6).as("cont_ba"))
-    }),
+    },
+      // Mirrors d14: d2's candidate CTEs verbatim, containment predicate.
+      s"""WITH $d2Ctes
+         |SELECT id_a, id_b,
+         |  round(inter / CAST(n_a AS DOUBLE), 6) AS cont_ab,
+         |  round(inter / CAST(n_b AS DOUBLE), 6) AS cont_ba
+         |FROM p
+         |WHERE greatest(inter / CAST(n_a AS DOUBLE),
+         |  inter / CAST(n_b AS DOUBLE)) >= 0.9""".stripMargin,
+      reads = Seq(cliqueSelf, cloneMembers, keeperPairs)),
 
     // Canonical-representative selection — the "which duplicate do we
     // KEEP" decision that completes the dedup pipeline: d2 finds
@@ -921,7 +1416,7 @@ object QueriesDedup {
     // one anti-join for the singletons; nothing rescans the corpus
     // pairwise. At 100 TB this is the curation step that turns a
     // near-dup graph into an actual training set.
-    "d15_canonical" -> ((s, d) => {
+    Query("d15_canonical", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val clusters = DedupOps
         .connectedComponents(verifiedPairs(s, d), "id_a", "id_b")
@@ -942,7 +1437,43 @@ object QueriesDedup {
         .select(col("doc_id"), col("canonical_id"),
           (col("doc_id") === col("canonical_id")).cast("long")
             .as("is_kept"))
-    }),
+    },
+      // d7's recursive closure + x3's quality formula (copied verbatim —
+      // the rounded score must match x3's to the last bit) + a
+      // per-cluster argmax and a NOT IN for the self-canonical singletons
+      s"""WITH RECURSIVE $d2Ctes,
+         |pairs AS MATERIALIZED ($d2Select),
+         |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
+         |          UNION SELECT id_b, id_a FROM pairs),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM edges
+         |  UNION
+         |  SELECT r.src, e2.dst FROM reach r
+         |    JOIN edges e2 ON r.dst = e2.src),
+         |comp AS MATERIALIZED (SELECT src AS doc_id, least(src, min(dst)) AS cluster
+         |         FROM reach GROUP BY src),
+         |tq AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
+         |q AS MATERIALIZED (SELECT doc_id,
+         |  round(least(1.0, len(toks) / 100.0) *
+         |    (1.0 - CASE WHEN length(text) = 0 THEN 0.0
+         |      ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
+         |        / CAST(length(text) AS DOUBLE) END), 6) AS q
+         |  FROM tq),
+         |m AS MATERIALIZED (SELECT comp.doc_id, comp.cluster, q.q
+         |      FROM comp JOIN q USING (doc_id)),
+         |canon AS (SELECT cluster, doc_id AS canonical_id FROM (
+         |  SELECT cluster, doc_id, row_number() OVER (PARTITION BY
+         |    cluster ORDER BY q DESC, doc_id) AS rn FROM m)
+         |  WHERE rn = 1),
+         |u AS (SELECT m.doc_id, canon.canonical_id
+         |      FROM m JOIN canon USING (cluster)
+         |      UNION ALL
+         |      SELECT q.doc_id, q.doc_id FROM q
+         |      WHERE q.doc_id NOT IN (SELECT doc_id FROM comp))
+         |SELECT doc_id, canonical_id,
+         |  CAST(doc_id = canonical_id AS BIGINT) AS is_kept
+         |FROM u""".stripMargin,
+      reads = Seq(verifiedPairs)),
 
     // Per-document novelty: the fraction of a doc's distinct 3-shingles
     // that occur in NO other document — the inverse of d2's overlap
@@ -953,7 +1484,7 @@ object QueriesDedup {
     // never a doc×doc comparison), both riding the shared shingle
     // cache. Docs too short to shingle (< 3 tokens) report 0 shingles
     // and a NULL ratio on both engines.
-    "d12_novelty" -> ((s, d) => {
+    Query("d12_novelty", (s, d) => {
       val dsh = docsWithShingles(s, d)
       val ex = dsh.select(col("doc_id"), explode(col("sh")).as("h"))
       val rare = ex.groupBy("h").agg(count(lit(1)).as("df"))
@@ -968,8 +1499,24 @@ object QueriesDedup {
           when(col("n_shingles") > 0,
             round(coalesce(col("n_unique"), lit(0L)) /
               col("n_shingles").cast("double"), 6)).as("novelty"))
-    })
-  )
+    },
+      // Mirrors d12: same shingle hashes as d2/d8, df built over per-doc
+      // DISTINCT shingles, the one ratio rounded identically.
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |s AS (SELECT doc_id, $sh3Sql AS sh FROM t),
+         |e AS (SELECT doc_id, ${h60("concat('sh:', sh_s)")} AS h
+         |      FROM (SELECT doc_id, unnest(sh) AS sh_s FROM s)),
+         |rare AS (SELECT h FROM e GROUP BY h HAVING count(*) = 1),
+         |u AS (SELECT doc_id, count(*) AS n_unique
+         |      FROM e JOIN rare USING (h) GROUP BY 1)
+         |SELECT s.doc_id, CAST(len(sh) AS BIGINT) AS n_shingles,
+         |  coalesce(u.n_unique, 0) AS n_unique,
+         |  CASE WHEN len(sh) > 0 THEN
+         |    round(coalesce(u.n_unique, 0) / CAST(len(sh) AS DOUBLE), 6)
+         |  END AS novelty
+         |FROM s LEFT JOIN u ON s.doc_id = u.doc_id""".stripMargin
+  ,
+      reads = Seq(docsWithShingles)))
 
   private val toksSql =
     """list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"""
@@ -1095,566 +1642,4 @@ object QueriesDedup {
        |ok AS (SELECT s FROM pre GROUP BY s HAVING count(*) <= 1000)"""
       .stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "d1_exact_dedup" ->
-      s"""SELECT md5(array_to_string(list_slice(toks, 1, 5), ' '))
-         |    AS text_hash,
-         |  min(doc_id) AS keeper, count(*) AS n_copies
-         |FROM (SELECT doc_id, $toksSql AS toks FROM documents)
-         |GROUP BY 1""".stripMargin,
-    "d2_jaccard_pairs" -> s"WITH $d2Ctes\n$d2Select",
-    // d27: the same pair CTE scanned per threshold arm; LEFT JOIN from
-    // the arm spine so a zero-pair threshold still emits its row
-    // (count of all-NULL = 0, matching the Spark side's agg), the
-    // same exact integer cross-multiplication.
-    "d27_threshold_curve" ->
-      s"""WITH $d2Ctes,
-         |arms AS (SELECT unnest([5, 6, 7, 8, 9]) AS k),
-         |c AS (SELECT a.k,
-         |    count(p.id_a) AS n_pairs,
-         |    count(DISTINCT p.id_b) AS n_dropped
-         |  FROM arms a LEFT JOIN p
-         |    ON p.inter * 10 >= a.k * (p.n_a + p.n_b - p.inter)
-         |  GROUP BY a.k),
-         |nd AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT CAST(k AS DOUBLE) / 10.0 AS threshold,
-         |  CAST(n_pairs AS BIGINT) AS n_pairs,
-         |  CAST(n_dropped AS BIGINT) AS n_dropped,
-         |  round(CAST(n_dropped AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         |    AS pct_dropped
-         |FROM c, nd""".stripMargin,
-    // d18: rank self-join expresses the same w-window neighborhood the
-    // Spark side expands in-row with lead(); the verify recomputes
-    // d2's Jaccard from in-row hashed-shingle intersections.
-    "d18_sorted_neighborhood" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |s AS (SELECT doc_id, $sh3Sql AS sh FROM t),
-         |hs AS (SELECT doc_id,
-         |      list_transform(sh, x -> ${h60("concat('sh:', x)")})
-         |        AS hsh FROM s),
-         |k AS (SELECT doc_id,
-         |      array_to_string(list_slice(toks, 1, 3), ' ') AS bkey
-         |      FROM t),
-         |r AS (SELECT doc_id,
-         |      row_number() OVER (ORDER BY bkey, doc_id) AS rk FROM k),
-         |c AS (SELECT least(a.doc_id, b.doc_id) AS id_a,
-         |      greatest(a.doc_id, b.doc_id) AS id_b
-         |      FROM r a JOIN r b ON b.rk BETWEEN a.rk + 1 AND a.rk + 4),
-         |v AS (SELECT id_a, id_b,
-         |      CAST(len(list_intersect(ha.hsh, hb.hsh)) AS BIGINT)
-         |        AS inter,
-         |      CAST(len(ha.hsh) AS BIGINT) AS n_a,
-         |      CAST(len(hb.hsh) AS BIGINT) AS n_b
-         |      FROM c JOIN hs ha ON c.id_a = ha.doc_id
-         |        JOIN hs hb ON c.id_b = hb.doc_id)
-         |SELECT id_a, id_b,
-         |  round(inter / CAST(n_a + n_b - inter AS DOUBLE), 6) AS jaccard
-         |FROM v
-         |WHERE inter / CAST(n_a + n_b - inter AS DOUBLE) >= 0.8"""
-        .stripMargin,
-    // d17: d2's tokenize/shingle/index CTEs (t, s, e0, e), then the
-    // prefix chain — rarity order via list(s ORDER BY df, s), integer
-    // ceil prefix length, bucket cap, length filter, exact verify.
-    "d17_prefix_filter" ->
-      s"""WITH $prefixPreCtes,
-         |pc AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-         |      a.n AS n_a, b.n AS n_b
-         |      FROM pre a JOIN pre b ON a.s = b.s AND a.id < b.id
-         |      JOIN ok ON a.s = ok.s
-         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7),
-         |p AS (SELECT pc.id_a, pc.id_b, pc.n_a, pc.n_b,
-         |      count(*) AS inter
-         |      FROM pc
-         |      JOIN e ea ON ea.id = pc.id_a
-         |      JOIN e eb ON eb.id = pc.id_b AND eb.s = ea.s
-         |      GROUP BY 1, 2, 3, 4)
-         |SELECT id_a, id_b, inter,
-         |  round(inter / CAST(n_a + n_b - inter AS DOUBLE), 6)
-         |    AS jaccard
-         |FROM p WHERE inter * 17 >= (n_a + n_b) * 7""".stripMargin,
-    // Mirrors d29: per-bucket row_number in id order over SURVIVING
-    // buckets (pb joins ok, = Spark's filtered id-sorted arrays), the
-    // B=2 successor window before the length-ratio gate, and the same
-    // exact-intersection verify as d17.
-    "d29_prefix_budget" ->
-      s"""WITH $prefixPreCtes,
-         |pb AS MATERIALIZED (SELECT pre.id, pre.n, pre.s,
-         |      row_number() OVER (PARTITION BY pre.s
-         |        ORDER BY pre.id) AS rn,
-         |      count(*) OVER (PARTITION BY pre.s) AS cnt
-         |      FROM pre JOIN ok ON pre.s = ok.s),
-         |tr AS (SELECT id,
-         |      CAST(sum(greatest(cnt - rn - 2, 0)
-         |        + greatest(rn - 3, 0)) AS BIGINT) AS trunc
-         |      FROM pb GROUP BY id),
-         |pc AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-         |      a.n AS n_a, b.n AS n_b
-         |      FROM pb a JOIN pb b ON a.s = b.s
-         |        AND b.rn - a.rn BETWEEN 1 AND 2
-         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7),
-         |p AS (SELECT pc.id_a, pc.id_b, pc.n_a, pc.n_b,
-         |      count(*) AS inter
-         |      FROM pc
-         |      JOIN e ea ON ea.id = pc.id_a
-         |      JOIN e eb ON eb.id = pc.id_b AND eb.s = ea.s
-         |      GROUP BY 1, 2, 3, 4)
-         |SELECT p.id_a, p.id_b, p.inter,
-         |  round(p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE), 6)
-         |    AS jaccard,
-         |  ta.trunc AS trunc_a, tb.trunc AS trunc_b
-         |FROM p
-         |JOIN tr ta ON ta.id = p.id_a
-         |JOIN tr tb ON tb.id = p.id_b
-         |WHERE p.inter * 17 >= (p.n_a + p.n_b) * 7""".stripMargin,
-    // Mirrors d33: d31's clone-collapse CTE feeds d29's prefix-budget
-    // chain (the tSrc splice restricts the corpus to keepers), then
-    // the copies lineage joins back on — trunc counts both dropped
-    // successor and predecessor slots, like d28/d29.
-    "d33_budget_on_keepers" -> {
-      val keeperSrc =
-        s"""t0 AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |g AS MATERIALIZED (SELECT min(doc_id) AS doc_id,
-           |      count(*) AS copies
-           |      FROM (SELECT doc_id, md5(array_to_string(toks, ' '))
-           |              AS k FROM t0)
-           |      GROUP BY k),
-           |t AS (SELECT t0.doc_id, t0.toks FROM t0
-           |      JOIN g ON t0.doc_id = g.doc_id)""".stripMargin
-      s"""WITH ${prefixPreCtesFrom(keeperSrc)},
-         |pb AS MATERIALIZED (SELECT pre.id, pre.n, pre.s,
-         |      row_number() OVER (PARTITION BY pre.s
-         |        ORDER BY pre.id) AS rn,
-         |      count(*) OVER (PARTITION BY pre.s) AS cnt
-         |      FROM pre JOIN ok ON pre.s = ok.s),
-         |tr AS (SELECT id,
-         |      CAST(sum(greatest(cnt - rn - 2, 0)
-         |        + greatest(rn - 3, 0)) AS BIGINT) AS trunc
-         |      FROM pb GROUP BY id),
-         |pc AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-         |      a.n AS n_a, b.n AS n_b
-         |      FROM pb a JOIN pb b ON a.s = b.s
-         |        AND b.rn - a.rn BETWEEN 1 AND 2
-         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7),
-         |p AS (SELECT pc.id_a, pc.id_b, pc.n_a, pc.n_b,
-         |      count(*) AS inter
-         |      FROM pc
-         |      JOIN e ea ON ea.id = pc.id_a
-         |      JOIN e eb ON eb.id = pc.id_b AND eb.s = ea.s
-         |      GROUP BY 1, 2, 3, 4)
-         |SELECT p.id_a, p.id_b, p.inter,
-         |  round(p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE), 6)
-         |    AS jaccard,
-         |  ta.trunc AS trunc_a, tb.trunc AS trunc_b,
-         |  ga.copies AS copies_a, gb.copies AS copies_b
-         |FROM p
-         |JOIN tr ta ON ta.id = p.id_a
-         |JOIN tr tb ON tb.id = p.id_b
-         |JOIN g ga ON ga.doc_id = p.id_a
-         |JOIN g gb ON gb.doc_id = p.id_b
-         |WHERE p.inter * 17 >= (p.n_a + p.n_b) * 7""".stripMargin
-    },
-    // Mirrors d32: d29's pb window chain, offsets ≤ 8 with the ratio
-    // gate, min offset per pair, ONE intersection verify, then the
-    // d30-style budget spine (kept/slots/docs per B).
-    "d32_prefix_budget_curve" ->
-      s"""WITH $prefixPreCtes,
-         |pb AS MATERIALIZED (SELECT pre.id, pre.n, pre.s,
-         |      row_number() OVER (PARTITION BY pre.s
-         |        ORDER BY pre.id) AS rn,
-         |      count(*) OVER (PARTITION BY pre.s) AS cnt
-         |      FROM pre JOIN ok ON pre.s = ok.s),
-         |bud AS (SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS budget),
-         |wide AS MATERIALIZED (SELECT a.id AS id_a, b.id AS id_b,
-         |      a.n AS n_a, b.n AS n_b, min(b.rn - a.rn) AS min_off
-         |      FROM pb a JOIN pb b ON a.s = b.s
-         |        AND b.rn - a.rn BETWEEN 1 AND 8
-         |      WHERE a.n * 10 >= b.n * 7 AND b.n * 10 >= a.n * 7
-         |      GROUP BY 1, 2, 3, 4),
-         |v AS MATERIALIZED (SELECT w.id_a, w.id_b, w.min_off,
-         |      count(*) AS inter
-         |      FROM wide w
-         |      JOIN e ea ON ea.id = w.id_a
-         |      JOIN e eb ON eb.id = w.id_b AND eb.s = ea.s
-         |      GROUP BY 1, 2, 3
-         |      HAVING count(*) * 17 >= (max(w.n_a) + max(w.n_b)) * 7),
-         |kept AS (SELECT budget, count(*) AS pairs_kept
-         |      FROM bud JOIN v ON v.min_off <= budget GROUP BY 1),
-         |slots AS (SELECT id, cnt - rn AS n_succ FROM pb),
-         |cut AS (SELECT budget,
-         |      CAST(sum(greatest(n_succ - budget, 0)) AS BIGINT)
-         |        AS slots_dropped,
-         |      count(DISTINCT CASE WHEN n_succ > budget
-         |        THEN id END) AS docs_truncated
-         |      FROM bud CROSS JOIN slots GROUP BY 1)
-         |SELECT bud.budget,
-         |  coalesce(kept.pairs_kept, 0) AS pairs_kept,
-         |  coalesce(cut.slots_dropped, 0) AS slots_dropped,
-         |  coalesce(cut.docs_truncated, 0) AS docs_truncated
-         |FROM bud LEFT JOIN kept USING (budget)
-         |LEFT JOIN cut USING (budget)""".stripMargin,
-    // Mirrors d31: full-token-hash clone collapse (min-id keeper +
-    // clique size), then d2's intersection chain restricted to the
-    // keepers — the df cap on the WEIGHTED (raw-corpus) frequency
-    // Σ copies, so the pair list is exactly d2's restricted to
-    // keepers; identical jaccard gate.
-    "d31_dedup_first_pairs" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |g AS MATERIALIZED (SELECT min(doc_id) AS doc_id,
-         |      count(*) AS copies
-         |      FROM (SELECT doc_id, md5(array_to_string(toks, ' ')) AS k
-         |            FROM t)
-         |      GROUP BY k),
-         |s AS (SELECT t.doc_id, $sh3Sql AS sh
-         |      FROM t JOIN g ON t.doc_id = g.doc_id),
-         |e0 AS (SELECT doc_id AS id, CAST(len(sh) AS BIGINT) AS n,
-         |      unnest(sh) AS sh_s FROM s),
-         |e AS MATERIALIZED (SELECT id, n,
-         |      ${h60("concat('sh:', sh_s)")} AS s FROM e0),
-         |rare AS (SELECT e.s FROM e JOIN g ON g.doc_id = e.id
-         |      GROUP BY e.s HAVING sum(g.copies) <= 1000),
-         |ec AS MATERIALIZED (SELECT e.* FROM e JOIN rare USING (s)),
-         |p AS (SELECT a.id AS id_a, b.id AS id_b, a.n AS n_a,
-         |      b.n AS n_b, count(*) AS inter
-         |      FROM ec a JOIN ec b ON a.s = b.s AND a.id < b.id
-         |      GROUP BY 1, 2, 3, 4)
-         |SELECT p.id_a, p.id_b,
-         |  round(p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE), 6)
-         |    AS jaccard,
-         |  ga.copies AS copies_a, gb.copies AS copies_b
-         |FROM p JOIN g ga ON ga.doc_id = p.id_a
-         |JOIN g gb ON gb.doc_id = p.id_b
-         |WHERE p.inter / CAST(p.n_a + p.n_b - p.inter AS DOUBLE)
-         |  >= 0.8""".stripMargin,
-    "d8_decontaminate" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |s AS (SELECT doc_id, $sh3Sql AS sh FROM t),
-         |b AS (SELECT doc_id, sh,
-         |      ${h60("concat('split:', CAST(doc_id AS VARCHAR))")} % 100
-         |        AS bucket FROM s),
-         |te AS (SELECT DISTINCT ${h60("concat('sh:', sh_s)")} AS sh_h
-         |      FROM (SELECT unnest(sh) AS sh_s FROM b WHERE bucket >= 90)),
-         |tr AS (SELECT doc_id, ${h60("concat('sh:', sh_s)")} AS sh_h
-         |      FROM (SELECT doc_id, unnest(sh) AS sh_s FROM b
-         |            WHERE bucket < 80))
-         |SELECT doc_id, count(*) AS n_hits
-         |FROM tr JOIN te USING (sh_h) GROUP BY 1""".stripMargin,
-    "d7_dedup_clusters" ->
-      s"""WITH RECURSIVE $d2Ctes,
-         |pairs AS ($d2Select),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e2.dst FROM reach r
-         |    JOIN edges e2 ON r.dst = e2.src)
-         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-         |FROM reach GROUP BY src""".stripMargin,
-    // d34: same closure oracle as d7 — the Spark side differs only in
-    // HOW it converges (star contraction vs min-label), the relational
-    // answer is identical by definition.
-    "d34_star_contraction" ->
-      s"""WITH RECURSIVE $d2Ctes,
-         |pairs AS ($d2Select),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e2.dst FROM reach r
-         |    JOIN edges e2 ON r.dst = e2.src)
-         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-         |FROM reach GROUP BY src""".stripMargin,
-    // d7's recursive closure + x3's quality formula (copied verbatim —
-    // the rounded score must match x3's to the last bit) + a
-    // per-cluster argmax and a NOT IN for the self-canonical singletons
-    "d15_canonical" ->
-      s"""WITH RECURSIVE $d2Ctes,
-         |pairs AS MATERIALIZED ($d2Select),
-         |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e2.dst FROM reach r
-         |    JOIN edges e2 ON r.dst = e2.src),
-         |comp AS MATERIALIZED (SELECT src AS doc_id, least(src, min(dst)) AS cluster
-         |         FROM reach GROUP BY src),
-         |tq AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
-         |q AS MATERIALIZED (SELECT doc_id,
-         |  round(least(1.0, len(toks) / 100.0) *
-         |    (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
-         |        / CAST(length(text) AS DOUBLE) END), 6) AS q
-         |  FROM tq),
-         |m AS MATERIALIZED (SELECT comp.doc_id, comp.cluster, q.q
-         |      FROM comp JOIN q USING (doc_id)),
-         |canon AS (SELECT cluster, doc_id AS canonical_id FROM (
-         |  SELECT cluster, doc_id, row_number() OVER (PARTITION BY
-         |    cluster ORDER BY q DESC, doc_id) AS rn FROM m)
-         |  WHERE rn = 1),
-         |u AS (SELECT m.doc_id, canon.canonical_id
-         |      FROM m JOIN canon USING (cluster)
-         |      UNION ALL
-         |      SELECT q.doc_id, q.doc_id FROM q
-         |      WHERE q.doc_id NOT IN (SELECT doc_id FROM comp))
-         |SELECT doc_id, canonical_id,
-         |  CAST(doc_id = canonical_id AS BIGINT) AS is_kept
-         |FROM u""".stripMargin,
-    "d9_pagerank" ->
-      s"""WITH $d2Ctes,
-         |pairs AS MATERIALIZED ($d2Select),
-         |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION ALL SELECT id_b, id_a FROM pairs),
-         |dg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-         |r0 AS MATERIALIZED (SELECT src AS id, deg, CAST(1000000 AS BIGINT) AS r
-         |       FROM dg),
-         |c1 AS (SELECT e.dst, sum(r.r // r.deg) AS in_sum
-         |       FROM edges e JOIN r0 r ON e.src = r.id GROUP BY 1),
-         |r1 AS MATERIALIZED (SELECT r0.id, r0.deg, CAST(150000 +
-         |         (coalesce(c1.in_sum, 0) * 17) // 20 AS BIGINT) AS r
-         |       FROM r0 LEFT JOIN c1 ON r0.id = c1.dst),
-         |c2 AS (SELECT e.dst, sum(r.r // r.deg) AS in_sum
-         |       FROM edges e JOIN r1 r ON e.src = r.id GROUP BY 1),
-         |r2 AS (SELECT r1.id, CAST(150000 +
-         |         (coalesce(c2.in_sum, 0) * 17) // 20 AS BIGINT) AS r
-         |       FROM r1 LEFT JOIN c2 ON r1.id = c2.dst)
-         |SELECT id AS doc_id, r AS pagerank_micro FROM r2""".stripMargin,
-    "d3_minhash_lsh" ->
-      s"""WITH $d3Ctes
-         |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |FROM sig a JOIN sig b
-         |  ON a.band = b.band AND a.sg = b.sg AND a.doc_id < b.doc_id"""
-        .stripMargin,
-    // d21: d2's chain gives pairs + per-pair intersections; minhash
-    // values per (doc, i) from d20's derived-h30 chain, matches
-    // counted per pair. The match count joins mh3 THROUGH the
-    // selected pairs (sel) — an earlier all-pairs-per-i form was
-    // O(docs²·16) and exhausted 170+ GB at sf1 before the final join
-    // would have discarded almost all of it (the Spark side always
-    // scored only selected pairs).
-    "d21_minhash_error" ->
-      s"""WITH $d2Ctes,
-         |e3 AS (SELECT id AS doc_id, s % 1073741824 AS h30 FROM e),
-         |seeds AS (SELECT i,
-         |      (${h60("concat('mh-a:', CAST(i AS VARCHAR))")}
-         |        % 2147483646) + 1 AS a,
-         |      ${h60("concat('mh-b:', CAST(i AS VARCHAR))")}
-         |        % 2147483647 AS b
-         |      FROM (SELECT unnest(range(16)) AS i) r(i)),
-         |mh3 AS MATERIALIZED (SELECT doc_id, i,
-         |      min((a * h30 + b) % 2147483647) AS h
-         |      FROM e3 CROSS JOIN seeds GROUP BY doc_id, i),
-         |sel AS MATERIALIZED (SELECT id_a, id_b, n_a, n_b, inter FROM p
-         |  WHERE inter / CAST(n_a + n_b - inter AS DOUBLE) >= 0.8),
-         |m AS (SELECT sel.id_a, sel.id_b,
-         |      CAST(sum(CASE WHEN ma.h = mb.h THEN 1 ELSE 0 END)
-         |        AS BIGINT) AS n_match
-         |      FROM sel JOIN mh3 ma ON ma.doc_id = sel.id_a
-         |                JOIN mh3 mb ON mb.doc_id = sel.id_b
-         |                           AND mb.i = ma.i
-         |      GROUP BY 1, 2)
-         |SELECT sel.id_a, sel.id_b, sel.inter,
-         |  sel.n_a + sel.n_b - sel.inter AS uni, m.n_match,
-         |  round(CAST(m.n_match AS DOUBLE) / 16.0, 6) AS est_j,
-         |  round(sel.inter
-         |    / CAST(sel.n_a + sel.n_b - sel.inter AS DOUBLE), 6)
-         |    AS jaccard
-         |FROM sel JOIN m ON sel.id_a = m.id_a AND sel.id_b = m.id_b"""
-        .stripMargin,
-    // d25: identical positional 5-gram hash index (same h60 seed
-    // "sp"), identical df ≤ 1000 cap, identical gaps-and-islands
-    // merge; DuckDB's range() positions are BIGINT, matching the
-    // Spark side's explicit cast.
-    "d25_dup_spans" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |k AS MATERIALIZED (SELECT doc_id, i AS pos,
-         |    ${h60("concat('sp:', array_to_string(" +
-            "list_slice(toks, i + 1, i + 5), ' '))")} AS h
-         |  FROM (SELECT doc_id, toks, unnest(range(len(toks) - 4)) AS i
-         |        FROM t WHERE len(toks) >= 5)),
-         |rare AS (SELECT h FROM k GROUP BY h HAVING count(*) <= 1000),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.pos AS pos_a, b.pos AS pos_b
-         |  FROM k a JOIN k b ON a.h = b.h
-         |  JOIN rare ON rare.h = a.h
-         |  WHERE a.doc_id < b.doc_id),
-         |r AS (SELECT id_a, id_b, pos_a, pos_b,
-         |    pos_a - pos_b AS diag,
-         |    pos_a - row_number() OVER (
-         |      PARTITION BY id_a, id_b, pos_a - pos_b
-         |      ORDER BY pos_a) AS grp
-         |  FROM p)
-         |SELECT id_a, id_b, min(pos_a) AS a_start,
-         |  min(pos_b) AS b_start,
-         |  max(pos_a) - min(pos_a) + 5 AS span_len
-         |FROM r GROUP BY id_a, id_b, diag, grp
-         |HAVING max(pos_a) - min(pos_a) + 5 >= 8""".stripMargin,
-    // d20: d2's chain gives truth AND the hashed shingle index; the
-    // minhash signatures derive from e's 60-bit hashes (h30 = s mod
-    // 2^30, exactly d3's), so the whole gate shares one CTE spine.
-    "d20_lsh_recall" ->
-      s"""WITH $d2Ctes,
-         |pairs AS ($d2Select),
-         |e3 AS (SELECT id AS doc_id, s % 1073741824 AS h30 FROM e),
-         |seeds AS (SELECT i,
-         |      (${h60("concat('mh-a:', CAST(i AS VARCHAR))")}
-         |        % 2147483646) + 1 AS a,
-         |      ${h60("concat('mh-b:', CAST(i AS VARCHAR))")}
-         |        % 2147483647 AS b
-         |      FROM (SELECT unnest(range(16)) AS i) r(i)),
-         |mh3 AS (SELECT doc_id, i,
-         |      min((a * h30 + b) % 2147483647) AS h
-         |      FROM e3 CROSS JOIN seeds GROUP BY doc_id, i),
-         |sig3 AS (SELECT doc_id, i // 4 AS band,
-         |      array_to_string(list(h ORDER BY i), ',') AS sg
-         |      FROM mh3 GROUP BY doc_id, i // 4),
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |      FROM sig3 a JOIN sig3 b
-         |        ON a.band = b.band AND a.sg = b.sg
-         |          AND a.doc_id < b.doc_id),
-         |tn AS (SELECT count(*) AS n_truth FROM pairs),
-         |cn AS (SELECT count(*) AS n_cand FROM cand),
-         |h AS (SELECT count(*) AS n_hit
-         |      FROM pairs JOIN cand USING (id_a, id_b))
-         |SELECT n_truth, n_cand, n_hit,
-         |  round(CASE WHEN n_truth > 0
-         |    THEN CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE)
-         |    ELSE 0.0 END, 6) AS recall,
-         |  round(CASE WHEN n_cand > 0
-         |    THEN CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE)
-         |    ELSE 0.0 END, 6) AS precision
-         |FROM tn, cn, h""".stripMargin,
-    // mv5: d3's signature CTEs + delta-probe restriction (x6's seeded
-    // split marks the delta); the both_new flag recomputes membership
-    // from the ids so it needs no extra join.
-    "mv5_lsh_delta" -> {
-      def del(idExpr: String) =
-        s"${h60(s"concat('split:', CAST($idExpr AS VARCHAR))")} % 100 >= 90"
-      s"""WITH $d3Ctes
-         |SELECT id_a, id_b,
-         |  (${del("id_a")}) AND (${del("id_b")}) AS both_new
-         |FROM (SELECT DISTINCT least(a.doc_id, b.doc_id) AS id_a,
-         |    greatest(a.doc_id, b.doc_id) AS id_b
-         |  FROM sig a JOIN sig b
-         |    ON a.band = b.band AND a.sg = b.sg
-         |      AND a.doc_id <> b.doc_id
-         |  WHERE ${del("a.doc_id")})""".stripMargin
-    },
-    "d4_simhash" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tk FROM t),
-         |h AS (SELECT doc_id, ${h60("concat('t:', tk)")} AS h FROM tok),
-         |b AS (SELECT doc_id, j,
-         |      CASE WHEN sum(((h >> j) & 1) * 2 - 1) > 0 THEN 1 ELSE 0 END
-         |        AS bit
-         |      FROM h CROSS JOIN (SELECT unnest(range(60)) AS j) r(j)
-         |      GROUP BY doc_id, j)
-         |SELECT doc_id,
-         |  CAST(sum(bit * (CAST(1 AS BIGINT) << j)) AS BIGINT) AS simhash
-         |FROM b GROUP BY doc_id""".stripMargin,
-    "d5_simhash_pairs" ->
-      s"""WITH $simhashCfCtes,
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         |      a.simhash AS sim_a, b.simhash AS sim_b
-         |      FROM cf a JOIN cf b ON a.j = b.j AND a.chunk = b.chunk
-         |        AND a.doc_id < b.doc_id)
-         |SELECT id_a, id_b,
-         |  CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3""".stripMargin,
-    // Mirrors d28: the same cf chain, per-bucket row_number in doc_id
-    // order (= Spark's id-sorted posting array), a pair survives iff
-    // the successor offset is within the budget, and trunc_x counts
-    // both dropped successor and predecessor slots per endpoint.
-    "d28_simhash_budget" ->
-      s"""WITH $simhashCfCtes,
-         |rn AS (SELECT doc_id, simhash, j, chunk,
-         |      row_number() OVER (PARTITION BY j, chunk
-         |        ORDER BY doc_id) AS rn,
-         |      count(*) OVER (PARTITION BY j, chunk) AS cnt
-         |      FROM cf),
-         |tr AS (SELECT doc_id,
-         |      CAST(sum(greatest(cnt - rn - 2, 0)
-         |        + greatest(rn - 3, 0)) AS BIGINT) AS trunc
-         |      FROM rn GROUP BY doc_id),
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b,
-         |      a.simhash AS sim_a, b2.simhash AS sim_b
-         |      FROM rn a JOIN rn b2 ON a.j = b2.j AND a.chunk = b2.chunk
-         |        AND b2.rn - a.rn BETWEEN 1 AND 2),
-         |p AS (SELECT id_a, id_b,
-         |      CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-         |      FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3)
-         |SELECT p.id_a, p.id_b, p.hamming,
-         |  ta.trunc AS trunc_a, tb.trunc AS trunc_b
-         |FROM p JOIN tr ta ON ta.doc_id = p.id_a
-         |JOIN tr tb ON tb.doc_id = p.id_b""".stripMargin,
-    // Mirrors d30: one offset-windowed expansion at max budget, each
-    // pair's minimal offset decides which budgets keep it; slot
-    // accounting (cnt − rn successors per element) prices the cut.
-    "d30_budget_curve" ->
-      s"""WITH $simhashCfCtes,
-         |rn AS (SELECT doc_id, simhash, j, chunk,
-         |      row_number() OVER (PARTITION BY j, chunk
-         |        ORDER BY doc_id) AS rn,
-         |      count(*) OVER (PARTITION BY j, chunk) AS cnt
-         |      FROM cf),
-         |bud AS (SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS budget),
-         |wide AS (SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
-         |      min(b2.rn - a.rn) AS min_off
-         |      FROM rn a JOIN rn b2 ON a.j = b2.j AND a.chunk = b2.chunk
-         |        AND b2.rn - a.rn BETWEEN 1 AND 8
-         |      WHERE bit_count(xor(a.simhash, b2.simhash)) <= 3
-         |      GROUP BY 1, 2),
-         |kept AS (SELECT budget, count(*) AS pairs_kept
-         |      FROM bud JOIN wide ON min_off <= budget GROUP BY 1),
-         |slots AS (SELECT doc_id, cnt - rn AS n_succ FROM rn),
-         |cut AS (SELECT budget,
-         |      CAST(sum(greatest(n_succ - budget, 0)) AS BIGINT)
-         |        AS slots_dropped,
-         |      count(DISTINCT CASE WHEN n_succ > budget
-         |        THEN doc_id END) AS docs_truncated
-         |      FROM bud CROSS JOIN slots GROUP BY 1)
-         |SELECT bud.budget,
-         |  coalesce(kept.pairs_kept, 0) AS pairs_kept,
-         |  coalesce(cut.slots_dropped, 0) AS slots_dropped,
-         |  coalesce(cut.docs_truncated, 0) AS docs_truncated
-         |FROM bud LEFT JOIN kept USING (budget)
-         |LEFT JOIN cut USING (budget)""".stripMargin,
-    "d6_embedding_neardup" ->
-      s"""WITH d AS (SELECT vec_id,
-         |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |      FROM embeddings),
-         |n AS (SELECT vec_id, v,
-         |      list_reduce(list_prepend(0.0, list_transform(range(len(v)),
-         |        i -> v[i+1] * v[i+1])), (x, y) -> x + y) AS n2 FROM d)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |FROM n a JOIN n b ON a.vec_id < b.vec_id
-         |WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.45""".stripMargin,
-    // Mirrors d14: d2's candidate CTEs verbatim, containment predicate.
-    "d14_containment" ->
-      s"""WITH $d2Ctes
-         |SELECT id_a, id_b,
-         |  round(inter / CAST(n_a AS DOUBLE), 6) AS cont_ab,
-         |  round(inter / CAST(n_b AS DOUBLE), 6) AS cont_ba
-         |FROM p
-         |WHERE greatest(inter / CAST(n_a AS DOUBLE),
-         |  inter / CAST(n_b AS DOUBLE)) >= 0.9""".stripMargin,
-    // Mirrors d12: same shingle hashes as d2/d8, df built over per-doc
-    // DISTINCT shingles, the one ratio rounded identically.
-    "d12_novelty" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |s AS (SELECT doc_id, $sh3Sql AS sh FROM t),
-         |e AS (SELECT doc_id, ${h60("concat('sh:', sh_s)")} AS h
-         |      FROM (SELECT doc_id, unnest(sh) AS sh_s FROM s)),
-         |rare AS (SELECT h FROM e GROUP BY h HAVING count(*) = 1),
-         |u AS (SELECT doc_id, count(*) AS n_unique
-         |      FROM e JOIN rare USING (h) GROUP BY 1)
-         |SELECT s.doc_id, CAST(len(sh) AS BIGINT) AS n_shingles,
-         |  coalesce(u.n_unique, 0) AS n_unique,
-         |  CASE WHEN len(sh) > 0 THEN
-         |    round(coalesce(u.n_unique, 0) / CAST(len(sh) AS DOUBLE), 6)
-         |  END AS novelty
-         |FROM s LEFT JOIN u ON s.doc_id = u.doc_id""".stripMargin
-  )
 }

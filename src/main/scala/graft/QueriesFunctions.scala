@@ -17,9 +17,9 @@ import graft.sources.Tables
   */
 object QueriesFunctions {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // String functions over part names.
-    "f1_string_funcs" -> ((s, d) => {
+    Query("f1_string_funcs", (s, d) => {
       Tables.part(s, d).select(
         col("p_partkey"),
         upper(col("p_name")).as("uname"),
@@ -30,10 +30,20 @@ object QueriesFunctions {
         col("p_name").like("%green%").as("is_green"),
         lpad(col("p_brand"), 12, "#").as("brand_padded"),
         split(col("p_type"), " ").getItem(0).as("type_head"))
-    }),
+    },
+      """SELECT p_partkey,
+        |  upper(p_name) AS uname,
+        |  length(p_name) AS name_len,
+        |  substr(p_name, 1, 8) AS prefix8,
+        |  regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
+        |  concat_ws('|', p_brand, p_type) AS brand_type,
+        |  p_name LIKE '%green%' AS is_green,
+        |  lpad(p_brand, 12, '#') AS brand_padded,
+        |  string_split(p_type, ' ')[1] AS type_head
+        |FROM part""".stripMargin),
 
     // Date/time functions over order dates.
-    "f2_date_funcs" -> ((s, d) => {
+    Query("f2_date_funcs", (s, d) => {
       Tables.orders(s, d).select(
         col("o_orderkey"),
         year(col("o_orderdate")).as("y"),
@@ -45,10 +55,21 @@ object QueriesFunctions {
         last_day(col("o_orderdate")).cast("timestamp").as("month_end"),
         datediff(lit("2002-01-01").cast("date"),
           col("o_orderdate").cast("date")).cast("long").as("days_to_2002"))
-    }),
+    },
+      """SELECT o_orderkey,
+        |  CAST(year(o_orderdate) AS INTEGER) AS y,
+        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
+        |  CAST(month(o_orderdate) AS INTEGER) AS m,
+        |  CAST(day(o_orderdate) AS INTEGER) AS dom,
+        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
+        |  date_trunc('month', o_orderdate) AS month_start,
+        |  CAST(last_day(o_orderdate) AS TIMESTAMP) AS month_end,
+        |  date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01')
+        |    AS days_to_2002
+        |FROM orders""".stripMargin),
 
     // Math functions over lineitem measures.
-    "f3_math_funcs" -> ((s, d) => {
+    Query("f3_math_funcs", (s, d) => {
       Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
         abs(col("l_discount") - 0.05).as("disc_dev"),
@@ -60,10 +81,23 @@ object QueriesFunctions {
         round(pow(col("l_quantity"), 2), 6).as("qty_sq"),
         signum(col("l_discount") - col("l_tax")).cast("int").as("dt_sign"),
         greatest(col("l_discount"), col("l_tax")).as("max_rate"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber,
+        |  abs(l_discount - 0.05) AS disc_dev,
+        |  CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
+        |  CAST(floor(l_extendedprice) AS BIGINT) AS price_floor,
+        |  round(sqrt(l_extendedprice), 6) AS price_sqrt,
+        |  round(exp(l_discount), 6) AS disc_exp,
+        |  round(ln(l_extendedprice + 1), 6) AS price_ln,
+        |  round(pow(l_quantity, 2), 6) AS qty_sq,
+        |  CAST(CASE WHEN l_discount - l_tax > 0 THEN 1
+        |    WHEN l_discount - l_tax < 0 THEN -1 ELSE 0 END AS INTEGER)
+        |    AS dt_sign,
+        |  greatest(l_discount, l_tax) AS max_rate
+        |FROM lineitem""".stripMargin),
 
     // Conditional expressions: CASE, coalesce, nullif.
-    "f4_conditional" -> ((s, d) => {
+    Query("f4_conditional", (s, d) => {
       Tables.events(s, d).select(
         col("event_id"),
         when(col("value") >= 300, "high")
@@ -72,11 +106,18 @@ object QueriesFunctions {
         coalesce(nullif(col("event_type"), lit("click")),
           lit("(clicked)")).as("type_or_marker"),
         (col("value") > 250 && col("user_id") % 2 === 0).as("flag"))
-    }),
+    },
+      """SELECT event_id,
+        |  CASE WHEN value >= 300 THEN 'high'
+        |    WHEN value >= 100 THEN 'mid' ELSE 'low' END AS value_band,
+        |  coalesce(nullif(event_type, 'click'), '(clicked)')
+        |    AS type_or_marker,
+        |  (value > 250 AND user_id % 2 = 0) AS flag
+        |FROM events""".stripMargin),
 
     // Array functions over whitespace-tokenized document text. All
     // narrow projections — codegen'd, zero shuffle, scale-free.
-    "f5_array_funcs" -> ((s, d) => {
+    Query("f5_array_funcs", (s, d) => {
       val toks = split(trim(lower(col("text"))), "\\s+")
       Tables.documents(s, d).select(
         col("doc_id"),
@@ -85,23 +126,39 @@ object QueriesFunctions {
         array_min(toks).as("min_tok"),
         array_contains(toks, "the").as("has_the"),
         concat_ws(" ", slice(toks, 1, 3)).as("head3"))
-    }),
+    },
+      """SELECT doc_id,
+        |  CAST(len(toks) AS BIGINT) AS n_tokens,
+        |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_unique,
+        |  list_min(toks) AS min_tok,
+        |  list_contains(toks, 'the') AS has_the,
+        |  array_to_string(toks[1:3], ' ') AS head3
+        |FROM (SELECT doc_id,
+        |  regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+        |  FROM documents)""".stripMargin),
 
     // Regex battery: extract / count / match. Patterns are kept in the
     // RE2∩Java-regex common subset so both engines agree.
-    "f6_regex_funcs" -> ((s, d) => {
+    Query("f6_regex_funcs", (s, d) => {
       Tables.part(s, d).select(
         col("p_partkey"),
         regexp_extract(col("p_name"), "([a-z]+)$", 1).as("last_word"),
         regexp_extract(col("p_brand"), "([0-9]+)", 1).as("brand_num"),
         col("p_name").rlike("[aeiou]{2}").as("vowel_pair"),
         regexp_count(col("p_name"), lit("[aeiou]")).as("n_vowels"))
-    }),
+    },
+      """SELECT p_partkey,
+        |  regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
+        |  regexp_extract(p_brand, '([0-9]+)', 1) AS brand_num,
+        |  regexp_matches(p_name, '[aeiou]{2}') AS vowel_pair,
+        |  CAST(len(regexp_extract_all(p_name, '[aeiou]')) AS INTEGER)
+        |    AS n_vowels
+        |FROM part""".stripMargin),
 
     // Bitwise battery: and/or/xor masks, shifts, popcount — the
     // hash-bucketing / bitmap primitives (every LSH band, bloom word
     // and hash split in this engine reduces to these).
-    "f7_bitwise_funcs" -> ((s, d) => {
+    Query("f7_bitwise_funcs", (s, d) => {
       Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
         (col("l_orderkey").bitwiseAND(lit(255L))).as("band"),
@@ -110,7 +167,15 @@ object QueriesFunctions {
         shiftleft(col("l_partkey"), 2).as("shl"),
         shiftright(col("l_orderkey"), 3).as("shr"),
         bit_count(col("l_orderkey")).as("nbits"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber,
+        |  l_orderkey & 255 AS band,
+        |  l_orderkey | 15 AS bor,
+        |  xor(l_orderkey, l_partkey) AS bxor,
+        |  l_partkey << 2 AS shl,
+        |  l_orderkey >> 3 AS shr,
+        |  CAST(bit_count(l_orderkey) AS INTEGER) AS nbits
+        |FROM lineitem""".stripMargin),
 
     // Z-order (Morton) clustering key over (partkey, suppkey) — the
     // multi-dimensional data-layout primitive: files written sorted by
@@ -120,7 +185,7 @@ object QueriesFunctions {
     // RelationalOpsSpec measures the contrast). zbucket = the top 10
     // bits, i.e. the 1024-file assignment a writer would use. Pure
     // codegen'd bit arithmetic, no shuffle.
-    "f8_zorder" -> ((s, d) => {
+    Query("f8_zorder", (s, d) => {
       val z = graft.operators.RelationalOps.zValue2(
         col("l_partkey").bitwiseAND(lit(65535L)),
         col("l_suppkey").bitwiseAND(lit(65535L)), 16)
@@ -128,7 +193,14 @@ object QueriesFunctions {
         col("l_orderkey"), col("l_linenumber"),
         z.as("zval"),
         shiftright(z, 22).as("zbucket"))
-    }),
+    },
+      // the same interleave, unrolled term-by-term from ONE generator so
+      // the two engines cannot drift
+      s"""SELECT l_orderkey, l_linenumber, zval, zval >> 22 AS zbucket
+         |FROM (SELECT l_orderkey, l_linenumber,
+         |  ${zSql("(l_partkey & 65535)", "(l_suppkey & 65535)", 16)}
+         |    AS zval
+         |  FROM lineitem)""".stripMargin),
 
     // Higher-order array-function battery over the embedding vectors:
     // transform / filter / exists / forall / reverse / aggregate — the
@@ -140,7 +212,7 @@ object QueriesFunctions {
     // reversed-self dot product exercises index-aligned two-array
     // folding (zip_with shape) the same way the ANN kernels do. Pure
     // narrow projection — zero shuffle at any scale.
-    "f9_higher_order" -> ((s, d) => {
+    Query("f9_higher_order", (s, d) => {
       val v = transform(col("embedding"), x => x.cast("double"))
       val rv = reverse(v)
       Tables.embeddings(s, d).select(
@@ -152,7 +224,25 @@ object QueriesFunctions {
           .as("sum_sq"),
         round(aggregate(zip_with(v, rv, (a, b) => a * b), lit(0.0),
           (a, x) => a + x), 6).as("dot_rev"))
-    }),
+    },
+      // f9: identical strict left folds over the double-widened list
+      // (the v-family list_reduce idiom); the reversed dot uses indexed
+      // access into list_reverse rather than a struct zip.
+      """WITH d AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |  FROM embeddings),
+        |r AS (SELECT vec_id, v, list_reverse(v) AS rv FROM d)
+        |SELECT vec_id,
+        |  CAST(len(list_filter(v, x -> x > 0)) AS BIGINT) AS n_pos,
+        |  len(list_filter(v, x -> x > 2.0)) > 0 AS has_big,
+        |  len(list_filter(v, x -> abs(x) >= 10.0)) = 0 AS bounded,
+        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        |    list_transform(v, x -> x * x)), (a, x) -> a + x), 6)
+        |    AS sum_sq,
+        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        |    list_transform(range(len(v)), i -> v[i+1] * rv[i+1])),
+        |    (a, x) -> a + x), 6) AS dot_rev
+        |FROM r""".stripMargin),
 
     // MAP-type function battery (the container type f5/f9 don't touch):
     // build a linenumber→quantity map per order (map_from_entries over
@@ -173,7 +263,7 @@ object QueriesFunctions {
     // are mirrored with nullif/CASE encodings of the same results
     // (documented — the oracle pins the VALUES, Spark's try_* pins the
     // mechanism).
-    "f11_safe_math" -> ((s, d) => {
+    Query("f11_safe_math", (s, d) => {
       Tables.region(s, d).select(
         col("r_regionkey"),
         round(try_divide(lit(10.0), col("r_regionkey").cast("double")),
@@ -184,9 +274,22 @@ object QueriesFunctions {
         try_element_at(array(lit(1), lit(2)), lit(5)).as("oob_elem"),
         expr("try_to_timestamp(r_name)").as("bad_ts"),
         expr("try_add(9223372036854775807L, r_regionkey)").as("ovf_add"))
-    }),
+    },
+      // f11: TRY_CAST is native; div-by-zero and Long overflow mirror as
+      // nullif/CASE encodings of the identical NULL-or-value results.
+      """SELECT r_regionkey,
+        |  round(10.0 / nullif(CAST(r_regionkey AS DOUBLE), 0), 6)
+        |    AS div_k,
+        |  TRY_CAST(r_name AS INTEGER) AS bad_int,
+        |  TRY_CAST(CAST(r_regionkey AS VARCHAR) AS INTEGER)
+        |    AS good_int,
+        |  ([1, 2])[5] AS oob_elem,
+        |  TRY_CAST(r_name AS TIMESTAMP) AS bad_ts,
+        |  CASE WHEN r_regionkey = 0 THEN 9223372036854775807
+        |    ELSE NULL END AS ovf_add
+        |FROM region""".stripMargin),
 
-    "f10_map_funcs" -> ((s, d) => {
+    Query("f10_map_funcs", (s, d) => {
       // this synthetic lineitem can repeat a linenumber within an order,
       // so entries pre-aggregate per (order, line) — map keys MUST be
       // unique (map_from_entries fails loudly on duplicates, the right
@@ -204,126 +307,9 @@ object QueriesFunctions {
           map_filter(doubled, (_, v) => v >= lit(50.0)).as("heavy"))
         .select(col("l_orderkey"), col("n_lines"),
           explode(col("heavy")).as(Seq("linenumber", "dqty")))
-    })
-  )
-
-  def oracle: Map[String, String] = Map(
-    "f1_string_funcs" ->
-      """SELECT p_partkey,
-        |  upper(p_name) AS uname,
-        |  length(p_name) AS name_len,
-        |  substr(p_name, 1, 8) AS prefix8,
-        |  regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
-        |  concat_ws('|', p_brand, p_type) AS brand_type,
-        |  p_name LIKE '%green%' AS is_green,
-        |  lpad(p_brand, 12, '#') AS brand_padded,
-        |  string_split(p_type, ' ')[1] AS type_head
-        |FROM part""".stripMargin,
-    "f2_date_funcs" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INTEGER) AS y,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
-        |  CAST(month(o_orderdate) AS INTEGER) AS m,
-        |  CAST(day(o_orderdate) AS INTEGER) AS dom,
-        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-        |  date_trunc('month', o_orderdate) AS month_start,
-        |  CAST(last_day(o_orderdate) AS TIMESTAMP) AS month_end,
-        |  date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01')
-        |    AS days_to_2002
-        |FROM orders""".stripMargin,
-    "f3_math_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  abs(l_discount - 0.05) AS disc_dev,
-        |  CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
-        |  CAST(floor(l_extendedprice) AS BIGINT) AS price_floor,
-        |  round(sqrt(l_extendedprice), 6) AS price_sqrt,
-        |  round(exp(l_discount), 6) AS disc_exp,
-        |  round(ln(l_extendedprice + 1), 6) AS price_ln,
-        |  round(pow(l_quantity, 2), 6) AS qty_sq,
-        |  CAST(CASE WHEN l_discount - l_tax > 0 THEN 1
-        |    WHEN l_discount - l_tax < 0 THEN -1 ELSE 0 END AS INTEGER)
-        |    AS dt_sign,
-        |  greatest(l_discount, l_tax) AS max_rate
-        |FROM lineitem""".stripMargin,
-    "f4_conditional" ->
-      """SELECT event_id,
-        |  CASE WHEN value >= 300 THEN 'high'
-        |    WHEN value >= 100 THEN 'mid' ELSE 'low' END AS value_band,
-        |  coalesce(nullif(event_type, 'click'), '(clicked)')
-        |    AS type_or_marker,
-        |  (value > 250 AND user_id % 2 = 0) AS flag
-        |FROM events""".stripMargin,
-    "f5_array_funcs" ->
-      """SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_unique,
-        |  list_min(toks) AS min_tok,
-        |  list_contains(toks, 'the') AS has_the,
-        |  array_to_string(toks[1:3], ' ') AS head3
-        |FROM (SELECT doc_id,
-        |  regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |  FROM documents)""".stripMargin,
-    "f6_regex_funcs" ->
-      """SELECT p_partkey,
-        |  regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
-        |  regexp_extract(p_brand, '([0-9]+)', 1) AS brand_num,
-        |  regexp_matches(p_name, '[aeiou]{2}') AS vowel_pair,
-        |  CAST(len(regexp_extract_all(p_name, '[aeiou]')) AS INTEGER)
-        |    AS n_vowels
-        |FROM part""".stripMargin,
-    "f7_bitwise_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_orderkey & 255 AS band,
-        |  l_orderkey | 15 AS bor,
-        |  xor(l_orderkey, l_partkey) AS bxor,
-        |  l_partkey << 2 AS shl,
-        |  l_orderkey >> 3 AS shr,
-        |  CAST(bit_count(l_orderkey) AS INTEGER) AS nbits
-        |FROM lineitem""".stripMargin,
-    // the same interleave, unrolled term-by-term from ONE generator so
-    // the two engines cannot drift
-    "f8_zorder" ->
-      s"""SELECT l_orderkey, l_linenumber, zval, zval >> 22 AS zbucket
-         |FROM (SELECT l_orderkey, l_linenumber,
-         |  ${zSql("(l_partkey & 65535)", "(l_suppkey & 65535)", 16)}
-         |    AS zval
-         |  FROM lineitem)""".stripMargin,
-    // f9: identical strict left folds over the double-widened list
-    // (the v-family list_reduce idiom); the reversed dot uses indexed
-    // access into list_reverse rather than a struct zip.
-    "f9_higher_order" ->
-      """WITH d AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |r AS (SELECT vec_id, v, list_reverse(v) AS rv FROM d)
-        |SELECT vec_id,
-        |  CAST(len(list_filter(v, x -> x > 0)) AS BIGINT) AS n_pos,
-        |  len(list_filter(v, x -> x > 2.0)) > 0 AS has_big,
-        |  len(list_filter(v, x -> abs(x) >= 10.0)) = 0 AS bounded,
-        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(v, x -> x * x)), (a, x) -> a + x), 6)
-        |    AS sum_sq,
-        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(range(len(v)), i -> v[i+1] * rv[i+1])),
-        |    (a, x) -> a + x), 6) AS dot_rev
-        |FROM r""".stripMargin,
-    // f11: TRY_CAST is native; div-by-zero and Long overflow mirror as
-    // nullif/CASE encodings of the identical NULL-or-value results.
-    "f11_safe_math" ->
-      """SELECT r_regionkey,
-        |  round(10.0 / nullif(CAST(r_regionkey AS DOUBLE), 0), 6)
-        |    AS div_k,
-        |  TRY_CAST(r_name AS INTEGER) AS bad_int,
-        |  TRY_CAST(CAST(r_regionkey AS VARCHAR) AS INTEGER)
-        |    AS good_int,
-        |  ([1, 2])[5] AS oob_elem,
-        |  TRY_CAST(r_name AS TIMESTAMP) AS bad_ts,
-        |  CASE WHEN r_regionkey = 0 THEN 9223372036854775807
-        |    ELSE NULL END AS ovf_add
-        |FROM region""".stripMargin,
-    // f10: the exploded map rows are plain relational rows — count per
-    // order joined back, doubled quantity filtered at 50.
-    "f10_map_funcs" ->
+    },
+      // f10: the exploded map rows are plain relational rows — count per
+      // order joined back, doubled quantity filtered at 50.
       """WITH q AS (SELECT l_orderkey, l_linenumber, sum(l_quantity) AS qty
         |  FROM lineitem GROUP BY 1, 2),
         |n AS (SELECT l_orderkey, count(*) AS n_lines FROM q GROUP BY 1)
@@ -331,7 +317,8 @@ object QueriesFunctions {
         |  q.qty * 2.0 AS dqty
         |FROM q JOIN n USING (l_orderkey)
         |WHERE q.qty * 2.0 >= 50.0""".stripMargin
-  )
+  ))
+
 
   /** SQL form of [[graft.operators.RelationalOps.zValue2]]'s bit
     * interleave, generated from the same index loop (shared with

@@ -44,131 +44,27 @@ object QueriesGraph {
     */
   private[graft] val PeelRounds = 8
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // Co-supplier similarity graph over lineitem (suppliers weighted by
     // shared parts, per-part cap 32, top-8 neighbors per supplier),
     // then degree-oriented triangle counting: the 20 suppliers most
     // embedded in dense co-supply clusters. Three bounded fan-outs
     // (cap² pair expansion, k·n edges, O(m^1.5) oriented 2-paths) —
     // the shape that survives a 100 TB lineitem.
-    "d10_triangles" -> ((s, d) => {
+    Query("d10_triangles", (s, d) => {
       GraphOps.cooccurrenceTriangles(
         Tables.lineitem(s, d).select(col("l_partkey"), col("l_suppkey")),
         "l_partkey", "l_suppkey",
         MaxSuppliersPerPart, NeighborsK, topK = 20)
         .select(col("id").cast("long").as("suppkey"), col("n_triangles"))
-    }),
-
-    // k-core of the customer co-purchase graph (customers sharing ≥ 2
-    // parts, per-part cap 16): iterative peeling to the unique maximal
-    // subgraph of min-degree ≥ 4, reporting each survivor's within-core
-    // degree. The d7/d9 loop shape — one hash-agg + one probe + two
-    // anti-joins per round, lineage cut per round.
-    "d11_kcore" -> ((s, d) => {
-      GraphOps.kCore(coPurchaseEdges(s, d), KCoreK, PeelRounds)
-        .select(col("id").cast("long").as("custkey"), col("core_deg"))
-    }),
-
-    // Community detection over the SAME co-purchase graph: two rounds
-    // of deterministic synchronous label propagation (most-frequent
-    // neighbor label, count-desc/label-asc tiebreak). Communities and
-    // cores answer different questions — d11 finds the dense nucleus,
-    // d13 assigns EVERY node a community — and sharing the substrate
-    // means the two queries differ only in the iteration, the shape a
-    // real graph platform has (one edge table, many algorithms).
-    "d13_labelprop" -> ((s, d) => {
-      GraphOps.labelPropagation(coPurchaseEdges(s, d), LpRounds)
-        .select(col("id").cast("long").as("custkey"),
-          col("lbl").cast("long").as("community"))
-    }),
-
-    // Structural node similarity over the SAME co-purchase substrate
-    // (third consumer of the shared edge cache): the top-20 customer
-    // pairs by common-neighbor count, each with its neighbor-set
-    // Jaccard — the link-prediction / entity-matching primitive
-    // ("customers whose purchase neighborhoods overlap" ≈ "accounts
-    // that behave like one account"). 2-path fan-out is hub-capped at
-    // [[MaxAdjPerHub]] incident arcs (C(cap,2) candidates per hub at
-    // any degree); TRUE degrees feed the Jaccard denominator — see
-    // GraphOps.commonNeighborPairs.
-    "d19_common_neighbors" -> ((s, d) => {
-      graft.operators.RelationalOps.topKGlobal(
-        GraphOps.commonNeighborPairs(coPurchaseEdges(s, d), MaxAdjPerHub),
-        Seq(col("common").desc, col("x").asc, col("y").asc), 20)
-        .select(col("x").cast("long").as("cust_a"),
-          col("y").cast("long").as("cust_b"),
-          col("common"), col("nbr_jaccard"))
-    }),
-
-    // Multi-source BFS hop distances over the SAME co-purchase
-    // substrate (one edge table, many algorithms): "every customer
-    // within 4 hops of the seed set, with the hop count" — the
-    // influence-radius / blast-radius query a fraud or recommendation
-    // platform runs from a suspect set. Seeds are the 5 smallest node
-    // ids (deterministic); each of the 4 rounds moves O(frontier·deg)
-    // KEYS through one equi-join + one anti-join (never payloads,
-    // never all-pairs), with per-round lineage cuts — BFS is the d7/
-    // d9/d11 iterative discipline applied to reachability. The oracle
-    // is a depth-bounded recursive closure with min(dist): first
-    // discovery in the engine IS min distance in the closure.
-    "d26_bfs_hops" -> ((s, d) => {
-      val edges = coPurchaseEdges(s, d)
-      val sources = edges
-        .select(explode(array(col("a"), col("b"))).as("id")).distinct()
-        .orderBy(col("id")).limit(BfsSources)
-      GraphOps.bfsDistances(edges, sources, BfsRounds)
-        .select(col("id").cast("long").as("custkey"), col("dist"))
-    })
-  )
-
-  /** d26's horizon and seed count (mirrored in the oracle). */
-  private[graft] val BfsRounds = 4
-  private[graft] val BfsSources = 5
-
-  private[graft] val LpRounds = 2
-
-  /** d19's per-hub incident-arc cap for 2-path generation. */
-  private[graft] val MaxAdjPerHub = 16
-
-  /** d11/d13's shared substrate: the customer co-purchase edge list
-    * (customers sharing ≥ [[MinSharedParts]] parts, per-part member cap
-    * [[MaxCustomersPerPart]]), PERSISTED — the docsWithTokens house
-    * pattern: building the graph (join + capped pair expansion +
-    * weight agg) dominates both consumers (~3 s of each query's ~3.2 s
-    * at sf0.1), and CacheManager plan equality lets whichever of
-    * d11/d13 runs second read the materialized edges instead of
-    * re-deriving them. At 100 TB this is "build the edge table once →
-    * checkpoint → run every graph algorithm against it".
-    */
-  private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-    val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val cp = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .select(col("l_partkey"), col("o_custkey"))
-    val edges = GraphOps.coOccurrenceWeights(cp, "l_partkey", "o_custkey",
-        MaxCustomersPerPart)
-      .filter(col("w") >= MinSharedParts).select(col("a"), col("b"))
-    SessionMemo.persistOnce(edges)
-  }
-
-  /** This family's shared persisted caches (the QueriesDedup.sharedCaches
-    * contract: name → builder, pre-built and timed separately by Bench
-    * so per-query times are net of cache).
-    */
-  private[graft] def sharedCaches
-      : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "graph.copurchase_edges" -> (coPurchaseEdges _))
-
-  /** The oracle CTEs are declared MATERIALIZED: DuckDB inlines each CTE
-    * reference by default, and this pipeline references `cap` twice,
-    * `o` three times, `tri` three times — inlining re-expands the whole
-    * upstream chain per reference (measured: >9 min at sf0.1 inlined,
-    * 0.9 s materialized). The exact SQL-side analogue of the
-    * localCheckpoint lineage cuts in [[graft.operators.GraphOps
-    * .triangleCounts]].
-    */
-  def oracle: Map[String, String] = Map(
-    "d10_triangles" ->
+    },
+      // The oracle CTEs are declared MATERIALIZED: DuckDB inlines each
+      // CTE reference by default, and this pipeline references `cap`
+      // twice, `o` three times, `tri` three times — inlining re-expands
+      // the whole upstream chain per reference (measured: >9 min at
+      // sf0.1 inlined, 0.9 s materialized). The exact SQL-side analogue
+      // of the localCheckpoint lineage cuts in
+      // [[graft.operators.GraphOps.triangleCounts]].
       s"""WITH ps AS MATERIALIZED (
          |     SELECT DISTINCT l_partkey AS p, l_suppkey AS m
          |     FROM lineitem),
@@ -207,19 +103,67 @@ object QueriesGraph {
          |       UNION ALL SELECT v1 FROM tri
          |       UNION ALL SELECT v2 FROM tri) GROUP BY 1)
          |SELECT CAST(id AS BIGINT) AS suppkey, n_triangles FROM pn
-         |ORDER BY n_triangles DESC, id LIMIT 20""".stripMargin,
+         |ORDER BY n_triangles DESC, id LIMIT 20""".stripMargin),
 
-    "d11_kcore" ->
+    // k-core of the customer co-purchase graph (customers sharing ≥ 2
+    // parts, per-part cap 16): iterative peeling to the unique maximal
+    // subgraph of min-degree ≥ 4, reporting each survivor's within-core
+    // degree. The d7/d9 loop shape — one hash-agg + one probe + two
+    // anti-joins per round, lineage cut per round.
+    Query("d11_kcore", (s, d) => {
+      GraphOps.kCore(coPurchaseEdges(s, d), KCoreK, PeelRounds)
+        .select(col("id").cast("long").as("custkey"), col("core_deg"))
+    },
       s"""WITH $coPurchaseCtes,
          |d0 AS MATERIALIZED (SELECT id, count(*) AS dg FROM (
          |     SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
          |${unrolledPeel(PeelRounds, KCoreK)}
          |SELECT CAST(id AS BIGINT) AS custkey, dg AS core_deg
          |FROM d$PeelRounds""".stripMargin,
+      reads = Seq(coPurchaseEdges)),
 
-    // d19: identical substrate CTEs; the hub cap is the id-ordered
-    // row_number ≤ MaxAdjPerHub, mirroring the Spark window exactly.
-    "d19_common_neighbors" ->
+    // Community detection over the SAME co-purchase graph: two rounds
+    // of deterministic synchronous label propagation (most-frequent
+    // neighbor label, count-desc/label-asc tiebreak). Communities and
+    // cores answer different questions — d11 finds the dense nucleus,
+    // d13 assigns EVERY node a community — and sharing the substrate
+    // means the two queries differ only in the iteration, the shape a
+    // real graph platform has (one edge table, many algorithms).
+    Query("d13_labelprop", (s, d) => {
+      GraphOps.labelPropagation(coPurchaseEdges(s, d), LpRounds)
+        .select(col("id").cast("long").as("custkey"),
+          col("lbl").cast("long").as("community"))
+    },
+      // Mirrors d13: identical substrate CTEs, LP rounds unrolled with
+      // the same count-desc/label-asc argmax.
+      s"""WITH $coPurchaseCtes,
+         |sym AS MATERIALIZED (SELECT a AS u, b AS v FROM e0
+         |      UNION ALL SELECT b, a FROM e0),
+         |l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM sym),
+         |${unrolledLp(LpRounds)}
+         |SELECT CAST(id AS BIGINT) AS custkey, CAST(lbl AS BIGINT)
+         |  AS community FROM l$LpRounds""".stripMargin,
+      reads = Seq(coPurchaseEdges)),
+
+    // Structural node similarity over the SAME co-purchase substrate
+    // (third consumer of the shared edge cache): the top-20 customer
+    // pairs by common-neighbor count, each with its neighbor-set
+    // Jaccard — the link-prediction / entity-matching primitive
+    // ("customers whose purchase neighborhoods overlap" ≈ "accounts
+    // that behave like one account"). 2-path fan-out is hub-capped at
+    // [[MaxAdjPerHub]] incident arcs (C(cap,2) candidates per hub at
+    // any degree); TRUE degrees feed the Jaccard denominator — see
+    // GraphOps.commonNeighborPairs.
+    Query("d19_common_neighbors", (s, d) => {
+      graft.operators.RelationalOps.topKGlobal(
+        GraphOps.commonNeighborPairs(coPurchaseEdges(s, d), MaxAdjPerHub),
+        Seq(col("common").desc, col("x").asc, col("y").asc), 20)
+        .select(col("x").cast("long").as("cust_a"),
+          col("y").cast("long").as("cust_b"),
+          col("common"), col("nbr_jaccard"))
+    },
+      // d19: identical substrate CTEs; the hub cap is the id-ordered
+      // row_number ≤ MaxAdjPerHub, mirroring the Spark window exactly.
       s"""WITH $coPurchaseCtes,
          |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e0
          |      UNION ALL SELECT b, a FROM e0),
@@ -239,23 +183,31 @@ object QueriesGraph {
          |    AS nbr_jaccard
          |FROM cn JOIN dg dx ON dx.id = x JOIN dg dy ON dy.id = y
          |ORDER BY common DESC, x, y LIMIT 20""".stripMargin,
+      reads = Seq(coPurchaseEdges)),
 
-    // Mirrors d13: identical substrate CTEs, LP rounds unrolled with
-    // the same count-desc/label-asc argmax.
-    "d13_labelprop" ->
-      s"""WITH $coPurchaseCtes,
-         |sym AS MATERIALIZED (SELECT a AS u, b AS v FROM e0
-         |      UNION ALL SELECT b, a FROM e0),
-         |l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM sym),
-         |${unrolledLp(LpRounds)}
-         |SELECT CAST(id AS BIGINT) AS custkey, CAST(lbl AS BIGINT)
-         |  AS community FROM l$LpRounds""".stripMargin,
-
-    // d26: the same substrate, then a depth-bounded recursive closure.
-    // UNION (not ALL) dedups (id, dist) pairs per step, so the working
-    // set is ≤ nodes·rounds — no path explosion — and min(dist) over
-    // the closure is the BFS distance.
-    "d26_bfs_hops" ->
+    // Multi-source BFS hop distances over the SAME co-purchase
+    // substrate (one edge table, many algorithms): "every customer
+    // within 4 hops of the seed set, with the hop count" — the
+    // influence-radius / blast-radius query a fraud or recommendation
+    // platform runs from a suspect set. Seeds are the 5 smallest node
+    // ids (deterministic); each of the 4 rounds moves O(frontier·deg)
+    // KEYS through one equi-join + one anti-join (never payloads,
+    // never all-pairs), with per-round lineage cuts — BFS is the d7/
+    // d9/d11 iterative discipline applied to reachability. The oracle
+    // is a depth-bounded recursive closure with min(dist): first
+    // discovery in the engine IS min distance in the closure.
+    Query("d26_bfs_hops", (s, d) => {
+      val edges = coPurchaseEdges(s, d)
+      val sources = edges
+        .select(explode(array(col("a"), col("b"))).as("id")).distinct()
+        .orderBy(col("id")).limit(BfsSources)
+      GraphOps.bfsDistances(edges, sources, BfsRounds)
+        .select(col("id").cast("long").as("custkey"), col("dist"))
+    },
+      // d26: the same substrate, then a depth-bounded recursive closure.
+      // UNION (not ALL) dedups (id, dist) pairs per step, so the working
+      // set is ≤ nodes·rounds — no path explosion — and min(dist) over
+      // the closure is the BFS distance.
       s"""WITH RECURSIVE $coPurchaseCtes,
          |sym AS MATERIALIZED (SELECT a AS u, b AS v FROM e0
          |      UNION ALL SELECT b, a FROM e0),
@@ -271,7 +223,38 @@ object QueriesGraph {
          |SELECT CAST(id AS BIGINT) AS custkey,
          |  CAST(min(dist) AS BIGINT) AS dist
          |FROM bfs GROUP BY id""".stripMargin
-  )
+  ,
+      reads = Seq(coPurchaseEdges)))
+
+  /** d26's horizon and seed count (mirrored in the oracle). */
+  private[graft] val BfsRounds = 4
+  private[graft] val BfsSources = 5
+
+  private[graft] val LpRounds = 2
+
+  /** d19's per-hub incident-arc cap for 2-path generation. */
+  private[graft] val MaxAdjPerHub = 16
+
+  /** d11/d13's shared substrate: the customer co-purchase edge list
+    * (customers sharing ≥ [[MinSharedParts]] parts, per-part member cap
+    * [[MaxCustomersPerPart]]), PERSISTED — the docsWithTokens house
+    * pattern: building the graph (join + capped pair expansion +
+    * weight agg) dominates both consumers (~3 s of each query's ~3.2 s
+    * at sf0.1), and CacheManager plan equality lets whichever of
+    * d11/d13 runs second read the materialized edges instead of
+    * re-deriving them. At 100 TB this is "build the edge table once →
+    * checkpoint → run every graph algorithm against it".
+    */
+  private lazy val coPurchaseEdges = SharedFrame.persisted(
+      "graph.copurchase_edges") { (s, d) =>
+    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
+    val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+    val cp = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .select(col("l_partkey"), col("o_custkey"))
+    GraphOps.coOccurrenceWeights(cp, "l_partkey", "o_custkey",
+        MaxCustomersPerPart)
+      .filter(col("w") >= MinSharedParts).select(col("a"), col("b"))
+  }
 
   /** The d11/d13 shared substrate CTEs (mirror [[coPurchaseEdges]]):
     * distinct co-purchase pairs → per-part cap → pair weights → edges.

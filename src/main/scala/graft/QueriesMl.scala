@@ -520,7 +520,7 @@ object QueriesMl {
       |    CAST(floor(l_extendedprice / 10) AS BIGINT)) AS BIGINT) AS qy
       |FROM lineitem GROUP BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // Grouped closed-form OLS — y ≈ b0 + b1·quantity + b2·discount per
     // returnflag, fit ENTIRELY in the plan: one exact-moment pass
     // (map-side combine, ten longs per group) and a Cramer solve in
@@ -529,7 +529,7 @@ object QueriesMl {
     // group over a 100 TB fact table as cheaply as a groupBy count.
     // Coefficients/R² round 6dp at output only; everything upstream is
     // exact integers, so both engines solve from bit-identical doubles.
-    "ml1_ols" -> ((s, d) => {
+    Query("ml1_ols", (s, d) => {
       val f = solveSql("0.0")
       moments(quantized(s, d)).selectExpr(
         "l_returnflag", "n",
@@ -537,7 +537,14 @@ object QueriesMl {
         s"round(${f("b1")}, 6) AS beta1",
         s"round(${f("b2")}, 6) AS beta2",
         s"round(${r2Sql(f)}, 6) AS r2")
-    }),
+    },
+      s"""WITH $momentsCte
+         |SELECT l_returnflag, n,
+         |  round(${olsSql("b0")}, 6) AS beta0,
+         |  round(${olsSql("b1")}, 6) AS beta1,
+         |  round(${olsSql("b2")}, 6) AS beta2,
+         |  round(${r2Sql(olsSql)}, 6) AS r2
+         |FROM m""".stripMargin),
 
     // Ridge regularization path over the SAME sufficient statistics:
     // the moment pass happens ONCE and each λ is just another constant
@@ -545,7 +552,7 @@ object QueriesMl {
     // near-free in-engine (a λ grid costs zero extra data passes,
     // where an iterative solver would rescan per λ). λ scales with n
     // (penalty on the mean Gram), never the intercept.
-    "ml2_ridge_path" -> ((s, d) => {
+    Query("ml2_ridge_path", (s, d) => {
       val m = moments(quantized(s, d))
       RidgeLams.map { lam =>
         val f = solveSql(lam)
@@ -555,7 +562,9 @@ object QueriesMl {
           s"round(${f("b1")}, 6) AS beta1",
           s"round(${f("b2")}, 6) AS beta2")
       }.reduce(_ unionAll _)
-    }),
+    },
+      s"""WITH $momentsCte
+         |$ridgeArms""".stripMargin),
 
     // K-FOLD CROSS-VALIDATED ridge (model SELECTION in-engine, not
     // just fitting): 5 orderkey-hash folds, leave-one-fold-out train
@@ -565,10 +574,12 @@ object QueriesMl {
     // (bit-deterministic; no double aggregation). ONE data pass fits
     // and scores the whole λ grid — see [[ml3Sql]]. Both engines run
     // the identical SQL text.
-    "ml3_cv_ridge" -> ((s, d) => {
+    Query("ml3_cv_ridge", (s, d) => {
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       s.sql(ml3Sql)
-    }),
+    },
+      // the SAME text Spark executes — the strongest oracle form
+      ml3Sql),
 
     // GRADIENT-BOOSTED STUMPS (three rounds, lr 0.5, squared loss):
     // greedy split search over 59 thresholds per round, leaf values,
@@ -577,7 +588,7 @@ object QueriesMl {
     // cross-cell sum is an exact conditional Long per ensemble region;
     // doubles live only in fixed-order constant-size expressions, so
     // the model is bit-identical on both engines (see [[ml4Parts]]).
-    "ml4_boost_stumps" -> ((s, d) => {
+    Query("ml4_boost_stumps", (s, d) => {
       val p = ml4Parts
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       // the grid is ≤ 561 rows: one cached partition, so every staged
@@ -626,8 +637,18 @@ object QueriesMl {
         "ml4_b3")
       s.sql(s"WITH best3 AS (SELECT * FROM ml4_b3), " +
         s"fin AS (${p("fin")}), ${p("final")}")
-    })
-  )
+    },
+      // identical part texts chained as one CTE tree; ml4_cells bound
+      // over raw lineitem where Spark binds the cached cells frame
+      {
+      val p = ml4Parts
+      s"WITH ml4_cells AS ($ml4CellsSql),\n" +
+        s"thr AS (${p("thr")}),\ng AS (${p("g")}),\n" +
+        s"cand1 AS (${p("cand1")}),\nbest1 AS (${p("best1")}),\n" +
+        s"cand2 AS (${p("cand2")}),\nbest2 AS (${p("best2")}),\n" +
+        s"cand3 AS (${p("cand3")}),\nbest3 AS (${p("best3")}),\n" +
+        s"fin AS (${p("fin")}),\n${p("final")}"
+    }))
 
   /** One moments CTE shared by both oracles — the Spark-side agg
     * mirrored column-for-column, then the IDENTICAL solve text.
@@ -646,39 +667,13 @@ object QueriesMl {
       |  FROM lineitem)
       |GROUP BY l_returnflag)""".stripMargin
 
-  def oracle: Map[String, String] = {
-    val f0 = solveSql("0.0")
-    val ridgeArms = RidgeLams.map { lam =>
-      val f = solveSql(lam)
-      s"""SELECT l_returnflag, CAST($lam AS DOUBLE) AS lambda,
-         |  round(${f("b0")}, 6) AS beta0,
-         |  round(${f("b1")}, 6) AS beta1,
-         |  round(${f("b2")}, 6) AS beta2 FROM m""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    Map(
-      "ml1_ols" ->
-        s"""WITH $momentsCte
-           |SELECT l_returnflag, n,
-           |  round(${f0("b0")}, 6) AS beta0,
-           |  round(${f0("b1")}, 6) AS beta1,
-           |  round(${f0("b2")}, 6) AS beta2,
-           |  round(${r2Sql(f0)}, 6) AS r2
-           |FROM m""".stripMargin,
-      "ml2_ridge_path" ->
-        s"""WITH $momentsCte
-           |$ridgeArms""".stripMargin,
-      // the SAME text Spark executes — the strongest oracle form
-      "ml3_cv_ridge" -> ml3Sql,
-      // identical part texts chained as one CTE tree; ml4_cells bound
-      // over raw lineitem where Spark binds the cached cells frame
-      "ml4_boost_stumps" -> {
-        val p = ml4Parts
-        s"WITH ml4_cells AS ($ml4CellsSql),\n" +
-          s"thr AS (${p("thr")}),\ng AS (${p("g")}),\n" +
-          s"cand1 AS (${p("cand1")}),\nbest1 AS (${p("best1")}),\n" +
-          s"cand2 AS (${p("cand2")}),\nbest2 AS (${p("best2")}),\n" +
-          s"cand3 AS (${p("cand3")}),\nbest3 AS (${p("best3")}),\n" +
-          s"fin AS (${p("fin")}),\n${p("final")}"
-      })
-  }
+  private lazy val olsSql = solveSql("0.0")
+  private lazy val ridgeArms = RidgeLams.map { lam =>
+    val f = solveSql(lam)
+    s"""SELECT l_returnflag, CAST($lam AS DOUBLE) AS lambda,
+       |  round(${f("b0")}, 6) AS beta0,
+       |  round(${f("b1")}, 6) AS beta1,
+       |  round(${f("b2")}, 6) AS beta2 FROM m""".stripMargin
+  }.mkString("\nUNION ALL\n")
+
 }

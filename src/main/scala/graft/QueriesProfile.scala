@@ -35,21 +35,22 @@ object QueriesProfile {
     * "old" = orders placed up to the cutoff, "new" = all orders. */
   private[graft] val DriftCut = "1998-06-30 00:00:00"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // Per-column completeness / cardinality / range profile of orders:
     // ONE scan, ONE aggregate, one native KMV buffer per column — no
     // per-column jobs, no c-fold count-distinct Expand of the scan;
     // enum-sized columns report EXACT distinct counts (KMV under k).
-    "dq1_profile" -> ((s, d) => {
+    Query("dq1_profile", (s, d) => {
       ProfileOps.profile(Tables.orders(s, d), orderSpecs)
-    }),
+    },
+      profileArms("TRUE")),
 
     // Profile DRIFT between two snapshots: the per-column stats of the
     // as-of-cutoff table joined to the current table's, with the
     // cardinality ratio — the "did this batch change the shape of the
     // data" gate an ML pipeline runs before retraining. Two single-pass
     // profiles (one scan each), one 5-row join.
-    "dq3_profile_drift" -> ((s, d) => {
+    Query("dq3_profile_drift", (s, d) => {
       val orders = Tables.orders(s, d)
       val old = ProfileOps.profile(
           orders.filter(col("o_orderdate") <=
@@ -63,28 +64,56 @@ object QueriesProfile {
         .select(col("col_name"), col("n_old"), col("n_new"),
           col("est_old"), col("est_new"),
           round(col("est_new") / col("est_old"), 6).as("est_ratio"))
+    },
+      {
+      val oldWhere = s"o_orderdate <= TIMESTAMP '$DriftCut'"
+      s"""WITH po AS (${profileArms(oldWhere)}),
+         |pn AS (${profileArms("TRUE")})
+         |SELECT po.col_name, po.n AS n_old, pn.n AS n_new,
+         |  po.distinct_est AS est_old, pn.distinct_est AS est_new,
+         |  round(pn.distinct_est / po.distinct_est, 6) AS est_ratio
+         |FROM po JOIN pn ON po.col_name = pn.col_name""".stripMargin
     }),
 
     // Referential integrity: orphaned foreign keys per fact→dim edge
     // (anti-join counts next to fact row counts; a healthy snapshot
     // reports zero orphans — and these tables do).
-    "dq2_ref_integrity" -> ((s, d) => {
+    Query("dq2_ref_integrity", (s, d) => {
       ProfileOps.refIntegrity(Seq(
         ("lineitem->orders", Tables.lineitem(s, d), col("l_orderkey"),
           Tables.orders(s, d), col("o_orderkey")),
         ("orders->customer", Tables.orders(s, d), col("o_custkey"),
           Tables.customer(s, d), col("c_custkey"))))
-    }),
+    },
+      """SELECT 'lineitem->orders' AS fk,
+        |  (SELECT count(*) FROM lineitem l
+        |   LEFT JOIN (SELECT DISTINCT o_orderkey AS k FROM orders) d
+        |     ON l.l_orderkey = d.k
+        |   WHERE d.k IS NULL) AS n_orphans,
+        |  (SELECT count(*) FROM lineitem) AS n_rows
+        |UNION ALL
+        |SELECT 'orders->customer',
+        |  (SELECT count(*) FROM orders o
+        |   LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) d
+        |     ON o.o_custkey = d.k
+        |   WHERE d.k IS NULL),
+        |  (SELECT count(*) FROM orders)""".stripMargin),
 
     // Equi-width 20-bucket histogram of order totals in EXACT cents:
     // the value-distribution half of profiling (dq1 covers nulls /
     // cardinality / range). Integer bucket math on fixed-point values
     // — floor-div on non-negative operands — so bucket boundaries are
     // bit-identical across engines; raw-double bucketing would not be.
-    "dq4_histogram" -> ((s, d) => {
+    Query("dq4_histogram", (s, d) => {
       ProfileOps.histogramFx(Tables.orders(s, d),
         floor(col("o_totalprice") * lit(100)), 20)
-    }),
+    },
+      """WITH x AS (SELECT CAST(floor(o_totalprice * 100) AS BIGINT)
+        |             AS fx FROM orders),
+        |b AS (SELECT min(fx) AS mn, max(fx) AS mx FROM x)
+        |SELECT ((fx - mn) * 20) // (mx - mn + 1) AS bucket,
+        |  count(*) AS n, min(fx) AS min_fx, max(fx) AS max_fx
+        |FROM x, b GROUP BY 1""".stripMargin),
 
     // Hot-key diagnostics: the 20 heaviest event keys with their share
     // of all rows and a skew factor (count ÷ mean-per-key) — the
@@ -92,7 +121,7 @@ object QueriesProfile {
     // (skew_factor ≈ the right salt multiplier) or can rely on AQE.
     // One hash agg + TakeOrderedAndProject + a broadcast 1-row total;
     // integer counts, two rounded output divisions.
-    "dq5_key_skew" -> ((s, d) => {
+    Query("dq5_key_skew", (s, d) => {
       val ev = Tables.events(s, d)
       val cnt = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
       val tot = ev.agg(count(lit(1)).as("tot"),
@@ -105,7 +134,16 @@ object QueriesProfile {
             .as("share"),
           round((col("n") * col("n_keys")).cast("double") /
             col("tot").cast("double"), 6).as("skew_factor"))
-    }),
+    },
+      """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
+        |t AS (SELECT count(*) AS tot, count(DISTINCT user_id) AS n_keys
+        |      FROM events),
+        |k AS (SELECT user_id, n FROM c ORDER BY n DESC, user_id LIMIT 20)
+        |SELECT user_id, n,
+        |  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share,
+        |  round(CAST(n * n_keys AS DOUBLE) / CAST(tot AS DOUBLE), 6)
+        |    AS skew_factor
+        |FROM k, t""".stripMargin),
 
     // Pearson correlation matrix over lineitem's numeric columns from
     // EXACT integer moments: quantize each column to integers
@@ -123,7 +161,7 @@ object QueriesProfile {
     // Correlation is scale-invariant up to the quantization grain, so
     // the coarser unit costs ~3 decimal digits of r, identically on
     // both engines (the oracle quantizes the same way).
-    "dq6_correlation" -> ((s, d) => {
+    Query("dq6_correlation", (s, d) => {
       val li = Tables.lineitem(s, d).select(
         floor(col("l_quantity")).cast("long").as("x1"),
         floor(col("l_extendedprice") / 10).cast("long").as("x2"),
@@ -154,6 +192,36 @@ object QueriesProfile {
           .as("r_qty_disc"),
         r(col("s2"), col("s3"), col("q2"), col("q3"), col("p23"))
           .as("r_price_disc"))
+    },
+      // identical moment quantization and double-combination shape; every
+      // moment CAST from HUGEINT to DOUBLE before any arithmetic
+      {
+      def r(sx: String, sy: String, qx: String, qy: String,
+          pxy: String) =
+        s"""round((CAST(n AS DOUBLE) * CAST($pxy AS DOUBLE) -
+           |    CAST($sx AS DOUBLE) * CAST($sy AS DOUBLE)) /
+           |  sqrt((CAST(n AS DOUBLE) * CAST($qx AS DOUBLE) -
+           |      CAST($sx AS DOUBLE) * CAST($sx AS DOUBLE)) *
+           |    (CAST(n AS DOUBLE) * CAST($qy AS DOUBLE) -
+           |      CAST($sy AS DOUBLE) * CAST($sy AS DOUBLE))), 6)"""
+          .stripMargin
+      s"""WITH x AS (SELECT
+         |    CAST(floor(l_quantity) AS BIGINT) AS x1,
+         |    CAST(floor(l_extendedprice / 10) AS BIGINT) AS x2,
+         |    CAST(floor(l_discount * 100) AS BIGINT) AS x3
+         |  FROM lineitem),
+         |m AS (SELECT count(*) AS n,
+         |    sum(x1) AS s1, sum(x2) AS s2, sum(x3) AS s3,
+         |    sum(x1 * x1) AS q1, sum(x2 * x2) AS q2,
+         |    sum(x3 * x3) AS q3,
+         |    sum(x1 * x2) AS p12, sum(x1 * x3) AS p13,
+         |    sum(x2 * x3) AS p23
+         |  FROM x)
+         |SELECT CAST(n AS BIGINT) AS n,
+         |  ${r("s1", "s2", "q1", "q2", "p12")} AS r_qty_price,
+         |  ${r("s1", "s3", "q1", "q3", "p13")} AS r_qty_disc,
+         |  ${r("s2", "s3", "q2", "q3", "p23")} AS r_price_disc
+         |FROM m""".stripMargin
     }),
 
     // Population Stability Index — the distribution-drift monitor that
@@ -190,7 +258,7 @@ object QueriesProfile {
     // commutative/associative (shuffle-order-free), overflow-free
     // where a sum of 2^60-scale hashes would wrap, and any single
     // changed row flips it.
-    "dq13_replica_reconcile" -> ((s, d) => {
+    Query("dq13_replica_reconcile", (s, d) => {
       val src = Tables.orders(s, d).select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("part"),
@@ -224,6 +292,47 @@ object QueriesProfile {
           (col("x_src") <=> col("x_rep")).as("checksum_match"),
           coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
           coalesce(col("n_drifted"), lit(0L)).as("n_drifted"))
+    },
+      // dq13: identical seeded faults, identical 60-bit row hash, and
+      // bit_xor is the same order-free fold on both engines.
+      {
+      val hK = h60("concat('rk:', CAST(o_orderkey AS VARCHAR))")
+      val hV = h60("concat('rv:', CAST(o_orderkey AS VARCHAR))")
+      s"""WITH src AS (SELECT o_orderkey AS k,
+         |    o_orderpriority AS part,
+         |    CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+         |  FROM orders),
+         |rep AS (SELECT k, part,
+         |    cents + (CASE WHEN $hV % 300 = 0 THEN 1 ELSE 0 END)
+         |      AS cents
+         |  FROM (SELECT o_orderkey AS k, o_orderpriority AS part,
+         |      CAST(floor(o_totalprice * 100) AS BIGINT) AS cents,
+         |      o_orderkey
+         |    FROM orders)
+         |  WHERE $hK % 200 != 0),
+         |fs AS (SELECT part, count(*) AS n_src,
+         |    bit_xor(${h60(
+              "concat(CAST(k AS VARCHAR), ':', CAST(cents AS VARCHAR))")})
+         |      AS x_src
+         |  FROM src GROUP BY 1),
+         |fr AS (SELECT part, count(*) AS n_rep,
+         |    bit_xor(${h60(
+              "concat(CAST(k AS VARCHAR), ':', CAST(cents AS VARCHAR))")})
+         |      AS x_rep
+         |  FROM rep GROUP BY 1),
+         |dr AS (SELECT part, count(*) AS n_dropped FROM src
+         |  WHERE k NOT IN (SELECT k FROM rep) GROUP BY 1),
+         |df AS (SELECT s.part, count(*) AS n_drifted
+         |  FROM src s JOIN rep r ON s.k = r.k
+         |  WHERE s.cents != r.cents GROUP BY 1)
+         |SELECT fs.part, fs.n_src,
+         |  coalesce(fr.n_rep, 0) AS n_rep,
+         |  coalesce(fs.x_src = fr.x_rep, FALSE) AS checksum_match,
+         |  coalesce(dr.n_dropped, 0) AS n_dropped,
+         |  coalesce(df.n_drifted, 0) AS n_drifted
+         |FROM fs LEFT JOIN fr ON fs.part = fr.part
+         |LEFT JOIN dr ON fs.part = dr.part
+         |LEFT JOIN df ON fs.part = df.part""".stripMargin
     }),
 
     // Robust z-score outliers (MAD / modified z, Iglewicz–Hoaglin
@@ -237,7 +346,7 @@ object QueriesProfile {
     // ulp-flip. Three skew-free passes, each a hash agg off
     // RelationalOps.valueHistogram (the g5 house pattern applied
     // twice), medians broadcast back.
-    "dq14_mad_outliers" -> ((s, d) => {
+    Query("dq14_mad_outliers", (s, d) => {
       import graft.operators.RelationalOps
       val li = Tables.lineitem(s, d).select(col("l_returnflag"),
         col("l_quantity").cast("long").as("q"))
@@ -265,9 +374,43 @@ object QueriesProfile {
           round(max(col("w")).cast("double") / 4, 2).as("mad"),
           sum(when(col("t") * 13490 > col("w") * 35000, 1L)
             .otherwise(0L)).as("n_outliers"))
-    }),
+    },
+      // dq8: same one-scan conditional counts, 0-9 spine via range(10),
+      // Laplace-smoothed shares, identical ln-ratio term
+      // dq12: same unrounded interpolated quartiles and fences.
+      // dq14: medians are value-determined, so the oracle's rank
+      // formulation (with per-rank multiplicity, k1 == k2 on odd counts
+      // must contribute the value twice) picks the same s/w integers;
+      // the outlier test is the identical exact-Long comparison.
+      """WITH li AS (SELECT l_returnflag AS g,
+        |    CAST(l_quantity AS BIGINT) AS q FROM lineitem),
+        |r1 AS (SELECT g, q,
+        |    row_number() OVER (PARTITION BY g ORDER BY q) AS rn,
+        |    count(*) OVER (PARTITION BY g) AS cnt FROM li),
+        |med AS (SELECT g,
+        |    CAST(sum(CASE WHEN rn = (cnt + 1) // 2 THEN q ELSE 0 END)
+        |      + sum(CASE WHEN rn = (cnt + 2) // 2 THEN q ELSE 0 END)
+        |      AS BIGINT) AS s
+        |  FROM r1 GROUP BY g),
+        |tt AS (SELECT li.g, li.q, abs(li.q * 2 - med.s) AS t, med.s
+        |  FROM li JOIN med ON li.g = med.g),
+        |r2 AS (SELECT g, t,
+        |    row_number() OVER (PARTITION BY g ORDER BY t) AS rn,
+        |    count(*) OVER (PARTITION BY g) AS cnt FROM tt),
+        |mad AS (SELECT g,
+        |    CAST(sum(CASE WHEN rn = (cnt + 1) // 2 THEN t ELSE 0 END)
+        |      + sum(CASE WHEN rn = (cnt + 2) // 2 THEN t ELSE 0 END)
+        |      AS BIGINT) AS w
+        |  FROM r2 GROUP BY g)
+        |SELECT tt.g AS l_returnflag, count(*) AS n_rows,
+        |  round(CAST(max(tt.s) AS DOUBLE) / 2, 1) AS median_q,
+        |  round(CAST(max(mad.w) AS DOUBLE) / 4, 2) AS mad,
+        |  CAST(sum(CASE WHEN tt.t * 13490 > mad.w * 35000
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+        |FROM tt JOIN mad ON tt.g = mad.g
+        |GROUP BY 1""".stripMargin),
 
-    "dq12_outlier_iqr" -> ((s, d) => {
+    Query("dq12_outlier_iqr", (s, d) => {
       val h = graft.operators.RelationalOps.valueHistogram(
         Tables.lineitem(s, d).select(col("l_returnflag"),
           col("l_quantity")),
@@ -302,7 +445,42 @@ object QueriesProfile {
             .as("n_outliers"),
           round(max(col("q1")), 6).as("q1"),
           round(max(col("q3")), 6).as("q3"))
-    }),
+    },
+      """WITH r AS (SELECT l_returnflag, l_quantity,
+        |    CAST(row_number() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_quantity, l_orderkey, l_linenumber) - 1
+        |      AS BIGINT) AS rn
+        |  FROM lineitem),
+        |nn AS (SELECT l_returnflag, count(*) AS n FROM r GROUP BY 1),
+        |pr AS (SELECT l_returnflag, p,
+        |    CAST(n - 1 AS DOUBLE) * p AS pos,
+        |    CAST(floor(CAST(n - 1 AS DOUBLE) * p) AS BIGINT) AS lo,
+        |    CAST(ceil(CAST(n - 1 AS DOUBLE) * p) AS BIGINT) AS hi
+        |  FROM nn, (SELECT CAST(unnest([0.25, 0.75]) AS DOUBLE)
+        |    AS p) ps),
+        |q AS (SELECT pr.l_returnflag, pr.p,
+        |    vlo.l_quantity + (pr.pos - CAST(pr.lo AS DOUBLE))
+        |      * (vhi.l_quantity - vlo.l_quantity) AS q
+        |  FROM pr
+        |  JOIN r vlo ON pr.l_returnflag = vlo.l_returnflag
+        |    AND vlo.rn = pr.lo
+        |  JOIN r vhi ON pr.l_returnflag = vhi.l_returnflag
+        |    AND vhi.rn = pr.hi),
+        |qq AS (SELECT l_returnflag,
+        |    max(CASE WHEN p = 0.25 THEN q END) AS q1,
+        |    max(CASE WHEN p = 0.75 THEN q END) AS q3
+        |  FROM q GROUP BY 1),
+        |f AS (SELECT l_returnflag, q1, q3,
+        |    q1 - 1.5 * (q3 - q1) AS lo_b,
+        |    q3 + 1.5 * (q3 - q1) AS hi_b
+        |  FROM qq)
+        |SELECT l.l_returnflag, count(*) AS n_rows,
+        |  CAST(sum(CASE WHEN l.l_quantity < f.lo_b
+        |    OR l.l_quantity > f.hi_b THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_outliers,
+        |  round(max(f.q1), 6) AS q1, round(max(f.q3), 6) AS q3
+        |FROM lineitem l JOIN f ON l.l_returnflag = f.l_returnflag
+        |GROUP BY 1""".stripMargin),
 
     // Functional-dependency audit — the "is this column determined by
     // that key" profiling question behind normalization checks and
@@ -313,7 +491,7 @@ object QueriesProfile {
     // + O(keys) summaries. At 100 TB each FD costs one distinct
     // shuffle of the PAIR table (already deduped map-side), never a
     // self-join.
-    "dq10_fd_check" -> ((s, d) => {
+    Query("dq10_fd_check", (s, d) => {
       // One aggregation chain per table (VERDICT r16 #6): the previous
       // shape paid distinct() + groupBy(k) — two full exchanges of the
       // pair table per FD; countDistinct(v) plans the same answer as
@@ -334,7 +512,35 @@ object QueriesProfile {
           "user_id", "event_type"))
         .union(fd(Tables.lineitem(s, d), "order_to_supplier",
           "l_orderkey", "l_suppkey"))
-    }),
+    },
+      // dq10: same distinct-pair collapse per FD arm.
+      """WITH f1 AS (SELECT count(*) AS n_keys,
+        |    CAST(sum(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_violating,
+        |    CAST(max(nv) AS BIGINT) AS max_rhs
+        |  FROM (SELECT k, count(*) AS nv FROM (
+        |    SELECT DISTINCT n_nationkey AS k, n_regionkey AS v
+        |    FROM nation) GROUP BY 1)),
+        |f2 AS (SELECT count(*) AS n_keys,
+        |    CAST(sum(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_violating,
+        |    CAST(max(nv) AS BIGINT) AS max_rhs
+        |  FROM (SELECT k, count(*) AS nv FROM (
+        |    SELECT DISTINCT user_id AS k, event_type AS v
+        |    FROM events) GROUP BY 1)),
+        |f3 AS (SELECT count(*) AS n_keys,
+        |    CAST(sum(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_violating,
+        |    CAST(max(nv) AS BIGINT) AS max_rhs
+        |  FROM (SELECT k, count(*) AS nv FROM (
+        |    SELECT DISTINCT l_orderkey AS k, l_suppkey AS v
+        |    FROM lineitem) GROUP BY 1))
+        |SELECT 'nation_to_region' AS fd, n_keys, n_violating, max_rhs
+        |  FROM f1
+        |UNION ALL SELECT 'user_to_event_type', n_keys, n_violating,
+        |  max_rhs FROM f2
+        |UNION ALL SELECT 'order_to_supplier', n_keys, n_violating,
+        |  max_rhs FROM f3""".stripMargin),
 
     // Sequence-gap detection — the offset/audit-log integrity check
     // ("which ids went missing"): the event_id stream is
@@ -354,7 +560,7 @@ object QueriesProfile {
     // non-empty-bucket (seam pass); empty buckets collapse naturally
     // because summaries exist only for non-empty buckets.
     // PlanAuditSpec pins the events-scan window as partitioned.
-    "dq11_sequence_gaps" -> ((s, d) => {
+    Query("dq11_sequence_gaps", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val B = 65536L
       val ids = Tables.events(s, d).select(col("event_id")).distinct()
@@ -379,7 +585,17 @@ object QueriesProfile {
       inner.unionByName(seams)
         .select(col("gap_start"), col("gap_end"),
           (col("gap_end") - col("gap_start") + 1).as("n_missing"))
-    }),
+    },
+      // dq11: same seeded thinning + lag ranges.
+      """WITH ids AS (SELECT DISTINCT event_id FROM events
+        |  WHERE CAST(concat('0x', substr(md5(concat('gap:',
+        |    CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT) % 97 <> 0),
+        |l AS (SELECT event_id,
+        |    lag(event_id) OVER (ORDER BY event_id) AS prev FROM ids)
+        |SELECT prev + 1 AS gap_start, event_id - 1 AS gap_end,
+        |  event_id - prev - 1 AS n_missing
+        |FROM l WHERE prev IS NOT NULL AND event_id - prev > 1"""
+        .stripMargin),
 
     // Expectation-suite validation (the declarative data-contract
     // gate): each rule is a row predicate checked in a SINGLE
@@ -391,7 +607,7 @@ object QueriesProfile {
     // when(cond, 0).otherwise(1) form routes NULL-valued predicates to
     // the violation branch on both engines. At 100 TB the violation
     // report stays O(rules) rows off O(1) extra memory per scan.
-    "dq9_expectations" -> ((s, d) => {
+    Query("dq9_expectations", (s, d) => {
       def viol(cond: Column): Column =
         sum(when(cond, 0L).otherwise(1L))
       val li = Tables.lineitem(s, d)
@@ -422,9 +638,40 @@ object QueriesProfile {
         .union(rule(liAgg, "li_price_positive", "n_li", "v_price"))
         .union(rule(ordAgg, "o_totalprice_positive", "n_ord", "v_total"))
         .union(rule(jAgg, "ship_after_order", "n_j", "v_dates"))
-    }),
+    },
+      // dq9: same null-to-violation CASE routing; each arm reads its
+      // 1-row aggregate CTE.
+      """WITH la AS (SELECT count(*) AS n,
+        |    CAST(sum(CASE WHEN l_quantity >= 1 AND l_quantity <= 50
+        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_qty,
+        |    CAST(sum(CASE WHEN l_discount >= 0 AND l_discount <= 0.5
+        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_disc,
+        |    CAST(sum(CASE WHEN l_extendedprice > 0
+        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_price
+        |  FROM lineitem),
+        |oa AS (SELECT count(*) AS n,
+        |    CAST(sum(CASE WHEN o_totalprice > 0
+        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_total
+        |  FROM orders),
+        |ja AS (SELECT count(*) AS n,
+        |    CAST(sum(CASE WHEN l_shipdate::DATE >= o_orderdate::DATE
+        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_dates
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+        |SELECT 'li_quantity_in_1_50' AS rule, n AS n_checked,
+        |  v_qty AS n_violations,
+        |  round(CAST(v_qty AS DOUBLE) / CAST(n AS DOUBLE), 6)
+        |    AS violation_rate FROM la
+        |UNION ALL SELECT 'li_discount_in_0_50pct', n, v_disc,
+        |  round(CAST(v_disc AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM la
+        |UNION ALL SELECT 'li_price_positive', n, v_price,
+        |  round(CAST(v_price AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM la
+        |UNION ALL SELECT 'o_totalprice_positive', n, v_total,
+        |  round(CAST(v_total AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM oa
+        |UNION ALL SELECT 'ship_after_order', n, v_dates,
+        |  round(CAST(v_dates AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM ja"""
+        .stripMargin),
 
-    "dq8_psi" -> ((s, d) => {
+    Query("dq8_psi", (s, d) => {
       val cut = lit(QueriesRelational.CdcCutOld).cast("timestamp")
       val b = least(lit(9L),
         floor(col("o_totalprice") / 60000.0).cast("long"))
@@ -447,6 +694,29 @@ object QueriesProfile {
       g.crossJoin(broadcast(tot))
         .select(col("bucket"), col("n_old"), col("n_new"),
           round((pn - po) * log(pn / po), 6).as("psi_term"))
+    },
+      {
+      val cut = s"TIMESTAMP '${QueriesRelational.CdcCutOld}'"
+      s"""WITH c AS (SELECT least(9, CAST(floor(o_totalprice / 60000.0)
+         |      AS BIGINT)) AS bucket,
+         |    o_orderdate < $cut AS is_old
+         |  FROM orders),
+         |k AS (SELECT bucket,
+         |    sum(CASE WHEN is_old THEN 1 ELSE 0 END) AS n_old,
+         |    sum(CASE WHEN is_old THEN 0 ELSE 1 END) AS n_new
+         |  FROM c GROUP BY 1),
+         |g AS (SELECT sp.bucket, coalesce(k.n_old, 0) AS n_old,
+         |    coalesce(k.n_new, 0) AS n_new
+         |  FROM range(10) sp(bucket) LEFT JOIN k USING (bucket)),
+         |t AS (SELECT sum(n_old) AS t_old, sum(n_new) AS t_new FROM g)
+         |SELECT bucket, CAST(n_old AS BIGINT) AS n_old,
+         |  CAST(n_new AS BIGINT) AS n_new,
+         |  round((CAST(n_new + 1 AS DOUBLE) / CAST(t_new + 10 AS DOUBLE)
+         |    - CAST(n_old + 1 AS DOUBLE) / CAST(t_old + 10 AS DOUBLE))
+         |    * ln((CAST(n_new + 1 AS DOUBLE) / CAST(t_new + 10 AS DOUBLE))
+         |      / (CAST(n_old + 1 AS DOUBLE)
+         |        / CAST(t_old + 10 AS DOUBLE))), 6) AS psi_term
+         |FROM g, t""".stripMargin
     }),
 
     // Benford first-digit audit: the leading-digit distribution of
@@ -460,7 +730,7 @@ object QueriesProfile {
     // with map-side partials + a broadcast 1-row total — nothing here
     // changes at 100 TB. (This data is uniform-priced, so the deltas
     // are LARGE — which is the point: the audit flags it.)
-    "dq7_benford" -> ((s, d) => {
+    Query("dq7_benford", (s, d) => {
       val cents = floor(col("o_totalprice") * 100).cast("long")
       val dig = Tables.orders(s, d)
         .filter(col("o_totalprice") > 0)
@@ -473,8 +743,20 @@ object QueriesProfile {
             .as("share"),
           round(log(lit(1.0) + lit(1.0) / col("digit").cast("double")) /
             log(lit(10.0)), 6).as("benford"))
-    })
-  )
+    },
+      // dq7: digit from the string form of exact integer cents; the
+      // Benford expectation as the same ln-ratio expression
+      """WITH g AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice
+        |      * 100) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit,
+        |    count(*) AS n
+        |  FROM orders WHERE o_totalprice > 0 GROUP BY 1),
+        |t AS (SELECT sum(n) AS tot FROM g)
+        |SELECT digit, n,
+        |  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share,
+        |  round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)
+        |    AS benford
+        |FROM g, t""".stripMargin
+  ))
 
   /** Portable seeded 60-bit hash (mirrors TextOps.md5Prefix60). */
   private def h60(arg: String): String =
@@ -524,301 +806,4 @@ object QueriesProfile {
     profileArm("o_orderpriority", "o_orderpriority", None, where)
   ).mkString("\nUNION ALL\n")
 
-  def oracle: Map[String, String] = Map(
-    "dq1_profile" -> profileArms("TRUE"),
-
-    "dq4_histogram" ->
-      """WITH x AS (SELECT CAST(floor(o_totalprice * 100) AS BIGINT)
-        |             AS fx FROM orders),
-        |b AS (SELECT min(fx) AS mn, max(fx) AS mx FROM x)
-        |SELECT ((fx - mn) * 20) // (mx - mn + 1) AS bucket,
-        |  count(*) AS n, min(fx) AS min_fx, max(fx) AS max_fx
-        |FROM x, b GROUP BY 1""".stripMargin,
-
-    "dq5_key_skew" ->
-      """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
-        |t AS (SELECT count(*) AS tot, count(DISTINCT user_id) AS n_keys
-        |      FROM events),
-        |k AS (SELECT user_id, n FROM c ORDER BY n DESC, user_id LIMIT 20)
-        |SELECT user_id, n,
-        |  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share,
-        |  round(CAST(n * n_keys AS DOUBLE) / CAST(tot AS DOUBLE), 6)
-        |    AS skew_factor
-        |FROM k, t""".stripMargin,
-
-    "dq3_profile_drift" -> {
-      val oldWhere = s"o_orderdate <= TIMESTAMP '$DriftCut'"
-      s"""WITH po AS (${profileArms(oldWhere)}),
-         |pn AS (${profileArms("TRUE")})
-         |SELECT po.col_name, po.n AS n_old, pn.n AS n_new,
-         |  po.distinct_est AS est_old, pn.distinct_est AS est_new,
-         |  round(pn.distinct_est / po.distinct_est, 6) AS est_ratio
-         |FROM po JOIN pn ON po.col_name = pn.col_name""".stripMargin
-    },
-
-    "dq2_ref_integrity" ->
-      """SELECT 'lineitem->orders' AS fk,
-        |  (SELECT count(*) FROM lineitem l
-        |   LEFT JOIN (SELECT DISTINCT o_orderkey AS k FROM orders) d
-        |     ON l.l_orderkey = d.k
-        |   WHERE d.k IS NULL) AS n_orphans,
-        |  (SELECT count(*) FROM lineitem) AS n_rows
-        |UNION ALL
-        |SELECT 'orders->customer',
-        |  (SELECT count(*) FROM orders o
-        |   LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) d
-        |     ON o.o_custkey = d.k
-        |   WHERE d.k IS NULL),
-        |  (SELECT count(*) FROM orders)""".stripMargin,
-    // identical moment quantization and double-combination shape; every
-    // moment CAST from HUGEINT to DOUBLE before any arithmetic
-    "dq6_correlation" -> {
-      def r(sx: String, sy: String, qx: String, qy: String,
-          pxy: String) =
-        s"""round((CAST(n AS DOUBLE) * CAST($pxy AS DOUBLE) -
-           |    CAST($sx AS DOUBLE) * CAST($sy AS DOUBLE)) /
-           |  sqrt((CAST(n AS DOUBLE) * CAST($qx AS DOUBLE) -
-           |      CAST($sx AS DOUBLE) * CAST($sx AS DOUBLE)) *
-           |    (CAST(n AS DOUBLE) * CAST($qy AS DOUBLE) -
-           |      CAST($sy AS DOUBLE) * CAST($sy AS DOUBLE))), 6)"""
-          .stripMargin
-      s"""WITH x AS (SELECT
-         |    CAST(floor(l_quantity) AS BIGINT) AS x1,
-         |    CAST(floor(l_extendedprice / 10) AS BIGINT) AS x2,
-         |    CAST(floor(l_discount * 100) AS BIGINT) AS x3
-         |  FROM lineitem),
-         |m AS (SELECT count(*) AS n,
-         |    sum(x1) AS s1, sum(x2) AS s2, sum(x3) AS s3,
-         |    sum(x1 * x1) AS q1, sum(x2 * x2) AS q2,
-         |    sum(x3 * x3) AS q3,
-         |    sum(x1 * x2) AS p12, sum(x1 * x3) AS p13,
-         |    sum(x2 * x3) AS p23
-         |  FROM x)
-         |SELECT CAST(n AS BIGINT) AS n,
-         |  ${r("s1", "s2", "q1", "q2", "p12")} AS r_qty_price,
-         |  ${r("s1", "s3", "q1", "q3", "p13")} AS r_qty_disc,
-         |  ${r("s2", "s3", "q2", "q3", "p23")} AS r_price_disc
-         |FROM m""".stripMargin
-    },
-    // dq8: same one-scan conditional counts, 0-9 spine via range(10),
-    // Laplace-smoothed shares, identical ln-ratio term
-    // dq12: same unrounded interpolated quartiles and fences.
-    // dq14: medians are value-determined, so the oracle's rank
-    // formulation (with per-rank multiplicity, k1 == k2 on odd counts
-    // must contribute the value twice) picks the same s/w integers;
-    // the outlier test is the identical exact-Long comparison.
-    "dq14_mad_outliers" ->
-      """WITH li AS (SELECT l_returnflag AS g,
-        |    CAST(l_quantity AS BIGINT) AS q FROM lineitem),
-        |r1 AS (SELECT g, q,
-        |    row_number() OVER (PARTITION BY g ORDER BY q) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS cnt FROM li),
-        |med AS (SELECT g,
-        |    CAST(sum(CASE WHEN rn = (cnt + 1) // 2 THEN q ELSE 0 END)
-        |      + sum(CASE WHEN rn = (cnt + 2) // 2 THEN q ELSE 0 END)
-        |      AS BIGINT) AS s
-        |  FROM r1 GROUP BY g),
-        |tt AS (SELECT li.g, li.q, abs(li.q * 2 - med.s) AS t, med.s
-        |  FROM li JOIN med ON li.g = med.g),
-        |r2 AS (SELECT g, t,
-        |    row_number() OVER (PARTITION BY g ORDER BY t) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS cnt FROM tt),
-        |mad AS (SELECT g,
-        |    CAST(sum(CASE WHEN rn = (cnt + 1) // 2 THEN t ELSE 0 END)
-        |      + sum(CASE WHEN rn = (cnt + 2) // 2 THEN t ELSE 0 END)
-        |      AS BIGINT) AS w
-        |  FROM r2 GROUP BY g)
-        |SELECT tt.g AS l_returnflag, count(*) AS n_rows,
-        |  round(CAST(max(tt.s) AS DOUBLE) / 2, 1) AS median_q,
-        |  round(CAST(max(mad.w) AS DOUBLE) / 4, 2) AS mad,
-        |  CAST(sum(CASE WHEN tt.t * 13490 > mad.w * 35000
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM tt JOIN mad ON tt.g = mad.g
-        |GROUP BY 1""".stripMargin,
-    // dq13: identical seeded faults, identical 60-bit row hash, and
-    // bit_xor is the same order-free fold on both engines.
-    "dq13_replica_reconcile" -> {
-      val hK = h60("concat('rk:', CAST(o_orderkey AS VARCHAR))")
-      val hV = h60("concat('rv:', CAST(o_orderkey AS VARCHAR))")
-      s"""WITH src AS (SELECT o_orderkey AS k,
-         |    o_orderpriority AS part,
-         |    CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
-         |  FROM orders),
-         |rep AS (SELECT k, part,
-         |    cents + (CASE WHEN $hV % 300 = 0 THEN 1 ELSE 0 END)
-         |      AS cents
-         |  FROM (SELECT o_orderkey AS k, o_orderpriority AS part,
-         |      CAST(floor(o_totalprice * 100) AS BIGINT) AS cents,
-         |      o_orderkey
-         |    FROM orders)
-         |  WHERE $hK % 200 != 0),
-         |fs AS (SELECT part, count(*) AS n_src,
-         |    bit_xor(${h60(
-              "concat(CAST(k AS VARCHAR), ':', CAST(cents AS VARCHAR))")})
-         |      AS x_src
-         |  FROM src GROUP BY 1),
-         |fr AS (SELECT part, count(*) AS n_rep,
-         |    bit_xor(${h60(
-              "concat(CAST(k AS VARCHAR), ':', CAST(cents AS VARCHAR))")})
-         |      AS x_rep
-         |  FROM rep GROUP BY 1),
-         |dr AS (SELECT part, count(*) AS n_dropped FROM src
-         |  WHERE k NOT IN (SELECT k FROM rep) GROUP BY 1),
-         |df AS (SELECT s.part, count(*) AS n_drifted
-         |  FROM src s JOIN rep r ON s.k = r.k
-         |  WHERE s.cents != r.cents GROUP BY 1)
-         |SELECT fs.part, fs.n_src,
-         |  coalesce(fr.n_rep, 0) AS n_rep,
-         |  coalesce(fs.x_src = fr.x_rep, FALSE) AS checksum_match,
-         |  coalesce(dr.n_dropped, 0) AS n_dropped,
-         |  coalesce(df.n_drifted, 0) AS n_drifted
-         |FROM fs LEFT JOIN fr ON fs.part = fr.part
-         |LEFT JOIN dr ON fs.part = dr.part
-         |LEFT JOIN df ON fs.part = df.part""".stripMargin
-    },
-    "dq12_outlier_iqr" ->
-      """WITH r AS (SELECT l_returnflag, l_quantity,
-        |    CAST(row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_quantity, l_orderkey, l_linenumber) - 1
-        |      AS BIGINT) AS rn
-        |  FROM lineitem),
-        |nn AS (SELECT l_returnflag, count(*) AS n FROM r GROUP BY 1),
-        |pr AS (SELECT l_returnflag, p,
-        |    CAST(n - 1 AS DOUBLE) * p AS pos,
-        |    CAST(floor(CAST(n - 1 AS DOUBLE) * p) AS BIGINT) AS lo,
-        |    CAST(ceil(CAST(n - 1 AS DOUBLE) * p) AS BIGINT) AS hi
-        |  FROM nn, (SELECT CAST(unnest([0.25, 0.75]) AS DOUBLE)
-        |    AS p) ps),
-        |q AS (SELECT pr.l_returnflag, pr.p,
-        |    vlo.l_quantity + (pr.pos - CAST(pr.lo AS DOUBLE))
-        |      * (vhi.l_quantity - vlo.l_quantity) AS q
-        |  FROM pr
-        |  JOIN r vlo ON pr.l_returnflag = vlo.l_returnflag
-        |    AND vlo.rn = pr.lo
-        |  JOIN r vhi ON pr.l_returnflag = vhi.l_returnflag
-        |    AND vhi.rn = pr.hi),
-        |qq AS (SELECT l_returnflag,
-        |    max(CASE WHEN p = 0.25 THEN q END) AS q1,
-        |    max(CASE WHEN p = 0.75 THEN q END) AS q3
-        |  FROM q GROUP BY 1),
-        |f AS (SELECT l_returnflag, q1, q3,
-        |    q1 - 1.5 * (q3 - q1) AS lo_b,
-        |    q3 + 1.5 * (q3 - q1) AS hi_b
-        |  FROM qq)
-        |SELECT l.l_returnflag, count(*) AS n_rows,
-        |  CAST(sum(CASE WHEN l.l_quantity < f.lo_b
-        |    OR l.l_quantity > f.hi_b THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_outliers,
-        |  round(max(f.q1), 6) AS q1, round(max(f.q3), 6) AS q3
-        |FROM lineitem l JOIN f ON l.l_returnflag = f.l_returnflag
-        |GROUP BY 1""".stripMargin,
-    // dq10: same distinct-pair collapse per FD arm.
-    "dq10_fd_check" ->
-      """WITH f1 AS (SELECT count(*) AS n_keys,
-        |    CAST(sum(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_violating,
-        |    CAST(max(nv) AS BIGINT) AS max_rhs
-        |  FROM (SELECT k, count(*) AS nv FROM (
-        |    SELECT DISTINCT n_nationkey AS k, n_regionkey AS v
-        |    FROM nation) GROUP BY 1)),
-        |f2 AS (SELECT count(*) AS n_keys,
-        |    CAST(sum(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_violating,
-        |    CAST(max(nv) AS BIGINT) AS max_rhs
-        |  FROM (SELECT k, count(*) AS nv FROM (
-        |    SELECT DISTINCT user_id AS k, event_type AS v
-        |    FROM events) GROUP BY 1)),
-        |f3 AS (SELECT count(*) AS n_keys,
-        |    CAST(sum(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_violating,
-        |    CAST(max(nv) AS BIGINT) AS max_rhs
-        |  FROM (SELECT k, count(*) AS nv FROM (
-        |    SELECT DISTINCT l_orderkey AS k, l_suppkey AS v
-        |    FROM lineitem) GROUP BY 1))
-        |SELECT 'nation_to_region' AS fd, n_keys, n_violating, max_rhs
-        |  FROM f1
-        |UNION ALL SELECT 'user_to_event_type', n_keys, n_violating,
-        |  max_rhs FROM f2
-        |UNION ALL SELECT 'order_to_supplier', n_keys, n_violating,
-        |  max_rhs FROM f3""".stripMargin,
-    // dq11: same seeded thinning + lag ranges.
-    "dq11_sequence_gaps" ->
-      """WITH ids AS (SELECT DISTINCT event_id FROM events
-        |  WHERE CAST(concat('0x', substr(md5(concat('gap:',
-        |    CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT) % 97 <> 0),
-        |l AS (SELECT event_id,
-        |    lag(event_id) OVER (ORDER BY event_id) AS prev FROM ids)
-        |SELECT prev + 1 AS gap_start, event_id - 1 AS gap_end,
-        |  event_id - prev - 1 AS n_missing
-        |FROM l WHERE prev IS NOT NULL AND event_id - prev > 1"""
-        .stripMargin,
-    // dq9: same null-to-violation CASE routing; each arm reads its
-    // 1-row aggregate CTE.
-    "dq9_expectations" ->
-      """WITH la AS (SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN l_quantity >= 1 AND l_quantity <= 50
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_qty,
-        |    CAST(sum(CASE WHEN l_discount >= 0 AND l_discount <= 0.5
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_disc,
-        |    CAST(sum(CASE WHEN l_extendedprice > 0
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_price
-        |  FROM lineitem),
-        |oa AS (SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN o_totalprice > 0
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_total
-        |  FROM orders),
-        |ja AS (SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN l_shipdate::DATE >= o_orderdate::DATE
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v_dates
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-        |SELECT 'li_quantity_in_1_50' AS rule, n AS n_checked,
-        |  v_qty AS n_violations,
-        |  round(CAST(v_qty AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS violation_rate FROM la
-        |UNION ALL SELECT 'li_discount_in_0_50pct', n, v_disc,
-        |  round(CAST(v_disc AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM la
-        |UNION ALL SELECT 'li_price_positive', n, v_price,
-        |  round(CAST(v_price AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM la
-        |UNION ALL SELECT 'o_totalprice_positive', n, v_total,
-        |  round(CAST(v_total AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM oa
-        |UNION ALL SELECT 'ship_after_order', n, v_dates,
-        |  round(CAST(v_dates AS DOUBLE) / CAST(n AS DOUBLE), 6) FROM ja"""
-        .stripMargin,
-    "dq8_psi" -> {
-      val cut = s"TIMESTAMP '${QueriesRelational.CdcCutOld}'"
-      s"""WITH c AS (SELECT least(9, CAST(floor(o_totalprice / 60000.0)
-         |      AS BIGINT)) AS bucket,
-         |    o_orderdate < $cut AS is_old
-         |  FROM orders),
-         |k AS (SELECT bucket,
-         |    sum(CASE WHEN is_old THEN 1 ELSE 0 END) AS n_old,
-         |    sum(CASE WHEN is_old THEN 0 ELSE 1 END) AS n_new
-         |  FROM c GROUP BY 1),
-         |g AS (SELECT sp.bucket, coalesce(k.n_old, 0) AS n_old,
-         |    coalesce(k.n_new, 0) AS n_new
-         |  FROM range(10) sp(bucket) LEFT JOIN k USING (bucket)),
-         |t AS (SELECT sum(n_old) AS t_old, sum(n_new) AS t_new FROM g)
-         |SELECT bucket, CAST(n_old AS BIGINT) AS n_old,
-         |  CAST(n_new AS BIGINT) AS n_new,
-         |  round((CAST(n_new + 1 AS DOUBLE) / CAST(t_new + 10 AS DOUBLE)
-         |    - CAST(n_old + 1 AS DOUBLE) / CAST(t_old + 10 AS DOUBLE))
-         |    * ln((CAST(n_new + 1 AS DOUBLE) / CAST(t_new + 10 AS DOUBLE))
-         |      / (CAST(n_old + 1 AS DOUBLE)
-         |        / CAST(t_old + 10 AS DOUBLE))), 6) AS psi_term
-         |FROM g, t""".stripMargin
-    },
-    // dq7: digit from the string form of exact integer cents; the
-    // Benford expectation as the same ln-ratio expression
-    "dq7_benford" ->
-      """WITH g AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice
-        |      * 100) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-        |    count(*) AS n
-        |  FROM orders WHERE o_totalprice > 0 GROUP BY 1),
-        |t AS (SELECT sum(n) AS tot FROM g)
-        |SELECT digit, n,
-        |  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share,
-        |  round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)
-        |    AS benford
-        |FROM g, t""".stripMargin
-  )
 }

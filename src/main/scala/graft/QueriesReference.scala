@@ -17,53 +17,83 @@ object QueriesReference {
   private val periodEnd = "2024-01-20 00:00:00"
   private val splitTs = "2024-01-25 00:00:00"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // P1+P2+P4+P5+P6 (FULL:67-81): arithmetic derive + round + project.
-    "p1_p6_unit_convert" -> ((s, d) => {
+    Query("p1_p6_unit_convert", (s, d) => {
       Tables.events(s, d).select(
         col("event_id"),
         col("event_type"),
         round(WeatherOps.kelvinToCelsius(col("value")), 2)
           .as("value_celsius"),
         round(WeatherOps.msToKmh(col("value")), 2).as("value_kmh"))
-    }),
+    },
+      """SELECT event_id, event_type,
+        |  round(value - 273.15, 2) AS value_celsius,
+        |  round(value * 3.6, 2) AS value_kmh
+        |FROM events""".stripMargin),
 
     // P7 (FULL:101): end-exclusive period filter, pushed to the parquet scan.
-    "p7_period_filter" -> ((s, d) => {
+    Query("p7_period_filter", (s, d) => {
       WeatherOps.periodFilter(Tables.events(s, d), "ts",
         lit(periodStart).cast("timestamp"), lit(periodEnd).cast("timestamp"))
         .select("event_id", "ts", "user_id", "event_type", "value")
-    }),
+    },
+      s"""SELECT event_id, ts, user_id, event_type, value FROM events
+         |WHERE ts >= TIMESTAMP '$periodStart'
+         |  AND ts < TIMESTAMP '$periodEnd'""".stripMargin),
 
     // P8–P10 (INC:85-99): recency gate against a deterministic "now" (the
     // table max — broadcast 1-row join, no driver round-trip).
-    "p8_p10_recency_filter" -> ((s, d) => {
+    Query("p8_p10_recency_filter", (s, d) => {
       val ev = Tables.events(s, d)
       val now = ev.agg(max(col("ts")).as("now_ts"))
       WeatherOps.recencyFilter(ev.crossJoin(broadcast(now)), "ts",
         col("now_ts"), 86400L)
         .select("event_id", "ts", "user_id", "event_type", "value")
-    }),
+    },
+      """SELECT event_id, ts, user_id, event_type, value
+        |FROM events, (SELECT max(ts) AS now_ts FROM events) m
+        |WHERE date_diff('second', ts, now_ts) BETWEEN 0 AND 86400"""
+        .stripMargin),
 
     // A1 (FULL:86-94): group by (key, ISO week), round(avg, 2).
-    "a1_weekly_avg" -> ((s, d) => {
+    Query("a1_weekly_avg", (s, d) => {
       WeatherOps.weeklyAvg(Tables.events(s, d), Seq("event_type"), "ts",
         "value", "average_value")
         .withColumn("week", col("week").cast("long"))
-    }),
+    },
+      // a1/a2/q2: the 2dp mean mirrors WeatherOps.centsMeanExpr — exact
+      // integer cents, half-away-from-zero magnitude division (round()
+      // on the double mean disagrees across engines exactly on
+      // half-cent boundaries; caught by the sf0.001 gate on q2). The
+      // denominator is count(valueCol) — NON-NULL count, matching the
+      // Spark side and avg()'s null-skipping semantics (NULL cents are
+      // skipped by the numerator sum, so count(*) would shrink the mean).
+      s"""SELECT event_type, weekofyear(ts) AS week,
+         |  ${centsMeanSql("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
+              "count(value)")} AS average_value
+         |FROM events GROUP BY event_type, weekofyear(ts)""".stripMargin),
 
     // A2 (FULL:97-115): period filter → grouped avg → P11 literal columns.
-    "a2_period_avg" -> ((s, d) => {
+    Query("a2_period_avg", (s, d) => {
       WeatherOps.periodAvg(Tables.events(s, d), Seq("event_type"), "ts",
         "value", "average_value",
         lit(periodStart).cast("timestamp"), lit(periodEnd).cast("timestamp"))
         .withColumn("start_date", lit("2024-01-10"))
         .withColumn("end_date", lit("2024-01-20"))
-    }),
+    },
+      s"""SELECT event_type,
+         |  ${centsMeanSql("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
+              "count(value)")} AS average_value,
+         |  '2024-01-10' AS start_date, '2024-01-20' AS end_date
+         |FROM events
+         |WHERE ts >= TIMESTAMP '$periodStart'
+         |  AND ts < TIMESTAMP '$periodEnd'
+         |GROUP BY event_type""".stripMargin),
 
     // J1 (FULL:160-171): left-anti dedup of a "new batch" against the
     // "existing" store on a composite key.
-    "j1_anti_join_dedup" -> ((s, d) => {
+    Query("j1_anti_join_dedup", (s, d) => {
       val ev = Tables.events(s, d)
       val cut = lit(splitTs).cast("timestamp")
       val newBatch = ev.filter(col("ts") >= cut)
@@ -71,19 +101,30 @@ object QueriesReference {
       WeatherOps.antiJoinNewRows(newBatch, existing,
         Seq("user_id", "event_type", "value"))
         .select("event_id", "ts", "user_id", "event_type", "value")
-    }),
+    },
+      s"""SELECT e.event_id, e.ts, e.user_id, e.event_type, e.value
+         |FROM events e
+         |WHERE e.ts >= TIMESTAMP '$splitTs'
+         |  AND NOT EXISTS (SELECT 1 FROM events x
+         |    WHERE x.ts < TIMESTAMP '$splitTs'
+         |      AND x.user_id = e.user_id
+         |      AND x.event_type = e.event_type
+         |      AND x.value = e.value)""".stripMargin),
 
     // S2 analog (FULL:24-37): JSON field extraction on executors. Uses the
     // native single-key scanner (JsonExpressions) rather than `from_json` —
     // a full Jackson parse per row to recover one scalar was the bench's
     // dominant constant (~7 s at sf0.1); the scanner is semantically
     // identical here (JsonExpressionsSpec asserts from_json parity).
-    "s2_json_extract" -> ((s, d) => {
+    Query("s2_json_extract", (s, d) => {
       Tables.events(s, d).select(
         col("event_id"),
         org.apache.spark.sql.graft.JsonExpressions
           .jsonGetLong(col("props"), "k").as("k_val"))
-    }),
+    },
+      """SELECT event_id,
+        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
+        |FROM events""".stripMargin),
 
     // E1 END-TO-END as ONE oracle-backed composition (VERDICT r12 #7):
     // the full-load pipeline's transformation chain — observations →
@@ -97,7 +138,7 @@ object QueriesReference {
     // city, week, metric). The PHYSICAL leg (sink append + read-back,
     // O2/O3/O5) stays PipelineSpec's job — layout is an execution
     // property, the oracle checks the composed semantics.
-    "q2_full_load" -> ((s, d) => {
+    Query("q2_full_load", (s, d) => {
       val ev = Tables.events(s, d)
       val obs = ev.select(
         col("event_type").as("country"),
@@ -131,88 +172,11 @@ object QueriesReference {
         .select(lit("fact_new").as("report"), col("country"), col("city"),
           lit(null).cast("long").as("week"), col("metric"))
       wk.unionByName(hum).unionByName(fact)
-    }),
-
-    // TPC-H Q1-shaped pricing summary — the classic partial-agg headline
-    // (map-side combine shrinks the shuffle to #groups).
-    "q1_pricing_summary" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(avg(col("l_quantity")), 2).as("avg_qty"),
-          round(avg(col("l_extendedprice")), 2).as("avg_price"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    })
-  )
-
-  /** DuckDB mirror of WeatherOps.centsMeanExpr: `c`/`n` are aggregate
-    * expressions (repeated inline — SQL aggregates may appear several
-    * times in one projection), `//` is DuckDB's floor division, which
-    * equals Spark's truncating DIV on the nonnegative magnitudes.
-    */
-  private def centsMeanSql(c: String, n: String): String =
-    s"CAST(CASE WHEN $c < 0 THEN -((-($c) + $n // 2) // $n) " +
-      s"ELSE ($c + $n // 2) // $n END AS DOUBLE) / 100.0"
-
-  def oracle: Map[String, String] = Map(
-    "p1_p6_unit_convert" ->
-      """SELECT event_id, event_type,
-        |  round(value - 273.15, 2) AS value_celsius,
-        |  round(value * 3.6, 2) AS value_kmh
-        |FROM events""".stripMargin,
-    "p7_period_filter" ->
-      s"""SELECT event_id, ts, user_id, event_type, value FROM events
-         |WHERE ts >= TIMESTAMP '$periodStart'
-         |  AND ts < TIMESTAMP '$periodEnd'""".stripMargin,
-    "p8_p10_recency_filter" ->
-      """SELECT event_id, ts, user_id, event_type, value
-        |FROM events, (SELECT max(ts) AS now_ts FROM events) m
-        |WHERE date_diff('second', ts, now_ts) BETWEEN 0 AND 86400"""
-        .stripMargin,
-    // a1/a2/q2: the 2dp mean mirrors WeatherOps.centsMeanExpr — exact
-    // integer cents, half-away-from-zero magnitude division (round()
-    // on the double mean disagrees across engines exactly on
-    // half-cent boundaries; caught by the sf0.001 gate on q2). The
-    // denominator is count(valueCol) — NON-NULL count, matching the
-    // Spark side and avg()'s null-skipping semantics (NULL cents are
-    // skipped by the numerator sum, so count(*) would shrink the mean).
-    "a1_weekly_avg" ->
-      s"""SELECT event_type, weekofyear(ts) AS week,
-         |  ${centsMeanSql("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
-              "count(value)")} AS average_value
-         |FROM events GROUP BY event_type, weekofyear(ts)""".stripMargin,
-    "a2_period_avg" ->
-      s"""SELECT event_type,
-         |  ${centsMeanSql("sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
-              "count(value)")} AS average_value,
-         |  '2024-01-10' AS start_date, '2024-01-20' AS end_date
-         |FROM events
-         |WHERE ts >= TIMESTAMP '$periodStart'
-         |  AND ts < TIMESTAMP '$periodEnd'
-         |GROUP BY event_type""".stripMargin,
-    "j1_anti_join_dedup" ->
-      s"""SELECT e.event_id, e.ts, e.user_id, e.event_type, e.value
-         |FROM events e
-         |WHERE e.ts >= TIMESTAMP '$splitTs'
-         |  AND NOT EXISTS (SELECT 1 FROM events x
-         |    WHERE x.ts < TIMESTAMP '$splitTs'
-         |      AND x.user_id = e.user_id
-         |      AND x.event_type = e.event_type
-         |      AND x.value = e.value)""".stripMargin,
-    "s2_json_extract" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
-        |FROM events""".stripMargin,
-    // q2: the same observation derivation, the same three report
-    // shapes, unioned. avg parity: temperature is round(2)'d per row
-    // first (P4), humidity sums exactly as integers — both engines
-    // divide identical sums.
-    "q2_full_load" ->
+    },
+      // q2: the same observation derivation, the same three report
+      // shapes, unioned. avg parity: temperature is round(2)'d per row
+      // first (P4), humidity sums exactly as integers — both engines
+      // divide identical sums.
       s"""WITH obs AS (SELECT event_type AS country,
          |    'c' || CAST(user_id % 5 AS VARCHAR) AS city,
          |    ts AS weatherDate,
@@ -245,8 +209,23 @@ object QueriesReference {
          |        AND x.weatherDate = n.weatherDate)
          |  GROUP BY n.country, n.city)
          |SELECT * FROM wk UNION ALL SELECT * FROM hum
-         |UNION ALL SELECT * FROM fct""".stripMargin,
-    "q1_pricing_summary" ->
+         |UNION ALL SELECT * FROM fct""".stripMargin),
+
+    // TPC-H Q1-shaped pricing summary — the classic partial-agg headline
+    // (map-side combine shrinks the shuffle to #groups).
+    Query("q1_pricing_summary", (s, d) => {
+      Tables.lineitem(s, d)
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(
+          round(sum(col("l_quantity")), 2).as("sum_qty"),
+          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
+          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
+            .as("sum_disc_price"),
+          round(avg(col("l_quantity")), 2).as("avg_qty"),
+          round(avg(col("l_extendedprice")), 2).as("avg_price"),
+          round(avg(col("l_discount")), 4).as("avg_disc"),
+          count(lit(1)).as("count_order"))
+    },
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty,
         |  round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -256,5 +235,15 @@ object QueriesReference {
         |  round(avg(l_discount), 4) AS avg_disc,
         |  count(*) AS count_order
         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin
-  )
+  ))
+
+  /** DuckDB mirror of WeatherOps.centsMeanExpr: `c`/`n` are aggregate
+    * expressions (repeated inline — SQL aggregates may appear several
+    * times in one projection), `//` is DuckDB's floor division, which
+    * equals Spark's truncating DIV on the nonnegative magnitudes.
+    */
+  private def centsMeanSql(c: String, n: String): String =
+    s"CAST(CASE WHEN $c < 0 THEN -((-($c) + $n // 2) // $n) " +
+      s"ELSE ($c + $n // 2) // $n END AS DOUBLE) / 100.0"
+
 }

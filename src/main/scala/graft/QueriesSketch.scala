@@ -18,26 +18,56 @@ import graft.sources.Tables
   */
 object QueriesSketch {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // Raw-HLL distinct estimate: register table -> single summary row
     // (m, v_present, fx_sum, estimate).
-    "sk1_hll_distinct" -> ((s, d) => {
+    Query("sk1_hll_distinct", (s, d) => {
       SketchOps.hllSummary(
         SketchOps.hllRegisters(Tables.lineitem(s, d), col("l_orderkey")))
-    }),
+    },
+      s"""WITH h AS (SELECT ${h60(
+           "concat('hll:', CAST(l_orderkey AS VARCHAR))")} AS h
+         |           FROM lineitem),
+         |b AS (SELECT h % 4096 AS bucket, h >> 12 AS w FROM h),
+         |r AS (SELECT bucket,
+         |        max(CASE WHEN w = 0 THEN 49
+         |            ELSE 49 - length(bin(w)) END) AS rho
+         |      FROM b GROUP BY bucket),
+         |s AS (SELECT count(*) AS v_present,
+         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
+         |          AS fx_present
+         |      FROM r)
+         |SELECT CAST(4096 AS BIGINT) AS m, v_present,
+         |  fx_present + (4096 - v_present) * (CAST(1 AS BIGINT) << 50)
+         |    AS fx_sum,
+         |  round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
+         |    * 1125899906842624.0
+         |    / CAST(fx_present + (4096 - v_present)
+         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
+         |FROM s""".stripMargin),
 
     // KMV distinct estimate: (k, k_used, kth_min, estimate) from the
     // 256 smallest distinct key hashes; exact-count fallback when the
     // input has fewer than k distinct hashes.
-    "sk2_kmv_distinct" -> ((s, d) => {
+    Query("sk2_kmv_distinct", (s, d) => {
       SketchOps.kmvSummary(Tables.lineitem(s, d), col("l_orderkey"), 256)
-    }),
+    },
+      s"""WITH h AS (SELECT DISTINCT ${h60(
+           "concat('kmv:', CAST(l_orderkey AS VARCHAR))")} AS h
+         |           FROM lineitem),
+         |k AS (SELECT h FROM h ORDER BY h LIMIT 256)
+         |SELECT CAST(256 AS BIGINT) AS k, count(*) AS k_used,
+         |  max(h) AS kth_min,
+         |  round(CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
+         |    ELSE 255.0 * 1152921504606846976.0
+         |      / CAST(max(h) AS DOUBLE) END, 2) AS estimate
+         |FROM k""".stripMargin),
 
     // CountMin heavy hitters: top-20 event users by exact count, each
     // with its CMS frequency estimate alongside the truth (est ≥ exact
     // always — one-sided error, spec-pinned). The exact count exists to
     // VERIFY the sketch; a production pipeline reads the sketch alone.
-    "sk3_cms_topk" -> ((s, d) => {
+    Query("sk3_cms_topk", (s, d) => {
       import graft.operators.RelationalOps
       val ev = Tables.events(s, d).select(col("user_id"))
       val sketch = SketchOps.cmsSketch(ev, col("user_id"), CmsDepth, CmsWidth)
@@ -46,6 +76,22 @@ object QueriesSketch {
       val exact = ev.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
       RelationalOps.topKGlobal(est.join(exact, "user_id"),
         Seq(col("exact_cnt").desc, col("user_id").asc), 20)
+    },
+      {
+      val bucket = h60("concat('cms', CAST(i AS VARCHAR), ':', " +
+        "CAST(user_id AS VARCHAR))") + " % 1024"
+      s"""WITH ev AS (SELECT user_id FROM events),
+         |ix AS (SELECT unnest([0, 1, 2, 3]) AS i),
+         |hx AS (SELECT user_id, i, $bucket AS bucket
+         |       FROM ev CROSS JOIN ix),
+         |sk AS (SELECT i, bucket, count(*) AS cnt FROM hx GROUP BY 1, 2),
+         |kh AS (SELECT user_id, i, $bucket AS bucket
+         |       FROM (SELECT DISTINCT user_id FROM ev) CROSS JOIN ix),
+         |est AS (SELECT user_id, min(cnt) AS est
+         |        FROM kh JOIN sk USING (i, bucket) GROUP BY 1),
+         |ex AS (SELECT user_id, count(*) AS exact_cnt FROM ev GROUP BY 1)
+         |SELECT user_id, est, exact_cnt FROM est JOIN ex USING (user_id)
+         |ORDER BY exact_cnt DESC, user_id LIMIT 20""".stripMargin
     }),
 
     // Bloom-filter join pruning: build a 256-word filter over the
@@ -54,7 +100,7 @@ object QueriesSketch {
     // semi-join truth, false positives. No false negative is possible
     // (spec-pinned); at scale the `might` predicate drops definite
     // non-members BEFORE the join shuffle, which is the entire point.
-    "sk4_bloom_filter" -> ((s, d) => {
+    Query("sk4_bloom_filter", (s, d) => {
       val seg = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       val bf = SketchOps.bloomBuild(seg, col("c_custkey"), BloomWords)
@@ -69,6 +115,33 @@ object QueriesSketch {
         .crossJoin(broadcast(truth))
         .select(col("n_orders"), col("n_pass"), col("n_true"),
           (col("n_pass") - col("n_true")).as("n_false_pos"))
+    },
+      {
+      def bh(seed: String, arg: String) =
+        h60(s"concat('$seed:', CAST($arg AS VARCHAR))") + " % 16128"
+      s"""WITH seg AS (SELECT c_custkey FROM customer
+         |       WHERE c_mktsegment = 'BUILDING'),
+         |hh AS (SELECT ${bh("bf1", "c_custkey")} AS h FROM seg
+         |       UNION ALL
+         |       SELECT ${bh("bf2", "c_custkey")} FROM seg),
+         |bf AS (SELECT h // 63 AS word,
+         |       bit_or(CAST(1 AS BIGINT) << CAST(h % 63 AS INT)) AS bits
+         |       FROM hh GROUP BY 1),
+         |pr AS (SELECT o_custkey, ${bh("bf1", "o_custkey")} AS h1,
+         |       ${bh("bf2", "o_custkey")} AS h2 FROM orders),
+         |j AS (SELECT CASE WHEN f1.bits IS NOT NULL
+         |         AND ((f1.bits >> CAST(p.h1 % 63 AS INT)) & 1) = 1
+         |         AND f2.bits IS NOT NULL
+         |         AND ((f2.bits >> CAST(p.h2 % 63 AS INT)) & 1) = 1
+         |       THEN 1 ELSE 0 END AS might
+         |       FROM pr p LEFT JOIN bf f1 ON f1.word = p.h1 // 63
+         |                 LEFT JOIN bf f2 ON f2.word = p.h2 // 63),
+         |agg AS (SELECT count(*) AS n_orders,
+         |        CAST(sum(might) AS BIGINT) AS n_pass FROM j),
+         |t AS (SELECT count(*) AS n_true FROM orders
+         |      WHERE o_custkey IN (SELECT c_custkey FROM seg))
+         |SELECT n_orders, n_pass, n_true, n_pass - n_true AS n_false_pos
+         |FROM agg CROSS JOIN t""".stripMargin
     }),
 
     // The Bloom filter doing its actual job: a bloom-PRUNED semi-join
@@ -81,7 +154,7 @@ object QueriesSketch {
     // with the filter's selectivity, not the fact table. sk4 measures
     // the filter's FP accounting; sk10 proves the pruned plan's output
     // is exactly the unpruned plan's.
-    "sk10_bloom_prune_join" -> ((s, d) => {
+    Query("sk10_bloom_prune_join", (s, d) => {
       val seg = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       val bf = SketchOps.bloomBuild(seg, col("c_custkey"), BloomWords)
@@ -96,18 +169,26 @@ object QueriesSketch {
         .agg(count(lit(1)).as("n_orders"),
           round(sum(floor(col("o_totalprice") * lit(100)).cast("long"))
             .cast("double") / lit(100.0), 2).as("revenue"))
-    }),
+    },
+      """SELECT o_orderpriority, count(*) AS n_orders,
+        |  round(CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+        |    AS DOUBLE) / 100.0, 2) AS revenue
+        |FROM orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM customer
+        |                    WHERE c_mktsegment = 'BUILDING')
+        |GROUP BY 1""".stripMargin),
 
     // Portable quantile sketch: price quartiles + p95 estimated from a
     // bottom-256-by-hash uniform row sample — deterministic where
     // t-digest/KLL are engine-specific, so the estimates themselves
     // hash-match the oracle.
-    "sk5_quantile_sketch" -> ((s, d) => {
+    Query("sk5_quantile_sketch", (s, d) => {
       SketchOps.quantileSketch(Tables.lineitem(s, d),
         concat(col("l_orderkey").cast("string"), lit("-"),
           col("l_linenumber").cast("string")),
         col("l_extendedprice"), 256, Seq(0.25, 0.5, 0.75, 0.95))
-    }),
+    },
+      sk5Sql),
 
     // HLL set algebra — sk8's KMV union/intersection discipline on the
     // HLL side: cohort register tables merge by elementwise max (the
@@ -117,7 +198,7 @@ object QueriesSketch {
     // intersection, with the exact intersection alongside as the
     // truth witness. After the two register aggregations everything
     // runs on O(m)-row register tables and 1-row broadcasts.
-    "sk13_hll_setops" -> ((s, d) => {
+    Query("sk13_hll_setops", (s, d) => {
       val li = Tables.lineitem(s, d)
       def keys(flag: String) = li.filter(col("l_returnflag") === flag)
         .select(col("l_orderkey"))
@@ -137,7 +218,26 @@ object QueriesSketch {
           round(col("est_a") + col("est_b") - col("est_union"), 2)
             .as("est_inter"),
           col("exact_inter"))
-    }),
+    },
+      // sk13: per-cohort register chains + max-merged union registers +
+      // the identical literal estimator; inclusion–exclusion at 2dp.
+      s"""WITH ${hllRegSql("A", "l_returnflag = 'R'")},
+         |${hllRegSql("B", "l_returnflag = 'N'")},
+         |rU AS (SELECT bucket, max(rho) AS rho FROM (
+         |    SELECT * FROM rA UNION ALL SELECT * FROM rB)
+         |  GROUP BY 1),
+         |${hllEstSql("A", "rA")},
+         |${hllEstSql("B", "rB")},
+         |${hllEstSql("U", "rU")},
+         |ex AS (SELECT count(*) AS exact_inter FROM
+         |  (SELECT DISTINCT l_orderkey FROM lineitem
+         |    WHERE l_returnflag = 'R') a
+         |  JOIN (SELECT DISTINCT l_orderkey FROM lineitem
+         |    WHERE l_returnflag = 'N') b USING (l_orderkey))
+         |SELECT eA.est AS est_a, eB.est AS est_b, eU.est AS est_union,
+         |  round(eA.est + eB.est - eU.est, 2) AS est_inter,
+         |  ex.exact_inter
+         |FROM eA, eB, eU, ex""".stripMargin),
 
     // Quantile-sketch accuracy gate — sk11's discipline applied to the
     // FOURTH sketch family (HLL/KMV gated by sk11, CMS by sk3's truth
@@ -149,8 +249,8 @@ object QueriesSketch {
     // 4-row estimate frame broadcasts to one fact pass with map-side
     // partials; at 100 TB the gate costs one scan. (A 256-row uniform
     // sample's p50 lands within ~±300 bps w.h.p. — what this measures.)
-    "sk12_quantile_error" -> ((s, d) => {
-      val est = queries("sk5_quantile_sketch")(s, d)
+    Query("sk12_quantile_error", (s, d) => {
+      val est = SparkEntry.queries("sk5_quantile_sketch")(s, d)
       val li = Tables.lineitem(s, d).select(col("l_extendedprice")
         .as("v"))
       val n1 = li.agg(count(lit(1)).as("n"))
@@ -162,19 +262,50 @@ object QueriesSketch {
         .withColumn("qb", round(col("q") * 10000, 0).cast("long"))
         .select(col("q"), col("est"), col("cnt"),
           expr("abs(cnt * 10000 - qb * n) div n").as("rank_err_bps"))
-    }),
+    },
+      // sk12: sk5's statement nested verbatim as a subquery (one source
+      // of truth), then the exact-rank count and integer-bps deviation.
+      s"""WITH s AS (SELECT * FROM (
+         |$sk5Sql
+         |) t),
+         |n1 AS (SELECT count(*) AS n FROM lineitem),
+         |r AS (SELECT s.q, s.est,
+         |    CAST(sum(CASE WHEN l_extendedprice <= s.est
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS cnt
+         |  FROM lineitem, s GROUP BY 1, 2)
+         |SELECT q, est, cnt,
+         |  abs(cnt * 10000 - CAST(round(q * 10000, 0) AS BIGINT) * n)
+         |    // n AS rank_err_bps
+         |FROM r, n1""".stripMargin),
 
     // The same HLL sketch as sk1 as a native TypedImperativeAggregate:
     // one 4 KB buffer per partition partial, merged by register max —
     // no register-table shuffle at all. The oracle is the RELATIONAL
     // form's estimator, so the custom aggregate is cross-checked against
     // both DuckDB and sk1 simultaneously.
-    "sk6_hll_native_agg" -> ((s, d) => {
+    Query("sk6_hll_native_agg", (s, d) => {
       Tables.lineitem(s, d).agg(
         round(org.apache.spark.sql.graft.SketchAggregates.hllEstimate(
           concat(lit("hll:"), col("l_orderkey").cast("string"))), 2)
           .as("estimate"))
-    }),
+    },
+      s"""WITH h AS (SELECT ${h60(
+           "concat('hll:', CAST(l_orderkey AS VARCHAR))")} AS h
+         |           FROM lineitem),
+         |b AS (SELECT h % 4096 AS bucket, h >> 12 AS w FROM h),
+         |r AS (SELECT bucket,
+         |        max(CASE WHEN w = 0 THEN 49
+         |            ELSE 49 - length(bin(w)) END) AS rho
+         |      FROM b GROUP BY bucket),
+         |s AS (SELECT count(*) AS v_present,
+         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
+         |          AS fx_present
+         |      FROM r)
+         |SELECT round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
+         |    * 1125899906842624.0
+         |    / CAST(fx_present + (4096 - v_present)
+         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
+         |FROM s""".stripMargin),
 
     // The native HLL aggregate in its production shape: GROUPED —
     // distinct users per event type, one 4 KB sketch buffer per (group,
@@ -187,12 +318,31 @@ object QueriesSketch {
     // aggregate back in would re-plan exactly the per-(group, user)
     // expand+shuffle the sketch exists to avoid; the oracle's exact
     // per-group computation is the accuracy witness instead.)
-    "sk7_hll_grouped" -> ((s, d) => {
+    Query("sk7_hll_grouped", (s, d) => {
       Tables.events(s, d).groupBy("event_type")
         .agg(round(org.apache.spark.sql.graft.SketchAggregates.hllEstimate(
             concat(lit("hll:"), col("user_id").cast("string"))), 2)
             .as("estimate"))
-    }),
+    },
+      s"""WITH h AS (SELECT event_type, user_id, ${h60(
+           "concat('hll:', CAST(user_id AS VARCHAR))")} AS h
+         |           FROM events),
+         |b AS (SELECT event_type, h % 4096 AS bucket, h >> 12 AS w
+         |      FROM h),
+         |r AS (SELECT event_type, bucket,
+         |        max(CASE WHEN w = 0 THEN 49
+         |            ELSE 49 - length(bin(w)) END) AS rho
+         |      FROM b GROUP BY 1, 2),
+         |s AS (SELECT event_type, count(*) AS v_present,
+         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
+         |          AS fx_present
+         |      FROM r GROUP BY 1)
+         |SELECT event_type,
+         |  round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
+         |    * 1125899906842624.0
+         |    / CAST(fx_present + (4096 - v_present)
+         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
+         |FROM s""".stripMargin),
 
     // CMS self-join-size (F2) estimate: price the events-by-user
     // self-join from the sketch alone — min-over-depths inner product
@@ -200,7 +350,7 @@ object QueriesSketch {
     // truth column verifies; exact at sf≤0.01 where 8192 buckets see
     // no collisions, +18% at sf0.1). The wider-than-sk3 sketch is the
     // point: width trades memory for inner-product error at εN² scale.
-    "sk9_f2_selfjoin" -> ((s, d) => {
+    Query("sk9_f2_selfjoin", (s, d) => {
       val ev = Tables.events(s, d).select(col("user_id"))
       val sk = SketchOps.cmsSketch(ev, col("user_id"), CmsDepth, F2Width)
       val est = SketchOps.cmsInnerProduct(sk, sk)
@@ -208,6 +358,20 @@ object QueriesSketch {
       val exact = ev.groupBy("user_id").agg(count(lit(1)).as("f"))
         .agg(sum(col("f") * col("f")).as("exact_f2"))
       est.crossJoin(broadcast(exact))
+    },
+      {
+      val bucket = h60("concat('cms', CAST(i AS VARCHAR), ':', " +
+        "CAST(user_id AS VARCHAR))") + s" % $F2Width"
+      s"""WITH ix AS (SELECT unnest([0, 1, 2, 3]) AS i),
+         |hx AS (SELECT user_id, i, $bucket AS bucket
+         |       FROM events CROSS JOIN ix),
+         |sk AS (SELECT i, bucket, count(*) AS cnt FROM hx GROUP BY 1, 2),
+         |ip AS (SELECT i, sum(cnt * cnt) AS ip FROM sk GROUP BY 1),
+         |ex AS (SELECT CAST(sum(f * f) AS BIGINT) AS exact_f2 FROM (
+         |       SELECT count(*) AS f FROM events GROUP BY user_id))
+         |SELECT CAST((SELECT min(ip) FROM ip) AS BIGINT) AS est_f2,
+         |  exact_f2
+         |FROM ex""".stripMargin
     }),
 
     // KMV set algebra: union / Jaccard / intersection estimates between
@@ -216,7 +380,7 @@ object QueriesSketch {
     // alongside as the accuracy witness (sk3/sk4 pattern: truth columns
     // VERIFY the sketch; production reads the sketch alone — the two
     // exact distincts here are what the sketch exists to avoid).
-    "sk8_kmv_setops" -> ((s, d) => {
+    Query("sk8_kmv_setops", (s, d) => {
       val li = Tables.lineitem(s, d)
       def cohort(flag: String) =
         li.filter(col("l_returnflag") === flag).select(col("l_orderkey"))
@@ -240,7 +404,47 @@ object QueriesSketch {
           sum(when(col("hasR") === 1L && col("hasN") === 1L, 1L)
             .otherwise(0L)).as("exact_inter"))
       est.crossJoin(exact)
-    }),
+    },
+      {
+      val h = h60("concat('kmv:', CAST(l_orderkey AS VARCHAR))")
+      val unionRaw = s"""CASE WHEN k_used < $KmvSetK
+         |      THEN CAST(k_used AS DOUBLE)
+         |      ELSE ${KmvSetK - 1}.0 * 1152921504606846976.0
+         |        / CAST(kth_min AS DOUBLE) END""".stripMargin
+      val jaccardRaw = "CAST(matches AS DOUBLE) / CAST(k_used AS DOUBLE)"
+      s"""WITH sa AS (SELECT DISTINCT $h AS h FROM lineitem
+         |            WHERE l_returnflag = 'R'
+         |            ORDER BY h LIMIT $KmvSetK),
+         |sb AS (SELECT DISTINCT $h AS h FROM lineitem
+         |       WHERE l_returnflag = 'N'
+         |       ORDER BY h LIMIT $KmvSetK),
+         |su AS (SELECT DISTINCT h
+         |       FROM (SELECT h FROM sa UNION ALL SELECT h FROM sb)
+         |       ORDER BY h LIMIT $KmvSetK),
+         |st AS (SELECT count(*) AS k_used, max(h) AS kth_min,
+         |         (SELECT count(*) FROM su
+         |          WHERE h IN (SELECT h FROM sa)
+         |            AND h IN (SELECT h FROM sb)) AS matches
+         |       FROM su),
+         |ex AS (SELECT count(DISTINCT l_orderkey) AS exact_union,
+         |         count(DISTINCT CASE WHEN rr > 0 AND nn > 0
+         |           THEN l_orderkey END) AS exact_inter
+         |       FROM (SELECT l_orderkey,
+         |               sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0
+         |                   END) AS rr,
+         |               sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0
+         |                   END) AS nn
+         |             FROM lineitem
+         |             WHERE l_returnflag IN ('R', 'N')
+         |             GROUP BY 1))
+         |SELECT CAST($KmvSetK AS BIGINT) AS k, k_used, matches,
+         |  round($unionRaw, 2) AS union_est,
+         |  round($jaccardRaw, 6) AS jaccard_est,
+         |  round($jaccardRaw * $unionRaw, 2) AS inter_est,
+         |  exact_union, exact_inter
+         |FROM st, ex""".stripMargin
+    }
+  ),
 
     // Sketch accuracy gate — the v8 pattern applied to the cardinality
     // sketches: exact distinct orderkeys beside the HLL and KMV
@@ -250,7 +454,7 @@ object QueriesSketch {
     // catches an m/k retune that silently collapses accuracy. Three
     // 1-row aggregates cross-joined — no data movement beyond the
     // scans.
-    "sk11_sketch_error" -> ((s, d) => {
+    Query("sk11_sketch_error", (s, d) => {
       val li = Tables.lineitem(s, d)
       val exact = li.agg(countDistinct(col("l_orderkey")).as("exact"))
       val hll = SketchOps.hllSummary(
@@ -265,7 +469,42 @@ object QueriesSketch {
         .select(col("exact"), col("hll_est"), col("kmv_est"),
           bps(col("hll_est")).as("hll_err_bps"),
           bps(col("kmv_est")).as("kmv_err_bps"))
-    }),
+    },
+      // sk1's and sk2's estimator chains side by side with the exact
+      // count; error math mirrors the Spark left-assoc shape exactly
+      s"""WITH h AS (SELECT ${h60(
+           "concat('hll:', CAST(l_orderkey AS VARCHAR))")} AS h
+         |           FROM lineitem),
+         |b AS (SELECT h % 4096 AS bucket, h >> 12 AS w FROM h),
+         |r AS (SELECT bucket,
+         |        max(CASE WHEN w = 0 THEN 49
+         |            ELSE 49 - length(bin(w)) END) AS rho
+         |      FROM b GROUP BY bucket),
+         |s AS (SELECT count(*) AS v_present,
+         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
+         |          AS fx_present
+         |      FROM r),
+         |he AS (SELECT round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0
+         |    * 4096.0 * 1125899906842624.0
+         |    / CAST(fx_present + (4096 - v_present)
+         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS hll_est
+         |  FROM s),
+         |kh AS (SELECT DISTINCT ${h60(
+           "concat('kmv:', CAST(l_orderkey AS VARCHAR))")} AS h
+         |           FROM lineitem),
+         |kk AS (SELECT h FROM kh ORDER BY h LIMIT 256),
+         |ke AS (SELECT round(CASE
+         |    WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
+         |    ELSE 255.0 * 1152921504606846976.0
+         |      / CAST(max(h) AS DOUBLE) END, 2) AS kmv_est FROM kk),
+         |ex AS (SELECT count(DISTINCT l_orderkey) AS exact
+         |       FROM lineitem)
+         |SELECT exact, hll_est, kmv_est,
+         |  CAST(floor(abs(hll_est - CAST(exact AS DOUBLE)) * 10000.0
+         |    / CAST(exact AS DOUBLE)) AS BIGINT) AS hll_err_bps,
+         |  CAST(floor(abs(kmv_est - CAST(exact AS DOUBLE)) * 10000.0
+         |    / CAST(exact AS DOUBLE)) AS BIGINT) AS kmv_err_bps
+         |FROM ex, he, ke""".stripMargin),
 
     // Sketch-state materialized view: the MV maintained per group is
     // the HLL REGISTER TABLE itself (event_type × ≤4096 (bucket, rho)
@@ -279,7 +518,7 @@ object QueriesSketch {
     // full data (no cutoff anywhere in its SQL) and the hash must
     // match the merged two-part build. MV state is O(groups · m);
     // refresh cost is O(delta) + a groups·m-sized merge.
-    "mv4_sketch_mv" -> ((s, d) => {
+    Query("mv4_sketch_mv", (s, d) => {
       import graft.operators.TextOps
       def registers(f: DataFrame => DataFrame): DataFrame = {
         val h = TextOps.md5Prefix60(
@@ -309,8 +548,28 @@ object QueriesSketch {
             (col("fx_present") +
               (lit(SketchOps.HllBuckets.toLong) - col("v_present")) *
                 lit(1L << 50)).cast("double"), 2).as("estimate"))
-    })
-  )
+    },
+      // mv4: ONE full-data pass, no cutoff anywhere — matching the
+      // merged base+delta build proves register-max merge is lossless
+      s"""WITH h AS (SELECT event_type, ${h60(
+           "concat('hll:', CAST(user_id AS VARCHAR))")} AS h
+         |           FROM events),
+         |b AS (SELECT event_type, h % 4096 AS bucket, h >> 12 AS w
+         |      FROM h),
+         |r AS (SELECT event_type, bucket,
+         |        max(CASE WHEN w = 0 THEN 49
+         |            ELSE 49 - length(bin(w)) END) AS rho
+         |      FROM b GROUP BY 1, 2),
+         |s AS (SELECT event_type, count(*) AS v_present,
+         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
+         |          AS fx_present
+         |      FROM r GROUP BY 1)
+         |SELECT event_type, v_present,
+         |  round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
+         |    * 1125899906842624.0
+         |    / CAST(fx_present + (4096 - v_present)
+         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
+         |FROM s""".stripMargin))
 
   /** mv4's refresh cutoff — mid-window of the 30-day event stream, so
     * base and delta both carry every group. The ORACLE never sees it:
@@ -367,276 +626,4 @@ object QueriesSketch {
        |  WHEN 192 THEN 0.75 ELSE 0.95 END AS DOUBLE) AS q, v AS est
        |FROM r WHERE r IN (64, 128, 192, 244)""".stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "sk10_bloom_prune_join" ->
-      """SELECT o_orderpriority, count(*) AS n_orders,
-        |  round(CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-        |    AS DOUBLE) / 100.0, 2) AS revenue
-        |FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer
-        |                    WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY 1""".stripMargin,
-    // sk1's and sk2's estimator chains side by side with the exact
-    // count; error math mirrors the Spark left-assoc shape exactly
-    "sk11_sketch_error" ->
-      s"""WITH h AS (SELECT ${h60(
-           "concat('hll:', CAST(l_orderkey AS VARCHAR))")} AS h
-         |           FROM lineitem),
-         |b AS (SELECT h % 4096 AS bucket, h >> 12 AS w FROM h),
-         |r AS (SELECT bucket,
-         |        max(CASE WHEN w = 0 THEN 49
-         |            ELSE 49 - length(bin(w)) END) AS rho
-         |      FROM b GROUP BY bucket),
-         |s AS (SELECT count(*) AS v_present,
-         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
-         |          AS fx_present
-         |      FROM r),
-         |he AS (SELECT round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0
-         |    * 4096.0 * 1125899906842624.0
-         |    / CAST(fx_present + (4096 - v_present)
-         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS hll_est
-         |  FROM s),
-         |kh AS (SELECT DISTINCT ${h60(
-           "concat('kmv:', CAST(l_orderkey AS VARCHAR))")} AS h
-         |           FROM lineitem),
-         |kk AS (SELECT h FROM kh ORDER BY h LIMIT 256),
-         |ke AS (SELECT round(CASE
-         |    WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-         |    ELSE 255.0 * 1152921504606846976.0
-         |      / CAST(max(h) AS DOUBLE) END, 2) AS kmv_est FROM kk),
-         |ex AS (SELECT count(DISTINCT l_orderkey) AS exact
-         |       FROM lineitem)
-         |SELECT exact, hll_est, kmv_est,
-         |  CAST(floor(abs(hll_est - CAST(exact AS DOUBLE)) * 10000.0
-         |    / CAST(exact AS DOUBLE)) AS BIGINT) AS hll_err_bps,
-         |  CAST(floor(abs(kmv_est - CAST(exact AS DOUBLE)) * 10000.0
-         |    / CAST(exact AS DOUBLE)) AS BIGINT) AS kmv_err_bps
-         |FROM ex, he, ke""".stripMargin,
-    "sk1_hll_distinct" ->
-      s"""WITH h AS (SELECT ${h60(
-           "concat('hll:', CAST(l_orderkey AS VARCHAR))")} AS h
-         |           FROM lineitem),
-         |b AS (SELECT h % 4096 AS bucket, h >> 12 AS w FROM h),
-         |r AS (SELECT bucket,
-         |        max(CASE WHEN w = 0 THEN 49
-         |            ELSE 49 - length(bin(w)) END) AS rho
-         |      FROM b GROUP BY bucket),
-         |s AS (SELECT count(*) AS v_present,
-         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
-         |          AS fx_present
-         |      FROM r)
-         |SELECT CAST(4096 AS BIGINT) AS m, v_present,
-         |  fx_present + (4096 - v_present) * (CAST(1 AS BIGINT) << 50)
-         |    AS fx_sum,
-         |  round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
-         |    * 1125899906842624.0
-         |    / CAST(fx_present + (4096 - v_present)
-         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
-         |FROM s""".stripMargin,
-    "sk2_kmv_distinct" ->
-      s"""WITH h AS (SELECT DISTINCT ${h60(
-           "concat('kmv:', CAST(l_orderkey AS VARCHAR))")} AS h
-         |           FROM lineitem),
-         |k AS (SELECT h FROM h ORDER BY h LIMIT 256)
-         |SELECT CAST(256 AS BIGINT) AS k, count(*) AS k_used,
-         |  max(h) AS kth_min,
-         |  round(CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-         |    ELSE 255.0 * 1152921504606846976.0
-         |      / CAST(max(h) AS DOUBLE) END, 2) AS estimate
-         |FROM k""".stripMargin,
-    "sk3_cms_topk" -> {
-      val bucket = h60("concat('cms', CAST(i AS VARCHAR), ':', " +
-        "CAST(user_id AS VARCHAR))") + " % 1024"
-      s"""WITH ev AS (SELECT user_id FROM events),
-         |ix AS (SELECT unnest([0, 1, 2, 3]) AS i),
-         |hx AS (SELECT user_id, i, $bucket AS bucket
-         |       FROM ev CROSS JOIN ix),
-         |sk AS (SELECT i, bucket, count(*) AS cnt FROM hx GROUP BY 1, 2),
-         |kh AS (SELECT user_id, i, $bucket AS bucket
-         |       FROM (SELECT DISTINCT user_id FROM ev) CROSS JOIN ix),
-         |est AS (SELECT user_id, min(cnt) AS est
-         |        FROM kh JOIN sk USING (i, bucket) GROUP BY 1),
-         |ex AS (SELECT user_id, count(*) AS exact_cnt FROM ev GROUP BY 1)
-         |SELECT user_id, est, exact_cnt FROM est JOIN ex USING (user_id)
-         |ORDER BY exact_cnt DESC, user_id LIMIT 20""".stripMargin
-    },
-    "sk4_bloom_filter" -> {
-      def bh(seed: String, arg: String) =
-        h60(s"concat('$seed:', CAST($arg AS VARCHAR))") + " % 16128"
-      s"""WITH seg AS (SELECT c_custkey FROM customer
-         |       WHERE c_mktsegment = 'BUILDING'),
-         |hh AS (SELECT ${bh("bf1", "c_custkey")} AS h FROM seg
-         |       UNION ALL
-         |       SELECT ${bh("bf2", "c_custkey")} FROM seg),
-         |bf AS (SELECT h // 63 AS word,
-         |       bit_or(CAST(1 AS BIGINT) << CAST(h % 63 AS INT)) AS bits
-         |       FROM hh GROUP BY 1),
-         |pr AS (SELECT o_custkey, ${bh("bf1", "o_custkey")} AS h1,
-         |       ${bh("bf2", "o_custkey")} AS h2 FROM orders),
-         |j AS (SELECT CASE WHEN f1.bits IS NOT NULL
-         |         AND ((f1.bits >> CAST(p.h1 % 63 AS INT)) & 1) = 1
-         |         AND f2.bits IS NOT NULL
-         |         AND ((f2.bits >> CAST(p.h2 % 63 AS INT)) & 1) = 1
-         |       THEN 1 ELSE 0 END AS might
-         |       FROM pr p LEFT JOIN bf f1 ON f1.word = p.h1 // 63
-         |                 LEFT JOIN bf f2 ON f2.word = p.h2 // 63),
-         |agg AS (SELECT count(*) AS n_orders,
-         |        CAST(sum(might) AS BIGINT) AS n_pass FROM j),
-         |t AS (SELECT count(*) AS n_true FROM orders
-         |      WHERE o_custkey IN (SELECT c_custkey FROM seg))
-         |SELECT n_orders, n_pass, n_true, n_pass - n_true AS n_false_pos
-         |FROM agg CROSS JOIN t""".stripMargin
-    },
-    "sk5_quantile_sketch" -> sk5Sql,
-    // sk13: per-cohort register chains + max-merged union registers +
-    // the identical literal estimator; inclusion–exclusion at 2dp.
-    "sk13_hll_setops" ->
-      s"""WITH ${hllRegSql("A", "l_returnflag = 'R'")},
-         |${hllRegSql("B", "l_returnflag = 'N'")},
-         |rU AS (SELECT bucket, max(rho) AS rho FROM (
-         |    SELECT * FROM rA UNION ALL SELECT * FROM rB)
-         |  GROUP BY 1),
-         |${hllEstSql("A", "rA")},
-         |${hllEstSql("B", "rB")},
-         |${hllEstSql("U", "rU")},
-         |ex AS (SELECT count(*) AS exact_inter FROM
-         |  (SELECT DISTINCT l_orderkey FROM lineitem
-         |    WHERE l_returnflag = 'R') a
-         |  JOIN (SELECT DISTINCT l_orderkey FROM lineitem
-         |    WHERE l_returnflag = 'N') b USING (l_orderkey))
-         |SELECT eA.est AS est_a, eB.est AS est_b, eU.est AS est_union,
-         |  round(eA.est + eB.est - eU.est, 2) AS est_inter,
-         |  ex.exact_inter
-         |FROM eA, eB, eU, ex""".stripMargin,
-    // sk12: sk5's statement nested verbatim as a subquery (one source
-    // of truth), then the exact-rank count and integer-bps deviation.
-    "sk12_quantile_error" ->
-      s"""WITH s AS (SELECT * FROM (
-         |$sk5Sql
-         |) t),
-         |n1 AS (SELECT count(*) AS n FROM lineitem),
-         |r AS (SELECT s.q, s.est,
-         |    CAST(sum(CASE WHEN l_extendedprice <= s.est
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS cnt
-         |  FROM lineitem, s GROUP BY 1, 2)
-         |SELECT q, est, cnt,
-         |  abs(cnt * 10000 - CAST(round(q * 10000, 0) AS BIGINT) * n)
-         |    // n AS rank_err_bps
-         |FROM r, n1""".stripMargin,
-    "sk6_hll_native_agg" ->
-      s"""WITH h AS (SELECT ${h60(
-           "concat('hll:', CAST(l_orderkey AS VARCHAR))")} AS h
-         |           FROM lineitem),
-         |b AS (SELECT h % 4096 AS bucket, h >> 12 AS w FROM h),
-         |r AS (SELECT bucket,
-         |        max(CASE WHEN w = 0 THEN 49
-         |            ELSE 49 - length(bin(w)) END) AS rho
-         |      FROM b GROUP BY bucket),
-         |s AS (SELECT count(*) AS v_present,
-         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
-         |          AS fx_present
-         |      FROM r)
-         |SELECT round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
-         |    * 1125899906842624.0
-         |    / CAST(fx_present + (4096 - v_present)
-         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
-         |FROM s""".stripMargin,
-    // mv4: ONE full-data pass, no cutoff anywhere — matching the
-    // merged base+delta build proves register-max merge is lossless
-    "mv4_sketch_mv" ->
-      s"""WITH h AS (SELECT event_type, ${h60(
-           "concat('hll:', CAST(user_id AS VARCHAR))")} AS h
-         |           FROM events),
-         |b AS (SELECT event_type, h % 4096 AS bucket, h >> 12 AS w
-         |      FROM h),
-         |r AS (SELECT event_type, bucket,
-         |        max(CASE WHEN w = 0 THEN 49
-         |            ELSE 49 - length(bin(w)) END) AS rho
-         |      FROM b GROUP BY 1, 2),
-         |s AS (SELECT event_type, count(*) AS v_present,
-         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
-         |          AS fx_present
-         |      FROM r GROUP BY 1)
-         |SELECT event_type, v_present,
-         |  round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
-         |    * 1125899906842624.0
-         |    / CAST(fx_present + (4096 - v_present)
-         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
-         |FROM s""".stripMargin,
-    "sk7_hll_grouped" ->
-      s"""WITH h AS (SELECT event_type, user_id, ${h60(
-           "concat('hll:', CAST(user_id AS VARCHAR))")} AS h
-         |           FROM events),
-         |b AS (SELECT event_type, h % 4096 AS bucket, h >> 12 AS w
-         |      FROM h),
-         |r AS (SELECT event_type, bucket,
-         |        max(CASE WHEN w = 0 THEN 49
-         |            ELSE 49 - length(bin(w)) END) AS rho
-         |      FROM b GROUP BY 1, 2),
-         |s AS (SELECT event_type, count(*) AS v_present,
-         |        CAST(sum(CAST(1 AS BIGINT) << (50 - rho)) AS BIGINT)
-         |          AS fx_present
-         |      FROM r GROUP BY 1)
-         |SELECT event_type,
-         |  round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
-         |    * 1125899906842624.0
-         |    / CAST(fx_present + (4096 - v_present)
-         |        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS estimate
-         |FROM s""".stripMargin,
-
-    "sk9_f2_selfjoin" -> {
-      val bucket = h60("concat('cms', CAST(i AS VARCHAR), ':', " +
-        "CAST(user_id AS VARCHAR))") + s" % $F2Width"
-      s"""WITH ix AS (SELECT unnest([0, 1, 2, 3]) AS i),
-         |hx AS (SELECT user_id, i, $bucket AS bucket
-         |       FROM events CROSS JOIN ix),
-         |sk AS (SELECT i, bucket, count(*) AS cnt FROM hx GROUP BY 1, 2),
-         |ip AS (SELECT i, sum(cnt * cnt) AS ip FROM sk GROUP BY 1),
-         |ex AS (SELECT CAST(sum(f * f) AS BIGINT) AS exact_f2 FROM (
-         |       SELECT count(*) AS f FROM events GROUP BY user_id))
-         |SELECT CAST((SELECT min(ip) FROM ip) AS BIGINT) AS est_f2,
-         |  exact_f2
-         |FROM ex""".stripMargin
-    },
-
-    "sk8_kmv_setops" -> {
-      val h = h60("concat('kmv:', CAST(l_orderkey AS VARCHAR))")
-      val unionRaw = s"""CASE WHEN k_used < $KmvSetK
-         |      THEN CAST(k_used AS DOUBLE)
-         |      ELSE ${KmvSetK - 1}.0 * 1152921504606846976.0
-         |        / CAST(kth_min AS DOUBLE) END""".stripMargin
-      val jaccardRaw = "CAST(matches AS DOUBLE) / CAST(k_used AS DOUBLE)"
-      s"""WITH sa AS (SELECT DISTINCT $h AS h FROM lineitem
-         |            WHERE l_returnflag = 'R'
-         |            ORDER BY h LIMIT $KmvSetK),
-         |sb AS (SELECT DISTINCT $h AS h FROM lineitem
-         |       WHERE l_returnflag = 'N'
-         |       ORDER BY h LIMIT $KmvSetK),
-         |su AS (SELECT DISTINCT h
-         |       FROM (SELECT h FROM sa UNION ALL SELECT h FROM sb)
-         |       ORDER BY h LIMIT $KmvSetK),
-         |st AS (SELECT count(*) AS k_used, max(h) AS kth_min,
-         |         (SELECT count(*) FROM su
-         |          WHERE h IN (SELECT h FROM sa)
-         |            AND h IN (SELECT h FROM sb)) AS matches
-         |       FROM su),
-         |ex AS (SELECT count(DISTINCT l_orderkey) AS exact_union,
-         |         count(DISTINCT CASE WHEN rr > 0 AND nn > 0
-         |           THEN l_orderkey END) AS exact_inter
-         |       FROM (SELECT l_orderkey,
-         |               sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0
-         |                   END) AS rr,
-         |               sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0
-         |                   END) AS nn
-         |             FROM lineitem
-         |             WHERE l_returnflag IN ('R', 'N')
-         |             GROUP BY 1))
-         |SELECT CAST($KmvSetK AS BIGINT) AS k, k_used, matches,
-         |  round($unionRaw, 2) AS union_est,
-         |  round($jaccardRaw, 6) AS jaccard_est,
-         |  round($jaccardRaw * $unionRaw, 2) AS inter_est,
-         |  exact_union, exact_inter
-         |FROM st, ex""".stripMargin
-    }
-  )
 }

@@ -43,11 +43,17 @@ object QueriesSql {
     s
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The oracle of another family's query: several sql* queries run
+    * the same SQL text as the query they re-express.
+    */
+  private def sqlOf(family: Seq[Query], name: String): String =
+    family.find(_.name == name).get.oracle
+
+  lazy val registry: Seq[Query] = Seq(
     // TPC-H Q1 through the SQL front door — the exact semantics of
     // q1_pricing_summary (its oracle string is reused verbatim below).
     // Plan-identical to the DataFrame form: partial agg + 2-key shuffle.
-    "sql1_pricing" -> ((s, d) => {
+    Query("sql1_pricing", (s, d) => {
       sqlSession(s, d, "lineitem").sql(
         """SELECT l_returnflag, l_linestatus,
           |  round(sum(l_quantity), 2) AS sum_qty,
@@ -59,13 +65,16 @@ object QueriesSql {
           |  round(avg(l_discount), 4) AS avg_disc,
           |  count(*) AS count_order
           |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin)
-    }),
+    },
+      // SQL twins reuse the long-green oracle of the query they mirror —
+      // one source of truth per semantics.
+      sqlOf(QueriesReference.registry, "q1_pricing_summary")),
 
     // v1_cosine_topk in SQL text: the native codegen'd `dot_product`
     // expression invoked by name, widening + norms + per-probe window
     // all in SQL. Same fold, same rounding, same tiebreak as the
     // DataFrame twin — v1's oracle is reused verbatim.
-    "sql2_cosine_topk" -> ((s, d) => {
+    Query("sql2_cosine_topk", (s, d) => {
       sqlSession(s, d, "embeddings").sql(
         """WITH prep AS (
           |  SELECT vec_id AS id, CAST(embedding AS ARRAY<DOUBLE>) AS v
@@ -78,62 +87,79 @@ object QueriesSql {
           |  SELECT p.*, row_number() OVER (PARTITION BY id_q
           |    ORDER BY cos DESC, id_n) AS rank FROM p)
           |WHERE rank <= 10""".stripMargin)
-    }),
+    },
+      sqlOf(QueriesVector.registry, "v1_cosine_topk")),
 
     // The native HLL TypedImperativeAggregate from SQL: one estimate
     // over lineitem's order keys. eval() implements the identical
     // fixed-point estimator as sk1's relational form, so the oracle is
     // sk1's oracle projected to its estimate column.
-    "sql3_hll_distinct" -> ((s, d) => {
+    Query("sql3_hll_distinct", (s, d) => {
       sqlSession(s, d, "lineitem").sql(
         """SELECT round(hll_estimate(
           |    concat('hll:', CAST(l_orderkey AS STRING))), 2) AS estimate
           |FROM lineitem""".stripMargin)
-    }),
+    },
+      s"""SELECT estimate FROM (
+         |${sqlOf(QueriesSketch.registry, "sk1_hll_distinct")}
+         |) t""".stripMargin),
 
     // The native KMV aggregate from SQL — exact under k distinct,
     // (k-1)·2⁶⁰/kth-min above; sk2's oracle projected to the estimate.
-    "sql4_kmv_distinct" -> ((s, d) => {
+    Query("sql4_kmv_distinct", (s, d) => {
       sqlSession(s, d, "lineitem").sql(
         """SELECT round(kmv_estimate(
           |    concat('kmv:', CAST(l_orderkey AS STRING)), 256), 2)
           |  AS estimate
           |FROM lineitem""".stripMargin)
-    }),
+    },
+      s"""SELECT estimate FROM (
+         |${sqlOf(QueriesSketch.registry, "sk2_kmv_distinct")}
+         |) t""".stripMargin),
 
     // The engine's portable seeded hash (`md5_prefix60`) from SQL: a
     // 16-way hash-bucket histogram over orders — the partition/salt
     // primitive every d/x-family query builds on, exercised as SQL
     // text. Hash is 60-bit non-negative so % equals floor-mod on both
     // engines.
-    "sql5_hash_bucket" -> ((s, d) => {
+    Query("sql5_hash_bucket", (s, d) => {
       sqlSession(s, d, "orders").sql(
         """SELECT md5_prefix60(concat('b:', CAST(o_orderkey AS STRING)))
           |    % 16 AS bucket,
           |  count(*) AS n
           |FROM orders GROUP BY 1""".stripMargin)
-    }),
+    },
+      """SELECT CAST(concat('0x', substr(md5(
+        |    concat('b:', CAST(o_orderkey AS VARCHAR))), 1, 15)) AS BIGINT)
+        |    % 16 AS bucket,
+        |  count(*) AS n
+        |FROM orders GROUP BY 1""".stripMargin),
 
     // The bounded-heap top_k aggregate from SQL, unnested to scalar
     // rows (rank, value) via posexplode so the compare needs no array
     // hashing. Per-rank VALUES are deterministic under ties even though
     // the tied rows' identities are not — the oracle ranks values
     // directly.
-    "sql6_topk_agg" -> ((s, d) => {
+    Query("sql6_topk_agg", (s, d) => {
       sqlSession(s, d, "lineitem").sql(
         """SELECT l_returnflag, CAST(pos + 1 AS BIGINT) AS rk, v AS qty
           |FROM (SELECT l_returnflag,
           |        top_k(CAST(l_quantity AS DOUBLE), 5) AS t
           |      FROM lineitem GROUP BY l_returnflag)
           |LATERAL VIEW posexplode(t) AS pos, v""".stripMargin)
-    }),
+    },
+      """SELECT l_returnflag, rk, qty FROM (
+        |  SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS qty,
+        |    row_number() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_quantity DESC) AS rk
+        |  FROM lineitem) WHERE rk <= 5""".stripMargin),
 
     // ROLLUP in SQL text with cents-exact Long revenue (doubles are
     // rounded to cents per ROW, then summed as integers — the grand-
     // total row aggregates 6M+ doubles at sf1, where a double sum's
     // last rounded digit is partition-order roulette; integer cents
     // cannot wobble on either engine).
-    "sql7_rollup" -> ((s, d) => {
+    Query("sql7_rollup", (s, d) => {
       sqlSession(s, d, "lineitem").sql(
         """SELECT coalesce(l_returnflag, 'ALL') AS flag,
           |  coalesce(l_linestatus, 'ALL') AS status,
@@ -142,13 +168,20 @@ object QueriesSql {
           |  count(*) AS n
           |FROM lineitem
           |GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin)
-    }),
+    },
+      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
+        |  coalesce(l_linestatus, 'ALL') AS status,
+        |  CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
+        |    AS BIGINT) AS rev_cents,
+        |  count(*) AS n
+        |FROM lineitem
+        |GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
 
     // Running revenue per customer in SQL — frame-ordered window sum,
     // deterministic left-to-right accumulation on both engines (unlike
     // a group sum, a running sum's evaluation order IS its frame
     // order).
-    "sql8_running_sum" -> ((s, d) => {
+    Query("sql8_running_sum", (s, d) => {
       sqlSession(s, d, "orders").sql(
         """SELECT o_custkey, o_orderkey,
           |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey
@@ -156,31 +189,39 @@ object QueriesSql {
           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
           |    AS running
           |FROM orders WHERE o_custkey % 100 = 0""".stripMargin)
-    }),
+    },
+      """SELECT o_custkey, o_orderkey,
+        |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey
+        |    ORDER BY o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
+        |    AS running
+        |FROM orders WHERE o_custkey % 100 = 0""".stripMargin),
 
     // GROUPING SETS as SQL TEXT — g6 drives the same Expand through the
     // DataFrame API; this is the parser surface (GROUPING SETS clause),
     // oracle reused verbatim. One shuffle, map-side expand.
-    "sql9_grouping_sets" -> ((s, d) => {
+    Query("sql9_grouping_sets", (s, d) => {
       sqlSession(s, d, "lineitem").sql(
         """SELECT l_returnflag, l_linestatus,
           |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
           |FROM lineitem
           |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
           |  (l_returnflag), ())""".stripMargin)
-    }),
+    },
+      sqlOf(QueriesRelational.registry, "g6_grouping_sets")),
 
     // Generator + lambda in SQL text: explode over a filtered split —
     // x5's tokenize-and-count through the SQL front door (oracle
     // reused). The explode plans the same Generate x5's DataFrame form
     // gets; the lambda filter stays codegen'd.
-    "sql10_explode_tokens" -> ((s, d) => {
+    Query("sql10_explode_tokens", (s, d) => {
       sqlSession(s, d, "documents").sql(
         """SELECT token, count(*) AS cnt
           |FROM (SELECT explode(filter(split(text, '\\s+'),
           |    t -> t != '')) AS token FROM documents)
           |GROUP BY token ORDER BY cnt DESC, token LIMIT 50""".stripMargin)
-    }),
+    },
+      sqlOf(QueriesText.registry, "x5_vocab_topk")),
 
     // The SQL PIVOT clause (g4's wide census through the parser
     // surface, oracle reused): explicit IN-list so the plan is a
@@ -189,7 +230,7 @@ object QueriesSql {
     // where the oracle's count FILTER yields 0. Registered as sql11
     // to close the r11 numbering gap (sql10 → sql12 read as a missing
     // query to auditors).
-    "sql11_pivot" -> ((s, d) => {
+    Query("sql11_pivot", (s, d) => {
       sqlSession(s, d, "orders").sql(
         """SELECT o_orderstatus,
           |  coalesce(`1-URGENT`, 0) AS `1-URGENT`,
@@ -203,12 +244,13 @@ object QueriesSql {
           |  '3-MEDIUM' AS `3-MEDIUM`,
           |  '4-NOT SPECIFIED' AS `4-NOT SPECIFIED`,
           |  '5-LOW' AS `5-LOW`))""".stripMargin)
-    }),
+    },
+      sqlOf(QueriesRelational.registry, "g4_pivot")),
 
     // Time-based RANGE frame as SQL TEXT (w6's rolling 24 h window,
     // oracle reused): RANGE BETWEEN 86400 PRECEDING over epoch-second
     // order keys — the frame clause ROWS cannot express.
-    "sql12_range_frame" -> ((s, d) => {
+    Query("sql12_range_frame", (s, d) => {
       sqlSession(s, d, "events").sql(
         """SELECT user_id, event_id,
           |  count(*) OVER w AS n_24h,
@@ -219,19 +261,22 @@ object QueriesSql {
           |  FROM events)
           |WINDOW w AS (PARTITION BY user_id ORDER BY sec
           |  RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW)""".stripMargin)
-    }),
+    },
+      sqlOf(QueriesRelational.registry, "w6_range_frame")),
 
     // The native HLL AGGREGATE under a SQL GROUP BY — sql3 pins the
     // global form; this pins the custom TypedImperativeAggregate
     // composing with SQL grouping (per-group 4 KB buffers through the
     // SQL front door). Same semantics as sk7; its oracle is reused.
-    "sql14_hll_grouped" -> ((s, d) => {
+    Query("sql14_hll_grouped", (s, d) => {
       sqlSession(s, d, "events").sql(
         """SELECT event_type,
           |  round(hll_estimate(concat('hll:',
           |    CAST(user_id AS STRING))), 2) AS estimate
           |FROM events GROUP BY event_type""".stripMargin)
-    }),
+    },
+      sqlOf(QueriesSketch.registry, "sk7_hll_grouped")
+  ),
 
     // RECURSIVE CTE through the SQL front door — and a computation
     // that genuinely NEEDS recursion: first-fit bin packing with
@@ -246,15 +291,17 @@ object QueriesSql {
     // terminates under UNION ALL; the frame is file METADATA, so
     // depth is O(months), never O(data).
     // Closed-form OLS through the SQL front door — literally the SAME
-    // SQL text the DuckDB oracle executes (QueriesMl.oracle): one
+    // SQL text the DuckDB oracle executes (ml1_ols's oracle): one
     // string, two engines, one hash. Registered to pin that the ml
     // family's exact-moment + in-projection Cramer solve is plain
     // ANSI SQL surface, not DataFrame-only machinery (the sql1/q1
     // relationship, extended to regression).
-    "sql16_ols" -> ((s, d) =>
-      sqlSession(s, d, "lineitem").sql(QueriesMl.oracle("ml1_ols"))),
+    Query("sql16_ols", (s, d) =>
+      sqlSession(s, d, "lineitem").sql(sqlOf(QueriesMl.registry, "ml1_ols")),
+      // identical text on both engines by construction
+      sqlOf(QueriesMl.registry, "ml1_ols")),
 
-    "sql15_reset_binpack" -> ((s, d) => {
+    Query("sql15_reset_binpack", (s, d) => {
       // Materialize the ~80-row month-file frame ONCE (guard-persist —
       // Spark's cache manager dedups by logical plan, so repeat calls
       // reuse it): the recursion's per-level join must read an
@@ -286,7 +333,30 @@ object QueriesSql {
           |  CAST(min(month) AS DATE) AS from_month,
           |  CAST(max(month) AS DATE) AS to_month
           |FROM r GROUP BY bin""".stripMargin)
-    }),
+    },
+      // sql15: the identical linear recursion in DuckDB's recursive CTE
+      // dialect (same ranked month-file frame, same reset decision).
+      """WITH RECURSIVE f AS (
+        |  SELECT month, est, CAST(row_number() OVER (ORDER BY month)
+        |    AS BIGINT) AS rk
+        |  FROM (SELECT date_trunc('month', l_shipdate) AS month,
+        |      count(*) * 64 AS est
+        |    FROM lineitem GROUP BY 1)),
+        |r(rk, month, est, cum, bin) AS (
+        |  SELECT rk, month, est, est, CAST(0 AS BIGINT)
+        |  FROM f WHERE rk = 1
+        |  UNION ALL
+        |  SELECT f.rk, f.month, f.est,
+        |    CASE WHEN r.cum + f.est > 4194304 THEN f.est
+        |      ELSE r.cum + f.est END,
+        |    CASE WHEN r.cum + f.est > 4194304 THEN r.bin + 1
+        |      ELSE r.bin END
+        |  FROM r JOIN f ON f.rk = r.rk + 1)
+        |SELECT bin, count(*) AS n_files,
+        |  CAST(sum(est) AS BIGINT) AS bytes,
+        |  CAST(min(month) AS DATE) AS from_month,
+        |  CAST(max(month) AS DATE) AS to_month
+        |FROM r GROUP BY bin""".stripMargin),
 
     // Skyline as SQL TEXT (g11's Pareto frontier, oracle reused): the
     // collapse + strict-improvement ordered scan expressed entirely in
@@ -297,7 +367,7 @@ object QueriesSql {
     // 2^20) rows), joined back. Same rows as a single global ordered
     // window, with no single-partition sort — the pure-SQL twin of
     // RelationalOps.globalPrefixMin's range-partition + offset shape.
-    "sql13_pareto" -> ((s, d) => {
+    Query("sql13_pareto", (s, d) => {
       sqlSession(s, d, "orders").sql(
         """WITH pts AS (SELECT CAST(floor(o_totalprice * 100) AS BIGINT)
           |    AS price_c,
@@ -321,80 +391,7 @@ object QueriesSql {
           |  FROM loc l JOIN off o ON l.b = o.b)
           |SELECT price_c, -negday AS day_off FROM sc
           |WHERE m IS NULL OR negday < m""".stripMargin)
-    })
-  )
+    },
+      sqlOf(QueriesRelational.registry, "g11_pareto")))
 
-  def oracle: Map[String, String] = Map(
-    // identical text on both engines by construction
-    "sql16_ols" -> QueriesMl.oracle("ml1_ols"),
-    // SQL twins reuse the long-green oracle of the query they mirror —
-    // one source of truth per semantics.
-    "sql1_pricing" -> QueriesReference.oracle("q1_pricing_summary"),
-    "sql2_cosine_topk" -> QueriesVector.oracle("v1_cosine_topk"),
-    "sql3_hll_distinct" ->
-      s"""SELECT estimate FROM (
-         |${QueriesSketch.oracle("sk1_hll_distinct")}
-         |) t""".stripMargin,
-    "sql4_kmv_distinct" ->
-      s"""SELECT estimate FROM (
-         |${QueriesSketch.oracle("sk2_kmv_distinct")}
-         |) t""".stripMargin,
-    "sql5_hash_bucket" ->
-      """SELECT CAST(concat('0x', substr(md5(
-        |    concat('b:', CAST(o_orderkey AS VARCHAR))), 1, 15)) AS BIGINT)
-        |    % 16 AS bucket,
-        |  count(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-    "sql6_topk_agg" ->
-      """SELECT l_returnflag, rk, qty FROM (
-        |  SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS qty,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_quantity DESC) AS rk
-        |  FROM lineitem) WHERE rk <= 5""".stripMargin,
-    "sql7_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |  coalesce(l_linestatus, 'ALL') AS status,
-        |  CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-        |    AS BIGINT) AS rev_cents,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "sql8_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-        |    AS running
-        |FROM orders WHERE o_custkey % 100 = 0""".stripMargin,
-    "sql9_grouping_sets" -> QueriesRelational.oracle("g6_grouping_sets"),
-    "sql10_explode_tokens" -> QueriesText.oracle("x5_vocab_topk"),
-    "sql11_pivot" -> QueriesRelational.oracle("g4_pivot"),
-    "sql12_range_frame" -> QueriesRelational.oracle("w6_range_frame"),
-    "sql13_pareto" -> QueriesRelational.oracle("g11_pareto"),
-    // sql15: the identical linear recursion in DuckDB's recursive CTE
-    // dialect (same ranked month-file frame, same reset decision).
-    "sql15_reset_binpack" ->
-      """WITH RECURSIVE f AS (
-        |  SELECT month, est, CAST(row_number() OVER (ORDER BY month)
-        |    AS BIGINT) AS rk
-        |  FROM (SELECT date_trunc('month', l_shipdate) AS month,
-        |      count(*) * 64 AS est
-        |    FROM lineitem GROUP BY 1)),
-        |r(rk, month, est, cum, bin) AS (
-        |  SELECT rk, month, est, est, CAST(0 AS BIGINT)
-        |  FROM f WHERE rk = 1
-        |  UNION ALL
-        |  SELECT f.rk, f.month, f.est,
-        |    CASE WHEN r.cum + f.est > 4194304 THEN f.est
-        |      ELSE r.cum + f.est END,
-        |    CASE WHEN r.cum + f.est > 4194304 THEN r.bin + 1
-        |      ELSE r.bin END
-        |  FROM r JOIN f ON f.rk = r.rk + 1)
-        |SELECT bin, count(*) AS n_files,
-        |  CAST(sum(est) AS BIGINT) AS bytes,
-        |  CAST(min(month) AS DATE) AS from_month,
-        |  CAST(max(month) AS DATE) AS to_month
-        |FROM r GROUP BY bin""".stripMargin,
-    "sql14_hll_grouped" -> QueriesSketch.oracle("sk7_hll_grouped")
-  )
 }

@@ -1297,7 +1297,7 @@ object QueriesStorage {
     addVersion(m) <= v &&
       !(m <= lit("1995-06-01").cast("date") && lit(v >= 3))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // COMMIT PROTOCOL, executed (VERDICT r15 #1 — the write half stor6
     // lacked): the month-file table is built through the real
     // CommitLog — files staged invisible, manifests published by
@@ -1314,7 +1314,7 @@ object QueriesStorage {
     // three expired manifests, guards true — are deterministic by
     // construction). The refusal guard (time travel below the horizon
     // throws) and on-disk deletion are measured, not asserted.
-    "stor7_commit_protocol" -> ((s, d) => {
+    Query("stor7_commit_protocol", (s, d) => {
       val t = stor7Table(s, d)
       val sm = stor7Summary(t)
       val head = CommitLog.latestVersion(t)
@@ -1333,7 +1333,31 @@ object QueriesStorage {
             .as("files_physically_gone"),
           lit(nLive.toLong).as("n_live_files"),
           col("rows_current"), col("sum_qty_cents"))
-    }),
+    },
+      // stor7: protocol constants are deterministic by construction
+      // (4 commits, exactly one forced conflict, manifests v1-v3
+      // expired, both guards must hold); file counts and row/checksum
+      // state recompute relationally from lineitem's ship months. The
+      // retention delete removed months ≤ 1995-06, so the surviving
+      // head snapshot is everything after.
+      """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
+        |    count(*) AS n_rows,
+        |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+        |      AS BIGINT) AS cents
+        |  FROM lineitem GROUP BY 1)
+        |SELECT CAST(4 AS BIGINT) AS version_head,
+        |  CAST(1 AS BIGINT) AS n_conflicts,
+        |  CAST(3 AS BIGINT) AS n_manifests_expired,
+        |  (SELECT count(*) FROM f WHERE m <= DATE '1995-06-01')
+        |    AS n_files_deleted,
+        |  true AS expired_read_refused,
+        |  true AS files_physically_gone,
+        |  (SELECT count(*) FROM f WHERE m > DATE '1995-06-01')
+        |    AS n_live_files,
+        |  (SELECT CAST(sum(n_rows) AS BIGINT) FROM f
+        |    WHERE m > DATE '1995-06-01') AS rows_current,
+        |  (SELECT CAST(sum(cents) AS BIGINT) FROM f
+        |    WHERE m > DATE '1995-06-01') AS sum_qty_cents""".stripMargin),
     // SNAPSHOT / TIME-TRAVEL reads (VERDICT r14 #5 — the versioned-read
     // capability that completes the table-format story): lineitem lives
     // as a REAL month-partitioned layout (one "file" per ship month,
@@ -1352,7 +1376,7 @@ object QueriesStorage {
     // The oracle computes every column relationally from raw lineitem:
     // layout and versioning are execution properties, the result is
     // invariant.
-    "stor6_time_travel" -> ((s, d) => {
+    Query("stor6_time_travel", (s, d) => {
       val path = snapshotPath(s, d)
       // mid-month boundaries so file-level pruning (whole months) and
       // the exact row predicate visibly differ: scanned > matched
@@ -1393,1144 +1417,10 @@ object QueriesStorage {
             col("rows_matched"), col("sum_qty_cents"))
       }
       perVersion.reduce(_ unionByName _)
-    }),
-    // INCREMENTAL SCAN — the downstream-consumer contract the
-    // table-format story was missing: a pipeline that has processed
-    // snapshot v reads ONLY the files commit v+1 added (never a table
-    // rescan), which is how every incremental ETL/CDC consumer rides
-    // an append-only 100 TB table. Three append commits over the
-    // month-file layout; for each the query reads the INCREMENT
-    // (fromV, toV] through the log and reports new-file count, rows
-    // added, and the exact checksum — and the cumulative sums across
-    // increments must reconstruct the full table (the oracle computes
-    // both from raw lineitem). The refusal arm — an increment spanning
-    // a REWRITE commit must throw rather than double-count — is pinned
-    // in StorageCompactionSpec against stor8's rewrite timeline.
-    "stor9_incremental_scan" -> ((s, d) => {
-      val t = stor9Table(s, d)
-      (1L to 3L).map { v =>
-        val files = CommitLog.addedFiles(t, v - 1, v)
-        CommitLog.readIncrement(s, t, v - 1, v)
-          .agg(count(lit(1)).as("rows_added"),
-            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-              .cast("long").as("sum_qty_cents"))
-          .select(lit(v).as("version"),
-            lit(files.size.toLong).as("n_files_new"),
-            col("rows_added"), col("sum_qty_cents"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // EXACTLY-ONCE DERIVED TABLE — the consumer half of the
-    // incremental contract stor9 demonstrates on the producer side:
-    // a downstream table built by syncIncrement, one bounded sync per
-    // upstream commit, each reading ONLY that commit's files,
-    // applying a row-wise transform, and recording the consumed
-    // upstream version IN the downstream manifest (crash before the
-    // commit → invisible files, redo; crash after → the recorded
-    // version stops any replay; racing syncers → one lands, pinned in
-    // CommitLogSpec). This is how a 100 TB pipeline keeps a family of
-    // derived tables in step with a source-of-truth table without
-    // rescans and without double-counts. The downstream is itself a
-    // commit-log table: the query time-travels it version by version
-    // and reports the cumulative derived state; the oracle recomputes
-    // each from the upstream month windows.
-    "stor14_derived_sync" -> ((s, d) => {
-      val (_, down) = stor14Tables(s, d)
-      val consumed = CommitLog.consumedUpstreamVersion(down)
-      (1L to 3L).map { v =>
-        CommitLog.read(s, down, Some(v))
-          .agg(count(lit(1)).as("rows_cum"),
-            sum(col("qty_cents")).cast("long").as("sum_qty_cents_cum"))
-          .select(lit(v).as("version"), col("rows_cum"),
-            col("sum_qty_cents_cum"), lit(consumed).as("consumed_up"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // COMPACTION, executed (VERDICT r15 #2): stor3 planned the
-    // bin-packing of the small month-files; this query RUNS it through
-    // the commit log (1 MiB target — stor3's discipline, sized so the
-    // rewrite merges multiple groups at every correctness scale) —
-    // v1 commits the month files, the plan is one
-    // metadata aggregate broadcast into a cluster-side rewrite, v2 is
-    // the rewrite commit (adds per-bin compacted files, removes the
-    // months). The result reads the COMPACTED snapshot back and
-    // reports, per bin: how many files merged, rows, the exact integer
-    // checksum (stor5's losslessness discipline — rewritten bytes must
-    // carry identical data), the bin's ship span, and whether the
-    // stor2 3-month window still prunes it (zone-map prunability
-    // survives compaction because bins pack CONSECUTIVE months). The
-    // oracle recomputes the plan and every stat relationally from raw
-    // lineitem; StorageCompactionSpec pins the physical side (fewer
-    // files on disk, v1 time travel intact, log at v2).
-    "stor8_compaction_exec" -> ((s, d) => {
-      val t = stor8Table(s, d)
-      val lo = lit(java.sql.Date.valueOf("1997-04-01"))
-      val hi = lit(java.sql.Date.valueOf("1997-07-01")) // end-exclusive
-      CommitLog.read(s, t) // head = v2, the compacted snapshot
-        .groupBy(col("bin").cast("long").as("bin"))
-        .agg(countDistinct(col("file_month")).as("n_files_merged"),
-          count(lit(1)).as("n_rows"),
-          sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-            .cast("long").as("sum_qty_cents"),
-          min(col("file_month")).as("from_month"),
-          max(col("file_month")).as("to_month"),
-          min(col("ship")).as("__mn"), max(col("ship")).as("__mx"))
-        .select(col("bin"), col("n_files_merged"), col("n_rows"),
-          col("sum_qty_cents"), col("from_month"), col("to_month"),
-          (col("__mx") < lo || col("__mn") >= hi).as("pruned"))
-    }),
-
-    // SCAN PLANNING FROM MANIFEST STATS (the read-side payoff of
-    // carrying per-file column bounds in commits — Iceberg's
-    // lower/upper_bounds): the month-file table is committed ONCE with
-    // ship + orderkey min/max per file, and the query plans a
-    // conjunctive range scan (a 2-month ship window AND an orderkey
-    // band) from the manifest ALONE — no footer reads, no data I/O —
-    // then opens ONLY the planned files. At 100 TB this is the planning
-    // step that makes a selective query cost O(matching files) instead
-    // of O(table): the driver touches O(manifest) metadata and the
-    // skipped files are never even listed to the reader. The ship
-    // predicate prunes whole months; the orderkey band prunes NOTHING
-    // (keys are uniform across months — min/max spans of every file
-    // overlap any band), which the result REPORTS honestly: stats on a
-    // layout-uncorrelated column carry no skipping power, exactly why
-    // z-ordering (stor4) exists. The oracle recomputes the zone-map
-    // arithmetic and the exact row predicate relationally; equality
-    // proves the metadata-planned scan returns precisely what a full
-    // scan would.
-    "stor10_stats_pruned_scan" -> ((s, d) => {
-      val t = stor10Table(s, d)
-      val (lo, hi) = ("1997-04-15", "1997-06-20") // end-exclusive
-      val (kLo, kHi) = (1000L, 2000L)             // end-exclusive
-      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
-      val plan = CommitLog.planScan(t, 1L, Seq(
-        CommitLog.RangePredicate("ship", lo, hi),
-        CommitLog.RangePredicate("l_orderkey", kLo.toString,
-          kHi.toString, numCmp)))
-      val nLive = CommitLog.liveFiles(t, 1L).size
-      val rowPred = col("ship") >= lit(lo).cast("date") &&
-        col("ship") < lit(hi).cast("date") &&
-        col("l_orderkey") >= kLo && col("l_orderkey") < kHi
-      CommitLog.readFiles(s, t, plan.selected)
-        .agg(count(lit(1)).as("rows_scanned"),
-          sum(when(rowPred, 1L).otherwise(0L)).as("rows_matched"),
-          coalesce(sum(when(rowPred,
-            floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))),
-            lit(0L)).as("sum_qty_cents"))
-        .select(lit(nLive.toLong).as("n_live_files"),
-          lit(plan.skipped.getOrElse("ship", 0L)).as("n_skip_ship"),
-          lit(plan.skipped.getOrElse("l_orderkey", 0L)).as("n_skip_key"),
-          lit(plan.noStats.size.toLong).as("n_no_stats"),
-          lit(plan.selected.size.toLong).as("n_files_read"),
-          col("rows_scanned"), col("rows_matched"), col("sum_qty_cents"))
-    }),
-
-    // COPY-ON-WRITE row-level DELETE through the commit log — the DML
-    // half of the table-format story (append = stor7/stor9, rewrite =
-    // stor8; this is DELETE WHERE): candidate files come from manifest
-    // stats (planScan — only files whose ship bounds overlap the
-    // predicate), each candidate is rewritten WITHOUT its matching
-    // rows (a candidate left empty is dropped, not rewritten), and the
-    // commit swaps candidates for rewrites atomically with TIGHTENED
-    // stats. Untouched files are never opened, never rewritten — at
-    // 100 TB a delete of a 2-month window costs O(2 months of data),
-    // not O(table). The result proves all four invariants at once:
-    // the file ledger (total/candidates/rewritten/dropped/untouched
-    // from the log), the row ledger (head rows + checksum = exactly
-    // the kept rows), time travel to the pre-delete snapshot intact,
-    // and the closing metadata argument — a post-delete scan for the
-    // deleted range plans ZERO files from the rewritten stats alone.
-    // The oracle recomputes every column relationally from raw
-    // lineitem month arithmetic.
-    "stor11_cow_delete" -> ((s, d) => {
-      val t = stor11Table(s, d)
-      val pred = CommitLog.RangePredicate("ship", CowLo, CowHi)
-      val v1Files = CommitLog.liveFiles(t, 1L).size
-      val cands = CommitLog.planScan(t, 1L, Seq(pred)).selected.size
-      val headFiles = CommitLog.liveFiles(t, 2L).size
-      val rewritten = headFiles - (v1Files - cands)
-      val overlapAfter = CommitLog.planScan(t, 2L, Seq(pred)).selected.size
-      val cents = sum(floor(col("l_quantity") * 100 + lit(0.5))
-        .cast("long")).cast("long")
-      val v1Agg = CommitLog.read(s, t, Some(1L))
-        .agg(count(lit(1)).as("rows_at_v1"))
-      val headAgg = CommitLog.read(s, t)
-        .agg(count(lit(1)).as("rows_head"), cents.as("sum_qty_cents"))
-      v1Agg.crossJoin(broadcast(headAgg))
-        .select(lit(v1Files.toLong).as("n_files_v1"),
-          lit(cands.toLong).as("n_candidates"),
-          lit(rewritten.toLong).as("n_rewritten"),
-          lit((cands - rewritten).toLong).as("n_dropped"),
-          lit((v1Files - cands).toLong).as("n_untouched"),
-          col("rows_at_v1"),
-          (col("rows_at_v1") - col("rows_head")).as("rows_deleted"),
-          col("rows_head"), col("sum_qty_cents"),
-          lit(overlapAfter.toLong).as("n_files_overlap_after"))
-    }),
-
-    // MERGE-ON-READ row-level DELETE through the commit log (VERDICT
-    // r16 #1 — the format-native answer to point deletes at 100 TB):
-    // v2 publishes ONE positional delete file (the (fpath, pos)
-    // identity of every ship-window row, found via planScan's
-    // candidate pruning) and rewrites NOTHING — the erasure costs
-    // O(rows deleted) bytes where stor11's COW rewrites whole files;
-    // reads apply the marks as a broadcast anti-join on the scan's
-    // (_metadata.file_path, _metadata.row_index). v3 FOLDS: only the
-    // marked files are rewritten (the reader's own anti-join), the
-    // delete file retires in the same atomic commit, and the scan
-    // overhead returns to zero. The query reads all three versions
-    // back through the log and reports the ledger per version —
-    // data/delete file counts, marked rows, visible rows, exact cents
-    // — proving MOR at v2, the fold at v3, and (because the window
-    // matches stor11's) that COW and MOR converge on the identical
-    // relational state; the oracle recomputes every column from raw
-    // lineitem month arithmetic. StorageCompactionSpec pins the
-    // physical side: v2 time travel still applies marks after the
-    // fold, delete-file bytes ≪ COW rewrite bytes, incremental reads
-    // refuse to cross the D commit.
-    "stor15_mor_delete" -> ((s, d) => {
-      val t = stor15Table(s, d)
-      val dataDir = CommitLog.dataDir(t)
-      (1L to 3L).map { v =>
-        val nData = CommitLog.liveFiles(t, v).size
-        val dels = CommitLog.liveDeleteFiles(t, v)
-        val marked =
-          if (dels.isEmpty) lit(0L)
-          else lit(s.read.parquet(dels.map(f => s"$dataDir/$f"): _*)
-            .count())
-        CommitLog.read(s, t, Some(v))
-          .agg(count(lit(1)).as("rows_visible"),
-            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-              .cast("long").as("sum_qty_cents"))
-          .select(lit(v).as("version"),
-            lit(nData.toLong).as("n_data_files"),
-            lit(dels.size.toLong).as("n_delete_files"),
-            marked.as("rows_marked"),
-            col("rows_visible"), col("sum_qty_cents"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // EQUALITY DELETE through the commit log (VERDICT r17 #1 — the
-    // third delete form, closing the triangle: COW stor11 rewrites
-    // whole files synchronously, positional stor15 scans candidates
-    // once to learn (file, ordinal) pairs, equality stor21 writes
-    // ONLY THE SUBJECT KEYS — the GDPR-erasure request lands as one
-    // tiny file with zero data I/O, and reads apply it as a broadcast
-    // anti-join on the key). v3 folds like stor15: candidates from
-    // ship stats alone are rewritten with the keys applied and the E
-    // file retires atomically. The query reports the per-version
-    // ledger — data/E-file counts, keys marked, visible rows, exact
-    // cents. THREE-WAY PARITY: the delete window matches stor11/
-    // stor15 exactly, so all three oracles recompute the SAME month
-    // arithmetic ground truth — equal rows_visible/cents across the
-    // three queries IS the COW ≡ positional ≡ equality proof
-    // (StorageCompactionSpec asserts the head-state signatures equal
-    // directly). The oracle adds the distinct-key count from the same
-    // key formula.
-    "stor21_eq_delete" -> ((s, d) => {
-      val t = stor21Table(s, d)
-      val dataDir = CommitLog.dataDir(t)
-      (1L to 3L).map { v =>
-        val nData = CommitLog.liveFiles(t, v).size
-        val eqs = CommitLog.liveEqDeleteFiles(t, v)
-        val marked =
-          if (eqs.isEmpty) lit(0L)
-          else lit(s.read.parquet(
-            eqs.map(_._1).map(f => s"$dataDir/$f"): _*).count())
-        CommitLog.read(s, t, Some(v))
-          .agg(count(lit(1)).as("rows_visible"),
-            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-              .cast("long").as("sum_qty_cents"))
-          .select(lit(v).as("version"),
-            lit(nData.toLong).as("n_data_files"),
-            lit(eqs.size.toLong).as("n_eqdelete_files"),
-            marked.as("keys_marked"),
-            col("rows_visible"), col("sum_qty_cents"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // Z-ORDER-AWARE COMPACTION, executed (VERDICT r16 #3): v1 is the
-    // ingest-ordered month layout (dm bounds tight, pk bounds
-    // full-domain per file — stor2's negative control), v2 the same
-    // rows rewritten in z(dm, pk) order into 64 equal-row files with
-    // tightened 2-D manifest bounds, one atomic rewrite commit. The
-    // query runs the SAME planScan probe (stor4's 2-D box: ship-1997
-    // days AND a narrow partkey band) against both versions' manifest
-    // stats and reads back only the planned files: the skip count must
-    // JUMP (v1 prunes only months outside 1997 — the pk predicate has
-    // zero power on a layout it doesn't cluster; v2 prunes on both
-    // dims), rows_matched and the matched checksum are IDENTICAL
-    // across versions (pruning soundness), and the full-table cents
-    // are identical (lossless rewrite — stor5's discipline). The
-    // oracle recomputes both layouts relationally: month zone maps for
-    // v1, the exact zSql interleave rank → 64-chunk zone maps for v2
-    // (stor4's arithmetic), plus the box-matched rows and checksums
-    // from raw lineitem.
-    "stor16_zorder_compact" -> ((s, d) => {
-      val t = stor16Table(s, d)
-      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
-      val preds = Seq(
-        CommitLog.RangePredicate("dm", "1827", "2192", numCmp),
-        CommitLog.RangePredicate("pk", "100", "301", numCmp))
-      val rowPred = col("dm") >= 1827L && col("dm") < 2192L &&
-        col("pk") >= 100L && col("pk") < 301L
-      val cents = floor(col("l_quantity") * 100 + lit(0.5)).cast("long")
-      (1L to 2L).map { v =>
-        val live = CommitLog.liveFiles(t, v)
-        val plan = CommitLog.planScan(t, v, preds)
-        val total = CommitLog.read(s, t, Some(v))
-          .agg(sum(cents).cast("long").as("sum_qty_cents_total"))
-        CommitLog.readFiles(s, t, plan.selected)
-          .agg(count(lit(1)).as("rows_scanned"),
-            sum(when(rowPred, 1L).otherwise(0L)).as("rows_matched"),
-            coalesce(sum(when(rowPred, cents)), lit(0L)).cast("long")
-              .as("sum_qty_cents_matched"))
-          .crossJoin(broadcast(total))
-          .select(lit(v).as("version"),
-            lit(live.size.toLong).as("n_files"),
-            lit((live.size - plan.selected.size).toLong).as("n_skipped"),
-            lit(plan.skipped.getOrElse("dm", 0L)).as("n_skip_dm"),
-            lit(plan.skipped.getOrElse("pk", 0L)).as("n_skip_pk"),
-            col("rows_scanned"), col("rows_matched"),
-            col("sum_qty_cents_matched"), col("sum_qty_cents_total"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // BATCH POINT-LOOKUP FILE PRUNING (the GDPR-erasure / dynamic-
-    // file-pruning shape): a 40-key IN-list planned against the
-    // manifest Bloom filters in ONE pass — a file is opened iff its
-    // filter admits ANY key in the batch. On stor18's ingest-ordered
-    // layout the zone maps would keep every file for every key; the
-    // batch bloom plan opens only the files that might hold any of
-    // the 40 keys, and correctness is exact (no false negatives, so
-    // every matching row lives in a selected file — rows_matched,
-    // cents, and distinct keys found all equal the global IN-list
-    // counts). The oracle recomputes bit-exact batch membership
-    // relationally with the key as a COLUMN (no text explosion).
-    "stor20_bloom_in_prune" -> ((s, d) => {
-      val t = stor18Table(s, d)
-      val keys = (0 until 40).map(i => i * 2500L + 7L)
-      val plan = CommitLog.planScan(t, 1L, Nil, Nil,
-        Seq(CommitLog.InPredicate("k", keys)))
-      val nFiles = CommitLog.liveFiles(t, 1L).size.toLong
-      val inSet = col("k").isin(keys: _*)
-      val agg =
-        if (plan.selected.isEmpty)
-          s.range(1).select(lit(0L).as("rows_scanned"),
-            lit(0L).as("rows_matched"), lit(0L).as("cents_matched"),
-            lit(0L).as("n_keys_found"))
-        else CommitLog.readFiles(s, t, plan.selected)
-          .agg(count(lit(1)).as("rows_scanned"),
-            sum(when(inSet, 1L).otherwise(0L)).as("rows_matched"),
-            coalesce(sum(when(inSet, col("cents"))), lit(0L))
-              .cast("long").as("cents_matched"),
-            countDistinct(when(inSet, col("k"))).as("n_keys_found"))
-      agg.select(lit(40L).as("n_keys"),
-        lit(nFiles).as("n_files"),
-        lit(plan.selected.size.toLong).as("bloom_selected"),
-        col("rows_scanned"), col("rows_matched"),
-        col("cents_matched"), col("n_keys_found"))
-    }),
-
-    // PARTITION EVOLUTION (the Iceberg hidden-partitioning contract):
-    // the old era lives in ship-month files with ship bounds only, the
-    // new era (post-evolution commit) in orderkey buckets with key
-    // bounds only — no history rewritten, stats heterogeneous per
-    // file. The ship probe prunes the OLD era hard and conservatively
-    // keeps every new file (reported in n_nostats); the key probe
-    // prunes the NEW era hard and keeps every old file. Correctness is
-    // layout-blind: rows_matched/cents equal the global predicate
-    // counts because a file missing a predicate column is always read,
-    // never skipped blind. The oracle rebuilds both eras' zone maps
-    // and the band arithmetic from raw lineitem.
-    "stor19_partition_evolution" -> ((s, d) => {
-      val t = stor19Table(s, d)
-      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
-      // band bounds from the v2 manifest stats ALONE (metadata-only):
-      // max okey over the key-spec era's bounds = the builder's mxo
-      val mxo = CommitLog.statsAt(t, 2L).values.flatMap(_.get("okey"))
-        .map(_.max.toLong).max
-      val step = (mxo + 15L) / 16L
-      val (blo, bhi) = (mxo / 4L, mxo / 4L + (step + 1L) / 2L)
-      val nFiles = CommitLog.liveFiles(t, 2L).size.toLong
-      val probes = Seq(
-        ("ship",
-          Seq(CommitLog.RangePredicate("ship", "1996-03-01",
-            "1996-06-01")),
-          col("ship") >= lit("1996-03-01").cast("date") &&
-            col("ship") < lit("1996-06-01").cast("date")),
-        ("key",
-          Seq(CommitLog.RangePredicate("okey", blo.toString,
-            bhi.toString, numCmp)),
-          col("okey") >= blo && col("okey") < bhi))
-      probes.map { case (label, preds, rowPred) =>
-        val plan = CommitLog.planScan(t, 2L, preds)
-        CommitLog.readFiles(s, t, plan.selected)
-          .agg(count(lit(1)).as("rows_scanned"),
-            sum(when(rowPred, 1L).otherwise(0L)).as("rows_matched"),
-            coalesce(sum(when(rowPred, col("cents"))), lit(0L))
-              .cast("long").as("cents_matched"))
-          .select(lit(label).as("probe"),
-            lit(nFiles).as("n_files"),
-            lit((nFiles - plan.selected.size).toLong).as("n_skipped"),
-            lit(plan.noStats.size.toLong).as("n_nostats"),
-            col("rows_scanned"), col("rows_matched"),
-            col("cents_matched"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // WRITE-AUDIT-PUBLISH through branch refs (the Iceberg WAP
-    // pattern): v1 = every month but the newest, ref `main` cut there;
-    // v2 = a corrupt candidate batch (quantity +1000) committed on
-    // branch `wap_bad`; v3 = the clean candidate on `wap_good`. The
-    // audit runs on each branch's INCREMENT only, and publish is an
-    // O(1) fast-forward CAS of `main` — the bad branch's rows are
-    // NEVER reachable through the published lineage (the `published`
-    // column is isAncestor against the final main ref). The oracle
-    // recomputes every stage from raw lineitem month arithmetic: the
-    // held-out month's rows/cents, the +1000-per-row cents shift on
-    // the bad branch, the violation counts, and the publish verdicts.
-    // CommitLogBranchSpec pins the protocol side (CAS races,
-    // fast-forward refusal on divergence, branch-blind replay).
-    "stor17_wap_publish" -> ((s, d) => {
-      val t = stor17Table(s, d)
-      val mainV = CommitLog.refVersion(t, "main")
-      (1L to 3L).map { v =>
-        val viol =
-          if (v == 1L) lit(0L)
-          else lit(CommitLog.readIncrement(s, t, 1L, v)
-            .filter(col("l_quantity") > 100.0).count())
-        CommitLog.read(s, t, Some(v))
-          .agg(count(lit(1)).as("rows_visible"),
-            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-              .cast("long").as("sum_qty_cents"))
-          .select(lit(v).as("version"),
-            lit(CommitLog.liveFiles(t, v).size.toLong).as("n_files"),
-            col("rows_visible"), col("sum_qty_cents"),
-            viol.as("audit_viol"),
-            lit(if (CommitLog.isAncestor(t, v, mainV)) 1L else 0L)
-              .as("published"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // BLOOM-FILTER FILE SKIPPING from the manifest — equality pruning
-    // where zone maps are powerless: the lookup key is uniform across
-    // ingest-ordered files, so every file's (min, max) covers ~the
-    // whole domain and the range probe (`zone_selected`) keeps nearly
-    // everything, while the per-file Bloom filter (`bloom_selected`)
-    // keeps only the files that can contain the key — for the `hit`
-    // probe the handful that actually do (plus rare false positives),
-    // for the in-domain `miss` probe almost none. rows_scanned is the
-    // measured read cost of the bloom plan; rows_matched/cents are
-    // exact (no false negatives, so every matching row lives in a
-    // selected file). The oracle recomputes the bucket layout, both
-    // probe keys, AND bit-exact Bloom membership relationally — the
-    // hash family is integer arithmetic shared verbatim with the
-    // planner (a file passes iff for each of the 3 target bits some
-    // row sets it via any of its 3 probes).
-    "stor18_bloom_skip" -> ((s, d) => {
-      val t = stor18Table(s, d)
-      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
-      val tbl = CommitLog.read(s, t)
-      // both probes MID-domain (smallest present/absent key >= 50000):
-      // an edge key would let the min/max zone maps prune by accident
-      // and understate the contrast this query measures
-      val qhit = tbl.filter(col("k") >= 50000L).agg(min(col("k")))
-        .head().getLong(0)
-      // OPT r18 (guide §2.4): anti-join semantics don't need the right
-      // side distinct — dropping it removes one exchange + aggregate
-      // over the table; result identical.
-      val qmiss = s.range(50000L, 100000L).toDF("id")
-        .join(tbl.select(col("k")), col("id") === col("k"), "left_anti")
-        .agg(min(col("id"))).head().getLong(0)
-      val nFiles = CommitLog.liveFiles(t, 1L).size.toLong
-      Seq(("hit", qhit), ("miss", qmiss)).map { case (label, qk) =>
-        val zone = CommitLog.planScan(t, 1L,
-          Seq(CommitLog.RangePredicate("k", qk.toString,
-            (qk + 1L).toString, numCmp)))
-        val bloom = CommitLog.planScan(t, 1L, Nil,
-          Seq(CommitLog.EqPredicate("k", qk)))
-        val scanned =
-          if (bloom.selected.isEmpty)
-            s.range(1).select(lit(0L).as("rows_scanned"),
-              lit(0L).as("rows_matched"), lit(0L).as("cents_matched"))
-          else CommitLog.readFiles(s, t, bloom.selected)
-            .agg(count(lit(1)).as("rows_scanned"),
-              sum(when(col("k") === qk, 1L).otherwise(0L))
-                .as("rows_matched"),
-              coalesce(sum(when(col("k") === qk, col("cents"))), lit(0L))
-                .cast("long").as("cents_matched"))
-        scanned.select(lit(label).as("probe"), lit(qk).as("qk"),
-          lit(nFiles).as("n_files"),
-          lit(zone.selected.size.toLong).as("zone_selected"),
-          lit(bloom.selected.size.toLong).as("bloom_selected"),
-          col("rows_scanned"), col("rows_matched"), col("cents_matched"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // MULTI-TABLE ATOMIC COMMIT (VERDICT r17 #6): a fact table and
-    // its derived aggregate land through the transaction log — stage
-    // in both, ONE atomic marker claim, idempotent expose — so
-    // readers see each batch in neither table or both. Txn 3 stages
-    // the last month in both tables but crashes before its marker:
-    // its rows are invisible in BOTH (a per-table commit protocol
-    // would have let one table expose and not the other). The query
-    // full-outer-joins rollup(fact) with the agg table per month —
-    // any parity break (a month on one side only, mismatched
-    // counts/cents) would surface as nulls in the hash — plus the
-    // coordinator ledger: 2 committed txns, both tables at v2, one
-    // staged-pending txn. The oracle recomputes the month arithmetic
-    // with the last month held out. TxnLogSpec pins the crash matrix
-    // (pre-marker invisibility, post-marker recovery, racing
-    // recoverers, abort refusal).
-    "stor23_multitable_txn" -> ((s, d) => {
-      import graft.storage.TxnLog
-      val (coord, fact, agg) = stor23Coord(s, d)
-      val factDf = TxnLog.read(s, coord, fact)
-      val aggDf = TxnLog.read(s, coord, agg)
-      val roll = factDf.groupBy("month")
-        .agg(count(lit(1)).as("n_fact_rows"),
-          sum(col("cents")).cast("long").as("cents_fact"))
-      roll.join(aggDf, Seq("month"), "full_outer")
-        .select(col("month"), col("n_fact_rows"), col("cents_fact"),
-          col("n_rows").as("n_agg_rows"),
-          col("cents_sum").as("cents_agg"),
-          lit(TxnLog.committedTxns(coord).size.toLong)
-            .as("n_txns_committed"),
-          lit(CommitLog.latestVersion(fact)).as("fact_version"),
-          lit(CommitLog.latestVersion(agg)).as("agg_version"),
-          lit(TxnLog.stagedTxnIds(fact).size.toLong)
-            .as("n_staged_pending"))
-    }),
-
-    // STRING-KEYED BLOOM FILE SKIPPING (VERDICT r17 #4): point and
-    // batch lookups by DOCUMENT URI over the text corpus, planned
-    // from manifest Bloom filters built on md5Prefix60(uri) — the
-    // erasure/lookup shape for doc_id/text-keyed tables where stor18's
-    // Long-key hashing can't reach. The uri zone maps are the honest
-    // negative control (sources/langs interleave in every bucket, so
-    // string (min, max) keeps ~every file); the bloom plan opens the
-    // handful that can hold the key. Three arms: a present uri, an
-    // absent in-domain uri, and a 10-key batch (InPredicate.ofString —
-    // the GDPR-text shape). Correctness is exact: no false negatives,
-    // so matched rows/chars equal the global uri-equality counts. The
-    // oracle rebuilds the bucket layout, the uris, the md5-prefix60
-    // hashes, and bit-exact Bloom membership relationally.
-    "stor22_string_bloom_skip" -> ((s, d) => {
-      val t = stor22Table(s, d)
-      // probe construction is a BOUNDED driver-side step (≤11 uris —
-      // the probe set, not data), built from the RAW documents rows so
-      // it never assumes dense ids (sf1's doc_id domain is SPARSE:
-      // 50k distinct ids up to 9e7 — a "mxid/2" point probe matched
-      // nothing there)
-      val raw = s.read.parquet(s"$d/documents.parquet")
-      def uriCol = concat(col("source"), lit(":"), col("lang"),
-        lit(":"), lpad(col("doc_id").cast("string"), 12, "0"))
-      val mxid = raw.agg(max(col("doc_id"))).head().getLong(0)
-      // hit: the smallest PRESENT id at or above mid-domain
-      val hitUri = raw.filter(col("doc_id") >= mxid / 2L)
-        .orderBy(col("doc_id")).limit(1)
-        .select(uriCol.as("uri")).head().getString(0)
-      val missUri = f"src0:en:${mxid + 7L}%012d"
-      // batch: the 10 smallest PRESENT ids in a deterministic residue
-      // class — presence-robust at any sparsity
-      val batchUris = raw.filter(col("doc_id") % 7 === 3)
-        .orderBy(col("doc_id")).limit(10)
-        .select(uriCol.as("uri"))
-        .collect().map(_.getString(0)).toSeq.sorted
-      val nFiles = CommitLog.liveFiles(t, 1L).size.toLong
-      // per-key zone probe, unioned across the batch (disjunction —
-      // planScan's predicate list is a conjunction)
-      def zoneSel(uris: Seq[String]): Long =
-        uris.map(u => CommitLog.planScan(t, 1L,
-          Seq(CommitLog.RangePredicate("uri", u, u + "~")))
-          .selected.toSet).reduce(_ ++ _).size.toLong
-      Seq(("hit", Seq(hitUri)), ("miss", Seq(missUri)),
-        ("batch", batchUris)).map { case (label, uris) =>
-        val sel =
-          if (uris.size == 1)
-            CommitLog.planScan(t, 1L, Nil,
-              Seq(CommitLog.EqPredicate.ofString("uri", uris.head)))
-              .selected
-          else CommitLog.planScan(t, 1L, Nil, Nil,
-            Seq(CommitLog.InPredicate.ofString("uri", uris))).selected
-        val inSet = col("uri").isin(uris: _*)
-        val agg =
-          if (sel.isEmpty)
-            s.range(1).select(lit(0L).as("rows_scanned"),
-              lit(0L).as("rows_matched"), lit(0L).as("chars_matched"))
-          else CommitLog.readFiles(s, t, sel)
-            .agg(count(lit(1)).as("rows_scanned"),
-              sum(when(inSet, 1L).otherwise(0L)).as("rows_matched"),
-              coalesce(sum(when(inSet, col("n_chars"))), lit(0L))
-                .cast("long").as("chars_matched"))
-        agg.select(lit(label).as("probe"),
-          lit(uris.size.toLong).as("n_keys"),
-          lit(nFiles).as("n_files"),
-          lit(zoneSel(uris)).as("zone_selected"),
-          lit(sel.size.toLong).as("bloom_selected"),
-          col("rows_scanned"), col("rows_matched"),
-          col("chars_matched"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // SNAPSHOT RESTORE — rollback as a NEW commit (Delta RESTORE /
-    // Iceberg rollback), the bad-deploy recovery move: stor24Table's
-    // v5 rolls the table back to v2, undoing a positional delete AND
-    // a late append era in one atomic metadata commit (files
-    // re-referenced, never copied). Two proofs in one result: the
-    // STATE arm reads the post-restore head grouped by year — every
-    // era A/B row is back with exact cent checksums, era C gone —
-    // and the CDF arm reads changes() across the restore commit,
-    // whose writer-recorded changeset must be the row-level INVERSE
-    // of the rolled-back commits (era B's %7 band re-inserted, era C
-    // deleted). The oracle recomputes both arms from raw orders with
-    // the same era cuts (1998/1999/2000 — the synthetic date domain)
-    // and band arithmetic.
-    "stor24_restore" -> ((s, d) => {
-      val t = stor24Table(s, d)
-      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
-        .cast("long")
-      val state = CommitLog.read(s, t)
-        .groupBy(year(col("odate")).cast("string").as("grp"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(cents).cast("long").as("cents"))
-        .select(lit("state").as("kind"), col("grp"), col("n_rows"),
-          col("cents")) // head must be exactly eras A+B (< 1999)
-      val feed = CommitLog.changes(s, t, 4L, 5L)
-        .groupBy(col("_change_type").as("grp"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(cents).cast("long").as("cents"))
-        .select(lit("cdf").as("kind"), col("grp"), col("n_rows"),
-          col("cents"))
-      state.unionByName(feed)
-    }),
-
-    // The commit HISTORY metadata table (Iceberg `table$history`,
-    // Delta DESCRIBE HISTORY) over the same 5-commit lifecycle: one
-    // row per manifest with parent, operation tag, file-ledger counts,
-    // and the changeset flag — the audit surface an operator reads
-    // before ANY rollback ("what landed since the last good
-    // snapshot?"). Driver-side O(log) metadata, no data bytes. The
-    // oracle pins the whole ledger by construction: append arms carry
-    // one file per month in their era (month counts recomputed from
-    // raw orders), the delete arm exactly one positional-delete file,
-    // and the restore arm removes era C's files plus the delete file
-    // while carrying its changeset.
-    "stor25_history" -> ((s, d) => {
-      CommitLog.history(s, stor24Table(s, d))
-        .select(col("version"), col("parent"),
-          coalesce(col("op"), lit("-")).as("op"),
-          col("n_added"), col("n_removed"), col("n_pos_delete_files"),
-          col("n_eq_delete_files"), col("has_changeset"))
-    }),
-
-    // TAG-PINNED RETENTION (the Iceberg expire-keeps-tagged-snapshots
-    // idea): expiry with a ref below the horizon keeps that snapshot
-    // readable forever — the audit-tag contract. stor26Table runs the
-    // lifecycle at build time (two COW erasure rewrites, tag `raw` at
-    // v1, expire to the head); this query proves all four outcomes at
-    // once: the TAGGED v1 still serves the full pre-erasure 1997 rows
-    // with exact cents (through its pin checkpoint — its parent
-    // manifests are gone), the head serves the post-erasure state,
-    // the UNTAGGED v2 is unresolvable, and v2's intermediate rewrite
-    // files — live only there — were physically reclaimed while the
-    // pinned originals stayed on disk. The oracle recomputes both row
-    // arms from raw orders (the two-step erasure composes to
-    // `%5==0 OR %3==0` over Jan–Jun) and pins the protocol arms by
-    // construction.
-    "stor26_tagged_expiry" -> ((s, d) => {
-      val t = stor26Table(s, d)
-      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
-        .cast("long")
-      def arm(label: String, v: Long) =
-        CommitLog.read(s, t, Some(v))
-          .agg(count(lit(1)).as("n"), sum(cents).cast("long").as("cents"))
-          .select(lit(label).as("arm"), col("n"), col("cents"))
-      val v2Resolvable =
-        try { CommitLog.liveFiles(t, 2L); 1L }
-        catch { case _: CommitLog.SnapshotExpired => 0L }
-      val dd = new java.io.File(CommitLog.dataDir(t))
-      val rw1Left = Option(dd.listFiles())
-        .fold(Seq.empty[java.io.File])(_.toSeq)
-        .count(_.getName.startsWith("rw1_")).toLong
-      // breadth of the pinned snapshot — data-derived (robust to an
-      // empty month at tiny SF), and reading it at all proves the
-      // pinned originals are still on disk
-      val months = CommitLog.read(s, t, Some(CommitLog.refVersion(t, "raw")))
-        .agg(countDistinct(col("omonth")).as("n"))
-        .select(lit("months_pinned").as("arm"), col("n"),
-          lit(0L).as("cents"))
-      arm("tag_raw", CommitLog.refVersion(t, "raw"))
-        .unionByName(arm("head", CommitLog.refVersion(t, "main")))
-        .unionByName(months)
-        .unionByName(s.range(1).select(lit("protocol").as("arm"),
-          lit(v2Resolvable * 10L + rw1Left).as("n"),
-          lit(0L).as("cents")))
-    }),
-
-    // METADATA-ONLY AGGREGATES (the Iceberg aggregate-pushdown idea):
-    // min/max answered from manifest stats with ZERO data bytes — at
-    // 100 TB a full-column extremum becomes an O(manifest) driver
-    // lookup. Three arms: stor13's table BEFORE the merge (bucket
-    // stats fold to the raw key domain), its post-merge HEAD (the
-    // fold must track the rewrite's tightened stats AND the insert
-    // file's shifted keys — metadata answers stay exact across DML),
-    // and stor24's MOR-delete snapshot where aggBounds REFUSES (live
-    // delete files mask rows; stats describe the raw file) and the
-    // reader falls back to a scan — refusal over a silently-wrong
-    // answer. The oracle recomputes all three from raw orders: the
-    // key domain, the band arithmetic's insert shift, and the
-    // era-minus-band extremum.
-    "stor27_meta_agg" -> ((s, d) => {
-      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
-      val t13 = stor13Table(s, d)
-      val t24 = stor24Table(s, d)
-      def metaArm(label: String, v: Long) = {
-        val (mn, mx) = CommitLog.aggBounds(t13, v, "o_orderkey", numCmp)
-          .getOrElse(sys.error(s"$label: stats-complete table must " +
-            "answer from metadata"))
-        s.range(1).select(lit(label).as("arm"),
-          lit("manifest").as("src"),
-          lit(mn.toLong).as("mn"), lit(mx.toLong).as("mx"))
-      }
-      // the MOR snapshot refuses metadata bounds -> scan fallback
-      require(CommitLog.aggBounds(t24, 3L, "o_orderkey", numCmp).isEmpty,
-        "live delete files must refuse metadata aggregates")
-      val fallback = CommitLog.read(s, t24, Some(3L))
-        .agg(min(col("o_orderkey")).as("mn"),
-          max(col("o_orderkey")).as("mx"))
-        .select(lit("mor_v3").as("arm"), lit("scan").as("src"),
-          col("mn"), col("mx"))
-      metaArm("v1", 1L).unionByName(metaArm("head", 2L))
-        .unionByName(fallback)
-    }),
-
-    // COLUMN MAPPING (the Delta column-mapping / Iceberg field-id
-    // idea): rename and drop as O(1) metadata commits over FROZEN
-    // physical names — no file rewritten at any scale, which at
-    // 100 TB is the difference between an instant ALTER TABLE and a
-    // full-table rewrite. The head serves both eras' files under the
-    // renamed column with the dropped column hidden; time travel
-    // serves v1 under its original names; exact column sets are
-    // pinned by loud requires and the ledger arm. The oracle
-    // recomputes both row arms from raw orders.
-    "stor28_column_mapping" -> ((s, d) => {
-      val t = stor28Table(s, d)
-      val head = CommitLog.read(s, t)
-      require(head.columns.toSeq == Seq("o_orderkey", "price"),
-        s"head must serve the mapped schema, got " +
-          head.columns.mkString(","))
-      val v1 = CommitLog.read(s, t, Some(1L))
-      require(v1.columns.toSeq ==
-        Seq("o_orderkey", "o_totalprice", "odate"),
-        s"v1 must serve its era's names, got ${v1.columns.mkString(",")}")
-      def cents(c: String) = floor(col(c) * 100 + lit(0.5)).cast("long")
-      head.agg(count(lit(1)).as("n"),
-          sum(cents("price")).cast("long").as("cents"))
-        .select(lit("head").as("arm"), col("n"), col("cents"))
-        .unionByName(v1.agg(count(lit(1)).as("n"),
-            sum(cents("o_totalprice")).cast("long").as("cents"))
-          .select(lit("v1_oldname").as("arm"), col("n"), col("cents")))
-        .unionByName(s.range(1).select(lit("schema").as("arm"),
-          lit(head.columns.length.toLong).as("n"),
-          lit(v1.columns.length.toLong).as("cents")))
-    }),
-
-    // ONE-COMMIT MOR UPSERT (the Hudi upsert / Iceberg eq-delete +
-    // data-file shape, vs stor13's synchronous COW merge): the batch
-    // file and its keys publish atomically; the sequence rule (an
-    // equality delete applies only to STRICTLY OLDER files) keeps the
-    // batch from deleting itself, so updated keys serve the batch's
-    // row, untouched keys the original, and inserts appear — with
-    // O(batch) bytes written and zero files rewritten. Arms: the MOR
-    // state (anti-join read), the updated keys (price must equal the
-    // key), the inserted keys (above the old key domain), the FOLD
-    // (v3 materializes the upsert into one file, retiring the eq
-    // file — identical rows, zero-anti-join scan restored), and the
-    // file ledger (one eq file at v2, none at v3, one data file
-    // after the fold). The oracle recomputes the row arms from raw
-    // orders' 1997 era and %10 arithmetic.
-    "stor29_mor_upsert" -> ((s, d) => {
-      val t = stor29Table(s, d)
-      val mx = Tables.orders(s, d)
-        .agg(max(col("o_orderkey"))).head().getLong(0)
-      // v2 = the MOR state (anti-join read path); v3 = the fold
-      val mor = CommitLog.read(s, t, Some(2L))
-      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
-        .cast("long")
-      def arm(label: String, df: org.apache.spark.sql.DataFrame) =
-        df.agg(count(lit(1)).as("n"),
-            sum(cents).cast("long").as("cents"))
-          .select(lit(label).as("arm"), col("n"), col("cents"))
-      val ledger = s.range(1).select(lit("ledger").as("arm"),
-        lit(CommitLog.liveEqDeleteFiles(t, 2L).size * 10L +
-          CommitLog.liveEqDeleteFiles(t, 3L).size).as("n"),
-        lit(CommitLog.liveFiles(t, 3L).size.toLong).as("cents"))
-      arm("head", mor)
-        .unionByName(arm("updated",
-          mor.filter(col("o_orderkey") % 10 === 0 &&
-            col("o_orderkey") <= mx)))
-        .unionByName(arm("inserted",
-          mor.filter(col("o_orderkey") > mx)))
-        .unionByName(arm("folded", CommitLog.read(s, t, Some(3L))))
-        .unionByName(ledger)
-    }),
-
-    // ROW LINEAGE (the Iceberg `_snapshot_id` / Delta row-tracking
-    // idea at file granularity): every row tagged with the commit
-    // that FIRST added its file, derived at read time from the
-    // replayed (file → version) map broadcast against the scan's
-    // metadata path — zero data rewritten, no table redesign, and the
-    // audit query "which commit produced these rows?" works at any
-    // scale. Two arms over stor24's lifecycle: the MOR snapshot v3
-    // (era B minus the %7 band, every row tagging its true era) and
-    // the post-restore head (the un-deleted band rows return STILL
-    // tagging era B's commit — lineage is the content's age, not the
-    // rollback's). The oracle recomputes both from era/band
-    // arithmetic.
-    "stor30_row_lineage" -> ((s, d) => {
-      val t = stor24Table(s, d)
-      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
-        .cast("long")
-      def arm(label: String, v: Long) =
-        CommitLog.readWithLineage(s, t, Some(v))
-          .groupBy(col("_commit_version"))
-          .agg(count(lit(1)).as("n"), sum(cents).cast("long").as("cents"))
-          .select(lit(label).as("arm"), col("_commit_version"),
-            col("n"), col("cents"))
-      arm("mor_v3", 3L).unionByName(arm("head", 5L))
-    }),
-
-    // COPY-ON-WRITE MERGE through the commit log — update + delete +
-    // insert in ONE atomic commit, completing the DML triangle
-    // (append stor7/9, compaction rewrite stor8, delete stor11). The
-    // table is laid out in contiguous KEY-RANGE files so the merge
-    // keys' stats actually prune: the changeset touches one narrow
-    // band (~5% of the key space), planScan selects only the 1-2
-    // overlapping files, ONLY those are rewritten (updates applied,
-    // deletes dropped), and the brand-new keys land as one appended
-    // file — at 100 TB a MERGE priced by the changeset's key
-    // footprint, not the table. Every measured column has relational
-    // ground truth: the file ledger from the log + planScan, the
-    // update count from the head rows that actually carry the new
-    // price, inserts from keys above the old max, and exact cent
-    // checksums before/after. The oracle recomputes the band
-    // arithmetic, the bucket layout, and both checksums from raw
-    // orders.
-    "stor13_cow_merge" -> ((s, d) => {
-      val t = stor13Table(s, d)
-      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
-      // mx from v1 manifest stats — metadata-only, no data read
-      val mx = CommitLog.statsAt(t, 1L).values
-        .map(_("o_orderkey").max.toLong).max
-      // band bounds are RANK-derived (sparsity-proof — see
-      // stor13Table): the key at ascending rank n/4 (+1) .. rank
-      // n/4 + n/20 (+1), recomputed from the v1 snapshot with the
-      // same orderBy+limit+max form the builder used
-      val v1 = CommitLog.read(s, t, Some(1L))
-      val nOrd = v1.agg(count(lit(1))).head().getLong(0)
-      def keyAtRank(r: Long): Long = v1
-        .orderBy(col("o_orderkey")).limit(r.toInt)
-        .agg(max(col("o_orderkey"))).head().getLong(0)
-      val bandLo = keyAtRank(nOrd / 4L) + 1L
-      val bandHi = keyAtRank(nOrd / 4L + nOrd / 20L) + 1L
-      val plan = CommitLog.planScan(t, 1L, Seq(
-        CommitLog.RangePredicate("o_orderkey", bandLo.toString,
-          bandHi.toString, numCmp)))
-      val v1Files = CommitLog.liveFiles(t, 1L)
-      val headFiles = CommitLog.liveFiles(t, 2L)
-      val untouched = v1Files.toSet.intersect(headFiles.toSet).size
-      val cents = sum(floor(col("o_totalprice") * 100 + lit(0.5))
-        .cast("long")).cast("long")
-      val inBand = col("o_orderkey") >= bandLo &&
-        col("o_orderkey") < bandHi
-      val v1Agg = CommitLog.read(s, t, Some(1L))
-        .agg(count(lit(1)).as("rows_at_v1"),
-          cents.as("sum_price_cents_v1"))
-      val headAgg = CommitLog.read(s, t)
-        .agg(count(lit(1)).as("rows_head"),
-          cents.as("sum_price_cents_head"),
-          // updates verified by VALUE: band keys that carry price = key
-          sum(when(inBand && col("o_orderkey") % 3 === 0 &&
-            col("o_totalprice") === col("o_orderkey").cast("double"),
-            1L).otherwise(0L)).as("n_updated"),
-          // inserts are exactly the keys above the old max
-          sum(when(col("o_orderkey") > mx, 1L).otherwise(0L))
-            .as("n_inserted"))
-      v1Agg.crossJoin(broadcast(headAgg))
-        .select(lit(v1Files.size.toLong).as("n_files_v1"),
-          lit(plan.selected.size.toLong).as("n_candidates"),
-          lit(headFiles.count(_.startsWith("rw2_")).toLong)
-            .as("n_rewritten"),
-          lit(headFiles.count(_.startsWith("ins_")).toLong)
-            .as("n_appended"),
-          lit(untouched.toLong).as("n_untouched"),
-          col("rows_at_v1"), col("rows_head"),
-          col("n_updated"), col("n_inserted"),
-          (col("rows_at_v1") + col("n_inserted") - col("rows_head"))
-            .as("n_deleted"),
-          col("sum_price_cents_v1"), col("sum_price_cents_head"))
-    }),
-
-    // SCHEMA EVOLUTION through the commit log — the add-column
-    // contract every long-lived 100 TB table eventually needs: v1
-    // committed pre-1997 months under the original schema, v2 appended
-    // later months carrying a NEW `qty_band` column. No rewrite of old
-    // data (at scale that would be a full-table job for a metadata
-    // change): the merged head read surfaces the union schema with
-    // pre-evolution rows null-banded, while time travel to v1 serves
-    // the ORIGINAL 4-column schema untouched — both widths are
-    // reported from the actual read schemas, so the oracle's
-    // by-construction 4/5 pins them. Row results recompute relationally
-    // (band = the evolved writer's expression after the cutover, a
-    // sentinel before it).
-    "stor12_schema_evolution" -> ((s, d) => {
-      val t = stor12Table(s, d)
-      val v1 = CommitLog.read(s, t, Some(1L))
-      require(!v1.columns.contains("qty_band"),
-        "time travel must serve the pre-evolution schema")
-      val head = CommitLog.read(s, t, None, Map("mergeSchema" -> "true"))
-      head.groupBy(coalesce(col("qty_band"), lit("pre_evolution"))
-          .as("qty_band"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-            .cast("long").as("sum_qty_cents"))
-        .select(col("qty_band"), col("n_rows"), col("sum_qty_cents"),
-          lit(v1.columns.length.toLong).as("n_cols_v1"),
-          lit(head.columns.length.toLong).as("n_cols_head"))
-    }),
-
-    // Parquet ENCODING tradeoff — the third axis of physical design
-    // after placement (stor1) and clustering (stor2/stor4): the same
-    // lineitem rows written under codec × dictionary variants
-    // (zstd/snappy/none, dict on/off), then each variant SCANNED BACK
-    // with exact integer checksums. What the oracle proves is
-    // round-trip LOSSLESSNESS (every variant returns the identical
-    // multiset — layout and encoding are execution properties, the
-    // result is invariant); what the measured artifact records
-    // (BASELINE.md; stderr at build) is the size/scan-time curve a
-    // 100 TB table chooses its storage format from: dictionary does
-    // most of the work on low-cardinality columns, zstd compounds it,
-    // and the scan-time delta is the decompression tax paid on every
-    // read forever. Bench times the 6-scan read path (writes are
-    // amortized by the build-once cache, exactly stor1's economics).
-    "stor5_encoding_tradeoff" -> ((s, d) => {
-      encodedPaths(s, d).map { case (codec, dict, path) =>
-        s.read.parquet(path).agg(
-          count(lit(1)).as("n_rows"),
-          sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
-            .cast("long").as("sum_qty_cents"),
-          sum(col("l_orderkey")).cast("long").as("sum_okey"))
-          .select(lit(codec).as("codec"), lit(dict).as("dictionary"),
-            col("n_rows"), col("sum_qty_cents"), col("sum_okey"))
-      }.reduce(_.unionByName(_))
-    }),
-    // Fact-fact join with ZERO exchange on either input: both sides are
-    // written bucketed by the join key (16 buckets, sorted within
-    // bucket) and re-read through the catalog, so the sort-merge join
-    // consumes bucket i of orders against bucket i of lineitem with no
-    // shuffle at all — the only exchange in the plan is the final
-    // 5-group aggregate. This is THE big-join discipline at 100 TB:
-    // pay the shuffle once at write time, then every subsequent join
-    // on the key is shuffle-free (co-located, and with one file per
-    // bucket, sort-free). The merge hint forces the SMJ so the demo
-    // cannot silently degrade to a broadcast at toy scale; the write
-    // lands in a build-once dir (layout is a cache, not a result). The
-    // LAYOUT BUILD runs once per build-once key, so the benched cost is
-    // the exchange-free READ path, exactly the economics bucketing buys:
-    // pay the shuffle once at write time, amortize over every read.
-    // Revenue is summed EXACTLY: a double sum depends on summation
-    // order, and a group whose exact revenue ends in a half cent then
-    // rounds either way on each engine. Price (whole cents) times
-    // 1 - discount (whole percent) is a whole number of 1e-4 units, so
-    // the sum runs in LONG arithmetic — the value of the oracle's
-    // DECIMAL(15,2) sum without per-row BigDecimal work.
-    "stor1_bucketed_join" -> ((s, d) => {
-      val (obName, lbName) = bucketedTables(s, d)
-      val hundredths = (c: Column) => floor(c * 100 + lit(0.5))
-      s.table(obName).hint("merge")
-        .join(s.table(lbName).hint("merge"),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_items"),
-          round(sum(hundredths(col("l_extendedprice")) *
-            hundredths(lit(1) - col("l_discount"))).cast("decimal(38,4)") / 10000, 2)
-            .cast("double").as("revenue"))
-    }),
-
-    // Zone maps over a range-clustered layout: model each shipdate
-    // month as one data file (exactly what ParquetSink's partitioned
-    // write produces), compute the per-file min/max zone map over the
-    // sort key AND a non-clustered column, and evaluate the skip
-    // decision for a 3-month scan predicate — ~80 files, ~77 skipped
-    // without reading a row. The zone-map build is ONE hash aggregate
-    // (map-side partials, O(files) exchange); the skip test is pure
-    // min/max interval logic, the same test every parquet reader runs
-    // against row-group statistics. The point the family documents:
-    // skipping only works on CLUSTERED columns — l_orderkey is random
-    // w.r.t. shipdate (corr ~0.001 in this data), so its per-file
-    // range is the full domain and its `key_skippable` flag is false
-    // on every file, while the clustered shipdate prunes 96% of them.
-    "stor2_zonemap" -> ((s, d) => {
-      val lo = lit(java.sql.Date.valueOf("1997-04-01"))
-      val hi = lit(java.sql.Date.valueOf("1997-07-01")) // end-exclusive
-      val zm = Tables.lineitem(s, d)
-        .select(date_trunc("month", col("l_shipdate")).cast("date")
-            .as("file_month"),
-          col("l_shipdate").cast("date").as("ship"), col("l_orderkey"))
-        .groupBy("file_month")
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("ship")).as("min_ship"), max(col("ship")).as("max_ship"),
-          min(col("l_orderkey")).as("min_key"),
-          max(col("l_orderkey")).as("max_key"))
-      zm.select(col("file_month"), col("n_rows"),
-        col("min_ship"), col("max_ship"), col("min_key"), col("max_key"),
-        (col("max_ship") < lo || col("min_ship") >= hi).as("date_skipped"),
-        // same predicate shape on the UNclustered key column: the
-        // whole-domain ranges make this false everywhere — the
-        // negative control that shows clustering, not zone maps, does
-        // the pruning
-        (col("max_key") < lit(1000L) || col("min_key") >= lit(2000L))
-          .as("key_skippable"))
-    }),
-
-    // Compaction planning: bin-pack the month-files above into
-    // ~4 MB-target compaction groups by a running-sum admission over
-    // the (tiny) file-metadata table — the "small files problem"
-    // planner every long-lived 100 TB table needs after streaming
-    // ingest. Estimated bytes = rows × a fixed 64 B/row figure (the
-    // planner's input is metadata, not data). The window is a single
-    // ordered pass over O(files) rows — file metadata is orders of
-    // magnitude smaller than data, which is exactly why compaction
-    // planning is driver-cheap while compaction itself is the
-    // cluster-wide rewrite. Bin id = start-offset div target, the
-    // x15 running-sum admission shape: consecutive months pack until
-    // the target fills, never splitting a file.
-    // Z-ORDER vs LINEAR clustering, measured (completes the layout
-    // family: stor1 buys the join, stor2 shows 1-D skipping, this
-    // query QUANTIFIES why multi-dimensional predicates need a
-    // multi-dimensional layout): the same lineitem rows are assigned
-    // to 64 equal-row model "files" under two sort keys — linear
-    // (day-major, partkey-minor lexicographic) and the bit-interleaved
-    // z-value (f8's curve) — via the DISTRIBUTED rank
-    // (RelationalOps.globalRowNumber, no global sort), per-file
-    // min/max zone maps are built over BOTH dimensions, and a 2-D box
-    // predicate (ship year 1997 AND a narrow partkey band) is tested
-    // against each file's zone map. The linear layout prunes only on
-    // its major dimension (every file spans the full partkey domain);
-    // the z-order layout prunes on both — the n_skipped/rows_scanned
-    // contrast IS the case for z-ordering 100 TB fact tables. All
-    // integer (masked day/partkey, exact rank, integer-div file ids);
-    // tied sort keys determine both zone-map dims, so rank ties
-    // cannot flip a zone map across engines.
-    "stor4_zorder_skip" -> ((s, d) => {
-      import graft.operators.RelationalOps
-      val base = Tables.lineitem(s, d).select(
-        datediff(col("l_shipdate").cast("date"),
-          lit("1992-01-01").cast("date")).cast("long")
-          .bitwiseAND(lit(4095L)).as("dm"),
-        col("l_partkey").bitwiseAND(lit(4095L)).as("pk"),
-        col("l_orderkey"), col("l_linenumber"))
-      val n1 = base.agg(count(lit(1)).as("n_rows"))
-      // Both sort keys are bounded 24-bit integers (dm,pk ≤ 4095 →
-      // linear = dm·4096+pk < 2^24; the 12-bit interleave < 2^24), so
-      // the rank's range buckets come straight off the key (k >> 16:
-      // ≤256 ids, monotone, tie-safe) — no sampling job, no per-row
-      // boundary fold, the whole bucket assignment is one shift.
-      // OPT r18 (guide §2.4): the two layouts used to run two SEPARATE
-      // rank pipelines over the same projected fact frame (each with
-      // its own offsets + localized branches — ~4 scans, two window
-      // machineries, then a union). Stacking the layouts (a 2-row
-      // explode per input row) ranks BOTH in one grouped prefix
-      // pipeline partitioned by layout: same per-layout ordering, same
-      // bucket math, identical zone maps — half the stages. At 100 TB
-      // the stacked pass reads the fact rows once instead of per
-      // layout.
-      val stacked = base.select(col("dm"), col("pk"),
-        col("l_orderkey"), col("l_linenumber"), explode(array(
-          struct(lit("linear").as("layout"),
-            (col("dm") * 4096 + col("pk")).as("k")),
-          struct(lit("zorder").as("layout"),
-            RelationalOps.zValue2(col("dm"), col("pk"), 12).as("k"))))
-          .as("x"))
-        .select(col("dm"), col("pk"), col("l_orderkey"),
-          col("l_linenumber"), col("x.layout").as("layout"),
-          col("x.k").as("k"))
-      val zone = RelationalOps.groupedRowNumber(stacked, Seq("layout"),
-          Seq(col("k").asc, col("l_orderkey").asc,
-            col("l_linenumber").asc), col("k"), "rk",
-          bucket = Some(shiftright(col("k"), 16)))
-        .crossJoin(broadcast(n1))
-        .withColumn("file_id",
-          expr("(rk - 1) div ((n_rows + 63) div 64)"))
-        .groupBy("layout", "file_id")
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("dm")).as("min_d"), max(col("dm")).as("max_d"),
-          min(col("pk")).as("min_p"), max(col("pk")).as("max_p"))
-      // 2-D box: ship day in 1997 (1827..2191) AND partkey 100..300
-      val skipped = col("max_d") < 1827 || col("min_d") > 2191 ||
-        col("max_p") < 100 || col("min_p") > 300
-      zone
-        .groupBy("layout")
-        .agg(count(lit(1)).as("n_files"),
-          sum(when(skipped, 1L).otherwise(0L)).as("n_skipped"),
-          sum(when(!skipped, col("n_rows")).otherwise(0L))
-            .as("rows_scanned"))
-    }),
-
-    "stor3_compaction_plan" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val BytesPerRow = 64L
-      val Target = 4L * 1024 * 1024
-      val files = Tables.lineitem(s, d)
-        .select(date_trunc("month", col("l_shipdate")).cast("date")
-          .as("file_month"))
-        .groupBy("file_month")
-        .agg((count(lit(1)) * BytesPerRow).as("est_bytes"))
-      val w = Window.orderBy(col("file_month"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      files
-        .withColumn("end_off", sum(col("est_bytes")).over(w))
-        .withColumn("bin",
-          ((col("end_off") - col("est_bytes")) / Target).cast("long"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_files"), sum(col("est_bytes")).as("bytes"),
-          min(col("file_month")).as("from_month"),
-          max(col("file_month")).as("to_month"))
-    })
-  )
-
-  def oracle: Map[String, String] = Map(
-    // stor7: protocol constants are deterministic by construction
-    // (4 commits, exactly one forced conflict, manifests v1-v3
-    // expired, both guards must hold); file counts and row/checksum
-    // state recompute relationally from lineitem's ship months. The
-    // retention delete removed months ≤ 1995-06, so the surviving
-    // head snapshot is everything after.
-    "stor7_commit_protocol" ->
-      """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
-        |    count(*) AS n_rows,
-        |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1)
-        |SELECT CAST(4 AS BIGINT) AS version_head,
-        |  CAST(1 AS BIGINT) AS n_conflicts,
-        |  CAST(3 AS BIGINT) AS n_manifests_expired,
-        |  (SELECT count(*) FROM f WHERE m <= DATE '1995-06-01')
-        |    AS n_files_deleted,
-        |  true AS expired_read_refused,
-        |  true AS files_physically_gone,
-        |  (SELECT count(*) FROM f WHERE m > DATE '1995-06-01')
-        |    AS n_live_files,
-        |  (SELECT CAST(sum(n_rows) AS BIGINT) FROM f
-        |    WHERE m > DATE '1995-06-01') AS rows_current,
-        |  (SELECT CAST(sum(cents) AS BIGINT) FROM f
-        |    WHERE m > DATE '1995-06-01') AS sum_qty_cents""".stripMargin,
-    // stor6: the same three-version manifest timeline and zone-map
-    // arithmetic computed relationally from raw lineitem (layout and
-    // versioning are execution properties; the result is invariant).
-    "stor6_time_travel" ->
+    },
+      // stor6: the same three-version manifest timeline and zone-map
+      // arithmetic computed relationally from raw lineitem (layout and
+      // versioning are execution properties; the result is invariant).
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    min(l_shipdate::DATE) AS min_ship,
@@ -2570,10 +1460,34 @@ object QueriesStorage {
         |  stats.n_live_files - stats.n_pruned AS n_files_read,
         |  stats.rows_asof, stats.rows_scanned,
         |  chk.rows_matched, chk.sum_qty_cents
-        |FROM stats JOIN chk USING (version)""".stripMargin,
-    // stor9: each append commit's increment recomputed from the ship
-    // months it covers.
-    "stor9_incremental_scan" ->
+        |FROM stats JOIN chk USING (version)""".stripMargin),
+    // INCREMENTAL SCAN — the downstream-consumer contract the
+    // table-format story was missing: a pipeline that has processed
+    // snapshot v reads ONLY the files commit v+1 added (never a table
+    // rescan), which is how every incremental ETL/CDC consumer rides
+    // an append-only 100 TB table. Three append commits over the
+    // month-file layout; for each the query reads the INCREMENT
+    // (fromV, toV] through the log and reports new-file count, rows
+    // added, and the exact checksum — and the cumulative sums across
+    // increments must reconstruct the full table (the oracle computes
+    // both from raw lineitem). The refusal arm — an increment spanning
+    // a REWRITE commit must throw rather than double-count — is pinned
+    // in StorageCompactionSpec against stor8's rewrite timeline.
+    Query("stor9_incremental_scan", (s, d) => {
+      val t = stor9Table(s, d)
+      (1L to 3L).map { v =>
+        val files = CommitLog.addedFiles(t, v - 1, v)
+        CommitLog.readIncrement(s, t, v - 1, v)
+          .agg(count(lit(1)).as("rows_added"),
+            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+              .cast("long").as("sum_qty_cents"))
+          .select(lit(v).as("version"),
+            lit(files.size.toLong).as("n_files_new"),
+            col("rows_added"), col("sum_qty_cents"))
+      }.reduce(_ unionByName _)
+    },
+      // stor9: each append commit's increment recomputed from the ship
+      // months it covers.
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
@@ -2587,12 +1501,37 @@ object QueriesStorage {
         |  CAST(sum(f.n_rows) AS BIGINT) AS rows_added,
         |  CAST(sum(f.cents) AS BIGINT) AS sum_qty_cents
         |FROM v JOIN f ON f.m > v.lo AND f.m <= v.hi
-        |GROUP BY 1""".stripMargin,
-    // stor14: cumulative derived state per downstream version = the
-    // upstream month windows, cumulatively; the consumed-version
-    // ledger is 3 by construction (one bounded sync per upstream
-    // commit, pinned in the builder).
-    "stor14_derived_sync" ->
+        |GROUP BY 1""".stripMargin),
+
+    // EXACTLY-ONCE DERIVED TABLE — the consumer half of the
+    // incremental contract stor9 demonstrates on the producer side:
+    // a downstream table built by syncIncrement, one bounded sync per
+    // upstream commit, each reading ONLY that commit's files,
+    // applying a row-wise transform, and recording the consumed
+    // upstream version IN the downstream manifest (crash before the
+    // commit → invisible files, redo; crash after → the recorded
+    // version stops any replay; racing syncers → one lands, pinned in
+    // CommitLogSpec). This is how a 100 TB pipeline keeps a family of
+    // derived tables in step with a source-of-truth table without
+    // rescans and without double-counts. The downstream is itself a
+    // commit-log table: the query time-travels it version by version
+    // and reports the cumulative derived state; the oracle recomputes
+    // each from the upstream month windows.
+    Query("stor14_derived_sync", (s, d) => {
+      val (_, down) = stor14Tables(s, d)
+      val consumed = CommitLog.consumedUpstreamVersion(down)
+      (1L to 3L).map { v =>
+        CommitLog.read(s, down, Some(v))
+          .agg(count(lit(1)).as("rows_cum"),
+            sum(col("qty_cents")).cast("long").as("sum_qty_cents_cum"))
+          .select(lit(v).as("version"), col("rows_cum"),
+            col("sum_qty_cents_cum"), lit(consumed).as("consumed_up"))
+      }.reduce(_ unionByName _)
+    },
+      // stor14: cumulative derived state per downstream version = the
+      // upstream month windows, cumulatively; the consumed-version
+      // ledger is 3 by construction (one bounded sync per upstream
+      // commit, pinned in the builder).
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
@@ -2606,11 +1545,44 @@ object QueriesStorage {
         |  CAST(sum(f.cents) AS BIGINT) AS sum_qty_cents_cum,
         |  CAST(3 AS BIGINT) AS consumed_up
         |FROM v JOIN f ON f.m <= v.hi
-        |GROUP BY 1""".stripMargin,
-    // stor8: stor3's binning recomputed relationally, with per-bin
-    // row/checksum/span stats and the stor2 window's prune flag — the
-    // compacted physical layout must carry identical data.
-    "stor8_compaction_exec" ->
+        |GROUP BY 1""".stripMargin),
+
+    // COMPACTION, executed (VERDICT r15 #2): stor3 planned the
+    // bin-packing of the small month-files; this query RUNS it through
+    // the commit log (1 MiB target — stor3's discipline, sized so the
+    // rewrite merges multiple groups at every correctness scale) —
+    // v1 commits the month files, the plan is one
+    // metadata aggregate broadcast into a cluster-side rewrite, v2 is
+    // the rewrite commit (adds per-bin compacted files, removes the
+    // months). The result reads the COMPACTED snapshot back and
+    // reports, per bin: how many files merged, rows, the exact integer
+    // checksum (stor5's losslessness discipline — rewritten bytes must
+    // carry identical data), the bin's ship span, and whether the
+    // stor2 3-month window still prunes it (zone-map prunability
+    // survives compaction because bins pack CONSECUTIVE months). The
+    // oracle recomputes the plan and every stat relationally from raw
+    // lineitem; StorageCompactionSpec pins the physical side (fewer
+    // files on disk, v1 time travel intact, log at v2).
+    Query("stor8_compaction_exec", (s, d) => {
+      val t = stor8Table(s, d)
+      val lo = lit(java.sql.Date.valueOf("1997-04-01"))
+      val hi = lit(java.sql.Date.valueOf("1997-07-01")) // end-exclusive
+      CommitLog.read(s, t) // head = v2, the compacted snapshot
+        .groupBy(col("bin").cast("long").as("bin"))
+        .agg(countDistinct(col("file_month")).as("n_files_merged"),
+          count(lit(1)).as("n_rows"),
+          sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+            .cast("long").as("sum_qty_cents"),
+          min(col("file_month")).as("from_month"),
+          max(col("file_month")).as("to_month"),
+          min(col("ship")).as("__mn"), max(col("ship")).as("__mx"))
+        .select(col("bin"), col("n_files_merged"), col("n_rows"),
+          col("sum_qty_cents"), col("from_month"), col("to_month"),
+          (col("__mx") < lo || col("__mn") >= hi).as("pruned"))
+    },
+      // stor8: stor3's binning recomputed relationally, with per-bin
+      // row/checksum/span stats and the stor2 window's prune flag — the
+      // compacted physical layout must carry identical data.
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE
         |    AS file_month, count(*) AS n_rows,
         |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
@@ -2631,12 +1603,56 @@ object QueriesStorage {
         |  min(file_month) AS from_month, max(file_month) AS to_month,
         |  (max(max_ship) < DATE '1997-04-01'
         |    OR min(min_ship) >= DATE '1997-07-01') AS pruned
-        |FROM o GROUP BY 1""".stripMargin,
-    // stor10: the manifest zone-map arithmetic (ship + orderkey
-    // bounds per month-file, skip = provably disjoint) and the exact
-    // conjunctive row predicate, recomputed relationally. n_no_stats
-    // is 0 by construction: every committed file carried stats.
-    "stor10_stats_pruned_scan" ->
+        |FROM o GROUP BY 1""".stripMargin),
+
+    // SCAN PLANNING FROM MANIFEST STATS (the read-side payoff of
+    // carrying per-file column bounds in commits — Iceberg's
+    // lower/upper_bounds): the month-file table is committed ONCE with
+    // ship + orderkey min/max per file, and the query plans a
+    // conjunctive range scan (a 2-month ship window AND an orderkey
+    // band) from the manifest ALONE — no footer reads, no data I/O —
+    // then opens ONLY the planned files. At 100 TB this is the planning
+    // step that makes a selective query cost O(matching files) instead
+    // of O(table): the driver touches O(manifest) metadata and the
+    // skipped files are never even listed to the reader. The ship
+    // predicate prunes whole months; the orderkey band prunes NOTHING
+    // (keys are uniform across months — min/max spans of every file
+    // overlap any band), which the result REPORTS honestly: stats on a
+    // layout-uncorrelated column carry no skipping power, exactly why
+    // z-ordering (stor4) exists. The oracle recomputes the zone-map
+    // arithmetic and the exact row predicate relationally; equality
+    // proves the metadata-planned scan returns precisely what a full
+    // scan would.
+    Query("stor10_stats_pruned_scan", (s, d) => {
+      val t = stor10Table(s, d)
+      val (lo, hi) = ("1997-04-15", "1997-06-20") // end-exclusive
+      val (kLo, kHi) = (1000L, 2000L)             // end-exclusive
+      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
+      val plan = CommitLog.planScan(t, 1L, Seq(
+        CommitLog.RangePredicate("ship", lo, hi),
+        CommitLog.RangePredicate("l_orderkey", kLo.toString,
+          kHi.toString, numCmp)))
+      val nLive = CommitLog.liveFiles(t, 1L).size
+      val rowPred = col("ship") >= lit(lo).cast("date") &&
+        col("ship") < lit(hi).cast("date") &&
+        col("l_orderkey") >= kLo && col("l_orderkey") < kHi
+      CommitLog.readFiles(s, t, plan.selected)
+        .agg(count(lit(1)).as("rows_scanned"),
+          sum(when(rowPred, 1L).otherwise(0L)).as("rows_matched"),
+          coalesce(sum(when(rowPred,
+            floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))),
+            lit(0L)).as("sum_qty_cents"))
+        .select(lit(nLive.toLong).as("n_live_files"),
+          lit(plan.skipped.getOrElse("ship", 0L)).as("n_skip_ship"),
+          lit(plan.skipped.getOrElse("l_orderkey", 0L)).as("n_skip_key"),
+          lit(plan.noStats.size.toLong).as("n_no_stats"),
+          lit(plan.selected.size.toLong).as("n_files_read"),
+          col("rows_scanned"), col("rows_matched"), col("sum_qty_cents"))
+    },
+      // stor10: the manifest zone-map arithmetic (ship + orderkey
+      // bounds per month-file, skip = provably disjoint) and the exact
+      // conjunctive row predicate, recomputed relationally. n_no_stats
+      // is 0 by construction: every committed file carried stats.
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    min(l_shipdate::DATE) AS mn_s, max(l_shipdate::DATE) AS mx_s,
@@ -2668,12 +1684,54 @@ object QueriesStorage {
         |SELECT plan.n_live_files, plan.n_skip_ship, plan.n_skip_key,
         |  plan.n_no_stats, plan.n_files_read, plan.rows_scanned,
         |  mt.rows_matched, mt.sum_qty_cents
-        |FROM plan CROSS JOIN mt""".stripMargin,
-    // stor11: the whole COW-delete ledger from month arithmetic —
-    // candidates are months whose ship bounds overlap the window,
-    // dropped are candidates with no surviving rows, the post-delete
-    // overlap count uses the KEPT rows' tightened bounds.
-    "stor11_cow_delete" ->
+        |FROM plan CROSS JOIN mt""".stripMargin),
+
+    // COPY-ON-WRITE row-level DELETE through the commit log — the DML
+    // half of the table-format story (append = stor7/stor9, rewrite =
+    // stor8; this is DELETE WHERE): candidate files come from manifest
+    // stats (planScan — only files whose ship bounds overlap the
+    // predicate), each candidate is rewritten WITHOUT its matching
+    // rows (a candidate left empty is dropped, not rewritten), and the
+    // commit swaps candidates for rewrites atomically with TIGHTENED
+    // stats. Untouched files are never opened, never rewritten — at
+    // 100 TB a delete of a 2-month window costs O(2 months of data),
+    // not O(table). The result proves all four invariants at once:
+    // the file ledger (total/candidates/rewritten/dropped/untouched
+    // from the log), the row ledger (head rows + checksum = exactly
+    // the kept rows), time travel to the pre-delete snapshot intact,
+    // and the closing metadata argument — a post-delete scan for the
+    // deleted range plans ZERO files from the rewritten stats alone.
+    // The oracle recomputes every column relationally from raw
+    // lineitem month arithmetic.
+    Query("stor11_cow_delete", (s, d) => {
+      val t = stor11Table(s, d)
+      val pred = CommitLog.RangePredicate("ship", CowLo, CowHi)
+      val v1Files = CommitLog.liveFiles(t, 1L).size
+      val cands = CommitLog.planScan(t, 1L, Seq(pred)).selected.size
+      val headFiles = CommitLog.liveFiles(t, 2L).size
+      val rewritten = headFiles - (v1Files - cands)
+      val overlapAfter = CommitLog.planScan(t, 2L, Seq(pred)).selected.size
+      val cents = sum(floor(col("l_quantity") * 100 + lit(0.5))
+        .cast("long")).cast("long")
+      val v1Agg = CommitLog.read(s, t, Some(1L))
+        .agg(count(lit(1)).as("rows_at_v1"))
+      val headAgg = CommitLog.read(s, t)
+        .agg(count(lit(1)).as("rows_head"), cents.as("sum_qty_cents"))
+      v1Agg.crossJoin(broadcast(headAgg))
+        .select(lit(v1Files.toLong).as("n_files_v1"),
+          lit(cands.toLong).as("n_candidates"),
+          lit(rewritten.toLong).as("n_rewritten"),
+          lit((cands - rewritten).toLong).as("n_dropped"),
+          lit((v1Files - cands).toLong).as("n_untouched"),
+          col("rows_at_v1"),
+          (col("rows_at_v1") - col("rows_head")).as("rows_deleted"),
+          col("rows_head"), col("sum_qty_cents"),
+          lit(overlapAfter.toLong).as("n_files_overlap_after"))
+    },
+      // stor11: the whole COW-delete ledger from month arithmetic —
+      // candidates are months whose ship bounds overlap the window,
+      // dropped are candidates with no surviving rows, the post-delete
+      // overlap count uses the KEPT rows' tightened bounds.
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    min(l_shipdate::DATE) AS mn, max(l_shipdate::DATE) AS mx,
@@ -2716,13 +1774,54 @@ object QueriesStorage {
         |      AND NOT (mx < DATE '1997-04-15'
         |        OR mn >= DATE '1997-06-20') THEN 1
         |    ELSE 0 END) AS BIGINT) AS n_files_overlap_after
-        |FROM z""".stripMargin,
-    // stor15: the MOR-delete ledger from the same month arithmetic as
-    // stor11 (shared ground truth IS the COW/MOR-equivalence proof):
-    // v1 full table, v2 marks = all window rows with files untouched,
-    // v3 = the fold's file ledger (candidates with survivors rewritten,
-    // empties dropped) with identical visible state.
-    "stor15_mor_delete" ->
+        |FROM z""".stripMargin),
+
+    // MERGE-ON-READ row-level DELETE through the commit log (VERDICT
+    // r16 #1 — the format-native answer to point deletes at 100 TB):
+    // v2 publishes ONE positional delete file (the (fpath, pos)
+    // identity of every ship-window row, found via planScan's
+    // candidate pruning) and rewrites NOTHING — the erasure costs
+    // O(rows deleted) bytes where stor11's COW rewrites whole files;
+    // reads apply the marks as a broadcast anti-join on the scan's
+    // (_metadata.file_path, _metadata.row_index). v3 FOLDS: only the
+    // marked files are rewritten (the reader's own anti-join), the
+    // delete file retires in the same atomic commit, and the scan
+    // overhead returns to zero. The query reads all three versions
+    // back through the log and reports the ledger per version —
+    // data/delete file counts, marked rows, visible rows, exact cents
+    // — proving MOR at v2, the fold at v3, and (because the window
+    // matches stor11's) that COW and MOR converge on the identical
+    // relational state; the oracle recomputes every column from raw
+    // lineitem month arithmetic. StorageCompactionSpec pins the
+    // physical side: v2 time travel still applies marks after the
+    // fold, delete-file bytes ≪ COW rewrite bytes, incremental reads
+    // refuse to cross the D commit.
+    Query("stor15_mor_delete", (s, d) => {
+      val t = stor15Table(s, d)
+      val dataDir = CommitLog.dataDir(t)
+      (1L to 3L).map { v =>
+        val nData = CommitLog.liveFiles(t, v).size
+        val dels = CommitLog.liveDeleteFiles(t, v)
+        val marked =
+          if (dels.isEmpty) lit(0L)
+          else lit(s.read.parquet(dels.map(f => s"$dataDir/$f"): _*)
+            .count())
+        CommitLog.read(s, t, Some(v))
+          .agg(count(lit(1)).as("rows_visible"),
+            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+              .cast("long").as("sum_qty_cents"))
+          .select(lit(v).as("version"),
+            lit(nData.toLong).as("n_data_files"),
+            lit(dels.size.toLong).as("n_delete_files"),
+            marked.as("rows_marked"),
+            col("rows_visible"), col("sum_qty_cents"))
+      }.reduce(_ unionByName _)
+    },
+      // stor15: the MOR-delete ledger from the same month arithmetic as
+      // stor11 (shared ground truth IS the COW/MOR-equivalence proof):
+      // v1 full table, v2 marks = all window rows with files untouched,
+      // v3 = the fold's file ledger (candidates with survivors rewritten,
+      // empties dropped) with identical visible state.
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    min(l_shipdate::DATE) AS mn, max(l_shipdate::DATE) AS mx,
@@ -2762,180 +1861,53 @@ object QueriesStorage {
         |UNION ALL
         |SELECT CAST(3 AS BIGINT), n_months - n_cand + n_refold,
         |  CAST(0 AS BIGINT), CAST(0 AS BIGINT), rows_kept, c_kept
-        |FROM t""".stripMargin,
-    // stor30: per-commit row groups from era arithmetic — era A
-    // (< 1998) tags v1, era B (1998) tags v2; the MOR arm drops era
-    // B's %7 keys, the head arm restores them (same v2 tag).
-    "stor30_row_lineage" ->
-      """WITH o AS (SELECT o_orderkey AS k,
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |    o_orderdate::DATE AS dt FROM orders
-        |  WHERE o_orderdate::DATE < DATE '1999-01-01'),
-        |t AS (SELECT *,
-        |    CASE WHEN dt < DATE '1998-01-01' THEN 1 ELSE 2 END AS cv,
-        |    (dt >= DATE '1998-01-01' AND k % 7 = 0) AS banded
-        |  FROM o)
-        |SELECT 'mor_v3' AS arm, CAST(cv AS BIGINT) AS _commit_version,
-        |  count(*) AS n, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM t WHERE NOT banded GROUP BY 2
-        |UNION ALL
-        |SELECT 'head', CAST(cv AS BIGINT), count(*),
-        |  CAST(sum(cents) AS BIGINT) FROM t GROUP BY 2""".stripMargin,
-    // stor29: head = 1997 with %10==0 keys repriced to the key, plus
-    // %10==5 keys re-inserted above the global key domain at price k;
-    // updated/inserted arms recompute the same %10 arithmetic.
-    "stor29_mor_upsert" ->
-      """WITH p AS (SELECT max(o_orderkey) AS mx FROM orders),
-        |o97 AS (SELECT o_orderkey AS k,
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents0
-        |  FROM orders WHERE year(o_orderdate::DATE) = 1997),
-        |hd AS (SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN k % 10 = 0 THEN k * 100
-        |      ELSE cents0 END) AS BIGINT) AS cents FROM o97),
-        |ins AS (SELECT count(*) AS n,
-        |    CAST(coalesce(sum(k * 100), 0) AS BIGINT) AS cents
-        |  FROM o97 WHERE k % 10 = 5),
-        |upd AS (SELECT count(*) AS n,
-        |    CAST(coalesce(sum(k * 100), 0) AS BIGINT) AS cents
-        |  FROM o97 WHERE k % 10 = 0)
-        |SELECT 'head' AS arm, hd.n + ins.n AS n,
-        |  CAST(hd.cents + ins.cents AS BIGINT) AS cents
-        |FROM hd CROSS JOIN ins
-        |UNION ALL
-        |SELECT 'updated', n, cents FROM upd
-        |UNION ALL
-        |SELECT 'inserted', n, cents FROM ins
-        |UNION ALL
-        |SELECT 'folded', hd.n + ins.n,
-        |  CAST(hd.cents + ins.cents AS BIGINT)
-        |FROM hd CROSS JOIN ins
-        |UNION ALL
-        |SELECT 'ledger', CAST(10 AS BIGINT), CAST(1 AS BIGINT)"""
-        .stripMargin,
-    // stor28: head = both eras under the mapped name; v1 = 1997 under
-    // its era's name; schema arm = (head cols, v1 cols) constants.
-    "stor28_column_mapping" ->
-      """WITH o AS (SELECT
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |    year(o_orderdate::DATE) AS y FROM orders)
-        |SELECT 'head' AS arm, count(*) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents FROM o
-        |WHERE y IN (1997, 1998)
-        |UNION ALL
-        |SELECT 'v1_oldname', count(*), CAST(sum(cents) AS BIGINT)
-        |FROM o WHERE y = 1997
-        |UNION ALL
-        |SELECT 'schema', CAST(2 AS BIGINT), CAST(3 AS BIGINT)"""
-        .stripMargin,
-    // stor27: v1 metadata bounds = the raw key domain; head bounds =
-    // min unchanged (the key 1..rank-n/4 region is never in the
-    // band), max shifted by the insert arm (mx + the largest band key
-    // with k%3=2, or unshifted when the band has no insert keys);
-    // the MOR arm = era A+B keys minus era-B's %7 band, scanned.
-    "stor27_meta_agg" ->
-      """WITH p AS (SELECT max(o_orderkey) AS mx, count(*) AS n
-        |  FROM orders),
-        |rk AS (SELECT o_orderkey,
-        |    row_number() OVER (ORDER BY o_orderkey) AS rn FROM orders),
-        |bnd AS (SELECT
-        |    (SELECT o_orderkey + 1 FROM rk, p WHERE rn = p.n // 4)
-        |      AS lo,
-        |    (SELECT o_orderkey + 1 FROM rk, p
-        |      WHERE rn = p.n // 4 + p.n // 20) AS hi),
-        |ins AS (SELECT max(o.o_orderkey) AS mk
-        |  FROM orders o CROSS JOIN bnd
-        |  WHERE o.o_orderkey >= bnd.lo AND o.o_orderkey < bnd.hi
-        |    AND o.o_orderkey % 3 = 2)
-        |SELECT 'v1' AS arm, 'manifest' AS src,
-        |  min(o_orderkey) AS mn, max(o_orderkey) AS mx FROM orders
-        |UNION ALL
-        |SELECT 'head', 'manifest',
-        |  (SELECT min(o_orderkey) FROM orders),
-        |  p.mx + coalesce(ins.mk, 0) FROM p CROSS JOIN ins
-        |UNION ALL
-        |SELECT 'mor_v3', 'scan', min(o_orderkey), max(o_orderkey)
-        |FROM orders
-        |WHERE o_orderdate::DATE < DATE '1999-01-01'
-        |  AND NOT (o_orderdate::DATE >= DATE '1998-01-01'
-        |    AND o_orderkey % 7 = 0)""".stripMargin,
-    // stor26: the tagged snapshot serves the FULL pre-erasure 1997
-    // rows; the head serves the remainder after the composed two-step
-    // erasure (%5 then %3 over Jan–Jun = %5 OR %3); months_pinned is
-    // the pinned snapshot's month breadth (data-derived); the protocol
-    // arm packs v2-resolvable (0) and leftover intermediate files (0).
-    "stor26_tagged_expiry" ->
-      """WITH o AS (SELECT o_orderkey AS k,
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |    o_orderdate::DATE AS dt FROM orders
-        |  WHERE year(o_orderdate::DATE) = 1997)
-        |SELECT 'tag_raw' AS arm, count(*) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents FROM o
-        |UNION ALL
-        |SELECT 'head', count(*), CAST(sum(cents) AS BIGINT) FROM o
-        |WHERE NOT (month(dt) <= 6 AND (k % 5 = 0 OR k % 3 = 0))
-        |UNION ALL
-        |SELECT 'months_pinned',
-        |  CAST(count(DISTINCT date_trunc('month', dt)) AS BIGINT),
-        |  CAST(0 AS BIGINT) FROM o
-        |UNION ALL
-        |SELECT 'protocol', CAST(0 AS BIGINT), CAST(0 AS BIGINT)"""
-        .stripMargin,
-    // stor24: the post-restore head must be EXACTLY eras A+B (the
-    // v3 delete undone, era C gone) — per-year counts and cent
-    // checksums from raw orders — and the restore commit's change
-    // feed must be the row-level inverse: inserts = era B's %7 band
-    // (the rows the rolled-back delete had erased), deletes = era C.
-    // Arms guard HAVING count(*) > 0 so an empty band degrades to an
-    // absent group on both engines.
-    "stor24_restore" ->
-      """WITH o AS (SELECT o_orderkey,
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |    o_orderdate::DATE AS dt FROM orders)
-        |SELECT 'state' AS kind, CAST(year(dt) AS VARCHAR) AS grp,
-        |  count(*) AS n_rows, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM o WHERE dt < DATE '1999-01-01' GROUP BY 2
-        |UNION ALL
-        |SELECT 'cdf', 'insert', count(*), CAST(sum(cents) AS BIGINT)
-        |FROM o WHERE dt >= DATE '1998-01-01' AND dt < DATE '1999-01-01'
-        |  AND o_orderkey % 7 = 0 HAVING count(*) > 0
-        |UNION ALL
-        |SELECT 'cdf', 'delete', count(*), CAST(sum(cents) AS BIGINT)
-        |FROM o WHERE dt >= DATE '1999-01-01' AND dt < DATE '2000-01-01'
-        |HAVING count(*) > 0""".stripMargin,
-    // stor25: the whole commit ledger by construction — append arms
-    // carry one file (month dir) per era month, recomputed from raw
-    // orders; v3 exactly one positional-delete file; the restore
-    // removes era C's month dirs plus the delete file and carries its
-    // changeset.
-    "stor25_history" ->
-      """WITH m AS (SELECT
-        |    CAST(count(DISTINCT CASE WHEN dt < DATE '1998-01-01'
-        |      THEN date_trunc('month', dt) END) AS BIGINT) AS ma,
-        |    CAST(count(DISTINCT CASE WHEN dt >= DATE '1998-01-01'
-        |      AND dt < DATE '1999-01-01'
-        |      THEN date_trunc('month', dt) END) AS BIGINT) AS mb,
-        |    CAST(count(DISTINCT CASE WHEN dt >= DATE '1999-01-01'
-        |      AND dt < DATE '2000-01-01'
-        |      THEN date_trunc('month', dt) END) AS BIGINT) AS mc
-        |  FROM (SELECT o_orderdate::DATE AS dt FROM orders))
-        |SELECT CAST(1 AS BIGINT) AS version, CAST(0 AS BIGINT) AS parent,
-        |  '-' AS op, ma AS n_added, CAST(0 AS BIGINT) AS n_removed,
-        |  CAST(0 AS BIGINT) AS n_pos_delete_files,
-        |  CAST(0 AS BIGINT) AS n_eq_delete_files,
-        |  CAST(0 AS BIGINT) AS has_changeset FROM m
-        |UNION ALL SELECT 2, 1, '-', mb, 0, 0, 0, 0 FROM m
-        |UNION ALL SELECT 3, 2, '-', 0, 0, 1, 0, 0 FROM m
-        |UNION ALL SELECT 4, 3, '-', mc, 0, 0, 0, 0 FROM m
-        |UNION ALL SELECT 5, 4, 'restore v2', 0, mc + 1, 0, 0, 1
-        |FROM m""".stripMargin,
-    // stor21: the equality-delete ledger from the SAME month
-    // arithmetic as stor11/stor15 (shared ground truth IS the
-    // three-way COW ≡ positional ≡ equality proof): v1 full table,
-    // v2 = one E file carrying the distinct window keys (the subject
-    // key formula restated verbatim: dm·10^12 + okey·8 + ln) with
-    // every data file untouched, v3 = the fold's file ledger with
-    // identical visible state.
-    "stor21_eq_delete" ->
+        |FROM t""".stripMargin),
+
+    // EQUALITY DELETE through the commit log (VERDICT r17 #1 — the
+    // third delete form, closing the triangle: COW stor11 rewrites
+    // whole files synchronously, positional stor15 scans candidates
+    // once to learn (file, ordinal) pairs, equality stor21 writes
+    // ONLY THE SUBJECT KEYS — the GDPR-erasure request lands as one
+    // tiny file with zero data I/O, and reads apply it as a broadcast
+    // anti-join on the key). v3 folds like stor15: candidates from
+    // ship stats alone are rewritten with the keys applied and the E
+    // file retires atomically. The query reports the per-version
+    // ledger — data/E-file counts, keys marked, visible rows, exact
+    // cents. THREE-WAY PARITY: the delete window matches stor11/
+    // stor15 exactly, so all three oracles recompute the SAME month
+    // arithmetic ground truth — equal rows_visible/cents across the
+    // three queries IS the COW ≡ positional ≡ equality proof
+    // (StorageCompactionSpec asserts the head-state signatures equal
+    // directly). The oracle adds the distinct-key count from the same
+    // key formula.
+    Query("stor21_eq_delete", (s, d) => {
+      val t = stor21Table(s, d)
+      val dataDir = CommitLog.dataDir(t)
+      (1L to 3L).map { v =>
+        val nData = CommitLog.liveFiles(t, v).size
+        val eqs = CommitLog.liveEqDeleteFiles(t, v)
+        val marked =
+          if (eqs.isEmpty) lit(0L)
+          else lit(s.read.parquet(
+            eqs.map(_._1).map(f => s"$dataDir/$f"): _*).count())
+        CommitLog.read(s, t, Some(v))
+          .agg(count(lit(1)).as("rows_visible"),
+            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+              .cast("long").as("sum_qty_cents"))
+          .select(lit(v).as("version"),
+            lit(nData.toLong).as("n_data_files"),
+            lit(eqs.size.toLong).as("n_eqdelete_files"),
+            marked.as("keys_marked"),
+            col("rows_visible"), col("sum_qty_cents"))
+      }.reduce(_ unionByName _)
+    },
+      // stor21: the equality-delete ledger from the SAME month
+      // arithmetic as stor11/stor15 (shared ground truth IS the
+      // three-way COW ≡ positional ≡ equality proof): v1 full table,
+      // v2 = one E file carrying the distinct window keys (the subject
+      // key formula restated verbatim: dm·10^12 + okey·8 + ln) with
+      // every data file untouched, v3 = the fold's file ledger with
+      // identical visible state.
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
         |    count(*) AS n_rows,
         |    min(l_shipdate::DATE) AS mn, max(l_shipdate::DATE) AS mx,
@@ -2981,14 +1953,60 @@ object QueriesStorage {
         |UNION ALL
         |SELECT CAST(3 AS BIGINT), n_months - n_cand + n_refold,
         |  CAST(0 AS BIGINT), CAST(0 AS BIGINT), rows_kept, c_kept
-        |FROM t""".stripMargin,
-    // stor16: both layouts recomputed relationally — month zone maps
-    // for v1, the exact zSql interleave rank → 64 equal-row chunk zone
-    // maps for v2 (stor4's arithmetic) — plus the 2-D box skip ledger,
-    // the box-matched rows/checksum (identical across versions:
-    // pruning soundness) and the full-table checksum (identical:
-    // lossless rewrite).
-    "stor16_zorder_compact" ->
+        |FROM t""".stripMargin),
+
+    // Z-ORDER-AWARE COMPACTION, executed (VERDICT r16 #3): v1 is the
+    // ingest-ordered month layout (dm bounds tight, pk bounds
+    // full-domain per file — stor2's negative control), v2 the same
+    // rows rewritten in z(dm, pk) order into 64 equal-row files with
+    // tightened 2-D manifest bounds, one atomic rewrite commit. The
+    // query runs the SAME planScan probe (stor4's 2-D box: ship-1997
+    // days AND a narrow partkey band) against both versions' manifest
+    // stats and reads back only the planned files: the skip count must
+    // JUMP (v1 prunes only months outside 1997 — the pk predicate has
+    // zero power on a layout it doesn't cluster; v2 prunes on both
+    // dims), rows_matched and the matched checksum are IDENTICAL
+    // across versions (pruning soundness), and the full-table cents
+    // are identical (lossless rewrite — stor5's discipline). The
+    // oracle recomputes both layouts relationally: month zone maps for
+    // v1, the exact zSql interleave rank → 64-chunk zone maps for v2
+    // (stor4's arithmetic), plus the box-matched rows and checksums
+    // from raw lineitem.
+    Query("stor16_zorder_compact", (s, d) => {
+      val t = stor16Table(s, d)
+      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
+      val preds = Seq(
+        CommitLog.RangePredicate("dm", "1827", "2192", numCmp),
+        CommitLog.RangePredicate("pk", "100", "301", numCmp))
+      val rowPred = col("dm") >= 1827L && col("dm") < 2192L &&
+        col("pk") >= 100L && col("pk") < 301L
+      val cents = floor(col("l_quantity") * 100 + lit(0.5)).cast("long")
+      (1L to 2L).map { v =>
+        val live = CommitLog.liveFiles(t, v)
+        val plan = CommitLog.planScan(t, v, preds)
+        val total = CommitLog.read(s, t, Some(v))
+          .agg(sum(cents).cast("long").as("sum_qty_cents_total"))
+        CommitLog.readFiles(s, t, plan.selected)
+          .agg(count(lit(1)).as("rows_scanned"),
+            sum(when(rowPred, 1L).otherwise(0L)).as("rows_matched"),
+            coalesce(sum(when(rowPred, cents)), lit(0L)).cast("long")
+              .as("sum_qty_cents_matched"))
+          .crossJoin(broadcast(total))
+          .select(lit(v).as("version"),
+            lit(live.size.toLong).as("n_files"),
+            lit((live.size - plan.selected.size).toLong).as("n_skipped"),
+            lit(plan.skipped.getOrElse("dm", 0L)).as("n_skip_dm"),
+            lit(plan.skipped.getOrElse("pk", 0L)).as("n_skip_pk"),
+            col("rows_scanned"), col("rows_matched"),
+            col("sum_qty_cents_matched"), col("sum_qty_cents_total"))
+      }.reduce(_ unionByName _)
+    },
+      // stor16: both layouts recomputed relationally — month zone maps
+      // for v1, the exact zSql interleave rank → 64 equal-row chunk zone
+      // maps for v2 (stor4's arithmetic) — plus the 2-D box skip ledger,
+      // the box-matched rows/checksum (identical across versions:
+      // pruning soundness) and the full-table checksum (identical:
+      // lossless rewrite).
       s"""WITH base AS (SELECT
          |    CAST(date_diff('day', DATE '1992-01-01',
          |      l_shipdate::DATE) AS BIGINT) & 4095 AS dm,
@@ -3045,47 +2063,146 @@ object QueriesStorage {
          |SELECT CAST(2 AS BIGINT), a2.n_files, a2.n_skipped,
          |  a2.n_skip_dm, a2.n_skip_pk, a2.rows_scanned,
          |  mt.rows_matched, mt.cents_m, n.total
-         |FROM a2, mt, n""".stripMargin,
-    // stor17: the WAP ledger from raw month arithmetic — v1 is all
-    // months but the newest; the bad branch shifts every held-out row
-    // by exactly +1000 quantity (= +100000 cents) and fails the audit
-    // with one violation per row; the good branch is the held-out
-    // month verbatim and publishes.
-    "stor17_wap_publish" ->
-      """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
-        |    count(*) AS n_rows,
-        |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |p AS (SELECT CAST(count(*) AS BIGINT) AS n_months,
-        |    CAST(sum(n_rows) AS BIGINT) AS rows_all,
-        |    CAST(sum(cents) AS BIGINT) AS cents_all,
-        |    max(m) AS mx FROM f),
-        |h AS (SELECT CAST(f.n_rows AS BIGINT) AS n_ho,
-        |    f.cents AS cents_ho
-        |  FROM f, p WHERE f.m = p.mx)
-        |SELECT CAST(1 AS BIGINT) AS version,
-        |  p.n_months - 1 AS n_files,
-        |  p.rows_all - h.n_ho AS rows_visible,
-        |  p.cents_all - h.cents_ho AS sum_qty_cents,
-        |  CAST(0 AS BIGINT) AS audit_viol,
-        |  CAST(1 AS BIGINT) AS published
-        |FROM p, h
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), p.n_months, p.rows_all,
-        |  p.cents_all + 100000 * h.n_ho, h.n_ho, CAST(0 AS BIGINT)
-        |FROM p, h
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), p.n_months, p.rows_all, p.cents_all,
-        |  CAST(0 AS BIGINT), CAST(1 AS BIGINT)
-        |FROM p, h""".stripMargin,
-    // stor19: both eras' zone maps and the band arithmetic from raw
-    // lineitem — old era = ship-month files with ship bounds, new era
-    // (ship >= 1998) = 16 key buckets with okey bounds; each probe
-    // prunes only its own era and conservatively reads the other
-    // (n_nostats = the other era's live file count), and matched
-    // rows/cents are the global predicate counts (layout-blind).
-    "stor19_partition_evolution" ->
+         |FROM a2, mt, n""".stripMargin),
+
+    // BATCH POINT-LOOKUP FILE PRUNING (the GDPR-erasure / dynamic-
+    // file-pruning shape): a 40-key IN-list planned against the
+    // manifest Bloom filters in ONE pass — a file is opened iff its
+    // filter admits ANY key in the batch. On stor18's ingest-ordered
+    // layout the zone maps would keep every file for every key; the
+    // batch bloom plan opens only the files that might hold any of
+    // the 40 keys, and correctness is exact (no false negatives, so
+    // every matching row lives in a selected file — rows_matched,
+    // cents, and distinct keys found all equal the global IN-list
+    // counts). The oracle recomputes bit-exact batch membership
+    // relationally with the key as a COLUMN (no text explosion).
+    Query("stor20_bloom_in_prune", (s, d) => {
+      val t = stor18Table(s, d)
+      val keys = (0 until 40).map(i => i * 2500L + 7L)
+      val plan = CommitLog.planScan(t, 1L, Nil, Nil,
+        Seq(CommitLog.InPredicate("k", keys)))
+      val nFiles = CommitLog.liveFiles(t, 1L).size.toLong
+      val inSet = col("k").isin(keys: _*)
+      val agg =
+        if (plan.selected.isEmpty)
+          s.range(1).select(lit(0L).as("rows_scanned"),
+            lit(0L).as("rows_matched"), lit(0L).as("cents_matched"),
+            lit(0L).as("n_keys_found"))
+        else CommitLog.readFiles(s, t, plan.selected)
+          .agg(count(lit(1)).as("rows_scanned"),
+            sum(when(inSet, 1L).otherwise(0L)).as("rows_matched"),
+            coalesce(sum(when(inSet, col("cents"))), lit(0L))
+              .cast("long").as("cents_matched"),
+            countDistinct(when(inSet, col("k"))).as("n_keys_found"))
+      agg.select(lit(40L).as("n_keys"),
+        lit(nFiles).as("n_files"),
+        lit(plan.selected.size.toLong).as("bloom_selected"),
+        col("rows_scanned"), col("rows_matched"),
+        col("cents_matched"), col("n_keys_found"))
+    },
+      // stor20: the batch form of stor18's membership arithmetic with
+      // the query key as a COLUMN — per (file, key) the same 3-target ×
+      // 3-probe bit test, a file selected iff ANY key passes; matched
+      // rows/cents/distinct keys from the raw IN-list join.
+      {
+      def pr(v: String, i: Int): String =
+        s"((($v) % 2147483647) * " +
+          s"${graft.storage.CommitLog.Bloom.A(i)} + " +
+          s"${graft.storage.CommitLog.Bloom.B(i)}) % 2147483647 % 16384"
+      val hit = (0 until 3).map { ti =>
+        val tgt = pr("ks.qk", ti)
+        val any = (0 until 3)
+          .map(pi => s"${pr("br.k", pi)} = ($tgt)").mkString(" OR ")
+        s"max(CASE WHEN $any THEN 1 ELSE 0 END) = 1"
+      }.mkString(" AND ")
+      s"""WITH p AS (SELECT max(l_orderkey) AS mxo, count(*) AS n
+         |  FROM lineitem),
+         |prm AS (SELECT mxo, n,
+         |    (mxo + GREATEST(32, (n + 1999) // 2000) - 1)
+         |      // GREATEST(32, (n + 1999) // 2000) AS step
+         |  FROM p),
+         |b AS (SELECT (l.l_orderkey - 1) // prm.step AS bucket,
+         |    (l.l_orderkey * 131 + l.l_linenumber) % 100000 AS k,
+         |    CAST(floor(l.l_quantity * 100 + 0.5) AS BIGINT) AS cents
+         |  FROM lineitem l CROSS JOIN prm),
+         |ks AS (SELECT x * 2500 + 7 AS qk FROM range(0, 40) t(x)),
+         |fs AS (SELECT bucket, count(*) AS nr FROM b GROUP BY 1),
+         |br AS (SELECT b.bucket, b.k FROM b),
+         |fk AS (SELECT br.bucket, ks.qk, ($hit) AS hit
+         |  FROM br, ks GROUP BY br.bucket, ks.qk),
+         |fsel AS (SELECT bucket,
+         |    max(CASE WHEN hit THEN 1 ELSE 0 END) = 1 AS sel
+         |  FROM fk GROUP BY bucket),
+         |ag AS (SELECT
+         |    CAST(sum(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS bloom_selected,
+         |    CAST(sum(CASE WHEN sel THEN nr ELSE 0 END) AS BIGINT)
+         |      AS rows_scanned
+         |  FROM fsel JOIN fs USING (bucket)),
+         |mt AS (SELECT CAST(count(*) AS BIGINT) AS rows_matched,
+         |    CAST(coalesce(sum(b.cents), 0) AS BIGINT)
+         |      AS cents_matched,
+         |    CAST(count(DISTINCT b.k) AS BIGINT) AS n_keys_found
+         |  FROM b JOIN ks ON b.k = ks.qk)
+         |SELECT CAST(40 AS BIGINT) AS n_keys,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM fs) AS n_files,
+         |  ag.bloom_selected, ag.rows_scanned,
+         |  mt.rows_matched, mt.cents_matched, mt.n_keys_found
+         |FROM ag, mt""".stripMargin
+    }),
+
+    // PARTITION EVOLUTION (the Iceberg hidden-partitioning contract):
+    // the old era lives in ship-month files with ship bounds only, the
+    // new era (post-evolution commit) in orderkey buckets with key
+    // bounds only — no history rewritten, stats heterogeneous per
+    // file. The ship probe prunes the OLD era hard and conservatively
+    // keeps every new file (reported in n_nostats); the key probe
+    // prunes the NEW era hard and keeps every old file. Correctness is
+    // layout-blind: rows_matched/cents equal the global predicate
+    // counts because a file missing a predicate column is always read,
+    // never skipped blind. The oracle rebuilds both eras' zone maps
+    // and the band arithmetic from raw lineitem.
+    Query("stor19_partition_evolution", (s, d) => {
+      val t = stor19Table(s, d)
+      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
+      // band bounds from the v2 manifest stats ALONE (metadata-only):
+      // max okey over the key-spec era's bounds = the builder's mxo
+      val mxo = CommitLog.statsAt(t, 2L).values.flatMap(_.get("okey"))
+        .map(_.max.toLong).max
+      val step = (mxo + 15L) / 16L
+      val (blo, bhi) = (mxo / 4L, mxo / 4L + (step + 1L) / 2L)
+      val nFiles = CommitLog.liveFiles(t, 2L).size.toLong
+      val probes = Seq(
+        ("ship",
+          Seq(CommitLog.RangePredicate("ship", "1996-03-01",
+            "1996-06-01")),
+          col("ship") >= lit("1996-03-01").cast("date") &&
+            col("ship") < lit("1996-06-01").cast("date")),
+        ("key",
+          Seq(CommitLog.RangePredicate("okey", blo.toString,
+            bhi.toString, numCmp)),
+          col("okey") >= blo && col("okey") < bhi))
+      probes.map { case (label, preds, rowPred) =>
+        val plan = CommitLog.planScan(t, 2L, preds)
+        CommitLog.readFiles(s, t, plan.selected)
+          .agg(count(lit(1)).as("rows_scanned"),
+            sum(when(rowPred, 1L).otherwise(0L)).as("rows_matched"),
+            coalesce(sum(when(rowPred, col("cents"))), lit(0L))
+              .cast("long").as("cents_matched"))
+          .select(lit(label).as("probe"),
+            lit(nFiles).as("n_files"),
+            lit((nFiles - plan.selected.size).toLong).as("n_skipped"),
+            lit(plan.noStats.size.toLong).as("n_nostats"),
+            col("rows_scanned"), col("rows_matched"),
+            col("cents_matched"))
+      }.reduce(_ unionByName _)
+    },
+      // stor19: both eras' zone maps and the band arithmetic from raw
+      // lineitem — old era = ship-month files with ship bounds, new era
+      // (ship >= 1998) = 16 key buckets with okey bounds; each probe
+      // prunes only its own era and conservatively reads the other
+      // (n_nostats = the other era's live file count), and matched
+      // rows/cents are the global predicate counts (layout-blind).
       """WITH li AS (SELECT l_orderkey AS okey,
         |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS cents,
         |    l_shipdate::DATE AS ship,
@@ -3136,64 +2253,135 @@ object QueriesStorage {
         |  karm.rows_new +
         |    (SELECT CAST(sum(nr) AS BIGINT) FROM oldf),
         |  kmt.rows_matched, kmt.cents_matched
-        |FROM nf, karm, kmt""".stripMargin,
-    // stor20: the batch form of stor18's membership arithmetic with
-    // the query key as a COLUMN — per (file, key) the same 3-target ×
-    // 3-probe bit test, a file selected iff ANY key passes; matched
-    // rows/cents/distinct keys from the raw IN-list join.
-    "stor20_bloom_in_prune" -> {
-      def pr(v: String, i: Int): String =
-        s"((($v) % 2147483647) * " +
-          s"${graft.storage.CommitLog.Bloom.A(i)} + " +
-          s"${graft.storage.CommitLog.Bloom.B(i)}) % 2147483647 % 16384"
-      val hit = (0 until 3).map { ti =>
-        val tgt = pr("ks.qk", ti)
-        val any = (0 until 3)
-          .map(pi => s"${pr("br.k", pi)} = ($tgt)").mkString(" OR ")
-        s"max(CASE WHEN $any THEN 1 ELSE 0 END) = 1"
-      }.mkString(" AND ")
-      s"""WITH p AS (SELECT max(l_orderkey) AS mxo, count(*) AS n
-         |  FROM lineitem),
-         |prm AS (SELECT mxo, n,
-         |    (mxo + GREATEST(32, (n + 1999) // 2000) - 1)
-         |      // GREATEST(32, (n + 1999) // 2000) AS step
-         |  FROM p),
-         |b AS (SELECT (l.l_orderkey - 1) // prm.step AS bucket,
-         |    (l.l_orderkey * 131 + l.l_linenumber) % 100000 AS k,
-         |    CAST(floor(l.l_quantity * 100 + 0.5) AS BIGINT) AS cents
-         |  FROM lineitem l CROSS JOIN prm),
-         |ks AS (SELECT x * 2500 + 7 AS qk FROM range(0, 40) t(x)),
-         |fs AS (SELECT bucket, count(*) AS nr FROM b GROUP BY 1),
-         |br AS (SELECT b.bucket, b.k FROM b),
-         |fk AS (SELECT br.bucket, ks.qk, ($hit) AS hit
-         |  FROM br, ks GROUP BY br.bucket, ks.qk),
-         |fsel AS (SELECT bucket,
-         |    max(CASE WHEN hit THEN 1 ELSE 0 END) = 1 AS sel
-         |  FROM fk GROUP BY bucket),
-         |ag AS (SELECT
-         |    CAST(sum(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS bloom_selected,
-         |    CAST(sum(CASE WHEN sel THEN nr ELSE 0 END) AS BIGINT)
-         |      AS rows_scanned
-         |  FROM fsel JOIN fs USING (bucket)),
-         |mt AS (SELECT CAST(count(*) AS BIGINT) AS rows_matched,
-         |    CAST(coalesce(sum(b.cents), 0) AS BIGINT)
-         |      AS cents_matched,
-         |    CAST(count(DISTINCT b.k) AS BIGINT) AS n_keys_found
-         |  FROM b JOIN ks ON b.k = ks.qk)
-         |SELECT CAST(40 AS BIGINT) AS n_keys,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM fs) AS n_files,
-         |  ag.bloom_selected, ag.rows_scanned,
-         |  mt.rows_matched, mt.cents_matched, mt.n_keys_found
-         |FROM ag, mt""".stripMargin
+        |FROM nf, karm, kmt""".stripMargin),
+
+    // WRITE-AUDIT-PUBLISH through branch refs (the Iceberg WAP
+    // pattern): v1 = every month but the newest, ref `main` cut there;
+    // v2 = a corrupt candidate batch (quantity +1000) committed on
+    // branch `wap_bad`; v3 = the clean candidate on `wap_good`. The
+    // audit runs on each branch's INCREMENT only, and publish is an
+    // O(1) fast-forward CAS of `main` — the bad branch's rows are
+    // NEVER reachable through the published lineage (the `published`
+    // column is isAncestor against the final main ref). The oracle
+    // recomputes every stage from raw lineitem month arithmetic: the
+    // held-out month's rows/cents, the +1000-per-row cents shift on
+    // the bad branch, the violation counts, and the publish verdicts.
+    // CommitLogBranchSpec pins the protocol side (CAS races,
+    // fast-forward refusal on divergence, branch-blind replay).
+    Query("stor17_wap_publish", (s, d) => {
+      val t = stor17Table(s, d)
+      val mainV = CommitLog.refVersion(t, "main")
+      (1L to 3L).map { v =>
+        val viol =
+          if (v == 1L) lit(0L)
+          else lit(CommitLog.readIncrement(s, t, 1L, v)
+            .filter(col("l_quantity") > 100.0).count())
+        CommitLog.read(s, t, Some(v))
+          .agg(count(lit(1)).as("rows_visible"),
+            sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+              .cast("long").as("sum_qty_cents"))
+          .select(lit(v).as("version"),
+            lit(CommitLog.liveFiles(t, v).size.toLong).as("n_files"),
+            col("rows_visible"), col("sum_qty_cents"),
+            viol.as("audit_viol"),
+            lit(if (CommitLog.isAncestor(t, v, mainV)) 1L else 0L)
+              .as("published"))
+      }.reduce(_ unionByName _)
     },
-    // stor18: the bucket layout, both probe keys, and BIT-EXACT Bloom
-    // membership recomputed relationally: a file passes for a query
-    // key iff for EACH of the key's 3 target bit positions SOME row in
-    // the file sets that position via ANY of its 3 probes (cross-probe
-    // collisions included — this is exactly "the bit is set", so the
-    // oracle reproduces false positives too, not just true hits).
-    "stor18_bloom_skip" -> {
+      // stor17: the WAP ledger from raw month arithmetic — v1 is all
+      // months but the newest; the bad branch shifts every held-out row
+      // by exactly +1000 quantity (= +100000 cents) and fails the audit
+      // with one violation per row; the good branch is the held-out
+      // month verbatim and publishes.
+      """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE AS m,
+        |    count(*) AS n_rows,
+        |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+        |      AS BIGINT) AS cents
+        |  FROM lineitem GROUP BY 1),
+        |p AS (SELECT CAST(count(*) AS BIGINT) AS n_months,
+        |    CAST(sum(n_rows) AS BIGINT) AS rows_all,
+        |    CAST(sum(cents) AS BIGINT) AS cents_all,
+        |    max(m) AS mx FROM f),
+        |h AS (SELECT CAST(f.n_rows AS BIGINT) AS n_ho,
+        |    f.cents AS cents_ho
+        |  FROM f, p WHERE f.m = p.mx)
+        |SELECT CAST(1 AS BIGINT) AS version,
+        |  p.n_months - 1 AS n_files,
+        |  p.rows_all - h.n_ho AS rows_visible,
+        |  p.cents_all - h.cents_ho AS sum_qty_cents,
+        |  CAST(0 AS BIGINT) AS audit_viol,
+        |  CAST(1 AS BIGINT) AS published
+        |FROM p, h
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT), p.n_months, p.rows_all,
+        |  p.cents_all + 100000 * h.n_ho, h.n_ho, CAST(0 AS BIGINT)
+        |FROM p, h
+        |UNION ALL
+        |SELECT CAST(3 AS BIGINT), p.n_months, p.rows_all, p.cents_all,
+        |  CAST(0 AS BIGINT), CAST(1 AS BIGINT)
+        |FROM p, h""".stripMargin),
+
+    // BLOOM-FILTER FILE SKIPPING from the manifest — equality pruning
+    // where zone maps are powerless: the lookup key is uniform across
+    // ingest-ordered files, so every file's (min, max) covers ~the
+    // whole domain and the range probe (`zone_selected`) keeps nearly
+    // everything, while the per-file Bloom filter (`bloom_selected`)
+    // keeps only the files that can contain the key — for the `hit`
+    // probe the handful that actually do (plus rare false positives),
+    // for the in-domain `miss` probe almost none. rows_scanned is the
+    // measured read cost of the bloom plan; rows_matched/cents are
+    // exact (no false negatives, so every matching row lives in a
+    // selected file). The oracle recomputes the bucket layout, both
+    // probe keys, AND bit-exact Bloom membership relationally — the
+    // hash family is integer arithmetic shared verbatim with the
+    // planner (a file passes iff for each of the 3 target bits some
+    // row sets it via any of its 3 probes).
+    Query("stor18_bloom_skip", (s, d) => {
+      val t = stor18Table(s, d)
+      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
+      val tbl = CommitLog.read(s, t)
+      // both probes MID-domain (smallest present/absent key >= 50000):
+      // an edge key would let the min/max zone maps prune by accident
+      // and understate the contrast this query measures
+      val qhit = tbl.filter(col("k") >= 50000L).agg(min(col("k")))
+        .head().getLong(0)
+      // OPT r18 (guide §2.4): anti-join semantics don't need the right
+      // side distinct — dropping it removes one exchange + aggregate
+      // over the table; result identical.
+      val qmiss = s.range(50000L, 100000L).toDF("id")
+        .join(tbl.select(col("k")), col("id") === col("k"), "left_anti")
+        .agg(min(col("id"))).head().getLong(0)
+      val nFiles = CommitLog.liveFiles(t, 1L).size.toLong
+      Seq(("hit", qhit), ("miss", qmiss)).map { case (label, qk) =>
+        val zone = CommitLog.planScan(t, 1L,
+          Seq(CommitLog.RangePredicate("k", qk.toString,
+            (qk + 1L).toString, numCmp)))
+        val bloom = CommitLog.planScan(t, 1L, Nil,
+          Seq(CommitLog.EqPredicate("k", qk)))
+        val scanned =
+          if (bloom.selected.isEmpty)
+            s.range(1).select(lit(0L).as("rows_scanned"),
+              lit(0L).as("rows_matched"), lit(0L).as("cents_matched"))
+          else CommitLog.readFiles(s, t, bloom.selected)
+            .agg(count(lit(1)).as("rows_scanned"),
+              sum(when(col("k") === qk, 1L).otherwise(0L))
+                .as("rows_matched"),
+              coalesce(sum(when(col("k") === qk, col("cents"))), lit(0L))
+                .cast("long").as("cents_matched"))
+        scanned.select(lit(label).as("probe"), lit(qk).as("qk"),
+          lit(nFiles).as("n_files"),
+          lit(zone.selected.size.toLong).as("zone_selected"),
+          lit(bloom.selected.size.toLong).as("bloom_selected"),
+          col("rows_scanned"), col("rows_matched"), col("cents_matched"))
+      }.reduce(_ unionByName _)
+    },
+      // stor18: the bucket layout, both probe keys, and BIT-EXACT Bloom
+      // membership recomputed relationally: a file passes for a query
+      // key iff for EACH of the key's 3 target bit positions SOME row in
+      // the file sets that position via ANY of its 3 probes (cross-probe
+      // collisions included — this is exactly "the bit is set", so the
+      // oracle reproduces false positives too, not just true hits).
+      {
       def pr(v: String, i: Int): String =
         s"((($v) % 2147483647) * " +
           s"${graft.storage.CommitLog.Bloom.A(i)} + " +
@@ -3244,13 +2432,47 @@ object QueriesStorage {
          |${arm("hit", "q.qhit")}
          |UNION ALL
          |${arm("miss", "q.qmiss")}""".stripMargin
+    }),
+
+    // MULTI-TABLE ATOMIC COMMIT (VERDICT r17 #6): a fact table and
+    // its derived aggregate land through the transaction log — stage
+    // in both, ONE atomic marker claim, idempotent expose — so
+    // readers see each batch in neither table or both. Txn 3 stages
+    // the last month in both tables but crashes before its marker:
+    // its rows are invisible in BOTH (a per-table commit protocol
+    // would have let one table expose and not the other). The query
+    // full-outer-joins rollup(fact) with the agg table per month —
+    // any parity break (a month on one side only, mismatched
+    // counts/cents) would surface as nulls in the hash — plus the
+    // coordinator ledger: 2 committed txns, both tables at v2, one
+    // staged-pending txn. The oracle recomputes the month arithmetic
+    // with the last month held out. TxnLogSpec pins the crash matrix
+    // (pre-marker invisibility, post-marker recovery, racing
+    // recoverers, abort refusal).
+    Query("stor23_multitable_txn", (s, d) => {
+      import graft.storage.TxnLog
+      val (coord, fact, agg) = stor23Coord(s, d)
+      val factDf = TxnLog.read(s, coord, fact)
+      val aggDf = TxnLog.read(s, coord, agg)
+      val roll = factDf.groupBy("month")
+        .agg(count(lit(1)).as("n_fact_rows"),
+          sum(col("cents")).cast("long").as("cents_fact"))
+      roll.join(aggDf, Seq("month"), "full_outer")
+        .select(col("month"), col("n_fact_rows"), col("cents_fact"),
+          col("n_rows").as("n_agg_rows"),
+          col("cents_sum").as("cents_agg"),
+          lit(TxnLog.committedTxns(coord).size.toLong)
+            .as("n_txns_committed"),
+          lit(CommitLog.latestVersion(fact)).as("fact_version"),
+          lit(CommitLog.latestVersion(agg)).as("agg_version"),
+          lit(TxnLog.stagedTxnIds(fact).size.toLong)
+            .as("n_staged_pending"))
     },
-    // stor23: the month arithmetic with the LAST month held out (txn
-    // 3 staged but never marked): per visible month the fact rollup
-    // and the agg row carry identical counts/cents, and the ledger
-    // columns are the protocol constants (2 committed, both tables at
-    // v2, 1 staged-pending).
-    "stor23_multitable_txn" ->
+      // stor23: the month arithmetic with the LAST month held out (txn
+      // 3 staged but never marked): per visible month the fact rollup
+      // and the agg row carry identical counts/cents, and the ledger
+      // columns are the protocol constants (2 committed, both tables at
+      // v2, 1 staged-pending).
       """WITH li AS (SELECT date_trunc('month', l_shipdate)::DATE
         |      AS month,
         |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS cents
@@ -3265,14 +2487,85 @@ object QueriesStorage {
         |  CAST(2 AS BIGINT) AS fact_version,
         |  CAST(2 AS BIGINT) AS agg_version,
         |  CAST(1 AS BIGINT) AS n_staged_pending
-        |FROM vis""".stripMargin,
-    // stor22: the string-key form of stor18/stor20's membership
-    // arithmetic — uris, md5-prefix60 hashes, the doc_id bucket
-    // layout, per-(probe, file) bit-exact Bloom membership (3 targets
-    // × 3 probes over the file's row hashes), per-(probe, file) zone
-    // overlap on the uri string bounds, and the matched rows/chars
-    // from raw uri equality.
-    "stor22_string_bloom_skip" -> {
+        |FROM vis""".stripMargin),
+
+    // STRING-KEYED BLOOM FILE SKIPPING (VERDICT r17 #4): point and
+    // batch lookups by DOCUMENT URI over the text corpus, planned
+    // from manifest Bloom filters built on md5Prefix60(uri) — the
+    // erasure/lookup shape for doc_id/text-keyed tables where stor18's
+    // Long-key hashing can't reach. The uri zone maps are the honest
+    // negative control (sources/langs interleave in every bucket, so
+    // string (min, max) keeps ~every file); the bloom plan opens the
+    // handful that can hold the key. Three arms: a present uri, an
+    // absent in-domain uri, and a 10-key batch (InPredicate.ofString —
+    // the GDPR-text shape). Correctness is exact: no false negatives,
+    // so matched rows/chars equal the global uri-equality counts. The
+    // oracle rebuilds the bucket layout, the uris, the md5-prefix60
+    // hashes, and bit-exact Bloom membership relationally.
+    Query("stor22_string_bloom_skip", (s, d) => {
+      val t = stor22Table(s, d)
+      // probe construction is a BOUNDED driver-side step (≤11 uris —
+      // the probe set, not data), built from the RAW documents rows so
+      // it never assumes dense ids (sf1's doc_id domain is SPARSE:
+      // 50k distinct ids up to 9e7 — a "mxid/2" point probe matched
+      // nothing there)
+      val raw = s.read.parquet(s"$d/documents.parquet")
+      def uriCol = concat(col("source"), lit(":"), col("lang"),
+        lit(":"), lpad(col("doc_id").cast("string"), 12, "0"))
+      val mxid = raw.agg(max(col("doc_id"))).head().getLong(0)
+      // hit: the smallest PRESENT id at or above mid-domain
+      val hitUri = raw.filter(col("doc_id") >= mxid / 2L)
+        .orderBy(col("doc_id")).limit(1)
+        .select(uriCol.as("uri")).head().getString(0)
+      val missUri = f"src0:en:${mxid + 7L}%012d"
+      // batch: the 10 smallest PRESENT ids in a deterministic residue
+      // class — presence-robust at any sparsity
+      val batchUris = raw.filter(col("doc_id") % 7 === 3)
+        .orderBy(col("doc_id")).limit(10)
+        .select(uriCol.as("uri"))
+        .collect().map(_.getString(0)).toSeq.sorted
+      val nFiles = CommitLog.liveFiles(t, 1L).size.toLong
+      // per-key zone probe, unioned across the batch (disjunction —
+      // planScan's predicate list is a conjunction)
+      def zoneSel(uris: Seq[String]): Long =
+        uris.map(u => CommitLog.planScan(t, 1L,
+          Seq(CommitLog.RangePredicate("uri", u, u + "~")))
+          .selected.toSet).reduce(_ ++ _).size.toLong
+      Seq(("hit", Seq(hitUri)), ("miss", Seq(missUri)),
+        ("batch", batchUris)).map { case (label, uris) =>
+        val sel =
+          if (uris.size == 1)
+            CommitLog.planScan(t, 1L, Nil,
+              Seq(CommitLog.EqPredicate.ofString("uri", uris.head)))
+              .selected
+          else CommitLog.planScan(t, 1L, Nil, Nil,
+            Seq(CommitLog.InPredicate.ofString("uri", uris))).selected
+        val inSet = col("uri").isin(uris: _*)
+        val agg =
+          if (sel.isEmpty)
+            s.range(1).select(lit(0L).as("rows_scanned"),
+              lit(0L).as("rows_matched"), lit(0L).as("chars_matched"))
+          else CommitLog.readFiles(s, t, sel)
+            .agg(count(lit(1)).as("rows_scanned"),
+              sum(when(inSet, 1L).otherwise(0L)).as("rows_matched"),
+              coalesce(sum(when(inSet, col("n_chars"))), lit(0L))
+                .cast("long").as("chars_matched"))
+        agg.select(lit(label).as("probe"),
+          lit(uris.size.toLong).as("n_keys"),
+          lit(nFiles).as("n_files"),
+          lit(zoneSel(uris)).as("zone_selected"),
+          lit(sel.size.toLong).as("bloom_selected"),
+          col("rows_scanned"), col("rows_matched"),
+          col("chars_matched"))
+      }.reduce(_ unionByName _)
+    },
+      // stor22: the string-key form of stor18/stor20's membership
+      // arithmetic — uris, md5-prefix60 hashes, the doc_id bucket
+      // layout, per-(probe, file) bit-exact Bloom membership (3 targets
+      // × 3 probes over the file's row hashes), per-(probe, file) zone
+      // overlap on the uri string bounds, and the matched rows/chars
+      // from raw uri equality.
+      {
       def pr(v: String, i: Int): String =
         s"((($v) % 2147483647) * " +
           s"${graft.storage.CommitLog.Bloom.A(i)} + " +
@@ -3347,13 +2640,469 @@ object QueriesStorage {
          |  ag.zone_selected, ag.bloom_selected, ag.rows_scanned,
          |  mt.rows_matched, mt.chars_matched
          |FROM ag JOIN nk USING (probe) JOIN mt USING (probe)""".stripMargin
+    }),
+
+    // SNAPSHOT RESTORE — rollback as a NEW commit (Delta RESTORE /
+    // Iceberg rollback), the bad-deploy recovery move: stor24Table's
+    // v5 rolls the table back to v2, undoing a positional delete AND
+    // a late append era in one atomic metadata commit (files
+    // re-referenced, never copied). Two proofs in one result: the
+    // STATE arm reads the post-restore head grouped by year — every
+    // era A/B row is back with exact cent checksums, era C gone —
+    // and the CDF arm reads changes() across the restore commit,
+    // whose writer-recorded changeset must be the row-level INVERSE
+    // of the rolled-back commits (era B's %7 band re-inserted, era C
+    // deleted). The oracle recomputes both arms from raw orders with
+    // the same era cuts (1998/1999/2000 — the synthetic date domain)
+    // and band arithmetic.
+    Query("stor24_restore", (s, d) => {
+      val t = stor24Table(s, d)
+      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
+        .cast("long")
+      val state = CommitLog.read(s, t)
+        .groupBy(year(col("odate")).cast("string").as("grp"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(cents).cast("long").as("cents"))
+        .select(lit("state").as("kind"), col("grp"), col("n_rows"),
+          col("cents")) // head must be exactly eras A+B (< 1999)
+      val feed = CommitLog.changes(s, t, 4L, 5L)
+        .groupBy(col("_change_type").as("grp"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(cents).cast("long").as("cents"))
+        .select(lit("cdf").as("kind"), col("grp"), col("n_rows"),
+          col("cents"))
+      state.unionByName(feed)
     },
-    // stor13: the merge band, the key-bucket layout, and both cent
-    // checksums recomputed from raw orders. Updated rows are worth
-    // k*100 cents exactly (price := key, integer-valued double);
-    // inserted keys live above the old max so they can't collide with
-    // the band arithmetic.
-    "stor13_cow_merge" ->
+      // stor24: the post-restore head must be EXACTLY eras A+B (the
+      // v3 delete undone, era C gone) — per-year counts and cent
+      // checksums from raw orders — and the restore commit's change
+      // feed must be the row-level inverse: inserts = era B's %7 band
+      // (the rows the rolled-back delete had erased), deletes = era C.
+      // Arms guard HAVING count(*) > 0 so an empty band degrades to an
+      // absent group on both engines.
+      """WITH o AS (SELECT o_orderkey,
+        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+        |    o_orderdate::DATE AS dt FROM orders)
+        |SELECT 'state' AS kind, CAST(year(dt) AS VARCHAR) AS grp,
+        |  count(*) AS n_rows, CAST(sum(cents) AS BIGINT) AS cents
+        |FROM o WHERE dt < DATE '1999-01-01' GROUP BY 2
+        |UNION ALL
+        |SELECT 'cdf', 'insert', count(*), CAST(sum(cents) AS BIGINT)
+        |FROM o WHERE dt >= DATE '1998-01-01' AND dt < DATE '1999-01-01'
+        |  AND o_orderkey % 7 = 0 HAVING count(*) > 0
+        |UNION ALL
+        |SELECT 'cdf', 'delete', count(*), CAST(sum(cents) AS BIGINT)
+        |FROM o WHERE dt >= DATE '1999-01-01' AND dt < DATE '2000-01-01'
+        |HAVING count(*) > 0""".stripMargin),
+
+    // The commit HISTORY metadata table (Iceberg `table$history`,
+    // Delta DESCRIBE HISTORY) over the same 5-commit lifecycle: one
+    // row per manifest with parent, operation tag, file-ledger counts,
+    // and the changeset flag — the audit surface an operator reads
+    // before ANY rollback ("what landed since the last good
+    // snapshot?"). Driver-side O(log) metadata, no data bytes. The
+    // oracle pins the whole ledger by construction: append arms carry
+    // one file per month in their era (month counts recomputed from
+    // raw orders), the delete arm exactly one positional-delete file,
+    // and the restore arm removes era C's files plus the delete file
+    // while carrying its changeset.
+    Query("stor25_history", (s, d) => {
+      CommitLog.history(s, stor24Table(s, d))
+        .select(col("version"), col("parent"),
+          coalesce(col("op"), lit("-")).as("op"),
+          col("n_added"), col("n_removed"), col("n_pos_delete_files"),
+          col("n_eq_delete_files"), col("has_changeset"))
+    },
+      // stor25: the whole commit ledger by construction — append arms
+      // carry one file (month dir) per era month, recomputed from raw
+      // orders; v3 exactly one positional-delete file; the restore
+      // removes era C's month dirs plus the delete file and carries its
+      // changeset.
+      """WITH m AS (SELECT
+        |    CAST(count(DISTINCT CASE WHEN dt < DATE '1998-01-01'
+        |      THEN date_trunc('month', dt) END) AS BIGINT) AS ma,
+        |    CAST(count(DISTINCT CASE WHEN dt >= DATE '1998-01-01'
+        |      AND dt < DATE '1999-01-01'
+        |      THEN date_trunc('month', dt) END) AS BIGINT) AS mb,
+        |    CAST(count(DISTINCT CASE WHEN dt >= DATE '1999-01-01'
+        |      AND dt < DATE '2000-01-01'
+        |      THEN date_trunc('month', dt) END) AS BIGINT) AS mc
+        |  FROM (SELECT o_orderdate::DATE AS dt FROM orders))
+        |SELECT CAST(1 AS BIGINT) AS version, CAST(0 AS BIGINT) AS parent,
+        |  '-' AS op, ma AS n_added, CAST(0 AS BIGINT) AS n_removed,
+        |  CAST(0 AS BIGINT) AS n_pos_delete_files,
+        |  CAST(0 AS BIGINT) AS n_eq_delete_files,
+        |  CAST(0 AS BIGINT) AS has_changeset FROM m
+        |UNION ALL SELECT 2, 1, '-', mb, 0, 0, 0, 0 FROM m
+        |UNION ALL SELECT 3, 2, '-', 0, 0, 1, 0, 0 FROM m
+        |UNION ALL SELECT 4, 3, '-', mc, 0, 0, 0, 0 FROM m
+        |UNION ALL SELECT 5, 4, 'restore v2', 0, mc + 1, 0, 0, 1
+        |FROM m""".stripMargin),
+
+    // TAG-PINNED RETENTION (the Iceberg expire-keeps-tagged-snapshots
+    // idea): expiry with a ref below the horizon keeps that snapshot
+    // readable forever — the audit-tag contract. stor26Table runs the
+    // lifecycle at build time (two COW erasure rewrites, tag `raw` at
+    // v1, expire to the head); this query proves all four outcomes at
+    // once: the TAGGED v1 still serves the full pre-erasure 1997 rows
+    // with exact cents (through its pin checkpoint — its parent
+    // manifests are gone), the head serves the post-erasure state,
+    // the UNTAGGED v2 is unresolvable, and v2's intermediate rewrite
+    // files — live only there — were physically reclaimed while the
+    // pinned originals stayed on disk. The oracle recomputes both row
+    // arms from raw orders (the two-step erasure composes to
+    // `%5==0 OR %3==0` over Jan–Jun) and pins the protocol arms by
+    // construction.
+    Query("stor26_tagged_expiry", (s, d) => {
+      val t = stor26Table(s, d)
+      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
+        .cast("long")
+      def arm(label: String, v: Long) =
+        CommitLog.read(s, t, Some(v))
+          .agg(count(lit(1)).as("n"), sum(cents).cast("long").as("cents"))
+          .select(lit(label).as("arm"), col("n"), col("cents"))
+      val v2Resolvable =
+        try { CommitLog.liveFiles(t, 2L); 1L }
+        catch { case _: CommitLog.SnapshotExpired => 0L }
+      val dd = new java.io.File(CommitLog.dataDir(t))
+      val rw1Left = Option(dd.listFiles())
+        .fold(Seq.empty[java.io.File])(_.toSeq)
+        .count(_.getName.startsWith("rw1_")).toLong
+      // breadth of the pinned snapshot — data-derived (robust to an
+      // empty month at tiny SF), and reading it at all proves the
+      // pinned originals are still on disk
+      val months = CommitLog.read(s, t, Some(CommitLog.refVersion(t, "raw")))
+        .agg(countDistinct(col("omonth")).as("n"))
+        .select(lit("months_pinned").as("arm"), col("n"),
+          lit(0L).as("cents"))
+      arm("tag_raw", CommitLog.refVersion(t, "raw"))
+        .unionByName(arm("head", CommitLog.refVersion(t, "main")))
+        .unionByName(months)
+        .unionByName(s.range(1).select(lit("protocol").as("arm"),
+          lit(v2Resolvable * 10L + rw1Left).as("n"),
+          lit(0L).as("cents")))
+    },
+      // stor26: the tagged snapshot serves the FULL pre-erasure 1997
+      // rows; the head serves the remainder after the composed two-step
+      // erasure (%5 then %3 over Jan–Jun = %5 OR %3); months_pinned is
+      // the pinned snapshot's month breadth (data-derived); the protocol
+      // arm packs v2-resolvable (0) and leftover intermediate files (0).
+      """WITH o AS (SELECT o_orderkey AS k,
+        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+        |    o_orderdate::DATE AS dt FROM orders
+        |  WHERE year(o_orderdate::DATE) = 1997)
+        |SELECT 'tag_raw' AS arm, count(*) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents FROM o
+        |UNION ALL
+        |SELECT 'head', count(*), CAST(sum(cents) AS BIGINT) FROM o
+        |WHERE NOT (month(dt) <= 6 AND (k % 5 = 0 OR k % 3 = 0))
+        |UNION ALL
+        |SELECT 'months_pinned',
+        |  CAST(count(DISTINCT date_trunc('month', dt)) AS BIGINT),
+        |  CAST(0 AS BIGINT) FROM o
+        |UNION ALL
+        |SELECT 'protocol', CAST(0 AS BIGINT), CAST(0 AS BIGINT)"""
+        .stripMargin),
+
+    // METADATA-ONLY AGGREGATES (the Iceberg aggregate-pushdown idea):
+    // min/max answered from manifest stats with ZERO data bytes — at
+    // 100 TB a full-column extremum becomes an O(manifest) driver
+    // lookup. Three arms: stor13's table BEFORE the merge (bucket
+    // stats fold to the raw key domain), its post-merge HEAD (the
+    // fold must track the rewrite's tightened stats AND the insert
+    // file's shifted keys — metadata answers stay exact across DML),
+    // and stor24's MOR-delete snapshot where aggBounds REFUSES (live
+    // delete files mask rows; stats describe the raw file) and the
+    // reader falls back to a scan — refusal over a silently-wrong
+    // answer. The oracle recomputes all three from raw orders: the
+    // key domain, the band arithmetic's insert shift, and the
+    // era-minus-band extremum.
+    Query("stor27_meta_agg", (s, d) => {
+      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
+      val t13 = stor13Table(s, d)
+      val t24 = stor24Table(s, d)
+      def metaArm(label: String, v: Long) = {
+        val (mn, mx) = CommitLog.aggBounds(t13, v, "o_orderkey", numCmp)
+          .getOrElse(sys.error(s"$label: stats-complete table must " +
+            "answer from metadata"))
+        s.range(1).select(lit(label).as("arm"),
+          lit("manifest").as("src"),
+          lit(mn.toLong).as("mn"), lit(mx.toLong).as("mx"))
+      }
+      // the MOR snapshot refuses metadata bounds -> scan fallback
+      require(CommitLog.aggBounds(t24, 3L, "o_orderkey", numCmp).isEmpty,
+        "live delete files must refuse metadata aggregates")
+      val fallback = CommitLog.read(s, t24, Some(3L))
+        .agg(min(col("o_orderkey")).as("mn"),
+          max(col("o_orderkey")).as("mx"))
+        .select(lit("mor_v3").as("arm"), lit("scan").as("src"),
+          col("mn"), col("mx"))
+      metaArm("v1", 1L).unionByName(metaArm("head", 2L))
+        .unionByName(fallback)
+    },
+      // stor27: v1 metadata bounds = the raw key domain; head bounds =
+      // min unchanged (the key 1..rank-n/4 region is never in the
+      // band), max shifted by the insert arm (mx + the largest band key
+      // with k%3=2, or unshifted when the band has no insert keys);
+      // the MOR arm = era A+B keys minus era-B's %7 band, scanned.
+      """WITH p AS (SELECT max(o_orderkey) AS mx, count(*) AS n
+        |  FROM orders),
+        |rk AS (SELECT o_orderkey,
+        |    row_number() OVER (ORDER BY o_orderkey) AS rn FROM orders),
+        |bnd AS (SELECT
+        |    (SELECT o_orderkey + 1 FROM rk, p WHERE rn = p.n // 4)
+        |      AS lo,
+        |    (SELECT o_orderkey + 1 FROM rk, p
+        |      WHERE rn = p.n // 4 + p.n // 20) AS hi),
+        |ins AS (SELECT max(o.o_orderkey) AS mk
+        |  FROM orders o CROSS JOIN bnd
+        |  WHERE o.o_orderkey >= bnd.lo AND o.o_orderkey < bnd.hi
+        |    AND o.o_orderkey % 3 = 2)
+        |SELECT 'v1' AS arm, 'manifest' AS src,
+        |  min(o_orderkey) AS mn, max(o_orderkey) AS mx FROM orders
+        |UNION ALL
+        |SELECT 'head', 'manifest',
+        |  (SELECT min(o_orderkey) FROM orders),
+        |  p.mx + coalesce(ins.mk, 0) FROM p CROSS JOIN ins
+        |UNION ALL
+        |SELECT 'mor_v3', 'scan', min(o_orderkey), max(o_orderkey)
+        |FROM orders
+        |WHERE o_orderdate::DATE < DATE '1999-01-01'
+        |  AND NOT (o_orderdate::DATE >= DATE '1998-01-01'
+        |    AND o_orderkey % 7 = 0)""".stripMargin),
+
+    // COLUMN MAPPING (the Delta column-mapping / Iceberg field-id
+    // idea): rename and drop as O(1) metadata commits over FROZEN
+    // physical names — no file rewritten at any scale, which at
+    // 100 TB is the difference between an instant ALTER TABLE and a
+    // full-table rewrite. The head serves both eras' files under the
+    // renamed column with the dropped column hidden; time travel
+    // serves v1 under its original names; exact column sets are
+    // pinned by loud requires and the ledger arm. The oracle
+    // recomputes both row arms from raw orders.
+    Query("stor28_column_mapping", (s, d) => {
+      val t = stor28Table(s, d)
+      val head = CommitLog.read(s, t)
+      require(head.columns.toSeq == Seq("o_orderkey", "price"),
+        s"head must serve the mapped schema, got " +
+          head.columns.mkString(","))
+      val v1 = CommitLog.read(s, t, Some(1L))
+      require(v1.columns.toSeq ==
+        Seq("o_orderkey", "o_totalprice", "odate"),
+        s"v1 must serve its era's names, got ${v1.columns.mkString(",")}")
+      def cents(c: String) = floor(col(c) * 100 + lit(0.5)).cast("long")
+      head.agg(count(lit(1)).as("n"),
+          sum(cents("price")).cast("long").as("cents"))
+        .select(lit("head").as("arm"), col("n"), col("cents"))
+        .unionByName(v1.agg(count(lit(1)).as("n"),
+            sum(cents("o_totalprice")).cast("long").as("cents"))
+          .select(lit("v1_oldname").as("arm"), col("n"), col("cents")))
+        .unionByName(s.range(1).select(lit("schema").as("arm"),
+          lit(head.columns.length.toLong).as("n"),
+          lit(v1.columns.length.toLong).as("cents")))
+    },
+      // stor28: head = both eras under the mapped name; v1 = 1997 under
+      // its era's name; schema arm = (head cols, v1 cols) constants.
+      """WITH o AS (SELECT
+        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+        |    year(o_orderdate::DATE) AS y FROM orders)
+        |SELECT 'head' AS arm, count(*) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents FROM o
+        |WHERE y IN (1997, 1998)
+        |UNION ALL
+        |SELECT 'v1_oldname', count(*), CAST(sum(cents) AS BIGINT)
+        |FROM o WHERE y = 1997
+        |UNION ALL
+        |SELECT 'schema', CAST(2 AS BIGINT), CAST(3 AS BIGINT)"""
+        .stripMargin),
+
+    // ONE-COMMIT MOR UPSERT (the Hudi upsert / Iceberg eq-delete +
+    // data-file shape, vs stor13's synchronous COW merge): the batch
+    // file and its keys publish atomically; the sequence rule (an
+    // equality delete applies only to STRICTLY OLDER files) keeps the
+    // batch from deleting itself, so updated keys serve the batch's
+    // row, untouched keys the original, and inserts appear — with
+    // O(batch) bytes written and zero files rewritten. Arms: the MOR
+    // state (anti-join read), the updated keys (price must equal the
+    // key), the inserted keys (above the old key domain), the FOLD
+    // (v3 materializes the upsert into one file, retiring the eq
+    // file — identical rows, zero-anti-join scan restored), and the
+    // file ledger (one eq file at v2, none at v3, one data file
+    // after the fold). The oracle recomputes the row arms from raw
+    // orders' 1997 era and %10 arithmetic.
+    Query("stor29_mor_upsert", (s, d) => {
+      val t = stor29Table(s, d)
+      val mx = Tables.orders(s, d)
+        .agg(max(col("o_orderkey"))).head().getLong(0)
+      // v2 = the MOR state (anti-join read path); v3 = the fold
+      val mor = CommitLog.read(s, t, Some(2L))
+      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
+        .cast("long")
+      def arm(label: String, df: org.apache.spark.sql.DataFrame) =
+        df.agg(count(lit(1)).as("n"),
+            sum(cents).cast("long").as("cents"))
+          .select(lit(label).as("arm"), col("n"), col("cents"))
+      val ledger = s.range(1).select(lit("ledger").as("arm"),
+        lit(CommitLog.liveEqDeleteFiles(t, 2L).size * 10L +
+          CommitLog.liveEqDeleteFiles(t, 3L).size).as("n"),
+        lit(CommitLog.liveFiles(t, 3L).size.toLong).as("cents"))
+      arm("head", mor)
+        .unionByName(arm("updated",
+          mor.filter(col("o_orderkey") % 10 === 0 &&
+            col("o_orderkey") <= mx)))
+        .unionByName(arm("inserted",
+          mor.filter(col("o_orderkey") > mx)))
+        .unionByName(arm("folded", CommitLog.read(s, t, Some(3L))))
+        .unionByName(ledger)
+    },
+      // stor29: head = 1997 with %10==0 keys repriced to the key, plus
+      // %10==5 keys re-inserted above the global key domain at price k;
+      // updated/inserted arms recompute the same %10 arithmetic.
+      """WITH p AS (SELECT max(o_orderkey) AS mx FROM orders),
+        |o97 AS (SELECT o_orderkey AS k,
+        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents0
+        |  FROM orders WHERE year(o_orderdate::DATE) = 1997),
+        |hd AS (SELECT count(*) AS n,
+        |    CAST(sum(CASE WHEN k % 10 = 0 THEN k * 100
+        |      ELSE cents0 END) AS BIGINT) AS cents FROM o97),
+        |ins AS (SELECT count(*) AS n,
+        |    CAST(coalesce(sum(k * 100), 0) AS BIGINT) AS cents
+        |  FROM o97 WHERE k % 10 = 5),
+        |upd AS (SELECT count(*) AS n,
+        |    CAST(coalesce(sum(k * 100), 0) AS BIGINT) AS cents
+        |  FROM o97 WHERE k % 10 = 0)
+        |SELECT 'head' AS arm, hd.n + ins.n AS n,
+        |  CAST(hd.cents + ins.cents AS BIGINT) AS cents
+        |FROM hd CROSS JOIN ins
+        |UNION ALL
+        |SELECT 'updated', n, cents FROM upd
+        |UNION ALL
+        |SELECT 'inserted', n, cents FROM ins
+        |UNION ALL
+        |SELECT 'folded', hd.n + ins.n,
+        |  CAST(hd.cents + ins.cents AS BIGINT)
+        |FROM hd CROSS JOIN ins
+        |UNION ALL
+        |SELECT 'ledger', CAST(10 AS BIGINT), CAST(1 AS BIGINT)"""
+        .stripMargin),
+
+    // ROW LINEAGE (the Iceberg `_snapshot_id` / Delta row-tracking
+    // idea at file granularity): every row tagged with the commit
+    // that FIRST added its file, derived at read time from the
+    // replayed (file → version) map broadcast against the scan's
+    // metadata path — zero data rewritten, no table redesign, and the
+    // audit query "which commit produced these rows?" works at any
+    // scale. Two arms over stor24's lifecycle: the MOR snapshot v3
+    // (era B minus the %7 band, every row tagging its true era) and
+    // the post-restore head (the un-deleted band rows return STILL
+    // tagging era B's commit — lineage is the content's age, not the
+    // rollback's). The oracle recomputes both from era/band
+    // arithmetic.
+    Query("stor30_row_lineage", (s, d) => {
+      val t = stor24Table(s, d)
+      val cents = floor(col("o_totalprice") * 100 + lit(0.5))
+        .cast("long")
+      def arm(label: String, v: Long) =
+        CommitLog.readWithLineage(s, t, Some(v))
+          .groupBy(col("_commit_version"))
+          .agg(count(lit(1)).as("n"), sum(cents).cast("long").as("cents"))
+          .select(lit(label).as("arm"), col("_commit_version"),
+            col("n"), col("cents"))
+      arm("mor_v3", 3L).unionByName(arm("head", 5L))
+    },
+      // stor30: per-commit row groups from era arithmetic — era A
+      // (< 1998) tags v1, era B (1998) tags v2; the MOR arm drops era
+      // B's %7 keys, the head arm restores them (same v2 tag).
+      """WITH o AS (SELECT o_orderkey AS k,
+        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+        |    o_orderdate::DATE AS dt FROM orders
+        |  WHERE o_orderdate::DATE < DATE '1999-01-01'),
+        |t AS (SELECT *,
+        |    CASE WHEN dt < DATE '1998-01-01' THEN 1 ELSE 2 END AS cv,
+        |    (dt >= DATE '1998-01-01' AND k % 7 = 0) AS banded
+        |  FROM o)
+        |SELECT 'mor_v3' AS arm, CAST(cv AS BIGINT) AS _commit_version,
+        |  count(*) AS n, CAST(sum(cents) AS BIGINT) AS cents
+        |FROM t WHERE NOT banded GROUP BY 2
+        |UNION ALL
+        |SELECT 'head', CAST(cv AS BIGINT), count(*),
+        |  CAST(sum(cents) AS BIGINT) FROM t GROUP BY 2""".stripMargin),
+
+    // COPY-ON-WRITE MERGE through the commit log — update + delete +
+    // insert in ONE atomic commit, completing the DML triangle
+    // (append stor7/9, compaction rewrite stor8, delete stor11). The
+    // table is laid out in contiguous KEY-RANGE files so the merge
+    // keys' stats actually prune: the changeset touches one narrow
+    // band (~5% of the key space), planScan selects only the 1-2
+    // overlapping files, ONLY those are rewritten (updates applied,
+    // deletes dropped), and the brand-new keys land as one appended
+    // file — at 100 TB a MERGE priced by the changeset's key
+    // footprint, not the table. Every measured column has relational
+    // ground truth: the file ledger from the log + planScan, the
+    // update count from the head rows that actually carry the new
+    // price, inserts from keys above the old max, and exact cent
+    // checksums before/after. The oracle recomputes the band
+    // arithmetic, the bucket layout, and both checksums from raw
+    // orders.
+    Query("stor13_cow_merge", (s, d) => {
+      val t = stor13Table(s, d)
+      val numCmp = (a: String, b: String) => a.toLong.compare(b.toLong)
+      // mx from v1 manifest stats — metadata-only, no data read
+      val mx = CommitLog.statsAt(t, 1L).values
+        .map(_("o_orderkey").max.toLong).max
+      // band bounds are RANK-derived (sparsity-proof — see
+      // stor13Table): the key at ascending rank n/4 (+1) .. rank
+      // n/4 + n/20 (+1), recomputed from the v1 snapshot with the
+      // same orderBy+limit+max form the builder used
+      val v1 = CommitLog.read(s, t, Some(1L))
+      val nOrd = v1.agg(count(lit(1))).head().getLong(0)
+      def keyAtRank(r: Long): Long = v1
+        .orderBy(col("o_orderkey")).limit(r.toInt)
+        .agg(max(col("o_orderkey"))).head().getLong(0)
+      val bandLo = keyAtRank(nOrd / 4L) + 1L
+      val bandHi = keyAtRank(nOrd / 4L + nOrd / 20L) + 1L
+      val plan = CommitLog.planScan(t, 1L, Seq(
+        CommitLog.RangePredicate("o_orderkey", bandLo.toString,
+          bandHi.toString, numCmp)))
+      val v1Files = CommitLog.liveFiles(t, 1L)
+      val headFiles = CommitLog.liveFiles(t, 2L)
+      val untouched = v1Files.toSet.intersect(headFiles.toSet).size
+      val cents = sum(floor(col("o_totalprice") * 100 + lit(0.5))
+        .cast("long")).cast("long")
+      val inBand = col("o_orderkey") >= bandLo &&
+        col("o_orderkey") < bandHi
+      val v1Agg = CommitLog.read(s, t, Some(1L))
+        .agg(count(lit(1)).as("rows_at_v1"),
+          cents.as("sum_price_cents_v1"))
+      val headAgg = CommitLog.read(s, t)
+        .agg(count(lit(1)).as("rows_head"),
+          cents.as("sum_price_cents_head"),
+          // updates verified by VALUE: band keys that carry price = key
+          sum(when(inBand && col("o_orderkey") % 3 === 0 &&
+            col("o_totalprice") === col("o_orderkey").cast("double"),
+            1L).otherwise(0L)).as("n_updated"),
+          // inserts are exactly the keys above the old max
+          sum(when(col("o_orderkey") > mx, 1L).otherwise(0L))
+            .as("n_inserted"))
+      v1Agg.crossJoin(broadcast(headAgg))
+        .select(lit(v1Files.size.toLong).as("n_files_v1"),
+          lit(plan.selected.size.toLong).as("n_candidates"),
+          lit(headFiles.count(_.startsWith("rw2_")).toLong)
+            .as("n_rewritten"),
+          lit(headFiles.count(_.startsWith("ins_")).toLong)
+            .as("n_appended"),
+          lit(untouched.toLong).as("n_untouched"),
+          col("rows_at_v1"), col("rows_head"),
+          col("n_updated"), col("n_inserted"),
+          (col("rows_at_v1") + col("n_inserted") - col("rows_head"))
+            .as("n_deleted"),
+          col("sum_price_cents_v1"), col("sum_price_cents_head"))
+    },
+      // stor13: the merge band, the key-bucket layout, and both cent
+      // checksums recomputed from raw orders. Updated rows are worth
+      // k*100 cents exactly (price := key, integer-valued double);
+      // inserted keys live above the old max so they can't collide with
+      // the band arithmetic.
       """WITH p AS (SELECT max(o_orderkey) AS mx, count(*) AS n,
         |    (max(o_orderkey) + 19) // 20 AS step
         |  FROM orders),
@@ -3406,13 +3155,40 @@ object QueriesStorage {
         |  r.rows_at_v1 + r.n_inserted - r.n_deleted AS rows_head,
         |  r.n_updated, r.n_inserted, r.n_deleted,
         |  r.sum_price_cents_v1, r.sum_price_cents_head
-        |FROM ledger CROSS JOIN r""".stripMargin,
-    // stor12: band = the evolved writer's expression after the 1996-12
-    // cutover, the sentinel before it; schema widths are
-    // by-construction (4 original cols incl. the partition column, +1
-    // after evolution) — the Spark side reports them from the ACTUAL
-    // read schemas, so a regression fails the hash.
-    "stor12_schema_evolution" ->
+        |FROM ledger CROSS JOIN r""".stripMargin),
+
+    // SCHEMA EVOLUTION through the commit log — the add-column
+    // contract every long-lived 100 TB table eventually needs: v1
+    // committed pre-1997 months under the original schema, v2 appended
+    // later months carrying a NEW `qty_band` column. No rewrite of old
+    // data (at scale that would be a full-table job for a metadata
+    // change): the merged head read surfaces the union schema with
+    // pre-evolution rows null-banded, while time travel to v1 serves
+    // the ORIGINAL 4-column schema untouched — both widths are
+    // reported from the actual read schemas, so the oracle's
+    // by-construction 4/5 pins them. Row results recompute relationally
+    // (band = the evolved writer's expression after the cutover, a
+    // sentinel before it).
+    Query("stor12_schema_evolution", (s, d) => {
+      val t = stor12Table(s, d)
+      val v1 = CommitLog.read(s, t, Some(1L))
+      require(!v1.columns.contains("qty_band"),
+        "time travel must serve the pre-evolution schema")
+      val head = CommitLog.read(s, t, None, Map("mergeSchema" -> "true"))
+      head.groupBy(coalesce(col("qty_band"), lit("pre_evolution"))
+          .as("qty_band"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+            .cast("long").as("sum_qty_cents"))
+        .select(col("qty_band"), col("n_rows"), col("sum_qty_cents"),
+          lit(v1.columns.length.toLong).as("n_cols_v1"),
+          lit(head.columns.length.toLong).as("n_cols_head"))
+    },
+      // stor12: band = the evolved writer's expression after the 1996-12
+      // cutover, the sentinel before it; schema widths are
+      // by-construction (4 original cols incl. the partition column, +1
+      // after evolution) — the Spark side reports them from the ACTUAL
+      // read schemas, so a regression fails the hash.
       """SELECT CASE WHEN date_trunc('month', l_shipdate)::DATE
         |    > DATE '1996-12-01'
         |    THEN (CASE WHEN l_quantity < 25 THEN 'lo' ELSE 'hi' END)
@@ -3422,10 +3198,35 @@ object QueriesStorage {
         |    AS BIGINT) AS sum_qty_cents,
         |  CAST(4 AS BIGINT) AS n_cols_v1,
         |  CAST(5 AS BIGINT) AS n_cols_head
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    // stor5: encoding-invariant read-back — every variant must return
-    // the source table's exact row count and integer checksums.
-    "stor5_encoding_tradeoff" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+
+    // Parquet ENCODING tradeoff — the third axis of physical design
+    // after placement (stor1) and clustering (stor2/stor4): the same
+    // lineitem rows written under codec × dictionary variants
+    // (zstd/snappy/none, dict on/off), then each variant SCANNED BACK
+    // with exact integer checksums. What the oracle proves is
+    // round-trip LOSSLESSNESS (every variant returns the identical
+    // multiset — layout and encoding are execution properties, the
+    // result is invariant); what the measured artifact records
+    // (BASELINE.md; stderr at build) is the size/scan-time curve a
+    // 100 TB table chooses its storage format from: dictionary does
+    // most of the work on low-cardinality columns, zstd compounds it,
+    // and the scan-time delta is the decompression tax paid on every
+    // read forever. Bench times the 6-scan read path (writes are
+    // amortized by the build-once cache, exactly stor1's economics).
+    Query("stor5_encoding_tradeoff", (s, d) => {
+      encodedPaths(s, d).map { case (codec, dict, path) =>
+        s.read.parquet(path).agg(
+          count(lit(1)).as("n_rows"),
+          sum(floor(col("l_quantity") * 100 + lit(0.5)).cast("long"))
+            .cast("long").as("sum_qty_cents"),
+          sum(col("l_orderkey")).cast("long").as("sum_okey"))
+          .select(lit(codec).as("codec"), lit(dict).as("dictionary"),
+            col("n_rows"), col("sum_qty_cents"), col("sum_okey"))
+      }.reduce(_.unionByName(_))
+    },
+      // stor5: encoding-invariant read-back — every variant must return
+      // the source table's exact row count and integer checksums.
       """WITH agg AS (SELECT count(*) AS n_rows,
         |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
         |      AS BIGINT) AS sum_qty_cents,
@@ -3437,17 +3238,83 @@ object QueriesStorage {
         |  ('zstd', true), ('zstd', false))
         |SELECT v.codec, v.dictionary, agg.n_rows, agg.sum_qty_cents,
         |  agg.sum_okey
-        |FROM v CROSS JOIN agg""".stripMargin,
-    // Layout-independent result of the bucketed join: the same
-    // orders⋈lineitem aggregate straight off the parquet.
-    "stor1_bucketed_join" ->
+        |FROM v CROSS JOIN agg""".stripMargin),
+    // Fact-fact join with ZERO exchange on either input: both sides are
+    // written bucketed by the join key (16 buckets, sorted within
+    // bucket) and re-read through the catalog, so the sort-merge join
+    // consumes bucket i of orders against bucket i of lineitem with no
+    // shuffle at all — the only exchange in the plan is the final
+    // 5-group aggregate. This is THE big-join discipline at 100 TB:
+    // pay the shuffle once at write time, then every subsequent join
+    // on the key is shuffle-free (co-located, and with one file per
+    // bucket, sort-free). The merge hint forces the SMJ so the demo
+    // cannot silently degrade to a broadcast at toy scale; the write
+    // lands in a build-once dir (layout is a cache, not a result). The
+    // LAYOUT BUILD runs once per build-once key, so the benched cost is
+    // the exchange-free READ path, exactly the economics bucketing buys:
+    // pay the shuffle once at write time, amortize over every read.
+    // Revenue is summed EXACTLY: a double sum depends on summation
+    // order, and a group whose exact revenue ends in a half cent then
+    // rounds either way on each engine. Price (whole cents) times
+    // 1 - discount (whole percent) is a whole number of 1e-4 units, so
+    // the sum runs in LONG arithmetic — the value of the oracle's
+    // DECIMAL(15,2) sum without per-row BigDecimal work.
+    Query("stor1_bucketed_join", (s, d) => {
+      val (obName, lbName) = bucketedTables(s, d)
+      val hundredths = (c: Column) => floor(c * 100 + lit(0.5))
+      s.table(obName).hint("merge")
+        .join(s.table(lbName).hint("merge"),
+          col("o_orderkey") === col("l_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n_items"),
+          round(sum(hundredths(col("l_extendedprice")) *
+            hundredths(lit(1) - col("l_discount"))).cast("decimal(38,4)") / 10000, 2)
+            .cast("double").as("revenue"))
+    },
+      // Layout-independent result of the bucketed join: the same
+      // orders⋈lineitem aggregate straight off the parquet.
       """SELECT o_orderpriority, count(*) AS n_items,
         |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
         |    * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)
         |    AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
-    "stor2_zonemap" ->
+        |GROUP BY 1""".stripMargin),
+
+    // Zone maps over a range-clustered layout: model each shipdate
+    // month as one data file (exactly what ParquetSink's partitioned
+    // write produces), compute the per-file min/max zone map over the
+    // sort key AND a non-clustered column, and evaluate the skip
+    // decision for a 3-month scan predicate — ~80 files, ~77 skipped
+    // without reading a row. The zone-map build is ONE hash aggregate
+    // (map-side partials, O(files) exchange); the skip test is pure
+    // min/max interval logic, the same test every parquet reader runs
+    // against row-group statistics. The point the family documents:
+    // skipping only works on CLUSTERED columns — l_orderkey is random
+    // w.r.t. shipdate (corr ~0.001 in this data), so its per-file
+    // range is the full domain and its `key_skippable` flag is false
+    // on every file, while the clustered shipdate prunes 96% of them.
+    Query("stor2_zonemap", (s, d) => {
+      val lo = lit(java.sql.Date.valueOf("1997-04-01"))
+      val hi = lit(java.sql.Date.valueOf("1997-07-01")) // end-exclusive
+      val zm = Tables.lineitem(s, d)
+        .select(date_trunc("month", col("l_shipdate")).cast("date")
+            .as("file_month"),
+          col("l_shipdate").cast("date").as("ship"), col("l_orderkey"))
+        .groupBy("file_month")
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("ship")).as("min_ship"), max(col("ship")).as("max_ship"),
+          min(col("l_orderkey")).as("min_key"),
+          max(col("l_orderkey")).as("max_key"))
+      zm.select(col("file_month"), col("n_rows"),
+        col("min_ship"), col("max_ship"), col("min_key"), col("max_key"),
+        (col("max_ship") < lo || col("min_ship") >= hi).as("date_skipped"),
+        // same predicate shape on the UNclustered key column: the
+        // whole-domain ranges make this false everywhere — the
+        // negative control that shows clustering, not zone maps, does
+        // the pruning
+        (col("max_key") < lit(1000L) || col("min_key") >= lit(2000L))
+          .as("key_skippable"))
+    },
       """WITH zm AS (SELECT date_trunc('month', l_shipdate)::DATE
         |    AS file_month,
         |  count(*) AS n_rows,
@@ -3459,12 +3326,95 @@ object QueriesStorage {
         |  (max_ship < DATE '1997-04-01' OR min_ship >= DATE '1997-07-01')
         |    AS date_skipped,
         |  (max_key < 1000 OR min_key >= 2000) AS key_skippable
-        |FROM zm""".stripMargin,
-    // stor4: same masked dims, same two sort keys (zSql = the exact
-    // interleave the Spark side computes), same rank → integer-div
-    // file assignment, same zone maps and 2-D box. Rank ties are
-    // identical in (dm, pk), so tie order cannot change a zone map.
-    "stor4_zorder_skip" ->
+        |FROM zm""".stripMargin),
+
+    // Compaction planning: bin-pack the month-files above into
+    // ~4 MB-target compaction groups by a running-sum admission over
+    // the (tiny) file-metadata table — the "small files problem"
+    // planner every long-lived 100 TB table needs after streaming
+    // ingest. Estimated bytes = rows × a fixed 64 B/row figure (the
+    // planner's input is metadata, not data). The window is a single
+    // ordered pass over O(files) rows — file metadata is orders of
+    // magnitude smaller than data, which is exactly why compaction
+    // planning is driver-cheap while compaction itself is the
+    // cluster-wide rewrite. Bin id = start-offset div target, the
+    // x15 running-sum admission shape: consecutive months pack until
+    // the target fills, never splitting a file.
+    // Z-ORDER vs LINEAR clustering, measured (completes the layout
+    // family: stor1 buys the join, stor2 shows 1-D skipping, this
+    // query QUANTIFIES why multi-dimensional predicates need a
+    // multi-dimensional layout): the same lineitem rows are assigned
+    // to 64 equal-row model "files" under two sort keys — linear
+    // (day-major, partkey-minor lexicographic) and the bit-interleaved
+    // z-value (f8's curve) — via the DISTRIBUTED rank
+    // (RelationalOps.globalRowNumber, no global sort), per-file
+    // min/max zone maps are built over BOTH dimensions, and a 2-D box
+    // predicate (ship year 1997 AND a narrow partkey band) is tested
+    // against each file's zone map. The linear layout prunes only on
+    // its major dimension (every file spans the full partkey domain);
+    // the z-order layout prunes on both — the n_skipped/rows_scanned
+    // contrast IS the case for z-ordering 100 TB fact tables. All
+    // integer (masked day/partkey, exact rank, integer-div file ids);
+    // tied sort keys determine both zone-map dims, so rank ties
+    // cannot flip a zone map across engines.
+    Query("stor4_zorder_skip", (s, d) => {
+      import graft.operators.RelationalOps
+      val base = Tables.lineitem(s, d).select(
+        datediff(col("l_shipdate").cast("date"),
+          lit("1992-01-01").cast("date")).cast("long")
+          .bitwiseAND(lit(4095L)).as("dm"),
+        col("l_partkey").bitwiseAND(lit(4095L)).as("pk"),
+        col("l_orderkey"), col("l_linenumber"))
+      val n1 = base.agg(count(lit(1)).as("n_rows"))
+      // Both sort keys are bounded 24-bit integers (dm,pk ≤ 4095 →
+      // linear = dm·4096+pk < 2^24; the 12-bit interleave < 2^24), so
+      // the rank's range buckets come straight off the key (k >> 16:
+      // ≤256 ids, monotone, tie-safe) — no sampling job, no per-row
+      // boundary fold, the whole bucket assignment is one shift.
+      // OPT r18 (guide §2.4): the two layouts used to run two SEPARATE
+      // rank pipelines over the same projected fact frame (each with
+      // its own offsets + localized branches — ~4 scans, two window
+      // machineries, then a union). Stacking the layouts (a 2-row
+      // explode per input row) ranks BOTH in one grouped prefix
+      // pipeline partitioned by layout: same per-layout ordering, same
+      // bucket math, identical zone maps — half the stages. At 100 TB
+      // the stacked pass reads the fact rows once instead of per
+      // layout.
+      val stacked = base.select(col("dm"), col("pk"),
+        col("l_orderkey"), col("l_linenumber"), explode(array(
+          struct(lit("linear").as("layout"),
+            (col("dm") * 4096 + col("pk")).as("k")),
+          struct(lit("zorder").as("layout"),
+            RelationalOps.zValue2(col("dm"), col("pk"), 12).as("k"))))
+          .as("x"))
+        .select(col("dm"), col("pk"), col("l_orderkey"),
+          col("l_linenumber"), col("x.layout").as("layout"),
+          col("x.k").as("k"))
+      val zone = RelationalOps.groupedRowNumber(stacked, Seq("layout"),
+          Seq(col("k").asc, col("l_orderkey").asc,
+            col("l_linenumber").asc), col("k"), "rk",
+          bucket = Some(shiftright(col("k"), 16)))
+        .crossJoin(broadcast(n1))
+        .withColumn("file_id",
+          expr("(rk - 1) div ((n_rows + 63) div 64)"))
+        .groupBy("layout", "file_id")
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("dm")).as("min_d"), max(col("dm")).as("max_d"),
+          min(col("pk")).as("min_p"), max(col("pk")).as("max_p"))
+      // 2-D box: ship day in 1997 (1827..2191) AND partkey 100..300
+      val skipped = col("max_d") < 1827 || col("min_d") > 2191 ||
+        col("max_p") < 100 || col("min_p") > 300
+      zone
+        .groupBy("layout")
+        .agg(count(lit(1)).as("n_files"),
+          sum(when(skipped, 1L).otherwise(0L)).as("n_skipped"),
+          sum(when(!skipped, col("n_rows")).otherwise(0L))
+            .as("rows_scanned"))
+    },
+      // stor4: same masked dims, same two sort keys (zSql = the exact
+      // interleave the Spark side computes), same rank → integer-div
+      // file assignment, same zone maps and 2-D box. Rank ties are
+      // identical in (dm, pk), so tie order cannot change a zone map.
       s"""WITH base AS (SELECT
          |    CAST(date_diff('day', DATE '1992-01-01',
          |      l_shipdate::DATE) AS BIGINT) & 4095 AS dm,
@@ -3497,8 +3447,28 @@ object QueriesStorage {
          |  CAST(sum(CASE WHEN max_d < 1827 OR min_d > 2191
          |    OR max_p < 100 OR min_p > 300 THEN 0 ELSE nr END)
          |    AS BIGINT) AS rows_scanned
-         |FROM zm GROUP BY 1""".stripMargin,
-    "stor3_compaction_plan" ->
+         |FROM zm GROUP BY 1""".stripMargin),
+
+    Query("stor3_compaction_plan", (s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val BytesPerRow = 64L
+      val Target = 4L * 1024 * 1024
+      val files = Tables.lineitem(s, d)
+        .select(date_trunc("month", col("l_shipdate")).cast("date")
+          .as("file_month"))
+        .groupBy("file_month")
+        .agg((count(lit(1)) * BytesPerRow).as("est_bytes"))
+      val w = Window.orderBy(col("file_month"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      files
+        .withColumn("end_off", sum(col("est_bytes")).over(w))
+        .withColumn("bin",
+          ((col("end_off") - col("est_bytes")) / Target).cast("long"))
+        .groupBy("bin")
+        .agg(count(lit(1)).as("n_files"), sum(col("est_bytes")).as("bytes"),
+          min(col("file_month")).as("from_month"),
+          max(col("file_month")).as("to_month"))
+    },
       """WITH f AS (SELECT date_trunc('month', l_shipdate)::DATE
         |    AS file_month, count(*) * 64 AS est_bytes
         |  FROM lineitem GROUP BY 1),
@@ -3511,5 +3481,6 @@ object QueriesStorage {
         |  count(*) AS n_files, CAST(sum(est_bytes) AS BIGINT) AS bytes,
         |  min(file_month) AS from_month, max(file_month) AS to_month
         |FROM o GROUP BY 1""".stripMargin
-  )
+  ))
+
 }

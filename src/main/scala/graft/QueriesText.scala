@@ -30,11 +30,10 @@ object QueriesText {
   val ChunkSize: Int = 64
   val ChunkStride: Int = 48
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-      Map[String, (SparkSession, String) => DataFrame](
+  lazy val registry: Seq[Query] = Seq(
     // Token counting: whitespace tokens, distinct tokens, BPE-ish subwords,
     // mean token length.
-    "x1_token_stats" -> ((s, d) => {
+    Query("x1_token_stats", (s, d) => {
       val toks = TextOps.tokens(col("text"))
       val n = size(toks).cast("long")
       val sumLen = aggregate(toks, lit(0L), (a, t) => a + length(t))
@@ -44,17 +43,29 @@ object QueriesText {
         size(array_distinct(toks)).cast("long").as("n_distinct"),
         size(TextOps.subTokens(col("text"))).cast("long").as("n_subtokens"),
         round(sumLen / n.cast("double"), 6).as("avg_token_len"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks, text FROM documents)
+         |SELECT doc_id,
+         |  len(toks) AS n_tokens,
+         |  len(list_distinct(toks)) AS n_distinct,
+         |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]'))
+         |    AS n_subtokens,
+         |  round(list_reduce(list_prepend(CAST(0 AS BIGINT),
+         |      list_transform(toks, x -> CAST(length(x) AS BIGINT))),
+         |      (a, b) -> a + b) / CAST(len(toks) AS DOUBLE), 6)
+         |    AS avg_token_len
+         |FROM t""".stripMargin),
 
     // Heuristic language ID: function-word hits per language, argmax with
     // fixed priority tie-break.
-    "x2_lang_id" -> ((s, d) => {
+    Query("x2_lang_id", (s, d) => {
       val toks = TextOps.tokens(col("text"))
       Tables.documents(s, d).select(
         col("doc_id"),
         TextOps.langId(toks).as("pred_lang"),
         TextOps.vocabHits(toks, TextOps.langVocab.head._2).as("en_hits"))
-    }),
+    },
+      x2OracleSql),
 
     // Language-ID CONFUSION MATRIX — the d20/v8 measured-quality gate
     // applied to x2: predictions scored against the corpus's `lang`
@@ -68,9 +79,9 @@ object QueriesText {
     // mismatch this gate exists to surface before training on it).
     // One doc-level join + a cell-sized agg; the recall window sees
     // the ≤ |langs|² cell grid.
-    "x34_langid_confusion" -> ((s, d) => {
+    Query("x34_langid_confusion", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val pred = queries("x2_lang_id")(s, d)
+      val pred = SparkEntry.queries("x2_lang_id")(s, d)
         .select(col("doc_id"), col("pred_lang"))
       val cells = Tables.documents(s, d)
         .select(col("doc_id"), col("lang").as("truth_lang"))
@@ -81,37 +92,72 @@ object QueriesText {
       cells.select(col("truth_lang"), col("pred_lang"), col("n"),
         round(col("n").cast("double") /
           sum(col("n")).over(w).cast("double"), 6).as("recall"))
+    },
+      // x34: x2's oracle embedded as a derived table (one source of
+      // truth for the predictor), same cell agg + per-truth recall.
+      {
+      s"""SELECT truth_lang, pred_lang, n,
+         |  round(CAST(n AS DOUBLE) / CAST(sum(n)
+         |    OVER (PARTITION BY truth_lang) AS DOUBLE), 6) AS recall
+         |FROM (SELECT d.lang AS truth_lang, p.pred_lang,
+         |    count(*) AS n
+         |  FROM documents d
+         |  JOIN ($x2OracleSql) p ON d.doc_id = p.doc_id
+         |  GROUP BY 1, 2)""".stripMargin
     }),
 
     // Quality scoring: punctuation noise, stopword density, composite score.
-    "x3_quality_score" -> ((s, d) => {
+    Query("x3_quality_score", (s, d) => {
       val toks = TextOps.tokens(col("text"))
       Tables.documents(s, d).select(
         col("doc_id"),
         round(TextOps.punctRatio(col("text")), 6).as("punct_ratio"),
         round(TextOps.stopwordRatio(toks), 6).as("stop_ratio"),
         round(TextOps.qualityScore(col("text")), 6).as("quality"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents)
+         |SELECT doc_id,
+         |  round(CASE WHEN length(text) = 0 THEN 0.0
+         |    ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
+         |      / CAST(length(text) AS DOUBLE) END, 6) AS punct_ratio,
+         |  round(CASE WHEN len(toks) = 0 THEN 0.0
+         |    ELSE len(list_filter(toks, x -> list_contains($enList, x)))
+         |      / CAST(len(toks) AS DOUBLE) END, 6) AS stop_ratio,
+         |  round(least(1.0, len(toks) / 100.0) *
+         |    (1.0 - CASE WHEN length(text) = 0 THEN 0.0
+         |      ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
+         |        / CAST(length(text) AS DOUBLE) END), 6) AS quality
+         |FROM t""".stripMargin),
 
     // Document fingerprinting: order-sensitive rolling hash + md5-derived
     // 60-bit content hash.
-    "x4_fingerprint" -> ((s, d) => {
+    Query("x4_fingerprint", (s, d) => {
       Tables.documents(s, d).select(
         col("doc_id"),
         TextOps.rollingFingerprint(col("text")).as("roll_fp"),
         TextOps.md5Prefix60(col("text")).as("md5_fp"))
-    }),
+    },
+      """SELECT doc_id,
+        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |    list_transform(string_split(text, ''),
+        |      c -> CAST(ascii(c) AS BIGINT))),
+        |    (a, b) -> (a * 31 + b) % 1000000007) AS roll_fp,
+        |  CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT) AS md5_fp
+        |FROM documents""".stripMargin),
 
     // Vocabulary building: corpus-wide token frequencies, top 50. One
     // hash-agg shuffle (map-side partial counts), then
     // TakeOrderedAndProject — per-partition bounded heaps, no full sort.
-    "x5_vocab_topk" -> ((s, d) => {
+    Query("x5_vocab_topk", (s, d) => {
       val counts = Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
       graft.operators.RelationalOps.topKGlobal(counts,
         Seq(col("cnt").desc, col("token").asc), 50)
-    }),
+    },
+      s"""WITH t AS (SELECT unnest($toksSql) AS token FROM documents)
+         |SELECT token, count(*) AS cnt FROM t
+         |GROUP BY token ORDER BY cnt DESC, token LIMIT 50""".stripMargin),
 
     // Co-occurrence mining: top-20 token pairs by document frequency
     // (the building block of PMI phrase scoring), with the exact-ratio
@@ -134,7 +180,7 @@ object QueriesText {
     // documented recall bound on pairs inside very long documents, not
     // a frequency bias. Plan-guarded (PlanAuditSpec: slice survives)
     // and fan-out-bounded by a long-doc fixture in TextOpsSpec.
-    "x16_cooccur_topk" -> ((s, d) => {
+    Query("x16_cooccur_topk", (s, d) => {
       val dt = QueriesDedup.docsWithTokens(s, d)
         .select(col("doc_id"), array_distinct(col("toks")).as("dtf"))
         .withColumn("dt",
@@ -160,14 +206,35 @@ object QueriesText {
         .select(col("tok_a"), col("tok_b"), col("pair_df"),
           round(col("n_docs") * col("pair_df") /
             (col("df_a") * col("df_b")).cast("double"), 6).as("lift"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dtf
+         |           FROM documents),
+         |tc AS (SELECT doc_id, dtf,
+         |       list_slice(list_sort(dtf), 1, $MaxCooccurTokens) AS dt
+         |       FROM t),
+         |e1 AS (SELECT dt, unnest(dt) AS tok_a FROM tc),
+         |e2 AS (SELECT tok_a, unnest(dt) AS tok_b FROM e1),
+         |p AS (SELECT tok_a, tok_b, count(*) AS pair_df FROM e2
+         |      WHERE tok_a < tok_b GROUP BY 1, 2),
+         |top AS (SELECT * FROM p
+         |        ORDER BY pair_df DESC, tok_a, tok_b LIMIT 20),
+         |uni AS (SELECT tok, count(*) AS df
+         |        FROM (SELECT unnest(dtf) AS tok FROM tc) GROUP BY 1),
+         |n AS (SELECT count(*) AS n_docs FROM documents)
+         |SELECT tok_a, tok_b, pair_df,
+         |  round(n_docs * pair_df / CAST(a.df * b.df AS DOUBLE), 6)
+         |    AS lift
+         |FROM top JOIN uni a ON a.tok = top.tok_a
+         |         JOIN uni b ON b.tok = top.tok_b
+         |CROSS JOIN n""".stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens)),
 
     // Repetition scoring (the Gopher/MassiveText duplicate-n-gram rule):
     // fraction of a doc's 3-gram windows that repeat an earlier window.
     // Distinct count via the native shingle expression (dedup is by
     // shingle STRING before hashing, so it equals the oracle's
     // list_distinct over strings). Pure narrow projection.
-    "x7_repetition" -> ((s, d) => {
+    Query("x7_repetition", (s, d) => {
       val toks = TextOps.tokens(col("text"))
       val total = greatest(size(toks) - 2, lit(0)).cast("long")
       val dist = size(DedupOps.shingleHashes(toks, 3)).cast("long")
@@ -178,13 +245,25 @@ object QueriesText {
         round(when(total > 0,
           (total - dist) / total.cast("double")).otherwise(0.0), 6)
           .as("dup_ratio"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |c AS (SELECT doc_id,
+         |  greatest(len(toks) - 2, 0) AS n_shingles,
+         |  CAST(len(list_distinct(list_transform(range(len(toks) - 2),
+         |    i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))))
+         |    AS BIGINT) AS n_distinct
+         |  FROM t)
+         |SELECT doc_id, n_shingles, n_distinct,
+         |  round(CASE WHEN n_shingles > 0
+         |    THEN (n_shingles - n_distinct) / CAST(n_shingles AS DOUBLE)
+         |    ELSE 0.0 END, 6) AS dup_ratio
+         |FROM c""".stripMargin),
 
     // Deterministic train/val/test split: md5-derived bucket of the doc
     // id — reproducible across engines/runs/reshuffles (never
     // rand()-based: resampling must not move documents between splits).
     // Pure narrow projection, zero shuffle.
-    "x6_hash_split" -> ((s, d) => {
+    Query("x6_hash_split", (s, d) => {
       Tables.documents(s, d)
         .select(col("doc_id"),
           (TextOps.md5Prefix60(
@@ -194,7 +273,16 @@ object QueriesText {
           when(col("bucket") < 80, "train")
             .when(col("bucket") < 90, "val")
             .otherwise("test").as("split"))
-    }),
+    },
+      """WITH b AS (SELECT doc_id,
+        |  CAST(concat('0x', substr(md5(concat('split:',
+        |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 AS bucket
+        |  FROM documents)
+        |SELECT doc_id, bucket,
+        |  CASE WHEN bucket < 80 THEN 'train'
+        |       WHEN bucket < 90 THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM b""".stripMargin),
 
     // TF-IDF top-3 terms per document. The idf factor is the exact IEEE
     // ratio N/df rather than a log: libm log implementations differ in
@@ -204,7 +292,7 @@ object QueriesText {
     // one hash agg for df → equi-join on term (AQE broadcasts the
     // vocabulary side when it's small; at web scale it stays a shuffle
     // join) → window top-k.
-    "x8_tfidf_topk" -> ((s, d) => {
+    Query("x8_tfidf_topk", (s, d) => {
       val tf = tfFrame(s, d)
       val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
       // count over the shared tokens cache, not a third parquet job:
@@ -220,7 +308,22 @@ object QueriesText {
         Seq(col("tfidf").desc, col("term").asc), 3, rankCol = "rank")
         .select(col("doc_id"), col("term"), col("tf"), col("tfidf"),
           col("rank").cast("long").as("rank"))
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
+         |      FROM documents),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
+         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+         |n AS (SELECT count(*) AS n_docs FROM documents),
+         |sc AS (SELECT doc_id, term, tf,
+         |      round(tf * (CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
+         |      FROM tf JOIN df USING (term) CROSS JOIN n),
+         |r AS (SELECT doc_id, term, tf, tfidf,
+         |      row_number() OVER (PARTITION BY doc_id
+         |        ORDER BY tfidf DESC, term) AS rank
+         |      FROM sc)
+         |SELECT doc_id, term, tf, tfidf, rank FROM r WHERE rank <= 3"""
+        .stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens, tfFrame)),
 
     // Unigram language-model scoring: per-document mean negative
     // log-likelihood in nats under the corpus's own unigram
@@ -237,7 +340,7 @@ object QueriesText {
     // sorted-fold discipline (sort the identical doubles, fold left)
     // so summation order — and therefore the 6dp-rounded hash — is
     // engine-independent, not just probably-equal.
-    "x21_unigram_lm" -> ((s, d) => {
+    Query("x21_unigram_lm", (s, d) => {
       val tf = tfFrame(s, d)
       val cf = tf.groupBy("term").agg(sum(col("tf")).as("cf"))
       val tot = cf.agg(sum(col("cf")).as("tot"))
@@ -251,7 +354,26 @@ object QueriesText {
         .select(col("doc_id"), col("n_tokens"),
           round(-aggregate(col("cs"), lit(0.0), (a, x) => a + x) /
             col("n_tokens").cast("double"), 6).as("avg_nll"))
-    }),
+    },
+      // x21: the x20 sorted-fold discipline on the per-doc log sum —
+      // both engines sort the identical contribution doubles and fold
+      // left, so the rounded mean NLL is order-independent.
+      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
+         |      FROM documents),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
+         |cf AS (SELECT term, sum(tf) AS cf FROM tf GROUP BY 1),
+         |tot AS (SELECT sum(cf) AS tot FROM cf),
+         |g AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
+         |      list_sort(list(CAST(tf AS DOUBLE) *
+         |        ln(CAST(cf AS DOUBLE) / CAST(tot AS DOUBLE)))) AS cs
+         |      FROM tf JOIN cf USING (term) CROSS JOIN tot
+         |      GROUP BY doc_id)
+         |SELECT doc_id, n_tokens,
+         |  round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
+         |    (acc, x) -> acc + x) / CAST(n_tokens AS DOUBLE), 6)
+         |    AS avg_nll
+         |FROM g""".stripMargin,
+      reads = Seq(tfFrame)),
 
     // Bigram conditional LM: per-document mean −ln P(cur|prev) with
     // P(cur|prev) = c(prev,cur)/c(prev·) from the corpus's own bigram
@@ -263,7 +385,7 @@ object QueriesText {
     // tf frame, and the two model tables (bigram and prefix counts)
     // are vocab²-bounded aggregates over it. Same sorted-fold hash
     // discipline as x20/x21.
-    "x23_bigram_lm" -> ((s, d) => {
+    Query("x23_bigram_lm", (s, d) => {
       val tf2 = bg2Frame(s, d)
       val c2 = tf2.groupBy("bg").agg(sum(col("tf2")).as("c2"))
       val c1 = c2.withColumn("prev", substring_index(col("bg"), " ", 1))
@@ -279,7 +401,32 @@ object QueriesText {
         .select(col("doc_id"), col("n_bigrams"),
           round(-aggregate(col("cs"), lit(0.0), (a, x) => a + x) /
             col("n_bigrams").cast("double"), 6).as("avg_nll2"))
-    }),
+    },
+      // x23: the x21 oracle shape at bigram granularity; bigrams from an
+      // indexed zip of the token list with its own tail, prefix counts by
+      // split_part (tokens cannot contain spaces — the tokenizer splits
+      // on them), sorted-fold per-doc log sums.
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |b AS (SELECT doc_id, unnest(list_transform(range(len(toks)-1),
+         |        i -> toks[i+1] || ' ' || toks[i+2])) AS bg
+         |      FROM t WHERE len(toks) >= 2),
+         |tf2 AS (SELECT doc_id, bg, count(*) AS tf2 FROM b
+         |        GROUP BY 1, 2),
+         |c2 AS (SELECT bg, sum(tf2) AS c2 FROM tf2 GROUP BY 1),
+         |c1 AS (SELECT split_part(bg, ' ', 1) AS prev, sum(c2) AS c1
+         |       FROM c2 GROUP BY 1),
+         |g AS (SELECT doc_id, CAST(sum(tf2) AS BIGINT) AS n_bigrams,
+         |      list_sort(list(CAST(tf2 AS DOUBLE) *
+         |        ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)))) AS cs
+         |      FROM tf2 JOIN c2 USING (bg)
+         |      JOIN c1 ON split_part(bg, ' ', 1) = c1.prev
+         |      GROUP BY doc_id)
+         |SELECT doc_id, n_bigrams,
+         |  round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
+         |    (acc, x) -> acc + x) / CAST(n_bigrams AS DOUBLE), 6)
+         |    AS avg_nll2
+         |FROM g""".stripMargin,
+      reads = Seq(bg2Frame)),
 
     // Cross-source vocabulary overlap — the "are these two datasets
     // the same distribution" screen corpus curation runs before
@@ -289,7 +436,7 @@ object QueriesText {
     // pairs — bounded by the SOURCE count, which is catalog-sized at
     // any corpus scale (the d2 discipline with a structurally tiny
     // key space). Exact integer intersections, one rounded ratio.
-    "x30_source_overlap" -> ((s, d) => {
+    Query("x30_source_overlap", (s, d) => {
       val st = Tables.documents(s, d)
         .select(col("source"),
           explode(array_distinct(TextOps.tokens(col("text"))))
@@ -313,7 +460,24 @@ object QueriesText {
             round(jac, 6).as("vocab_jaccard")),
         Seq(col("vocab_jaccard").desc, col("src_a").asc,
           col("src_b").asc), 20)
-    }),
+    },
+      // x30: same inverted-index pair expansion, same exact ratio.
+      s"""WITH st AS (SELECT DISTINCT source, t AS token
+         |  FROM (SELECT source,
+         |    unnest(list_distinct($toksSql)) AS t FROM documents)),
+         |sz AS (SELECT source, count(*) AS nv FROM st GROUP BY 1),
+         |i AS (SELECT a.source AS src_a, b.source AS src_b,
+         |    count(*) AS inter
+         |  FROM st a JOIN st b
+         |    ON a.token = b.token AND a.source < b.source
+         |  GROUP BY 1, 2)
+         |SELECT i.src_a, i.src_b, CAST(i.inter AS BIGINT) AS inter,
+         |  round(i.inter / CAST(sa.nv + sb.nv - i.inter AS DOUBLE), 6)
+         |    AS vocab_jaccard
+         |FROM i JOIN sz sa ON sa.source = i.src_a
+         |  JOIN sz sb ON sb.source = i.src_b
+         |ORDER BY vocab_jaccard DESC, src_a, src_b LIMIT 20"""
+        .stripMargin),
 
     // Dedup-savings report — the business case for the whole d-family
     // in one table: per source, how many docs survive d1's keeper
@@ -322,7 +486,7 @@ object QueriesText {
     // 100-token one). Keeper election is global (the dedup-key window
     // spans sources); the report groups by source after. Exact integer
     // sums, one rounded percentage.
-    "x29_dedup_savings" -> ((s, d) => {
+    Query("x29_dedup_savings", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val toks = TextOps.tokens(col("text"))
       val docs = Tables.documents(s, d).select(col("doc_id"),
@@ -342,14 +506,33 @@ object QueriesText {
           round((col("tokens_total") - col("tokens_kept"))
             .cast("double") / col("tokens_total").cast("double")
             * 100.0, 6).as("savings_pct"))
-    }),
+    },
+      // x29: same global keeper window, per-source rollup.
+      s"""WITH t AS (SELECT doc_id, source,
+         |    CAST(len($toksSql) AS BIGINT) AS nt,
+         |    md5(array_to_string(list_slice($toksSql, 1, 5), ' '))
+         |      AS dkey
+         |  FROM documents),
+         |k AS (SELECT doc_id, source, nt,
+         |    doc_id = min(doc_id) OVER (PARTITION BY dkey) AS keeper
+         |  FROM t)
+         |SELECT source, count(*) AS n_docs,
+         |  CAST(sum(CASE WHEN keeper THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS n_keepers,
+         |  CAST(sum(nt) AS BIGINT) AS tokens_total,
+         |  CAST(sum(CASE WHEN keeper THEN nt ELSE 0 END) AS BIGINT)
+         |    AS tokens_kept,
+         |  round(CAST(sum(nt) - sum(CASE WHEN keeper THEN nt
+         |      ELSE 0 END) AS DOUBLE)
+         |    / CAST(sum(nt) AS DOUBLE) * 100.0, 6) AS savings_pct
+         |FROM k GROUP BY 1""".stripMargin),
 
     // Tokenizer fertility per language — subwords-per-word, the
     // cost metric that decides tokenizer/vocab fit per language (a
     // high-fertility language pays more sequence length per word):
     // corpus-level Σsubtokens/Σtokens by lang tag, exact integer sums
     // with one rounded division. One narrow pass + a 5-row agg.
-    "x28_fertility" -> ((s, d) => {
+    Query("x28_fertility", (s, d) => {
       val toks = TextOps.tokens(col("text"))
       val subs = TextOps.subTokens(col("text"))
       Tables.documents(s, d)
@@ -361,7 +544,18 @@ object QueriesText {
         .select(col("lang"), col("n_tokens"), col("n_subtokens"),
           round(col("n_subtokens").cast("double") /
             col("n_tokens").cast("double"), 6).as("fertility"))
-    }),
+    },
+      // x28: same integer sums, one rounded division.
+      s"""WITH t AS (SELECT lang,
+         |    CAST(len($toksSql) AS BIGINT) AS nt,
+         |    CAST(len(regexp_extract_all(text,
+         |      '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS ns
+         |  FROM documents)
+         |SELECT lang, CAST(sum(nt) AS BIGINT) AS n_tokens,
+         |  CAST(sum(ns) AS BIGINT) AS n_subtokens,
+         |  round(CAST(sum(ns) AS DOUBLE) / CAST(sum(nt) AS DOUBLE), 6)
+         |    AS fertility
+         |FROM t GROUP BY 1""".stripMargin),
 
     // End-to-end curation pipeline — the COMPOSITION witness: language
     // gate (x2's argmax lang-ID), quality gate (x3's composite score,
@@ -373,7 +567,7 @@ object QueriesText {
     // build must emit. One pass over the corpus + one dedup-key window;
     // every stage is a column, so Catalyst pipelines the whole thing
     // into a single stage before the window shuffle.
-    "x27_curation_pipeline" -> ((s, d) => {
+    Query("x27_curation_pipeline", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val toks = TextOps.tokens(col("text"))
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -390,7 +584,60 @@ object QueriesText {
           col("keeper"), col("in_sample"),
           (col("pred_lang") === "en" && col("quality") >= 0.5 &&
             col("keeper") && col("in_sample")).as("keep"))
-    }),
+    },
+      // x27: the x2/x3/d1/x9 formulas fused, each stage a CTE; keep
+      // compares the ROUNDED quality exactly as the Spark side does.
+      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks
+         |           FROM documents),
+         |sc AS (SELECT doc_id,
+         |  CAST(len(list_intersect(list_distinct(toks), $enList))
+         |    AS BIGINT) AS s_en,
+         |  CAST(len(list_intersect(list_distinct(toks), $deList))
+         |    AS BIGINT) AS s_de,
+         |  CAST(len(list_intersect(list_distinct(toks), $esList))
+         |    AS BIGINT) AS s_es,
+         |  CAST(len(list_intersect(list_distinct(toks), $frList))
+         |    AS BIGINT) AS s_fr,
+         |  CAST(len(list_intersect(list_distinct(toks), $zhList))
+         |    AS BIGINT) AS s_zh
+         |  FROM t),
+         |pl AS (SELECT doc_id, CASE
+         |    WHEN s_en > 0 AND s_en = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'en'
+         |    WHEN s_de > 0 AND s_de = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'de'
+         |    WHEN s_es > 0 AND s_es = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'es'
+         |    WHEN s_fr > 0 AND s_fr = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'fr'
+         |    WHEN s_zh > 0 AND s_zh = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'zh'
+         |    ELSE 'und' END AS pred_lang
+         |  FROM sc),
+         |q AS (SELECT doc_id,
+         |    round(least(1.0, len(toks) / 100.0) *
+         |      (1.0 - CASE WHEN length(text) = 0 THEN 0.0
+         |        ELSE length(regexp_replace(text, '[a-z0-9\\s]', '',
+         |          'g')) / CAST(length(text) AS DOUBLE) END), 6)
+         |      AS quality
+         |  FROM t),
+         |kp AS (SELECT doc_id,
+         |    doc_id = min(doc_id) OVER (PARTITION BY
+         |      md5(array_to_string(list_slice(toks, 1, 5), ' ')))
+         |      AS keeper
+         |  FROM t),
+         |sm AS (SELECT doc_id,
+         |    CAST(concat('0x', substr(md5(concat('samp27:',
+         |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 < 70
+         |      AS in_sample
+         |  FROM documents)
+         |SELECT pl.doc_id, pl.pred_lang, q.quality, kp.keeper,
+         |  sm.in_sample,
+         |  pl.pred_lang = 'en' AND q.quality >= 0.5 AND kp.keeper
+         |    AND sm.in_sample AS keep
+         |FROM pl JOIN q ON pl.doc_id = q.doc_id
+         |  JOIN kp ON pl.doc_id = kp.doc_id
+         |  JOIN sm ON pl.doc_id = sm.doc_id""".stripMargin),
 
     // BM25 ranking (k1=1.2, b=0.75): the standard lexical-retrieval
     // scorer over the corpus for a fixed 4-term query — the scoring
@@ -416,7 +663,7 @@ object QueriesText {
     // histogram of first-occurrence deciles, cumulated over a 10-row
     // spine (tiny frame — the window sees deciles, never tokens). All
     // integer decile math (exact div), spine-guaranteed 10 rows.
-    "x32_heaps_vocab" -> ((s, d) => {
+    Query("x32_heaps_vocab", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val tf = tfFrame(s, d)
       val bounds = Tables.documents(s, d)
@@ -440,7 +687,39 @@ object QueriesText {
         .select(col("decile"),
           sum(coalesce(col("t"), lit(0L))).over(w).as("n_tokens_cum"),
           sum(coalesce(col("v"), lit(0L))).over(w).as("vocab_cum"))
-    }),
+    },
+      // sorted-fold entropy: both engines sum identical doubles in
+      // identical order; + 0.0 normalizes -0.0 (single-distinct-token
+      // docs produce exactly 0)
+      // x32: same first-occurrence histogram + 10-row cumulative spine;
+      // integer // decile math.
+      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
+         |      FROM documents),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t
+         |      GROUP BY 1, 2),
+         |b AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
+         |      FROM documents),
+         |v AS (SELECT ((fd - lo) * 10) // (hi - lo + 1) AS decile,
+         |      count(*) AS vv
+         |      FROM (SELECT term, min(doc_id) AS fd FROM tf GROUP BY 1),
+         |        b
+         |      GROUP BY 1),
+         |tk AS (SELECT ((doc_id - lo) * 10) // (hi - lo + 1) AS decile,
+         |      CAST(sum(nt) AS BIGINT) AS tt
+         |      FROM (SELECT doc_id, sum(tf) AS nt FROM tf GROUP BY 1),
+         |        b
+         |      GROUP BY 1),
+         |sp AS (SELECT unnest(range(10)) AS decile)
+         |SELECT CAST(sp.decile AS BIGINT) AS decile,
+         |  CAST(sum(coalesce(tk.tt, 0)) OVER (ORDER BY sp.decile
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |    AS BIGINT) AS n_tokens_cum,
+         |  CAST(sum(coalesce(v.vv, 0)) OVER (ORDER BY sp.decile
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |    AS BIGINT) AS vocab_cum
+         |FROM sp LEFT JOIN v ON sp.decile = v.decile
+         |LEFT JOIN tk ON sp.decile = tk.decile""".stripMargin,
+      reads = Seq(tfFrame)),
 
     // Zipf-slope fit — the second corpus law: ln-rank vs ln-frequency
     // least squares over the top-100 terms. A healthy natural-language
@@ -451,7 +730,7 @@ object QueriesText {
     // (the ts8 discipline — no FP-sum partial-order drift), and the
     // closed-form slope/intercept derive from the four fold sums with
     // one rounded division each.
-    "x33_zipf_slope" -> ((s, d) => {
+    Query("x33_zipf_slope", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val freq = tfFrame(s, d).groupBy("term")
         .agg(sum(col("tf")).as("f"))
@@ -479,9 +758,41 @@ object QueriesText {
             col("s")(0) * col("s")(1)) /
             (col("n") * col("s")(2) - col("s")(0) * col("s")(0))) *
             col("s")(0)) / col("n"), 6).as("intercept"))
-    }),
+    },
+      // x33: identical 9dp-rounded lns, identical sorted-array fold
+      // (LIST accumulator — the ts8 list_reduce discipline), same
+      // closed-form slope/intercept.
+      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
+         |      FROM documents),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t
+         |      GROUP BY 1, 2),
+         |fr AS (SELECT term, CAST(sum(tf) AS BIGINT) AS f FROM tf
+         |      GROUP BY 1),
+         |top AS (SELECT f, row_number() OVER (ORDER BY f DESC, term)
+         |        AS r
+         |      FROM fr ORDER BY f DESC, term LIMIT 100),
+         |xy AS (SELECT round(ln(CAST(r AS DOUBLE)), 9) AS x,
+         |      round(ln(CAST(f AS DOUBLE)), 9) AS y FROM top),
+         |ps AS (SELECT list_sort(list(struct_pack(x := x, y := y)))
+         |        AS ps
+         |      FROM xy),
+         |agg AS (SELECT CAST(len(ps) AS BIGINT) AS n_terms,
+         |      CAST(len(ps) AS DOUBLE) AS n,
+         |      list_reduce(list_prepend([0.0, 0.0, 0.0, 0.0],
+         |        list_transform(ps, p -> [p.x, p.y, p.x * p.x,
+         |          p.x * p.y])),
+         |        (a, b) -> [a[1] + b[1], a[2] + b[2], a[3] + b[3],
+         |          a[4] + b[4]]) AS s
+         |      FROM ps)
+         |SELECT n_terms,
+         |  round((n * s[4] - s[1] * s[2])
+         |    / (n * s[3] - s[1] * s[1]), 6) AS slope,
+         |  round((s[2] - ((n * s[4] - s[1] * s[2])
+         |    / (n * s[3] - s[1] * s[1])) * s[1]) / n, 6) AS intercept
+         |FROM agg""".stripMargin,
+      reads = Seq(tfFrame)),
 
-    "x24_bm25" -> ((s, d) => {
+    Query("x24_bm25", (s, d) => {
       val terms = BmQueryTerms
       val docs = QueriesDedup.docsWithTokens(s, d)
       val dfCols = terms.zipWithIndex.map { case (t, i) =>
@@ -509,7 +820,38 @@ object QueriesText {
           .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
             round(score, 6).as("bm25")),
         Seq(col("bm25").desc, col("doc_id").asc), 20)
-    }),
+    },
+      // x24: BM25 with every arithmetic step in the identical operand
+      // order as the Spark expression tree (fixed left-to-right 4-term
+      // sum; ln-parity pinned by x21/x23), so the doubles are bit-equal
+      // before the 6dp rounding and the rank cannot flip.
+      {
+      val dfSel = BmQueryTerms.zipWithIndex.map { case (t, i) =>
+        s"""CAST(sum(CASE WHEN list_contains(toks, '$t')
+           |    THEN 1 ELSE 0 END) AS BIGINT) AS df_$i""".stripMargin
+      }.mkString(",\n")
+      val termSql = BmQueryTerms.zipWithIndex.map { case (t, i) =>
+        s"""(ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_$i AS DOUBLE)
+           |      + 0.5) / (CAST(df_$i AS DOUBLE) + 0.5))
+           |  * (CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)
+           |      * 2.2)
+           |  / (CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)
+           |      + 1.2 * (0.25 + 0.75 * CAST(len(toks) AS DOUBLE)
+           |        / (CAST(sum_dl AS DOUBLE)
+           |          / CAST(n_docs AS DOUBLE)))))""".stripMargin
+      }.mkString(" + ")
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |st AS (SELECT CAST(sum(len(toks)) AS BIGINT) AS sum_dl,
+         |  count(*) AS n_docs,
+         |$dfSel
+         |  FROM t),
+         |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
+         |  round($termSql, 6) AS bm25
+         |  FROM t, st)
+         |SELECT doc_id, dl, bm25 FROM sc
+         |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin
+    },
+      reads = Seq(QueriesDedup.docsWithTokens)),
 
     // BPE-style merge training, distributed the way it actually scales:
     // ONE corpus pass builds the word-frequency vocab (Heaps' law keeps
@@ -526,7 +868,9 @@ object QueriesText {
     // the two consumers per round (pair counts + next merge) read one
     // materialization instead of doubling the lineage. Output: the
     // merge table itself — round, pair, weighted frequency.
-    "x35_bpe_merges" -> ((s, d) => bpeMerges(s, d)),
+    Query("x35_bpe_merges", (s, d) => bpeMerges(s, d),
+      bpeOracleSql,
+      reads = Seq(bpeChainFrames)),
 
     // Stupid-backoff trigram LM scored across a REAL train/held-out
     // boundary: the model (c3/c2/c1/N/V) trains on the largest source
@@ -542,13 +886,13 @@ object QueriesText {
     // itself must be pinned), one 6dp round at output. bo_rate — the
     // fraction of trigram mass that backed off — is the per-doc
     // "how out-of-domain is this" number a mixture builder reads.
-    "x36_backoff_lm" -> ((s, d) => {
+    Query("x36_backoff_lm", (s, d) => {
       val srcs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val train = srcs.groupBy("source").agg(count(lit(1)).as("nd"))
         .orderBy(col("nd").desc, col("source")).limit(1)
         .select(col("source").as("train_src"))
-      val c1 = lmUnigrams(trainToks(s, d))
-      val c2 = lmBigrams(trainToks(s, d))
+      val c1 = lmUnigrams(s, d)
+      val c2 = lmBigrams(s, d)
       val stats = c1.agg(sum(col("c1")).as("ntok"),
         count(lit(1)).as("vsz"))
       val tg = QueriesDedup.docsWithTokens(s, d)
@@ -595,7 +939,68 @@ object QueriesText {
             col("n_trigrams").cast("double"), 6).as("bo_rate"),
           round(-aggregate(col("cs"), lit(0.0), (a, x) => a + x) /
             col("n_trigrams").cast("double"), 6).as("avg_nll3"))
-    }),
+    },
+      s"""WITH tr AS (SELECT source FROM documents GROUP BY source
+         |  ORDER BY count(*) DESC, source LIMIT 1),
+         |tt AS (SELECT $toksSql AS toks FROM documents d
+         |  JOIN tr ON d.source = tr.source),
+         |u AS (SELECT unnest(toks) AS w FROM tt),
+         |c1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM u
+         |  GROUP BY w),
+         |b AS (SELECT unnest(list_transform(range(len(toks) - 1),
+         |    i -> [toks[i + 1], toks[i + 2]])) AS p
+         |  FROM tt WHERE len(toks) >= 2),
+         |c2 AS (SELECT p[1] AS wa, p[2] AS wb,
+         |    CAST(count(*) AS BIGINT) AS c2 FROM b GROUP BY 1, 2),
+         |t3 AS (SELECT unnest(list_transform(range(len(toks) - 2),
+         |    i -> [toks[i + 1], toks[i + 2], toks[i + 3]])) AS t
+         |  FROM tt WHERE len(toks) >= 3),
+         |c3 AS (SELECT t[1] AS w1, t[2] AS w2, t[3] AS w3,
+         |    CAST(count(*) AS BIGINT) AS c3 FROM t3 GROUP BY 1, 2, 3),
+         |st AS (SELECT CAST(sum(c1) AS BIGINT) AS ntok,
+         |    CAST(count(*) AS BIGINT) AS vsz FROM c1),
+         |sd AS (SELECT d.doc_id, $toksSql AS toks FROM documents d, tr
+         |  WHERE d.source <> tr.source),
+         |dt AS (SELECT doc_id, unnest(list_transform(range(len(toks) - 2),
+         |    i -> [toks[i + 1], toks[i + 2], toks[i + 3]])) AS t
+         |  FROM sd WHERE len(toks) >= 3),
+         |tf AS (SELECT doc_id, t[1] AS w1, t[2] AS w2, t[3] AS w3,
+         |    CAST(count(*) AS BIGINT) AS tf3 FROM dt GROUP BY 1, 2, 3, 4),
+         |j AS (SELECT tf.doc_id, tf.tf3, c3.c3, p.c2 AS c2p,
+         |    sx.c2 AS c2s, u2.c1 AS c1w2, u3.c1 AS c1w3, st.ntok, st.vsz
+         |  FROM tf
+         |  LEFT JOIN c3 ON c3.w1 = tf.w1 AND c3.w2 = tf.w2
+         |    AND c3.w3 = tf.w3
+         |  LEFT JOIN c2 p ON p.wa = tf.w1 AND p.wb = tf.w2
+         |  LEFT JOIN c2 sx ON sx.wa = tf.w2 AND sx.wb = tf.w3
+         |  LEFT JOIN c1 u2 ON u2.w = tf.w2
+         |  LEFT JOIN c1 u3 ON u3.w = tf.w3
+         |  CROSS JOIN st),
+         |sc AS (SELECT doc_id, tf3,
+         |    CASE WHEN c3 IS NULL THEN tf3 ELSE 0 END AS bon,
+         |    CAST(tf3 AS DOUBLE) * round(ln(
+         |      CASE WHEN c3 IS NOT NULL
+         |        THEN CAST(c3 AS DOUBLE) / CAST(c2p AS DOUBLE)
+         |      WHEN c2s IS NOT NULL
+         |        THEN CAST(0.4 AS DOUBLE) * CAST(c2s AS DOUBLE)
+         |          / CAST(c1w2 AS DOUBLE)
+         |      ELSE CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
+         |        * (CAST(coalesce(c1w3, 0) AS DOUBLE) + 1.0)
+         |        / (CAST(ntok AS DOUBLE) + CAST(vsz AS DOUBLE)) END), 9)
+         |      AS contrib
+         |  FROM j),
+         |g AS (SELECT doc_id, CAST(sum(tf3) AS BIGINT) AS n_trigrams,
+         |    CAST(sum(bon) AS BIGINT) AS bo_n,
+         |    list_sort(list(contrib)) AS cs
+         |  FROM sc GROUP BY doc_id)
+         |SELECT doc_id, n_trigrams,
+         |  round(CAST(bo_n AS DOUBLE) / CAST(n_trigrams AS DOUBLE), 6)
+         |    AS bo_rate,
+         |  round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
+         |    (a, x) -> a + x) / CAST(n_trigrams AS DOUBLE), 6)
+         |    AS avg_nll3
+         |FROM g""".stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens, lmBigrams, lmUnigrams)),
 
     // Trained-tokenizer ENCODE — the apply half of x35's train loop:
     // every corpus word re-segments under the trained merges (the
@@ -610,7 +1015,7 @@ object QueriesText {
     // lookup: one narrow explode + broadcast join + bounded agg at
     // any scale — exactly how a 100 TB corpus is tokenized against a
     // trained merges table.
-    "x37_bpe_encode" -> ((s, d) => {
+    Query("x37_bpe_encode", (s, d) => {
       val enc = bpeChain(s, d)._1
         .select(col("word"), size(col("syms")).cast("long").as("ntok"))
       val srcs = Tables.documents(s, d)
@@ -631,7 +1036,9 @@ object QueriesText {
             col("n_words").cast("double"), 6).as("bpe_fertility"),
           round(col("n_chars").cast("double") /
             col("n_bpe_tokens").cast("double"), 6).as("chars_per_token"))
-    }),
+    },
+      bpeEncodeOracleSql,
+      reads = Seq(QueriesDedup.docsWithTokens, bpeChainFrames)),
 
     // Token-budget WATERFILLING — the mixture-planning step between
     // x31 (temperature weights) and the samplers (x9/x22): given a
@@ -647,7 +1054,7 @@ object QueriesText {
     // never rows) + one broadcast of the 1-row λ. Doubles appear only
     // in ratios with identical expression shapes on both engines;
     // the prefix sums are exact integers.
-    "x38_token_budget" -> ((s, d) => {
+    Query("x38_token_budget", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val srcs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"))
@@ -695,8 +1102,321 @@ object QueriesText {
           (col("avail").cast("double") <=
             col("lam") * col("n_docs").cast("double")).cast("long")
             .as("saturated"))
-    })
-  ) ++ samplingQueries
+    },
+      // x38: identical closed form — exact integer prefix sums over the
+      // ratio-sorted sources, λ candidates with the same boundary
+      // checks (the impossible k=n arm is filtered out BEFORE its
+      // zero-divisor division, mirroring the Spark side's ANSI guard;
+      // the k=0 sentinel mirrors the Spark union), alloc/saturated in
+      // the same expression shapes.
+      s"""WITH per AS (SELECT source,
+         |    CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(len($toksSql)) AS BIGINT) AS avail
+         |  FROM documents GROUP BY source),
+         |tot AS (SELECT sum(avail) AS atot, sum(n_docs) AS wtot,
+         |    CAST(sum(avail) // 2 AS BIGINT) AS budget FROM per),
+         |wr AS (SELECT source, n_docs, avail,
+         |    CAST(avail AS DOUBLE) / CAST(n_docs AS DOUBLE) AS r
+         |  FROM per),
+         |rws AS (SELECT r,
+         |    sum(avail) OVER wd AS ak, sum(n_docs) OVER wd AS wk,
+         |    lead(r) OVER wd AS rnext
+         |  FROM wr WINDOW wd AS (ORDER BY r, source)),
+         |cand AS (SELECT lam, budget FROM (
+         |    SELECT r, rnext,
+         |      CAST(budget - ak AS DOUBLE)
+         |        / CAST(wtot - wk AS DOUBLE) AS lam, budget
+         |    FROM rws, tot WHERE wk < wtot
+         |    UNION ALL
+         |    SELECT 0.0, (SELECT min(r) FROM wr),
+         |      CAST(budget AS DOUBLE) / CAST(wtot AS DOUBLE), budget
+         |    FROM tot)
+         |  WHERE r <= lam AND (rnext IS NULL OR rnext > lam))
+         |SELECT w.source, w.n_docs, w.avail AS tokens_avail, c.budget,
+         |  round(c.lam, 6) AS lambda,
+         |  round(least(CAST(w.avail AS DOUBLE),
+         |    c.lam * CAST(w.n_docs AS DOUBLE)), 6) AS alloc,
+         |  CAST(CASE WHEN CAST(w.avail AS DOUBLE)
+         |      <= c.lam * CAST(w.n_docs AS DOUBLE)
+         |    THEN 1 ELSE 0 END AS BIGINT) AS saturated
+         |FROM wr w, cand c""".stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens)),
+
+    // Deterministic-sampling and sequence-packing queries (training-data
+    // curation, SURVEY.md §2.10) live in the x-family too.
+
+    // Seeded Bernoulli sample: keep a doc iff its seeded hash bucket
+    // falls under the rate. Reproducible across engines/runs/reshuffles
+    // (rand() is none of those), and a DIFFERENT seed gives an
+    // independent resample — the property curation pipelines need when
+    // they draw eval sets repeatedly. Pure narrow projection.
+    Query("x9_hash_sample", (s, d) => {
+      Tables.documents(s, d)
+        .select(col("doc_id"),
+          (TextOps.md5Prefix60(
+            concat(lit("samp1:"), col("doc_id").cast("string"))) % 10000)
+            .as("bucket"))
+        .filter(col("bucket") < 1000) // 10% sample
+    },
+      """WITH b AS (SELECT doc_id,
+        |  CAST(concat('0x', substr(md5(concat('samp1:',
+        |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 10000
+        |    AS bucket
+        |  FROM documents)
+        |SELECT doc_id, bucket FROM b WHERE bucket < 1000""".stripMargin),
+
+    // Stratified sample: top-3 docs per predicted language, ranked by a
+    // seeded hash (uniform within stratum), tie-broken by doc_id. One
+    // window over strata — at 100 TB the rank state is O(1) per
+    // partition stream and only sampled rows survive the filter.
+    Query("x10_stratified_sample", (s, d) => {
+      val toks = TextOps.tokens(col("text"))
+      val strat = Tables.documents(s, d).select(
+        col("doc_id"),
+        TextOps.langId(toks).as("pred_lang"),
+        TextOps.md5Prefix60(
+          concat(lit("strat:"), col("doc_id").cast("string"))).as("h"))
+      graft.operators.RelationalOps.topKPerGroup(strat, Seq("pred_lang"),
+        Seq(col("h").asc, col("doc_id").asc), 3, rankCol = "rank")
+        .select(col("pred_lang"), col("doc_id"), col("h"),
+          col("rank").cast("long").as("rank"))
+    },
+      s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dt
+         |           FROM documents),
+         |sc AS (SELECT doc_id,
+         |  CAST(len(list_intersect(dt, $enList)) AS BIGINT) AS s_en,
+         |  CAST(len(list_intersect(dt, $deList)) AS BIGINT) AS s_de,
+         |  CAST(len(list_intersect(dt, $esList)) AS BIGINT) AS s_es,
+         |  CAST(len(list_intersect(dt, $frList)) AS BIGINT) AS s_fr,
+         |  CAST(len(list_intersect(dt, $zhList)) AS BIGINT) AS s_zh
+         |  FROM t),
+         |l AS (SELECT doc_id,
+         |  CASE
+         |    WHEN s_en > 0 AND s_en = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'en'
+         |    WHEN s_de > 0 AND s_de = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'de'
+         |    WHEN s_es > 0 AND s_es = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'es'
+         |    WHEN s_fr > 0 AND s_fr = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'fr'
+         |    WHEN s_zh > 0 AND s_zh = greatest(s_en,s_de,s_es,s_fr,s_zh)
+         |      THEN 'zh'
+         |    ELSE 'und' END AS pred_lang
+         |  FROM sc),
+         |h AS (SELECT doc_id, pred_lang,
+         |  CAST(concat('0x', substr(md5(concat('strat:',
+         |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS h
+         |  FROM l),
+         |r AS (SELECT pred_lang, doc_id, h,
+         |  row_number() OVER (PARTITION BY pred_lang ORDER BY h, doc_id)
+         |    AS rank
+         |  FROM h)
+         |SELECT pred_lang, doc_id, h, rank FROM r WHERE rank <= 3"""
+        .stripMargin),
+
+    // Weighted sampling without replacement (Efraimidis–Spirakis A-ES):
+    // each doc draws a seeded-hash uniform u ∈ (0,1) and competes on
+    // key = ln(u)/w (monotone in u^(1/w)) with w = n_chars — longer
+    // documents proportionally likelier, yet the draw is a single
+    // GLOBAL top-k with no per-stratum bookkeeping. This is the
+    // standard one-pass distributed weighted sampler (corpus mixing by
+    // size/quality weights): per-partition bounded heaps via
+    // TakeOrderedAndProject, O(k) state, no sort of the corpus, fully
+    // deterministic across engines/reshuffles (the x9 seeded-hash
+    // discipline — never rand()). Selection ranks on the UNROUNDED key
+    // (ties impossible: 60-bit distinct hashes), output rounds to 6dp.
+    Query("x22_weighted_sample", (s, d) => {
+      val u = (TextOps.md5Prefix60(
+        concat(lit("wsamp:"), col("doc_id").cast("string")))
+        .cast("double") + lit(0.5)) / lit(1.152921504606846976e18)
+      val key = log(u) / col("n_chars").cast("double")
+      val scored = Tables.documents(s, d)
+        .filter(col("n_chars") > 0)
+        .select(col("doc_id"), col("n_chars"), key.as("wkey"))
+      graft.operators.RelationalOps.topKGlobal(scored,
+          Seq(col("wkey").desc, col("doc_id").asc), 200)
+        .select(col("doc_id"), col("n_chars"), round(col("wkey"), 6)
+          .as("wkey"))
+    },
+      // x22: selection ranks on the unrounded A-ES key (60-bit distinct
+      // hashes make ties impossible), output rounds to 6dp.
+      """WITH h AS (SELECT doc_id, n_chars,
+        |  ln((CAST(CAST(concat('0x', substr(md5(concat('wsamp:',
+        |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS DOUBLE)
+        |    + 0.5) / 1152921504606846976.0)
+        |    / CAST(n_chars AS DOUBLE) AS wkey
+        |  FROM documents WHERE n_chars > 0),
+        |k AS (SELECT doc_id, n_chars, wkey FROM h
+        |      ORDER BY wkey DESC, doc_id LIMIT 200)
+        |SELECT doc_id, n_chars, round(wkey, 6) AS wkey FROM k"""
+        .stripMargin
+  ),
+
+    // RAG-style document chunking: 64-token sliding windows at stride
+    // 48 (16-token overlap) per document — the "split long docs into
+    // retrievable/trainable chunks" step every retrieval and packing
+    // pipeline runs before embedding. Rides the shared tokenization
+    // cache (no re-tokenize, no Generate-clone re-evaluation), then a
+    // pure narrow explode: zero shuffle, embarrassingly parallel.
+    // Chunk identity is the md5-60 hash of the space-joined window —
+    // the downstream dedup/embedding key. x18 consumes the SAME
+    // [[chunkFrame]], so chunk identity cannot drift between them.
+    Query("x17_chunk_overlap", (s, d) => chunkFrame(s, d),
+      s"""WITH $chunkCte
+         |SELECT doc_id, chunk_idx, start, n_chunk_tokens, chunk_hash
+         |FROM c""".stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens)),
+
+    // Chunk-level boilerplate mining: the 64-token windows from x17's
+    // chunker, grouped by chunk hash — a chunk appearing in 2+ DISTINCT
+    // documents is shared boilerplate (headers, footers, licenses,
+    // navigation), the thing curation pipelines strip before training.
+    // Works at sub-document granularity where whole-doc dedup (d1) and
+    // near-dup (d2) can't see. Alignment-sensitive by construction:
+    // fixed-stride windows collide only at matching offsets (shared
+    // prefixes, duplicated docs) — a production pipeline chunks on
+    // line/sentence boundaries to catch arbitrary-offset boilerplate,
+    // with the identical aggregate shape. That shape is the point:
+    // one hash-agg shuffle with map-side partials over the chunk
+    // hashes + a bounded top-k — linear at any corpus size. Consumes
+    // [[chunkFrame]] — the exact frame x17 returns — so the mined
+    // hashes are BY CONSTRUCTION the chunk identities x17 emits
+    // (Catalyst prunes the columns this aggregate doesn't read).
+    Query("x18_boilerplate", (s, d) => {
+      val shared = chunkFrame(s, d).groupBy("chunk_hash")
+        .agg(countDistinct(col("doc_id")).as("n_docs"),
+          count(lit(1)).as("n_occurrences"))
+        .filter(col("n_docs") >= 2)
+      graft.operators.RelationalOps.topKGlobal(shared,
+        Seq(col("n_docs").desc, col("n_occurrences").desc,
+          col("chunk_hash").asc), 20)
+    },
+      s"""WITH $chunkCte,
+         |g AS (SELECT chunk_hash,
+         |      CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+         |      count(*) AS n_occurrences
+         |      FROM c GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
+         |SELECT chunk_hash, n_docs, n_occurrences FROM g
+         |ORDER BY n_docs DESC, n_occurrences DESC, chunk_hash
+         |LIMIT 20""".stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens)),
+
+    // Sequence packing: assign docs to fixed-boundary token bins
+    // (budget 2048) per train/val/test split, in doc_id order — the
+    // deterministic version of the "pack documents into training
+    // sequences" step. bin = floor(start_offset / budget) where
+    // start_offset is the running token count BEFORE the doc (an
+    // explicit ROWS frame — RANGE buffers peers and is ambiguous under
+    // ties). One sort-shuffle per split at any scale; a production
+    // packer would run the same fold per partition via mapPartitions
+    // after a range-partition on (split, doc_id).
+    Query("x11_pack_sequences", (s, d) => {
+      val docs = Tables.documents(s, d).select(
+        col("doc_id"),
+        size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
+        when(TextOps.md5Prefix60(
+          concat(lit("split:"), col("doc_id").cast("string"))) % 100 < 80,
+          "train").when(TextOps.md5Prefix60(
+          concat(lit("split:"), col("doc_id").cast("string"))) % 100 < 90,
+          "val").otherwise("test").as("split"))
+      graft.operators.RelationalOps.runningAgg(docs, Seq("split"),
+        Seq(col("doc_id").asc), sum(col("n_tokens")), "cum_tokens")
+        .select(col("split"), col("doc_id"), col("n_tokens"),
+          ((col("cum_tokens") - col("n_tokens")) / 2048)
+            .cast("long").as("bin"))
+    },
+      s"""WITH t AS (SELECT doc_id,
+         |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
+         |  CASE WHEN CAST(concat('0x', substr(md5(concat('split:',
+         |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 < 80
+         |    THEN 'train'
+         |    WHEN CAST(concat('0x', substr(md5(concat('split:',
+         |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 < 90
+         |    THEN 'val' ELSE 'test' END AS split
+         |  FROM documents),
+         |c AS (SELECT split, doc_id, n_tokens,
+         |  CAST(sum(n_tokens) OVER (PARTITION BY split ORDER BY doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |    AS cum
+         |  FROM t)
+         |SELECT split, doc_id, n_tokens, (cum - n_tokens) // 2048 AS bin
+         |FROM c""".stripMargin),
+
+    // Inverted index build: token → document frequency + the first (by
+    // doc_id) MaxPostings postings — the retrieval structure a search /
+    // RAG pipeline materializes over the corpus. The posting list is
+    // BOUNDED STATE: the native TopKAgg heap keeps the k smallest
+    // doc_ids per (partition, token) — a collect_list-then-slice would
+    // buffer the FULL df(token) list for every stopword ("the" at
+    // 100 TB is billions of ids in one aggregation buffer) before
+    // throwing almost all of it away. doc_ids ride the heap negated
+    // (smallest-k = top-k of the negation; exact — ids < 2^53 are
+    // double-exact), df >= MinDf prunes the hapax tail that a real
+    // index drops into a separate spill tier.
+    // Token-distribution Shannon entropy per document — the
+    // gibberish/repetition detector that complements x3's ratio-based
+    // quality score: near-zero entropy = one token stamped over and
+    // over (spam/boilerplate), high entropy = diverse vocabulary. A
+    // transcendental made oracle-safe by the f3 discipline: per-token
+    // counts fold in SORTED order (both engines add the same doubles
+    // in the same sequence), log2 differences live past 6dp, and the
+    // + 0.0 normalizes any -0.0 before the round. One explode + two
+    // hash-aggs, nothing quadratic.
+    Query("x20_entropy", (s, d) => {
+      QueriesDedup.docsWithTokens(s, d)
+        .select(col("doc_id"), explode(col("toks")).as("t"))
+        .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
+        .groupBy("doc_id").agg(
+          sort_array(collect_list(col("c"))).as("cs"),
+          sum(col("c")).as("n"))
+        .select(col("doc_id"), col("n"),
+          size(col("cs")).cast("long").as("n_distinct"),
+          round(aggregate(col("cs"), lit(0.0),
+            (acc, c) => acc - (c / col("n")) * log2(c / col("n")))
+            + lit(0.0), 6).as("token_entropy"))
+    },
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |e AS (SELECT doc_id, unnest(toks) AS tk FROM t),
+         |c AS (SELECT doc_id, tk, count(*) AS c FROM e GROUP BY 1, 2),
+         |g AS (SELECT doc_id, list_sort(list(CAST(c AS DOUBLE))) AS cs,
+         |      sum(c) AS n FROM c GROUP BY 1)
+         |SELECT doc_id, CAST(n AS BIGINT) AS n,
+         |  CAST(len(cs) AS BIGINT) AS n_distinct,
+         |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
+         |    (acc, x) -> acc - (x / n) * log2(x / n)) + 0.0, 6)
+         |    AS token_entropy
+         |FROM g""".stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens)),
+
+    Query("x19_inverted_index", (s, d) => {
+      val ex = QueriesDedup.docsWithTokens(s, d)
+        .select(explode(array_distinct(col("toks"))).as("token"),
+          col("doc_id"))
+      ex.groupBy("token").agg(
+          count(lit(1)).as("df"),
+          org.apache.spark.sql.graft.AnalyticsAggregates
+            .topK(negate(col("doc_id").cast("double")), MaxPostings)
+            .as("neg"))
+        .filter(col("df") >= MinDf)
+        // exploded to scalar (token, df, doc_id) rows: doc_ids are
+        // distinct per token, so the exploded multiset is exactly the
+        // capped posting SET — deterministic, and row-hashable by the
+        // driver (array cells are not).
+        .select(col("token"), col("df"),
+          explode(transform(col("neg"), x => negate(x).cast("long")))
+            .as("doc_id"))
+    },
+      s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dt
+         |      FROM documents),
+         |e AS (SELECT doc_id, unnest(dt) AS token FROM t),
+         |g AS (SELECT token, count(*) AS df,
+         |    list_slice(list_sort(list(doc_id)), 1, $MaxPostings)
+         |      AS postings
+         |  FROM e GROUP BY token HAVING count(*) >= $MinDf)
+         |SELECT token, df, unnest(postings) AS doc_id FROM g"""
+        .stripMargin,
+      reads = Seq(QueriesDedup.docsWithTokens)))
 
   /** x35's merge-round count (mirrored in the oracle builder). */
   val BpeRounds: Int = 6
@@ -738,12 +1458,9 @@ object QueriesText {
     * form; a resilient cluster deployment would use checkpoint() to
     * durable storage — same shape, same truncation.
     */
-  private def bpeChainFrames(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) =
-    SessionMemo(s, d, "text.bpe_chain")(buildBpeChainFrames(s, d))
-
-  private def buildBpeChainFrames(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) = {
+  private lazy val bpeChainFrames = SharedFrame.memoized(
+      "text.bpe_chain", QueriesDedup.docsWithTokens)(
+      (_: (Seq[DataFrame], DataFrame))._1.last) { (s, d) =>
     val persistedFrames = Seq.newBuilder[DataFrame]
     // eager lineage cut: materializes NOW (so the whole ladder build
     // lands on the [bench-cache] line / first caller, never split
@@ -800,26 +1517,9 @@ object QueriesText {
   private def bpeMerges(s: SparkSession, d: String): DataFrame =
     bpeChain(s, d)._2
 
-  /** This family's shared persisted caches (the QueriesDedup.sharedCaches
-    * contract: name → builder in dependency order, pre-built and timed
-    * separately by Bench so per-query times are net of cache). The BPE
-    * entry returns the FINAL vocab frame — forcing it materializes the
-    * whole guard-persisted ladder transitively, which is the expensive
-    * part shared by x35/x37.
-    */
-  private[graft] def sharedCaches
-      : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "text.tf" -> (tfFrame _),
-    "text.bigrams" -> (bg2Frame _),
-    "text.bpe_chain" -> ((s: SparkSession, d: String) => bpeChain(s, d)._1),
-    "text.lm_unigrams" ->
-      ((s: SparkSession, d: String) => lmUnigrams(trainToks(s, d))),
-    "text.lm_bigrams" ->
-      ((s: SparkSession, d: String) => lmBigrams(trainToks(s, d))))
-
   /** x36's training corpus: token arrays of the largest source (docs
-    * desc, source asc tiebreak) — extracted so the shared-cache list can
-    * re-derive the c1/c2 cache plans.
+    * desc, source asc tiebreak) — shared by the c1/c2 frames and x36's
+    * trigram leg.
     */
   private def trainToks(s: SparkSession, d: String): DataFrame = {
     val srcs = Tables.documents(s, d).select(col("doc_id"), col("source"))
@@ -835,21 +1535,21 @@ object QueriesText {
   /** Train-corpus n-gram model tables for x36 — c1/c2 are joined twice
     * each (prefix and suffix legs), so both are guard-persisted.
     */
-  private def lmUnigrams(trainToks: DataFrame): DataFrame = {
-    val df = trainToks.select(explode(col("toks")).as("w"))
+  private lazy val lmUnigrams = SharedFrame.persisted(
+      "text.lm_unigrams", QueriesDedup.docsWithTokens) { (s, d) =>
+    trainToks(s, d).select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
-    SessionMemo.persistOnce(df)
   }
 
-  private def lmBigrams(trainToks: DataFrame): DataFrame = {
-    val df = trainToks.filter(size(col("toks")) >= 2)
+  private lazy val lmBigrams = SharedFrame.persisted(
+      "text.lm_bigrams", QueriesDedup.docsWithTokens) { (s, d) =>
+    trainToks(s, d).filter(size(col("toks")) >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => struct(a.as("wa"), b.as("wb")))).as("p"))
       .groupBy(col("p.wa").as("wa"), col("p.wb").as("wb"))
       .agg(count(lit(1)).as("c2"))
-    SessionMemo.persistOnce(df)
   }
 
   private def lmTrigrams(trainToks: DataFrame): DataFrame =
@@ -867,182 +1567,6 @@ object QueriesText {
     * and df both vary; mirrored literally in the oracle SQL).
     */
   private val BmQueryTerms = Seq("vector", "merge", "window", "scan")
-
-  /** Deterministic-sampling and sequence-packing queries (training-data
-    * curation, SURVEY.md §2.10) live in the x-family too: see
-    * [[samplingQueries]] merged below.
-    */
-  def samplingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Seeded Bernoulli sample: keep a doc iff its seeded hash bucket
-    // falls under the rate. Reproducible across engines/runs/reshuffles
-    // (rand() is none of those), and a DIFFERENT seed gives an
-    // independent resample — the property curation pipelines need when
-    // they draw eval sets repeatedly. Pure narrow projection.
-    "x9_hash_sample" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          (TextOps.md5Prefix60(
-            concat(lit("samp1:"), col("doc_id").cast("string"))) % 10000)
-            .as("bucket"))
-        .filter(col("bucket") < 1000) // 10% sample
-    }),
-
-    // Stratified sample: top-3 docs per predicted language, ranked by a
-    // seeded hash (uniform within stratum), tie-broken by doc_id. One
-    // window over strata — at 100 TB the rank state is O(1) per
-    // partition stream and only sampled rows survive the filter.
-    "x10_stratified_sample" -> ((s, d) => {
-      val toks = TextOps.tokens(col("text"))
-      val strat = Tables.documents(s, d).select(
-        col("doc_id"),
-        TextOps.langId(toks).as("pred_lang"),
-        TextOps.md5Prefix60(
-          concat(lit("strat:"), col("doc_id").cast("string"))).as("h"))
-      graft.operators.RelationalOps.topKPerGroup(strat, Seq("pred_lang"),
-        Seq(col("h").asc, col("doc_id").asc), 3, rankCol = "rank")
-        .select(col("pred_lang"), col("doc_id"), col("h"),
-          col("rank").cast("long").as("rank"))
-    }),
-
-    // Weighted sampling without replacement (Efraimidis–Spirakis A-ES):
-    // each doc draws a seeded-hash uniform u ∈ (0,1) and competes on
-    // key = ln(u)/w (monotone in u^(1/w)) with w = n_chars — longer
-    // documents proportionally likelier, yet the draw is a single
-    // GLOBAL top-k with no per-stratum bookkeeping. This is the
-    // standard one-pass distributed weighted sampler (corpus mixing by
-    // size/quality weights): per-partition bounded heaps via
-    // TakeOrderedAndProject, O(k) state, no sort of the corpus, fully
-    // deterministic across engines/reshuffles (the x9 seeded-hash
-    // discipline — never rand()). Selection ranks on the UNROUNDED key
-    // (ties impossible: 60-bit distinct hashes), output rounds to 6dp.
-    "x22_weighted_sample" -> ((s, d) => {
-      val u = (TextOps.md5Prefix60(
-        concat(lit("wsamp:"), col("doc_id").cast("string")))
-        .cast("double") + lit(0.5)) / lit(1.152921504606846976e18)
-      val key = log(u) / col("n_chars").cast("double")
-      val scored = Tables.documents(s, d)
-        .filter(col("n_chars") > 0)
-        .select(col("doc_id"), col("n_chars"), key.as("wkey"))
-      graft.operators.RelationalOps.topKGlobal(scored,
-          Seq(col("wkey").desc, col("doc_id").asc), 200)
-        .select(col("doc_id"), col("n_chars"), round(col("wkey"), 6)
-          .as("wkey"))
-    }),
-
-    // RAG-style document chunking: 64-token sliding windows at stride
-    // 48 (16-token overlap) per document — the "split long docs into
-    // retrievable/trainable chunks" step every retrieval and packing
-    // pipeline runs before embedding. Rides the shared tokenization
-    // cache (no re-tokenize, no Generate-clone re-evaluation), then a
-    // pure narrow explode: zero shuffle, embarrassingly parallel.
-    // Chunk identity is the md5-60 hash of the space-joined window —
-    // the downstream dedup/embedding key. x18 consumes the SAME
-    // [[chunkFrame]], so chunk identity cannot drift between them.
-    "x17_chunk_overlap" -> ((s, d) => chunkFrame(s, d)),
-
-    // Chunk-level boilerplate mining: the 64-token windows from x17's
-    // chunker, grouped by chunk hash — a chunk appearing in 2+ DISTINCT
-    // documents is shared boilerplate (headers, footers, licenses,
-    // navigation), the thing curation pipelines strip before training.
-    // Works at sub-document granularity where whole-doc dedup (d1) and
-    // near-dup (d2) can't see. Alignment-sensitive by construction:
-    // fixed-stride windows collide only at matching offsets (shared
-    // prefixes, duplicated docs) — a production pipeline chunks on
-    // line/sentence boundaries to catch arbitrary-offset boilerplate,
-    // with the identical aggregate shape. That shape is the point:
-    // one hash-agg shuffle with map-side partials over the chunk
-    // hashes + a bounded top-k — linear at any corpus size. Consumes
-    // [[chunkFrame]] — the exact frame x17 returns — so the mined
-    // hashes are BY CONSTRUCTION the chunk identities x17 emits
-    // (Catalyst prunes the columns this aggregate doesn't read).
-    "x18_boilerplate" -> ((s, d) => {
-      val shared = chunkFrame(s, d).groupBy("chunk_hash")
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_occurrences"))
-        .filter(col("n_docs") >= 2)
-      graft.operators.RelationalOps.topKGlobal(shared,
-        Seq(col("n_docs").desc, col("n_occurrences").desc,
-          col("chunk_hash").asc), 20)
-    }),
-
-    // Sequence packing: assign docs to fixed-boundary token bins
-    // (budget 2048) per train/val/test split, in doc_id order — the
-    // deterministic version of the "pack documents into training
-    // sequences" step. bin = floor(start_offset / budget) where
-    // start_offset is the running token count BEFORE the doc (an
-    // explicit ROWS frame — RANGE buffers peers and is ambiguous under
-    // ties). One sort-shuffle per split at any scale; a production
-    // packer would run the same fold per partition via mapPartitions
-    // after a range-partition on (split, doc_id).
-    "x11_pack_sequences" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(
-        col("doc_id"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
-        when(TextOps.md5Prefix60(
-          concat(lit("split:"), col("doc_id").cast("string"))) % 100 < 80,
-          "train").when(TextOps.md5Prefix60(
-          concat(lit("split:"), col("doc_id").cast("string"))) % 100 < 90,
-          "val").otherwise("test").as("split"))
-      graft.operators.RelationalOps.runningAgg(docs, Seq("split"),
-        Seq(col("doc_id").asc), sum(col("n_tokens")), "cum_tokens")
-        .select(col("split"), col("doc_id"), col("n_tokens"),
-          ((col("cum_tokens") - col("n_tokens")) / 2048)
-            .cast("long").as("bin"))
-    }),
-
-    // Inverted index build: token → document frequency + the first (by
-    // doc_id) MaxPostings postings — the retrieval structure a search /
-    // RAG pipeline materializes over the corpus. The posting list is
-    // BOUNDED STATE: the native TopKAgg heap keeps the k smallest
-    // doc_ids per (partition, token) — a collect_list-then-slice would
-    // buffer the FULL df(token) list for every stopword ("the" at
-    // 100 TB is billions of ids in one aggregation buffer) before
-    // throwing almost all of it away. doc_ids ride the heap negated
-    // (smallest-k = top-k of the negation; exact — ids < 2^53 are
-    // double-exact), df >= MinDf prunes the hapax tail that a real
-    // index drops into a separate spill tier.
-    // Token-distribution Shannon entropy per document — the
-    // gibberish/repetition detector that complements x3's ratio-based
-    // quality score: near-zero entropy = one token stamped over and
-    // over (spam/boilerplate), high entropy = diverse vocabulary. A
-    // transcendental made oracle-safe by the f3 discipline: per-token
-    // counts fold in SORTED order (both engines add the same doubles
-    // in the same sequence), log2 differences live past 6dp, and the
-    // + 0.0 normalizes any -0.0 before the round. One explode + two
-    // hash-aggs, nothing quadratic.
-    "x20_entropy" -> ((s, d) => {
-      QueriesDedup.docsWithTokens(s, d)
-        .select(col("doc_id"), explode(col("toks")).as("t"))
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(
-          sort_array(collect_list(col("c"))).as("cs"),
-          sum(col("c")).as("n"))
-        .select(col("doc_id"), col("n"),
-          size(col("cs")).cast("long").as("n_distinct"),
-          round(aggregate(col("cs"), lit(0.0),
-            (acc, c) => acc - (c / col("n")) * log2(c / col("n")))
-            + lit(0.0), 6).as("token_entropy"))
-    }),
-
-    "x19_inverted_index" -> ((s, d) => {
-      val ex = QueriesDedup.docsWithTokens(s, d)
-        .select(explode(array_distinct(col("toks"))).as("token"),
-          col("doc_id"))
-      ex.groupBy("token").agg(
-          count(lit(1)).as("df"),
-          org.apache.spark.sql.graft.AnalyticsAggregates
-            .topK(negate(col("doc_id").cast("double")), MaxPostings)
-            .as("neg"))
-        .filter(col("df") >= MinDf)
-        // exploded to scalar (token, df, doc_id) rows: doc_ids are
-        // distinct per token, so the exploded multiset is exactly the
-        // capped posting SET — deterministic, and row-hashable by the
-        // driver (array cells are not).
-        .select(col("token"), col("df"),
-          explode(transform(col("neg"), x => negate(x).cast("long")))
-            .as("doc_id"))
-    })
-  )
 
   /** x19's posting-list cap and df floor (mirrored in the oracle). */
   val MaxPostings: Int = 20
@@ -1078,11 +1602,11 @@ object QueriesText {
     * 100 TB this is the same "aggregate once → checkpoint → fan out"
     * discipline as the signature frames.
     */
-  private def tfFrame(s: SparkSession, d: String): DataFrame = {
-    val df = QueriesDedup.docsWithTokens(s, d)
+  private lazy val tfFrame = SharedFrame.persisted(
+      "text.tf", QueriesDedup.docsWithTokens) { (s, d) =>
+    QueriesDedup.docsWithTokens(s, d)
       .select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    SessionMemo.persistOnce(df)
   }
 
   /** Per-document bigram frequencies, PERSISTED (the tfFrame pattern at
@@ -1091,15 +1615,15 @@ object QueriesText {
     * tables (c2/c1) plus its per-doc join all read this one
     * materialization.
     */
-  private def bg2Frame(s: SparkSession, d: String): DataFrame = {
-    val df = QueriesDedup.docsWithTokens(s, d)
+  private lazy val bg2Frame = SharedFrame.persisted(
+      "text.bigrams", QueriesDedup.docsWithTokens) { (s, d) =>
+    QueriesDedup.docsWithTokens(s, d)
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => concat(a, lit(" "), b))).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf2"))
-    SessionMemo.persistOnce(df)
   }
 
   private val enList = "['the','a','and','of','to','in','is']"
@@ -1111,7 +1635,7 @@ object QueriesText {
   /** The x2 oracle as a standalone SELECT — shared verbatim between
     * the x2 entry and x34's confusion matrix (one source of truth for
     * the predictor on the oracle side, mirroring the Spark side's
-    * queries("x2_lang_id") reuse). Lazy: references the vocab vals.
+    * x2_lang_id reuse). Lazy: references the vocab vals.
     */
   private lazy val x2OracleSql: String =
     s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dt
@@ -1232,565 +1756,4 @@ object QueriesText {
        |FROM wd JOIN enc ON enc.word = wd.word
        |GROUP BY wd.source""".stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "x35_bpe_merges" -> bpeOracleSql,
-    "x37_bpe_encode" -> bpeEncodeOracleSql,
-    // x38: identical closed form — exact integer prefix sums over the
-    // ratio-sorted sources, λ candidates with the same boundary
-    // checks (the impossible k=n arm is filtered out BEFORE its
-    // zero-divisor division, mirroring the Spark side's ANSI guard;
-    // the k=0 sentinel mirrors the Spark union), alloc/saturated in
-    // the same expression shapes.
-    "x38_token_budget" ->
-      s"""WITH per AS (SELECT source,
-         |    CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(len($toksSql)) AS BIGINT) AS avail
-         |  FROM documents GROUP BY source),
-         |tot AS (SELECT sum(avail) AS atot, sum(n_docs) AS wtot,
-         |    CAST(sum(avail) // 2 AS BIGINT) AS budget FROM per),
-         |wr AS (SELECT source, n_docs, avail,
-         |    CAST(avail AS DOUBLE) / CAST(n_docs AS DOUBLE) AS r
-         |  FROM per),
-         |rws AS (SELECT r,
-         |    sum(avail) OVER wd AS ak, sum(n_docs) OVER wd AS wk,
-         |    lead(r) OVER wd AS rnext
-         |  FROM wr WINDOW wd AS (ORDER BY r, source)),
-         |cand AS (SELECT lam, budget FROM (
-         |    SELECT r, rnext,
-         |      CAST(budget - ak AS DOUBLE)
-         |        / CAST(wtot - wk AS DOUBLE) AS lam, budget
-         |    FROM rws, tot WHERE wk < wtot
-         |    UNION ALL
-         |    SELECT 0.0, (SELECT min(r) FROM wr),
-         |      CAST(budget AS DOUBLE) / CAST(wtot AS DOUBLE), budget
-         |    FROM tot)
-         |  WHERE r <= lam AND (rnext IS NULL OR rnext > lam))
-         |SELECT w.source, w.n_docs, w.avail AS tokens_avail, c.budget,
-         |  round(c.lam, 6) AS lambda,
-         |  round(least(CAST(w.avail AS DOUBLE),
-         |    c.lam * CAST(w.n_docs AS DOUBLE)), 6) AS alloc,
-         |  CAST(CASE WHEN CAST(w.avail AS DOUBLE)
-         |      <= c.lam * CAST(w.n_docs AS DOUBLE)
-         |    THEN 1 ELSE 0 END AS BIGINT) AS saturated
-         |FROM wr w, cand c""".stripMargin,
-    "x36_backoff_lm" ->
-      s"""WITH tr AS (SELECT source FROM documents GROUP BY source
-         |  ORDER BY count(*) DESC, source LIMIT 1),
-         |tt AS (SELECT $toksSql AS toks FROM documents d
-         |  JOIN tr ON d.source = tr.source),
-         |u AS (SELECT unnest(toks) AS w FROM tt),
-         |c1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM u
-         |  GROUP BY w),
-         |b AS (SELECT unnest(list_transform(range(len(toks) - 1),
-         |    i -> [toks[i + 1], toks[i + 2]])) AS p
-         |  FROM tt WHERE len(toks) >= 2),
-         |c2 AS (SELECT p[1] AS wa, p[2] AS wb,
-         |    CAST(count(*) AS BIGINT) AS c2 FROM b GROUP BY 1, 2),
-         |t3 AS (SELECT unnest(list_transform(range(len(toks) - 2),
-         |    i -> [toks[i + 1], toks[i + 2], toks[i + 3]])) AS t
-         |  FROM tt WHERE len(toks) >= 3),
-         |c3 AS (SELECT t[1] AS w1, t[2] AS w2, t[3] AS w3,
-         |    CAST(count(*) AS BIGINT) AS c3 FROM t3 GROUP BY 1, 2, 3),
-         |st AS (SELECT CAST(sum(c1) AS BIGINT) AS ntok,
-         |    CAST(count(*) AS BIGINT) AS vsz FROM c1),
-         |sd AS (SELECT d.doc_id, $toksSql AS toks FROM documents d, tr
-         |  WHERE d.source <> tr.source),
-         |dt AS (SELECT doc_id, unnest(list_transform(range(len(toks) - 2),
-         |    i -> [toks[i + 1], toks[i + 2], toks[i + 3]])) AS t
-         |  FROM sd WHERE len(toks) >= 3),
-         |tf AS (SELECT doc_id, t[1] AS w1, t[2] AS w2, t[3] AS w3,
-         |    CAST(count(*) AS BIGINT) AS tf3 FROM dt GROUP BY 1, 2, 3, 4),
-         |j AS (SELECT tf.doc_id, tf.tf3, c3.c3, p.c2 AS c2p,
-         |    sx.c2 AS c2s, u2.c1 AS c1w2, u3.c1 AS c1w3, st.ntok, st.vsz
-         |  FROM tf
-         |  LEFT JOIN c3 ON c3.w1 = tf.w1 AND c3.w2 = tf.w2
-         |    AND c3.w3 = tf.w3
-         |  LEFT JOIN c2 p ON p.wa = tf.w1 AND p.wb = tf.w2
-         |  LEFT JOIN c2 sx ON sx.wa = tf.w2 AND sx.wb = tf.w3
-         |  LEFT JOIN c1 u2 ON u2.w = tf.w2
-         |  LEFT JOIN c1 u3 ON u3.w = tf.w3
-         |  CROSS JOIN st),
-         |sc AS (SELECT doc_id, tf3,
-         |    CASE WHEN c3 IS NULL THEN tf3 ELSE 0 END AS bon,
-         |    CAST(tf3 AS DOUBLE) * round(ln(
-         |      CASE WHEN c3 IS NOT NULL
-         |        THEN CAST(c3 AS DOUBLE) / CAST(c2p AS DOUBLE)
-         |      WHEN c2s IS NOT NULL
-         |        THEN CAST(0.4 AS DOUBLE) * CAST(c2s AS DOUBLE)
-         |          / CAST(c1w2 AS DOUBLE)
-         |      ELSE CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
-         |        * (CAST(coalesce(c1w3, 0) AS DOUBLE) + 1.0)
-         |        / (CAST(ntok AS DOUBLE) + CAST(vsz AS DOUBLE)) END), 9)
-         |      AS contrib
-         |  FROM j),
-         |g AS (SELECT doc_id, CAST(sum(tf3) AS BIGINT) AS n_trigrams,
-         |    CAST(sum(bon) AS BIGINT) AS bo_n,
-         |    list_sort(list(contrib)) AS cs
-         |  FROM sc GROUP BY doc_id)
-         |SELECT doc_id, n_trigrams,
-         |  round(CAST(bo_n AS DOUBLE) / CAST(n_trigrams AS DOUBLE), 6)
-         |    AS bo_rate,
-         |  round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
-         |    (a, x) -> a + x) / CAST(n_trigrams AS DOUBLE), 6)
-         |    AS avg_nll3
-         |FROM g""".stripMargin,
-    "x1_token_stats" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks, text FROM documents)
-         |SELECT doc_id,
-         |  len(toks) AS n_tokens,
-         |  len(list_distinct(toks)) AS n_distinct,
-         |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]'))
-         |    AS n_subtokens,
-         |  round(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks, x -> CAST(length(x) AS BIGINT))),
-         |      (a, b) -> a + b) / CAST(len(toks) AS DOUBLE), 6)
-         |    AS avg_token_len
-         |FROM t""".stripMargin,
-    "x2_lang_id" -> x2OracleSql,
-    // x34: x2's oracle embedded as a derived table (one source of
-    // truth for the predictor), same cell agg + per-truth recall.
-    "x34_langid_confusion" -> {
-      s"""SELECT truth_lang, pred_lang, n,
-         |  round(CAST(n AS DOUBLE) / CAST(sum(n)
-         |    OVER (PARTITION BY truth_lang) AS DOUBLE), 6) AS recall
-         |FROM (SELECT d.lang AS truth_lang, p.pred_lang,
-         |    count(*) AS n
-         |  FROM documents d
-         |  JOIN ($x2OracleSql) p ON d.doc_id = p.doc_id
-         |  GROUP BY 1, 2)""".stripMargin
-    },
-    "x3_quality_score" ->
-      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents)
-         |SELECT doc_id,
-         |  round(CASE WHEN length(text) = 0 THEN 0.0
-         |    ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
-         |      / CAST(length(text) AS DOUBLE) END, 6) AS punct_ratio,
-         |  round(CASE WHEN len(toks) = 0 THEN 0.0
-         |    ELSE len(list_filter(toks, x -> list_contains($enList, x)))
-         |      / CAST(len(toks) AS DOUBLE) END, 6) AS stop_ratio,
-         |  round(least(1.0, len(toks) / 100.0) *
-         |    (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE length(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
-         |        / CAST(length(text) AS DOUBLE) END), 6) AS quality
-         |FROM t""".stripMargin,
-    "x4_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(text, ''),
-        |      c -> CAST(ascii(c) AS BIGINT))),
-        |    (a, b) -> (a * 31 + b) % 1000000007) AS roll_fp,
-        |  CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT) AS md5_fp
-        |FROM documents""".stripMargin,
-    "x5_vocab_topk" ->
-      s"""WITH t AS (SELECT unnest($toksSql) AS token FROM documents)
-         |SELECT token, count(*) AS cnt FROM t
-         |GROUP BY token ORDER BY cnt DESC, token LIMIT 50""".stripMargin,
-    "x16_cooccur_topk" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dtf
-         |           FROM documents),
-         |tc AS (SELECT doc_id, dtf,
-         |       list_slice(list_sort(dtf), 1, $MaxCooccurTokens) AS dt
-         |       FROM t),
-         |e1 AS (SELECT dt, unnest(dt) AS tok_a FROM tc),
-         |e2 AS (SELECT tok_a, unnest(dt) AS tok_b FROM e1),
-         |p AS (SELECT tok_a, tok_b, count(*) AS pair_df FROM e2
-         |      WHERE tok_a < tok_b GROUP BY 1, 2),
-         |top AS (SELECT * FROM p
-         |        ORDER BY pair_df DESC, tok_a, tok_b LIMIT 20),
-         |uni AS (SELECT tok, count(*) AS df
-         |        FROM (SELECT unnest(dtf) AS tok FROM tc) GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT tok_a, tok_b, pair_df,
-         |  round(n_docs * pair_df / CAST(a.df * b.df AS DOUBLE), 6)
-         |    AS lift
-         |FROM top JOIN uni a ON a.tok = top.tok_a
-         |         JOIN uni b ON b.tok = top.tok_b
-         |CROSS JOIN n""".stripMargin,
-    "x7_repetition" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |c AS (SELECT doc_id,
-         |  greatest(len(toks) - 2, 0) AS n_shingles,
-         |  CAST(len(list_distinct(list_transform(range(len(toks) - 2),
-         |    i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))))
-         |    AS BIGINT) AS n_distinct
-         |  FROM t)
-         |SELECT doc_id, n_shingles, n_distinct,
-         |  round(CASE WHEN n_shingles > 0
-         |    THEN (n_shingles - n_distinct) / CAST(n_shingles AS DOUBLE)
-         |    ELSE 0.0 END, 6) AS dup_ratio
-         |FROM c""".stripMargin,
-    "x6_hash_split" ->
-      """WITH b AS (SELECT doc_id,
-        |  CAST(concat('0x', substr(md5(concat('split:',
-        |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 AS bucket
-        |  FROM documents)
-        |SELECT doc_id, bucket,
-        |  CASE WHEN bucket < 80 THEN 'train'
-        |       WHEN bucket < 90 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM b""".stripMargin,
-    "x9_hash_sample" ->
-      """WITH b AS (SELECT doc_id,
-        |  CAST(concat('0x', substr(md5(concat('samp1:',
-        |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 10000
-        |    AS bucket
-        |  FROM documents)
-        |SELECT doc_id, bucket FROM b WHERE bucket < 1000""".stripMargin,
-    "x10_stratified_sample" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dt
-         |           FROM documents),
-         |sc AS (SELECT doc_id,
-         |  CAST(len(list_intersect(dt, $enList)) AS BIGINT) AS s_en,
-         |  CAST(len(list_intersect(dt, $deList)) AS BIGINT) AS s_de,
-         |  CAST(len(list_intersect(dt, $esList)) AS BIGINT) AS s_es,
-         |  CAST(len(list_intersect(dt, $frList)) AS BIGINT) AS s_fr,
-         |  CAST(len(list_intersect(dt, $zhList)) AS BIGINT) AS s_zh
-         |  FROM t),
-         |l AS (SELECT doc_id,
-         |  CASE
-         |    WHEN s_en > 0 AND s_en = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'en'
-         |    WHEN s_de > 0 AND s_de = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'de'
-         |    WHEN s_es > 0 AND s_es = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'es'
-         |    WHEN s_fr > 0 AND s_fr = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'fr'
-         |    WHEN s_zh > 0 AND s_zh = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'zh'
-         |    ELSE 'und' END AS pred_lang
-         |  FROM sc),
-         |h AS (SELECT doc_id, pred_lang,
-         |  CAST(concat('0x', substr(md5(concat('strat:',
-         |    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS h
-         |  FROM l),
-         |r AS (SELECT pred_lang, doc_id, h,
-         |  row_number() OVER (PARTITION BY pred_lang ORDER BY h, doc_id)
-         |    AS rank
-         |  FROM h)
-         |SELECT pred_lang, doc_id, h, rank FROM r WHERE rank <= 3"""
-        .stripMargin,
-    "x17_chunk_overlap" ->
-      s"""WITH $chunkCte
-         |SELECT doc_id, chunk_idx, start, n_chunk_tokens, chunk_hash
-         |FROM c""".stripMargin,
-    "x18_boilerplate" ->
-      s"""WITH $chunkCte,
-         |g AS (SELECT chunk_hash,
-         |      CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |      count(*) AS n_occurrences
-         |      FROM c GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
-         |SELECT chunk_hash, n_docs, n_occurrences FROM g
-         |ORDER BY n_docs DESC, n_occurrences DESC, chunk_hash
-         |LIMIT 20""".stripMargin,
-    "x11_pack_sequences" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |  CASE WHEN CAST(concat('0x', substr(md5(concat('split:',
-         |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 < 80
-         |    THEN 'train'
-         |    WHEN CAST(concat('0x', substr(md5(concat('split:',
-         |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 < 90
-         |    THEN 'val' ELSE 'test' END AS split
-         |  FROM documents),
-         |c AS (SELECT split, doc_id, n_tokens,
-         |  CAST(sum(n_tokens) OVER (PARTITION BY split ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS cum
-         |  FROM t)
-         |SELECT split, doc_id, n_tokens, (cum - n_tokens) // 2048 AS bin
-         |FROM c""".stripMargin,
-    "x8_tfidf_topk" ->
-      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
-         |      FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM documents),
-         |sc AS (SELECT doc_id, term, tf,
-         |      round(tf * (CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-         |      FROM tf JOIN df USING (term) CROSS JOIN n),
-         |r AS (SELECT doc_id, term, tf, tfidf,
-         |      row_number() OVER (PARTITION BY doc_id
-         |        ORDER BY tfidf DESC, term) AS rank
-         |      FROM sc)
-         |SELECT doc_id, term, tf, tfidf, rank FROM r WHERE rank <= 3"""
-        .stripMargin,
-    // sorted-fold entropy: both engines sum identical doubles in
-    // identical order; + 0.0 normalizes -0.0 (single-distinct-token
-    // docs produce exactly 0)
-    // x32: same first-occurrence histogram + 10-row cumulative spine;
-    // integer // decile math.
-    "x32_heaps_vocab" ->
-      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
-         |      FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t
-         |      GROUP BY 1, 2),
-         |b AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
-         |      FROM documents),
-         |v AS (SELECT ((fd - lo) * 10) // (hi - lo + 1) AS decile,
-         |      count(*) AS vv
-         |      FROM (SELECT term, min(doc_id) AS fd FROM tf GROUP BY 1),
-         |        b
-         |      GROUP BY 1),
-         |tk AS (SELECT ((doc_id - lo) * 10) // (hi - lo + 1) AS decile,
-         |      CAST(sum(nt) AS BIGINT) AS tt
-         |      FROM (SELECT doc_id, sum(tf) AS nt FROM tf GROUP BY 1),
-         |        b
-         |      GROUP BY 1),
-         |sp AS (SELECT unnest(range(10)) AS decile)
-         |SELECT CAST(sp.decile AS BIGINT) AS decile,
-         |  CAST(sum(coalesce(tk.tt, 0)) OVER (ORDER BY sp.decile
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS BIGINT) AS n_tokens_cum,
-         |  CAST(sum(coalesce(v.vv, 0)) OVER (ORDER BY sp.decile
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS BIGINT) AS vocab_cum
-         |FROM sp LEFT JOIN v ON sp.decile = v.decile
-         |LEFT JOIN tk ON sp.decile = tk.decile""".stripMargin,
-    // x33: identical 9dp-rounded lns, identical sorted-array fold
-    // (LIST accumulator — the ts8 list_reduce discipline), same
-    // closed-form slope/intercept.
-    "x33_zipf_slope" ->
-      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
-         |      FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t
-         |      GROUP BY 1, 2),
-         |fr AS (SELECT term, CAST(sum(tf) AS BIGINT) AS f FROM tf
-         |      GROUP BY 1),
-         |top AS (SELECT f, row_number() OVER (ORDER BY f DESC, term)
-         |        AS r
-         |      FROM fr ORDER BY f DESC, term LIMIT 100),
-         |xy AS (SELECT round(ln(CAST(r AS DOUBLE)), 9) AS x,
-         |      round(ln(CAST(f AS DOUBLE)), 9) AS y FROM top),
-         |ps AS (SELECT list_sort(list(struct_pack(x := x, y := y)))
-         |        AS ps
-         |      FROM xy),
-         |agg AS (SELECT CAST(len(ps) AS BIGINT) AS n_terms,
-         |      CAST(len(ps) AS DOUBLE) AS n,
-         |      list_reduce(list_prepend([0.0, 0.0, 0.0, 0.0],
-         |        list_transform(ps, p -> [p.x, p.y, p.x * p.x,
-         |          p.x * p.y])),
-         |        (a, b) -> [a[1] + b[1], a[2] + b[2], a[3] + b[3],
-         |          a[4] + b[4]]) AS s
-         |      FROM ps)
-         |SELECT n_terms,
-         |  round((n * s[4] - s[1] * s[2])
-         |    / (n * s[3] - s[1] * s[1]), 6) AS slope,
-         |  round((s[2] - ((n * s[4] - s[1] * s[2])
-         |    / (n * s[3] - s[1] * s[1])) * s[1]) / n, 6) AS intercept
-         |FROM agg""".stripMargin,
-    "x20_entropy" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |e AS (SELECT doc_id, unnest(toks) AS tk FROM t),
-         |c AS (SELECT doc_id, tk, count(*) AS c FROM e GROUP BY 1, 2),
-         |g AS (SELECT doc_id, list_sort(list(CAST(c AS DOUBLE))) AS cs,
-         |      sum(c) AS n FROM c GROUP BY 1)
-         |SELECT doc_id, CAST(n AS BIGINT) AS n,
-         |  CAST(len(cs) AS BIGINT) AS n_distinct,
-         |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
-         |    (acc, x) -> acc - (x / n) * log2(x / n)) + 0.0, 6)
-         |    AS token_entropy
-         |FROM g""".stripMargin,
-    "x19_inverted_index" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct($toksSql) AS dt
-         |      FROM documents),
-         |e AS (SELECT doc_id, unnest(dt) AS token FROM t),
-         |g AS (SELECT token, count(*) AS df,
-         |    list_slice(list_sort(list(doc_id)), 1, $MaxPostings)
-         |      AS postings
-         |  FROM e GROUP BY token HAVING count(*) >= $MinDf)
-         |SELECT token, df, unnest(postings) AS doc_id FROM g"""
-        .stripMargin,
-    // x21: the x20 sorted-fold discipline on the per-doc log sum —
-    // both engines sort the identical contribution doubles and fold
-    // left, so the rounded mean NLL is order-independent.
-    "x21_unigram_lm" ->
-      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term
-         |      FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-         |cf AS (SELECT term, sum(tf) AS cf FROM tf GROUP BY 1),
-         |tot AS (SELECT sum(cf) AS tot FROM cf),
-         |g AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-         |      list_sort(list(CAST(tf AS DOUBLE) *
-         |        ln(CAST(cf AS DOUBLE) / CAST(tot AS DOUBLE)))) AS cs
-         |      FROM tf JOIN cf USING (term) CROSS JOIN tot
-         |      GROUP BY doc_id)
-         |SELECT doc_id, n_tokens,
-         |  round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
-         |    (acc, x) -> acc + x) / CAST(n_tokens AS DOUBLE), 6)
-         |    AS avg_nll
-         |FROM g""".stripMargin,
-    // x23: the x21 oracle shape at bigram granularity; bigrams from an
-    // indexed zip of the token list with its own tail, prefix counts by
-    // split_part (tokens cannot contain spaces — the tokenizer splits
-    // on them), sorted-fold per-doc log sums.
-    "x23_bigram_lm" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |b AS (SELECT doc_id, unnest(list_transform(range(len(toks)-1),
-         |        i -> toks[i+1] || ' ' || toks[i+2])) AS bg
-         |      FROM t WHERE len(toks) >= 2),
-         |tf2 AS (SELECT doc_id, bg, count(*) AS tf2 FROM b
-         |        GROUP BY 1, 2),
-         |c2 AS (SELECT bg, sum(tf2) AS c2 FROM tf2 GROUP BY 1),
-         |c1 AS (SELECT split_part(bg, ' ', 1) AS prev, sum(c2) AS c1
-         |       FROM c2 GROUP BY 1),
-         |g AS (SELECT doc_id, CAST(sum(tf2) AS BIGINT) AS n_bigrams,
-         |      list_sort(list(CAST(tf2 AS DOUBLE) *
-         |        ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)))) AS cs
-         |      FROM tf2 JOIN c2 USING (bg)
-         |      JOIN c1 ON split_part(bg, ' ', 1) = c1.prev
-         |      GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams,
-         |  round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs),
-         |    (acc, x) -> acc + x) / CAST(n_bigrams AS DOUBLE), 6)
-         |    AS avg_nll2
-         |FROM g""".stripMargin,
-    // x30: same inverted-index pair expansion, same exact ratio.
-    "x30_source_overlap" ->
-      s"""WITH st AS (SELECT DISTINCT source, t AS token
-         |  FROM (SELECT source,
-         |    unnest(list_distinct($toksSql)) AS t FROM documents)),
-         |sz AS (SELECT source, count(*) AS nv FROM st GROUP BY 1),
-         |i AS (SELECT a.source AS src_a, b.source AS src_b,
-         |    count(*) AS inter
-         |  FROM st a JOIN st b
-         |    ON a.token = b.token AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT i.src_a, i.src_b, CAST(i.inter AS BIGINT) AS inter,
-         |  round(i.inter / CAST(sa.nv + sb.nv - i.inter AS DOUBLE), 6)
-         |    AS vocab_jaccard
-         |FROM i JOIN sz sa ON sa.source = i.src_a
-         |  JOIN sz sb ON sb.source = i.src_b
-         |ORDER BY vocab_jaccard DESC, src_a, src_b LIMIT 20"""
-        .stripMargin,
-    // x29: same global keeper window, per-source rollup.
-    "x29_dedup_savings" ->
-      s"""WITH t AS (SELECT doc_id, source,
-         |    CAST(len($toksSql) AS BIGINT) AS nt,
-         |    md5(array_to_string(list_slice($toksSql, 1, 5), ' '))
-         |      AS dkey
-         |  FROM documents),
-         |k AS (SELECT doc_id, source, nt,
-         |    doc_id = min(doc_id) OVER (PARTITION BY dkey) AS keeper
-         |  FROM t)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN keeper THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_keepers,
-         |  CAST(sum(nt) AS BIGINT) AS tokens_total,
-         |  CAST(sum(CASE WHEN keeper THEN nt ELSE 0 END) AS BIGINT)
-         |    AS tokens_kept,
-         |  round(CAST(sum(nt) - sum(CASE WHEN keeper THEN nt
-         |      ELSE 0 END) AS DOUBLE)
-         |    / CAST(sum(nt) AS DOUBLE) * 100.0, 6) AS savings_pct
-         |FROM k GROUP BY 1""".stripMargin,
-    // x28: same integer sums, one rounded division.
-    "x28_fertility" ->
-      s"""WITH t AS (SELECT lang,
-         |    CAST(len($toksSql) AS BIGINT) AS nt,
-         |    CAST(len(regexp_extract_all(text,
-         |      '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS ns
-         |  FROM documents)
-         |SELECT lang, CAST(sum(nt) AS BIGINT) AS n_tokens,
-         |  CAST(sum(ns) AS BIGINT) AS n_subtokens,
-         |  round(CAST(sum(ns) AS DOUBLE) / CAST(sum(nt) AS DOUBLE), 6)
-         |    AS fertility
-         |FROM t GROUP BY 1""".stripMargin,
-    // x27: the x2/x3/d1/x9 formulas fused, each stage a CTE; keep
-    // compares the ROUNDED quality exactly as the Spark side does.
-    "x27_curation_pipeline" ->
-      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks
-         |           FROM documents),
-         |sc AS (SELECT doc_id,
-         |  CAST(len(list_intersect(list_distinct(toks), $enList))
-         |    AS BIGINT) AS s_en,
-         |  CAST(len(list_intersect(list_distinct(toks), $deList))
-         |    AS BIGINT) AS s_de,
-         |  CAST(len(list_intersect(list_distinct(toks), $esList))
-         |    AS BIGINT) AS s_es,
-         |  CAST(len(list_intersect(list_distinct(toks), $frList))
-         |    AS BIGINT) AS s_fr,
-         |  CAST(len(list_intersect(list_distinct(toks), $zhList))
-         |    AS BIGINT) AS s_zh
-         |  FROM t),
-         |pl AS (SELECT doc_id, CASE
-         |    WHEN s_en > 0 AND s_en = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'en'
-         |    WHEN s_de > 0 AND s_de = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'de'
-         |    WHEN s_es > 0 AND s_es = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'es'
-         |    WHEN s_fr > 0 AND s_fr = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'fr'
-         |    WHEN s_zh > 0 AND s_zh = greatest(s_en,s_de,s_es,s_fr,s_zh)
-         |      THEN 'zh'
-         |    ELSE 'und' END AS pred_lang
-         |  FROM sc),
-         |q AS (SELECT doc_id,
-         |    round(least(1.0, len(toks) / 100.0) *
-         |      (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-         |        ELSE length(regexp_replace(text, '[a-z0-9\\s]', '',
-         |          'g')) / CAST(length(text) AS DOUBLE) END), 6)
-         |      AS quality
-         |  FROM t),
-         |kp AS (SELECT doc_id,
-         |    doc_id = min(doc_id) OVER (PARTITION BY
-         |      md5(array_to_string(list_slice(toks, 1, 5), ' ')))
-         |      AS keeper
-         |  FROM t),
-         |sm AS (SELECT doc_id,
-         |    CAST(concat('0x', substr(md5(concat('samp27:',
-         |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 < 70
-         |      AS in_sample
-         |  FROM documents)
-         |SELECT pl.doc_id, pl.pred_lang, q.quality, kp.keeper,
-         |  sm.in_sample,
-         |  pl.pred_lang = 'en' AND q.quality >= 0.5 AND kp.keeper
-         |    AND sm.in_sample AS keep
-         |FROM pl JOIN q ON pl.doc_id = q.doc_id
-         |  JOIN kp ON pl.doc_id = kp.doc_id
-         |  JOIN sm ON pl.doc_id = sm.doc_id""".stripMargin,
-    // x24: BM25 with every arithmetic step in the identical operand
-    // order as the Spark expression tree (fixed left-to-right 4-term
-    // sum; ln-parity pinned by x21/x23), so the doubles are bit-equal
-    // before the 6dp rounding and the rank cannot flip.
-    "x24_bm25" -> {
-      val dfSel = BmQueryTerms.zipWithIndex.map { case (t, i) =>
-        s"""CAST(sum(CASE WHEN list_contains(toks, '$t')
-           |    THEN 1 ELSE 0 END) AS BIGINT) AS df_$i""".stripMargin
-      }.mkString(",\n")
-      val termSql = BmQueryTerms.zipWithIndex.map { case (t, i) =>
-        s"""(ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_$i AS DOUBLE)
-           |      + 0.5) / (CAST(df_$i AS DOUBLE) + 0.5))
-           |  * (CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)
-           |      * 2.2)
-           |  / (CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)
-           |      + 1.2 * (0.25 + 0.75 * CAST(len(toks) AS DOUBLE)
-           |        / (CAST(sum_dl AS DOUBLE)
-           |          / CAST(n_docs AS DOUBLE)))))""".stripMargin
-      }.mkString(" + ")
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |st AS (SELECT CAST(sum(len(toks)) AS BIGINT) AS sum_dl,
-         |  count(*) AS n_docs,
-         |$dfSel
-         |  FROM t),
-         |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-         |  round($termSql, 6) AS bm25
-         |  FROM t, st)
-         |SELECT doc_id, dl, bm25 FROM sc
-         |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin
-    },
-    // x22: selection ranks on the unrounded A-ES key (60-bit distinct
-    // hashes make ties impossible), output rounds to 6dp.
-    "x22_weighted_sample" ->
-      """WITH h AS (SELECT doc_id, n_chars,
-        |  ln((CAST(CAST(concat('0x', substr(md5(concat('wsamp:',
-        |      CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS DOUBLE)
-        |    + 0.5) / 1152921504606846976.0)
-        |    / CAST(n_chars AS DOUBLE) AS wkey
-        |  FROM documents WHERE n_chars > 0),
-        |k AS (SELECT doc_id, n_chars, wkey FROM h
-        |      ORDER BY wkey DESC, doc_id LIMIT 200)
-        |SELECT doc_id, n_chars, round(wkey, 6) AS wkey FROM k"""
-        .stripMargin
-  )
 }

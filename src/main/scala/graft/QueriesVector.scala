@@ -36,10 +36,8 @@ object QueriesVector {
     * searches). At 100 TB this is the standard "prepare once →
     * checkpoint → fan out to every index build" discipline.
     */
-  private def prep(s: SparkSession, d: String): DataFrame = {
-    val df = VectorOps.prepared(Tables.embeddings(s, d), "vec_id",
-      "embedding")
-    SessionMemo.persistOnce(df)
+  private lazy val prep = SharedFrame.persisted("vector.prep") { (s, d) =>
+    VectorOps.prepared(Tables.embeddings(s, d), "vec_id", "embedding")
   }
 
   /** d23's cell-assigned corpus (id, cid, v, n2), PERSISTED with the
@@ -54,7 +52,8 @@ object QueriesVector {
     * d23 dedups within rk=1 cells; d24's multi-probe arm admits both
     * ranks — one cached routing serves the whole curve (v19's
     * route-once discipline). */
-  private def semdedupCells(s: SparkSession, d: String): DataFrame = {
+  private lazy val semdedupCells = SharedFrame.persisted(
+      "vector.semdedup_cells", prep) { (s, d) =>
     val pts = prep(s, d).select(col("id"), col("v"))
     // K scales with the corpus (target cell ≈ 312 vectors, floor 16)
     // so the in-cell pair join stays ~quadratic-in-a-CONSTANT at any
@@ -71,9 +70,8 @@ object QueriesVector {
     val routed = VectorOps.assignTopKEuclid(pts,
       VectorOps.centroidMeans(
         VectorOps.assignNearestEuclid(pts, cent0)), 2)
-    val df = routed.select(col("id"), col("cid"), col("rk"), col("v"),
+    routed.select(col("id"), col("cid"), col("rk"), col("v"),
       VectorOps.norm2(col("v")).as("n2"))
-    SessionMemo.persistOnce(df)
   }
 
   /** d23/d24's cell-local near-dup pairs at probe depth `np` (shared
@@ -121,15 +119,15 @@ object QueriesVector {
   /** v19's routed cosine pairs, PERSISTED with the prep discipline:
     * all three nprobe arms are rk-filters over this ONE cosine join,
     * so uncached it would re-execute once per arm. */
-  private def v19Pairs(s: SparkSession, d: String): DataFrame = {
-    val df = v19CorpusCells(s, d)
+  private lazy val v19Pairs = SharedFrame.persisted(
+      "vector.v19_pairs", prep) { (s, d) =>
+    v19CorpusCells(s, d)
       .join(broadcast(v19Routed(s, d)), Seq("centroid_id"))
       .filter(col("id_q") =!= col("id_n"))
       .withColumn("cos", round(VectorOps.cosineFromParts(
         VectorOps.dot(col("v_q"), col("v_n")),
         col("n2_q"), col("n2_n")), 6))
       .select(col("id_q"), col("id_n"), col("rk"), col("cos"))
-    SessionMemo.persistOnce(df)
   }
 
   /** v14/v21's PQ-encoded corpus (id_n, codes), PERSISTED (OPT r19,
@@ -140,32 +138,31 @@ object QueriesVector {
     * build once (Bench times it on its own `[bench-cache]` line), the
     * same discipline as `vector.semdedup_cells`.
     */
-  private def pqCodes(s: SparkSession, d: String): DataFrame = {
-    val df = prep(s, d).select(col("id").as("id_n"),
+  private lazy val pqCodes = SharedFrame.persisted(
+      "vector.pq_codes", prep) { (s, d) =>
+    prep(s, d).select(col("id").as("id_n"),
       VectorOps.pqEncode(
         VectorOps.pqDistances(col("v"), PqSubs, PqCodes, Dim))
         .as("codes"))
-    SessionMemo.persistOnce(df)
   }
 
-  /** This family's shared persisted caches (the QueriesDedup.sharedCaches
-    * contract: name → builder in dependency order, pre-built and timed
-    * separately by Bench so per-query times are net of cache).
-    */
-  private[graft] def sharedCaches
-      : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "vector.prep" -> (prep _),
-    "vector.semdedup_cells" -> (semdedupCells _),
-    "vector.v19_pairs" -> (v19Pairs _),
-    "vector.pq_codes" -> (pqCodes _))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[Query] = Seq(
     // Exact top-10 neighbors for the first 5 vectors: corpus scanned once,
     // probes broadcast, per-probe top-k via window.
-    "v1_cosine_topk" -> ((s, d) => {
+    Query("v1_cosine_topk", (s, d) => {
       val p = prep(s, d)
       VectorOps.bruteForceTopK(p, p.filter(col("id") < 5), 10)
-    }),
+    },
+      s"""WITH $preparedSql,
+         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5)
+         |SELECT id_q, id_n, cos, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY cos DESC, id_n) AS rank FROM p)
+         |WHERE rank <= 10""".stripMargin,
+      reads = Seq(prep)),
 
     // Product-quantization ADC search — the third leg of the
     // compression story (int8 = v9/v11 keeps 64 bytes/vector; PQ keeps
@@ -177,44 +174,121 @@ object QueriesVector {
     // actually reads. Codebook is md5-seeded (deterministic,
     // oracle-reproducible); production would train it with v7's
     // per-subspace k-means on the identical encode/ADC shape.
-    "v14_pq_adc" -> ((s, d) => {
+    Query("v14_pq_adc", (s, d) => {
       val p = prep(s, d)
       VectorOps.pqTopKFromCodes(pqCodes(s, d), p.filter(col("id") < 5),
         PqSubs, PqCodes, Dim, 5)
-    }),
+    },
+      // v14: codebook rebuilt from the md5 formula as a 128-entry flat
+      // list (index sv*16+cv+1); `dls` is the shared encode/ADC distance
+      // kernel — identical left folds to the Spark side, so code words
+      // and ADC sums are bit-equal before the 6dp rounding
+      s"""WITH $pqChainSql
+         |SELECT id_q, id_n, round(ad2, 6) AS ad2, rank FROM r
+         |WHERE rank <= 5""".stripMargin,
+      reads = Seq(pqCodes, prep)),
 
     // ANN: probes meet corpus vectors sharing ANY of 6 band buckets
     // (2 sign bits each, OR-amplified — the same banding as v5), exact
     // top-5 over the deduped candidates. v8 measures this operating
     // point's recall against the exact v1 answer.
-    "v2_ann_lsh" -> ((s, d) => {
+    Query("v2_ann_lsh", (s, d) => {
       val p = prep(s, d)
       VectorOps.lshTopK(p, p.filter(col("id") < 5), Bands, RowsPerBand,
         Dim, 5)
-    }),
+    },
+      s"""WITH $preparedSql,
+         |cb AS ($bandSelects),
+         |p AS (SELECT DISTINCT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM cb a JOIN cb b ON a.band = b.band
+         |        AND a.bucket = b.bucket AND b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5)
+         |SELECT id_q, id_n, cos, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY cos DESC, id_n) AS rank FROM p)
+         |WHERE rank <= 5""".stripMargin,
+      reads = Seq(prep)),
 
     // IVF-style routing: nearest of 10 fixed centroids per vector.
-    "v3_centroid_assign" -> ((s, d) => {
+    Query("v3_centroid_assign", (s, d) => {
       val p = prep(s, d)
       VectorOps.assignToCentroids(p, p.filter(col("id") < 10))
         .withColumnRenamed("id", "vec_id")
-    }),
+    },
+      s"""WITH $preparedSql,
+         |p AS (SELECT a.vec_id, b.vec_id AS centroid_id,
+         |      $dotSql / sqrt(a.n2 * b.n2) AS cos
+         |      FROM n a JOIN n b ON b.vec_id < 10)
+         |SELECT vec_id, centroid_id, round(cos, 6) AS cos FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY vec_id
+         |    ORDER BY cos DESC, centroid_id) AS rk FROM p)
+         |WHERE rk = 1""".stripMargin,
+      reads = Seq(prep)),
 
     // Full IVF ANN search: corpus assigned to 10 cells, probes routed to
     // their 3 nearest cells, exact top-5 among the routed cells only.
-    "v4_ivf_topk" -> ((s, d) => {
+    Query("v4_ivf_topk", (s, d) => {
       val p = prep(s, d)
       VectorOps.ivfTopK(p, p.filter(col("id") < 5),
         p.filter(col("id") < 10), nProbe = 3, k = 5)
-    }),
+    },
+      s"""WITH $preparedSql,
+         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
+         |      WHERE vec_id < 10),
+         |ca AS (SELECT id_n, centroid_id FROM (
+         |      SELECT a.vec_id AS id_n, b.centroid_id,
+         |        row_number() OVER (PARTITION BY a.vec_id
+         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |            b.centroid_id) AS rk
+         |      FROM n a JOIN cent b ON true)
+         |      WHERE rk = 1),
+         |pr AS (SELECT id_q, centroid_id FROM (
+         |      SELECT a.vec_id AS id_q, b.centroid_id,
+         |        row_number() OVER (PARTITION BY a.vec_id
+         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |            b.centroid_id) AS rk
+         |      FROM n a JOIN cent b ON true
+         |      WHERE a.vec_id < 5)
+         |      WHERE rk <= 3),
+         |pairs AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM pr
+         |      JOIN n a ON a.vec_id = pr.id_q
+         |      JOIN ca ON ca.centroid_id = pr.centroid_id
+         |      JOIN n b ON b.vec_id = ca.id_n
+         |      WHERE b.vec_id <> a.vec_id)
+         |SELECT id_q, id_n, cos, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY cos DESC, id_n) AS rank FROM pairs)
+         |WHERE rank <= 5""".stripMargin,
+      reads = Seq(prep)),
 
     // Embedding near-dup at scale: banded random-projection LSH (6 bands
     // x 2 sign bits, OR-amplified) + exact cosine verify — the scale
     // path of brute d6_embedding_neardup.
-    "v5_neardup_lsh" -> ((s, d) => {
+    Query("v5_neardup_lsh", (s, d) => {
       VectorOps.lshNearDupPairs(prep(s, d), bands = Bands,
         rowsPerBand = RowsPerBand, dim = Dim, threshold = 0.45)
-    }),
+    },
+      {
+      s"""WITH $preparedSql,
+         |cb AS ($bandSelects),
+         |rare AS (SELECT band, bucket FROM cb GROUP BY band, bucket
+         |      HAVING count(*) <= 10000),
+         |cf AS (SELECT cb.* FROM cb JOIN rare USING (band, bucket)),
+         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+         |      FROM cf a JOIN cf b ON a.band = b.band
+         |        AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
+         |SELECT id_a, id_b,
+         |  round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |FROM cand
+         |JOIN n a ON a.vec_id = cand.id_a
+         |JOIN n b ON b.vec_id = cand.id_b
+         |WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.45""".stripMargin
+    }
+  ,
+      reads = Seq(prep)),
 
     // SEMANTIC decontamination — d8's held-out-leakage gate in
     // embedding space: lexical decontamination (shingle overlap)
@@ -225,7 +299,7 @@ object QueriesVector {
     // each test vector reports how many training vectors sit above
     // the similarity threshold and the worst (closest) one. Membership
     // derives from the ids by formula — no extra join.
-    "d22_semantic_decontam" -> ((s, d) => {
+    Query("d22_semantic_decontam", (s, d) => {
       def bucket(id: Column) = graft.operators.TextOps.md5Prefix60(
         concat(lit("vsplit:"), id.cast("string"))) % 100
       val pairs = VectorOps.lshNearDupPairs(prep(s, d), bands = Bands,
@@ -242,7 +316,37 @@ object QueriesVector {
         .groupBy("test_id")
         .agg(count(lit(1)).as("n_train_neighbors"),
           max(col("cos")).as("max_cos"))
-    }),
+    },
+      // d22: v5's candidate chain + the seeded split filter; membership
+      // from the same id formula.
+      {
+      def b(idExpr: String) =
+        s"""CAST(concat('0x', substr(md5(concat('vsplit:',
+           |      CAST($idExpr AS VARCHAR))), 1, 15)) AS BIGINT)
+           |      % 100""".stripMargin
+      s"""WITH $preparedSql,
+         |cb AS ($bandSelects),
+         |rare AS (SELECT band, bucket FROM cb GROUP BY band, bucket
+         |      HAVING count(*) <= 10000),
+         |cf AS (SELECT cb.* FROM cb JOIN rare USING (band, bucket)),
+         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+         |      FROM cf a JOIN cf b ON a.band = b.band
+         |        AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+         |pr AS (SELECT id_a, id_b,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos,
+         |      ${b("id_a")} AS ba,
+         |      ${b("id_b")} AS bb
+         |  FROM cand
+         |  JOIN n a ON a.vec_id = cand.id_a
+         |  JOIN n b ON b.vec_id = cand.id_b
+         |  WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.35)
+         |SELECT CASE WHEN ba >= 90 THEN id_a ELSE id_b END AS test_id,
+         |  count(*) AS n_train_neighbors, max(cos) AS max_cos
+         |FROM pr
+         |WHERE (ba >= 90 AND bb < 80) OR (bb >= 90 AND ba < 80)
+         |GROUP BY 1""".stripMargin
+    },
+      reads = Seq(prep)),
 
     // SEMANTIC dedup clusters — the embedding-space mirror of the
     // lexical d7→d15 chain, because a real training-data pipeline
@@ -253,7 +357,7 @@ object QueriesVector {
     // the min-label the components carry — no extra election pass),
     // singletons to themselves. Total keep/drop verdict, O(edges)
     // clustering, corpus never compared pairwise.
-    "d16_semantic_clusters" -> ((s, d) => {
+    Query("d16_semantic_clusters", (s, d) => {
       val pairs = VectorOps.lshNearDupPairs(prep(s, d), Bands,
         RowsPerBand, Dim, 0.45)
       val clusters = graft.operators.DedupOps
@@ -266,7 +370,39 @@ object QueriesVector {
         .select(col("vec_id"), col("canonical_id"),
           (col("vec_id") === col("canonical_id")).cast("long")
             .as("is_kept"))
-    }),
+    },
+      // v5's pair chain wrapped in d7's recursive closure; canonical =
+      // component min, singletons self-canonical
+      s"""WITH RECURSIVE $preparedSql,
+         |cb AS MATERIALIZED ($bandSelects),
+         |rare AS (SELECT band, bucket FROM cb GROUP BY band, bucket
+         |      HAVING count(*) <= 10000),
+         |cf AS MATERIALIZED (SELECT cb.* FROM cb JOIN rare USING (band, bucket)),
+         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+         |      FROM cf a JOIN cf b ON a.band = b.band
+         |        AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+         |pairs AS MATERIALIZED (SELECT id_a, id_b FROM cand
+         |      JOIN n a ON a.vec_id = cand.id_a
+         |      JOIN n b ON b.vec_id = cand.id_b
+         |      WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.45),
+         |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
+         |          UNION SELECT id_b, id_a FROM pairs),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM edges
+         |  UNION
+         |  SELECT r.src, e2.dst FROM reach r
+         |    JOIN edges e2 ON r.dst = e2.src),
+         |comp AS MATERIALIZED (SELECT src AS vec_id,
+         |      least(src, min(dst)) AS canonical_id
+         |      FROM reach GROUP BY src),
+         |u AS (SELECT vec_id, canonical_id FROM comp
+         |      UNION ALL
+         |      SELECT vec_id, vec_id FROM n
+         |      WHERE vec_id NOT IN (SELECT vec_id FROM comp))
+         |SELECT vec_id, canonical_id,
+         |  CAST(vec_id = canonical_id AS BIGINT) AS is_kept
+         |FROM u""".stripMargin,
+      reads = Seq(prep)),
 
     // Hybrid (filtered) retrieval: top-10 neighbors among ENGLISH
     // documents only (embeddings joined to documents on vec_id =
@@ -275,14 +411,26 @@ object QueriesVector {
     // the filter is selective. At scale the filter rides the same scan
     // (or a semi-join against the metadata table, as here); the search
     // itself is unchanged.
-    "v6_hybrid_topk" -> ((s, d) => {
+    Query("v6_hybrid_topk", (s, d) => {
       val p = prep(s, d)
       val en = Tables.documents(s, d).filter(col("lang") === "en")
         .select(col("doc_id"))
       val corpus = p.join(en, p("id") === en("doc_id"))
         .select(p("id"), p("v"), p("n2"))
       VectorOps.bruteForceTopK(corpus, p.filter(col("id") < 5), 10)
-    }),
+    },
+      s"""WITH $preparedSql,
+         |e AS (SELECT n.* FROM n JOIN documents
+         |      ON n.vec_id = documents.doc_id WHERE lang = 'en'),
+         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM n a JOIN e b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5)
+         |SELECT id_q, id_n, cos, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY cos DESC, id_n) AS rank FROM p)
+         |WHERE rank <= 10""".stripMargin,
+      reads = Seq(prep)),
 
     // ANN recall gate: for each probe, how many of the EXACT top-10
     // neighbors (v1, the brute-force baseline) each approximate
@@ -306,8 +454,8 @@ object QueriesVector {
     // slots; a probe with no relevant neighbor scores 0 (guarded 0/0).
     // Shape: v1's search + two broadcast label joins + one per-probe
     // agg over ≤ k rows.
-    "v15_ndcg" -> ((s, d) => {
-      val topk = queries("v1_cosine_topk")(s, d)
+    Query("v15_ndcg", (s, d) => {
+      val topk = SparkEntry.queries("v1_cosine_topk")(s, d)
         .select("id_q", "id_n", "rank")
       val lab = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"))
@@ -335,7 +483,43 @@ object QueriesVector {
         round(dcg, 6).as("dcg"), round(idcg, 6).as("idcg"),
         round(when(idcg > 0, dcg / idcg).otherwise(lit(0.0)), 6)
           .as("ndcg"))
-    }),
+    },
+      // v15: v1's chain + label joins; DCG/IDCG as the identical
+      // rank-ascending folds with log2 = ln-ratio.
+      s"""WITH $preparedSql,
+         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5),
+         |tk AS (SELECT id_q, id_n, rank FROM (
+         |      SELECT *, row_number() OVER (PARTITION BY id_q
+         |        ORDER BY cos DESC, id_n) AS rank FROM p)
+         |      WHERE rank <= 10),
+         |rl AS (SELECT tk.id_q, tk.rank,
+         |      CASE WHEN lq.label = ln_.label THEN 1 ELSE 0 END AS rel
+         |      FROM tk JOIN embeddings lq ON tk.id_q = lq.vec_id
+         |        JOIN embeddings ln_ ON tk.id_n = ln_.vec_id),
+         |g AS (SELECT id_q, CAST(sum(rel) AS BIGINT) AS n_rel,
+         |      list(CAST(rel AS DOUBLE)
+         |          / (ln(CAST(rank AS DOUBLE) + 1.0) / ln(2.0))
+         |        ORDER BY rank) AS terms
+         |      FROM rl GROUP BY id_q),
+         |f AS (SELECT id_q, n_rel,
+         |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE), terms),
+         |        (a, x) -> a + x) AS dcg,
+         |      CASE WHEN n_rel > 0 THEN
+         |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |          list_transform(range(n_rel), i -> 1.0
+         |            / (ln(CAST(i + 1 AS DOUBLE) + 1.0) / ln(2.0)))),
+         |          (a, x) -> a + x)
+         |      ELSE 0.0 END AS idcg
+         |      FROM g)
+         |SELECT id_q, n_rel, round(dcg, 6) AS dcg,
+         |  round(idcg, 6) AS idcg,
+         |  round(CASE WHEN idcg > 0 THEN dcg / idcg ELSE 0.0 END, 6)
+         |    AS ndcg
+         |FROM f""".stripMargin,
+      reads = Seq(prep)),
 
     // Hard-negative mining — the contrastive-training data op: for
     // every probe, the best-ranked SAME-label neighbor (the positive)
@@ -345,10 +529,10 @@ object QueriesVector {
     // top-10 with two broadcast label joins; argmins via min(struct)
     // on the unique rank so selection is deterministic; struct fields
     // projected to scalars (the driver's hash compares scalars only).
-    "v18_hard_negatives" -> ((s, d) => {
+    Query("v18_hard_negatives", (s, d) => {
       val lab = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"))
-      val r = queries("v1_cosine_topk")(s, d)
+      val r = SparkEntry.queries("v1_cosine_topk")(s, d)
         .select("id_q", "id_n", "rank")
         .join(broadcast(lab.select(col("vec_id").as("id_q"),
           col("label").as("label_q"))), Seq("id_q"))
@@ -361,7 +545,28 @@ object QueriesVector {
         .select(col("id_q"),
           col("p.id_n").as("pos_id"), col("p.rank").as("pos_rank"),
           col("n.id_n").as("neg_id"), col("n.rank").as("neg_rank"))
-    }),
+    },
+      // v18: v1's chain + label joins; arg_min on the unique rank.
+      s"""WITH $preparedSql,
+         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5),
+         |tk AS (SELECT id_q, id_n, rank FROM (
+         |      SELECT *, row_number() OVER (PARTITION BY id_q
+         |        ORDER BY cos DESC, id_n) AS rank FROM p)
+         |      WHERE rank <= 10),
+         |rl AS (SELECT tk.id_q, tk.id_n, tk.rank,
+         |      lq.label = ln_.label AS same
+         |      FROM tk JOIN embeddings lq ON tk.id_q = lq.vec_id
+         |        JOIN embeddings ln_ ON tk.id_n = ln_.vec_id)
+         |SELECT id_q,
+         |  arg_min(id_n, rank) FILTER (WHERE same) AS pos_id,
+         |  min(rank) FILTER (WHERE same) AS pos_rank,
+         |  arg_min(id_n, rank) FILTER (WHERE NOT same) AS neg_id,
+         |  min(rank) FILTER (WHERE NOT same) AS neg_rank
+         |FROM rl GROUP BY 1""".stripMargin,
+      reads = Seq(prep)),
 
     // MMR diversified re-ranking (λ=0.7) — the diversity-aware
     // selection step between retrieval and consumption (dedup-aware
@@ -377,7 +582,7 @@ object QueriesVector {
     // cosines through the literal 0.7/0.3 weights in identical
     // operand order — bit-equal, so the greedy path cannot diverge.
     // The expensive part is v1 itself; selection runs on O(probes·k²).
-    "v17_mmr_diversity" -> ((s, d) => {
+    Query("v17_mmr_diversity", (s, d) => {
       val p = prep(s, d)
       val c = VectorOps.bruteForceTopK(p, p.filter(col("id") < 5), 10)
         .select(col("id_q"), col("id_n"), col("cos"))
@@ -464,7 +669,54 @@ object QueriesVector {
         .select(col("id_q"), col("s.id_n").as("id_n"),
           col("s.sel_rank").as("sel_rank"),
           round(col("s.score"), 6).as("score"))
-    }),
+    },
+      // v17: the 5 greedy stages unrolled by the same Scala loop shape
+      // as the Spark side; p0/sims MATERIALIZED (referenced per stage).
+      {
+      val steps = (2 to 5).map { k =>
+        s"""rem$k AS (SELECT p0.* FROM p0 LEFT JOIN sel${k - 1} s
+           |    ON p0.id_q = s.id_q AND p0.id_n = s.id_n
+           |  WHERE s.id_n IS NULL),
+           |ms$k AS (SELECT r.id_q, r.id_n, r.cos, max(si.sim) AS maxsim
+           |  FROM rem$k r JOIN sims si
+           |    ON si.id_q = r.id_q AND si.id_a = r.id_n
+           |  JOIN sel${k - 1} s
+           |    ON s.id_q = si.id_q AND s.id_n = si.id_b
+           |  GROUP BY 1, 2, 3),
+           |s$k AS (SELECT id_q, id_n, $k AS sel_rank, score FROM (
+           |  SELECT id_q, id_n, 0.7 * cos - 0.3 * maxsim AS score,
+           |    row_number() OVER (PARTITION BY id_q
+           |      ORDER BY 0.7 * cos - 0.3 * maxsim DESC, id_n) AS rn
+           |  FROM ms$k) WHERE rn = 1),
+           |sel$k AS MATERIALIZED (SELECT * FROM sel${k - 1}
+           |  UNION ALL SELECT * FROM s$k)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH $preparedSql,
+         |pr AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5),
+         |p0 AS MATERIALIZED (SELECT id_q, id_n, cos FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY cos DESC, id_n) AS rank FROM pr)
+         |  WHERE rank <= 10),
+         |sims AS MATERIALIZED (SELECT ca.id_q, ca.id_n AS id_a,
+         |      cb.id_n AS id_b,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS sim
+         |  FROM p0 ca JOIN p0 cb
+         |    ON ca.id_q = cb.id_q AND ca.id_n <> cb.id_n
+         |  JOIN n a ON a.vec_id = ca.id_n
+         |  JOIN n b ON b.vec_id = cb.id_n),
+         |sel1 AS MATERIALIZED (SELECT id_q, id_n, 1 AS sel_rank,
+         |    cos AS score
+         |  FROM (SELECT p0.*, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY cos DESC, id_n) AS rn FROM p0) WHERE rn = 1),
+         |$steps
+         |SELECT id_q, id_n, CAST(sel_rank AS BIGINT) AS sel_rank,
+         |  round(score, 6) AS score
+         |FROM sel5""".stripMargin
+    },
+      reads = Seq(prep)),
 
     // Per-dimension feature standardization (z-scoring) — the ML
     // preprocessing step every embedding/tabular pipeline runs before
@@ -480,7 +732,7 @@ object QueriesVector {
     // whole normalize path checked in one scalar per vector. Shape:
     // one posexplode + one 32-row stats agg broadcast back + one
     // per-vector agg.
-    "v16_standardize" -> ((s, d) => {
+    Query("v16_standardize", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("vec_id"), col("pos"),
@@ -500,7 +752,31 @@ object QueriesVector {
         .select(col("vec_id"),
           round(aggregate(col("cells"), lit(0.0), (a, c) =>
             a + c.getField("z") * c.getField("z")), 6).as("ssq_z"))
-    }),
+    },
+      // v16: same quantized moments, same cleared-denominator z, same
+      // pos-ordered fold of z².
+      """WITH b AS (SELECT vec_id,
+        |    unnest(range(len(embedding))) AS pos, embedding
+        |  FROM embeddings),
+        |e AS (SELECT vec_id, pos,
+        |    CAST(floor(CAST(embedding[pos + 1] AS DOUBLE) * 1000)
+        |      AS BIGINT) AS xq
+        |  FROM b),
+        |st AS (SELECT pos, count(*) AS n,
+        |    CAST(sum(xq) AS BIGINT) AS sq,
+        |    CAST(sum(xq * xq) AS BIGINT) AS sqq
+        |  FROM e GROUP BY 1),
+        |sd AS (SELECT pos, n, sq, n * sqq - sq * sq AS den FROM st),
+        |z AS (SELECT vec_id, pos,
+        |    CASE WHEN den > 0 THEN CAST(n * xq - sq AS DOUBLE)
+        |      / sqrt(CAST(den AS DOUBLE)) ELSE 0.0 END AS z
+        |  FROM e JOIN sd USING (pos)),
+        |g AS (SELECT vec_id, list(z * z ORDER BY pos) AS zs
+        |  FROM z GROUP BY 1)
+        |SELECT vec_id,
+        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), zs),
+        |    (a, x) -> a + x), 6) AS ssq_z
+        |FROM g""".stripMargin),
 
     // IVF OPERATING CURVE — v8 gates one configuration; this measures
     // the knob: recall vs scan cost at nProbe = 1/2/3, the table an
@@ -511,7 +787,7 @@ object QueriesVector {
     // Probe routing ranks by UNROUNDED cosine with centroid-id
     // tiebreak (v4's convention), so every arm is deterministic on
     // both engines.
-    "v19_ivf_tradeoff" -> ((s, d) => {
+    Query("v19_ivf_tradeoff", (s, d) => {
       val p = prep(s, d)
       val probes = p.filter(col("id") < 5)
       val exact = VectorOps.bruteForceTopK(p, probes, 5)
@@ -571,7 +847,73 @@ object QueriesVector {
         .join(broadcast(scannedRows), Seq("np"))
         .select(col("np").as("nprobe"), col("n_truth"),
           col("n_hits"), col("n_scanned"))
-    }),
+    },
+      // v19: v4's IVF machinery shared across three nProbe arms (each
+      // corpus vector lives in exactly one cell, so a pair carries the
+      // rk of the probe-route to its cell and arms just filter rk);
+      // exact top-5 truth, left-join hit counts, and the routed-cell
+      // scan cost with self-pair exclusion.
+      {
+      def armSql(np: Int): String =
+        s"""SELECT CAST($np AS BIGINT) AS nprobe,
+           |  (SELECT count(*) FROM ex) AS n_truth,
+           |  (SELECT count(c.id_q) FROM ex LEFT JOIN
+           |    (SELECT id_q, id_n FROM (SELECT id_q, id_n,
+           |      row_number() OVER (PARTITION BY id_q
+           |        ORDER BY cos DESC, id_n) AS rank
+           |      FROM pairs WHERE rk <= $np) WHERE rank <= 5) c
+           |    ON ex.id_q = c.id_q AND ex.id_n = c.id_n) AS n_hits,
+           |  (SELECT CAST(sum(cz.cell_n - CASE
+           |      WHEN pr.centroid_id = sc.self_cell THEN 1 ELSE 0 END)
+           |    AS BIGINT)
+           |   FROM pr JOIN cz ON cz.centroid_id = pr.centroid_id
+           |   JOIN sc ON sc.id_q = pr.id_q
+           |   WHERE pr.rk <= $np) AS n_scanned""".stripMargin
+      s"""WITH $preparedSql,
+         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
+         |      WHERE vec_id < 10),
+         |ca AS (SELECT id_n, centroid_id FROM (
+         |      SELECT a.vec_id AS id_n, b.centroid_id,
+         |        row_number() OVER (PARTITION BY a.vec_id
+         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |            b.centroid_id) AS rk
+         |      FROM n a JOIN cent b ON true)
+         |      WHERE rk = 1),
+         |cz AS (SELECT centroid_id, count(*) AS cell_n FROM ca
+         |      GROUP BY 1),
+         |sc AS (SELECT id_n AS id_q, centroid_id AS self_cell FROM ca
+         |      WHERE id_n < 5),
+         |pr AS (SELECT id_q, centroid_id, rk FROM (
+         |      SELECT a.vec_id AS id_q, b.centroid_id,
+         |        row_number() OVER (PARTITION BY a.vec_id
+         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |            b.centroid_id) AS rk
+         |      FROM n a JOIN cent b ON true
+         |      WHERE a.vec_id < 5)
+         |      WHERE rk <= 3),
+         |pairs AS (SELECT pr.id_q, ca.id_n, pr.rk,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |      FROM pr
+         |      JOIN ca ON true
+         |        AND ca.centroid_id = pr.centroid_id
+         |      JOIN n a ON a.vec_id = pr.id_q
+         |      JOIN n b ON b.vec_id = ca.id_n
+         |      WHERE ca.id_n <> pr.id_q),
+         |ex AS (SELECT id_q, id_n FROM (
+         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
+         |        b.vec_id) AS rank
+         |  FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |  WHERE a.vec_id < 5)
+         |  WHERE rank <= 5)
+         |${armSql(1)}
+         |UNION ALL
+         |${armSql(2)}
+         |UNION ALL
+         |${armSql(3)}""".stripMargin
+    },
+      reads = Seq(prep, v19Pairs)),
 
     // FILTERED ANN (VERDICT r16 #5) — predicate + similarity search
     // combined, the most common production vector workload: "nearest
@@ -595,7 +937,7 @@ object QueriesVector {
     // the oracle recomputes the estimates from count distinct (the
     // KMV NDV is exact under its buffer at these cardinalities), the
     // routing from v4's exact CTE shapes, and every count.
-    "v22_filtered_ann" -> ((s, d) => {
+    Query("v22_filtered_ann", (s, d) => {
       import graft.storage.StatsCatalog
       val p = prep(s, d)
       val probes = p.filter(col("id") < 5)
@@ -667,7 +1009,88 @@ object QueriesVector {
       }
       arm("label=7", col("lbl") === 7L, 1L)
         .unionByName(arm("label<>7", col("lbl") =!= 7L, 9L))
-    }),
+    },
+      // v22: the catalog estimates recomputed from count distinct (the
+      // KMV NDV is exact at label cardinality), the policy/widening CASE
+      // arms from the same integer arithmetic as the Spark side, the
+      // pre-filter arm as the filtered exact top-5 (recall 1 by
+      // construction), and the post-filter arm through v4's exact
+      // routing CTEs with the label predicate applied to candidates.
+      s"""WITH $preparedSql,
+         |lbl AS (SELECT vec_id, CAST(label AS BIGINT) AS lbl
+         |  FROM embeddings),
+         |st AS (SELECT count(*) AS nr, count(DISTINCT label) AS ndv
+         |  FROM embeddings),
+         |q5 AS (SELECT * FROM n WHERE vec_id < 5),
+         |exA AS (SELECT id_q, id_n FROM (
+         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
+         |        b.vec_id) AS rank
+         |  FROM q5 a JOIN n b ON b.vec_id <> a.vec_id
+         |  JOIN lbl ON lbl.vec_id = b.vec_id AND lbl.lbl = 7) q
+         |  WHERE rank <= 5),
+         |exB AS (SELECT id_q, id_n FROM (
+         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
+         |        b.vec_id) AS rank
+         |  FROM q5 a JOIN n b ON b.vec_id <> a.vec_id
+         |  JOIN lbl ON lbl.vec_id = b.vec_id AND lbl.lbl <> 7) q
+         |  WHERE rank <= 5),
+         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
+         |  WHERE vec_id < 10),
+         |ca AS (SELECT id_n, centroid_id FROM (
+         |  SELECT a.vec_id AS id_n, b.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |        b.centroid_id) AS rk
+         |  FROM n a JOIN cent b ON true) q WHERE rk = 1),
+         |npb AS (SELECT least(3, (2 * ndv + 9 - 1) // 9) AS np FROM st),
+         |pr AS (SELECT id_q, centroid_id FROM (
+         |  SELECT a.vec_id AS id_q, b.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |        b.centroid_id) AS rk
+         |  FROM q5 a JOIN cent b ON true) q, npb WHERE q.rk <= npb.np),
+         |cand0 AS (SELECT pr.id_q, ca.id_n
+         |  FROM pr JOIN ca ON ca.centroid_id = pr.centroid_id),
+         |candF AS (SELECT c.id_q, c.id_n FROM cand0 c
+         |  JOIN lbl ON lbl.vec_id = c.id_n AND lbl.lbl <> 7
+         |  WHERE c.id_n <> c.id_q),
+         |candB AS (SELECT id_q, id_n FROM (
+         |  SELECT c.id_q, c.id_n, row_number() OVER (PARTITION BY c.id_q
+         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
+         |        c.id_n) AS rank
+         |  FROM candF c
+         |  JOIN n a ON a.vec_id = c.id_q
+         |  JOIN n b ON b.vec_id = c.id_n) q WHERE rank <= 5),
+         |hitB AS (SELECT count(*) AS n_truth, count(candB.id_q) AS n_hits
+         |  FROM exB LEFT JOIN candB
+         |    ON candB.id_q = exB.id_q AND candB.id_n = exB.id_n),
+         |rA AS (SELECT count(*) AS rows_pass FROM lbl WHERE lbl = 7),
+         |rB AS (SELECT count(*) AS rows_pass FROM lbl WHERE lbl <> 7),
+         |hA AS (SELECT count(*) AS n FROM exA)
+         |SELECT 'label=7' AS pred,
+         |  CASE WHEN (1 * st.nr // st.ndv) * 4 <= st.nr
+         |    THEN 'prefilter' ELSE 'postfilter_ivf' END AS policy,
+         |  CAST(CASE WHEN (1 * st.nr // st.ndv) * 4 <= st.nr THEN 0
+         |    ELSE least(3, 2 * st.ndv) END AS BIGINT) AS n_probe,
+         |  CAST(1 * st.nr // st.ndv AS BIGINT) AS est_rows,
+         |  rA.rows_pass, hA.n AS n_truth, hA.n AS n_hits,
+         |  round(CAST(hA.n AS DOUBLE) / hA.n, 6) AS recall
+         |FROM st, rA, hA
+         |UNION ALL
+         |SELECT 'label<>7',
+         |  CASE WHEN (9 * st.nr // st.ndv) * 4 <= st.nr
+         |    THEN 'prefilter' ELSE 'postfilter_ivf' END,
+         |  CAST(CASE WHEN (9 * st.nr // st.ndv) * 4 <= st.nr THEN 0
+         |    ELSE npb.np END AS BIGINT),
+         |  CAST(9 * st.nr // st.ndv AS BIGINT),
+         |  rB.rows_pass, hitB.n_truth, hitB.n_hits,
+         |  round(CAST(hitB.n_hits AS DOUBLE) / hitB.n_truth, 6)
+         |FROM st, npb, rB, hitB""".stripMargin,
+      reads = Seq(prep)),
 
     // Cluster-quality gate for the deterministic k-means stack — the
     // centroid-based (simplified) SILHOUETTE per cluster: a(i) =
@@ -684,7 +1107,7 @@ object QueriesVector {
     // the dq6 integer-moments discipline; a sorted-fold mean would
     // carry O(cluster) driver-visible state where this carries one
     // Long per cluster. K output rows at any corpus scale.
-    "v20_silhouette" -> ((s, d) => {
+    Query("v20_silhouette", (s, d) => {
       val x = prep(s, d).select(col("id"), col("v"))
       val cent0 = x.filter(col("id") < 5)
         .select(col("id").as("cid"), col("v").as("c"))
@@ -706,7 +1129,46 @@ object QueriesVector {
           round(col("sfx").cast("double") /
             (col("n_vecs") * lit(1000000L)).cast("double"), 6)
             .as("mean_sil"))
-    }),
+    },
+      // v20: v7's exact chain through the ranked top-2 assignment, then
+      // the fixed-point silhouette ledger (same floor(·1e6) pinning as
+      // the Spark side, same CASE shape for the zero-distance guard).
+      s"""WITH $preparedSql,
+         |c0 AS (SELECT vec_id AS cid, v AS c FROM d WHERE vec_id < 5),
+         |a0 AS MATERIALIZED (SELECT vec_id, v, cid FROM (
+         |  SELECT a.vec_id, a.v, c.cid,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY $euclid2Sql, c.cid) AS rk
+         |  FROM d a CROSS JOIN c0 c) WHERE rk = 1),
+         |e AS (SELECT cid, unnest(list_transform(range(len(v)),
+         |    i -> struct_pack(pos := i,
+         |      fx := CAST(floor(v[i+1] * 1000000.0) AS BIGINT)))) AS u
+         |  FROM a0),
+         |g AS (SELECT cid, u.pos AS pos, sum(u.fx) AS sfx, count(*) AS n
+         |  FROM e GROUP BY 1, 2),
+         |c1 AS MATERIALIZED (SELECT cid, list_transform(list_sort(list(
+         |    struct_pack(pos := pos, ci := CAST(sfx AS DOUBLE)
+         |      / CAST(n * 1000000 AS DOUBLE)))), s -> s.ci) AS c
+         |  FROM g GROUP BY cid),
+         |a2 AS (SELECT vec_id, cid, d2, rk FROM (
+         |  SELECT a.vec_id, c.cid, $euclid2Sql AS d2,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY $euclid2Sql, c.cid) AS rk
+         |  FROM d a CROSS JOIN c1 c) WHERE rk <= 2),
+         |pv AS (SELECT vec_id,
+         |    max(CASE WHEN rk = 1 THEN cid END) AS cluster,
+         |    max(CASE WHEN rk = 1 THEN d2 END) AS d2a,
+         |    max(CASE WHEN rk = 2 THEN d2 END) AS d2b
+         |  FROM a2 GROUP BY vec_id),
+         |fx AS (SELECT cluster, CAST(floor((CASE WHEN d2b > 0.0
+         |      THEN 1.0 - sqrt(d2a) / sqrt(d2b) ELSE 0.0 END)
+         |      * 1000000.0) AS BIGINT) AS fx
+         |  FROM pv)
+         |SELECT cluster, CAST(count(*) AS BIGINT) AS n_vecs,
+         |  round(CAST(sum(fx) AS DOUBLE)
+         |    / CAST(count(*) * 1000000 AS DOUBLE), 6) AS mean_sil
+         |FROM fx GROUP BY cluster""".stripMargin,
+      reads = Seq(prep)),
 
     // PQ/ADC recall gate — the v8 measured-quality discipline applied
     // to v14's 8-byte codes: exact L2 top-5 per probe (the metric ADC
@@ -717,7 +1179,7 @@ object QueriesVector {
     // Exact arm: corpus × 5 broadcast probes (corpus never shuffles),
     // ranked on the UNROUNDED fold-exact distance with id tiebreak
     // (the v7 determinism law).
-    "v21_pq_recall" -> ((s, d) => {
+    Query("v21_pq_recall", (s, d) => {
       val p = prep(s, d)
       val probes = p.filter(col("id") < 5)
         .select(col("id").as("id_q"), col("v").as("vq"))
@@ -729,7 +1191,7 @@ object QueriesVector {
       val truth = RelationalOps.topKPerGroup(pairs, Seq("id_q"),
           Seq(col("d2").asc, col("id_n").asc), 5)
         .select(col("id_q"), col("id_n"))
-      val adc = queries("v14_pq_adc")(s, d)
+      val adc = SparkEntry.queries("v14_pq_adc")(s, d)
         .select(col("id_q"), col("id_n"), lit(1L).as("hit"))
       truth.join(adc, Seq("id_q", "id_n"), "left")
         .groupBy("id_q")
@@ -737,19 +1199,99 @@ object QueriesVector {
         .select(col("id_q"), col("n_truth"), col("n_hits"),
           round(col("n_hits").cast("double") /
             col("n_truth").cast("double"), 6).as("recall"))
-    }),
+    },
+      // v21: the same PQ chain's top-5 vs exact L2 truth (ADC
+      // approximates squared L2, so the truth arm is the UNROUNDED
+      // fold-exact euclidean rank, not v1's cosine)
+      s"""WITH $pqChainSql,
+         |ex AS (SELECT id_q, id_n FROM (
+         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |        list_transform(range(len(a.v)),
+         |          i -> (a.v[i+1] - b.v[i+1]) * (a.v[i+1] - b.v[i+1]))),
+         |        (x, y) -> x + y), b.vec_id) AS rk
+         |  FROM d a JOIN d b ON b.vec_id <> a.vec_id
+         |  WHERE a.vec_id < 5) WHERE rk <= 5),
+         |adc AS (SELECT id_q, id_n FROM r WHERE rank <= 5)
+         |SELECT ex.id_q, CAST(count(*) AS BIGINT) AS n_truth,
+         |  CAST(count(adc.id_n) AS BIGINT) AS n_hits,
+         |  round(CAST(count(adc.id_n) AS DOUBLE)
+         |    / CAST(count(*) AS DOUBLE), 6) AS recall
+         |FROM ex LEFT JOIN adc
+         |  ON adc.id_q = ex.id_q AND adc.id_n = ex.id_n
+         |GROUP BY ex.id_q""".stripMargin,
+      reads = Seq(pqCodes, prep)),
 
-    "v8_ann_recall" -> ((s, d) => {
-      val exact = queries("v1_cosine_topk")(s, d).select("id_q", "id_n")
+    Query("v8_ann_recall", (s, d) => {
+      val exact = SparkEntry.queries("v1_cosine_topk")(s, d)
+        .select("id_q", "id_n")
       def recallOf(cand: DataFrame, method: String): DataFrame =
         exact.join(
             cand.select(col("id_q"), col("id_n"), lit(1L).as("hit")),
             Seq("id_q", "id_n"), "left")
           .groupBy("id_q").agg(count(col("hit")).as("n_hits"))
           .select(lit(method).as("method"), col("id_q"), col("n_hits"))
-      recallOf(queries("v2_ann_lsh")(s, d), "lsh")
-        .unionAll(recallOf(queries("v4_ivf_topk")(s, d), "ivf"))
-    }),
+      recallOf(SparkEntry.queries("v2_ann_lsh")(s, d), "lsh")
+        .unionAll(recallOf(SparkEntry.queries("v4_ivf_topk")(s, d), "ivf"))
+    },
+      // v8 recomputes the exact top-10 (ex), the LSH top-5 (lsh), and the
+      // IVF top-5 (ivf) with the same CTE bodies as the v1/v2/v4 oracles,
+      // then counts per-probe hits — count over a LEFT join so probes
+      // with zero overlap still get a row (n_hits = 0), which is exactly
+      // the collapse the gate exists to surface.
+      s"""WITH $preparedSql,
+         |ex AS (SELECT id_q, id_n FROM (
+         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
+         |        b.vec_id) AS rank
+         |  FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |  WHERE a.vec_id < 5) WHERE rank <= 10),
+         |cb AS ($bandSelects),
+         |lsh AS (SELECT id_q, id_n FROM (
+         |  SELECT id_q, id_n, row_number() OVER (PARTITION BY id_q
+         |      ORDER BY cos DESC, id_n) AS rank FROM (
+         |    SELECT DISTINCT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |    FROM cb a JOIN cb b ON a.band = b.band
+         |      AND a.bucket = b.bucket AND b.vec_id <> a.vec_id
+         |    WHERE a.vec_id < 5)) WHERE rank <= 5),
+         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
+         |      WHERE vec_id < 10),
+         |ca AS (SELECT id_n, centroid_id FROM (
+         |      SELECT a.vec_id AS id_n, b.centroid_id,
+         |        row_number() OVER (PARTITION BY a.vec_id
+         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |            b.centroid_id) AS rk
+         |      FROM n a JOIN cent b ON true) WHERE rk = 1),
+         |pr AS (SELECT id_q, centroid_id FROM (
+         |      SELECT a.vec_id AS id_q, b.centroid_id,
+         |        row_number() OVER (PARTITION BY a.vec_id
+         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
+         |            b.centroid_id) AS rk
+         |      FROM n a JOIN cent b ON true
+         |      WHERE a.vec_id < 5) WHERE rk <= 3),
+         |ivf AS (SELECT id_q, id_n FROM (
+         |  SELECT id_q, id_n, row_number() OVER (PARTITION BY id_q
+         |      ORDER BY cos DESC, id_n) AS rank FROM (
+         |    SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
+         |    FROM pr
+         |    JOIN n a ON a.vec_id = pr.id_q
+         |    JOIN ca ON ca.centroid_id = pr.centroid_id
+         |    JOIN n b ON b.vec_id = ca.id_n
+         |    WHERE b.vec_id <> a.vec_id)) WHERE rank <= 5)
+         |SELECT 'lsh' AS method, e.id_q, count(l.id_n) AS n_hits
+         |FROM ex e LEFT JOIN lsh l
+         |  ON e.id_q = l.id_q AND e.id_n = l.id_n
+         |GROUP BY e.id_q
+         |UNION ALL
+         |SELECT 'ivf' AS method, e.id_q, count(i.id_n) AS n_hits
+         |FROM ex e LEFT JOIN ivf i
+         |  ON e.id_q = i.id_q AND e.id_n = i.id_n
+         |GROUP BY e.id_q""".stripMargin,
+      reads = Seq(prep)),
 
     // Symmetric int8 embedding quantization — the compression step a
     // 100 TB ANN index runs before storing vectors (4x memory/IO vs
@@ -763,7 +1305,7 @@ object QueriesVector {
     // reconstruction error). Zero vectors quantize to scale 0 / codes
     // 0 / error 0 (the inv-multiply guard avoids a 0/0 NaN that would
     // diverge between engines).
-    "v9_quantize_int8" -> ((s, d) => {
+    Query("v9_quantize_int8", (s, d) => {
       val maxAbs = array_max(transform(col("v"), x => abs(x)))
       val withScale = prep(s, d)
         .withColumn("max_abs", maxAbs)
@@ -783,7 +1325,32 @@ object QueriesVector {
           zip_with(col("v"), col("qs"),
             (x, q) => (x - q * col("inv")) * (x - q * col("inv"))),
           lit(0.0), (a, e) => a + e), 6).as("recon_err"))
-    }),
+    },
+      s"""WITH d AS (SELECT vec_id,
+         |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |      FROM embeddings),
+         |m AS (SELECT vec_id, v,
+         |      list_reduce(list_prepend(0.0,
+         |        list_transform(v, x -> abs(x))),
+         |        (a, b) -> greatest(a, b)) AS max_abs FROM d),
+         |q AS (SELECT vec_id, v,
+         |      CASE WHEN max_abs > 0 THEN 127.0 / max_abs
+         |           ELSE 0.0 END AS scale,
+         |      CASE WHEN max_abs > 0 THEN max_abs / 127.0
+         |           ELSE 0.0 END AS inv,
+         |      list_transform(v, x -> floor(x *
+         |        (CASE WHEN max_abs > 0 THEN 127.0 / max_abs
+         |              ELSE 0.0 END) + 0.5)) AS qs
+         |      FROM m)
+         |SELECT vec_id, round(scale, 6) AS scale,
+         |  CAST(list_reduce(list_prepend(0.0, qs), (a, b) -> a + b)
+         |    AS BIGINT) AS q_sum,
+         |  round(list_reduce(list_prepend(0.0,
+         |      list_transform(range(len(v)),
+         |        i -> (v[i+1] - qs[i+1] * inv) * (v[i+1] - qs[i+1] * inv))),
+         |    (a, b) -> a + b), 6) AS recon_err
+         |FROM q""".stripMargin,
+      reads = Seq(prep)),
 
     // Single-pass fixed-point Gram matrix (upper triangle of X'X over
     // the whole corpus) via the native GramMatrixAgg — the building
@@ -797,7 +1364,7 @@ object QueriesVector {
     // per partition). The d x d eigensolve that would follow (PCA) is a
     // driver-side tiny-matrix problem BY DESIGN — only this pass is
     // data-sized.
-    "v10_gram" -> ((s, d) => {
+    Query("v10_gram", (s, d) => {
       val g = prep(s, d).groupBy().agg(
         org.apache.spark.sql.graft.AnalyticsAggregates
           .gramFx(col("v"), Dim, 1000000.0).as("g"))
@@ -809,7 +1376,20 @@ object QueriesVector {
           col("p.j").cast("long").as("j"),
           expr(s"element_at(g, CAST(p.i*$Dim - (p.i*(p.i-1)) div 2 " +
             "+ (p.j - p.i) + 1 AS INT))").as("g_fx"))
-    }),
+    },
+      // Mirrors the aggregate exactly: same float->double widening, same
+      // floor(x*1e6) fixed-point longs, exact integer products/sums.
+      """WITH d AS (SELECT vec_id,
+        |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |      FROM embeddings),
+        |u AS (SELECT vec_id, i,
+        |      CAST(floor(v[i+1]*1000000.0) AS BIGINT) AS fx
+        |      FROM d, unnest(range(64)) AS t(i))
+        |SELECT a.i AS i, b.i AS j,
+        |  CAST(sum(a.fx*b.fx) AS BIGINT) AS g_fx
+        |FROM u a JOIN u b ON a.vec_id = b.vec_id AND a.i <= b.i
+        |GROUP BY 1, 2""".stripMargin,
+      reads = Seq(prep)),
 
     // Lloyd k-means, two full iterations (K=5, init = first 5 vectors):
     // assign → integer-exact centroid means → re-assign. Iterative ML on
@@ -818,7 +1398,7 @@ object QueriesVector {
     // until one division, so both engines take IDENTICAL argmin
     // decisions at every round (the property that makes cross-engine
     // verification of an iterative algorithm tractable at all).
-    "v7_kmeans" -> ((s, d) => {
+    Query("v7_kmeans", (s, d) => {
       val x = prep(s, d).select(col("id"), col("v"))
       val cent0 = x.filter(col("id") < 5)
         .select(col("id").as("cid"), col("v").as("c"))
@@ -827,7 +1407,32 @@ object QueriesVector {
         VectorOps.centroidMeans(a0))
       a1.select(col("id").as("vec_id"), col("cid").as("cluster"),
         round(col("d2"), 6).as("d2"))
-    }),
+    },
+      s"""WITH $preparedSql,
+         |c0 AS (SELECT vec_id AS cid, v AS c FROM d WHERE vec_id < 5),
+         |a0 AS (SELECT vec_id, v, cid FROM (
+         |  SELECT a.vec_id, a.v, c.cid,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY $euclid2Sql, c.cid) AS rk
+         |  FROM d a CROSS JOIN c0 c) WHERE rk = 1),
+         |e AS (SELECT cid, unnest(list_transform(range(len(v)),
+         |    i -> struct_pack(pos := i,
+         |      fx := CAST(floor(v[i+1] * 1000000.0) AS BIGINT)))) AS u
+         |  FROM a0),
+         |g AS (SELECT cid, u.pos AS pos, sum(u.fx) AS sfx, count(*) AS n
+         |  FROM e GROUP BY 1, 2),
+         |c1 AS (SELECT cid, list_transform(list_sort(list(
+         |    struct_pack(pos := pos, ci := CAST(sfx AS DOUBLE)
+         |      / CAST(n * 1000000 AS DOUBLE)))), s -> s.ci) AS c
+         |  FROM g GROUP BY cid),
+         |a1 AS (SELECT vec_id, cid, d2 FROM (
+         |  SELECT a.vec_id, c.cid, $euclid2Sql AS d2,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY $euclid2Sql, c.cid) AS rk
+         |  FROM d a CROSS JOIN c1 c) WHERE rk = 1)
+         |SELECT vec_id, cid AS cluster, round(d2, 6) AS d2 FROM a1"""
+        .stripMargin,
+      reads = Seq(prep)),
 
     // SemDeDup — semantic dedup via CLUSTER-LOCALITY (Abbas et al.
     // 2023, arXiv:2303.09540): the second semantic candidate-
@@ -858,7 +1463,7 @@ object QueriesVector {
     // dropped vector's HOME (rk=1) cell, so per-cell counts sum to
     // the corpus totals and every attribution lands in a cell the
     // n_vecs ledger already lists.
-    "d23_semdedup" -> ((s, d) => {
+    Query("d23_semdedup", (s, d) => {
       val cells = semdedupCells(s, d).filter(col("rk") === 1L)
       val home = cells.select(col("id").as("ib"), col("cid"))
       val pd = semdedupPairs(s, d, np = 2)
@@ -877,7 +1482,27 @@ object QueriesVector {
         .na.fill(0L, Seq("n_dup_pairs", "n_dropped"))
         .select(col("cid").as("cell"), col("n_vecs"),
           col("n_dup_pairs"), col("n_dropped"))
-    }),
+    },
+      // d23: v7's deterministic k-means chain at K=16 (same seeded
+      // codebook, same fixed-point Lloyd step, same argmin tiebreak),
+      // then the SOFT (top-2) cell-local pair join — distinct pairs
+      // attributed to the dropped vector's home (rk=1) cell, mirroring
+      // the Spark side's shipped configuration.
+      s"""WITH $preparedSql,
+         |$semdedupSql,
+         |nv AS (SELECT cid, count(*) AS n_vecs FROM a1
+         |  WHERE rk = 1 GROUP BY 1),
+         |hp AS MATERIALIZED (SELECT p2.ia, p2.ib, c.cid FROM p2
+         |  JOIN cells c ON c.vec_id = p2.ib),
+         |np AS (SELECT cid, count(*) AS n_dup_pairs FROM hp GROUP BY 1),
+         |dr AS (SELECT cid, count(*) AS n_dropped
+         |  FROM (SELECT DISTINCT cid, ib FROM hp) GROUP BY 1)
+         |SELECT nv.cid AS cell, CAST(nv.n_vecs AS BIGINT) AS n_vecs,
+         |  CAST(COALESCE(np.n_dup_pairs, 0) AS BIGINT) AS n_dup_pairs,
+         |  CAST(COALESCE(dr.n_dropped, 0) AS BIGINT) AS n_dropped
+         |FROM nv LEFT JOIN np ON np.cid = nv.cid
+         |LEFT JOIN dr ON dr.cid = nv.cid""".stripMargin,
+      reads = Seq(semdedupCells)),
 
     // SemDeDup recall gate — the d20/v8 measured-quality discipline
     // applied to d23: cluster-locality MISSES duplicate pairs that
@@ -904,7 +1529,7 @@ object QueriesVector {
     // assignment (each vector in its top-2 cells, v19's route-once
     // discipline over one cached ranked routing) trades 2× routing
     // fan-out for the boundary pairs single assignment loses.
-    "d24_semdedup_recall" -> ((s, d) => {
+    Query("d24_semdedup_recall", (s, d) => {
       val S = 1000L
       val sub = prep(s, d).filter(col("id") < S)
       val truth = sub
@@ -930,16 +1555,59 @@ object QueriesVector {
               .otherwise(lit(0.0)), 6).as("recall"))
       }
       arm(1).unionAll(arm(2))
-    }),
+    },
+      // d24: exact truth on the bounded audit sample (ids < 1000), the
+      // in-cell pairs at each probe depth restricted to the same
+      // sample (DISTINCT — a 2-probe pair can co-occur in two shared
+      // cells), zero-guarded ratios as a 2-row nprobe curve.
+      s"""WITH $preparedSql,
+         |$semdedupSql,
+         |t AS (SELECT count(*) AS n_truth FROM (
+         |  SELECT a.vec_id, b.vec_id,
+         |    $dotSql / sqrt(a.n2 * b.n2) AS cos
+         |  FROM n a JOIN n b ON a.vec_id < b.vec_id
+         |  WHERE a.vec_id < 1000 AND b.vec_id < 1000)
+         |  WHERE cos >= 0.45),
+         |h1 AS (SELECT count(*) AS n_hit FROM
+         |  (SELECT DISTINCT ia, ib FROM p)
+         |  WHERE ia < 1000 AND ib < 1000),
+         |h2 AS (SELECT count(*) AS n_hit FROM p2
+         |  WHERE ia < 1000 AND ib < 1000)
+         |SELECT CAST(1 AS BIGINT) AS nprobe, t.n_truth, h1.n_hit,
+         |  round(CASE WHEN t.n_truth > 0
+         |    THEN CAST(h1.n_hit AS DOUBLE) / CAST(t.n_truth AS DOUBLE)
+         |    ELSE 0.0 END, 6) AS recall
+         |FROM t, h1
+         |UNION ALL
+         |SELECT CAST(2 AS BIGINT), t.n_truth, h2.n_hit,
+         |  round(CASE WHEN t.n_truth > 0
+         |    THEN CAST(h2.n_hit AS DOUBLE) / CAST(t.n_truth AS DOUBLE)
+         |    ELSE 0.0 END, 6) AS recall
+         |FROM t, h2""".stripMargin,
+      reads = Seq(prep, semdedupCells)),
 
     // Exact MIPS: top-10 by RAW inner product — the retrieval
     // objective when magnitudes matter (recommender/reranker scores).
     // v1's broadcast shape; the exactness baseline v13 is gated
     // against.
-    "v12_mips_topk" -> ((s, d) => {
+    Query("v12_mips_topk", (s, d) => {
       val p = prep(s, d)
       VectorOps.mipsTopK(p, p.filter(col("id") < 5), 10)
-    }),
+    },
+      // v9's quantization mirrors exactly: max via a greatest-fold (==
+      // array_max — max is order-insensitive), one 127/maxAbs division,
+      // floor-based round-half-up codes, the single-inverse dequant, and
+      // the same index-ordered error fold.
+      s"""WITH $preparedSql,
+         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round($dotSql, 6) AS dot
+         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5)
+         |SELECT id_q, id_n, dot, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY dot DESC, id_n) AS rank FROM p)
+         |WHERE rank <= 10""".stripMargin,
+      reads = Seq(prep)),
 
     // Approximate MIPS via norm augmentation: corpus vectors extend by
     // sqrt(M^2 - |x|^2) (all reaching norm M), probes by 0 — cosine in
@@ -947,11 +1615,33 @@ object QueriesVector {
     // SAME hyperplane bands (one more dimension) bucket by dot
     // product; candidates rerank by the exact dot of the original
     // vectors. VectorOpsSpec floors this against v12.
-    "v13_mips_lsh" -> ((s, d) => {
+    Query("v13_mips_lsh", (s, d) => {
       val p = prep(s, d)
       VectorOps.mipsLshTopK(p, p.filter(col("id") < 5), Bands,
         RowsPerBand, Dim, 5)
-    }),
+    },
+      // augmented-space banding: va aliases to v so the SHARED plane
+      // fragments (range(len(v)) is length-generic) band the 65-dim
+      // lists; the exact-dot rerank reads the original vectors vo
+      s"""WITH $preparedSql,
+         |mx AS (SELECT max(n2) AS m2 FROM n),
+         |ca AS (SELECT vec_id,
+         |      list_append(v, sqrt(greatest(m2 - n2, 0.0))) AS v,
+         |      v AS vo FROM n, mx),
+         |pa AS (SELECT vec_id,
+         |      list_append(v, CAST(0.0 AS DOUBLE)) AS v, v AS vo
+         |      FROM n WHERE vec_id < 5),
+         |cb AS (${augBandSelects("ca")}),
+         |pb AS (${augBandSelects("pa")}),
+         |cand AS (SELECT DISTINCT p.vec_id AS id_q, c.vec_id AS id_n,
+         |      round($dotVoSql, 6) AS dot
+         |      FROM pb p JOIN cb c ON p.band = c.band
+         |        AND p.bucket = c.bucket AND c.vec_id <> p.vec_id)
+         |SELECT id_q, id_n, dot, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY dot DESC, id_n) AS rank FROM cand)
+         |WHERE rank <= 5""".stripMargin,
+      reads = Seq(prep)),
 
     // Quantized search: v9's int8 codes POWER the ranking — each pair
     // scores by the integer code dot product (exact Long MACs; |q| <=
@@ -965,7 +1655,7 @@ object QueriesVector {
     // search quality. All-pairs for the 5 probes (v1's broadcast
     // shape) so the oracle isolates QUANTIZATION error; swap in v2/v4
     // candidates for sub-linear generation.
-    "v11_quantized_topk" -> ((s, d) => {
+    Query("v11_quantized_topk", (s, d) => {
       val q = prep(s, d)
         .withColumn("max_abs", array_max(transform(col("v"),
           x => abs(x))))
@@ -994,8 +1684,35 @@ object QueriesVector {
       graft.operators.RelationalOps.topKPerGroup(pairs, Seq("id_q"),
         Seq(col("qcos").desc, col("id_n").asc), 10, rankCol = "rank")
         .withColumn("rank", col("rank").cast("long"))
-    })
-  )
+    },
+      // same quantization CTE chain as v9; dot/rescale/normalize mirrors
+      // the Spark fold and multiply order exactly (left-assoc:
+      // ((inv·inv)·qdot)/sqrt), so doubles are bit-identical
+      s"""WITH $preparedSql,
+         |m AS (SELECT vec_id, v, n2,
+         |      list_reduce(list_prepend(0.0,
+         |        list_transform(v, x -> abs(x))),
+         |        (a, b) -> greatest(a, b)) AS max_abs FROM n),
+         |q AS (SELECT vec_id, n2,
+         |      CASE WHEN max_abs > 0 THEN max_abs / 127.0
+         |           ELSE 0.0 END AS inv,
+         |      list_transform(v, x -> floor(x *
+         |        (CASE WHEN max_abs > 0 THEN 127.0 / max_abs
+         |              ELSE 0.0 END) + 0.5)) AS qs
+         |      FROM m),
+         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
+         |      round(((a.inv * b.inv) *
+         |        list_reduce(list_prepend(0.0,
+         |          list_transform(range(len(a.qs)),
+         |            i -> a.qs[i+1] * b.qs[i+1])), (x, y) -> x + y)) /
+         |        sqrt(a.n2 * b.n2), 6) AS qcos
+         |      FROM q a JOIN q b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id < 5)
+         |SELECT id_q, id_n, qcos, rank FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY id_q
+         |    ORDER BY qcos DESC, id_n) AS rank FROM p)
+         |WHERE rank <= 10""".stripMargin,
+      reads = Seq(prep)))
 
   /** Left-fold dot product between a.v and b.v (mirrors VectorOps.dot). */
   private val dotSql =
@@ -1152,734 +1869,4 @@ object QueriesVector {
     """list_reduce(list_prepend(0.0, list_transform(range(len(p.vo)),
       |      i -> p.vo[i+1] * c.vo[i+1])), (x, y) -> x + y)""".stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "v1_cosine_topk" ->
-      s"""WITH $preparedSql,
-         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5)
-         |SELECT id_q, id_n, cos, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY cos DESC, id_n) AS rank FROM p)
-         |WHERE rank <= 10""".stripMargin,
-    // v18: v1's chain + label joins; arg_min on the unique rank.
-    "v18_hard_negatives" ->
-      s"""WITH $preparedSql,
-         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5),
-         |tk AS (SELECT id_q, id_n, rank FROM (
-         |      SELECT *, row_number() OVER (PARTITION BY id_q
-         |        ORDER BY cos DESC, id_n) AS rank FROM p)
-         |      WHERE rank <= 10),
-         |rl AS (SELECT tk.id_q, tk.id_n, tk.rank,
-         |      lq.label = ln_.label AS same
-         |      FROM tk JOIN embeddings lq ON tk.id_q = lq.vec_id
-         |        JOIN embeddings ln_ ON tk.id_n = ln_.vec_id)
-         |SELECT id_q,
-         |  arg_min(id_n, rank) FILTER (WHERE same) AS pos_id,
-         |  min(rank) FILTER (WHERE same) AS pos_rank,
-         |  arg_min(id_n, rank) FILTER (WHERE NOT same) AS neg_id,
-         |  min(rank) FILTER (WHERE NOT same) AS neg_rank
-         |FROM rl GROUP BY 1""".stripMargin,
-    // v17: the 5 greedy stages unrolled by the same Scala loop shape
-    // as the Spark side; p0/sims MATERIALIZED (referenced per stage).
-    "v17_mmr_diversity" -> {
-      val steps = (2 to 5).map { k =>
-        s"""rem$k AS (SELECT p0.* FROM p0 LEFT JOIN sel${k - 1} s
-           |    ON p0.id_q = s.id_q AND p0.id_n = s.id_n
-           |  WHERE s.id_n IS NULL),
-           |ms$k AS (SELECT r.id_q, r.id_n, r.cos, max(si.sim) AS maxsim
-           |  FROM rem$k r JOIN sims si
-           |    ON si.id_q = r.id_q AND si.id_a = r.id_n
-           |  JOIN sel${k - 1} s
-           |    ON s.id_q = si.id_q AND s.id_n = si.id_b
-           |  GROUP BY 1, 2, 3),
-           |s$k AS (SELECT id_q, id_n, $k AS sel_rank, score FROM (
-           |  SELECT id_q, id_n, 0.7 * cos - 0.3 * maxsim AS score,
-           |    row_number() OVER (PARTITION BY id_q
-           |      ORDER BY 0.7 * cos - 0.3 * maxsim DESC, id_n) AS rn
-           |  FROM ms$k) WHERE rn = 1),
-           |sel$k AS MATERIALIZED (SELECT * FROM sel${k - 1}
-           |  UNION ALL SELECT * FROM s$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $preparedSql,
-         |pr AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5),
-         |p0 AS MATERIALIZED (SELECT id_q, id_n, cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY cos DESC, id_n) AS rank FROM pr)
-         |  WHERE rank <= 10),
-         |sims AS MATERIALIZED (SELECT ca.id_q, ca.id_n AS id_a,
-         |      cb.id_n AS id_b,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM p0 ca JOIN p0 cb
-         |    ON ca.id_q = cb.id_q AND ca.id_n <> cb.id_n
-         |  JOIN n a ON a.vec_id = ca.id_n
-         |  JOIN n b ON b.vec_id = cb.id_n),
-         |sel1 AS MATERIALIZED (SELECT id_q, id_n, 1 AS sel_rank,
-         |    cos AS score
-         |  FROM (SELECT p0.*, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY cos DESC, id_n) AS rn FROM p0) WHERE rn = 1),
-         |$steps
-         |SELECT id_q, id_n, CAST(sel_rank AS BIGINT) AS sel_rank,
-         |  round(score, 6) AS score
-         |FROM sel5""".stripMargin
-    },
-    // v16: same quantized moments, same cleared-denominator z, same
-    // pos-ordered fold of z².
-    "v16_standardize" ->
-      """WITH b AS (SELECT vec_id,
-        |    unnest(range(len(embedding))) AS pos, embedding
-        |  FROM embeddings),
-        |e AS (SELECT vec_id, pos,
-        |    CAST(floor(CAST(embedding[pos + 1] AS DOUBLE) * 1000)
-        |      AS BIGINT) AS xq
-        |  FROM b),
-        |st AS (SELECT pos, count(*) AS n,
-        |    CAST(sum(xq) AS BIGINT) AS sq,
-        |    CAST(sum(xq * xq) AS BIGINT) AS sqq
-        |  FROM e GROUP BY 1),
-        |sd AS (SELECT pos, n, sq, n * sqq - sq * sq AS den FROM st),
-        |z AS (SELECT vec_id, pos,
-        |    CASE WHEN den > 0 THEN CAST(n * xq - sq AS DOUBLE)
-        |      / sqrt(CAST(den AS DOUBLE)) ELSE 0.0 END AS z
-        |  FROM e JOIN sd USING (pos)),
-        |g AS (SELECT vec_id, list(z * z ORDER BY pos) AS zs
-        |  FROM z GROUP BY 1)
-        |SELECT vec_id,
-        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), zs),
-        |    (a, x) -> a + x), 6) AS ssq_z
-        |FROM g""".stripMargin,
-    // v15: v1's chain + label joins; DCG/IDCG as the identical
-    // rank-ascending folds with log2 = ln-ratio.
-    "v15_ndcg" ->
-      s"""WITH $preparedSql,
-         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5),
-         |tk AS (SELECT id_q, id_n, rank FROM (
-         |      SELECT *, row_number() OVER (PARTITION BY id_q
-         |        ORDER BY cos DESC, id_n) AS rank FROM p)
-         |      WHERE rank <= 10),
-         |rl AS (SELECT tk.id_q, tk.rank,
-         |      CASE WHEN lq.label = ln_.label THEN 1 ELSE 0 END AS rel
-         |      FROM tk JOIN embeddings lq ON tk.id_q = lq.vec_id
-         |        JOIN embeddings ln_ ON tk.id_n = ln_.vec_id),
-         |g AS (SELECT id_q, CAST(sum(rel) AS BIGINT) AS n_rel,
-         |      list(CAST(rel AS DOUBLE)
-         |          / (ln(CAST(rank AS DOUBLE) + 1.0) / ln(2.0))
-         |        ORDER BY rank) AS terms
-         |      FROM rl GROUP BY id_q),
-         |f AS (SELECT id_q, n_rel,
-         |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE), terms),
-         |        (a, x) -> a + x) AS dcg,
-         |      CASE WHEN n_rel > 0 THEN
-         |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |          list_transform(range(n_rel), i -> 1.0
-         |            / (ln(CAST(i + 1 AS DOUBLE) + 1.0) / ln(2.0)))),
-         |          (a, x) -> a + x)
-         |      ELSE 0.0 END AS idcg
-         |      FROM g)
-         |SELECT id_q, n_rel, round(dcg, 6) AS dcg,
-         |  round(idcg, 6) AS idcg,
-         |  round(CASE WHEN idcg > 0 THEN dcg / idcg ELSE 0.0 END, 6)
-         |    AS ndcg
-         |FROM f""".stripMargin,
-    // v14: codebook rebuilt from the md5 formula as a 128-entry flat
-    // list (index sv*16+cv+1); `dls` is the shared encode/ADC distance
-    // kernel — identical left folds to the Spark side, so code words
-    // and ADC sums are bit-equal before the 6dp rounding
-    "v14_pq_adc" ->
-      s"""WITH $pqChainSql
-         |SELECT id_q, id_n, round(ad2, 6) AS ad2, rank FROM r
-         |WHERE rank <= 5""".stripMargin,
-    // v21: the same PQ chain's top-5 vs exact L2 truth (ADC
-    // approximates squared L2, so the truth arm is the UNROUNDED
-    // fold-exact euclidean rank, not v1's cosine)
-    "v21_pq_recall" ->
-      s"""WITH $pqChainSql,
-         |ex AS (SELECT id_q, id_n FROM (
-         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |        list_transform(range(len(a.v)),
-         |          i -> (a.v[i+1] - b.v[i+1]) * (a.v[i+1] - b.v[i+1]))),
-         |        (x, y) -> x + y), b.vec_id) AS rk
-         |  FROM d a JOIN d b ON b.vec_id <> a.vec_id
-         |  WHERE a.vec_id < 5) WHERE rk <= 5),
-         |adc AS (SELECT id_q, id_n FROM r WHERE rank <= 5)
-         |SELECT ex.id_q, CAST(count(*) AS BIGINT) AS n_truth,
-         |  CAST(count(adc.id_n) AS BIGINT) AS n_hits,
-         |  round(CAST(count(adc.id_n) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS recall
-         |FROM ex LEFT JOIN adc
-         |  ON adc.id_q = ex.id_q AND adc.id_n = ex.id_n
-         |GROUP BY ex.id_q""".stripMargin,
-    "v6_hybrid_topk" ->
-      s"""WITH $preparedSql,
-         |e AS (SELECT n.* FROM n JOIN documents
-         |      ON n.vec_id = documents.doc_id WHERE lang = 'en'),
-         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM n a JOIN e b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5)
-         |SELECT id_q, id_n, cos, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY cos DESC, id_n) AS rank FROM p)
-         |WHERE rank <= 10""".stripMargin,
-    "v7_kmeans" ->
-      s"""WITH $preparedSql,
-         |c0 AS (SELECT vec_id AS cid, v AS c FROM d WHERE vec_id < 5),
-         |a0 AS (SELECT vec_id, v, cid FROM (
-         |  SELECT a.vec_id, a.v, c.cid,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY $euclid2Sql, c.cid) AS rk
-         |  FROM d a CROSS JOIN c0 c) WHERE rk = 1),
-         |e AS (SELECT cid, unnest(list_transform(range(len(v)),
-         |    i -> struct_pack(pos := i,
-         |      fx := CAST(floor(v[i+1] * 1000000.0) AS BIGINT)))) AS u
-         |  FROM a0),
-         |g AS (SELECT cid, u.pos AS pos, sum(u.fx) AS sfx, count(*) AS n
-         |  FROM e GROUP BY 1, 2),
-         |c1 AS (SELECT cid, list_transform(list_sort(list(
-         |    struct_pack(pos := pos, ci := CAST(sfx AS DOUBLE)
-         |      / CAST(n * 1000000 AS DOUBLE)))), s -> s.ci) AS c
-         |  FROM g GROUP BY cid),
-         |a1 AS (SELECT vec_id, cid, d2 FROM (
-         |  SELECT a.vec_id, c.cid, $euclid2Sql AS d2,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY $euclid2Sql, c.cid) AS rk
-         |  FROM d a CROSS JOIN c1 c) WHERE rk = 1)
-         |SELECT vec_id, cid AS cluster, round(d2, 6) AS d2 FROM a1"""
-        .stripMargin,
-    // v20: v7's exact chain through the ranked top-2 assignment, then
-    // the fixed-point silhouette ledger (same floor(·1e6) pinning as
-    // the Spark side, same CASE shape for the zero-distance guard).
-    "v20_silhouette" ->
-      s"""WITH $preparedSql,
-         |c0 AS (SELECT vec_id AS cid, v AS c FROM d WHERE vec_id < 5),
-         |a0 AS MATERIALIZED (SELECT vec_id, v, cid FROM (
-         |  SELECT a.vec_id, a.v, c.cid,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY $euclid2Sql, c.cid) AS rk
-         |  FROM d a CROSS JOIN c0 c) WHERE rk = 1),
-         |e AS (SELECT cid, unnest(list_transform(range(len(v)),
-         |    i -> struct_pack(pos := i,
-         |      fx := CAST(floor(v[i+1] * 1000000.0) AS BIGINT)))) AS u
-         |  FROM a0),
-         |g AS (SELECT cid, u.pos AS pos, sum(u.fx) AS sfx, count(*) AS n
-         |  FROM e GROUP BY 1, 2),
-         |c1 AS MATERIALIZED (SELECT cid, list_transform(list_sort(list(
-         |    struct_pack(pos := pos, ci := CAST(sfx AS DOUBLE)
-         |      / CAST(n * 1000000 AS DOUBLE)))), s -> s.ci) AS c
-         |  FROM g GROUP BY cid),
-         |a2 AS (SELECT vec_id, cid, d2, rk FROM (
-         |  SELECT a.vec_id, c.cid, $euclid2Sql AS d2,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY $euclid2Sql, c.cid) AS rk
-         |  FROM d a CROSS JOIN c1 c) WHERE rk <= 2),
-         |pv AS (SELECT vec_id,
-         |    max(CASE WHEN rk = 1 THEN cid END) AS cluster,
-         |    max(CASE WHEN rk = 1 THEN d2 END) AS d2a,
-         |    max(CASE WHEN rk = 2 THEN d2 END) AS d2b
-         |  FROM a2 GROUP BY vec_id),
-         |fx AS (SELECT cluster, CAST(floor((CASE WHEN d2b > 0.0
-         |      THEN 1.0 - sqrt(d2a) / sqrt(d2b) ELSE 0.0 END)
-         |      * 1000000.0) AS BIGINT) AS fx
-         |  FROM pv)
-         |SELECT cluster, CAST(count(*) AS BIGINT) AS n_vecs,
-         |  round(CAST(sum(fx) AS DOUBLE)
-         |    / CAST(count(*) * 1000000 AS DOUBLE), 6) AS mean_sil
-         |FROM fx GROUP BY cluster""".stripMargin,
-    // d23: v7's deterministic k-means chain at K=16 (same seeded
-    // codebook, same fixed-point Lloyd step, same argmin tiebreak),
-    // then the SOFT (top-2) cell-local pair join — distinct pairs
-    // attributed to the dropped vector's home (rk=1) cell, mirroring
-    // the Spark side's shipped configuration.
-    "d23_semdedup" ->
-      s"""WITH $preparedSql,
-         |$semdedupSql,
-         |nv AS (SELECT cid, count(*) AS n_vecs FROM a1
-         |  WHERE rk = 1 GROUP BY 1),
-         |hp AS MATERIALIZED (SELECT p2.ia, p2.ib, c.cid FROM p2
-         |  JOIN cells c ON c.vec_id = p2.ib),
-         |np AS (SELECT cid, count(*) AS n_dup_pairs FROM hp GROUP BY 1),
-         |dr AS (SELECT cid, count(*) AS n_dropped
-         |  FROM (SELECT DISTINCT cid, ib FROM hp) GROUP BY 1)
-         |SELECT nv.cid AS cell, CAST(nv.n_vecs AS BIGINT) AS n_vecs,
-         |  CAST(COALESCE(np.n_dup_pairs, 0) AS BIGINT) AS n_dup_pairs,
-         |  CAST(COALESCE(dr.n_dropped, 0) AS BIGINT) AS n_dropped
-         |FROM nv LEFT JOIN np ON np.cid = nv.cid
-         |LEFT JOIN dr ON dr.cid = nv.cid""".stripMargin,
-    // d24: exact truth on the bounded audit sample (ids < 1000), the
-    // in-cell pairs at each probe depth restricted to the same
-    // sample (DISTINCT — a 2-probe pair can co-occur in two shared
-    // cells), zero-guarded ratios as a 2-row nprobe curve.
-    "d24_semdedup_recall" ->
-      s"""WITH $preparedSql,
-         |$semdedupSql,
-         |t AS (SELECT count(*) AS n_truth FROM (
-         |  SELECT a.vec_id, b.vec_id,
-         |    $dotSql / sqrt(a.n2 * b.n2) AS cos
-         |  FROM n a JOIN n b ON a.vec_id < b.vec_id
-         |  WHERE a.vec_id < 1000 AND b.vec_id < 1000)
-         |  WHERE cos >= 0.45),
-         |h1 AS (SELECT count(*) AS n_hit FROM
-         |  (SELECT DISTINCT ia, ib FROM p)
-         |  WHERE ia < 1000 AND ib < 1000),
-         |h2 AS (SELECT count(*) AS n_hit FROM p2
-         |  WHERE ia < 1000 AND ib < 1000)
-         |SELECT CAST(1 AS BIGINT) AS nprobe, t.n_truth, h1.n_hit,
-         |  round(CASE WHEN t.n_truth > 0
-         |    THEN CAST(h1.n_hit AS DOUBLE) / CAST(t.n_truth AS DOUBLE)
-         |    ELSE 0.0 END, 6) AS recall
-         |FROM t, h1
-         |UNION ALL
-         |SELECT CAST(2 AS BIGINT), t.n_truth, h2.n_hit,
-         |  round(CASE WHEN t.n_truth > 0
-         |    THEN CAST(h2.n_hit AS DOUBLE) / CAST(t.n_truth AS DOUBLE)
-         |    ELSE 0.0 END, 6) AS recall
-         |FROM t, h2""".stripMargin,
-    "v2_ann_lsh" ->
-      s"""WITH $preparedSql,
-         |cb AS ($bandSelects),
-         |p AS (SELECT DISTINCT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM cb a JOIN cb b ON a.band = b.band
-         |        AND a.bucket = b.bucket AND b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5)
-         |SELECT id_q, id_n, cos, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY cos DESC, id_n) AS rank FROM p)
-         |WHERE rank <= 5""".stripMargin,
-    "v3_centroid_assign" ->
-      s"""WITH $preparedSql,
-         |p AS (SELECT a.vec_id, b.vec_id AS centroid_id,
-         |      $dotSql / sqrt(a.n2 * b.n2) AS cos
-         |      FROM n a JOIN n b ON b.vec_id < 10)
-         |SELECT vec_id, centroid_id, round(cos, 6) AS cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY cos DESC, centroid_id) AS rk FROM p)
-         |WHERE rk = 1""".stripMargin,
-    // v19: v4's IVF machinery shared across three nProbe arms (each
-    // corpus vector lives in exactly one cell, so a pair carries the
-    // rk of the probe-route to its cell and arms just filter rk);
-    // exact top-5 truth, left-join hit counts, and the routed-cell
-    // scan cost with self-pair exclusion.
-    "v19_ivf_tradeoff" -> {
-      def armSql(np: Int): String =
-        s"""SELECT CAST($np AS BIGINT) AS nprobe,
-           |  (SELECT count(*) FROM ex) AS n_truth,
-           |  (SELECT count(c.id_q) FROM ex LEFT JOIN
-           |    (SELECT id_q, id_n FROM (SELECT id_q, id_n,
-           |      row_number() OVER (PARTITION BY id_q
-           |        ORDER BY cos DESC, id_n) AS rank
-           |      FROM pairs WHERE rk <= $np) WHERE rank <= 5) c
-           |    ON ex.id_q = c.id_q AND ex.id_n = c.id_n) AS n_hits,
-           |  (SELECT CAST(sum(cz.cell_n - CASE
-           |      WHEN pr.centroid_id = sc.self_cell THEN 1 ELSE 0 END)
-           |    AS BIGINT)
-           |   FROM pr JOIN cz ON cz.centroid_id = pr.centroid_id
-           |   JOIN sc ON sc.id_q = pr.id_q
-           |   WHERE pr.rk <= $np) AS n_scanned""".stripMargin
-      s"""WITH $preparedSql,
-         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
-         |      WHERE vec_id < 10),
-         |ca AS (SELECT id_n, centroid_id FROM (
-         |      SELECT a.vec_id AS id_n, b.centroid_id,
-         |        row_number() OVER (PARTITION BY a.vec_id
-         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |            b.centroid_id) AS rk
-         |      FROM n a JOIN cent b ON true)
-         |      WHERE rk = 1),
-         |cz AS (SELECT centroid_id, count(*) AS cell_n FROM ca
-         |      GROUP BY 1),
-         |sc AS (SELECT id_n AS id_q, centroid_id AS self_cell FROM ca
-         |      WHERE id_n < 5),
-         |pr AS (SELECT id_q, centroid_id, rk FROM (
-         |      SELECT a.vec_id AS id_q, b.centroid_id,
-         |        row_number() OVER (PARTITION BY a.vec_id
-         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |            b.centroid_id) AS rk
-         |      FROM n a JOIN cent b ON true
-         |      WHERE a.vec_id < 5)
-         |      WHERE rk <= 3),
-         |pairs AS (SELECT pr.id_q, ca.id_n, pr.rk,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM pr
-         |      JOIN ca ON true
-         |        AND ca.centroid_id = pr.centroid_id
-         |      JOIN n a ON a.vec_id = pr.id_q
-         |      JOIN n b ON b.vec_id = ca.id_n
-         |      WHERE ca.id_n <> pr.id_q),
-         |ex AS (SELECT id_q, id_n FROM (
-         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
-         |        b.vec_id) AS rank
-         |  FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |  WHERE a.vec_id < 5)
-         |  WHERE rank <= 5)
-         |${armSql(1)}
-         |UNION ALL
-         |${armSql(2)}
-         |UNION ALL
-         |${armSql(3)}""".stripMargin
-    },
-    // v22: the catalog estimates recomputed from count distinct (the
-    // KMV NDV is exact at label cardinality), the policy/widening CASE
-    // arms from the same integer arithmetic as the Spark side, the
-    // pre-filter arm as the filtered exact top-5 (recall 1 by
-    // construction), and the post-filter arm through v4's exact
-    // routing CTEs with the label predicate applied to candidates.
-    "v22_filtered_ann" ->
-      s"""WITH $preparedSql,
-         |lbl AS (SELECT vec_id, CAST(label AS BIGINT) AS lbl
-         |  FROM embeddings),
-         |st AS (SELECT count(*) AS nr, count(DISTINCT label) AS ndv
-         |  FROM embeddings),
-         |q5 AS (SELECT * FROM n WHERE vec_id < 5),
-         |exA AS (SELECT id_q, id_n FROM (
-         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
-         |        b.vec_id) AS rank
-         |  FROM q5 a JOIN n b ON b.vec_id <> a.vec_id
-         |  JOIN lbl ON lbl.vec_id = b.vec_id AND lbl.lbl = 7) q
-         |  WHERE rank <= 5),
-         |exB AS (SELECT id_q, id_n FROM (
-         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
-         |        b.vec_id) AS rank
-         |  FROM q5 a JOIN n b ON b.vec_id <> a.vec_id
-         |  JOIN lbl ON lbl.vec_id = b.vec_id AND lbl.lbl <> 7) q
-         |  WHERE rank <= 5),
-         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
-         |  WHERE vec_id < 10),
-         |ca AS (SELECT id_n, centroid_id FROM (
-         |  SELECT a.vec_id AS id_n, b.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |        b.centroid_id) AS rk
-         |  FROM n a JOIN cent b ON true) q WHERE rk = 1),
-         |npb AS (SELECT least(3, (2 * ndv + 9 - 1) // 9) AS np FROM st),
-         |pr AS (SELECT id_q, centroid_id FROM (
-         |  SELECT a.vec_id AS id_q, b.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |        b.centroid_id) AS rk
-         |  FROM q5 a JOIN cent b ON true) q, npb WHERE q.rk <= npb.np),
-         |cand0 AS (SELECT pr.id_q, ca.id_n
-         |  FROM pr JOIN ca ON ca.centroid_id = pr.centroid_id),
-         |candF AS (SELECT c.id_q, c.id_n FROM cand0 c
-         |  JOIN lbl ON lbl.vec_id = c.id_n AND lbl.lbl <> 7
-         |  WHERE c.id_n <> c.id_q),
-         |candB AS (SELECT id_q, id_n FROM (
-         |  SELECT c.id_q, c.id_n, row_number() OVER (PARTITION BY c.id_q
-         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
-         |        c.id_n) AS rank
-         |  FROM candF c
-         |  JOIN n a ON a.vec_id = c.id_q
-         |  JOIN n b ON b.vec_id = c.id_n) q WHERE rank <= 5),
-         |hitB AS (SELECT count(*) AS n_truth, count(candB.id_q) AS n_hits
-         |  FROM exB LEFT JOIN candB
-         |    ON candB.id_q = exB.id_q AND candB.id_n = exB.id_n),
-         |rA AS (SELECT count(*) AS rows_pass FROM lbl WHERE lbl = 7),
-         |rB AS (SELECT count(*) AS rows_pass FROM lbl WHERE lbl <> 7),
-         |hA AS (SELECT count(*) AS n FROM exA)
-         |SELECT 'label=7' AS pred,
-         |  CASE WHEN (1 * st.nr // st.ndv) * 4 <= st.nr
-         |    THEN 'prefilter' ELSE 'postfilter_ivf' END AS policy,
-         |  CAST(CASE WHEN (1 * st.nr // st.ndv) * 4 <= st.nr THEN 0
-         |    ELSE least(3, 2 * st.ndv) END AS BIGINT) AS n_probe,
-         |  CAST(1 * st.nr // st.ndv AS BIGINT) AS est_rows,
-         |  rA.rows_pass, hA.n AS n_truth, hA.n AS n_hits,
-         |  round(CAST(hA.n AS DOUBLE) / hA.n, 6) AS recall
-         |FROM st, rA, hA
-         |UNION ALL
-         |SELECT 'label<>7',
-         |  CASE WHEN (9 * st.nr // st.ndv) * 4 <= st.nr
-         |    THEN 'prefilter' ELSE 'postfilter_ivf' END,
-         |  CAST(CASE WHEN (9 * st.nr // st.ndv) * 4 <= st.nr THEN 0
-         |    ELSE npb.np END AS BIGINT),
-         |  CAST(9 * st.nr // st.ndv AS BIGINT),
-         |  rB.rows_pass, hitB.n_truth, hitB.n_hits,
-         |  round(CAST(hitB.n_hits AS DOUBLE) / hitB.n_truth, 6)
-         |FROM st, npb, rB, hitB""".stripMargin,
-    "v4_ivf_topk" ->
-      s"""WITH $preparedSql,
-         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
-         |      WHERE vec_id < 10),
-         |ca AS (SELECT id_n, centroid_id FROM (
-         |      SELECT a.vec_id AS id_n, b.centroid_id,
-         |        row_number() OVER (PARTITION BY a.vec_id
-         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |            b.centroid_id) AS rk
-         |      FROM n a JOIN cent b ON true)
-         |      WHERE rk = 1),
-         |pr AS (SELECT id_q, centroid_id FROM (
-         |      SELECT a.vec_id AS id_q, b.centroid_id,
-         |        row_number() OVER (PARTITION BY a.vec_id
-         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |            b.centroid_id) AS rk
-         |      FROM n a JOIN cent b ON true
-         |      WHERE a.vec_id < 5)
-         |      WHERE rk <= 3),
-         |pairs AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |      FROM pr
-         |      JOIN n a ON a.vec_id = pr.id_q
-         |      JOIN ca ON ca.centroid_id = pr.centroid_id
-         |      JOIN n b ON b.vec_id = ca.id_n
-         |      WHERE b.vec_id <> a.vec_id)
-         |SELECT id_q, id_n, cos, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY cos DESC, id_n) AS rank FROM pairs)
-         |WHERE rank <= 5""".stripMargin,
-    // v9's quantization mirrors exactly: max via a greatest-fold (==
-    // array_max — max is order-insensitive), one 127/maxAbs division,
-    // floor-based round-half-up codes, the single-inverse dequant, and
-    // the same index-ordered error fold.
-    "v12_mips_topk" ->
-      s"""WITH $preparedSql,
-         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql, 6) AS dot
-         |      FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5)
-         |SELECT id_q, id_n, dot, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY dot DESC, id_n) AS rank FROM p)
-         |WHERE rank <= 10""".stripMargin,
-    // augmented-space banding: va aliases to v so the SHARED plane
-    // fragments (range(len(v)) is length-generic) band the 65-dim
-    // lists; the exact-dot rerank reads the original vectors vo
-    "v13_mips_lsh" ->
-      s"""WITH $preparedSql,
-         |mx AS (SELECT max(n2) AS m2 FROM n),
-         |ca AS (SELECT vec_id,
-         |      list_append(v, sqrt(greatest(m2 - n2, 0.0))) AS v,
-         |      v AS vo FROM n, mx),
-         |pa AS (SELECT vec_id,
-         |      list_append(v, CAST(0.0 AS DOUBLE)) AS v, v AS vo
-         |      FROM n WHERE vec_id < 5),
-         |cb AS (${augBandSelects("ca")}),
-         |pb AS (${augBandSelects("pa")}),
-         |cand AS (SELECT DISTINCT p.vec_id AS id_q, c.vec_id AS id_n,
-         |      round($dotVoSql, 6) AS dot
-         |      FROM pb p JOIN cb c ON p.band = c.band
-         |        AND p.bucket = c.bucket AND c.vec_id <> p.vec_id)
-         |SELECT id_q, id_n, dot, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY dot DESC, id_n) AS rank FROM cand)
-         |WHERE rank <= 5""".stripMargin,
-    // same quantization CTE chain as v9; dot/rescale/normalize mirrors
-    // the Spark fold and multiply order exactly (left-assoc:
-    // ((inv·inv)·qdot)/sqrt), so doubles are bit-identical
-    "v11_quantized_topk" ->
-      s"""WITH $preparedSql,
-         |m AS (SELECT vec_id, v, n2,
-         |      list_reduce(list_prepend(0.0,
-         |        list_transform(v, x -> abs(x))),
-         |        (a, b) -> greatest(a, b)) AS max_abs FROM n),
-         |q AS (SELECT vec_id, n2,
-         |      CASE WHEN max_abs > 0 THEN max_abs / 127.0
-         |           ELSE 0.0 END AS inv,
-         |      list_transform(v, x -> floor(x *
-         |        (CASE WHEN max_abs > 0 THEN 127.0 / max_abs
-         |              ELSE 0.0 END) + 0.5)) AS qs
-         |      FROM m),
-         |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round(((a.inv * b.inv) *
-         |        list_reduce(list_prepend(0.0,
-         |          list_transform(range(len(a.qs)),
-         |            i -> a.qs[i+1] * b.qs[i+1])), (x, y) -> x + y)) /
-         |        sqrt(a.n2 * b.n2), 6) AS qcos
-         |      FROM q a JOIN q b ON b.vec_id <> a.vec_id
-         |      WHERE a.vec_id < 5)
-         |SELECT id_q, id_n, qcos, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id_q
-         |    ORDER BY qcos DESC, id_n) AS rank FROM p)
-         |WHERE rank <= 10""".stripMargin,
-    "v9_quantize_int8" ->
-      s"""WITH d AS (SELECT vec_id,
-         |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |      FROM embeddings),
-         |m AS (SELECT vec_id, v,
-         |      list_reduce(list_prepend(0.0,
-         |        list_transform(v, x -> abs(x))),
-         |        (a, b) -> greatest(a, b)) AS max_abs FROM d),
-         |q AS (SELECT vec_id, v,
-         |      CASE WHEN max_abs > 0 THEN 127.0 / max_abs
-         |           ELSE 0.0 END AS scale,
-         |      CASE WHEN max_abs > 0 THEN max_abs / 127.0
-         |           ELSE 0.0 END AS inv,
-         |      list_transform(v, x -> floor(x *
-         |        (CASE WHEN max_abs > 0 THEN 127.0 / max_abs
-         |              ELSE 0.0 END) + 0.5)) AS qs
-         |      FROM m)
-         |SELECT vec_id, round(scale, 6) AS scale,
-         |  CAST(list_reduce(list_prepend(0.0, qs), (a, b) -> a + b)
-         |    AS BIGINT) AS q_sum,
-         |  round(list_reduce(list_prepend(0.0,
-         |      list_transform(range(len(v)),
-         |        i -> (v[i+1] - qs[i+1] * inv) * (v[i+1] - qs[i+1] * inv))),
-         |    (a, b) -> a + b), 6) AS recon_err
-         |FROM q""".stripMargin,
-
-    // v8 recomputes the exact top-10 (ex), the LSH top-5 (lsh), and the
-    // IVF top-5 (ivf) with the same CTE bodies as the v1/v2/v4 oracles,
-    // then counts per-probe hits — count over a LEFT join so probes
-    // with zero overlap still get a row (n_hits = 0), which is exactly
-    // the collapse the gate exists to surface.
-    "v8_ann_recall" ->
-      s"""WITH $preparedSql,
-         |ex AS (SELECT id_q, id_n FROM (
-         |  SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY round($dotSql / sqrt(a.n2 * b.n2), 6) DESC,
-         |        b.vec_id) AS rank
-         |  FROM n a JOIN n b ON b.vec_id <> a.vec_id
-         |  WHERE a.vec_id < 5) WHERE rank <= 10),
-         |cb AS ($bandSelects),
-         |lsh AS (SELECT id_q, id_n FROM (
-         |  SELECT id_q, id_n, row_number() OVER (PARTITION BY id_q
-         |      ORDER BY cos DESC, id_n) AS rank FROM (
-         |    SELECT DISTINCT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |    FROM cb a JOIN cb b ON a.band = b.band
-         |      AND a.bucket = b.bucket AND b.vec_id <> a.vec_id
-         |    WHERE a.vec_id < 5)) WHERE rank <= 5),
-         |cent AS (SELECT vec_id AS centroid_id, v, n2 FROM n
-         |      WHERE vec_id < 10),
-         |ca AS (SELECT id_n, centroid_id FROM (
-         |      SELECT a.vec_id AS id_n, b.centroid_id,
-         |        row_number() OVER (PARTITION BY a.vec_id
-         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |            b.centroid_id) AS rk
-         |      FROM n a JOIN cent b ON true) WHERE rk = 1),
-         |pr AS (SELECT id_q, centroid_id FROM (
-         |      SELECT a.vec_id AS id_q, b.centroid_id,
-         |        row_number() OVER (PARTITION BY a.vec_id
-         |          ORDER BY $dotSql / sqrt(a.n2 * b.n2) DESC,
-         |            b.centroid_id) AS rk
-         |      FROM n a JOIN cent b ON true
-         |      WHERE a.vec_id < 5) WHERE rk <= 3),
-         |ivf AS (SELECT id_q, id_n FROM (
-         |  SELECT id_q, id_n, row_number() OVER (PARTITION BY id_q
-         |      ORDER BY cos DESC, id_n) AS rank FROM (
-         |    SELECT a.vec_id AS id_q, b.vec_id AS id_n,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |    FROM pr
-         |    JOIN n a ON a.vec_id = pr.id_q
-         |    JOIN ca ON ca.centroid_id = pr.centroid_id
-         |    JOIN n b ON b.vec_id = ca.id_n
-         |    WHERE b.vec_id <> a.vec_id)) WHERE rank <= 5)
-         |SELECT 'lsh' AS method, e.id_q, count(l.id_n) AS n_hits
-         |FROM ex e LEFT JOIN lsh l
-         |  ON e.id_q = l.id_q AND e.id_n = l.id_n
-         |GROUP BY e.id_q
-         |UNION ALL
-         |SELECT 'ivf' AS method, e.id_q, count(i.id_n) AS n_hits
-         |FROM ex e LEFT JOIN ivf i
-         |  ON e.id_q = i.id_q AND e.id_n = i.id_n
-         |GROUP BY e.id_q""".stripMargin,
-    // Mirrors the aggregate exactly: same float->double widening, same
-    // floor(x*1e6) fixed-point longs, exact integer products/sums.
-    "v10_gram" ->
-      """WITH d AS (SELECT vec_id,
-        |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |      FROM embeddings),
-        |u AS (SELECT vec_id, i,
-        |      CAST(floor(v[i+1]*1000000.0) AS BIGINT) AS fx
-        |      FROM d, unnest(range(64)) AS t(i))
-        |SELECT a.i AS i, b.i AS j,
-        |  CAST(sum(a.fx*b.fx) AS BIGINT) AS g_fx
-        |FROM u a JOIN u b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |GROUP BY 1, 2""".stripMargin,
-
-    // v5's pair chain wrapped in d7's recursive closure; canonical =
-    // component min, singletons self-canonical
-    "d16_semantic_clusters" ->
-      s"""WITH RECURSIVE $preparedSql,
-         |cb AS MATERIALIZED ($bandSelects),
-         |rare AS (SELECT band, bucket FROM cb GROUP BY band, bucket
-         |      HAVING count(*) <= 10000),
-         |cf AS MATERIALIZED (SELECT cb.* FROM cb JOIN rare USING (band, bucket)),
-         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |      FROM cf a JOIN cf b ON a.band = b.band
-         |        AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |pairs AS MATERIALIZED (SELECT id_a, id_b FROM cand
-         |      JOIN n a ON a.vec_id = cand.id_a
-         |      JOIN n b ON b.vec_id = cand.id_b
-         |      WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.45),
-         |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e2.dst FROM reach r
-         |    JOIN edges e2 ON r.dst = e2.src),
-         |comp AS MATERIALIZED (SELECT src AS vec_id,
-         |      least(src, min(dst)) AS canonical_id
-         |      FROM reach GROUP BY src),
-         |u AS (SELECT vec_id, canonical_id FROM comp
-         |      UNION ALL
-         |      SELECT vec_id, vec_id FROM n
-         |      WHERE vec_id NOT IN (SELECT vec_id FROM comp))
-         |SELECT vec_id, canonical_id,
-         |  CAST(vec_id = canonical_id AS BIGINT) AS is_kept
-         |FROM u""".stripMargin,
-    // d22: v5's candidate chain + the seeded split filter; membership
-    // from the same id formula.
-    "d22_semantic_decontam" -> {
-      def b(idExpr: String) =
-        s"""CAST(concat('0x', substr(md5(concat('vsplit:',
-           |      CAST($idExpr AS VARCHAR))), 1, 15)) AS BIGINT)
-           |      % 100""".stripMargin
-      s"""WITH $preparedSql,
-         |cb AS ($bandSelects),
-         |rare AS (SELECT band, bucket FROM cb GROUP BY band, bucket
-         |      HAVING count(*) <= 10000),
-         |cf AS (SELECT cb.* FROM cb JOIN rare USING (band, bucket)),
-         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |      FROM cf a JOIN cf b ON a.band = b.band
-         |        AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |pr AS (SELECT id_a, id_b,
-         |      round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos,
-         |      ${b("id_a")} AS ba,
-         |      ${b("id_b")} AS bb
-         |  FROM cand
-         |  JOIN n a ON a.vec_id = cand.id_a
-         |  JOIN n b ON b.vec_id = cand.id_b
-         |  WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.35)
-         |SELECT CASE WHEN ba >= 90 THEN id_a ELSE id_b END AS test_id,
-         |  count(*) AS n_train_neighbors, max(cos) AS max_cos
-         |FROM pr
-         |WHERE (ba >= 90 AND bb < 80) OR (bb >= 90 AND ba < 80)
-         |GROUP BY 1""".stripMargin
-    },
-    "v5_neardup_lsh" -> {
-      s"""WITH $preparedSql,
-         |cb AS ($bandSelects),
-         |rare AS (SELECT band, bucket FROM cb GROUP BY band, bucket
-         |      HAVING count(*) <= 10000),
-         |cf AS (SELECT cb.* FROM cb JOIN rare USING (band, bucket)),
-         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |      FROM cf a JOIN cf b ON a.band = b.band
-         |        AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT id_a, id_b,
-         |  round($dotSql / sqrt(a.n2 * b.n2), 6) AS cos
-         |FROM cand
-         |JOIN n a ON a.vec_id = cand.id_a
-         |JOIN n b ON b.vec_id = cand.id_b
-         |WHERE $dotSql / sqrt(a.n2 * b.n2) >= 0.45""".stripMargin
-    }
-  )
 }

@@ -20,6 +20,10 @@ import org.apache.spark.storage.StorageLevel
   *    LogicalRDD. A LogicalRDD cannot be re-found by plan equality, so
   *    it is shared through this map.
   *
+  * A shared frame's name here is its [[SharedFrame]] name (`table.*`
+  * keys are the resolved tables): the frame declares it once, and
+  * nothing else spells it.
+  *
   * A hit is one lock-free map read (`Tables(...)` runs inside every
   * query build). A miss builds OUTSIDE any lock, then publishes with
   * `putIfAbsent`: builds nest (verified_pairs builds keeper_pairs builds

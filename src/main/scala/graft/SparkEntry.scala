@@ -1,9 +1,10 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query registries live in QueriesReference / QueriesRelational /
-  * QueriesText / QueriesVector / QueriesStreaming; this object is the union.
+/** Driver contract — see SURVEY.md §7. Each family object
+  * (QueriesReference, QueriesRelational, ...) lists its queries in one
+  * `registry` of [[Query]] records; this object derives the driver's
+  * name-keyed views and the shared-frame graph from them.
   */
 object SparkEntry {
 
@@ -11,150 +12,65 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("a1_weekly_avg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    QueriesReference.queries ++ QueriesRelational.queries ++
-      QueriesText.queries ++ QueriesDedup.queries ++
-      QueriesVector.queries ++ QueriesStreaming.queries ++
-      QueriesFunctions.queries ++ QueriesSketch.queries ++
-      QueriesCuration.queries ++ QueriesEvents.queries ++
-      QueriesGraph.queries ++ QueriesTimeseries.queries ++
-      QueriesProfile.queries ++ QueriesSql.queries ++
-      QueriesStorage.queries ++ QueriesMl.queries
+  private[graft] lazy val registry: Seq[Query] =
+    QueriesReference.registry ++ QueriesRelational.registry ++
+      QueriesText.registry ++ QueriesDedup.registry ++
+      QueriesVector.registry ++ QueriesStreaming.registry ++
+      QueriesFunctions.registry ++ QueriesSketch.registry ++
+      QueriesCuration.registry ++ QueriesEvents.registry ++
+      QueriesGraph.registry ++ QueriesTimeseries.registry ++
+      QueriesProfile.registry ++ QueriesSql.registry ++
+      QueriesStorage.registry ++ QueriesMl.registry
 
-  /** Every family's shared persisted caches (name → builder), in
-    * dependency order — dedup.tokens first because the text caches
-    * read it. Bench forces these BEFORE its timed passes and reports
-    * each build on its own `[bench-cache]` line, so per-query bench
-    * times are net of cache and stop moving when a family gains
-    * members (the r13 d14/x-family attribution-drift class). Families
-    * without cross-query persisted frames are absent by construction.
-    */
-  private[graft] def sharedCaches
-      : Seq[(String, (SparkSession, String) => DataFrame)] =
-    QueriesDedup.sharedCaches ++ QueriesText.sharedCaches ++
-      QueriesVector.sharedCaches ++ QueriesEvents.sharedCaches ++
-      QueriesGraph.sharedCaches
-
-  /** DIRECT consumers per shared cache — the query names that read the
-    * cached frame in their own plan. Cheap base-layer caches (tokens,
-    * shingles) list their whole family as a conservative superset (a
-    * spurious 0.1 s force is harmless); the expensive caches (BPE
-    * chain, semdedup cells, the keeper-pair chain, LM tables) are
-    * exact, because forcing one a selected subset never reads is the
-    * inflation ADVICE r14 flagged. RegistryIntegritySpec pins every
-    * listed name to the registry so renames fail loudly.
-    */
-  private[graft] def cacheDirectConsumers: Map[String, Set[String]] = {
-    val dedupQ = QueriesDedup.queries.keySet
-    val textQ = QueriesText.queries.keySet
-    Map(
-      "dedup.tokens" -> (dedupQ ++ textQ - "d6_embedding_neardup"),
-      "dedup.shingles" -> Set("d3_minhash_lsh", "d8_decontaminate",
-        "d12_novelty", "d18_sorted_neighborhood", "d20_lsh_recall",
-        "d21_minhash_error", "d33_budget_on_keepers", "mv5_lsh_delta"),
-      "dedup.clone_members" -> Set("d33_budget_on_keepers",
-        "d31_dedup_first_pairs", "d20_lsh_recall", "d21_minhash_error"),
-      "dedup.keeper_index" -> Set.empty[String],
-      "dedup.keeper_pairs" -> Set("d14_containment", "d21_minhash_error",
-        "d27_threshold_curve", "d31_dedup_first_pairs", "d20_lsh_recall"),
-      "dedup.clique_self" -> Set("d14_containment", "d21_minhash_error",
-        "d27_threshold_curve", "d20_lsh_recall"),
-      "dedup.keeper_sigs" -> Set("d20_lsh_recall", "d21_minhash_error"),
-      "dedup.verified_pairs" -> Set("d2_jaccard_pairs", "d7_dedup_clusters",
-        "d9_pagerank", "d15_canonical", "d34_star_contraction"),
-      "dedup.prefix_buckets" -> Set("d17_prefix_filter", "d29_prefix_budget",
-        "d32_prefix_budget_curve"),
-      "dedup.budget_pairs" -> Set("d29_prefix_budget",
-        "d32_prefix_budget_curve"),
-      "dedup.keeper_buckets" -> Set("d33_budget_on_keepers"),
-      "text.tf" -> Set("x8_tfidf_topk", "x19_inverted_index",
-        "x21_unigram_lm", "x32_heaps_vocab", "x33_zipf_slope",
-        "x38_token_budget"),
-      "text.bigrams" -> Set("x19_inverted_index", "x23_bigram_lm"),
-      "text.bpe_chain" -> Set("x35_bpe_merges", "x37_bpe_encode",
-        "x38_token_budget"),
-      "text.lm_unigrams" -> Set("x36_backoff_lm"),
-      "text.lm_bigrams" -> Set("x36_backoff_lm"),
-      "vector.prep" -> (QueriesVector.queries.keySet -
-        "d23_semdedup"),
-      // d24 reads the cells via semdedupPairs (its multi-probe arm
-      // routes over the SAME cached ranked corpus) — without it here a
-      // solo d24 bench run absorbed the whole routing-chain build and
-      // looked 3x slower than its baseline (VERDICT r17 #8)
-      "vector.semdedup_cells" -> Set("d23_semdedup",
-        "d24_semdedup_recall"),
-      "vector.v19_pairs" -> Set("v19_ivf_tradeoff"),
-      // v21 re-runs v14 as its subject (gate contract), so both read
-      // the encoded corpus (VERDICT r18 #3: attribute the ADC encode
-      // to a named cache line instead of recomputing it per consumer)
-      "vector.pq_codes" -> Set("v14_pq_adc", "v21_pq_recall"),
-      "events.rfm_users" -> Set("e9_survival"),
-      "events.rfm_ranked" -> Set("e11_rfm", "e14_pareto80"),
-      "events.markov_edges" -> Set("e9_survival", "e18_markov_attribution"),
-      "graph.copurchase_edges" -> Set("d11_kcore", "d13_labelprop",
-        "d19_common_neighbors", "d26_bfs_hops"))
+  private def byName[V](field: Query => V): Map[String, V] = {
+    val twice = registry.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name }
+    require(twice.isEmpty,
+      s"query names registered twice: ${twice.toSeq.sorted.mkString(", ")}")
+    registry.map(q => q.name -> field(q)).toMap
   }
 
-  /** Cache → upstream caches its BUILD reads (forcing a downstream
-    * cache forces its upstreams implicitly, so their consumer sets
-    * must include the downstream's).
-    */
-  private[graft] def cacheDeps: Map[String, Seq[String]] = Map(
-    "dedup.shingles" -> Seq("dedup.tokens"),
-    "dedup.clone_members" -> Seq("dedup.tokens"),
-    "dedup.keeper_index" -> Seq("dedup.shingles", "dedup.clone_members"),
-    "dedup.keeper_pairs" -> Seq("dedup.keeper_index"),
-    "dedup.clique_self" -> Seq("dedup.keeper_index", "dedup.clone_members"),
-    "dedup.verified_pairs" -> Seq("dedup.keeper_pairs", "dedup.clique_self",
-      "dedup.clone_members"),
-    "dedup.prefix_buckets" -> Seq("dedup.shingles"),
-    "dedup.budget_pairs" -> Seq("dedup.prefix_buckets"),
-    "dedup.keeper_buckets" -> Seq("dedup.shingles", "dedup.clone_members"),
-    "dedup.keeper_sigs" -> Seq("dedup.shingles", "dedup.clone_members"),
-    "text.tf" -> Seq("dedup.tokens"),
-    "text.bigrams" -> Seq("dedup.tokens"),
-    "text.bpe_chain" -> Seq("dedup.tokens"),
-    "text.lm_unigrams" -> Seq("dedup.tokens"),
-    "text.lm_bigrams" -> Seq("dedup.tokens"),
-    "vector.semdedup_cells" -> Seq("vector.prep"),
-    "vector.v19_pairs" -> Seq("vector.prep"),
-    "vector.pq_codes" -> Seq("vector.prep"),
-    "events.rfm_ranked" -> Seq("events.rfm_users"))
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName(_.build)
 
-  /** [[sharedCaches]] filtered to what a SELECTED query set actually
-    * consumes (ADVICE r14: a one-query SPARK_GRAFT_BENCH_ONLY run paid
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = byName(_.oracle)
+
+  /** Every shared frame a query reads, directly or upstream, each after
+    * its deps; the frames are visited by name, so the order is stable.
+    * Bench forces these BEFORE its timed passes and reports each build
+    * on its own `[bench-cache]` line, so per-query bench times are net
+    * of cache and stop moving when a family gains members (the r13
+    * d14/x-family attribution-drift class).
+    */
+  private[graft] lazy val sharedCaches: Seq[SharedFrame[_]] = {
+    val out = scala.collection.mutable.LinkedHashSet.empty[SharedFrame[_]]
+    def visit(f: SharedFrame[_]): Unit = if (!out(f)) {
+      f.deps.sortBy(_.name).foreach(visit)
+      out += f
+    }
+    registry.flatMap(_.reads).distinct.sortBy(_.name).foreach(visit)
+    val names = out.toSeq.map(_.name)
+    require(names.distinct == names,
+      s"shared frame names declared twice: ${names.diff(names.distinct)}")
+    out.toSeq
+  }
+
+  /** [[sharedCaches]] filtered to what a SELECTED query set reads: the
+    * frames the selected queries' builds read, plus everything upstream
+    * of them (ADVICE r14: a one-query SPARK_GRAFT_BENCH_ONLY run paid
     * every family's builds, and the control set — whose whole purpose
     * is ONE cheap run pricing the ambient band — absorbed the full BPE
-    * chain). A cache is forced iff a selected query reads it directly
-    * OR reads a cache built on top of it (transitive closure over
-    * [[cacheDeps]], so net-of-cache attribution stays exact: nothing a
-    * selected query's first run would build is left unforced).
+    * chain). Nothing a selected query's first run would build is left
+    * unforced, so net-of-cache attribution stays exact.
     */
   private[graft] def sharedCachesFor(selected: Set[String])
       : Seq[(String, (SparkSession, String) => DataFrame)] = {
-    val direct = cacheDirectConsumers
-    // effective consumers = direct ∪ consumers of every downstream cache
-    def consumersOf(cache: String, seen: Set[String]): Set[String] = {
-      val downstream = cacheDeps.collect {
-        case (down, ups) if ups.contains(cache) && !seen(down) => down
-      }
-      direct.getOrElse(cache, Set.empty) ++
-        downstream.flatMap(d => consumersOf(d, seen + cache))
-    }
-    sharedCaches.filter { case (name, _) =>
-      consumersOf(name, Set(name)).exists(selected) }
+    def upward(fs: Seq[SharedFrame[_]]): Set[SharedFrame[_]] =
+      fs.toSet.flatMap((f: SharedFrame[_]) => upward(f.deps) + f)
+    val needed = upward(registry.filter(q => selected(q.name)).flatMap(_.reads))
+    sharedCaches.filter(needed).map(f => f.name -> f.force _)
   }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    QueriesReference.oracle ++ QueriesRelational.oracle ++
-      QueriesText.oracle ++ QueriesDedup.oracle ++
-      QueriesVector.oracle ++ QueriesStreaming.oracle ++
-      QueriesFunctions.oracle ++ QueriesSketch.oracle ++
-      QueriesCuration.oracle ++ QueriesEvents.oracle ++
-      QueriesGraph.oracle ++ QueriesTimeseries.oracle ++
-      QueriesProfile.oracle ++ QueriesSql.oracle ++
-      QueriesStorage.oracle ++ QueriesMl.oracle
 }

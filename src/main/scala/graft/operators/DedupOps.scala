@@ -343,7 +343,7 @@ object DedupOps {
   /** [[prefixFilterPairs]] over prebuilt (e, buckets) frames — the
     * entry point for callers that share ONE cached bucket frame
     * across the unbounded/budgeted/curve consumers (the
-    * QueriesDedup.sharedCaches discipline).
+    * `dedup.prefix_buckets` shared frame).
     */
   def prefixFilterPairsFrom(e: DataFrame, buckets: DataFrame,
       tNum: Int, tDen: Int): DataFrame = {

@@ -89,30 +89,29 @@ object StatsCatalog {
     persist(entryFile(d, table, key),
       measure(df, key, CommitLog.srcFingerprint(d, table)))
 
-  /** Read the persisted entry; None when absent, STALE (the stored
-    * fingerprint no longer matches the source parquet) or UNPARSEABLE
-    * (a torn/foreign file is a stale entry, not an exception — the
-    * fallback re-ANALYZE self-heals it).
+  /** The entry in `f`; None when absent or UNPARSEABLE (a torn/foreign
+    * file is a stale entry, not an exception — the fallback re-ANALYZE
+    * self-heals it). The WHOLE read is inside the Try: a non-UTF-8 or
+    * binary foreign file throws from readAllLines itself.
     */
-  def read(d: String, table: String, key: String): Option[TableStats] = {
-    val f = entryFile(d, table, key)
+  private def parseEntry(f: File): Option[TableStats] =
     if (!f.isFile) None
-    else {
-      // the WHOLE read is inside the Try: a non-UTF-8/binary foreign
-      // file throws from readAllLines itself, and that too must read
-      // as stale (self-heal), never as an exception
-      val parsed = scala.util.Try {
-        val kv = Files.readAllLines(f.toPath)
-          .toArray(Array.empty[String]).toSeq
-          .filter(_.contains("=")).map { l =>
-            val Array(k, v) = l.split("=", 2); (k, v)
-          }.toMap
-        TableStats(kv("rows").toLong, kv("ndv").toLong,
-          kv("max_key_rows").toLong, kv("skew").toLong, kv("fp"))
-      }.toOption
-      parsed.filter(_.fingerprint == CommitLog.srcFingerprint(d, table))
-    }
-  }
+    else scala.util.Try {
+      val kv = Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq
+        .filter(_.contains("=")).map { l =>
+          val Array(k, v) = l.split("=", 2); (k, v)
+        }.toMap
+      TableStats(kv("rows").toLong, kv("ndv").toLong,
+        kv("max_key_rows").toLong, kv("skew").toLong, kv("fp"))
+    }.toOption
+
+  /** Read the persisted entry; None when absent, unparseable or STALE
+    * (the stored fingerprint no longer matches the source parquet).
+    */
+  def read(d: String, table: String, key: String): Option[TableStats] =
+    parseEntry(entryFile(d, table, key))
+      .filter(_.fingerprint == CommitLog.srcFingerprint(d, table))
 
   /** Catalog read with the measured fallback: serve the persisted
     * entry when fresh, re-ANALYZE when missing or stale.
@@ -154,20 +153,9 @@ object StatsCatalog {
     * purpose: planning against pre-append stats is how a skewed
     * append silently breaks a join strategy).
     */
-  def readTable(tableDir: String, key: String): Option[TableStats] = {
-    val f = tableEntryFile(tableDir, key)
-    if (!f.isFile) None
-    else scala.util.Try {
-      val kv = Files.readAllLines(f.toPath)
-        .toArray(Array.empty[String]).toSeq
-        .filter(_.contains("=")).map { l =>
-          val Array(k, v) = l.split("=", 2); (k, v)
-        }.toMap
-      TableStats(kv("rows").toLong, kv("ndv").toLong,
-        kv("max_key_rows").toLong, kv("skew").toLong, kv("fp"))
-    }.toOption
+  def readTable(tableDir: String, key: String): Option[TableStats] =
+    parseEntry(tableEntryFile(tableDir, key))
       .filter(_.fingerprint == s"v${CommitLog.latestVersion(tableDir)}")
-  }
 
   /** Commit-log catalog read with the measured fallback. */
   def readOrAnalyzeTable(s: SparkSession, tableDir: String,

@@ -59,7 +59,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("x14 quality gate drops the bottom quartile per language") {
-    val out = QueriesCuration.queries("x14_quality_filter")(spark, sf0001)
+    val out = SparkEntry.queries("x14_quality_filter")(spark, sf0001)
       .groupBy("lang").agg(count(lit(1)).as("kept")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val totals = graft.sources.Tables.documents(spark, sf0001)
@@ -74,7 +74,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("x15 source cap: kept docs start under budget, every source kept") {
-    val out = QueriesCuration.queries("x15_source_cap")(spark, sf0001)
+    val out = SparkEntry.queries("x15_source_cap")(spark, sf0001)
     val bySource = out.groupBy("source").agg(
       max(col("cum_before")).as("max_start"),
       min(col("cum_before")).as("min_start"),

@@ -249,7 +249,7 @@ class DedupOpsSpec extends SparkTestBase {
   }
 
   test("d12 novelty: exact duplicates score 0, invariants hold") {
-    val out = QueriesDedup.queries("d12_novelty")(spark, sf001).collect()
+    val out = SparkEntry.queries("d12_novelty")(spark, sf001).collect()
     assert(out.length == 500)
     out.foreach { r =>
       val (n, u) = (r.getLong(1), r.getLong(2))
@@ -273,7 +273,7 @@ class DedupOpsSpec extends SparkTestBase {
 
   test("d15 canonical election: total, idempotent, quality-argmax") {
     import org.apache.spark.sql.functions._
-    val out = QueriesDedup.queries("d15_canonical")(spark, sf0001)
+    val out = SparkEntry.queries("d15_canonical")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val nDocs = spark.read.parquet(s"$sf0001/documents.parquet").count()
     // total verdict: every document exactly once

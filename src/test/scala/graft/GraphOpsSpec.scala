@@ -164,7 +164,7 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("d26_bfs_hops runs on sf0.001: seeds at 0, dists within horizon") {
-    val rows = QueriesGraph.queries("d26_bfs_hops")(spark, sf0001)
+    val rows = SparkEntry.queries("d26_bfs_hops")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.nonEmpty)
     val byDist = rows.groupBy(_._2).view.mapValues(_.length).toMap
@@ -177,7 +177,7 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("d10_triangles runs on sf0.001 with bounded shapes") {
-    val out = QueriesGraph.queries("d10_triangles")(spark, sf0001)
+    val out = SparkEntry.queries("d10_triangles")(spark, sf0001)
     val rows = out.collect()
     assert(rows.nonEmpty && rows.length <= 20)
     assert(out.columns.toSeq == Seq("suppkey", "n_triangles"))

@@ -125,7 +125,7 @@ class PlanAuditSpec extends SparkTestBase {
     // on g11 at sf0.1 and broke the whole-stage span around it.
     // e11/e14 now read the shared checkpointed rank frame, so the
     // bucketing property lives in that frame's BUILD plan
-    val rankedBuild = QueriesEvents.rfmRankedPlan(spark, sf001)
+    val rankedBuild = QueriesEvents.rfmRanked.build(spark, sf001)
       .queryExecution.explainString(SimpleMode)
     // d18's bucketing machinery sits behind its per-invocation
     // localCheckpoint (OPT r19), so the property is pinned on the
@@ -185,7 +185,7 @@ class PlanAuditSpec extends SparkTestBase {
         // d18's ranked frame likewise sits behind its per-invocation
         // localCheckpoint (OPT r19) — the partitioned-lag property is
         // pinned on the BUILD plan, the seam boundedness below
-        (("events.rfm_ranked", QueriesEvents.rfmRankedPlan(spark, sf001))),
+        (("events.rfm_ranked", QueriesEvents.rfmRanked.build(spark, sf001))),
         (("dedup.d18_ranked", QueriesDedup.d18RankedBuild(spark, sf001))))
     // d18's QUERY plan retains one global window (the seam pass); its
     // boundedness marker — the first/last-W `rn_up` filter over the

@@ -70,7 +70,7 @@ class ProfileOpsSpec extends SparkTestBase {
   }
 
   test("dq6 correlations: one row, valid range, independent generator") {
-    val r = QueriesProfile.queries("dq6_correlation")(spark, sf001)
+    val r = SparkEntry.queries("dq6_correlation")(spark, sf001)
       .collect()
     assert(r.length == 1)
     val n = r(0).getLong(0)

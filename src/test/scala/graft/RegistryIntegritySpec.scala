@@ -2,57 +2,42 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry-level invariants that a Map `++` union would otherwise
-  * hide: a duplicate key across two family objects silently SHADOWS
-  * the earlier query — the union compiles, Verify runs, and one
-  * operator quietly disappears from the surface. No Spark session
-  * needed; this is pure map arithmetic, so it runs first and fast.
+/** Registry-level invariants that the typed records cannot carry: a name
+  * registered by two family objects would make the driver's name-keyed
+  * views fail to build (or, before the records, silently SHADOW one
+  * operator). Oracle coverage and the shared-frame graph hold by
+  * construction (an oracle is a required field of [[Query]]; reads and
+  * deps are typed [[SharedFrame]] references, checked against the
+  * observed reads in SharedFrameSpec). No Spark session needed.
   */
 class RegistryIntegritySpec extends AnyFunSuite {
 
-  private val families: Seq[(String, Map[String, _], Map[String, _])] = Seq(
-    ("Reference", QueriesReference.queries, QueriesReference.oracle),
-    ("Relational", QueriesRelational.queries, QueriesRelational.oracle),
-    ("Text", QueriesText.queries, QueriesText.oracle),
-    ("Dedup", QueriesDedup.queries, QueriesDedup.oracle),
-    ("Vector", QueriesVector.queries, QueriesVector.oracle),
-    ("Streaming", QueriesStreaming.queries, QueriesStreaming.oracle),
-    ("Functions", QueriesFunctions.queries, QueriesFunctions.oracle),
-    ("Sketch", QueriesSketch.queries, QueriesSketch.oracle),
-    ("Curation", QueriesCuration.queries, QueriesCuration.oracle),
-    ("Events", QueriesEvents.queries, QueriesEvents.oracle),
-    ("Graph", QueriesGraph.queries, QueriesGraph.oracle),
-    ("Timeseries", QueriesTimeseries.queries, QueriesTimeseries.oracle),
-    ("Profile", QueriesProfile.queries, QueriesProfile.oracle),
-    ("Sql", QueriesSql.queries, QueriesSql.oracle),
-    ("Storage", QueriesStorage.queries, QueriesStorage.oracle),
-    ("Ml", QueriesMl.queries, QueriesMl.oracle))
+  private val families: Seq[(String, Seq[Query])] = Seq(
+    "Reference" -> QueriesReference.registry,
+    "Relational" -> QueriesRelational.registry,
+    "Text" -> QueriesText.registry,
+    "Dedup" -> QueriesDedup.registry,
+    "Vector" -> QueriesVector.registry,
+    "Streaming" -> QueriesStreaming.registry,
+    "Functions" -> QueriesFunctions.registry,
+    "Sketch" -> QueriesSketch.registry,
+    "Curation" -> QueriesCuration.registry,
+    "Events" -> QueriesEvents.registry,
+    "Graph" -> QueriesGraph.registry,
+    "Timeseries" -> QueriesTimeseries.registry,
+    "Profile" -> QueriesProfile.registry,
+    "Sql" -> QueriesSql.registry,
+    "Storage" -> QueriesStorage.registry,
+    "Ml" -> QueriesMl.registry)
 
   test("no query key is shadowed across family objects") {
-    val all = families.flatMap { case (f, qs, _) => qs.keys.map(_ -> f) }
+    val all = families.flatMap { case (f, qs) => qs.map(_.name -> f) }
     val dups = all.groupBy(_._1).filter(_._2.size > 1)
     assert(dups.isEmpty,
-      s"duplicate registry keys (later family shadows earlier): " +
+      s"names registered twice: " +
         s"${dups.map { case (k, fs) => s"$k in ${fs.map(_._2)}" }}")
     assert(SparkEntry.queries.size == all.size,
-      "union size must equal the sum of family sizes")
-  }
-
-  test("no oracle key is shadowed, and every oracle has a query") {
-    val all = families.flatMap { case (f, _, os) => os.keys.map(_ -> f) }
-    val dups = all.groupBy(_._1).filter(_._2.size > 1)
-    assert(dups.isEmpty, s"duplicate oracle keys: ${dups.keys}")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty,
-      s"oracles with no registered query: $orphans")
-  }
-
-  test("every registered query is oracle-backed (full driver coverage)") {
-    // The driver's correctness gate only scores queries ∩ oracles;
-    // a query without an oracle silently downgrades to a weaker
-    // rows-only check. The registry's contract is FULL coverage.
-    val unbacked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unbacked.isEmpty, s"queries without oracles: $unbacked")
+      "the driver view must hold every family's queries")
   }
 
   test("shared-cache registry: unique names, family-prefixed") {
@@ -60,36 +45,10 @@ class RegistryIntegritySpec extends AnyFunSuite {
     // map by these names — a duplicate would silently drop a timing;
     // an unprefixed name would collide with query short-keys in the
     // baseline regex.
-    val names = SparkEntry.sharedCaches.map(_._1)
+    val names = SparkEntry.sharedCaches.map(_.name)
     assert(names.distinct == names, s"duplicate cache names: $names")
     assert(names.forall(_.matches("[a-z]+\\.[a-z0-9_]+")),
       s"cache names must be family.member: $names")
-  }
-
-  test("cache consumer/dependency maps agree with the registry") {
-    // Bench's subset filtering (sharedCachesFor) forces a cache iff a
-    // selected query consumes it (transitively) — a renamed query or
-    // cache here would silently stop forcing a build and the r13
-    // attribution-drift class returns. Pin all three name spaces.
-    val cacheNames = SparkEntry.sharedCaches.map(_._1).toSet
-    val direct = SparkEntry.cacheDirectConsumers
-    assert(direct.keySet == cacheNames,
-      s"consumer map vs cache registry: ${direct.keySet diff cacheNames} / ${cacheNames diff direct.keySet}")
-    val unknownQ = direct.values.flatten.toSet -- SparkEntry.queries.keySet
-    assert(unknownQ.isEmpty, s"consumers not in registry: $unknownQ")
-    val depNames = SparkEntry.cacheDeps.keySet ++
-      SparkEntry.cacheDeps.values.flatten
-    assert((depNames -- cacheNames).isEmpty,
-      s"cacheDeps names not in cache registry: ${depNames -- cacheNames}")
-    // every cache is reachable by SOME query, else it can never be
-    // forced and its build lands on a member query's first run
-    val unreachable = cacheNames.filter(c =>
-      SparkEntry.sharedCachesFor(SparkEntry.queries.keySet)
-        .forall(_._1 != c))
-    assert(unreachable.isEmpty, s"caches no query consumes: $unreachable")
-    // and the full selection forces the full list, in registry order
-    assert(SparkEntry.sharedCachesFor(SparkEntry.queries.keySet)
-      .map(_._1) == SparkEntry.sharedCaches.map(_._1))
   }
 
   test("family key prefixes are contiguously numbered") {

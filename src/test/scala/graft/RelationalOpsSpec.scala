@@ -464,7 +464,7 @@ class RelationalOpsSpec extends SparkTestBase {
     withTempDir("graft_cdc4") { dir =>
       ev.write.mode("overwrite")
         .parquet(new java.io.File(dir, "events.parquet").toString)
-      val out = QueriesRelational.queries("cdc4_tombstones")(
+      val out = SparkEntry.queries("cdc4_tombstones")(
         spark, dir.toString).collect()
         .map(r => r.getLong(0) -> (r.getString(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)),

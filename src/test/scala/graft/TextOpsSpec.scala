@@ -126,7 +126,7 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("x20 entropy: within [0, log2(k)], extremes hit exactly") {
-    val out = QueriesText.queries("x20_entropy")(spark, sf001).collect()
+    val out = SparkEntry.queries("x20_entropy")(spark, sf001).collect()
     assert(out.nonEmpty)
     def lg2(x: Double) = math.log(x) / math.log(2.0)
     out.foreach { r =>
@@ -143,7 +143,7 @@ class TextOpsSpec extends SparkTestBase {
   test("x19 posting lists are the first-by-id postings, bounded") {
     // output is exploded scalar (token, df, doc_id) rows; regroup to
     // recover each token's posting set
-    val rows = QueriesText.queries("x19_inverted_index")(spark, sf001)
+    val rows = SparkEntry.queries("x19_inverted_index")(spark, sf001)
       .collect()
     assert(rows.nonEmpty)
     val byToken = rows.groupBy(_.getString(0))

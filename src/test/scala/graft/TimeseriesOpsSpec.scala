@@ -105,19 +105,19 @@ class TimeseriesOpsSpec extends SparkTestBase {
   }
 
   test("ts1/ts2 run on sf0.001 with the full scale-independent spine") {
-    val g = QueriesTimeseries.queries("ts1_gapfill")(spark, sf0001)
+    val g = SparkEntry.queries("ts1_gapfill")(spark, sf0001)
     val n = g.count()
     // 5 event types x full-month hour spine; and real gaps exist at
     // this density for the interpolator to fill
     assert(n > 3000 && n % 5 == 0, s"spine rows: $n")
     assert(g.filter(col("n") === 0).count() > 0, "expected gaps at sf0.001")
-    val i = QueriesTimeseries.queries("ts2_interpolate")(spark, sf0001)
+    val i = SparkEntry.queries("ts2_interpolate")(spark, sf0001)
     assert(i.count() == n)
     assert(i.filter(col("val").isNull).count() == 0)
   }
 
   test("ts6 autocorrelation is a valid Pearson r over the full spine") {
-    val rows = QueriesTimeseries.queries("ts6_autocorr")(spark, sf0001)
+    val rows = SparkEntry.queries("ts6_autocorr")(spark, sf0001)
       .collect()
     // 5 types x 3 lags, every r a genuine correlation
     assert(rows.length == 15, s"expected 15 (type, lag) rows")

@@ -266,7 +266,7 @@ class VectorOpsSpec extends SparkTestBase {
     // power iteration on the 64x64 matrix, asserting a genuine dominant
     // eigenpair comes out (positive eigenvalue, small residual)
     val dim = 64
-    val cells = QueriesVector.queries("v10_gram")(spark, sf0001)
+    val cells = SparkEntry.queries("v10_gram")(spark, sf0001)
       .as[(Long, Long, Long)].collect()
     assert(cells.length == dim * (dim + 1) / 2)
     val g = Array.ofDim[Double](dim, dim)
@@ -369,5 +369,46 @@ class VectorOpsSpec extends SparkTestBase {
     assert(dropped.filter(col("ib") === 999999L).count() == 1 &&
       dropped.filter(col("ib") === 20L).count() == 0,
       "keeper rule: the larger-id clone drops, the original stays")
+  }
+
+  /** An embeddings table of the given vectors (ids 0..n-1, label 0). */
+  private def writeEmbeddings(vs: Seq[Seq[Float]]): String = {
+    val dir = sharedTempDir("graft_v17").toString
+    vs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("v17 MMR on probes with fewer candidates than its horizon") {
+    // every vector is a probe (ids < 5) and every other vector its
+    // candidate: 2 vectors give one candidate per probe, 4 give three,
+    // both short of the 5 selection steps
+    val fixtures = Seq(
+      Seq(Seq(1f, 0f, 0f, 0f), Seq(1f, 2f, 0f, 0f)),
+      Seq(Seq(1f, 0f, 0f, 0f), Seq(1f, 2f, 0f, 0f),
+        Seq(0f, 1f, 3f, 0f), Seq(2f, 1f, 1f, 5f)))
+    for (vs <- fixtures) {
+      def cos(a: Seq[Float], b: Seq[Float]): Double = {
+        def dot(x: Seq[Float], y: Seq[Float]) =
+          x.zip(y).map { case (p, q) => p.toDouble * q }.sum
+        dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
+      }
+      val out = SparkEntry.queries("v17_mmr_diversity")(
+          spark, writeEmbeddings(vs))
+        .select("id_q", "id_n", "sel_rank").as[(Long, Option[Long], Long)]
+        .collect()
+      assert(out.forall(_._2.isDefined), s"null id_n: ${out.toSeq}")
+      val n = vs.size
+      for (q <- 0 until n) {
+        val rows = out.filter(_._1 == q).sortBy(_._3)
+        assert(rows.map(_._3).toSeq == (1L until n.toLong).toSeq,
+          s"probe $q of $n vectors: ranks ${rows.map(_._3).toSeq}")
+        val nearest = (0 until n).filter(_ != q)
+          .minBy(j => (-cos(vs(q), vs(j)), j))
+        assert(rows.head._2.contains(nearest.toLong),
+          s"probe $q of $n vectors lost its rank-1 row: ${rows.toSeq}")
+      }
+    }
   }
 }
