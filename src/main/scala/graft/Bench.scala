@@ -93,7 +93,7 @@ object Bench {
       case None =>
         if (sys.env.contains("SPARK_GRAFT_BENCH_ALL"))
           SparkEntry.queries.keys.toSeq.sorted
-        else headline.filter(SparkEntry.queries.contains)
+        else headline
     }
 
     // Warmup: touch every target table (page cache + parquet footers),
@@ -275,7 +275,10 @@ object Bench {
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val total = ok.map(_._2).sum
-    val repoDir = sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo")
+    // the checkout the run reads its baseline from and writes its
+    // detail to: the working directory unless SPARK_GRAFT_REPO names one
+    val repoDir = sys.env.getOrElse("SPARK_GRAFT_REPO",
+      System.getProperty("user.dir"))
     // Regression gate (VERDICT r10 #2): compare per-query times against
     // the committed BENCH_BASELINE.json (the previous round's solo
     // sf0.1 run). A query regresses when it is BOTH >1.5x slower AND

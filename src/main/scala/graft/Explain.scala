@@ -17,15 +17,16 @@ object Explain {
     val names =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(q) =>
-          println(s"===== $name =====")
-          println(q(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        case None => System.err.println(s"[explain] unknown query: $name")
-      }
+    val (known, unknown) = names.partition(SparkEntry.queries.contains)
+    known.foreach { name =>
+      println(s"===== $name =====")
+      println(SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()
+    if (unknown.nonEmpty) {
+      System.err.println(s"[explain] unknown query: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.storage
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, FileAlreadyExistsException, Paths}
+import java.nio.file.{Files, FileAlreadyExistsException, NoSuchFileException}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -38,9 +38,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and readers plan from O(manifest) metadata without listing the
   * object store.
   *
-  * Manifest format (line-oriented, no parser dependencies):
+  * Manifest format (line-oriented, no parser dependencies; one codec,
+  * [[Manifest]], reads and writes it, in this kind order):
   * {{{
-  *   P <parentVersion>
+  *   P <parentVersion>          // the version this commit builds on
+  *   O <op>                     // operation tag: `replace` marks a
+  *                              // physical rewrite (no logical change),
+  *                              // `schema` a column-mapping commit,
+  *                              // `restore vN` a metadata rollback
+  *   C <relative/data/path>     // CHANGESET a MERGE writer attached:
+  *                              // the commit's logical row changes
+  *                              // (table columns + _change_type)
   *   A <relative/data/path>     // data file added by this commit
   *   R <relative/data/path>     // file removed (data OR delete file)
   *   D <relative/data/path>     // POSITIONAL DELETE file added — a
@@ -50,13 +58,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   E <path>\t<col1,col2>      // EQUALITY DELETE file added — a
   *                              // parquet of key values; every table
   *                              // row matching a key is deleted
-  *   C <relative/data/path>     // CHANGESET a MERGE writer attached:
-  *                              // the commit's logical row changes
-  *                              // (table columns + _change_type)
+  *   M rename\t<phys>\t<logical> // column mapping: rename (or
+  *   M drop\t<phys>             //   hide) a physical column
+  *   S <file>\t<col>\t<min>\t<max> // column range stats of an added file
+  *   F <file>\t<col>\t<m>\t<k>\t<hex> // Bloom filter of an added file
+  *   B <batchId>                // exactly-once ledger: a committed
+  *                              // appendBatch/upsertBatch/txn id
+  *   U <upstreamVersion>        // exactly-once ledger: the upstream
+  *                              // version a syncIncrement consumed
   * }}}
   * A checkpoint manifest `_log/v%05d.checkpoint.txt` holds the FULL
-  * live set (`A` + `D` + `E` lines) of its version; replay starts from
-  * the newest checkpoint at or below the requested version.
+  * state of its version (`A` `D` `E` `M` `S` `F` `B` `U` lines); replay
+  * starts from the newest checkpoint on the requested version's chain
+  * ([[Snapshot]] is the one fold every view of a version reads).
   *
   * MERGE-ON-READ deletes (the Iceberg positional-delete / Delta
   * deletion-vector idea): a `D` commit publishes a tiny file of
@@ -265,24 +279,97 @@ object CommitLog {
         .flatMap(s => scala.util.Try(s.toLong).toOption)
     else None
 
-  private def listLog(tableDir: String): Seq[File] =
-    Option(logDir(tableDir).listFiles())
+  private def isCheckpoint(f: File): Boolean =
+    f.getName.endsWith(".checkpoint.txt")
+
+  /** One listing of `_log`, and the reads every version lookup makes
+    * through it: each caller lists the log once and opens each manifest
+    * it needs once.
+    */
+  private final class LogListing(tableDir: String) {
+    /** Every manifest and checkpoint file. */
+    val files: Seq[File] = Option(logDir(tableDir).listFiles())
       .fold(Seq.empty[File])(_.toSeq)
       .filter(f => versionOf(f.getName).isDefined)
+    private val byVersion = files.groupBy(f => versionOf(f.getName).get)
+    val head: Long = (byVersion.keys ++ Seq(0L)).max
+    def earliest: Long = if (byVersion.isEmpty) 0L else byVersion.keys.min
+    /** Versions with a plain manifest, ascending. */
+    def commits: Seq[Long] = byVersion.collect {
+      case (v, fs) if fs.exists(!isCheckpoint(_)) => v }.toSeq.sorted
+
+    /** A listed file, read; gone since the listing (a racing expiry)
+      * reads as [[SnapshotExpired]] of `reported`.
+      */
+    private def load(f: File, reported: Long): Manifest =
+      try Manifest.read(f) catch { case _: NoSuchFileException =>
+        throw SnapshotExpired(reported, earliestVersion(tableDir)) }
+
+    /** Version v's plain manifest and its parent — the one lineage
+      * lookup; a missing manifest raises [[SnapshotExpired]] of
+      * `reported`.
+      */
+    def commit(v: Long, reported: Long): (Manifest, Long) = {
+      val f = byVersion.getOrElse(v, Nil).find(!isCheckpoint(_))
+        .getOrElse(throw SnapshotExpired(reported, earliest))
+      val m = load(f, reported)
+      (m, m.parent.getOrElse(throw new IllegalStateException(
+        s"manifest ${f.getName} has no parent line")))
+    }
+
+    def commit(v: Long): (Manifest, Long) = commit(v, v)
+
+    /** The state of version `asOf`: walk the `P` parent pointers down
+      * to version 0 or to the first version with a checkpoint, then fold
+      * oldest → newest. Following parents (not version numbers) resolves
+      * the lineage `asOf` descends from on a branched log. Checkpointed
+      * data files get sequence 0 and checkpointed equality deletes the
+      * checkpoint's version, so a checkpointed erasure still applies to
+      * every checkpointed data file.
+      */
+    def snapshot(asOf: Long): Snapshot = {
+      val chain = scala.collection.mutable.ArrayBuffer[(Long, Manifest)]()
+      def checkpointAt(v: Long) = byVersion.getOrElse(v, Nil).find(isCheckpoint)
+      var v = asOf
+      while (v > 0L && checkpointAt(v).isEmpty) {
+        val (m, p) = commit(v, asOf)
+        chain += ((v, m))
+        v = p
+      }
+      val start = checkpointAt(v).fold(Snapshot())(cp =>
+        Snapshot().applied(load(cp, v), 0L, v))
+      chain.reverseIterator.foldLeft(start) { case (s, (mv, m)) =>
+        s.applied(m, mv, mv) }
+    }
+  }
+
+  /** The state of resolvable version `asOf` (one `_log` listing, each
+    * manifest on its chain read once). Refuses loudly when the version
+    * is unknown (0 or above the head) or expired.
+    */
+  private def snapshotAt(tableDir: String, asOf: Long): Snapshot = {
+    val log = new LogListing(tableDir)
+    require(asOf >= 1 && asOf <= log.head,
+      s"unknown snapshot v$asOf (log head is v${log.head})")
+    log.snapshot(asOf)
+  }
+
+  /** The state at the head (empty on a fresh table). */
+  private def headSnapshot(tableDir: String): Snapshot = {
+    val log = new LogListing(tableDir)
+    log.snapshot(log.head)
+  }
 
   /** Latest committed version; 0 when the log is empty (a fresh table
     * is "version 0": no files live).
     */
-  def latestVersion(tableDir: String): Long =
-    (listLog(tableDir).flatMap(f => versionOf(f.getName)) :+ 0L).max
+  def latestVersion(tableDir: String): Long = new LogListing(tableDir).head
 
   /** Earliest version still resolvable (expiry moves this up). 1 on a
     * never-expired version log with at least one commit.
     */
-  def earliestVersion(tableDir: String): Long = {
-    val vs = listLog(tableDir).flatMap(f => versionOf(f.getName))
-    if (vs.isEmpty) 0L else vs.min
-  }
+  def earliestVersion(tableDir: String): Long =
+    new LogListing(tableDir).earliest
 
   /** The snapshot a DEFAULT read resolves to (ADVICE r17, medium). On
     * a linear log this is [[latestVersion]]. On a BRANCHED log
@@ -338,56 +425,28 @@ object CommitLog {
       blooms: Map[String, Map[String, Bloom]] = Map.empty,
       op: Option[String] = None,
       eqDeletes: Seq[(String, Seq[String])] = Nil,
-      changeset: Option[String] = None): Long = {
+      changeset: Option[String] = None): Long =
+    commitManifest(tableDir, expectedCurrent, Manifest(op = op,
+      changeset = changeset, added = added, removed = removed,
+      deletes = deletes, eqDeletes = eqDeletes, stats = stats,
+      blooms = bloomHex(blooms)))
+
+  /** Publish `m` as version `expectedCurrent + 1` with that parent;
+    * throws [[CommitConflict]] when another writer claimed it first.
+    */
+  private def commitManifest(tableDir: String, expectedCurrent: Long,
+      m: Manifest): Long = {
     val next = expectedCurrent + 1
-    val body = manifestBody(expectedCurrent, added, removed, deletes,
-      stats, blooms, op, eqDeletes, changeset)
-    if (!publishAtomic(tableDir, manifestName(next), body))
+    if (!publishAtomic(tableDir, manifestName(next),
+      m.copy(parent = Some(expectedCurrent)).render))
       throw CommitConflict(next, latestVersion(tableDir))
     next
   }
 
-  /** The one place a manifest body is assembled — shared by linear
-    * [[commit]] and branch [[commitToRef]] so the metadata contracts
-    * (stats/blooms ⊆ added, sorted deterministic line order) hold for
-    * every writer.
-    */
-  private def manifestBody(parent: Long, added: Seq[String],
-      removed: Seq[String], deletes: Seq[String],
-      stats: Map[String, Map[String, ColStats]],
-      blooms: Map[String, Map[String, Bloom]],
-      op: Option[String],
-      eqDeletes: Seq[(String, Seq[String])] = Nil,
-      changeset: Option[String] = None): String = {
-    // Stats/blooms may only ride the files THIS commit adds: a line
-    // for an untouched file would silently shadow-update pruning
-    // metadata outside the add/remove ledger (ADVICE r16 — the replay
-    // assumes attachments ⊆ added, and this require makes that a
-    // contract, not a convention).
-    val extraneous = (stats.keySet ++ blooms.keySet) -- added.toSet
-    require(extraneous.isEmpty,
-      s"commit stats/blooms must cover only added files; extraneous: " +
-        extraneous.toSeq.sorted.mkString(", "))
-    op.foreach(o => require(!o.contains('\n') && o.nonEmpty,
-      "op tag must be a non-empty single line"))
-    eqDeletes.foreach { case (p, cols) =>
-      require(cols.nonEmpty, s"equality delete $p needs key columns")
-      require(!(p +: cols).exists(v => v.contains('\t') ||
-        v.contains('\n') || v.contains(',')),
-        s"equality-delete path/columns must not contain tabs/newlines/" +
-          s"commas: $p")
-    }
-    changeset.foreach(c => require(!c.contains('\t') && !c.contains('\n'),
-      "changeset path must be a single tab-free line"))
-    (s"P $parent" +:
-      (op.map("O " + _).toSeq ++ changeset.map("C " + _).toSeq ++
-        added.sorted.map("A " + _) ++ removed.sorted.map("R " + _) ++
-        deletes.sorted.map("D " + _) ++
-        eqDeletes.sortBy(_._1).map { case (p, cols) =>
-          s"E $p\t${cols.mkString(",")}" } ++
-        statsLines(stats) ++ bloomLines(blooms)))
-      .mkString("", "\n", "\n")
-  }
+  private def bloomHex(blooms: Map[String, Map[String, Bloom]])
+      : Map[String, Map[String, Manifest.BloomHex]] =
+    blooms.map { case (f, cols) =>
+      f -> cols.map { case (c, b) => c -> Manifest.BloomHex.of(b) } }
 
   /** THE atomic name-claim seam every log write rides (manifests,
     * checkpoints, ref journals, the streaming/sync commit loops):
@@ -637,15 +696,9 @@ object CommitLog {
     if (anc == desc) return true
     if (anc > desc) return false
     if (anc == 0L) return true
-    val byVersion = listLog(tableDir)
-      .groupBy(f => versionOf(f.getName).get)
+    val log = new LogListing(tableDir)
     var v = desc
-    while (v > anc) {
-      val m = byVersion.getOrElse(v, Seq.empty)
-        .find(!_.getName.endsWith(".checkpoint.txt"))
-        .getOrElse(throw SnapshotExpired(v, earliestVersion(tableDir)))
-      v = parseParent(m)
-    }
+    while (v > anc) v = log.commit(v)._2
     v == anc
   }
 
@@ -690,8 +743,9 @@ object CommitLog {
       op: Option[String] = None): Long = {
     val (seq, parent) = refHead(tableDir, name)
       .getOrElse(throw new IllegalArgumentException(s"unknown ref '$name'"))
-    val body = manifestBody(parent, added, removed, deletes, stats,
-      blooms, op)
+    val body = Manifest(parent = Some(parent), op = op, added = added,
+      removed = removed, deletes = deletes, stats = stats,
+      blooms = bloomHex(blooms)).render
     var v = math.max(latestVersion(tableDir), parent) + 1
     while (!publishAtomic(tableDir, manifestName(v), body)) v += 1
     if (!publishAtomicIn(refDir(tableDir, name), refSeqName(seq + 1L),
@@ -700,147 +754,18 @@ object CommitLog {
     v
   }
 
-  /** (data adds, removes, positional-delete adds) of one manifest. */
-  private def parse(f: File): (Seq[String], Seq[String], Seq[String]) = {
-    val lines = Files.readAllLines(f.toPath).toArray(Array.empty[String])
-    (lines.collect { case l if l.startsWith("A ") => l.drop(2) }.toSeq,
-      lines.collect { case l if l.startsWith("R ") => l.drop(2) }.toSeq,
-      lines.collect { case l if l.startsWith("D ") => l.drop(2) }.toSeq)
-  }
-
-  /** EQUALITY-delete files added by one manifest: `E <path>\t<cols>`
-    * lines as (relative path, key columns). See the object doc's
-    * equality-delete section.
-    */
-  private def parseEq(f: File): Seq[(String, Seq[String])] =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collect { case l if l.startsWith("E ") => l.drop(2).split('\t') }
-      .collect { case Array(path, cols) =>
-        (path, cols.split(',').toSeq) }
-      .toSeq
-
-  /** Parent version recorded in a manifest's `P` line. */
-  private def parseParent(f: File): Long =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collectFirst { case l if l.startsWith("P ") => l.drop(2).toLong }
-      .getOrElse(throw new IllegalStateException(
-        s"manifest ${f.getName} has no parent line"))
-
-  /** Operation tag (`O <op>` line) a writer recorded at commit time —
-    * the semantic intent the file lists alone cannot express:
-    * `replace` marks a PHYSICAL rewrite (compaction, z-order, a MOR
-    * fold) whose logical row set is unchanged, which is what lets
-    * [[changes]] render mixed add+remove commits correctly instead of
-    * refusing (the Iceberg snapshot-summary `operation` /
-    * Delta `dataChange=false` idea).
-    */
-  private def parseOp(f: File): Option[String] =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collectFirst { case l if l.startsWith("O ") => l.drop(2) }
-
-  /** Changeset file (`C <path>` line) a MERGE writer attached at
-    * commit time — a parquet of the commit's logical row changes
-    * (table columns + `_change_type`), the Delta `_change_data` idea:
-    * what lets [[changes]] render a COW MERGE as update
-    * preimage/postimage pairs instead of refusing.
-    */
-  private def parseChangeset(f: File): Option[String] =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collectFirst { case l if l.startsWith("C ") => l.drop(2) }
-
-  private def checkpointFile(tableDir: String, v: Long): File = {
-    val f = new File(logDir(tableDir), checkpointName(v))
-    if (!f.isFile)
-      throw SnapshotExpired(v, earliestVersion(tableDir))
-    f
-  }
-
-  /** The manifest CHAIN ending at version `asOf`: walk the `P` parent
-    * pointers from `asOf` down to version 0, or to the first version
-    * on the chain that has a checkpoint, whichever comes first.
-    * Returns (checkpoint base version — 0 when replay starts from the
-    * empty table — and the plain manifests oldest → newest). On LINEAR
-    * history (every commit's parent is the previous version) this is
-    * exactly the old `(base + 1) to asOf` replay; on BRANCHED history
-    * (refs/WAP — a commit whose parent is not `version - 1`) it
-    * resolves the state of the lineage the version actually descends
-    * from, never mixing in concurrent branches that happen to hold
-    * nearby version numbers. A missing manifest on the walk raises
-    * [[SnapshotExpired]] (a racing expiry deleted it).
-    */
-  private def chainTo(tableDir: String, asOf: Long): (Long, Seq[File]) = {
-    val byVersion = listLog(tableDir)
-      .groupBy(f => versionOf(f.getName).get)
-    var v = asOf
-    val ms = scala.collection.mutable.ArrayBuffer[File]()
-    while (v > 0L) {
-      val at = byVersion.getOrElse(v, Seq.empty)
-      if (at.exists(_.getName.endsWith(".checkpoint.txt")))
-        return (v, ms.reverse.toSeq)
-      val m = at.find(!_.getName.endsWith(".checkpoint.txt"))
-        .getOrElse(throw SnapshotExpired(asOf, earliestVersion(tableDir)))
-      ms += m
-      v = parseParent(m)
-    }
-    (0L, ms.reverse.toSeq)
-  }
-
-  /** Stats manifest lines: `S <file>\t<col>\t<min>\t<max>` (tab-split
-    * so file paths with spaces stay parseable; values are refused tabs
-    * and newlines at write).
-    */
-  private def statsLines(
-      stats: Map[String, Map[String, ColStats]]): Seq[String] =
-    stats.toSeq.sortBy(_._1).flatMap { case (file, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, s) =>
-        require(!Seq(file, c, s.min, s.max).exists(v =>
-          v.contains('\t') || v.contains('\n')),
-          s"stats values must not contain tabs/newlines: $file.$c")
-        s"S $file\t$c\t${s.min}\t${s.max}"
-      }
-    }
-
-  private def parseStats(f: File): Map[String, Map[String, ColStats]] =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collect { case l if l.startsWith("S ") => l.drop(2).split('\t') }
-      .collect { case Array(file, c, mn, mx) => (file, c, ColStats(mn, mx)) }
-      .groupBy(_._1)
-      .map { case (file, rows) =>
-        file -> rows.map(r => r._2 -> r._3).toMap }
-
-  /** Bloom manifest lines: `F <file>\t<col>\t<m>\t<k>\t<hex bits>`. */
-  private def bloomLines(
-      blooms: Map[String, Map[String, Bloom]]): Seq[String] =
-    blooms.toSeq.sortBy(_._1).flatMap { case (file, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, b) =>
-        require(!Seq(file, c).exists(v =>
-          v.contains('\t') || v.contains('\n')),
-          s"bloom keys must not contain tabs/newlines: $file.$c")
-        s"F $file\t$c\t${b.m}\t${b.k}\t${b.encode}"
-      }
-    }
-
-  private def parseBlooms(f: File): Map[String, Map[String, Bloom]] =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collect { case l if l.startsWith("F ") => l.drop(2).split('\t') }
-      .collect { case Array(file, c, m, k, hex) =>
-        (file, c, Bloom.decode(m.toInt, k.toInt, hex)) }
-      .groupBy(_._1)
-      .map { case (file, rows) =>
-        file -> rows.map(r => r._2 -> r._3).toMap }
-
-  /** Per-file column stats of snapshot `asOf`, replayed like
-    * [[liveFiles]]: stats attach to a file when a commit ADDS it (a
-    * re-add replaces them — the fold clears any prior stats for every
-    * file in the commit's ADD list, so a re-add WITHOUT fresh stats
-    * reads as "no stats" (conservatively scanned by [[planScan]]),
-    * never as the stale pre-re-add bounds, which could wrongly skip a
-    * file whose new data widened the range — ADVICE r16), and drop
-    * with the file on remove. Only live files appear.
+  /** Per-file column stats of snapshot `asOf`: stats attach to a file
+    * when a commit ADDS it (a re-add replaces them — the fold clears
+    * any prior stats for every file in the commit's ADD list, so a
+    * re-add WITHOUT fresh stats reads as "no stats" (conservatively
+    * scanned by [[planScan]]), never as the stale pre-re-add bounds,
+    * which could wrongly skip a file whose new data widened the range
+    * — ADVICE r16), and drop with the file on remove. Only live files
+    * appear.
     */
   def statsAt(tableDir: String,
       asOf: Long): Map[String, Map[String, ColStats]] =
-    replayFileMeta(tableDir, asOf, parseStats)
+    snapshotAt(tableDir, asOf).liveStats
 
   /** Per-file Bloom filters of snapshot `asOf` — the `F`-line sibling
     * of [[statsAt]], replayed under the identical attach/clear rules
@@ -849,31 +774,7 @@ object CommitLog {
     */
   def bloomsAt(tableDir: String,
       asOf: Long): Map[String, Map[String, Bloom]] =
-    replayFileMeta(tableDir, asOf, parseBlooms)
-
-  /** Shared replay for per-file manifest attachments (range stats `S`
-    * lines, Bloom filters `F` lines): fold the parent chain from the
-    * newest checkpoint, attaching metadata when a commit ADDS a file —
-    * a re-add CLEARS any prior attachment for every file in the
-    * commit's ADD list, so a re-add WITHOUT fresh metadata reads as
-    * "none" (conservatively scanned by [[planScan]]), never as stale
-    * pre-re-add values, which could wrongly skip a file whose new data
-    * widened the range (ADVICE r16) — and dropping with the file on
-    * remove. Missing manifests raise the same typed [[SnapshotExpired]]
-    * as [[liveFiles]]/[[ledgerAt]] under racing expiry.
-    */
-  private def replayFileMeta[T](tableDir: String, asOf: Long,
-      parseMeta: File => Map[String, T]): Map[String, T] = {
-    val live = liveFiles(tableDir, asOf).toSet
-    val (base, replay) = chainTo(tableDir, asOf)
-    val start: Map[String, T] =
-      if (base == 0L) Map.empty
-      else parseMeta(checkpointFile(tableDir, base))
-    replay.foldLeft(start) { (acc, m) =>
-      val (add, rem, _) = parse(m)
-      (acc -- rem -- add) ++ parseMeta(m)
-    }.filter { case (f, _) => live.contains(f) }
-  }
+    snapshotAt(tableDir, asOf).liveBlooms
 
   /** SCAN PLANNING from manifest metadata alone — the read-side payoff
     * of carrying [[ColStats]] in commits: decide which of snapshot
@@ -889,12 +790,13 @@ object CommitLog {
       preds: Seq[RangePredicate],
       eqPreds: Seq[EqPredicate] = Nil,
       inPreds: Seq[InPredicate] = Nil): ScanPlan = {
-    val stats = statsAt(tableDir, asOf)
+    val snap = snapshotAt(tableDir, asOf)
+    val stats = snap.liveStats
     val blooms =
       if (eqPreds.isEmpty && inPreds.isEmpty)
         Map.empty[String, Map[String, Bloom]]
-      else bloomsAt(tableDir, asOf)
-    val live = liveFiles(tableDir, asOf)
+      else snap.liveBlooms
+    val live = snap.liveFiles
     val skipped = scala.collection.mutable.Map[String, Long]()
       .withDefaultValue(0L)
     val noStats = scala.collection.mutable.ArrayBuffer[String]()
@@ -943,10 +845,10 @@ object CommitLog {
     */
   def aggBounds(tableDir: String, asOf: Long, column: String,
       cmp: (String, String) => Int): Option[(String, String)] = {
-    val (live, dels, eqs) = liveSets(tableDir, asOf)
-    if (dels.nonEmpty || eqs.nonEmpty) return None
-    val stats = statsAt(tableDir, asOf)
-    val per = live.map(f => stats.get(f).flatMap(_.get(column)))
+    val snap = snapshotAt(tableDir, asOf)
+    if (snap.deletes.nonEmpty || snap.eqDeletes.nonEmpty) return None
+    val per = snap.liveFiles.map(f =>
+      snap.liveStats.get(f).flatMap(_.get(column)))
     if (per.isEmpty || per.exists(_.isEmpty)) None
     else {
       val bs = per.flatten
@@ -977,8 +879,8 @@ object CommitLog {
   private def readParquet(spark: SparkSession, base: String,
       paths: Seq[String],
       options: Map[String, String] = Map.empty): DataFrame = {
-    val key = paths.sorted.mkString(" ") +
-      options.toSeq.sorted.mkString("")
+    val key = paths.sorted.mkString("\u0000") +
+      options.toSeq.sorted.mkString("\u0001")
     val cached = schemaMemo.get(key)
     val rd = spark.read.option("basePath", base).options(options)
     val df = (if (cached != null) rd.schema(cached) else rd)
@@ -997,56 +899,28 @@ object CommitLog {
     readParquet(spark, base, files.map(f => s"$base/$f"))
   }
 
-  /** The live (data files, positional-delete files, equality-delete
-    * files) of snapshot `asOf`: replay from the newest checkpoint ≤
-    * asOf. Refuses loudly when the version is expired (below every
-    * surviving manifest) or unknown (above the head). `R` lines remove
-    * any kind (paths are unique across the table); a fold commit
-    * removes data files together with the delete files that
-    * referenced them.
+  /** The live data-file set of snapshot `asOf`: replay from the
+    * newest checkpoint on its chain. Refuses loudly when the version is
+    * expired (below every surviving manifest) or unknown (above the
+    * head). `R` lines remove any kind (paths are unique across the
+    * table); a fold commit removes data files together with the delete
+    * files that referenced them.
     */
-  private def liveSets(tableDir: String, asOf: Long)
-      : (Seq[String], Seq[String], Seq[(String, Seq[String])]) = {
-    val head = latestVersion(tableDir)
-    require(asOf >= 1 && asOf <= head,
-      s"unknown snapshot v$asOf (log head is v$head)")
-    // Replay follows the PARENT CHAIN (not the version-number range):
-    // identical on linear history, and the only correct reading on
-    // branched history — a concurrent branch's commits hold nearby
-    // version numbers but are not on this snapshot's lineage.
-    val (base, replay) = chainTo(tableDir, asOf)
-    val start: (Set[String], Set[String], Map[String, Seq[String]]) =
-      if (base == 0L) (Set.empty, Set.empty, Map.empty)
-      else {
-        val cp = checkpointFile(tableDir, base)
-        val (a, _, dl) = parse(cp)
-        (a.toSet, dl.toSet, parseEq(cp).toMap)
-      }
-    val (data, dels, eqs) = replay.foldLeft(start) {
-      case ((live, dlive, elive), m) =>
-        val (add, rem, del) = parse(m)
-        (live -- rem ++ add, dlive -- rem ++ del,
-          (elive -- rem) ++ parseEq(m))
-    }
-    (data.toSeq.sorted, dels.toSeq.sorted, eqs.toSeq.sortBy(_._1))
-  }
-
-  /** The live data-file set of snapshot `asOf` (see [[liveSets]]). */
   def liveFiles(tableDir: String, asOf: Long): Seq[String] =
-    liveSets(tableDir, asOf)._1
+    snapshotAt(tableDir, asOf).liveFiles
 
   /** The live positional-delete files of snapshot `asOf` — empty on a
     * table with no unfolded merge-on-read deletes.
     */
   def liveDeleteFiles(tableDir: String, asOf: Long): Seq[String] =
-    liveSets(tableDir, asOf)._2
+    snapshotAt(tableDir, asOf).liveDeletes
 
   /** The live EQUALITY-delete files of snapshot `asOf` as (path, key
     * columns) — empty on a table with no unfolded equality deletes.
     */
   def liveEqDeleteFiles(tableDir: String,
       asOf: Long): Seq[(String, Seq[String])] =
-    liveSets(tableDir, asOf)._3
+    snapshotAt(tableDir, asOf).liveEqDeletes
 
   /** Read snapshot `asOf` (default: [[defaultVersion]] — the head on a
     * linear log, the `main` ref's version on a branched one) as a
@@ -1072,17 +946,21 @@ object CommitLog {
    */
   def read(spark: SparkSession, tableDir: String,
       asOf: Option[Long] = None,
-      options: Map[String, String] = Map.empty): DataFrame =
-    readInternal(spark, tableDir, asOf, options, keepRel = false)
-
-  private def readInternal(spark: SparkSession, tableDir: String,
-      asOf: Option[Long], options: Map[String, String],
-      keepRel: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
+      options: Map[String, String] = Map.empty): DataFrame = {
     // default through the MAIN ref on a branched log — never the
     // global version counter (see defaultVersion)
     val v = asOf.getOrElse(defaultVersion(tableDir))
-    val (files, dels, eqs) = liveSets(tableDir, v)
+    readSnapshot(spark, tableDir, v, snapshotAt(tableDir, v), options,
+      keepRel = false)
+  }
+
+  /** [[read]] of version `v`, whose state the caller already holds. */
+  private def readSnapshot(spark: SparkSession, tableDir: String, v: Long,
+      snap: Snapshot, options: Map[String, String],
+      keepRel: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, element_at, split}
+    val (files, dels, eqs) =
+      (snap.liveFiles, snap.liveDeletes, snap.liveEqDeletes)
     require(files.nonEmpty, s"snapshot v$v is empty")
     val base = dataDir(tableDir)
     def scanOf(fs: Seq[String]): DataFrame = {
@@ -1133,10 +1011,10 @@ object CommitLog {
     val eqApplied =
       if (eqs.isEmpty) scanOf(files)
       else {
-        val (addV, eqV) = seqVersions(tableDir, v)
         def applying(f: String): Seq[(String, Seq[String])] =
           eqs.filter { case (p, _) =>
-            eqV.getOrElse(p, Long.MaxValue) > addV.getOrElse(f, 0L) }
+            snap.eqSeq.getOrElse(p, Long.MaxValue) >
+              snap.dataSeq.getOrElse(f, 0L) }
         val groups = files.groupBy(f => applying(f).map(_._1))
         if (groups.size == 1) foldEq(scanOf(files), applying(files.head))
         else groups.toSeq.sortBy(_._1.mkString(","))
@@ -1144,8 +1022,12 @@ object CommitLog {
           .reduce(_ unionByName _)
       }
     // column mapping LAST: files, delete keys, and stats all speak
-    // physical names; only the reader's output is logical
-    applySchemaView(eqApplied, tableDir, v)
+    // physical names; only the reader's output is logical (renames
+    // then drops, in mapping order)
+    snap.schema.foldLeft(eqApplied) {
+      case (d, (phys, Some(logical))) => d.withColumnRenamed(phys, logical)
+      case (d, (phys, None)) => d.drop(phys)
+    }
   }
 
   /** ROW LINEAGE: snapshot `asOf` with a `_commit_version` column —
@@ -1164,44 +1046,13 @@ object CommitLog {
       asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val v = asOf.getOrElse(defaultVersion(tableDir))
-    val (addV, _) = seqVersions(tableDir, v)
-    val live = liveFiles(tableDir, v).toSet
+    val snap = snapshotAt(tableDir, v)
     import spark.implicits._
-    val lineage = addV.view.filterKeys(live.contains).toSeq
+    val lineage = snap.dataSeq.view.filterKeys(snap.data).toSeq
       .toDF("__rel", "_commit_version")
-    readInternal(spark, tableDir, Some(v), Map.empty, keepRel = true)
+    readSnapshot(spark, tableDir, v, snap, Map.empty, keepRel = true)
       .join(broadcast(lineage), Seq("__rel"), "left")
       .drop("__rel")
-  }
-
-  /** FIRST-ADD sequence numbers of snapshot `asOf`'s live data and
-    * equality-delete files — (dataFile → version, eqFile → version),
-    * replayed along the parent chain. A re-add (restore) keeps the
-    * ORIGINAL sequence (file names are unique and files immutable, so
-    * first-add identifies the content's true age — the property that
-    * keeps "delete applies to strictly older data" correct across
-    * rollbacks). Checkpoint base: data files seq 0, eq files seq
-    * `base` — i.e. a checkpointed erasure applies to every
-    * checkpointed data file, preserving pre-expiry behavior.
-    */
-  private def seqVersions(tableDir: String,
-      asOf: Long): (Map[String, Long], Map[String, Long]) = {
-    val (cpBase, replay) = chainTo(tableDir, asOf)
-    val start: (Map[String, Long], Map[String, Long]) =
-      if (cpBase == 0L) (Map.empty, Map.empty)
-      else {
-        val cp = checkpointFile(tableDir, cpBase)
-        val (a, _, _) = parse(cp)
-        (a.map(_ -> 0L).toMap, parseEq(cp).map(_._1 -> cpBase).toMap)
-      }
-    replay.foldLeft(start) { case ((dv, ev), m) =>
-      val mv = versionOf(m.getName).get
-      val (add, _, _) = parse(m)
-      (add.foldLeft(dv)((acc, f) =>
-        if (acc.contains(f)) acc else acc + (f -> mv)),
-        parseEq(m).map(_._1).foldLeft(ev)((acc, f) =>
-          if (acc.contains(f)) acc else acc + (f -> mv)))
-    }
   }
 
   /** The (fpath, pos) rows a positional-delete commit publishes: the
@@ -1233,50 +1084,54 @@ object CommitLog {
     * fromV = 0 reads everything up to toV.
     */
   def addedFiles(tableDir: String, fromV: Long, toV: Long): Seq[String] = {
-    val head = latestVersion(tableDir)
-    require(fromV >= 0 && fromV <= toV && toV <= head,
-      s"bad incremental range ($fromV, $toV]: log head is v$head")
+    val log = new LogListing(tableDir)
+    require(fromV >= 0 && fromV <= toV && toV <= log.head,
+      s"bad incremental range ($fromV, $toV]: log head is v${log.head}")
     // horizon check FIRST: a range reaching below the expiry horizon
     // reports the typed SnapshotExpired, not whichever lineage refusal
     // the descending walk happens to meet first (expiry refuses
     // branched logs, so on any expired log fromV+1 < earliest means
     // that manifest is gone)
-    val earliest = earliestVersion(tableDir)
-    if (fromV + 1 < earliest) throw SnapshotExpired(fromV + 1, earliest)
-    val byVersion = listLog(tableDir)
-      .groupBy(f => versionOf(f.getName).get)
-    // Walk the parent chain from toV down to fromV: on linear history
-    // this visits exactly (fromV, toV]; on branched history it visits
-    // only toV's lineage and REFUSES when fromV is not on it (an
-    // increment across lineages has no well-defined file delta).
-    var v = toV
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    while (v > fromV) {
-      val m = byVersion.getOrElse(v, Seq.empty)
-        .find(!_.getName.endsWith(".checkpoint.txt"))
-        .getOrElse(throw SnapshotExpired(v, earliestVersion(tableDir)))
-      val (add, rem, del) = parse(m)
-      if (rem.nonEmpty || del.nonEmpty || parseEq(m).nonEmpty)
+    if (fromV + 1 < log.earliest)
+      throw SnapshotExpired(fromV + 1, log.earliest)
+    lineage(log, fromV, toV)(p =>
+      s"increment ($fromV, $toV]: v$toV's lineage reaches v$p " +
+        s"without passing v$fromV — the versions are on different " +
+        "branches and a file-level increment between them is " +
+        "undefined; read each lineage separately"
+    ).flatMap { case (v, m, _) =>
+      if (m.removed.nonEmpty || m.deletes.nonEmpty || m.eqDeletes.nonEmpty)
         throw new IllegalStateException(
           s"incremental read across non-append commit v$v " +
-            s"(${rem.size} files removed, ${del.size} positional + " +
-            s"${parseEq(m).size} equality delete files added): " +
-            "file-level increments are only valid over " +
+            s"(${m.removed.size} files removed, ${m.deletes.size} " +
+            s"positional + ${m.eqDeletes.size} equality delete files " +
+            "added): file-level increments are only valid over " +
             "append-only history — a remove rewrites rows and a " +
             "positional/equality delete retracts them, and silently " +
             "unioning added files would miscount either way; full " +
             "rescan or row-level merge required")
-      out ++= add
-      val p = parseParent(m)
-      require(p >= fromV,
-        s"increment ($fromV, $toV]: v$toV's lineage reaches v$p " +
-          s"without passing v$fromV — the versions are on different " +
-          "branches and a file-level increment between them is " +
-          "undefined; read each lineage separately")
-      v = p
-    }
-    out.distinct.sorted.toSeq
+      m.added
+    }.toSeq.distinct.sorted
   }
+
+  /** The plain manifests on `toV`'s PARENT CHAIN in (fromV, toV],
+    * newest first — the walk [[addedFiles]], [[lineageVersions]] and
+    * [[changes]] share. On linear history it visits exactly (fromV,
+    * toV]; on branched history only toV's lineage, and it refuses with
+    * `offLineage(p)` when the chain reaches p < fromV without passing
+    * fromV (a delta across lineages is undefined). Lazy: each step's
+    * lineage check runs after the caller handled the step before it.
+    */
+  private def lineage(log: LogListing, fromV: Long, toV: Long)(
+      offLineage: Long => String): Iterator[(Long, Manifest, Long)] =
+    Iterator.unfold(toV) { v =>
+      require(v >= fromV, offLineage(v))
+      if (v == fromV) None
+      else {
+        val (m, p) = log.commit(v)
+        Some(((v, m, p), p))
+      }
+    }
 
   /** The versions on `toV`'s PARENT CHAIN in (fromV, toV], ascending —
     * what a paced consumer steps through. Version-NUMBER arithmetic
@@ -1287,25 +1142,13 @@ object CommitLog {
     * crosses expired manifests.
     */
   def lineageVersions(tableDir: String, fromV: Long, toV: Long): Seq[Long] = {
-    val head = latestVersion(tableDir)
-    require(fromV >= 0 && fromV <= toV && toV <= head,
-      s"bad lineage range ($fromV, $toV]: log head is v$head")
-    val byVersion = listLog(tableDir)
-      .groupBy(f => versionOf(f.getName).get)
-    var v = toV
-    val out = scala.collection.mutable.ArrayBuffer[Long]()
-    while (v > fromV) {
-      val m = byVersion.getOrElse(v, Seq.empty)
-        .find(!_.getName.endsWith(".checkpoint.txt"))
-        .getOrElse(throw SnapshotExpired(v, earliestVersion(tableDir)))
-      out += v
-      val p = parseParent(m)
-      require(p >= fromV,
-        s"lineage ($fromV, $toV]: v$toV's chain reaches v$p without " +
-          s"passing v$fromV — the versions are on different branches")
-      v = p
-    }
-    out.reverse.toSeq
+    val log = new LogListing(tableDir)
+    require(fromV >= 0 && fromV <= toV && toV <= log.head,
+      s"bad lineage range ($fromV, $toV]: log head is v${log.head}")
+    lineage(log, fromV, toV)(p =>
+      s"lineage ($fromV, $toV]: v$toV's chain reaches v$p without " +
+        s"passing v$fromV — the versions are on different branches"
+    ).map(_._1).toSeq.reverse
   }
 
   /** Total on-disk bytes of the entries version `v`'s manifest ADDS —
@@ -1317,18 +1160,13 @@ object CommitLog {
     * widening the manifest format).
     */
   def addedBytes(tableDir: String, v: Long): Long = {
-    val byVersion = listLog(tableDir)
-      .groupBy(f => versionOf(f.getName).get)
-    val m = byVersion.getOrElse(v, Seq.empty)
-      .find(!_.getName.endsWith(".checkpoint.txt"))
-      .getOrElse(throw SnapshotExpired(v, earliestVersion(tableDir)))
-    val (add, _, _) = parse(m)
+    val (m, _) = new LogListing(tableDir).commit(v)
     val base = dataDir(tableDir)
     def len(f: File): Long =
       if (f.isDirectory)
         Option(f.listFiles()).fold(0L)(_.map(len).sum)
       else f.length()
-    add.map(rel => len(new File(base, rel))).sum
+    m.added.map(rel => len(new File(base, rel))).sum
   }
 
   /** Read the increment (fromV, toV] as a DataFrame (see
@@ -1393,40 +1231,35 @@ object CommitLog {
   def changes(spark: SparkSession, tableDir: String, fromV: Long,
       toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val head = latestVersion(tableDir)
-    require(fromV >= 0 && fromV <= toV && toV <= head,
-      s"bad change range ($fromV, $toV]: log head is v$head")
+    val log = new LogListing(tableDir)
+    require(fromV >= 0 && fromV <= toV && toV <= log.head,
+      s"bad change range ($fromV, $toV]: log head is v${log.head}")
     require(toV > fromV, s"empty change range ($fromV, $toV]")
     // horizon first — same rationale as addedFiles
-    val earliest = earliestVersion(tableDir)
-    if (fromV + 1 < earliest) throw SnapshotExpired(fromV + 1, earliest)
-    val byVersion = listLog(tableDir)
-      .groupBy(f => versionOf(f.getName).get)
+    if (fromV + 1 < log.earliest)
+      throw SnapshotExpired(fromV + 1, log.earliest)
     val base = dataDir(tableDir)
-    var v = toV
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    while (v > fromV) {
-      val m = byVersion.getOrElse(v, Seq.empty)
-        .find(!_.getName.endsWith(".checkpoint.txt"))
-        .getOrElse(throw SnapshotExpired(v, earliestVersion(tableDir)))
-      val (add, rem, del) = parse(m)
-      val eqs = parseEq(m)
-      val op = parseOp(m)
-      val changesetOf = parseChangeset(m)
-      val parent = parseParent(m)
-      if (changesetOf.isDefined) {
+    lineage(log, fromV, toV)(p =>
+      s"change range ($fromV, $toV]: v$toV's lineage reaches " +
+        s"v$p without passing v$fromV — the versions are on " +
+        "different branches; feed each lineage separately"
+    ).foreach { case (v, m, parent) =>
+      // the parent's state, for the delete branches below
+      lazy val ps = snapshotAt(tableDir, parent)
+      if (m.changeset.isDefined) {
         // the writer recorded the logical changes at commit time; the
         // commit's file lists are the PHYSICAL effect of those changes
         // and carry no additional information for the feed
-        parts += spark.read.parquet(s"$base/${changesetOf.get}")
+        parts += spark.read.parquet(s"$base/${m.changeset.get}")
           .withColumn("_commit_version", lit(v))
-      } else if (op.contains("replace")) {
+      } else if (m.op.contains("replace")) {
         // physical rewrite: no logical rows changed, nothing to emit
-      } else if (rem.nonEmpty) {
+      } else if (m.removed.nonEmpty) {
         throw new IllegalStateException(
-          s"change feed across ${op.fold("untagged")(o => s"'$o'")} " +
-            s"rewrite commit v$v (${rem.size} files removed, " +
-            s"${op.fold("no O tag")(_ => "no changeset")}): file lists " +
+          s"change feed across ${m.op.fold("untagged")(o => s"'$o'")} " +
+            s"rewrite commit v$v (${m.removed.size} files removed, " +
+            s"${m.op.fold("no O tag")(_ => "no changeset")}): file lists " +
             "alone cannot distinguish a compaction (no logical change) " +
             "from an overwrite (every removed row deleted) — tag " +
             "rewrite commits with op = Some(\"replace\") or attach a " +
@@ -1434,29 +1267,29 @@ object CommitLog {
             "deliberately has neither, and row-level consumers resync " +
             "from the restored snapshot")
       } else {
-        if (add.nonEmpty)
-          parts += readParquet(spark, base, add.map(f => s"$base/$f"))
+        if (m.added.nonEmpty)
+          parts += readParquet(spark, base, m.added.map(f => s"$base/$f"))
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(v))
-        if (del.nonEmpty) {
+        if (m.deletes.nonEmpty) {
           // the deleted rows' CONTENT lives in the parent snapshot's
           // files at the recorded positions; the delete side is tiny
           // (that is the point of MOR), so broadcast the positions and
           // keep the scan shuffle-free
           val delDf0 = spark.read
-            .parquet(del.map(f => s"$base/$f"): _*)
+            .parquet(m.deletes.map(f => s"$base/$f"): _*)
             .select(col("fpath").as("__fp"), col("pos").as("__ri"))
           // at-most-once delete contract (ADVICE r17): drop positions
           // the parent's live delete files already marked — an
           // overlapping re-mark is not a logical change
-          val pdels = liveDeleteFiles(tableDir, parent)
+          val pdels = ps.liveDeletes
           val delDf =
             if (pdels.isEmpty) delDf0
             else delDf0.join(
               spark.read.parquet(pdels.map(f => s"$base/$f"): _*)
                 .select(col("fpath").as("__fp"), col("pos").as("__ri")),
               Seq("__fp", "__ri"), "left_anti")
-          val pfiles = liveFiles(tableDir, parent)
+          val pfiles = ps.liveFiles
           val marked = readParquet(spark, base,
             pfiles.map(f => s"$base/$f"))
             .select(col("*"), col("_metadata.file_path").as("__fp"),
@@ -1465,7 +1298,7 @@ object CommitLog {
             .drop("__fp", "__ri")
           // rows a live equality delete of the parent already erased
           // are not deleted again by a positional re-mark
-          val peqs = liveEqDeleteFiles(tableDir, parent)
+          val peqs = ps.liveEqDeletes
           parts += peqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
             .foldLeft(marked) { case (df, (cols, group)) =>
               val keys = spark.read
@@ -1476,13 +1309,14 @@ object CommitLog {
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_version", lit(v))
         }
-        if (eqs.nonEmpty) {
+        if (m.eqDeletes.nonEmpty) {
           // equality-delete content: the MOR-APPLIED parent read
           // semi-joined on the keys — rows already dead at the parent
           // (positionally marked or erased by an earlier equality
           // delete) never re-emit
-          val pread = read(spark, tableDir, Some(parent))
-          parts += eqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
+          val pread = readSnapshot(spark, tableDir, parent, ps, Map.empty,
+            keepRel = false)
+          parts += m.eqDeletes.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
             .map { case (cols, group) =>
               val keys = spark.read
                 .parquet(group.map(_._1).map(f => s"$base/$f"): _*)
@@ -1493,11 +1327,6 @@ object CommitLog {
             .withColumn("_commit_version", lit(v))
         }
       }
-      require(parent >= fromV,
-        s"change range ($fromV, $toV]: v$toV's lineage reaches " +
-          s"v$parent without passing v$fromV — the versions are on " +
-          "different branches; feed each lineage separately")
-      v = parent
     }
     // a range of only replace commits is a legitimate EMPTY feed (a
     // streaming consumer crossing a compaction sees zero change rows,
@@ -1520,7 +1349,7 @@ object CommitLog {
     * the manifest fold over the result lands exactly on `toV`'s
     * (data, pos-delete, eq-delete) triple. Re-added files get their
     * `toV` stats/Bloom attachments back (a re-add without metadata
-    * would read as "no stats" — [[replayFileMeta]] — and planScan
+    * would read as "no stats" — [[Snapshot.applied]] — and planScan
     * would stop pruning them).
     *
     * The commit carries a CHANGESET (`C` line) of the logical row diff
@@ -1557,8 +1386,9 @@ object CommitLog {
     require(toV >= 1 && toV < head,
       s"restore target v$toV outside rollback range 1..${head - 1}")
     requireLinearHistory(tableDir, "restore")
-    val (dH, delH, eqH) = liveSets(tableDir, head)
-    val (dT, delT, eqT) = liveSets(tableDir, toV)
+    val (now, tgt) = (snapshotAt(tableDir, head), snapshotAt(tableDir, toV))
+    val (dH, delH, eqH) = (now.liveFiles, now.liveDeletes, now.liveEqDeletes)
+    val (dT, delT, eqT) = (tgt.liveFiles, tgt.liveDeletes, tgt.liveEqDeletes)
     require(dH != dT || delH != delT || eqH != eqT,
       s"restore to v$toV is a no-op: snapshot v$head already has " +
         "identical live sets")
@@ -1573,33 +1403,34 @@ object CommitLog {
     val csOpt =
       if (!withChangeset) None
       else {
-        val cur = read(spark, tableDir, Some(head))
-        val tgt = read(spark, tableDir, Some(toV))
-        require(cur.columns.sorted.sameElements(tgt.columns.sorted),
+        val cur = readSnapshot(spark, tableDir, head, now, Map.empty,
+          keepRel = false)
+        val old = readSnapshot(spark, tableDir, toV, tgt, Map.empty,
+          keepRel = false)
+        require(cur.columns.sorted.sameElements(old.columns.sorted),
           s"restore across a schema change (v$toV: " +
-            s"${tgt.columns.sorted.mkString(",")} vs v$head: " +
+            s"${old.columns.sorted.mkString(",")} vs v$head: " +
             s"${cur.columns.sorted.mkString(",")}) cannot render a " +
             "changeset: roll the schema forward instead, or pass " +
             "withChangeset = false for a metadata-only rollback")
-        val curAligned = cur.select(tgt.columns.toIndexedSeq.map(
+        val curAligned = cur.select(old.columns.toIndexedSeq.map(
           org.apache.spark.sql.functions.col): _*)
         val cs = s"cs_restore_v${head + 1}"
-        tgt.exceptAll(curAligned)
+        old.exceptAll(curAligned)
           .withColumn("_change_type", lit("insert"))
-          .unionByName(curAligned.exceptAll(tgt)
+          .unionByName(curAligned.exceptAll(old)
             .withColumn("_change_type", lit("delete")))
           .coalesce(1).write.parquet(s"${dataDir(tableDir)}/$cs")
         Some(cs)
       }
-    commitTagged(tableDir, readd, removed, head,
-      stats = statsAt(tableDir, toV).view
-        .filterKeys(readd.contains).toMap,
+    // re-added files get their toV stats/blooms back, still hex
+    val readdSet = readd.toSet
+    commitManifest(tableDir, head, Manifest(op = Some(s"restore v$toV"),
+      changeset = csOpt, added = readd, removed = removed,
       deletes = delT.diff(delH),
-      blooms = bloomsAt(tableDir, toV).view
-        .filterKeys(readd.contains).toMap,
-      op = Some(s"restore v$toV"),
       eqDeletes = eqT.filterNot(e => eqH.exists(_._1 == e._1)),
-      changeset = csOpt)
+      stats = tgt.liveStats.filter { case (f, _) => readdSet(f) },
+      blooms = tgt.liveBloomHex.filter { case (f, _) => readdSet(f) }))
   }
 
   /** The table's commit HISTORY as a DataFrame — the inspection
@@ -1614,16 +1445,13 @@ object CommitLog {
     * log and so from the history.
     */
   def history(spark: SparkSession, tableDir: String): DataFrame = {
-    val rows = listLog(tableDir)
-      .filter(f => !f.getName.endsWith(".checkpoint.txt"))
-      .sortBy(f => versionOf(f.getName).get)
-      .map { m =>
-        val (add, rem, del) = parse(m)
-        (versionOf(m.getName).get, parseParent(m),
-          parseOp(m).orNull, add.size.toLong, rem.size.toLong,
-          del.size.toLong, parseEq(m).size.toLong,
-          if (parseChangeset(m).isDefined) 1L else 0L)
-      }
+    val log = new LogListing(tableDir)
+    val rows = log.commits.map { v =>
+      val (m, p) = log.commit(v)
+      (v, p, m.op.orNull, m.added.size.toLong, m.removed.size.toLong,
+        m.deletes.size.toLong, m.eqDeletes.size.toLong,
+        if (m.changeset.isDefined) 1L else 0L)
+    }
     spark.createDataFrame(rows).toDF("version", "parent", "op",
       "n_added", "n_removed", "n_pos_delete_files", "n_eq_delete_files",
       "has_changeset")
@@ -1648,12 +1476,12 @@ object CommitLog {
     * (well-defined pins); FORKED manifests are not, because a version
     * horizon cannot express reachability on a branched parent chain.
     */
-  private def requireLinearManifests(tableDir: String, what: String): Unit =
-    require(listLog(tableDir)
-      .filter(f => !f.getName.endsWith(".checkpoint.txt"))
-      .forall(f => parseParent(f) == versionOf(f.getName).get - 1L),
+  private def requireLinearManifests(tableDir: String, what: String): Unit = {
+    val log = new LogListing(tableDir)
+    require(log.commits.forall(v => log.commit(v)._2 == v - 1L),
       s"$what supports linear history only: this log carries " +
         "branched manifests (parent != version - 1)")
+  }
 
   private[graft] def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
@@ -1690,8 +1518,8 @@ object CommitLog {
     // tolerate those instead of tearing a re-run.
     def liveUnion(v: Long): Option[Set[String]] =
       try {
-        val (a, dl, eq) = liveSets(tableDir, v)
-        Some((a ++ dl ++ eq.map(_._1)).toSet)
+        val s = snapshotAt(tableDir, v)
+        Some(s.data ++ s.deletes ++ s.eqDeletes.keySet)
       } catch { case _: SnapshotExpired => None }
     // refs below the horizon pin their snapshots (a ref at 0 — the
     // empty table — or at an already-expired version pins nothing)
@@ -1704,7 +1532,7 @@ object CommitLog {
     // Union of live sets (data AND delete files) over every version
     // the caller may still read — the kept range AND the pins.
     val surviving = ((keepFrom to head) ++ pinned).flatMap { v =>
-      val (a, dl, eq) = liveSets(tableDir, v); a ++ dl ++ eq.map(_._1)
+      val s = snapshotAt(tableDir, v); s.data ++ s.deletes ++ s.eqDeletes.keySet
     }.toSet
     // Union over expired versions — resolvable while their manifests
     // still exist.
@@ -1717,7 +1545,7 @@ object CommitLog {
     checkpoint(tableDir, Some(keepFrom)): Unit
     pinned.foreach(v => checkpoint(tableDir, Some(v)): Unit)
     // 2. drop expired manifests, keeping each pin's checkpoint
-    val dropped = listLog(tableDir).filter { f =>
+    val dropped = new LogListing(tableDir).files.filter { f =>
       versionOf(f.getName).exists(v => v < keepFrom &&
         !(pinnedSet(v) && f.getName.endsWith(".checkpoint.txt"))) }
     dropped.foreach(f => Files.deleteIfExists(f.toPath))
@@ -1764,18 +1592,12 @@ object CommitLog {
   def checkpoint(tableDir: String, asOfOpt: Option[Long] = None): Boolean = {
     val asOf = asOfOpt.getOrElse(latestVersion(tableDir))
     if (asOf == 0L) return false // empty table: nothing to checkpoint
-    val (live, dels, eqs) = liveSets(tableDir, asOf)
-    val (bids, u) = ledgerAt(tableDir, asOf)
-    val body = ((s"P ${asOf - 1}" +: live.map("A " + _)) ++
-      dels.map("D " + _) ++
-      eqs.map { case (p, cols) => s"E $p\t${cols.mkString(",")}" } ++
-      schemaLines(schemaViewAt(tableDir, asOf)) ++
-      statsLines(statsAt(tableDir, asOf)) ++
-      bloomLines(bloomsAt(tableDir, asOf)) ++
-      bids.toSeq.sorted.map("B " + _) ++
-      (if (u > 0L) Seq(s"U $u") else Nil))
-      .mkString("", "\n", "\n")
-    publishAtomic(tableDir, checkpointName(asOf), body)
+    val s = snapshotAt(tableDir, asOf)
+    publishAtomic(tableDir, checkpointName(asOf), Manifest(
+      parent = Some(asOf - 1), added = s.liveFiles, deletes = s.liveDeletes,
+      eqDeletes = s.liveEqDeletes, schemaOps = s.schema,
+      stats = s.liveStats, blooms = s.liveBloomHex, batchIds = s.batchIds,
+      upstream = Some(s.upstream).filter(_ > 0L)).render)
   }
 
   // ------------------------------------------------------------------
@@ -1816,14 +1638,9 @@ object CommitLog {
       require(!taken,
         s"logical name '$l' is already held by another column")
     }
-    val next = expectedCurrent + 1
-    val body = (s"P $expectedCurrent" +: "O schema" +:
-      (renames.sortBy(_._1).map { case (p, l) => s"M rename\t$p\t$l" } ++
-        drops.sorted.map(p => s"M drop\t$p")))
-      .mkString("", "\n", "\n")
-    if (!publishAtomic(tableDir, manifestName(next), body))
-      throw CommitConflict(next, latestVersion(tableDir))
-    next
+    commitManifest(tableDir, expectedCurrent, Manifest(op = Some("schema"),
+      schemaOps = renames.sortBy(_._1).map { case (p, l) => (p, Some(l)) } ++
+        drops.sorted.map(_ -> None)))
   }
 
   /** The column mapping of snapshot `asOf` as ordered (physical →
@@ -1832,43 +1649,8 @@ object CommitLog {
     * names absent from the result are unmapped (logical == physical).
     */
   def schemaViewAt(tableDir: String,
-      asOf: Long): Seq[(String, Option[String])] = {
-    if (asOf == 0L) return Nil
-    val (base, replay) = chainTo(tableDir, asOf)
-    val start: Seq[(String, Option[String])] =
-      if (base == 0L) Nil
-      else parseSchemaOps(checkpointFile(tableDir, base))
-    (start ++ replay.flatMap(parseSchemaOps))
-      .foldLeft(Seq.empty[(String, Option[String])]) { (acc, op) =>
-        acc.filterNot(_._1 == op._1) :+ op
-      }
-  }
-
-  /** Apply snapshot `asOf`'s column mapping to a physically-named
-    * frame: renames then drops, in mapping order. [[read]] calls this
-    * last, so MOR/equality anti-joins ran against physical names.
-    */
-  private def applySchemaView(df: DataFrame, tableDir: String,
-      asOf: Long): DataFrame =
-    schemaViewAt(tableDir, asOf).foldLeft(df) {
-      case (d, (phys, Some(logical))) => d.withColumnRenamed(phys, logical)
-      case (d, (phys, None)) => d.drop(phys)
-    }
-
-  private def schemaLines(view: Seq[(String, Option[String])]): Seq[String] =
-    view.map {
-      case (p, Some(l)) => s"M rename\t$p\t$l"
-      case (p, None) => s"M drop\t$p"
-    }
-
-  private def parseSchemaOps(f: File): Seq[(String, Option[String])] =
-    Files.readAllLines(f.toPath).toArray(Array.empty[String])
-      .collect { case l if l.startsWith("M ") => l.drop(2).split('\t') }
-      .collect {
-        case Array("rename", p, l) => (p, Some(l))
-        case Array("drop", p) => (p, None)
-      }
-      .toSeq
+      asOf: Long): Seq[(String, Option[String])] =
+    new LogListing(tableDir).snapshot(asOf).schema
 
   /** In-flight-staging sentinel for `data/<rel>`: a writer touches it
     * BEFORE staging and removes it after its commit publishes (or on
@@ -1912,10 +1694,10 @@ object CommitLog {
     // staged-but-unexposed txn bodies (TxnLog) anchor their data files
     // too: a multi-table txn stages before its marker publishes, and
     // the vacuum must not race the MARK
-    val referenced = listLog(tableDir).flatMap { f =>
-      val (a, r, dl) = parse(f)
-      a ++ r ++ dl ++ parseEq(f).map(_._1) ++ parseChangeset(f)
-    }.map(_.split("/").head).toSet ++ TxnLog.stagedReferences(tableDir)
+    val referenced = new LogListing(tableDir).files.map(Manifest.read)
+      .flatMap(m => m.added ++ m.removed ++ m.deletes ++
+        m.eqDeletes.map(_._1) ++ m.changeset)
+      .map(_.split("/").head).toSet ++ TxnLog.stagedReferences(tableDir)
     val cutoff = System.currentTimeMillis() - graceMs
     val entries = Option(new File(dataDir(tableDir)).listFiles())
       .fold(Seq.empty[File])(_.toSeq)
@@ -1945,39 +1727,13 @@ object CommitLog {
     orphans.size
   }
 
-  private def parseLedger(f: File): (Set[Long], Long) = {
-    val lines = Files.readAllLines(f.toPath).toArray(Array.empty[String])
-    (lines.collect { case l if l.startsWith("B ") => l.drop(2).toLong }
-      .toSet,
-      (lines.collect { case l if l.startsWith("U ") => l.drop(2).toLong }
-        .toSeq :+ 0L).max)
-  }
-
-  /** The exactly-once ledger at snapshot `asOf` — committed batch ids
-    * and the highest consumed upstream version — replayed from the
-    * newest checkpoint at or below `asOf`. Checkpoints summarize the
-    * ledger of every manifest below them, so snapshot expiry can never
-    * reopen a committed batch or a consumed upstream range for replay.
-    */
-  private def ledgerAt(tableDir: String, asOf: Long): (Set[Long], Long) = {
-    if (asOf == 0L) return (Set.empty, 0L)
-    val (base, replay) = chainTo(tableDir, asOf)
-    val start: (Set[Long], Long) =
-      if (base == 0L) (Set.empty, 0L)
-      else parseLedger(checkpointFile(tableDir, base))
-    replay.foldLeft(start) { (acc, m) =>
-      val (bs, u) = parseLedger(m)
-      (acc._1 ++ bs, math.max(acc._2, u))
-    }
-  }
-
   /** Batch ids already committed to this table (the `B` lines) — the
     * idempotence ledger of [[appendBatch]], checkpoint-aware: expiry
     * folds expired manifests' ids into the checkpoint, and replay
     * costs O(commits since the newest checkpoint).
     */
   def committedBatchIds(tableDir: String): Set[Long] =
-    ledgerAt(tableDir, latestVersion(tableDir))._1
+    headSnapshot(tableDir).batchIds
 
   /** EXACTLY-ONCE streaming append: the foreachBatch sink body that
     * makes the hourly-append contract ACID. Each micro-batch stages
@@ -2024,7 +1780,8 @@ object CommitLog {
           s"staged $rel vanished before commit (vacuumOrphans grace " +
             "too short for this writer's stage-to-commit latency)")
       if (publishAtomic(tableDir, manifestName(head + 1),
-        s"P $head\nB $batchId\nA $rel\n")) done = true
+        Manifest(parent = Some(head), added = Seq(rel),
+          batchIds = Set(batchId)).render)) done = true
       // else: lost the version race; loop re-checks and retries
     }
     Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath): Unit
@@ -2080,7 +1837,8 @@ object CommitLog {
           s"staged $rel vanished before commit (vacuumOrphans grace " +
             "too short for this writer's stage-to-commit latency)")
       if (publishAtomic(tableDir, manifestName(head + 1),
-        s"P $head\nB $batchId\nA $rel\nE $ek\t${keyCols.mkString(",")}\n"))
+        Manifest(parent = Some(head), added = Seq(rel),
+          eqDeletes = Seq(ek -> keyCols), batchIds = Set(batchId)).render))
         done = true
     }
     Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath)
@@ -2093,7 +1851,7 @@ object CommitLog {
     * Checkpoint-aware like [[committedBatchIds]]: expiry preserves it.
     */
   def consumedUpstreamVersion(tableDir: String): Long =
-    ledgerAt(tableDir, latestVersion(tableDir))._2
+    headSnapshot(tableDir).upstream
 
   /** EXACTLY-ONCE derived-table sync — the consumer half of the
     * incremental contract: read the upstream increment
@@ -2144,7 +1902,8 @@ object CommitLog {
           s"staged $rel vanished before commit (vacuumOrphans grace " +
             "too short for this syncer's stage-to-commit latency)")
       if (publishAtomic(downDir, manifestName(head + 1),
-        s"P $head\nU $upHead\nA $rel\n")) {
+        Manifest(parent = Some(head), added = Seq(rel),
+          upstream = Some(upHead)).render)) {
         Files.deleteIfExists(stagingSentinel(downDir, rel).toPath): Unit
         return Some((head + 1, from, upHead))
       }

@@ -77,10 +77,8 @@ object TxnLog {
       // the body, is the id's lifetime record
       require(!CommitLog.committedBatchIds(p.tableDir).contains(txnId),
         s"txn $txnId already exposed into ${p.tableDir}")
-      val body = (p.added.sorted.map("A " + _) ++
-        p.removed.sorted.map("R " + _)).mkString("", "\n", "\n")
       require(CommitLog.publishAtomicIn(stagedDir(p.tableDir),
-        txnName(txnId), body),
+        txnName(txnId), Manifest(added = p.added, removed = p.removed).render),
         s"txn $txnId already staged in ${p.tableDir}")
     }
   }
@@ -150,8 +148,8 @@ object TxnLog {
           // with the id now in the ledger is the benign race, and a
           // vanished body with the id still absent is a genuine
           // protocol violation
-          val body: Option[String] =
-            try Some(new String(Files.readAllBytes(sf.toPath), "UTF-8"))
+          val staged: Option[Manifest] =
+            try Some(Manifest.read(sf))
             catch {
               case _: java.nio.file.NoSuchFileException |
                   _: java.io.FileNotFoundException =>
@@ -168,7 +166,8 @@ object TxnLog {
             if (CommitLog.committedBatchIds(t).contains(txnId)) done = true
             else if (CommitLog.publishAtomic(t,
               CommitLog.manifestName(head + 1),
-              s"P $head\nB $txnId\n" + body.get)) {
+              staged.get.copy(parent = Some(head), batchIds = Set(txnId))
+                .render)) {
               done = true
               exposed += 1
             } // else: lost the version race; loop re-checks
@@ -229,10 +228,8 @@ object TxnLog {
       fs =>
         fs.filter(f => f.getName.startsWith("t") &&
           f.getName.endsWith(".txt"))
-          .flatMap(f => Files.readAllLines(f.toPath)
-            .toArray(Array.empty[String])
-            .collect { case l if l.startsWith("A ") || l.startsWith("R ")
-              => l.drop(2) })
+          .map(Manifest.read)
+          .flatMap(m => m.added ++ m.removed)
           .map(_.split("/").head).toSet
     }
 }
