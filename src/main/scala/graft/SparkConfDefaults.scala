@@ -71,6 +71,31 @@ object SparkConfDefaults {
     // either way, not by data volume).
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1024")
 
+  /** Tungsten page size for tasks that run on a JVM heap of
+    * `heapBytes`: the smallest power of two ≥ 1 MB with which 4096
+    * pages cover Spark's unified memory pool, `(heap − 300 MB) × 0.6`,
+    * capped at Spark's 64 MB maximum. Every hash aggregate, sort and
+    * shuffle-write task holds at least one whole page, so Spark's own
+    * rule (pool ÷ cores ÷ 16) spends 16 MB per task on a 3 GB local[4]
+    * heap whose hourly batches are a few thousand rows. A fixed small
+    * page would cap a task at scale instead: a task addresses at most
+    * 8192 pages (`TaskMemoryManager`'s page table), and 4096 pages —
+    * half the table — that cover the whole pool let a task run out of
+    * memory before it fills its page table, even at 50% page
+    * fragmentation. 1 MB on a 3 GB heap, 2 MB on 7 GB, 16 MB on a
+    * 64 GB executor. A record larger than a page gets a page of its
+    * own size, as under any page size.
+    */
+  def pageSizeBytes(heapBytes: Long): Long = {
+    val pool = ((heapBytes - (300L << 20)) * 0.6).toLong
+    val least = math.max(1L << 20, (pool + 4095) / 4096)
+    math.min(64L << 20, java.lang.Long.highestOneBit(least - 1) << 1)
+  }
+
+  /** `spark.buffer.pageSize` for a task heap of `heapBytes`. */
+  def pageConf(heapBytes: Long): Map[String, String] =
+    Map("spark.buffer.pageSize" -> s"${pageSizeBytes(heapBytes) >> 20}m")
+
   /** Profiling knob (guide §1): extra session confs as "k=v;k=v" from
     * SPARK_GRAFT_CONF, applied last — what lets a config hypothesis be
     * A/B-measured on the FULL bench without touching Bench.scala.
@@ -83,9 +108,14 @@ object SparkConfDefaults {
         k.trim -> v.trim
       }.toMap).getOrElse(Map.empty)
 
-  /** Apply the defaults to a session builder (pre-getOrCreate). */
+  /** Apply the defaults to a session builder (pre-getOrCreate). Every
+    * caller builds a `local[n]` session, whose tasks run on this JVM's
+    * heap, so the page size is [[pageSizeBytes]] of this JVM's maximum
+    * heap.
+    */
   def withDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    (retryConf ++ adaptiveConf ++ envConf).foldLeft(b) {
+    (retryConf ++ adaptiveConf ++ pageConf(Runtime.getRuntime.maxMemory) ++
+      envConf).foldLeft(b) {
       case (bb, (k, v)) => bb.config(k, v) }
 
   /** Local parallelism: SPARK_GRAFT_CPUS, else every core the JVM sees. */
@@ -95,11 +125,14 @@ object SparkConfDefaults {
   /** The one session builder: Bench, Verify, Explain and the test suite
     * all run this configuration. `local[cpus]` with one shuffle
     * partition per core, UTC, no UI, and the defaults above (so
-    * SPARK_GRAFT_CONF overrides any of it). The generated-class cache
-    * is JVM-wide and defaults to 100 entries; a many-query session
-    * compiles several codegen stages per query, so at 100 the queries
-    * evict each other's classes and every re-execution pays Janino
-    * again — 5000 holds the whole registry's classes.
+    * SPARK_GRAFT_CONF overrides any of it), including Tungsten pages
+    * sized from this JVM's heap by [[pageSizeBytes]] (4096 pages cover
+    * the memory pool, half of a task's 8192-entry page table). The
+    * generated-class cache is JVM-wide and defaults to 100 entries; a
+    * many-query session compiles several codegen stages per query, so
+    * at 100 the queries evict each other's classes and every
+    * re-execution pays Janino again — 5000 holds the whole registry's
+    * classes.
     */
   def session(): SparkSession = {
     val n = cpus.toString
@@ -125,8 +158,17 @@ object SparkConfDefaults {
     spark
   }
 
-  /** Apply the defaults to a bare SparkConf (cluster-submit path). */
-  def apply(conf: SparkConf): SparkConf =
-    (retryConf ++ adaptiveConf ++ envConf).foldLeft(conf) {
+  /** Apply the defaults to a bare SparkConf (cluster-submit path). The
+    * tasks run on executor JVMs, so the page size follows
+    * `spark.executor.memory` when it is set and is otherwise left to
+    * Spark.
+    */
+  def apply(conf: SparkConf): SparkConf = {
+    val executorHeap = "spark.executor.memory"
+    val pages =
+      if (conf.contains(executorHeap)) pageConf(conf.getSizeAsMb(executorHeap) << 20)
+      else Map.empty[String, String]
+    (retryConf ++ adaptiveConf ++ pages ++ envConf).foldLeft(conf) {
       case (c, (k, v)) => c.set(k, v) }
+  }
 }

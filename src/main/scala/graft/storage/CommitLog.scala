@@ -319,6 +319,35 @@ object CommitLog {
 
     def commit(v: Long): (Manifest, Long) = commit(v, v)
 
+    /** Version v's plain manifest, refused (naming `what`) unless its
+      * parent is the previous version.
+      */
+    def linearCommit(v: Long, what: String): Manifest = {
+      val (m, p) = commit(v)
+      require(p == v - 1L, s"$what supports linear history only: this " +
+        "log carries branched manifests (parent != version - 1)")
+      m
+    }
+
+    /** Every resolvable version's state on a linear log, from one pass
+      * that reads each listed manifest and checkpoint once: the same
+      * state as [[snapshot]] gives each version, and no entry for a
+      * version that no longer resolves (expired). Refuses a branched
+      * manifest like [[linearCommit]].
+      */
+    def linearSnapshots(what: String): Map[Long, Snapshot] = {
+      val states = (1L to head).scanLeft(Option(Snapshot())) { (prev, v) =>
+        val fs = byVersion.getOrElse(v, Nil)
+        val plain = fs.find(!isCheckpoint(_)).map(_ => linearCommit(v, what))
+        fs.find(isCheckpoint) match {
+          case Some(cp) => Some(Snapshot().applied(load(cp, v), 0L, v))
+          case None => plain.flatMap(m => prev.map(_.applied(m, v, v)))
+        }
+      }
+      (1L to head).zip(states.tail).collect { case (v, Some(s)) => v -> s }
+        .toMap
+    }
+
     /** The state of version `asOf`: walk the `P` parent pointers down
       * to version 0 or to the first version with a checkpoint, then fold
       * oldest → newest. Following parents (not version numbers) resolves
@@ -1478,9 +1507,7 @@ object CommitLog {
     */
   private def requireLinearManifests(tableDir: String, what: String): Unit = {
     val log = new LogListing(tableDir)
-    require(log.commits.forall(v => log.commit(v)._2 == v - 1L),
-      s"$what supports linear history only: this log carries " +
-        "branched manifests (parent != version - 1)")
+    log.commits.foreach(log.linearCommit(_, what))
   }
 
   private[graft] def deleteRecursively(f: File): Unit = {
@@ -1506,44 +1533,40 @@ object CommitLog {
     * markers, and pinning is well-defined.
     */
   def expireSnapshots(tableDir: String, keepFrom: Long): (Int, Int) = {
-    val head = latestVersion(tableDir)
+    val log = new LogListing(tableDir)
+    val head = log.head
     require(keepFrom >= 1 && keepFrom <= head,
       s"retention horizon v$keepFrom outside committed range 1..$head")
-    requireLinearManifests(tableDir, "expireSnapshots")
-    val earliest = earliestVersion(tableDir)
+    // One fold along the chain gives every version's state. A pinned
+    // snapshot's checkpoint keeps earliest BELOW the horizon after a
+    // first expiry pass, so versions in the expired range (and refs
+    // pointing into it) may already be unresolvable: they have no
+    // state, and a re-run tolerates them instead of tearing.
+    val states = log.linearSnapshots("expireSnapshots")
+    val earliest = log.earliest
     if (keepFrom <= earliest) return (0, 0)
-    // A pinned snapshot's checkpoint keeps earliestVersion BELOW the
-    // horizon after a first expiry pass, so versions in the expired
-    // range (and refs pointing into it) may already be unresolvable —
-    // tolerate those instead of tearing a re-run.
-    def liveUnion(v: Long): Option[Set[String]] =
-      try {
-        val s = snapshotAt(tableDir, v)
-        Some(s.data ++ s.deletes ++ s.eqDeletes.keySet)
-      } catch { case _: SnapshotExpired => None }
+    def at(v: Long): Snapshot =
+      states.getOrElse(v, throw SnapshotExpired(v, earliest))
+    def live(s: Snapshot): Set[String] = s.data ++ s.deletes ++ s.eqDeletes.keySet
     // refs below the horizon pin their snapshots (a ref at 0 — the
     // empty table — or at an already-expired version pins nothing)
     val pinned = listRefs(tableDir)
       .map(r => refVersion(tableDir, r))
-      .filter(v => v >= earliest && v < keepFrom)
-      .filter(v => liveUnion(v).isDefined)
+      .filter(v => v >= earliest && v < keepFrom && states.contains(v))
       .distinct.sorted
     val pinnedSet = pinned.toSet
     // Union of live sets (data AND delete files) over every version
     // the caller may still read — the kept range AND the pins.
-    val surviving = ((keepFrom to head) ++ pinned).flatMap { v =>
-      val s = snapshotAt(tableDir, v); s.data ++ s.deletes ++ s.eqDeletes.keySet
-    }.toSet
+    val surviving = ((keepFrom to head) ++ pinned).flatMap(v => live(at(v))).toSet
     // Union over expired versions — resolvable while their manifests
     // still exist.
     val expired = (earliest until keepFrom)
-      .flatMap(v => liveUnion(v).getOrElse(Set.empty)).toSet
+      .flatMap(v => states.get(v).fold(Set.empty[String])(live)).toSet
     // 1. checkpoint the horizon and every pin — atomically published,
     // each carrying its live set, stats AND exactly-once ledger, so
     // expiry can't tear a checkpoint or reopen a committed batch for
     // replay, and a pinned snapshot resolves standalone
-    checkpoint(tableDir, Some(keepFrom)): Unit
-    pinned.foreach(v => checkpoint(tableDir, Some(v)): Unit)
+    (keepFrom +: pinned).foreach(v => writeCheckpoint(tableDir, v, at(v)): Unit)
     // 2. drop expired manifests, keeping each pin's checkpoint
     val dropped = new LogListing(tableDir).files.filter { f =>
       versionOf(f.getName).exists(v => v < keepFrom &&
@@ -1592,13 +1615,17 @@ object CommitLog {
   def checkpoint(tableDir: String, asOfOpt: Option[Long] = None): Boolean = {
     val asOf = asOfOpt.getOrElse(latestVersion(tableDir))
     if (asOf == 0L) return false // empty table: nothing to checkpoint
-    val s = snapshotAt(tableDir, asOf)
+    writeCheckpoint(tableDir, asOf, snapshotAt(tableDir, asOf))
+  }
+
+  /** Publish `s`, the state of version `asOf`, as its checkpoint. */
+  private def writeCheckpoint(tableDir: String, asOf: Long,
+      s: Snapshot): Boolean =
     publishAtomic(tableDir, checkpointName(asOf), Manifest(
       parent = Some(asOf - 1), added = s.liveFiles, deletes = s.liveDeletes,
       eqDeletes = s.liveEqDeletes, schemaOps = s.schema,
       stats = s.liveStats, blooms = s.liveBloomHex, batchIds = s.batchIds,
       upstream = Some(s.upstream).filter(_ > 0L)).render)
-  }
 
   // ------------------------------------------------------------------
   // COLUMN MAPPING — rename/drop as metadata (the Delta column-mapping

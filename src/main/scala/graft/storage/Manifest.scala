@@ -110,12 +110,19 @@ private[storage] object Manifest {
   private def fieldSafe(v: String): Boolean =
     !v.exists(c => c == '\t' || c == '\n' || c == '\r')
 
+  /** Manifest files read so far on the calling thread: the cost meter
+    * behind the storage specs' read-count bounds.
+    */
+  private[storage] val readsOnThread: ThreadLocal[java.lang.Long] =
+    ThreadLocal.withInitial(() => 0L)
+
   /** Read one manifest file, once. Blank lines are skipped (an empty
     * staged body is a lone newline); any other line that is not a
     * known kind with well-formed fields fails with the file and line
     * number.
     */
   def read(f: File): Manifest = {
+    readsOnThread.set(readsOnThread.get + 1L)
     val lines = Files.readAllLines(f.toPath).asScala.toSeq.zipWithIndex
       .filter(_._1.nonEmpty)
     def kind(l: String): Char =

@@ -137,9 +137,14 @@ object TxnLog {
     */
   def recover(coordDir: String): Int = {
     var exposed = 0
+    // Each participant's ledger, read once per call: a ledger only
+    // grows, so an id it holds stays committed, and an id it lacks is
+    // re-checked against the live log before anything is exposed.
+    val ledgers = scala.collection.mutable.Map.empty[String, Set[Long]]
     committedTxns(coordDir).foreach { case (txnId, tables) =>
       tables.foreach { t =>
-        var done = CommitLog.committedBatchIds(t).contains(txnId)
+        var done = ledgers.getOrElseUpdate(t, CommitLog.committedBatchIds(t))
+          .contains(txnId)
         if (!done) {
           val sf = new File(stagedDir(t), txnName(txnId))
           // a RACING recoverer may expose and clean the body between
@@ -170,6 +175,7 @@ object TxnLog {
                 .render)) {
               done = true
               exposed += 1
+              ledgers -= t // re-read on its next marker
             } // else: lost the version race; loop re-checks
           }
         }
