@@ -125,8 +125,9 @@ object Bench {
     // Shared-cache pre-build (VERDICT r13 #2): every family's persisted
     // cross-query frame is forced HERE, at the target scale, before the
     // timed passes — each build timed on its own `[bench-cache]` line
-    // and reported under "caches" in BENCH_DETAIL.json. Without this,
-    // a family's cache build lands on whichever member query runs
+    // (with the block-manager memory and disk bytes held once it is
+    // built) and reported under "caches" in BENCH_DETAIL.json. Without
+    // this, a family's cache build lands on whichever member query runs
     // first, so per-query numbers silently move whenever a family
     // gains a query (r13: d14 read 5.9× "slower" after d27 joined the
     // shared pair frame; x37 absorbed the whole BPE-chain build).
@@ -142,7 +143,11 @@ object Bench {
         try {
           force(build(spark, sfDir))
           val sec = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench-cache] $cname $sec%.2fs")
+          val held = spark.sparkContext.getRDDStorageInfo
+          val memMb = held.map(_.memSize).sum / 1e6
+          val diskMb = held.map(_.diskSize).sum / 1e6
+          System.err.println(
+            f"[bench-cache] $cname $sec%.2fs held mem $memMb%.1fMB disk $diskMb%.1fMB")
           cname -> sec
         } catch { case e: Throwable =>
           System.err.println(s"[bench-cache] FAIL $cname: $e")

@@ -189,7 +189,7 @@ object QueriesDedup {
         .select(col("id").as("doc_id")), "doc_id")
     val (e, buckets) = DedupOps.prefixBuckets(keeperSh, "doc_id", "sh",
       7, 10, maxBucket = 1000L)
-    (e, buckets.localCheckpoint())
+    (e, SessionMemo.retain(buckets))
   }
 
   /** MinHash signatures over KEEPERS only, memo-checkpointed — the
@@ -241,7 +241,7 @@ object QueriesDedup {
       (_: (DataFrame, DataFrame))._2) { (s, d) =>
     val (e, buckets) = DedupOps.prefixBuckets(docsWithShingles(s, d),
       "doc_id", "sh", 7, 10, maxBucket = 1000L)
-    (e, buckets.localCheckpoint())
+    (e, SessionMemo.retain(buckets))
   }
 
   /** d31's body over a tokenized (doc_id, toks) frame: full-token-hash

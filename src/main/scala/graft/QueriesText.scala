@@ -1466,7 +1466,7 @@ object QueriesText {
     // lands on the [bench-cache] line / first caller, never split
     // across consumers) and truncates the plan to a LogicalRDD
     def persisted(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint()
+      val out = SessionMemo.retain(df)
       persistedFrames += out
       out
     }

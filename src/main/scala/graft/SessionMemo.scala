@@ -18,7 +18,10 @@ import org.apache.spark.storage.StorageLevel
   *    re-ANALYZED on every invocation (~0.3 s of Catalyst for a
   *    six-join-layer frame), while a checkpoint truncates the plan to a
   *    LogicalRDD. A LogicalRDD cannot be re-found by plan equality, so
-  *    it is shared through this map.
+  *    it is shared through this map. Its blocks are stored serialized
+  *    and compressed ([[retain]]): a deserialized UnsafeRow copy costs
+  *    ~100 B per row of five longs, the compressed bytes ~14 B
+  *    (`dedup.keeper_pairs`, 496k rows: 51.1 → 7.1 MB).
   *
   * A shared frame's name here is its [[SharedFrame]] name (`table.*`
   * keys are the resolved tables): the frame declares it once, and
@@ -69,10 +72,22 @@ object SessionMemo {
     }
   }
 
-  /** [[apply]] over an eager localCheckpoint of `build`. */
+  /** [[apply]] over [[retain]] of `build`. */
   def checkpoint(s: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
-    apply(s, dir, name)(build.localCheckpoint())
+    apply(s, dir, name)(retain(build))
+
+  /** `df` as a frame held for the session's lifetime: an eager
+    * localCheckpoint whose blocks are serialized and, under the default
+    * `spark.rdd.compress=true`, compressed ([[SparkConfDefaults.storageConf]]).
+    * Every checkpoint kept for the session, whether this memo holds it
+    * directly or inside a memoized value, is stored this way. The price
+    * is paid on read: every scan decompresses and deserializes the rows
+    * (plans are unchanged), which at sf0.1 costs the queries that scan
+    * `dedup.keeper_sigs` or the prefix buckets ~0.2–0.4 s each.
+    */
+  def retain(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Persist unless the CacheManager already holds this plan: repeat
     * invocations reuse the entry (found by plan equality) instead of

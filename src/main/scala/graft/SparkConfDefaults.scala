@@ -71,6 +71,18 @@ object SparkConfDefaults {
     // either way, not by data volume).
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1024")
 
+  /** Compress serialized RDD blocks. Every frame [[SessionMemo]] holds
+    * for the session's lifetime is a local checkpoint stored serialized
+    * ([[SessionMemo.retain]]); with these bytes compressed (lz4, Spark's
+    * default codec) `dedup.keeper_pairs` (496k rows of five longs) holds
+    * 7.1 MB of storage memory, against 32.1 MB serialized alone and 51.1 MB
+    * as deserialized UnsafeRow copies (~100 B per row). Deserialized
+    * blocks (the columnar batches of `persist()`ed frames) stay as they
+    * are in memory; only their copies on disk are compressed. Static:
+    * read once when the SparkContext starts.
+    */
+  val storageConf: Map[String, String] = Map("spark.rdd.compress" -> "true")
+
   /** Tungsten page size for tasks that run on a JVM heap of
     * `heapBytes`: the smallest power of two ≥ 1 MB with which 4096
     * pages cover Spark's unified memory pool, `(heap − 300 MB) × 0.6`,
@@ -114,8 +126,8 @@ object SparkConfDefaults {
     * heap.
     */
   def withDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    (retryConf ++ adaptiveConf ++ pageConf(Runtime.getRuntime.maxMemory) ++
-      envConf).foldLeft(b) {
+    (retryConf ++ adaptiveConf ++ storageConf ++
+      pageConf(Runtime.getRuntime.maxMemory) ++ envConf).foldLeft(b) {
       case (bb, (k, v)) => bb.config(k, v) }
 
   /** Local parallelism: SPARK_GRAFT_CPUS, else every core the JVM sees. */
@@ -125,7 +137,8 @@ object SparkConfDefaults {
   /** The one session builder: Bench, Verify, Explain and the test suite
     * all run this configuration. `local[cpus]` with one shuffle
     * partition per core, UTC, no UI, and the defaults above (so
-    * SPARK_GRAFT_CONF overrides any of it), including Tungsten pages
+    * SPARK_GRAFT_CONF overrides any of it), compressed serialized RDD
+    * blocks ([[storageConf]]), Tungsten pages
     * sized from this JVM's heap by [[pageSizeBytes]] (4096 pages cover
     * the memory pool, half of a task's 8192-entry page table). The
     * generated-class cache is JVM-wide and defaults to 100 entries; a
@@ -168,7 +181,7 @@ object SparkConfDefaults {
     val pages =
       if (conf.contains(executorHeap)) pageConf(conf.getSizeAsMb(executorHeap) << 20)
       else Map.empty[String, String]
-    (retryConf ++ adaptiveConf ++ pages ++ envConf).foldLeft(conf) {
+    (retryConf ++ adaptiveConf ++ storageConf ++ pages ++ envConf).foldLeft(conf) {
       case (c, (k, v)) => c.set(k, v) }
   }
 }

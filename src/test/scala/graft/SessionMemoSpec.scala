@@ -51,6 +51,27 @@ class SessionMemoSpec extends SparkTestBase {
     assert(!persistent.contains(rddId(lost.head)))
   }
 
+  test("a checkpointed frame is stored serialized, in a quarter of the bytes") {
+    // five longs a row, shaped like the dedup pair frames: ids and counts
+    val df = spark.range(200000).selectExpr("id AS id_a",
+      "id + id * 31 % 97 AS id_b", "id % 50 AS inter", "id % 70 AS n_a",
+      "id % 90 AS n_b")
+    val plain = df.localCheckpoint()
+    val kept = SessionMemo.checkpoint(spark, dir, "storage-form")(df)
+    try {
+      def stored(f: DataFrame) = spark.sparkContext.getRDDStorageInfo
+        .find(_.id == rddId(f)).getOrElse(fail(s"no blocks for rdd ${rddId(f)}"))
+      val (p, k) = (stored(plain), stored(kept))
+      assert(p.storageLevel.deserialized)
+      assert(!k.storageLevel.deserialized, k.storageLevel)
+      assert(k.memSize > 0 && k.diskSize == 0, k)
+      assert(k.memSize * 4 <= p.memSize, s"kept ${k.memSize} B, plain ${p.memSize} B")
+      assert(kept.count() == 200000)
+      assert(kept.exceptAll(plain).isEmpty && plain.exceptAll(kept).isEmpty)
+    } finally spark.sparkContext.getPersistentRDDs.get(rddId(plain))
+      .foreach(_.unpersist(blocking = true))
+  }
+
   test("the application-end hook clears every entry, the ranked RFM frame too") {
     Tables.lineitem(spark, sf0001)
     QueriesEvents.rfmRanked(spark, sf0001)

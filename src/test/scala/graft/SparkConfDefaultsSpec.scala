@@ -16,8 +16,10 @@ class SparkConfDefaultsSpec extends SparkTestBase {
 
   test("apply(SparkConf) sets every default") {
     val c = SparkConfDefaults(new SparkConf(loadDefaults = false))
-    for ((k, v) <- SparkConfDefaults.retryConf)
+    for ((k, v) <- SparkConfDefaults.retryConf ++ SparkConfDefaults.adaptiveConf ++
+        SparkConfDefaults.storageConf)
       assert(c.get(k) == v, s"$k must be set on the SparkConf")
+    assert(c.get("spark.rdd.compress") == "true")
   }
 
   test("the shared test session runs the shipped configuration") {
@@ -25,6 +27,7 @@ class SparkConfDefaultsSpec extends SparkTestBase {
     assert(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "256k")
     assert(conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "1024")
     assert(conf.get("spark.task.maxFailures") == "12")
+    assert(conf.get("spark.rdd.compress") == "true")
     val cpus = SparkConfDefaults.cpus
     assert(conf.get("spark.sql.shuffle.partitions") == cpus.toString)
     assert(spark.sparkContext.master == s"local[$cpus]")
