@@ -53,6 +53,41 @@ object Bench {
   private def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** The regression gate's parse-and-compare. `baseline` is the text of
+    * a committed BENCH_BASELINE.json (Bench's own detail format, so a
+    * regex parse of its `"sf"`, `"cpus"` and `"name":secs` fields is
+    * exact); `times` are this run's per-query seconds, looked up in the
+    * baseline under `key(name)`. A query regresses when it is BOTH
+    * >1.5x slower AND >0.3 s absolute slower — the absolute floor keeps
+    * sub-100 ms queries' scheduler jitter out of the list.
+    *
+    * Timings only compare at one shape: a baseline whose `sf` or `cpus`
+    * differs from the run's measures the host and the scale, not the
+    * code, so it yields Left(a message naming both shapes) and no
+    * comparison. Otherwise Right(the regressed names, sorted).
+    */
+  private[graft] def regressions(baseline: String, sf: String, cpus: Int,
+      times: Seq[(String, Double)],
+      key: String => String): Either[String, Seq[String]] = {
+    val baseSf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(baseline)
+      .map(_.group(1))
+    val baseCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(baseline)
+      .map(_.group(1).toInt)
+    if (!baseSf.contains(sf) || !baseCpus.contains(cpus))
+      Left(s"baseline shape sf=${baseSf.getOrElse("?")} " +
+        s"cpus=${baseCpus.getOrElse("?")} differs from this run's " +
+        s"sf=$sf cpus=$cpus")
+    else {
+      val secs = "\"([A-Za-z0-9_]+)\":([0-9]+\\.[0-9]+)".r
+        .findAllMatchIn(baseline).map(m => m.group(1) -> m.group(2).toDouble)
+        .toMap
+      Right(times.collect {
+        case (n, s) if secs.get(key(n)).exists(b => s > b * 1.5 && s - b > 0.3)
+          => n
+      }.sorted)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = SparkConfDefaults.cpus
@@ -284,26 +319,17 @@ object Bench {
     // detail to: the working directory unless SPARK_GRAFT_REPO names one
     val repoDir = sys.env.getOrElse("SPARK_GRAFT_REPO",
       System.getProperty("user.dir"))
-    // Regression gate (VERDICT r10 #2): compare per-query times against
-    // the committed BENCH_BASELINE.json (the previous round's solo
-    // sf0.1 run). A query regresses when it is BOTH >1.5x slower AND
-    // >0.3s absolute slower — the absolute floor keeps sub-100ms
-    // queries' scheduler jitter out of the list; the driver's ambient
-    // load inflated r10's unchanged queries 1.6-7x, so entries here
-    // need the BASELINE.md solo-vs-driver context before being read as
-    // code regressions. The baseline file is our own detail format, so
-    // a regex parse of `"name":secs` pairs is exact.
+    // Regression gate (VERDICT r10 #2) against the committed
+    // BENCH_BASELINE.json, when it was recorded at this run's shape
     val baselinePath = new java.io.File(repoDir, "BENCH_BASELINE.json")
-    val baseline: Map[String, Double] =
-      if (baselinePath.isFile) {
-        val txt = scala.io.Source.fromFile(baselinePath, "UTF-8").mkString
-        "\"([A-Za-z0-9_]+)\":([0-9]+\\.[0-9]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    val regressed = ok.collect {
-      case (n, s) if baseline.get(key(n)).exists(b => s > b * 1.5 && s - b > 0.3)
-        => n
-    }.sorted
+    val gate: Either[String, Seq[String]] =
+      if (!baselinePath.isFile) Left(s"no $baselinePath")
+      else regressions(
+        scala.io.Source.fromFile(baselinePath, "UTF-8").mkString,
+        sfDir, cpus, ok, key)
+    gate.left.foreach(why =>
+      System.err.println(s"[bench] regression gate skipped: $why"))
+    val regressed = gate.getOrElse(Nil)
     val qsFull = ok.sortBy(_._1)
       .map { case (k, v) => "\"" + key(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -319,7 +345,7 @@ object Bench {
       .map { case (n, v) => "\"" + n + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${ok.size},"queries":$qsFull,"cache_total":${fmt(cacheTotal)},"caches":$cachesJson,"failed":$failedJson,"regressed":$regressedJson,"baseline_file":"${if (baseline.nonEmpty) "BENCH_BASELINE.json" else ""}"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${ok.size},"queries":$qsFull,"cache_total":${fmt(cacheTotal)},"caches":$cachesJson,"failed":$failedJson,"regressed":$regressedJson,"baseline_file":"${if (gate.isRight) "BENCH_BASELINE.json" else ""}"}"""
     val detailFile = new java.io.File(repoDir, "BENCH_DETAIL.json")
     try {
       val w = new java.io.PrintWriter(detailFile, "UTF-8")

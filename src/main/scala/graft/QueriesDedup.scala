@@ -165,8 +165,7 @@ object QueriesDedup {
   /** The ONE bounded prefix-bucket expansion (verified pairs + minimal
     * successor offset at B=8), PERSISTED — d29 is its min_off ≤ 2
     * filter and d32 its budget curve, so the expansion+verify cost is
-    * paid once (VERDICT r14 #2a: d32 previously re-expanded at B=8
-    * what d29 had already expanded at B=2).
+    * paid once.
     */
   private lazy val budgetPairs = SharedFrame.checkpointed(
       "dedup.budget_pairs", prefixBucketFrames) { (s, d) =>
@@ -243,6 +242,14 @@ object QueriesDedup {
       "doc_id", "sh", 7, 10, maxBucket = 1000L)
     (e, SessionMemo.retain(buckets))
   }
+
+  /** The SimHash chunk buckets at d5's parameters (4×15-bit chunks,
+    * hamming ≤ 3) — the postings both budget arms (d28, d30) read.
+    */
+  private def simhashChunkPostings(s: SparkSession, d: String): DataFrame =
+    DedupOps.simhashPostings(
+      DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
+      maxHamming = 3)
 
   /** d31's body over a tokenized (doc_id, toks) frame: full-token-hash
     * clone collapse to min-id keepers (with clique sizes), then the
@@ -710,11 +717,13 @@ object QueriesDedup {
     // within-bucket pair list is exhaustive. Clique connectivity
     // survives (consecutive successors chain every bucket), so
     // cluster membership is preserved; d5 stays the exactness oracle
-    // at sf ≤ 0.01, and d30's curve prices the budget choice.
+    // at sf ≤ 0.01, and d30's curve prices the budget choice. The
+    // min-offset frame is windowed at B=2 itself: nothing else reads it.
     Query("d28_simhash_budget", (s, d) => {
-      DedupOps.simhashPairsBudgeted(
-        DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
-        maxHamming = 3, perDocBudget = 2)
+      val postings = simhashChunkPostings(s, d)
+      DedupOps.budgetedPairs(
+        DedupOps.simhashMinOff(postings, maxHamming = 3, maxB = 2),
+        postings, budget = 2)
     },
       // Mirrors d28: the same cf chain, per-bucket row_number in doc_id
       // order (= Spark's id-sorted posting array), a pair survives iff
@@ -746,11 +755,11 @@ object QueriesDedup {
     // Bounded-emission prefix-filter pairs: d17's lossless generator
     // with the same B=2 successor window per prefix bucket (d17 read
     // 199 s / 250 k pairs at sf1 — output-bound). Same LOUD-truncation
-    // contract as d28; exact-Jaccard verification unchanged.
+    // contract as d28; exact-Jaccard verification unchanged. A filter
+    // of the shared B=8 min-offset frame d32 also reads.
     Query("d29_prefix_budget", (s, d) => {
       val (_, buckets) = prefixBucketFrames(s, d)
-      DedupOps.prefixFilterPairsBudgetedFromVerified(
-        budgetPairs(s, d), buckets, perDocBudget = 2)
+      DedupOps.budgetedPairs(budgetPairs(s, d), buckets, budget = 2)
     },
       // Mirrors d29: per-bucket row_number in id order over SURVIVING
       // buckets (pb joins ok, = Spark's filtered id-sorted arrays), the
@@ -795,9 +804,10 @@ object QueriesDedup {
     // smaller budget is a filter, not a re-expansion). This is the
     // table that prices a budget before deploying it at scale.
     Query("d30_budget_curve", (s, d) => {
-      DedupOps.simhashBudgetCurve(
-        DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
-        maxHamming = 3, budgets = Seq(1, 2, 4, 8))
+      val postings = simhashChunkPostings(s, d)
+      DedupOps.budgetCurve(
+        DedupOps.simhashMinOff(postings, maxHamming = 3, maxB = 8),
+        postings, budgets = Seq(1, 2, 4, 8))
     },
       // Mirrors d30: one offset-windowed expansion at max budget, each
       // pair's minimal offset decides which budgets keep it; slot
@@ -884,13 +894,14 @@ object QueriesDedup {
          |  >= 0.8""".stripMargin,
       reads = Seq(cloneMembers, keeperPairs)),
 
-    // d30's twin for the prefix-filter generator: the same min-offset
-    // curve over d29's buckets (B ∈ {1,2,4,8}) — pairs_kept at B=2
-    // equals d29's pair count by construction (pinned in spec), so
-    // the two budget arms are priced by the same instrument.
+    // d30's twin for the prefix-filter generator: the same curve over
+    // d29's buckets and shared min-offset frame (B ∈ {1,2,4,8}) —
+    // pairs_kept at B=2 equals d29's pair count by construction
+    // (pinned in spec), so the two budget arms are priced by the same
+    // instrument.
     Query("d32_prefix_budget_curve", (s, d) => {
       val (_, buckets) = prefixBucketFrames(s, d)
-      DedupOps.prefixBudgetCurveFromVerified(budgetPairs(s, d), buckets,
+      DedupOps.budgetCurve(budgetPairs(s, d), buckets,
         budgets = Seq(1, 2, 4, 8))
     },
       // Mirrors d32: d29's pb window chain, offsets ≤ 8 with the ratio
@@ -943,13 +954,15 @@ object QueriesDedup {
     // Pairs carry both the budget's LOUD trunc counters and the
     // collapse's copies lineage, so downstream keeps full accounting.
     // The df cap here is keeper-count (d31's convention — this is a
-    // keeper-corpus operator, not a raw-frame reconstruction).
+    // keeper-corpus operator, not a raw-frame reconstruction). Same
+    // min-offset reader as d29, over the keeper buckets windowed at B=2.
     Query("d33_budget_on_keepers", (s, d) => {
       val copies = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("copies"))
       val (e, buckets) = keeperPrefixFrames(s, d)
-      DedupOps.prefixFilterPairsBudgetedFrom(e, buckets, 7, 10,
-          perDocBudget = 2)
+      DedupOps.budgetedPairs(
+          DedupOps.prefixVerifiedMinOff(e, buckets, 7, 10, maxB = 2),
+          buckets, budget = 2)
         .join(copies.select(col("keeper").as("id_a"),
           col("copies").as("copies_a")), Seq("id_a"))
         .join(copies.select(col("keeper").as("id_b"),

@@ -23,6 +23,19 @@ import org.apache.spark.sql.functions._
   *    the join fan-out — the standard trick from web-scale dedup pipelines.
   *  - All hashes are md5-derived (portable across engines for the oracle;
   *    at production scale swap in xxhash64 via the same seeded interface).
+  *
+  * Budgeted pairing (the bounded-emission valve): under budget B each
+  * element of an id-sorted posting array pairs only with its B nearest
+  * successors. One windowed expansion at the widest budget wanted, maxB,
+  * emits every (a, b, off) with off ≤ maxB, and `min_off` is the
+  * smallest offset at which ANY bucket places the pair. Every gate
+  * (length ratio, hamming, exact verify) is a function of the pair
+  * alone, so a pair survives budget B ≤ maxB iff min_off ≤ B: every
+  * budgeted answer — the pairs at one B with their LOUD truncation
+  * counters ([[budgetedPairs]]) and the kept/cut curve over several B
+  * ([[budgetCurve]]) — is a filter or an aggregate of ONE min-offset
+  * frame per generator ([[prefixVerifiedMinOff]], [[simhashMinOff]]),
+  * and no budget is expanded twice.
   */
 object DedupOps {
 
@@ -180,25 +193,34 @@ object DedupOps {
     * intersection counts with both set sizes carried.
     */
   private[graft] def shingleIntersections(docs: DataFrame, idCol: String,
-      shCol: String, maxDocFreq: Long): DataFrame = {
-    val e = shingleIndex(docs, idCol, shCol)
-    val postings = e.groupBy("s")
+      shCol: String, maxDocFreq: Long): DataFrame =
+    intersectionCounts(shingleIndex(docs, idCol, shCol).groupBy("s")
       .agg(collect_list(struct(col("id"), col("n"))).as("ds"))
       .filter(size(col("ds")) <= maxDocFreq)
-      .select(array_sort(col("ds")).as("ds"))
-    // Pair expansion as two chained Generates (codegen'd) rather than a
-    // nested transform+flatten (interpreted): a < b keeps each unordered
-    // pair once. `ds` is an aggregate output, so the second explode reads
-    // a materialized array.
-    val pairs = postings
+      .select(array_sort(col("ds")).as("ds")))
+
+  /** Every a<b pair of each id-sorted posting array `ds`, as (a, b)
+    * element structs — the one unbounded pair expansion. Two chained
+    * Generates (codegen'd) rather than a nested transform+flatten
+    * (interpreted); a.id < b.id keeps each unordered pair once. `ds` is
+    * an aggregate output, so the second explode reads a materialized
+    * array.
+    */
+  private def allPairs(postings: DataFrame): DataFrame =
+    postings
       .select(col("ds"), explode(col("ds")).as("a"))
       .select(col("a"), explode(col("ds")).as("b"))
       .filter(col("a.id") < col("b.id"))
+
+  /** Per-pair shared-posting counts over (id, n) posting arrays, both
+    * set sizes carried: (id_a, id_b, n_a, n_b, inter).
+    */
+  private def intersectionCounts(postings: DataFrame): DataFrame =
+    allPairs(postings)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.n").as("n_a"), col("b.n").as("n_b"))
-    pairs.groupBy("id_a", "id_b", "n_a", "n_b")
+      .groupBy("id_a", "id_b", "n_a", "n_b")
       .agg(count(lit(1)).as("inter"))
-  }
 
   /** Exact-clone membership over a tokenized corpus: every raw document
     * mapped to its clone clique's KEEPER (the minimum id among documents
@@ -252,19 +274,10 @@ object DedupOps {
     * (keeper df ≤ raw df ≤ cap), so the in-row a<b expansion stays
     * linear-per-bucket.
     */
-  def pairIntersectionsFromIndex(idx: DataFrame): DataFrame = {
-    val postings = idx.groupBy("s")
+  def pairIntersectionsFromIndex(idx: DataFrame): DataFrame =
+    intersectionCounts(idx.groupBy("s")
       .agg(collect_list(struct(col("id"), col("n"))).as("ds"))
-      .select(array_sort(col("ds")).as("ds"))
-    postings
-      .select(col("ds"), explode(col("ds")).as("a"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.n").as("n_a"), col("b.n").as("n_b"))
-      .groupBy("id_a", "id_b", "n_a", "n_b")
-      .agg(count(lit(1)).as("inter"))
-  }
+      .select(array_sort(col("ds")).as("ds")))
 
   /** Reconstruct the RAW-corpus pair frame (id_a, id_b, n_a, n_b, inter)
     * from keeper-level frames, applying the (symmetric) predicate BEFORE
@@ -342,29 +355,30 @@ object DedupOps {
 
   /** [[prefixFilterPairs]] over prebuilt (e, buckets) frames — the
     * entry point for callers that share ONE cached bucket frame
-    * across the unbounded/budgeted/curve consumers (the
+    * across the unbounded and budgeted consumers (the
     * `dedup.prefix_buckets` shared frame).
     */
   def prefixFilterPairsFrom(e: DataFrame, buckets: DataFrame,
-      tNum: Int, tDen: Int): DataFrame = {
-    val cand = buckets
-      .select(col("ds"), explode(col("ds")).as("a"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      // t·max ≤ min, both directions in exact integers
-      .filter(col("a.n") * lit(tDen) >= col("b.n") * lit(tNum) &&
-        col("b.n") * lit(tDen) >= col("a.n") * lit(tNum))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    verifyJaccardPairs(cand, e, tNum, tDen)
-  }
+      tNum: Int, tDen: Int): DataFrame =
+    verifyJaccardPairs(
+      allPairs(buckets).filter(lengthRatioOk(tNum, tDen))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct(),
+      e, tNum, tDen)
+
+  /** The prefix-filter length pre-filter on an (a, b) element pair:
+    * t·max ≤ min, both directions in exact integers.
+    */
+  private def lengthRatioOk(tNum: Int, tDen: Int): Column =
+    col("a.n") * lit(tDen) >= col("b.n") * lit(tNum) &&
+      col("b.n") * lit(tDen) >= col("a.n") * lit(tNum)
 
   /** The shared front half of the prefix-filter pipeline: the per-doc
     * shingle index `e` (id, n, s) and the prefix buckets as id-sorted
     * posting arrays — extracted so the unbounded [[prefixFilterPairs]]
-    * and the budgeted [[prefixFilterPairsBudgeted]] read ONE
-    * construction (divergence here would silently change what the
-    * budget arm is an approximation OF).
+    * and the budgeted [[prefixVerifiedMinOff]] read ONE construction
+    * (divergence here would silently change what the budget arm is an
+    * approximation OF).
     */
   private[graft] def prefixBuckets(docs: DataFrame, idCol: String,
       shCol: String, tNum: Int, tDen: Int, maxBucket: Long)
@@ -398,7 +412,8 @@ object DedupOps {
 
   /** The shared back half: exact-intersection verification of candidate
     * pairs against the shingle index, with the symmetric Jaccard gate
-    * in exact integers.
+    * in exact integers. Output: (id_a, id_b, inter, jaccard) followed by
+    * the candidate frame's other columns, passed through unchanged.
     *
     * IN-ROW intersection (r18): pack each doc's shingle set once
     * (O(corpus) rows), join candidate pairs to the two arrays by id,
@@ -425,77 +440,18 @@ object DedupOps {
       col("ss").as("ss_a"))
     val eb = packed.select(col("id").as("id_b"), col("n").as("n_b"),
       col("ss").as("ss_b"))
+    val extra = cand.columns.filterNot(Set("id_a", "id_b")).map(col).toSeq
     cand.join(ea, Seq("id_a")).join(eb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
+      .select(Seq(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
         org.apache.spark.sql.graft.SetExpressions
           .sortedIntersectCount(col("ss_a"), col("ss_b"))
-          .as("inter"))
+          .as("inter")) ++ extra: _*)
       .filter(col("inter") * lit(tDen + tNum) >=
         (col("n_a") + col("n_b")) * lit(tNum))
-      .select(col("id_a"), col("id_b"), col("inter"),
+      .select(Seq(col("id_a"), col("id_b"), col("inter"),
         round(col("inter") /
           (col("n_a") + col("n_b") - col("inter")).cast("double"), 6)
-          .as("jaccard"))
-  }
-
-  /** Bounded-emission arm of [[prefixFilterPairs]] (the 100 TB scale
-    * valve): each doc emits candidate pairs only to its `perDocBudget`
-    * immediate successors in each bucket's id order, so a bucket of
-    * size m expands m·B slots instead of m²/2 — the output (and the
-    * expansion cost) is linear in the index at ANY duplicate density,
-    * where the unbounded form goes quadratic on clone cliques (sf1:
-    * 250 k pairs from d17's corpus). The cut is LOUD, never silent:
-    * every surviving pair carries `trunc_a`/`trunc_b` — the total pair
-    * slots dropped around each endpoint across all its buckets,
-    * counting BOTH dropped successors (slots this element did not emit)
-    * and dropped predecessors (elements that did not emit to it), so
-    * trunc = 0 ⟺ that doc's within-bucket pair list is exhaustive.
-    * (ADVICE r14: successor-only counting let a tail doc in a saturated
-    * bucket read 0 while missing pairs to truncated predecessors — the
-    * equivalence consumers filter on was false.) Connectivity
-    * degrades gracefully: consecutive-successor windows keep every
-    * same-bucket clique connected as a chain (B ≥ 1), so downstream
-    * connected-components clustering still finds the clique — what's
-    * lost is individual pair rows, not cluster membership. The window
-    * applies BEFORE the length-ratio gate (slots are positional), and
-    * the unbounded form stays the exactness oracle at sf ≤ 0.01.
-    */
-  def prefixFilterPairsBudgeted(docs: DataFrame, idCol: String,
-      shCol: String, tNum: Int, tDen: Int, perDocBudget: Int,
-      maxBucket: Long = 1000L): DataFrame = {
-    val (e, buckets) = prefixBuckets(docs, idCol, shCol, tNum, tDen, maxBucket)
-    prefixFilterPairsBudgetedFrom(e, buckets, tNum, tDen, perDocBudget)
-  }
-
-  /** [[prefixFilterPairsBudgeted]] over prebuilt (e, buckets). */
-  def prefixFilterPairsBudgetedFrom(e: DataFrame, buckets: DataFrame,
-      tNum: Int, tDen: Int, perDocBudget: Int): DataFrame = {
-    require(perDocBudget >= 1, s"perDocBudget must be >= 1: $perDocBudget")
-    val expanded = buckets
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-      .select(col("a"),
-        slice(col("ds"), col("i") + lit(2), lit(perDocBudget)).as("succ"),
-        // dropped pair slots around THIS element: successors beyond the
-        // budget window + predecessors whose window ends before it
-        (greatest(size(col("ds")) - col("i") - lit(1) - lit(perDocBudget),
-          lit(0)) +
-          greatest(col("i") - lit(perDocBudget), lit(0)))
-          .cast("long").as("dropped"))
-    val cand = expanded
-      .select(col("a"), explode(col("succ")).as("b"))
-      .filter(col("a.n") * lit(tDen) >= col("b.n") * lit(tNum) &&
-        col("b.n") * lit(tDen) >= col("a.n") * lit(tNum))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val trunc = expanded.groupBy(col("a.id").as("id"))
-      .agg(sum(col("dropped")).as("trunc"))
-    verifyJaccardPairs(cand, e, tNum, tDen)
-      .join(trunc.select(col("id").as("id_a"), col("trunc").as("trunc_a")),
-        Seq("id_a"))
-      .join(trunc.select(col("id").as("id_b"), col("trunc").as("trunc_b")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("jaccard"),
-        col("trunc_a"), col("trunc_b"))
+          .as("jaccard")) ++ extra: _*)
   }
 
   /** Connected components over an undirected pair list (the last step of
@@ -895,11 +851,8 @@ object DedupOps {
     */
   def simhashPairs(sims: DataFrame, maxHamming: Int, chunks: Int = 4,
       chunkBits: Int = 15, maxChunkFreq: Long = 10000L): DataFrame = {
-    require(maxHamming < chunks,
-      s"pigeonhole completeness needs maxHamming < chunks " +
-        s"(got maxHamming=$maxHamming, chunks=$chunks): a pair may differ " +
-        s"in every chunk once hamming >= chunks")
-    val postings = simhashPostings(sims, chunks, chunkBits, maxChunkFreq)
+    val postings =
+      simhashPostings(sims, maxHamming, chunks, chunkBits, maxChunkFreq)
     // Hamming-verify BEFORE the distinct: bit_count per candidate
     // occurrence is a codegen'd two-instruction check, while the distinct
     // is a shuffle — filtering first means the exchange carries only the
@@ -940,12 +893,14 @@ object DedupOps {
         explode(slice(col("ds"), col("i") + lit(2), size(col("ds"))))
           .as("b"))
       .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        expr("bit_count(a.simhash ^ b.simhash)").cast("long")
-          .as("hamming"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), pairHamming)
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
+
+  /** Exact hamming distance of an (a, b) fingerprint element pair. */
+  private def pairHamming: Column =
+    expr("bit_count(a.simhash ^ b.simhash)").cast("long").as("hamming")
 
   /** Lead elements per expansion slice of one bucket's pair space —
     * bounds a slice row's in-row expansion at slice·|bucket| pairs so
@@ -955,232 +910,168 @@ object DedupOps {
   private val ExpansionSlice = 256
 
   /** The shared chunk-posting construction of [[simhashPairs]] and its
-    * budgeted/curve arms: (j, chunk) buckets as id-sorted posting
-    * arrays, over-full buckets dropped (the df-cap discipline). One
-    * construction so the budget arm approximates exactly the frame the
-    * unbounded form expands.
+    * budgeted arm ([[simhashMinOff]]): (j, chunk) buckets as id-sorted
+    * posting arrays of (id, simhash), over-full buckets dropped (the
+    * df-cap discipline). One construction so the budget arm approximates
+    * exactly the frame the unbounded form expands. The pigeonhole guard
+    * lives here because chunk equality is a complete candidate generator
+    * for `maxHamming` only while maxHamming < chunks.
     */
-  private def simhashPostings(sims: DataFrame, chunks: Int, chunkBits: Int,
-      maxChunkFreq: Long): DataFrame =
+  private[graft] def simhashPostings(sims: DataFrame, maxHamming: Int,
+      chunks: Int = 4, chunkBits: Int = 15,
+      maxChunkFreq: Long = 10000L): DataFrame = {
+    require(maxHamming < chunks,
+      s"pigeonhole completeness needs maxHamming < chunks " +
+        s"(got maxHamming=$maxHamming, chunks=$chunks): a pair may differ " +
+        s"in every chunk once hamming >= chunks")
     simhashChunks(sims, chunks, chunkBits)
       .groupBy("j", "chunk")
       .agg(collect_list(struct(col("id"), col("simhash"))).as("ds"))
       .filter(size(col("ds")) <= maxChunkFreq)
       .select(array_sort(col("ds")).as("ds"))
-
-  /** Bounded-emission arm of [[simhashPairs]] (the 100 TB scale valve;
-    * same contract as [[prefixFilterPairsBudgeted]]): each fingerprint
-    * pairs only with its `perDocBudget` immediate successors per
-    * (band, chunk) bucket, bounding both the expansion cost and the
-    * output at |index|·B — the unbounded form emitted 32.2 M pairs on
-    * sf1's clone cliques because every 2^15-saturated bucket expands
-    * quadratically. LOUD truncation: `trunc_a`/`trunc_b` carry the
-    * total pair slots dropped around each endpoint — dropped
-    * successors AND dropped predecessors, so 0 ⟺ that doc's
-    * within-bucket pair list is exhaustive (the contract
-    * [[prefixFilterPairsBudgeted]] documents). Clique connectivity survives
-    * any B ≥ 1 (consecutive successors chain the bucket), so
-    * downstream clustering keeps finding the duplicate groups; the
-    * unbounded form remains the exactness oracle at sf ≤ 0.01.
-    */
-  def simhashPairsBudgeted(sims: DataFrame, maxHamming: Int,
-      perDocBudget: Int, chunks: Int = 4, chunkBits: Int = 15,
-      maxChunkFreq: Long = 10000L): DataFrame = {
-    require(maxHamming < chunks,
-      s"pigeonhole completeness needs maxHamming < chunks " +
-        s"(got maxHamming=$maxHamming, chunks=$chunks)")
-    require(perDocBudget >= 1, s"perDocBudget must be >= 1: $perDocBudget")
-    val expanded =
-      simhashPostings(sims, chunks, chunkBits, maxChunkFreq)
-        .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-        .select(col("a"),
-          slice(col("ds"), col("i") + lit(2), lit(perDocBudget)).as("succ"),
-          // successor slots beyond the window + predecessor windows that
-          // end before this element (see prefixFilterPairsBudgetedFrom)
-          (greatest(size(col("ds")) - col("i") - lit(1) - lit(perDocBudget),
-            lit(0)) +
-            greatest(col("i") - lit(perDocBudget), lit(0)))
-            .cast("long").as("dropped"))
-    val pairs = expanded
-      .select(col("a"), explode(col("succ")).as("b"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        expr("bit_count(a.simhash ^ b.simhash)").cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    val trunc = expanded.groupBy(col("a.id").as("id"))
-      .agg(sum(col("dropped")).as("trunc"))
-    pairs
-      .join(trunc.select(col("id").as("id_a"), col("trunc").as("trunc_a")),
-        Seq("id_a"))
-      .join(trunc.select(col("id").as("id_b"), col("trunc").as("trunc_b")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        col("trunc_a"), col("trunc_b"))
   }
 
-  /** [[simhashBudgetCurve]]'s twin for the prefix-filter generator:
-    * for each budget B, verified pairs kept / generation slots cut /
-    * docs touched, off ONE offset-windowed expansion at max(budgets)
-    * (the min-offset trick — smaller budgets are filters). The
-    * length-ratio gate applies at the pair level (offset-independent),
-    * so it filters candidates before the single exact-intersection
-    * verify; `pairs_kept` at B therefore equals
-    * [[prefixFilterPairsBudgeted]]'s distinct pair count at the same B
-    * (pinned in DedupBudgetSpec).
+  /** Each element of an id-sorted posting array `ds` with its 0-based
+    * position: (ds, i, a).
     */
-  def prefixBudgetCurve(docs: DataFrame, idCol: String, shCol: String,
-      tNum: Int, tDen: Int, budgets: Seq[Int],
-      maxBucket: Long = 1000L): DataFrame = {
-    val (e, buckets) = prefixBuckets(docs, idCol, shCol, tNum, tDen,
-      maxBucket)
-    prefixBudgetCurveFrom(e, buckets, tNum, tDen, budgets)
-  }
+  private def positions(postings: DataFrame): DataFrame =
+    postings.select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
 
-  /** [[prefixBudgetCurve]] over prebuilt (e, buckets). */
-  def prefixBudgetCurveFrom(e: DataFrame, buckets: DataFrame,
-      tNum: Int, tDen: Int, budgets: Seq[Int]): DataFrame = {
-    require(budgets.nonEmpty && budgets.forall(_ >= 1),
-      s"budgets must be >= 1: $budgets")
-    prefixBudgetCurveFromVerified(
-      prefixVerifiedMinOff(e, buckets, tNum, tDen, budgets.max),
-      buckets, budgets)
-  }
-
-  /** The ONE bounded expansion both the budgeted generator (d29) and
-    * the operating curve (d32) read (VERDICT r14 #2a — d32 previously
-    * re-expanded at B=8 what d29 had already expanded at B=2):
-    * verified pairs with their minimal successor offset ≤ `maxB`. A
-    * pair survives budget B iff min_off ≤ B, so every budget up to
-    * maxB is a FILTER of this frame — QueriesDedup persists it as the
-    * `dedup.budget_pairs` shared cache. Output: (id_a, id_b, inter,
-    * jaccard, min_off).
+  /** The one windowed expansion: every element `a` paired with each of
+    * its `maxB` nearest successors `b` in its bucket, `off` = how many
+    * positions b follows a (1..maxB). A bucket of size m expands at most
+    * m·maxB slots instead of m²/2, so the cost is linear in the index at
+    * any duplicate density.
     */
-  def prefixVerifiedMinOff(e: DataFrame, buckets: DataFrame,
-      tNum: Int, tDen: Int, maxB: Int): DataFrame = {
-    val elems = buckets
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-    val minOff = elems
+  private def windowPairs(postings: DataFrame, maxB: Int): DataFrame = {
+    require(maxB >= 1, s"budget window must be >= 1: $maxB")
+    positions(postings)
       .select(col("a"),
         posexplode(slice(col("ds"), col("i") + lit(2), lit(maxB)))
           .as(Seq("k", "b")))
-      .filter(col("a.n") * lit(tDen) >= col("b.n") * lit(tNum) &&
-        col("b.n") * lit(tDen) >= col("a.n") * lit(tNum))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        (col("k") + lit(1)).cast("long").as("off"))
-      .groupBy("id_a", "id_b").agg(min(col("off")).as("min_off"))
-    verifyJaccardPairs(
-        minOff.select(col("id_a"), col("id_b")), e, tNum, tDen)
-      .join(minOff, Seq("id_a", "id_b"))
+      .select(col("a"), col("b"), (col("k") + lit(1)).cast("long").as("off"))
   }
 
-  /** Per-element truncation accounting at budget B over the bucket
-    * frame (dropped successor + predecessor slots per doc — the LOUD
-    * cut counters d28/d29 attach to every pair).
+  /** `min(off)` per pair as the `min_off` column, tagged with the window
+    * `maxB` it was expanded at: budgets above it are unanswerable from
+    * this frame, and [[budgetedPairs]]/[[budgetCurve]] refuse them.
     */
-  def prefixTruncCounts(buckets: DataFrame, perDocBudget: Int): DataFrame =
-    buckets
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
+  private def minOff(maxB: Int): Column =
+    min(col("off")).as("min_off",
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong("window", maxB).build())
+
+  private def requireWithinWindow(minOffs: DataFrame,
+      budgets: Seq[Int]): Unit = {
+    val window = minOffs.schema("min_off").metadata.getLong("window")
+    require(budgets.nonEmpty && budgets.forall(b => b >= 1 && b <= window),
+      s"budgets must be in 1..$window (the min-offset window): $budgets")
+  }
+
+  /** The prefix-filter generator's min-offset frame: the windowed
+    * expansion of `buckets` at `maxB`, the length-ratio gate, `min(off)`
+    * per pair, then ONE exact-intersection verify that carries min_off
+    * through. Output: (id_a, id_b, inter, jaccard, min_off). QueriesDedup
+    * persists it at maxB = 8 as the `dedup.budget_pairs` shared frame,
+    * read by both d29 (B = 2) and d32 (the curve).
+    */
+  def prefixVerifiedMinOff(e: DataFrame, buckets: DataFrame,
+      tNum: Int, tDen: Int, maxB: Int): DataFrame =
+    verifyJaccardPairs(
+      windowPairs(buckets, maxB).filter(lengthRatioOk(tNum, tDen))
+        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .agg(minOff(maxB)),
+      e, tNum, tDen)
+
+  /** The SimHash generator's min-offset frame over [[simhashPostings]]:
+    * the windowed expansion at `maxB`, the exact hamming gate, `min(off)`
+    * per pair. Output: (id_a, id_b, hamming, min_off).
+    */
+  def simhashMinOff(postings: DataFrame, maxHamming: Int,
+      maxB: Int): DataFrame =
+    windowPairs(postings, maxB)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), pairHamming,
+        col("off"))
+      .filter(col("hamming") <= maxHamming)
+      .groupBy("id_a", "id_b", "hamming").agg(minOff(maxB))
+
+  /** Dropped pair slots per doc at budget B, summed over its buckets:
+    * successors beyond the window plus predecessors whose window ends
+    * before it, so trunc = 0 ⟺ that doc's within-bucket pair list is
+    * exhaustive. Output: (id, trunc).
+    */
+  private def truncCounts(postings: DataFrame, budget: Int): DataFrame =
+    positions(postings)
       .select(col("a.id").as("id"),
-        (greatest(size(col("ds")) - col("i") - lit(1) - lit(perDocBudget),
+        (greatest(size(col("ds")) - col("i") - lit(1) - lit(budget),
           lit(0)) +
-          greatest(col("i") - lit(perDocBudget), lit(0)))
+          greatest(col("i") - lit(budget), lit(0)))
           .cast("long").as("dropped"))
       .groupBy("id").agg(sum(col("dropped")).as("trunc"))
 
-  /** [[prefixFilterPairsBudgeted]] as a filter of the shared verified
-    * min-offset frame: a pair survives budget B iff some bucket
-    * places its endpoints within B positions (min_off ≤ B — the same
-    * identity the curve uses, pinned against the direct expansion in
-    * DedupBudgetSpec). Only the truncation counters re-read the
-    * buckets, at B's own accounting.
+  /** The pairs a generator emits under budget B (the 100 TB scale valve):
+    * each doc pairs only with its B immediate successors in each
+    * bucket's id order, so output and expansion cost are linear in the
+    * index at ANY duplicate density, where the unbounded form goes
+    * quadratic on clone cliques (sf1: 32.2 M pairs from d5's buckets).
+    * `minOffs` is the generator's min-offset frame
+    * ([[prefixVerifiedMinOff]], [[simhashMinOff]]) over `postings`, built
+    * at a window ≥ B; a pair survives iff min_off ≤ B.
+    *
+    * The cut is LOUD, never silent: every pair carries `trunc_a`/
+    * `trunc_b` — the pair slots dropped around each endpoint across all
+    * its buckets, counting BOTH dropped successors (slots this element
+    * did not emit) and dropped predecessors (elements that did not emit
+    * to it), so trunc = 0 ⟺ that doc's within-bucket pair list is
+    * exhaustive (successor-only counting let a tail doc in a saturated
+    * bucket read 0 while missing pairs to truncated predecessors).
+    * Connectivity degrades gracefully: consecutive-successor windows keep
+    * every same-bucket clique connected as a chain (B ≥ 1), so
+    * connected-components clustering still finds the clique — what's
+    * lost is individual pair rows, not cluster membership. The window
+    * applies BEFORE the generator's gates (slots are positional), and
+    * the unbounded form stays the exactness oracle at sf ≤ 0.01.
+    *
+    * Output: the min-offset frame's columns without min_off, then
+    * trunc_a, trunc_b.
     */
-  def prefixFilterPairsBudgetedFromVerified(verified: DataFrame,
-      buckets: DataFrame, perDocBudget: Int): DataFrame = {
-    val trunc = prefixTruncCounts(buckets, perDocBudget)
-    verified.filter(col("min_off") <= perDocBudget)
+  def budgetedPairs(minOffs: DataFrame, postings: DataFrame,
+      budget: Int): DataFrame = {
+    requireWithinWindow(minOffs, Seq(budget))
+    val trunc = truncCounts(postings, budget)
+    val pairCols = minOffs.columns.filterNot(_ == "min_off").map(col).toSeq
+    minOffs.filter(col("min_off") <= budget)
       .join(trunc.select(col("id").as("id_a"), col("trunc").as("trunc_a")),
         Seq("id_a"))
       .join(trunc.select(col("id").as("id_b"), col("trunc").as("trunc_b")),
         Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("jaccard"),
-        col("trunc_a"), col("trunc_b"))
+      .select(pairCols ++ Seq(col("trunc_a"), col("trunc_b")): _*)
   }
 
-  /** The kept/cut accounting of [[prefixBudgetCurve]] over a prebuilt
-    * verified min-offset frame.
-    */
-  def prefixBudgetCurveFromVerified(verified: DataFrame,
-      buckets: DataFrame, budgets: Seq[Int]): DataFrame = {
-    require(budgets.nonEmpty && budgets.forall(_ >= 1),
-      s"budgets must be >= 1: $budgets")
-    val spark = buckets.sparkSession
-    val slots = buckets
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-      .select(col("a.id").as("id"),
-        (size(col("ds")) - col("i") - lit(1)).cast("long").as("n_succ"))
-    val bdf = budgets.sorted.map(b =>
-        spark.range(1).select(lit(b.toLong).as("budget")))
-      .reduce(_ unionAll _)
-    val kept = verified.crossJoin(broadcast(bdf))
-      .filter(col("min_off") <= col("budget"))
-      .groupBy("budget").agg(count(lit(1)).as("pairs_kept"))
-    val cut = slots.crossJoin(broadcast(bdf))
-      .groupBy("budget").agg(
-        sum(greatest(col("n_succ") - col("budget"), lit(0L)))
-          .as("slots_dropped"),
-        count_distinct(when(col("n_succ") > col("budget"), col("id")))
-          .as("docs_truncated"))
-    bdf.join(kept, Seq("budget"), "left").join(cut, Seq("budget"), "left")
-      .select(col("budget"),
-        coalesce(col("pairs_kept"), lit(0L)).as("pairs_kept"),
-        coalesce(col("slots_dropped"), lit(0L)).as("slots_dropped"),
-        coalesce(col("docs_truncated"), lit(0L)).as("docs_truncated"))
-  }
-
-  /** The budget operating curve for [[simhashPairsBudgeted]] (the d27
-    * discipline: measure the knob before trusting it). For each budget
-    * B in `budgets`, off ONE bounded expansion at max(budgets):
-    *  - `pairs_kept`   — verified pairs surviving budget B (a pair
-    *    survives iff SOME bucket places the two within B positions —
-    *    exact for every B ≤ max(budgets) via the min-offset trick, no
-    *    per-B re-expansion);
-    *  - `slots_dropped` — generation slots cut before verification
-    *    (the emission saved);
+  /** The budget operating curve (the d27 discipline: measure the knob
+    * before trusting it). For each budget B in `budgets`, off ONE
+    * min-offset frame built at a window ≥ max(budgets):
+    *  - `pairs_kept`   — pairs surviving budget B (min_off ≤ B), equal
+    *    to [[budgetedPairs]]' row count at B;
+    *  - `slots_dropped` — generation slots cut before the gates (the
+    *    emission saved);
     *  - `docs_truncated` — docs with at least one cut slot (the blast
     *    radius of the approximation).
-    * Everything is bounded: the widest expansion is |index|·max(B).
+    * One row per budget, zero-filled when nothing is kept or cut.
     */
-  def simhashBudgetCurve(sims: DataFrame, maxHamming: Int,
-      budgets: Seq[Int], chunks: Int = 4, chunkBits: Int = 15,
-      maxChunkFreq: Long = 10000L): DataFrame = {
-    require(budgets.nonEmpty && budgets.forall(_ >= 1),
-      s"budgets must be >= 1: $budgets")
-    val maxB = budgets.max
-    val spark = sims.sparkSession
-    val postings = simhashPostings(sims, chunks, chunkBits, maxChunkFreq)
-    val elems = postings
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-    // min successor offset at which each verified pair is emitted:
-    // the pair survives budget B iff min_off <= B
-    val minOff = elems
-      .select(col("a"),
-        posexplode(slice(col("ds"), col("i") + lit(2), lit(maxB)))
-          .as(Seq("k", "b")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        expr("bit_count(a.simhash ^ b.simhash)").cast("long")
-          .as("hamming"), (col("k") + lit(1)).cast("long").as("off"))
-      .filter(col("hamming") <= maxHamming)
-      .groupBy("id_a", "id_b").agg(min(col("off")).as("min_off"))
-    // per-element successor counts (the slot accounting, pre-verify)
-    val slots = elems.select(col("a.id").as("id"),
-      (size(col("ds")) - col("i") - lit(1)).cast("long").as("n_succ"))
+  def budgetCurve(minOffs: DataFrame, postings: DataFrame,
+      budgets: Seq[Int]): DataFrame = {
+    requireWithinWindow(minOffs, budgets)
+    val spark = postings.sparkSession
+    val slots = positions(postings)
+      .select(col("a.id").as("id"),
+        (size(col("ds")) - col("i") - lit(1)).cast("long").as("n_succ"))
     // the budget dimension: a bounded literal frame (|budgets| rows),
     // broadcast into both accounting joins
     val bdf = budgets.sorted.map(b =>
         spark.range(1).select(lit(b.toLong).as("budget")))
       .reduce(_ unionAll _)
-    val kept = minOff.crossJoin(broadcast(bdf))
+    val kept = minOffs.crossJoin(broadcast(bdf))
       .filter(col("min_off") <= col("budget"))
       .groupBy("budget").agg(count(lit(1)).as("pairs_kept"))
     val cut = slots.crossJoin(broadcast(bdf))
