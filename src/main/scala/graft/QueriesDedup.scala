@@ -54,6 +54,17 @@ object QueriesDedup {
         .select(col("doc_id"), DedupOps.shingleHashes(col("toks"), 3).as("sh"))
     }
 
+  /** The 60-bit SimHash fingerprint (id, simhash) of every tokenized
+    * doc, PERSISTED: d4 and d5 read it, and the budget arms (d28, d30)
+    * bucket it into chunk postings ([[simhashChunkPostings]]), so the
+    * signatures are computed once per scale dir instead of once per
+    * plan.
+    */
+  private lazy val docsWithSimhash =
+    SharedFrame.persisted("dedup.simhash", docsWithTokens) { (s, d) =>
+      DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks"))
+    }
+
   /** d18's ranked frame BUILD (un-checkpointed): deterministic range
     * buckets from seeded-sampled boundaries (withRangeBuckets — a pure
     * column function of bkey, stable across consumers where
@@ -247,9 +258,7 @@ object QueriesDedup {
     * hamming ≤ 3) — the postings both budget arms (d28, d30) read.
     */
   private def simhashChunkPostings(s: SparkSession, d: String): DataFrame =
-    DedupOps.simhashPostings(
-      DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
-      maxHamming = 3)
+    DedupOps.simhashPostings(docsWithSimhash(s, d), maxHamming = 3)
 
   /** d31's body over a tokenized (doc_id, toks) frame: full-token-hash
     * clone collapse to min-id keepers (with clique sizes), then the
@@ -750,7 +759,7 @@ object QueriesDedup {
          |  ta.trunc AS trunc_a, tb.trunc AS trunc_b
          |FROM p JOIN tr ta ON ta.doc_id = p.id_a
          |JOIN tr tb ON tb.doc_id = p.id_b""".stripMargin,
-      reads = Seq(docsWithTokens)),
+      reads = Seq(docsWithSimhash)),
 
     // Bounded-emission prefix-filter pairs: d17's lossless generator
     // with the same B=2 successor window per prefix bucket (d17 read
@@ -840,7 +849,7 @@ object QueriesDedup {
          |  coalesce(cut.docs_truncated, 0) AS docs_truncated
          |FROM bud LEFT JOIN kept USING (budget)
          |LEFT JOIN cut USING (budget)""".stripMargin,
-      reads = Seq(docsWithTokens)),
+      reads = Seq(docsWithSimhash)),
 
     // EXACT-DEDUP-FIRST near-dup pairing — the production sequence
     // the sf5 probe proved necessary: at 49-clone duplicate density
@@ -1200,8 +1209,7 @@ object QueriesDedup {
 
     // 60-bit SimHash fingerprint per document.
     Query("d4_simhash", (s, d) => {
-      DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks"))
-        .withColumnRenamed("id", "doc_id")
+      docsWithSimhash(s, d).withColumnRenamed("id", "doc_id")
     },
       s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
          |tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tk FROM t),
@@ -1214,14 +1222,12 @@ object QueriesDedup {
          |SELECT doc_id,
          |  CAST(sum(bit * (CAST(1 AS BIGINT) << j)) AS BIGINT) AS simhash
          |FROM b GROUP BY doc_id""".stripMargin,
-      reads = Seq(docsWithTokens)),
+      reads = Seq(docsWithSimhash)),
 
     // SimHash near-dup pairs: 4x15-bit chunk banding (complete for
     // hamming <= 3 by pigeonhole) + exact hamming verify.
     Query("d5_simhash_pairs", (s, d) => {
-      DedupOps.simhashPairs(
-        DedupOps.simhash(docsWithTokens(s, d), "doc_id", col("toks")),
-        maxHamming = 3)
+      DedupOps.simhashPairs(docsWithSimhash(s, d), maxHamming = 3)
     },
       s"""WITH $simhashCfCtes,
          |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -1231,7 +1237,7 @@ object QueriesDedup {
          |SELECT id_a, id_b,
          |  CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
          |FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3""".stripMargin,
-      reads = Seq(docsWithTokens)),
+      reads = Seq(docsWithSimhash)),
 
     // Dedup clusters: the verified Jaccard pairs (same params as d2)
     // grouped into connected components — every doc labeled with its

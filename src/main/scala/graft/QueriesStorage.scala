@@ -422,9 +422,10 @@ object QueriesStorage {
     * encoding — rewritten files must coexist with originals in one
     * read) committed with ship stats, then a COPY-ON-WRITE DELETE run
     * through the log: plan the candidate files from manifest stats,
-    * rewrite ONLY those (drop a candidate whose rows are all deleted),
-    * commit v2 = add rewrites (with tightened stats) / remove
-    * candidates. Built once by [[buildOnce]].
+    * rewrite ONLY those through [[graft.storage.CommitLog.rewriteFiles]]
+    * (a candidate whose rows are all deleted is dropped), commit v2 =
+    * add rewrites (with tightened stats) / remove candidates. Built once
+    * by [[buildOnce]].
     */
   private[graft] val CowLo = "1997-04-15"
   private[graft] val CowHi = "1997-06-20" // end-exclusive
@@ -438,19 +439,9 @@ object QueriesStorage {
       val cands = CommitLog.planScan(base, 1L, Seq(pred)).selected
       val keepCond = col("ship") < lit(CowLo).cast("date") ||
         col("ship") >= lit(CowHi).cast("date")
-      val (adds, statsAdd) = cands.flatMap { f =>
-        val kept = CommitLog.readFiles(s, base, Seq(f)).filter(keepCond)
-        val st = kept.agg(count(lit(1)), min(col("ship")),
-          max(col("ship"))).head()
-        if (st.getLong(0) == 0L) None // fully deleted: drop, no rewrite
-        else {
-          val out = s"rw2_$f"
-          kept.write.parquet(s"$dataDir/$out")
-          Some((out, out -> Map("ship" -> CommitLog.ColStats(
-            st.getDate(1).toString, st.getDate(2).toString))))
-        }
-      }.unzip
-      CommitLog.commit(base, adds, cands, 1L, statsAdd.toMap)
+      val (adds, statsAdd) = CommitLog.rewriteFiles(s, base, 1L, cands,
+        "rw2_", "ship", _.filter(keepCond))
+      CommitLog.commit(base, adds, cands, 1L, statsAdd)
     }
 
   /** stor12's table: SCHEMA EVOLUTION through the commit log — v1
@@ -496,9 +487,12 @@ object QueriesStorage {
     * deleted (k % 3 == 1), or seed inserts (k % 3 == 2 → new row at
     * key mx + k, price k). Candidate files come from
     * [[graft.storage.CommitLog.planScan]] on the key band; ONLY those
-    * are rewritten with updates/deletes applied, inserts land as one
-    * appended file, and a single commit publishes all of it with
-    * tightened stats. Built once by [[buildOnce]].
+    * are rewritten with updates/deletes applied
+    * ([[graft.storage.CommitLog.rewriteFiles]]), inserts land as one
+    * appended file through the rewrite's per-file writer
+    * ([[graft.storage.CommitLog.writeWithStats]]), and a single commit
+    * publishes all of it with tightened stats. Built once by
+    * [[buildOnce]].
     */
   private[graft] def stor13Table(s: SparkSession, d: String): String =
     buildOnce(d, "merge", "orders")(atVersion(2L)) { base =>
@@ -539,38 +533,19 @@ object QueriesStorage {
       val cands = CommitLog.planScan(base, 1L, Seq(
         CommitLog.RangePredicate("o_orderkey", bandLo.toString,
           bandHi.toString, numCmp))).selected
-      val (adds, statsAdd) = cands.flatMap { f =>
-        val merged = CommitLog.readFiles(s, base, Seq(f))
+      val (adds, statsAdd) = CommitLog.rewriteFiles(s, base, 1L, cands,
+        "rw2_", "o_orderkey", _
           .filter(!(inBand && col("o_orderkey") % 3 === 1)) // deletes
           .withColumn("o_totalprice",
             when(inBand && col("o_orderkey") % 3 === 0,
               col("o_orderkey").cast("double")) // updates
-              .otherwise(col("o_totalprice")))
-        val stRow = merged.agg(count(lit(1)), min(col("o_orderkey")),
-          max(col("o_orderkey"))).head()
-        if (stRow.getLong(0) == 0L) None
-        else {
-          val out = s"rw2_$f"
-          merged.write.parquet(s"$dataDir/$out")
-          Some((out, out -> Map("o_orderkey" -> CommitLog.ColStats(
-            stRow.getLong(1).toString, stRow.getLong(2).toString))))
-        }
-      }.unzip
+              .otherwise(col("o_totalprice"))))
       // inserts: brand-new keys above mx, one appended file
       val ins = CommitLog.read(s, base)
         .filter(inBand && col("o_orderkey") % 3 === 2)
         .select((col("o_orderkey") + mx).as("o_orderkey"),
           col("o_orderkey").cast("double").as("o_totalprice"))
-      val insSt = ins.agg(count(lit(1)), min(col("o_orderkey")),
-        max(col("o_orderkey"))).head()
-      val (insAdds, insStats) =
-        if (insSt.getLong(0) == 0L) (Nil, Map.empty)
-        else {
-          ins.write.parquet(s"$dataDir/ins_v2")
-          (Seq("ins_v2"), Map("ins_v2" -> Map("o_orderkey" ->
-            CommitLog.ColStats(insSt.getLong(1).toString,
-              insSt.getLong(2).toString))))
-        }
+      val insAdd = CommitLog.writeWithStats(base, "ins_v2", "o_orderkey", ins)
       // CHANGESET (VERDICT r17 #2): the writer KNOWS each logical
       // change while it computes the merge — record them as one tiny
       // attachment (table columns + _change_type) so the change feed
@@ -589,8 +564,8 @@ object QueriesStorage {
           .withColumn("_change_type", lit("update_postimage")))
         .unionByName(ins.withColumn("_change_type", lit("insert")))
         .coalesce(1).write.parquet(s"$dataDir/cs_v2")
-      CommitLog.commitTagged(base, adds ++ insAdds, cands, 1L,
-        statsAdd.toMap ++ insStats, op = Some("merge"),
+      CommitLog.commitTagged(base, adds ++ insAdd.map(_._1), cands, 1L,
+        statsAdd ++ insAdd, op = Some("merge"),
         changeset = Some("cs_v2"))
     }
 
@@ -768,9 +743,9 @@ object QueriesStorage {
     * delete file (the (fpath, pos) identity of every row in the
     * [CowLo, CowHi) ship window, computed from the planScan candidate
     * files' metadata columns — no data rewritten), and v3 is the FOLD:
-    * a compaction rewrite of only the files carrying marks (deletes
-    * applied via the same anti-join the reader uses; a file left empty
-    * is dropped), removing the delete file in the same atomic commit —
+    * [[graft.storage.CommitLog.rewriteFiles]] of only the candidate
+    * files, read at v2 with its marks applied (a file left empty is
+    * dropped), removing the delete file in the same atomic commit —
     * restoring the zero-overhead scan. At 100 TB the contrast with
     * stor11's COW is the point: the delete itself writes O(rows
     * deleted) bytes instead of rewriting O(candidate files), and the
@@ -792,33 +767,17 @@ object QueriesStorage {
         .coalesce(1) // O(rows deleted) pairs — one small file
         .write.parquet(s"$dataDir/del_v2")
       CommitLog.commit(base, Nil, Nil, 1L, Map.empty, Seq("del_v2"))
-      // --- v3: the FOLD — rewrite only the candidate files with the
-      // marks applied (the reader's own anti-join), drop empties,
-      // retire the delete file; one atomic commit
-      val delDf = s.read.parquet(s"$dataDir/del_v2")
-        .select(col("fpath").as("__fp"), col("pos").as("__ri"))
-      val (adds, statsAdd) = cands.flatMap { f =>
-        val kept = CommitLog.readFiles(s, base, Seq(f))
-          .select(col("*"), col("_metadata.file_path").as("__fp"),
-            col("_metadata.row_index").as("__ri"))
-          .join(broadcast(delDf), Seq("__fp", "__ri"), "left_anti")
-          .drop("__fp", "__ri")
-        val st = kept.agg(count(lit(1)), min(col("ship")),
-          max(col("ship"))).head()
-        if (st.getLong(0) == 0L) None // fully deleted: drop
-        else {
-          val out = s"fold3_$f"
-          kept.write.parquet(s"$dataDir/$out")
-          Some((out, out -> Map("ship" -> CommitLog.ColStats(
-            st.getDate(1).toString, st.getDate(2).toString))))
-        }
-      }.unzip
+      // --- v3: the FOLD — rewrite only the candidate files with v2's
+      // marks applied, drop empties, retire the delete file; one
+      // atomic commit
+      val (adds, statsAdd) =
+        CommitLog.rewriteFiles(s, base, 2L, cands, "fold3_", "ship")
       // tagged `replace`: the fold is a PHYSICAL rewrite (marks
       // applied, no logical row change beyond what v2 already
       // retracted) — the tag is what lets the st13 change feed
       // render this commit as zero change rows instead of refusing
       CommitLog.commitTagged(base, adds, cands :+ "del_v2", 2L,
-        statsAdd.toMap, op = Some("replace"))
+        statsAdd, op = Some("replace"))
     }
 
   /** stor16's table: Z-ORDER-AWARE COMPACTION through the commit log
@@ -1199,9 +1158,10 @@ object QueriesStorage {
     * request IS the file: O(keys) bytes, no scan to locate ordinals,
     * no rewrite; reads apply it as a broadcast anti-join on k. v3
     * FOLDS exactly like stor15: only the ship-stats planScan
-    * candidates are rewritten with the keys applied (a file left
-    * empty is dropped) and the E file retires in the same atomic
-    * `replace` commit. Built once by [[buildOnce]].
+    * candidates are rewritten, read at v2 with the keys applied
+    * ([[graft.storage.CommitLog.rewriteFiles]]; a file left empty is
+    * dropped), and the E file retires in the same atomic `replace`
+    * commit. Built once by [[buildOnce]].
     */
   private[graft] def stor21Table(s: SparkSession, d: String): String =
     buildOnce(d, "eqdel", "lineitem")(atVersion(3L)) { base =>
@@ -1228,26 +1188,14 @@ object QueriesStorage {
       CommitLog.commitTagged(base, Nil, Nil, 1L,
         eqDeletes = Seq(("eq_v2", Seq("k"))))
       // --- v3: the FOLD — candidates from ship stats alone, each
-      // rewritten with the reader's own key anti-join, the E file
-      // retired in the same atomic commit
+      // rewritten with v2's keys applied, the E file retired in the
+      // same atomic commit
       val cands = CommitLog.planScan(base, 1L,
         Seq(CommitLog.RangePredicate("ship", CowLo, CowHi))).selected
-      val keys = s.read.parquet(s"$dataDir/eq_v2")
-      val (adds, statsAdd) = cands.flatMap { f =>
-        val kept = CommitLog.readFiles(s, base, Seq(f))
-          .join(broadcast(keys), Seq("k"), "left_anti")
-        val st = kept.agg(count(lit(1)), min(col("ship")),
-          max(col("ship"))).head()
-        if (st.getLong(0) == 0L) None // fully erased: drop
-        else {
-          val out = s"fold3_$f"
-          kept.write.parquet(s"$dataDir/$out")
-          Some((out, out -> Map("ship" -> CommitLog.ColStats(
-            st.getDate(1).toString, st.getDate(2).toString))))
-        }
-      }.unzip
+      val (adds, statsAdd) =
+        CommitLog.rewriteFiles(s, base, 2L, cands, "fold3_", "ship")
       CommitLog.commitTagged(base, adds, cands :+ "eq_v2", 2L,
-        statsAdd.toMap, op = Some("replace"))
+        statsAdd, op = Some("replace"))
     }
 
   /** stor14's pair of tables: stor9's three append commits as the
@@ -1782,8 +1730,8 @@ object QueriesStorage {
     // identity of every ship-window row, found via planScan's
     // candidate pruning) and rewrites NOTHING — the erasure costs
     // O(rows deleted) bytes where stor11's COW rewrites whole files;
-    // reads apply the marks as a broadcast anti-join on the scan's
-    // (_metadata.file_path, _metadata.row_index). v3 FOLDS: only the
+    // reads apply the marks as a broadcast anti-join on each scanned
+    // row's (file, ordinal) identity. v3 FOLDS: only the
     // marked files are rewritten (the reader's own anti-join), the
     // delete file retires in the same atomic commit, and the scan
     // overhead returns to zero. The query reads all three versions

@@ -32,6 +32,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    refuses loudly ([[SnapshotExpired]]), never silently serves a
   *    partial file set.
   *
+  * STAGED PUBLISH — the one protocol of the exactly-once writers
+  * ([[appendBatch]], [[upsertBatch]], [[syncIncrement]]), written once
+  * in `publishStaged`. (1) Sentinel: touch a staging sentinel per
+  * entry ([[touchSentinel]]), so a racing [[vacuumOrphans]] spares the
+  * entry for its grace window. (2) Stage: write the entries under
+  * `data/`, invisible until a manifest names them; a crash from here
+  * to the claim leaves only debris the vacuum reclaims. (3) Re-check:
+  * read the head, then the writer's ledger — work a racing replay
+  * already committed deletes the staging and its sentinels and reports
+  * "not committed". (4) Refuse on vanished: a staged entry a vacuum
+  * reclaimed (one that outlasted sentinel and grace) throws
+  * `IllegalStateException` instead of publishing an unreadable head
+  * that also burns the ledger entry — best-effort, since the check and
+  * the claim are not one atomic step. (5) Claim: publish the manifest
+  * as head + 1; on success delete the sentinels, on a lost race loop
+  * back to (3).
+  *
   * At 100 TB this is exactly the economics that make table formats
   * work: commits move O(files-touched) metadata through one atomic
   * rename-class operation while the data plane streams in parallel,
@@ -81,7 +98,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`_metadata.file_path`, `_metadata.row_index`) — distributed, and
   * broadcast when the delete set is small (the normal case). The read
   * tax is repaid by folding: a compaction rewrite commit removes both
-  * the data files and their delete files (see the stor15 fold),
+  * the data files and their delete files ([[rewriteFiles]]),
   * restoring the zero-overhead scan.
   *
   * EQUALITY deletes (the Iceberg equality-delete idea — VERDICT r17
@@ -987,10 +1004,25 @@ object CommitLog {
   private def readSnapshot(spark: SparkSession, tableDir: String, v: Long,
       snap: Snapshot, options: Map[String, String],
       keepRel: Boolean): DataFrame = {
+    require(snap.liveFiles.nonEmpty, s"snapshot v$v is empty")
+    // column mapping LAST: files, delete keys, and stats all speak
+    // physical names; only the reader's output is logical (renames
+    // then drops, in mapping order)
+    snap.schema.foldLeft(applyDeletes(spark, tableDir, snap,
+      snap.liveFiles, options, keepRel)) {
+      case (d, (phys, Some(logical))) => d.withColumnRenamed(phys, logical)
+      case (d, (phys, None)) => d.drop(phys)
+    }
+  }
+
+  /** Live data files `files` of `snap` with the snapshot's positional
+    * and equality deletes applied, under PHYSICAL column names.
+    */
+  private def applyDeletes(spark: SparkSession, tableDir: String,
+      snap: Snapshot, files: Seq[String], options: Map[String, String],
+      keepRel: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split}
-    val (files, dels, eqs) =
-      (snap.liveFiles, snap.liveDeletes, snap.liveEqDeletes)
-    require(files.nonEmpty, s"snapshot v$v is empty")
+    val (dels, eqs) = (snap.liveDeletes, snap.liveEqDeletes)
     val base = dataDir(tableDir)
     def scanOf(fs: Seq[String]): DataFrame = {
       val scan0 = readParquet(spark, base, fs.map(f => s"$base/$f"),
@@ -1003,22 +1035,11 @@ object CommitLog {
       else scan0.withColumn("__rel",
         element_at(split(col("_metadata.file_path"), "/"), -2))
       if (dels.isEmpty) scan
-      else {
-        val delDf = spark.read.parquet(dels.map(f => s"$base/$f"): _*)
-          .select(col("fpath").as("__fp"), col("pos").as("__ri"))
-        scan
-          .select(col("*"), col("_metadata.file_path").as("__fp"),
-            col("_metadata.row_index").as("__ri"))
-          .join(delDf, Seq("__fp", "__ri"), "left_anti")
-          .drop("__fp", "__ri")
-      }
+      else byRowId(scan, posDeletes(spark, base, dels), "left_anti")
     }
     // EQUALITY-delete apply: per key-column set, one anti-join of the
     // scan against the union of that set's delete files ON THE KEY
-    // COLUMNS — no positions, no metadata columns. The delete side is
-    // O(erasure requests) (that is the point: GDPR-batch erasure by
-    // subject key without first locating row ordinals), so Catalyst
-    // broadcasts it and the scan stays shuffle-free.
+    // COLUMNS ([[foldEq]]).
     //
     // SEQUENCE SEMANTICS (the Iceberg sequence-number rule): an
     // equality delete applies only to data files first-added STRICTLY
@@ -1028,34 +1049,106 @@ object CommitLog {
     // their keys)` masks the old versions without the batch deleting
     // itself. Files partition into groups by applicable delete set
     // (one group — a plain erasure — keeps today's single-scan plan).
-    def foldEq(df: DataFrame,
-        applying: Seq[(String, Seq[String])]): DataFrame =
-      applying.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
-        .foldLeft(df) { case (d, (cols, group)) =>
-          val keys = spark.read
-            .parquet(group.map(_._1).map(f => s"$base/$f"): _*)
-            .select(cols.map(col): _*)
-          d.join(keys, cols, "left_anti")
-        }
-    val eqApplied =
-      if (eqs.isEmpty) scanOf(files)
-      else {
-        def applying(f: String): Seq[(String, Seq[String])] =
-          eqs.filter { case (p, _) =>
-            snap.eqSeq.getOrElse(p, Long.MaxValue) >
-              snap.dataSeq.getOrElse(f, 0L) }
-        val groups = files.groupBy(f => applying(f).map(_._1))
-        if (groups.size == 1) foldEq(scanOf(files), applying(files.head))
-        else groups.toSeq.sortBy(_._1.mkString(","))
-          .map { case (_, gf) => foldEq(scanOf(gf), applying(gf.head)) }
-          .reduce(_ unionByName _)
+    if (eqs.isEmpty) scanOf(files)
+    else {
+      def applying(f: String): Seq[(String, Seq[String])] =
+        eqs.filter { case (p, _) =>
+          snap.eqSeq.getOrElse(p, Long.MaxValue) >
+            snap.dataSeq.getOrElse(f, 0L) }
+      val groups = files.groupBy(f => applying(f).map(_._1))
+      if (groups.size == 1)
+        foldEq(spark, base, scanOf(files), applying(files.head))
+      else groups.toSeq.sortBy(_._1.mkString(","))
+        .map { case (_, gf) =>
+          foldEq(spark, base, scanOf(gf), applying(gf.head)) }
+        .reduce(_ unionByName _)
+    }
+  }
+
+  /** Positional-delete files `dels` as (`__fp`, `__ri`) row ids. */
+  private def posDeletes(spark: SparkSession, base: String,
+      dels: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    spark.read.parquet(dels.map(f => s"$base/$f"): _*)
+      .select(col("fpath").as("__fp"), col("pos").as("__ri"))
+  }
+
+  /** `scan` joined (`how`) on its rows' physical identity
+    * (`_metadata.file_path`, `_metadata.row_index`) against `ids`, a
+    * [[posDeletes]]-shaped frame. The delete side is tiny relative to
+    * the data (that is the whole point of MOR), so Catalyst broadcasts
+    * it and the scan stays shuffle-free.
+    */
+  private def byRowId(scan: DataFrame, ids: DataFrame,
+      how: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    scan.select(col("*"), col("_metadata.file_path").as("__fp"),
+        col("_metadata.row_index").as("__ri"))
+      .join(ids, Seq("__fp", "__ri"), how)
+      .drop("__fp", "__ri")
+  }
+
+  /** The keys of equality-delete files `group` (key columns `cols`). */
+  private def eqKeys(spark: SparkSession, base: String,
+      group: Seq[(String, Seq[String])], cols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    spark.read.parquet(group.map(_._1).map(f => s"$base/$f"): _*)
+      .select(cols.map(col): _*)
+  }
+
+  /** `df` minus every row an equality-delete file of `applying` names:
+    * per key-column set, one anti-join against the union of that set's
+    * files. The delete side is O(erasure requests) (GDPR-batch erasure
+    * by subject key without first locating row ordinals), so Catalyst
+    * broadcasts it and the scan stays shuffle-free.
+    */
+  private def foldEq(spark: SparkSession, base: String, df: DataFrame,
+      applying: Seq[(String, Seq[String])]): DataFrame =
+    applying.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
+      .foldLeft(df) { case (d, (cols, group)) =>
+        d.join(eqKeys(spark, base, group, cols), cols, "left_anti")
       }
-    // column mapping LAST: files, delete keys, and stats all speak
-    // physical names; only the reader's output is logical (renames
-    // then drops, in mapping order)
-    snap.schema.foldLeft(eqApplied) {
-      case (d, (phys, Some(logical))) => d.withColumnRenamed(phys, logical)
-      case (d, (phys, None)) => d.drop(phys)
+
+  /** COPY-ON-WRITE REWRITE of `files`, live data files of snapshot
+    * `asOf` — the one rewrite every compaction, COW delete/merge and
+    * delete fold runs. Each file is read with `asOf`'s own positional
+    * and equality deletes applied, under PHYSICAL column names (a
+    * rewrite must write what the column mapping maps, so mapped tables
+    * rewrite like any other), then `transform`ed; a file left empty is
+    * dropped, any other is written as `<prefix><file>`
+    * ([[writeWithStats]]).
+    * Returns the written entries and their `statsCol` range stats, for
+    * the caller's commit, which removes `files` (and the delete files
+    * the rewrite folded).
+    */
+  def rewriteFiles(spark: SparkSession, tableDir: String, asOf: Long,
+      files: Seq[String], prefix: String, statsCol: String,
+      transform: DataFrame => DataFrame = identity)
+      : (Seq[String], Map[String, Map[String, ColStats]]) = {
+    val snap = snapshotAt(tableDir, asOf)
+    val written = files.flatMap { f =>
+      require(snap.data(f), s"$f is not a live data file of v$asOf")
+      writeWithStats(tableDir, prefix + f, statsCol, transform(
+        applyDeletes(spark, tableDir, snap, Seq(f), Map.empty,
+          keepRel = false)))
+    }
+    (written.map(_._1), written.toMap)
+  }
+
+  /** Write `df` as data entry `rel` with its `statsCol` (min, max), or
+    * nothing when `df` has no rows — [[rewriteFiles]]' per-file step.
+    */
+  private[graft] def writeWithStats(tableDir: String, rel: String,
+      statsCol: String,
+      df: DataFrame): Option[(String, Map[String, ColStats])] = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val st = df.agg(count(lit(1)), min(col(statsCol)),
+      max(col(statsCol))).head()
+    if (st.getLong(0) == 0L) None
+    else {
+      df.write.parquet(s"${dataDir(tableDir)}/$rel")
+      Some(rel -> Map(statsCol ->
+        ColStats(st.get(1).toString, st.get(2).toString)))
     }
   }
 
@@ -1259,7 +1352,7 @@ object CommitLog {
     */
   def changes(spark: SparkSession, tableDir: String, fromV: Long,
       toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{broadcast, lit}
     val log = new LogListing(tableDir)
     require(fromV >= 0 && fromV <= toV && toV <= log.head,
       s"bad change range ($fromV, $toV]: log head is v${log.head}")
@@ -1305,36 +1398,21 @@ object CommitLog {
           // files at the recorded positions; the delete side is tiny
           // (that is the point of MOR), so broadcast the positions and
           // keep the scan shuffle-free
-          val delDf0 = spark.read
-            .parquet(m.deletes.map(f => s"$base/$f"): _*)
-            .select(col("fpath").as("__fp"), col("pos").as("__ri"))
+          val delDf0 = posDeletes(spark, base, m.deletes)
           // at-most-once delete contract (ADVICE r17): drop positions
           // the parent's live delete files already marked — an
           // overlapping re-mark is not a logical change
           val pdels = ps.liveDeletes
           val delDf =
             if (pdels.isEmpty) delDf0
-            else delDf0.join(
-              spark.read.parquet(pdels.map(f => s"$base/$f"): _*)
-                .select(col("fpath").as("__fp"), col("pos").as("__ri")),
+            else delDf0.join(posDeletes(spark, base, pdels),
               Seq("__fp", "__ri"), "left_anti")
-          val pfiles = ps.liveFiles
-          val marked = readParquet(spark, base,
-            pfiles.map(f => s"$base/$f"))
-            .select(col("*"), col("_metadata.file_path").as("__fp"),
-              col("_metadata.row_index").as("__ri"))
-            .join(broadcast(delDf), Seq("__fp", "__ri"), "left_semi")
-            .drop("__fp", "__ri")
+          val marked = byRowId(readParquet(spark, base,
+            ps.liveFiles.map(f => s"$base/$f")), broadcast(delDf),
+            "left_semi")
           // rows a live equality delete of the parent already erased
           // are not deleted again by a positional re-mark
-          val peqs = ps.liveEqDeletes
-          parts += peqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
-            .foldLeft(marked) { case (df, (cols, group)) =>
-              val keys = spark.read
-                .parquet(group.map(_._1).map(f => s"$base/$f"): _*)
-                .select(cols.map(col): _*)
-              df.join(keys, cols, "left_anti")
-            }
+          parts += foldEq(spark, base, marked, ps.liveEqDeletes)
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_version", lit(v))
         }
@@ -1347,10 +1425,8 @@ object CommitLog {
             keepRel = false)
           parts += m.eqDeletes.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
             .map { case (cols, group) =>
-              val keys = spark.read
-                .parquet(group.map(_._1).map(f => s"$base/$f"): _*)
-                .select(cols.map(col): _*)
-              pread.join(broadcast(keys), cols, "left_semi")
+              pread.join(broadcast(eqKeys(spark, base, group, cols)), cols,
+                "left_semi")
             }.reduce(_ unionByName _)
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_version", lit(v))
@@ -1762,72 +1838,69 @@ object CommitLog {
   def committedBatchIds(tableDir: String): Set[Long] =
     headSnapshot(tableDir).batchIds
 
+  /** The staged publish (see the object doc) of the entries `staged`
+    * names: `done` is the writer's re-check that a racing writer already
+    * committed the same work, `m` the manifest claimed at head + 1 (its
+    * parent is filled in). Returns the committed version, or None when
+    * `done` held and the staging was deleted.
+    */
+  private def publishStaged(tableDir: String,
+      staged: Seq[(String, DataFrame)], done: => Boolean,
+      m: Manifest): Option[Long] = {
+    val data = dataDir(tableDir)
+    val rels = staged.map(_._1)
+    def dropSentinels(): Unit = rels.foreach(rel =>
+      Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath): Unit)
+    rels.foreach(touchSentinel(tableDir, _))
+    staged.foreach { case (rel, df) => df.write.parquet(s"$data/$rel") }
+    while (true) {
+      val head = latestVersion(tableDir)
+      if (done) {
+        rels.foreach(rel => deleteRecursively(new File(data, rel)))
+        dropSentinels()
+        return None
+      }
+      rels.find(rel => !new File(data, rel).exists()).foreach(rel =>
+        throw new IllegalStateException(
+          s"staged $rel vanished before commit (vacuumOrphans grace " +
+            "too short for this writer's stage-to-commit latency)"))
+      if (publishAtomic(tableDir, manifestName(head + 1),
+        m.copy(parent = Some(head)).render)) {
+        dropSentinels()
+        return Some(head + 1)
+      }
+      // else: lost the version race; loop re-checks and retries
+    }
+    sys.error("unreachable")
+  }
+
   /** EXACTLY-ONCE streaming append: the foreachBatch sink body that
-    * makes the hourly-append contract ACID. Each micro-batch stages
-    * its rows as a fresh file set under `data/`, then commits it with
-    * the batch id recorded in the manifest — so a batch REPLAYED after
-    * a failure (Structured Streaming's at-least-once foreachBatch
-    * delivery) detects its id in the log and skips, and a crash
-    * BETWEEN stage and commit leaves only invisible files (no reader
-    * ever saw them; the replay stages and commits a fresh set, and
-    * [[vacuumOrphans]] reclaims the debris).
-    * Concurrent non-streaming writers are tolerated via optimistic
-    * retry. Returns true when this call performed the commit, false
-    * when the batch was already committed (replay).
+    * makes the hourly-append contract ACID. Each micro-batch is staged
+    * as a fresh file set and published with its batch id in the
+    * manifest (`B` line), so a batch REPLAYED after a failure
+    * (Structured Streaming's at-least-once foreachBatch delivery)
+    * finds its id in the ledger and skips. Returns true when this call
+    * performed the commit, false when the batch was already committed.
     */
   def appendBatch(tableDir: String, batch: DataFrame,
       batchId: Long): Boolean = {
     if (committedBatchIds(tableDir).contains(batchId)) return false
     val rel = f"batch_$batchId%06d_${java.util.UUID.randomUUID()}"
-    // sentinel BEFORE staging: a racing vacuumOrphans spares any entry
-    // whose sentinel is fresher than its grace cutoff, so the staging
-    // survives stalls up to graceMs past this touch (re-touch via
-    // touchSentinel to heartbeat through longer ones)
-    touchSentinel(tableDir, rel)
-    batch.write.parquet(s"${dataDir(tableDir)}/$rel")
-    var done = false
-    while (!done) {
-      val head = latestVersion(tableDir)
-      // a racing replay of the SAME batch may have committed while we
-      // staged — re-check before retrying the version race
-      if (committedBatchIds(tableDir).contains(batchId)) {
-        deleteRecursively(new File(dataDir(tableDir), rel))
-        Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath): Unit
-        return false
-      }
-      // BEST-EFFORT refusal if a vacuum outlasted both the sentinel
-      // and the grace window and reclaimed our staging: committing a
-      // manifest whose files are gone would leave an unreadable head
-      // AND burn the batch id (a silent exactly-once violation; the
-      // caller retries the batch). Best-effort because exists() and
-      // the publish below are not one atomic step — the REAL defense
-      // is the sentinel + grace contract in vacuumOrphans.
-      if (!new File(dataDir(tableDir), rel).exists())
-        throw new IllegalStateException(
-          s"staged $rel vanished before commit (vacuumOrphans grace " +
-            "too short for this writer's stage-to-commit latency)")
-      if (publishAtomic(tableDir, manifestName(head + 1),
-        Manifest(parent = Some(head), added = Seq(rel),
-          batchIds = Set(batchId)).render)) done = true
-      // else: lost the version race; loop re-checks and retries
-    }
-    Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath): Unit
-    true
+    publishStaged(tableDir, Seq(rel -> batch),
+      committedBatchIds(tableDir).contains(batchId),
+      Manifest(added = Seq(rel), batchIds = Set(batchId))).isDefined
   }
 
-  /** EXACTLY-ONCE streaming MOR UPSERT — [[appendBatch]]'s sibling
-    * for keyed CDC ingestion (the Hudi streaming-upsert shape): stage
-    * the micro-batch AND its key set, then publish ONE manifest
-    * carrying the data file, the keys as an equality delete, and the
-    * batch id. The sequence rule (an eq delete applies only to
+  /** EXACTLY-ONCE streaming MOR UPSERT for keyed CDC ingestion (the
+    * Hudi streaming-upsert shape): stage the micro-batch AND its key
+    * set, then publish ONE manifest carrying the data file, the keys as
+    * an equality delete, and the batch id. The sequence rule (an eq delete applies only to
     * strictly older files) keeps the batch from masking itself, so
     * old versions of its keys disappear atomically with the batch
     * becoming visible — O(batch) bytes per trigger, zero rewrites,
-    * the fold deferred to compaction. Idempotent per batch id under
-    * replay and crash exactly like [[appendBatch]]; the batch must be
-    * key-unique (an in-batch duplicate has no defined winner) and is
-    * refused loudly otherwise. Returns false when the ledger already
-    * carries the id.
+    * the fold deferred to compaction. The batch must be key-unique (an
+    * in-batch duplicate has no defined winner) and is refused loudly
+    * otherwise. Returns false when the ledger already carries the id.
     */
   def upsertBatch(tableDir: String, batch: DataFrame,
       keyCols: Seq[String], batchId: Long): Boolean = {
@@ -1844,33 +1917,10 @@ object CommitLog {
         "key before the sink")
     val rel = f"upsert_$batchId%06d_${java.util.UUID.randomUUID()}"
     val ek = s"ek_$rel"
-    touchSentinel(tableDir, rel)
-    touchSentinel(tableDir, ek)
-    batch.write.parquet(s"${dataDir(tableDir)}/$rel")
-    keys.coalesce(1).write.parquet(s"${dataDir(tableDir)}/$ek")
-    var done = false
-    while (!done) {
-      val head = latestVersion(tableDir)
-      if (committedBatchIds(tableDir).contains(batchId)) {
-        deleteRecursively(new File(dataDir(tableDir), rel))
-        deleteRecursively(new File(dataDir(tableDir), ek))
-        Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath)
-        Files.deleteIfExists(stagingSentinel(tableDir, ek).toPath): Unit
-        return false
-      }
-      if (!new File(dataDir(tableDir), rel).exists() ||
-        !new File(dataDir(tableDir), ek).exists())
-        throw new IllegalStateException(
-          s"staged $rel vanished before commit (vacuumOrphans grace " +
-            "too short for this writer's stage-to-commit latency)")
-      if (publishAtomic(tableDir, manifestName(head + 1),
-        Manifest(parent = Some(head), added = Seq(rel),
-          eqDeletes = Seq(ek -> keyCols), batchIds = Set(batchId)).render))
-        done = true
-    }
-    Files.deleteIfExists(stagingSentinel(tableDir, rel).toPath)
-    Files.deleteIfExists(stagingSentinel(tableDir, ek).toPath): Unit
-    true
+    publishStaged(tableDir, Seq(rel -> batch, ek -> keys.coalesce(1)),
+      committedBatchIds(tableDir).contains(batchId),
+      Manifest(added = Seq(rel), eqDeletes = Seq(ek -> keyCols),
+        batchIds = Set(batchId))).isDefined
   }
 
   /** Highest upstream version a downstream table has consumed via
@@ -1882,18 +1932,16 @@ object CommitLog {
 
   /** EXACTLY-ONCE derived-table sync — the consumer half of the
     * incremental contract: read the upstream increment
-    * `(consumed, upstreamHead]`, apply `transform`, stage the result
-    * invisible, and commit it downstream with the consumed upstream
-    * version recorded in the manifest (`U` line). Crash anywhere
-    * before the commit → only invisible files, the next sync redoes
-    * the same range; crash after → the next sync sees the recorded
-    * version and consumes nothing twice. Concurrent syncers resolve
-    * like [[appendBatch]]: the loser of the version race re-checks
-    * whether its range was already consumed and backs off. Inherits
-    * [[addedFiles]]' refusals (rewrite commits, expired history) —
-    * a derived table can never silently double-count. Returns the
-    * downstream version and the consumed range, or None when already
-    * caught up (or lost the race to an identical sync).
+    * `(consumed, upstreamHead]`, apply `transform`, and publish the
+    * result downstream with the consumed upstream version recorded in
+    * the manifest (`U` line), so the next sync consumes nothing twice.
+    * A racing syncer that moved the consumed version first makes this
+    * one back off: its transform was computed against the old base and
+    * would double-count any overlap. Inherits [[addedFiles]]' refusals
+    * (rewrite commits, expired history) — a derived table can never
+    * silently double-count. Returns the downstream version and the
+    * consumed range, or None when already caught up (or lost the race
+    * to an identical sync).
     */
   def syncIncrement(spark: SparkSession, upDir: String, downDir: String,
       upTo: Option[Long] = None)
@@ -1906,37 +1954,10 @@ object CommitLog {
     val inc = readIncrement(spark, upDir, from, upHead)
     val rel = f"sync_${from}%05d_${upHead}%05d_" +
       java.util.UUID.randomUUID().toString
-    touchSentinel(downDir, rel) // see appendBatch: vacuum spares us
-    transform(inc).write.parquet(s"${dataDir(downDir)}/$rel")
-    while (true) {
-      val head = latestVersion(downDir)
-      if (consumedUpstreamVersion(downDir) != from) {
-        // a racing syncer moved the consumed version while we staged:
-        // our transform was computed against base `from` and would
-        // double-count any overlap — abort; the caller re-invokes to
-        // sync whatever remains
-        deleteRecursively(new File(dataDir(downDir), rel))
-        Files.deleteIfExists(stagingSentinel(downDir, rel).toPath): Unit
-        return None
-      }
-      // same BEST-EFFORT refusal as appendBatch: never knowingly
-      // commit a manifest whose staged files a vacuum that outlasted
-      // the sentinel + grace already reclaimed (the sentinel contract
-      // in vacuumOrphans is the real defense; this check narrows, not
-      // closes, the window)
-      if (!new File(dataDir(downDir), rel).exists())
-        throw new IllegalStateException(
-          s"staged $rel vanished before commit (vacuumOrphans grace " +
-            "too short for this syncer's stage-to-commit latency)")
-      if (publishAtomic(downDir, manifestName(head + 1),
-        Manifest(parent = Some(head), added = Seq(rel),
-          upstream = Some(upHead)).render)) {
-        Files.deleteIfExists(stagingSentinel(downDir, rel).toPath): Unit
-        return Some((head + 1, from, upHead))
-      }
-      // else: lost the version race; loop re-checks and retries
-    }
-    sys.error("unreachable")
+    publishStaged(downDir, Seq(rel -> transform(inc)),
+      consumedUpstreamVersion(downDir) != from,
+      Manifest(added = Seq(rel), upstream = Some(upHead)))
+      .map(v => (v, from, upHead))
   }
 
   /** Bounded driver-side collect for MANIFEST-SCALE aggregates (the

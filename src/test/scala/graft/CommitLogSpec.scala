@@ -212,6 +212,63 @@ class CommitLogSpec extends SparkTestBase {
     try body finally CommitLog.publishPrimitive = old
   }
 
+  /** A claim primitive whose first claim finds the writer's staging
+    * reclaimed: it deletes the data entries named `prefix*` (what a
+    * vacuum that outlasted the staging sentinel does) and reports the
+    * name taken. Later claims publish normally.
+    */
+  private def vanishOnFirstClaim(prefix: String) =
+    new CommitLog.PublishPrimitive {
+      private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+      def claim(dir: File, name: String, body: String): Boolean =
+        if (first.getAndSet(false)) {
+          Option(new File(dir.getParentFile, "data").listFiles()).toSeq
+            .flatten.filter(_.getName.startsWith(prefix))
+            .foreach(CommitLog.deleteRecursively)
+          false
+        } else CommitLog.HardLinkPublish.claim(dir, name, body)
+    }
+
+  /** `write` under [[vanishOnFirstClaim]] must throw, and publish nothing. */
+  private def refusesVanished(t: String, prefix: String)(write: => Any)
+      : Unit = {
+    val head = CommitLog.latestVersion(t)
+    val e = intercept[IllegalStateException](
+      withPrimitive(vanishOnFirstClaim(prefix))(write))
+    assert(e.getMessage.contains("vanished before commit"))
+    assert(CommitLog.latestVersion(t) === head)
+  }
+
+  test("a staged entry that vanished before the claim is refused") {
+    import spark.implicits._
+    val b = Seq((1L, "a"), (2L, "b")).toDF("k", "part")
+    // appendBatch: the ledger does not record the batch; a retry commits
+    val ta = freshDir()
+    refusesVanished(ta, "batch_")(CommitLog.appendBatch(ta, b, 0L))
+    assert(CommitLog.committedBatchIds(ta) === Set.empty[Long])
+    assert(CommitLog.appendBatch(ta, b, 0L))
+    assert(CommitLog.committedBatchIds(ta) === Set(0L))
+    assert(CommitLog.read(spark, ta).count() === 2L)
+    // upsertBatch: the same, with its key file staged beside the batch
+    val tu = freshDir()
+    refusesVanished(tu, "upsert_")(CommitLog.upsertBatch(tu, b, Seq("k"), 0L))
+    assert(CommitLog.committedBatchIds(tu) === Set.empty[Long])
+    assert(CommitLog.upsertBatch(tu, b, Seq("k"), 0L))
+    assert(CommitLog.committedBatchIds(tu) === Set(0L))
+    assert(CommitLog.read(spark, tu).count() === 2L)
+    // syncIncrement: the consumed upstream version does not move
+    val (up, down) = (freshDir(), freshDir())
+    stage(up, "f1", Seq((1L, "a"), (2L, "b")))
+    CommitLog.commit(up, Seq("f1"), Nil, 0L)
+    refusesVanished(down, "sync_")(
+      CommitLog.syncIncrement(spark, up, down)(identity))
+    assert(CommitLog.consumedUpstreamVersion(down) === 0L)
+    assert(CommitLog.syncIncrement(spark, up, down)(identity) ===
+      Some((1L, 0L, 1L)))
+    assert(CommitLog.consumedUpstreamVersion(down) === 1L)
+    assert(CommitLog.read(spark, down).count() === 2L)
+  }
+
   test("eight concurrent committers all land; final set is the union") {
     eightWriterRace()
   }
@@ -740,6 +797,34 @@ class CommitLogSpec extends SparkTestBase {
       assert(!p.contains("Exchange hashpartitioning"),
         s"the scan must stay shuffle-free under an eq delete:\n$p")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("rewriteFiles: deletes applied, a fully deleted candidate dropped") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val t = freshDir()
+    stage(t, "f1", Seq((1L, "a"), (2L, "b")))
+    stage(t, "f2", Seq((3L, "c"), (4L, "d"), (5L, "e")))
+    CommitLog.commit(t, Seq("f1", "f2"), Nil, 0L)
+    // every row of f1 deleted by position, key 3 of f2 by equality
+    CommitLog.deleteRows(spark, t, Seq("f1"), col("k") <= 2L).coalesce(1)
+      .write.parquet(s"${CommitLog.dataDir(t)}/del")
+    CommitLog.commit(t, Nil, Nil, 1L, Map.empty, Seq("del"))
+    Seq(3L).toDF("k").write.parquet(s"${CommitLog.dataDir(t)}/ek")
+    CommitLog.commitTagged(t, Nil, Nil, 2L, eqDeletes = Seq(("ek", Seq("k"))))
+    val before = CommitLog.read(spark, t).collect().toSet
+    val (adds, stats) =
+      CommitLog.rewriteFiles(spark, t, 3L, Seq("f1", "f2"), "fold_", "k")
+    assert(adds === Seq("fold_f2"))
+    assert(stats === Map("fold_f2" -> Map("k" -> CommitLog.ColStats("4", "5"))))
+    assert(!new File(CommitLog.dataDir(t), "fold_f1").exists(),
+      "a candidate left empty must not be written")
+    CommitLog.commitTagged(t, adds, Seq("f1", "f2", "del", "ek"), 3L, stats,
+      op = Some("replace"))
+    assert(CommitLog.liveFiles(t, 4L) === Seq("fold_f2"))
+    assert(CommitLog.liveDeleteFiles(t, 4L).isEmpty)
+    assert(CommitLog.liveEqDeleteFiles(t, 4L).isEmpty)
+    assert(CommitLog.read(spark, t).collect().toSet === before)
   }
 
   test("collectMeta: manifest-scale collects are bounded and loud") {

@@ -68,6 +68,33 @@ class SchemaMappingSpec extends SparkTestBase {
     assert(head.filter(col("segment") === "b").count() === 1L)
   }
 
+  test("a fold on a renamed-and-dropped table writes physical names") {
+    import spark.implicits._
+    val t = freshDir()
+    val data = CommitLog.dataDir(t)
+    Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+      .toDF("k", "part", "extra").write.parquet(s"$data/f1")
+    CommitLog.commit(t, Seq("f1"), Nil, 0L)
+    CommitLog.commitSchemaChange(t, Seq("part" -> "segment"), Seq("extra"),
+      1L)
+    Seq(2L).toDF("k").write.parquet(s"$data/ek")
+    CommitLog.commitTagged(t, Nil, Nil, 2L, eqDeletes = Seq(("ek", Seq("k"))))
+    val before = CommitLog.read(spark, t)
+    val (cols, rows) = (before.columns.toSeq, before.collect().toSet)
+    assert(cols === Seq("k", "segment"))
+    val (adds, stats) =
+      CommitLog.rewriteFiles(spark, t, 3L, Seq("f1"), "fold_", "k")
+    assert(adds === Seq("fold_f1"))
+    // the rewrite keeps the frozen physical names, dropped column too
+    assert(spark.read.parquet(s"$data/fold_f1").columns.toSeq ===
+      Seq("k", "part", "extra"))
+    CommitLog.commitTagged(t, adds, Seq("f1", "ek"), 3L, stats,
+      op = Some("replace"))
+    val after = CommitLog.read(spark, t)
+    assert(after.columns.toSeq === cols)
+    assert(after.collect().toSet === rows)
+  }
+
   test("the mapping survives checkpoints and snapshot expiry") {
     val t = freshDir()
     stage(t, "f1", Seq((1L, "a")))
