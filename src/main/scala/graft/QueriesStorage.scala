@@ -431,8 +431,7 @@ object QueriesStorage {
   private[graft] val CowHi = "1997-06-20" // end-exclusive
   private[graft] def stor11Table(s: SparkSession, d: String): String =
     buildOnce(d, "cow", "lineitem")(atVersion(2L)) { base =>
-      val dataDir = CommitLog.dataDir(base)
-      stageMonthFiles(s, d, dataDir): Unit
+      stageMonthFiles(s, d, CommitLog.dataDir(base)): Unit
       commitShipMonths(s, base)
       // --- the COW delete ---
       val pred = CommitLog.RangePredicate("ship", CowLo, CowHi)

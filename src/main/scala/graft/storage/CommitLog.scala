@@ -1894,8 +1894,9 @@ object CommitLog {
   /** EXACTLY-ONCE streaming MOR UPSERT for keyed CDC ingestion (the
     * Hudi streaming-upsert shape): stage the micro-batch AND its key
     * set, then publish ONE manifest carrying the data file, the keys as
-    * an equality delete, and the batch id. The sequence rule (an eq delete applies only to
-    * strictly older files) keeps the batch from masking itself, so
+    * an equality delete, and the batch id. The sequence rule (an eq
+    * delete applies only to strictly older files) keeps the batch from
+    * masking itself, so
     * old versions of its keys disappear atomically with the batch
     * becoming visible — O(batch) bytes per trigger, zero rewrites,
     * the fold deferred to compaction. The batch must be key-unique (an
