@@ -271,27 +271,15 @@ object Bench {
     // scale still absorbs C2 compilation of that scale's generated
     // classes (plans differ from the warmup scale under AQE), which
     // makes single-shot timings bimodal by 10x+. Min-of-2 measures the
-    // operator, not the JIT.
+    // operator, not the JIT. Every query reports the minimum of the
+    // same two passes: a third sample taken only when the passes
+    // disagree gives those queries an extra draw at a low minimum, so
+    // a change that removes cold work (the passes then agree) could
+    // read slower.
     val p1 = names.map(n => n -> time(n)).toMap
     val p2 = names.map(n => n -> time(n)).toMap
-    // Contention guard: when the two timings of a non-trivial query
-    // disagree badly (>1.4x and >0.3s apart), something external — GC
-    // burst, a co-scheduled process, page-cache eviction — polluted one
-    // of them; a third sample bounds the damage. Measured on this
-    // machine: suite timings matched isolated ones once samples are
-    // clean, so disagreement is noise, not the operator.
-    val results: Seq[(String, Option[Double])] = names.map { n =>
-      (p1(n), p2(n)) match {
-        case (Some(a), Some(b)) =>
-          val (lo, hi) = (math.min(a, b), math.max(a, b))
-          val best =
-            if (hi > lo * 1.4 && hi - lo > 0.3)
-              time(n).map(math.min(_, lo)).orElse(Some(lo))
-            else Some(lo)
-          n -> best
-        case _ => n -> None
-      }
-    }
+    val results: Seq[(String, Option[Double])] = names.map(n =>
+      n -> (for (a <- p1(n); b <- p2(n)) yield math.min(a, b)))
     val ok = results.collect { case (n, Some(s)) => n -> s }
     // failed cache builds are listed (and fail the exit code) alongside
     // failed queries, prefixed by their registry name

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{RelationalOps, VectorOps}
+import graft.operators.VectorOps
 import graft.sources.Tables
 
 /** Similarity-search queries over `embeddings` (north-star extension):
@@ -67,11 +67,11 @@ object QueriesVector {
     val cent0 = pts.crossJoin(broadcast(kk))
       .filter(col("id") < col("kk"))
       .select(col("id").as("cid"), col("v").as("c"))
-    val routed = VectorOps.assignTopKEuclid(pts,
-      VectorOps.centroidMeans(
-        VectorOps.assignNearestEuclid(pts, cent0)), 2)
-    routed.select(col("id"), col("cid"), col("rk"), col("v"),
-      VectorOps.norm2(col("v")).as("n2"))
+    val c1 = VectorOps.centroidMeans(
+      VectorOps.routeToCentroids(pts, cent0, 1)(VectorOps.euclidDistance))
+    VectorOps.routeToCentroids(pts, c1, 2)(VectorOps.euclidDistance)
+      .select(col("id"), col("cid"), col("rk"), col("v"),
+        VectorOps.norm2(col("v")).as("n2"))
   }
 
   /** d23/d24's cell-local near-dup pairs at probe depth `np` (shared
@@ -97,37 +97,36 @@ object QueriesVector {
       .select("cid", "ia", "ib")
   }
 
-  /** v19's corpus-to-cell routing (id_n, centroid_id, v_n, n2_n) —
-    * plan-only helper (cheap, rebuilt per consumer; the expensive
-    * shared frame is [[v19Pairs]]). */
+  /** v19's routings (ids only) — plan-only helpers, cheap and rebuilt
+    * per consumer (the expensive shared frame is [[v19Pairs]]): the
+    * corpus to its cell (id_n, centroid_id) and the 5 probes to their 3
+    * nearest cells (id_q, centroid_id, rk).
+    */
   private def v19CorpusCells(s: SparkSession, d: String): DataFrame = {
     val p = prep(s, d)
-    VectorOps.routeToCentroids(p, p.filter(col("id") < 10), 1,
-        keepPayload = true)
-      .toDF("id_n", "centroid_id", "v_n", "n2_n")
+    VectorOps.routeToCentroids(p, p.filter(col("id") < 10), 1)(
+        VectorOps.cosineDistance)
+      .select(col("id").as("id_n"), col("cid").as("centroid_id"))
   }
 
-  /** v19's probe routing at the largest nProbe, ranked (id_q,
-    * centroid_id, rk, v_q, n2_q) — plan-only helper. */
   private def v19Routed(s: SparkSession, d: String): DataFrame = {
     val p = prep(s, d)
-    VectorOps.routeToCentroidsRanked(p.filter(col("id") < 5),
-      p.filter(col("id") < 10), 3)
-      .toDF("id_q", "centroid_id", "rk", "v_q", "n2_q")
+    VectorOps.routeToCentroids(p.filter(col("id") < 5),
+        p.filter(col("id") < 10), 3)(VectorOps.cosineDistance)
+      .select(col("id").as("id_q"), col("cid").as("centroid_id"),
+        col("rk"))
   }
 
-  /** v19's routed cosine pairs, PERSISTED with the prep discipline:
-    * all three nprobe arms are rk-filters over this ONE cosine join,
-    * so uncached it would re-execute once per arm. */
+  /** v19's routed cosine pairs (id_q, id_n, rk, cos), PERSISTED with the
+    * prep discipline: all three nprobe arms are rk-filters over this ONE
+    * cosine join, so uncached it would re-execute once per arm. */
   private lazy val v19Pairs = SharedFrame.persisted(
       "vector.v19_pairs", prep) { (s, d) =>
-    v19CorpusCells(s, d)
-      .join(broadcast(v19Routed(s, d)), Seq("centroid_id"))
-      .filter(col("id_q") =!= col("id_n"))
-      .withColumn("cos", round(VectorOps.cosineFromParts(
-        VectorOps.dot(col("v_q"), col("v_n")),
-        col("n2_q"), col("n2_n")), 6))
-      .select(col("id_q"), col("id_n"), col("rk"), col("cos"))
+    val p = prep(s, d)
+    VectorOps.ivfCandidates(p, p.filter(col("id") < 5),
+        p.filter(col("id") < 10), 3)
+      .select(col("id_q"), col("id_n"), col("rk"),
+        VectorOps.Cosine.expr.as("cos"))
   }
 
   /** v14/v21's PQ-encoded corpus (id_n, codes), PERSISTED (OPT r19,
@@ -213,8 +212,10 @@ object QueriesVector {
     // IVF-style routing: nearest of 10 fixed centroids per vector.
     Query("v3_centroid_assign", (s, d) => {
       val p = prep(s, d)
-      VectorOps.assignToCentroids(p, p.filter(col("id") < 10))
-        .withColumnRenamed("id", "vec_id")
+      VectorOps.routeToCentroids(p, p.filter(col("id") < 10), 1)(
+          VectorOps.cosineDistance)
+        .select(col("id").as("vec_id"), col("cid").as("centroid_id"),
+          round(-col("dist"), 6).as("cos"))
     },
       s"""WITH $preparedSql,
          |p AS (SELECT a.vec_id, b.vec_id AS centroid_id,
@@ -834,10 +835,10 @@ object QueriesVector {
           struct(lit(np.toLong).as("np"),
             col(s"s$np").as("n_scanned"))): _*)).as("x"))
         .select(col("x.np").as("np"), col("x.n_scanned").as("n_scanned"))
-      val cand = RelationalOps.topKPerGroup(
+      val cand = VectorOps.rankPerProbe(
           pairs.select(col("id_q"), col("id_n"), col("cos"),
             explode(sequence(col("rk").cast("long"), lit(3L))).as("np")),
-          Seq("np", "id_q"), Seq(col("cos").desc, col("id_n").asc), 5)
+          col("cos").desc, 5, by = Seq("np"))
         .select(col("np"), col("id_q"), col("id_n"), lit(1L).as("hit"))
       val ex3 = exact.select(col("id_q"), col("id_n"),
         explode(array(nps.map(np => lit(np.toLong)): _*)).as("np"))
@@ -941,8 +942,6 @@ object QueriesVector {
       import graft.storage.StatsCatalog
       val p = prep(s, d)
       val probes = p.filter(col("id") < 5)
-        .select(col("id").as("id_q"), col("v").as("vq"),
-          col("n2").as("n2q"))
       val labels = Tables.embeddings(s, d)
         .select(col("vec_id").as("id_n"),
           col("label").cast("long").as("lbl"))
@@ -953,18 +952,9 @@ object QueriesVector {
         val prefilter = estRows * 4L <= st.rows
         val nProbe = if (prefilter) 0L
           else math.min(3L, (2L * st.ndv + nvals - 1L) / nvals)
-        val corpusF = p
-          .select(col("id").as("id_n"), col("v").as("vn"),
-            col("n2").as("n2n"))
-          .join(labels, Seq("id_n")).filter(pred)
-        val exactPairs = corpusF.crossJoin(broadcast(probes))
-          .filter(col("id_n") =!= col("id_q"))
-          .select(col("id_q"), col("id_n"),
-            round(VectorOps.cosineFromParts(
-              VectorOps.dot(col("vq"), col("vn")),
-              col("n2q"), col("n2n")), 6).as("cos"))
-        val truth = RelationalOps.topKPerGroup(exactPairs, Seq("id_q"),
-          Seq(col("cos").desc, col("id_n").asc), 5)
+        val corpusF = p.join(labels, col("id") === col("id_n"))
+          .filter(pred).select(col("id"), col("v"), col("n2"))
+        val truth = VectorOps.bruteForceTopK(corpusF, probes, 5)
           .select("id_q", "id_n")
         val hits =
           if (prefilter)
@@ -973,24 +963,13 @@ object QueriesVector {
             truth.agg(count(lit(1)).as("n_truth"),
               count(lit(1)).as("n_hits"))
           else {
-            val cents = p.filter(col("id") < 10)
-            val cc = VectorOps.routeToCentroids(p, cents, 1,
-                keepPayload = true)
-              .select(col("id").as("id_n"), col("centroid_id"),
-                col("v").as("vn"), col("n2").as("n2n"))
-            val pq = VectorOps.routeToCentroidsRanked(probes, cents,
-                nProbe.toInt)
-              .select(col("id").as("id_q"), col("centroid_id"),
-                col("v").as("vq"), col("n2").as("n2q"))
-            val candPairs = cc.join(broadcast(pq), Seq("centroid_id"))
-              .filter(col("id_q") =!= col("id_n"))
-              .join(labels, Seq("id_n")).filter(pred)
-              .select(col("id_q"), col("id_n"),
-                round(VectorOps.cosineFromParts(
-                  VectorOps.dot(col("vq"), col("vn")),
-                  col("n2q"), col("n2n")), 6).as("cos"))
-            val cand = RelationalOps.topKPerGroup(candPairs,
-              Seq("id_q"), Seq(col("cos").desc, col("id_n").asc), 5)
+            val cand = VectorOps.rankPerProbe(
+                VectorOps.ivfCandidates(p, probes, p.filter(col("id") < 10),
+                    nProbe.toInt)
+                  .join(labels, Seq("id_n")).filter(pred)
+                  .select(col("id_q"), col("id_n"),
+                    VectorOps.Cosine.expr.as("cos")),
+                col("cos").desc, 5)
               .select(col("id_q"), col("id_n"), lit(1L).as("hit"))
             truth.join(cand, Seq("id_q", "id_n"), "left")
               .agg(count(lit(1)).as("n_truth"),
@@ -1112,12 +1091,13 @@ object QueriesVector {
       val cent0 = x.filter(col("id") < 5)
         .select(col("id").as("cid"), col("v").as("c"))
       val c1 = VectorOps.centroidMeans(
-        VectorOps.assignNearestEuclid(x, cent0))
-      val two = VectorOps.assignTopKEuclid(x, c1, 2)
+        VectorOps.routeToCentroids(x, cent0, 1)(VectorOps.euclidDistance))
+      val two = VectorOps.routeToCentroids(x, c1, 2)(
+          VectorOps.euclidDistance)
         .groupBy("id").agg(
           max(when(col("rk") === 1, col("cid"))).as("cluster"),
-          max(when(col("rk") === 1, col("d2"))).as("d2a"),
-          max(when(col("rk") === 2, col("d2"))).as("d2b"))
+          max(when(col("rk") === 1, col("dist"))).as("d2a"),
+          max(when(col("rk") === 2, col("dist"))).as("d2b"))
       val si = when(col("d2b") > 0.0,
         lit(1.0) - sqrt(col("d2a")) / sqrt(col("d2b")))
         .otherwise(lit(0.0))
@@ -1185,11 +1165,9 @@ object QueriesVector {
         .select(col("id").as("id_q"), col("v").as("vq"))
       val pairs = p.select(col("id").as("id_n"), col("v").as("vn"))
         .crossJoin(broadcast(probes))
-        .filter(col("id_n") =!= col("id_q"))
         .select(col("id_q"), col("id_n"),
           VectorOps.euclid2(col("vq"), col("vn")).as("d2"))
-      val truth = RelationalOps.topKPerGroup(pairs, Seq("id_q"),
-          Seq(col("d2").asc, col("id_n").asc), 5)
+      val truth = VectorOps.rankPerProbe(pairs, col("d2").asc, 5)
         .select(col("id_q"), col("id_n"))
       val adc = SparkEntry.queries("v14_pq_adc")(s, d)
         .select(col("id_q"), col("id_n"), lit(1L).as("hit"))
@@ -1306,18 +1284,7 @@ object QueriesVector {
     // 0 / error 0 (the inv-multiply guard avoids a 0/0 NaN that would
     // diverge between engines).
     Query("v9_quantize_int8", (s, d) => {
-      val maxAbs = array_max(transform(col("v"), x => abs(x)))
-      val withScale = prep(s, d)
-        .withColumn("max_abs", maxAbs)
-        .withColumn("scale",
-          when(col("max_abs") > 0, lit(127.0) / col("max_abs"))
-            .otherwise(lit(0.0)))
-        .withColumn("inv",
-          when(col("max_abs") > 0, col("max_abs") / lit(127.0))
-            .otherwise(lit(0.0)))
-        .withColumn("qs",
-          transform(col("v"), x => floor(x * col("scale") + lit(0.5))))
-      withScale.select(
+      VectorOps.int8Quantized(prep(s, d)).select(
         col("id").as("vec_id"),
         round(col("scale"), 6).as("scale"),
         aggregate(col("qs"), lit(0L), (a, q) => a + q).as("q_sum"),
@@ -1326,6 +1293,10 @@ object QueriesVector {
             (x, q) => (x - q * col("inv")) * (x - q * col("inv"))),
           lit(0.0), (a, e) => a + e), 6).as("recon_err"))
     },
+      // v9's quantization mirrors exactly: max via a greatest-fold (==
+      // array_max — max is order-insensitive), one 127/maxAbs division,
+      // floor-based round-half-up codes, the single-inverse dequant, and
+      // the same index-ordered error fold.
       s"""WITH d AS (SELECT vec_id,
          |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |      FROM embeddings),
@@ -1402,11 +1373,11 @@ object QueriesVector {
       val x = prep(s, d).select(col("id"), col("v"))
       val cent0 = x.filter(col("id") < 5)
         .select(col("id").as("cid"), col("v").as("c"))
-      val a0 = VectorOps.assignNearestEuclid(x, cent0)
-      val a1 = VectorOps.assignNearestEuclid(x,
-        VectorOps.centroidMeans(a0))
-      a1.select(col("id").as("vec_id"), col("cid").as("cluster"),
-        round(col("d2"), 6).as("d2"))
+      def assign(cents: DataFrame) =
+        VectorOps.routeToCentroids(x, cents, 1)(VectorOps.euclidDistance)
+      assign(VectorOps.centroidMeans(assign(cent0)))
+        .select(col("id").as("vec_id"), col("cid").as("cluster"),
+          round(col("dist"), 6).as("d2"))
     },
       s"""WITH $preparedSql,
          |c0 AS (SELECT vec_id AS cid, v AS c FROM d WHERE vec_id < 5),
@@ -1592,12 +1563,9 @@ object QueriesVector {
     // against.
     Query("v12_mips_topk", (s, d) => {
       val p = prep(s, d)
-      VectorOps.mipsTopK(p, p.filter(col("id") < 5), 10)
+      VectorOps.bruteForceTopK(p, p.filter(col("id") < 5), 10,
+        VectorOps.Dot)
     },
-      // v9's quantization mirrors exactly: max via a greatest-fold (==
-      // array_max — max is order-insensitive), one 127/maxAbs division,
-      // floor-based round-half-up codes, the single-inverse dequant, and
-      // the same index-ordered error fold.
       s"""WITH $preparedSql,
          |p AS (SELECT a.vec_id AS id_q, b.vec_id AS id_n,
          |      round($dotSql, 6) AS dot
@@ -1617,8 +1585,8 @@ object QueriesVector {
     // vectors. VectorOpsSpec floors this against v12.
     Query("v13_mips_lsh", (s, d) => {
       val p = prep(s, d)
-      VectorOps.mipsLshTopK(p, p.filter(col("id") < 5), Bands,
-        RowsPerBand, Dim, 5)
+      VectorOps.lshTopK(p, p.filter(col("id") < 5), Bands,
+        RowsPerBand, Dim, 5, VectorOps.Dot)
     },
       // augmented-space banding: va aliases to v so the SHARED plane
       // fragments (range(len(v)) is length-generic) band the 65-dim
@@ -1656,23 +1624,11 @@ object QueriesVector {
     // shape) so the oracle isolates QUANTIZATION error; swap in v2/v4
     // candidates for sub-linear generation.
     Query("v11_quantized_topk", (s, d) => {
-      val q = prep(s, d)
-        .withColumn("max_abs", array_max(transform(col("v"),
-          x => abs(x))))
-        .withColumn("scale",
-          when(col("max_abs") > 0, lit(127.0) / col("max_abs"))
-            .otherwise(lit(0.0)))
-        .withColumn("inv",
-          when(col("max_abs") > 0, col("max_abs") / lit(127.0))
-            .otherwise(lit(0.0)))
-        .withColumn("qs",
-          transform(col("v"), x => floor(x * col("scale") + lit(0.5))
-            .cast("long")))
+      val q = VectorOps.int8Quantized(prep(s, d))
         .select(col("id"), col("n2"), col("inv"), col("qs"))
       val pairs = q.toDF("id_n", "n2_n", "inv_n", "qs_n")
         .crossJoin(broadcast(q.filter(col("id") < 5)
           .toDF("id_q", "n2_q", "inv_q", "qs_q")))
-        .filter(col("id_q") =!= col("id_n"))
         .withColumn("qdot",
           aggregate(zip_with(col("qs_q"), col("qs_n"), (a, b) => a * b),
             lit(0L), (acc, x) => acc + x))
@@ -1681,9 +1637,7 @@ object QueriesVector {
               col("qdot").cast("double") /
               sqrt(col("n2_q") * col("n2_n")), 6)
             .as("qcos"))
-      graft.operators.RelationalOps.topKPerGroup(pairs, Seq("id_q"),
-        Seq(col("qcos").desc, col("id_n").asc), 10, rankCol = "rank")
-        .withColumn("rank", col("rank").cast("long"))
+      VectorOps.rankPerProbe(pairs, col("qcos").desc, 10)
     },
       // same quantization CTE chain as v9; dot/rescale/normalize mirrors
       // the Spark fold and multiply order exactly (left-assoc:

@@ -14,19 +14,25 @@ import org.apache.spark.sql.functions._
   * same order). Never rely on an engine's built-in dot product for
   * verified output: its accumulation order/width is unspecified.
   *
-  * Scale design:
-  *  - Brute-force top-k: the probe set is broadcast (it is small by
-  *    definition); each executor scans its corpus partition once and the
-  *    per-group top-k is a window over (probe, score) — no cross-join
-  *    shuffle of the corpus.
-  *  - Hyperplane LSH: each vector maps to small band-bucket ids in one
-  *    projection; probe vs corpus becomes an equi-join on (band,
+  * Every top-k search splits candidate generation from exact ranking,
+  * and every search ends in the one ranking, [[rankPerProbe]] (self
+  * pairs out, the top k per probe by score then `id_n`, a long `rank`).
+  * Three search shapes generate the candidates:
+  *  - exact ([[bruteForceTopK]]): the probe set is broadcast (it is
+  *    small by definition); each executor scans its corpus partition
+  *    once — no cross-join shuffle of the corpus.
+  *  - LSH ([[lshTopK]]): each vector maps to small band-bucket ids in
+  *    one projection; probe vs corpus becomes an equi-join on (band,
   *    bucket). Recall 1-(1-p^rowsPerBand)^bands is tunable up with
   *    bands, cost O(q · bands · bucketSize) down with rowsPerBand —
   *    and MEASURED, not assumed: v8_ann_recall grades the candidates
   *    against the exact top-10 and VectorOpsSpec floors the result.
-  *  - IVF-style routing: assign each vector to its nearest centroid
-  *    (broadcast centroid table), search only matching cells.
+  *  - IVF ([[ivfTopK]]): the corpus is assigned to its nearest centroid,
+  *    probes to their nProbe nearest, and only matching cells compare.
+  * The one centroid router, [[routeToCentroids]], serves IVF, the
+  * cosine cell assignment and every k-means step: the centroids
+  * collapse to one broadcast array row and each vector ranks them
+  * in-row, so routing never shuffles the vectors.
   */
 object VectorOps {
 
@@ -65,21 +71,45 @@ object VectorOps {
       .select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
       .withColumn("n2", norm2(col("v")))
 
-  /** Brute-force cosine top-k: every probe row against the full corpus.
+  /** A search score over a probe/corpus pair row — probe (`v_q`, `n2_q`)
+    * and corpus (`v_n`, `n2_n`) — output as column `name`, rounded to 6
+    * places and ranked descending on the rounded value (the value the
+    * oracle ranks on).
+    */
+  sealed abstract class Score(val name: String, val expr: Column)
+
+  /** Cosine similarity (v1). */
+  case object Cosine extends Score("cos", round(cosineFromParts(
+    dot(col("v_q"), col("v_n")), col("n2_q"), col("n2_n")), 6))
+
+  /** Raw inner product (v12, MIPS): the retrieval objective when
+    * magnitudes carry meaning (recommender scores, unnormalized
+    * rerankers).
+    */
+  case object Dot extends Score("dot", round(dot(col("v_q"), col("v_n")), 6))
+
+  /** The one exact ranking every search ends in: candidate rows
+    * (id_q, id_n, score...) minus self pairs, the top `k` per probe by
+    * `order` then `id_n` ascending, with `rank` (1..min(k, candidates))
+    * as a long. `by` prepends grouping keys, so one frame can rank
+    * several arms at once (v19's nprobe arms).
+    */
+  private[graft] def rankPerProbe(cands: DataFrame, order: Column, k: Int,
+      by: Seq[String] = Nil): DataFrame =
+    RelationalOps.topKPerGroup(cands.filter(col("id_q") =!= col("id_n")),
+      by :+ "id_q", Seq(order, col("id_n").asc), k, rankCol = "rank")
+      .withColumn("rank", col("rank").cast("long"))
+
+  /** Exact top-k: every probe row against the full corpus by `score`.
     * `probes` must be small — it is broadcast so the corpus never
     * shuffles; the per-probe top-k is a window (no global sort).
     */
-  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val joined = corpus.toDF("id_n", "v_n", "n2_n")
+  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int,
+      score: Score = Cosine): DataFrame =
+    rankPerProbe(corpus.toDF("id_n", "v_n", "n2_n")
       .crossJoin(broadcast(probes.toDF("id_q", "v_q", "n2_q")))
-      .filter(col("id_q") =!= col("id_n"))
-      .withColumn("cos", cosineFromParts(dot(col("v_q"), col("v_n")),
-        col("n2_q"), col("n2_n")))
-      .select(col("id_q"), col("id_n"), round(col("cos"), 6).as("cos"))
-    RelationalOps.topKPerGroup(joined, Seq("id_q"),
-      Seq(col("cos").desc, col("id_n").asc), k, rankCol = "rank")
-      .withColumn("rank", col("rank").cast("long"))
-  }
+      .select(col("id_q"), col("id_n"), score.expr.as(score.name)),
+      col(score.name).desc, k)
 
   /** Deterministic pseudo-random hyperplane component in [-1, 1): the
     * md5-derived 60-bit hash of "hp<plane>:<dim>" scaled by 2^59. Computed
@@ -109,6 +139,21 @@ object VectorOps {
       when(dot(v, plane) >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** `df` exploded to one row per band: every column of `df` plus the
+    * (band, bucket) of `vec` in each of `bands` bands — the candidate
+    * side of every banded-LSH join.
+    */
+  private def banded(df: DataFrame, vec: String, bands: Int,
+      rowsPerBand: Int, dim: Int): DataFrame = {
+    val keep = df.columns.toSeq.map(col)
+    val bandStructs = array((0 until bands).map(b =>
+      struct(lit(b).as("band"),
+        bandedBucket(col(vec), b, rowsPerBand, dim).as("bucket"))): _*)
+    df.select(keep :+ explode(bandStructs).as("bb"): _*)
+      .select(keep :+ col("bb.band").as("band") :+
+        col("bb.bucket").as("bucket"): _*)
+  }
+
   /** Embedding near-dup pairs at scale: banded random-projection LSH
     * (`bands` OR-amplified bands of `rowsPerBand` sign bits — candidates
     * share at least one full band), verified by exact cosine.
@@ -125,15 +170,9 @@ object VectorOps {
   def lshNearDupPairs(corpus: DataFrame, bands: Int, rowsPerBand: Int,
       dim: Int, threshold: Double,
       maxBucketFreq: Long = 10000L): DataFrame = {
-    val bandStructs = array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        bandedBucket(col("v"), b, rowsPerBand, dim).as("bucket"))): _*)
-    val banded = corpus.toDF("id", "v", "n2")
-      .select(col("id"), col("v"), col("n2"),
-        explode(bandStructs).as("bb"))
-      .select(col("id"), col("v"), col("n2"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val postings = banded.groupBy("band", "bucket")
+    val postings = banded(corpus.toDF("id", "v", "n2"), "v", bands,
+        rowsPerBand, dim)
+      .groupBy("band", "bucket")
       .agg(collect_list(struct(col("id"), col("v"), col("n2"))).as("ds"))
       .filter(size(col("ds")) <= maxBucketFreq)
       .select(array_sort(col("ds")).as("ds"))
@@ -186,210 +225,163 @@ object VectorOps {
 
   /** ANN via OR-amplified banded bucket equality: a corpus vector is a
     * candidate for a probe when ANY of the `bands` band buckets
-    * (`rowsPerBand` sign bits each) matches, then exact top-k over the
-    * deduped candidates. The single-bucket formulation this replaces
-    * (one AND over nPlanes sign bits) is high-precision/low-recall by
-    * construction — on weakly-similar neighbors (cos ≈ 0.3, the top-10
-    * regime of random-ish embeddings) its match probability is
-    * p^nPlanes ≈ 1%, and the v8 recall gate measured it at ~0/10.
+    * (`rowsPerBand` sign bits each) matches, then exact top-k by `score`
+    * over the deduped candidates. The single-bucket formulation this
+    * replaces (one AND over nPlanes sign bits) is high-precision/low-
+    * recall by construction — on weakly-similar neighbors (cos ≈ 0.3,
+    * the top-10 regime of random-ish embeddings) its match probability
+    * is p^nPlanes ≈ 1%, and the v8 recall gate measured it at ~0/10.
     * OR-amplification is the standard fix: recall 1-(1-p^r)^b is
     * tunable upward with more bands, cost (≈ bands·n/2^r candidate
     * comparisons per probe) downward with more rows per band —
     * v8_ann_recall measures the operating point and VectorOpsSpec
     * floors it. Shape: the corpus explodes ×bands (narrow), probes
     * broadcast (×bands rows), one equi-join on (band, bucket), distinct
-    * on the deterministic (id, id, cos) triple — the corpus never
+    * on the deterministic (id, id, score) triple — the corpus never
     * shuffles.
+    *
+    * A [[Dot]] score is approximate MIPS via the norm-augmentation
+    * reduction to cosine LSH (Shrivastava–Li style, simplified): the
+    * bands bucket every corpus vector extended by sqrt(M² − ‖x‖²)
+    * (M² = the corpus max squared norm — a broadcast 1-row aggregate)
+    * and every probe extended by 0. All augmented corpus vectors then
+    * share norm M, so cosine in the augmented space is q·x / (‖q‖·M) —
+    * MONOTONE in the inner product per probe. Candidates rerank by the
+    * exact dot of the ORIGINAL vectors (asymmetric rerank).
     */
   def lshTopK(corpus: DataFrame, probes: DataFrame, bands: Int,
-      rowsPerBand: Int, dim: Int, k: Int): DataFrame = {
-    def banded(df: DataFrame, idc: String, vc: String, n2c: String) = {
-      val bandStructs = array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          bandedBucket(col(vc), b, rowsPerBand, dim).as("bucket"))): _*)
-      df.select(col(idc), col(vc), col(n2c), explode(bandStructs).as("bb"))
-        .select(col(idc), col(vc), col(n2c),
-          col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+      rowsPerBand: Int, dim: Int, k: Int,
+      score: Score = Cosine): DataFrame = {
+    val c = corpus.toDF("id_n", "v_n", "n2_n")
+    val q = probes.toDF("id_q", "v_q", "n2_q")
+    val (cb, qb) = score match {
+      case Cosine =>
+        (banded(c, "v_n", bands, rowsPerBand, dim),
+          banded(q, "v_q", bands, rowsPerBand, dim))
+      case Dot =>
+        val m2 = corpus.agg(max(col("n2")).as("m2"))
+        // greatest(·, 0): the max-norm row's residual is a float-negative
+        // zero away from exact 0, and sqrt must not see it
+        val ca = c.crossJoin(broadcast(m2))
+          .select(col("id_n"), col("v_n"),
+            concat(col("v_n"),
+              array(sqrt(greatest(col("m2") - col("n2_n"), lit(0.0)))))
+              .as("va_n"))
+        val qa = q.select(col("id_q"), col("v_q"),
+          concat(col("v_q"), array(lit(0.0))).as("va_q"))
+        (banded(ca, "va_n", bands, rowsPerBand, dim + 1),
+          banded(qa, "va_q", bands, rowsPerBand, dim + 1))
     }
-    val cb = banded(corpus.toDF("id_n", "v_n", "n2_n"), "id_n", "v_n", "n2_n")
-    val pb = banded(probes.toDF("id_q", "v_q", "n2_q"), "id_q", "v_q", "n2_q")
-    val joined = cb.join(broadcast(pb), Seq("band", "bucket"))
-      .filter(col("id_q") =!= col("id_n"))
-      .withColumn("cos", cosineFromParts(dot(col("v_q"), col("v_n")),
-        col("n2_q"), col("n2_n")))
-      .select(col("id_q"), col("id_n"), round(col("cos"), 6).as("cos"))
-      .distinct()
-    RelationalOps.topKPerGroup(joined, Seq("id_q"),
-      Seq(col("cos").desc, col("id_n").asc), k, rankCol = "rank")
-      .withColumn("rank", col("rank").cast("long"))
+    rankPerProbe(cb.join(broadcast(qb), Seq("band", "bucket"))
+      .select(col("id_q"), col("id_n"), score.expr.as(score.name))
+      .distinct(), col(score.name).desc, k)
   }
 
-  /** Exact maximum-inner-product top-k (MIPS): rank by the RAW dot
-    * product, not cosine — the retrieval objective when magnitudes
-    * carry meaning (recommender scores, unnormalized rerankers).
-    * Same broadcast shape as [[bruteForceTopK]].
-    */
-  def mipsTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val joined = corpus.toDF("id_n", "v_n", "n2_n")
-      .crossJoin(broadcast(probes.toDF("id_q", "v_q", "n2_q")))
-      .filter(col("id_q") =!= col("id_n"))
-      .select(col("id_q"), col("id_n"),
-        round(dot(col("v_q"), col("v_n")), 6).as("dot"))
-    RelationalOps.topKPerGroup(joined, Seq("id_q"),
-      Seq(col("dot").desc, col("id_n").asc), k, rankCol = "rank")
-      .withColumn("rank", col("rank").cast("long"))
-  }
-
-  /** Approximate MIPS via the norm-augmentation reduction to cosine
-    * LSH (Shrivastava–Li style, simplified): append sqrt(M² − ‖x‖²)
-    * to every corpus vector (M² = the corpus max squared norm — a
-    * broadcast 1-row aggregate) and 0 to every probe. All augmented
-    * corpus vectors then share norm M, so cosine in the augmented
-    * space is q·x / (‖q‖·M) — MONOTONE in the inner product per
-    * probe — and the existing hyperplane bands bucket by it.
-    * Candidates come from the augmented-space band join; the final
-    * scores rerank candidates by the EXACT dot of the ORIGINAL
-    * vectors (asymmetric rerank — the standard shape). The corpus is
-    * banded once, never shuffled; probes broadcast.
-    */
-  def mipsLshTopK(corpus: DataFrame, probes: DataFrame, bands: Int,
-      rowsPerBand: Int, dim: Int, k: Int): DataFrame = {
-    val m2 = corpus.agg(max(col("n2")).as("m2"))
-    // greatest(·, 0): the max-norm row's residual is a float-negative
-    // zero away from exact 0, and sqrt must not see it
-    val caug = corpus.toDF("id_n", "v_n", "n2_n")
-      .crossJoin(broadcast(m2))
-      .select(col("id_n"), col("v_n"),
-        concat(col("v_n"),
-          array(sqrt(greatest(col("m2") - col("n2_n"), lit(0.0)))))
-          .as("va"))
-    val paug = probes.toDF("id_q", "v_q", "n2_q")
-      .select(col("id_q"), col("v_q"),
-        concat(col("v_q"), array(lit(0.0))).as("va"))
-    def banded(df: DataFrame, idc: String, vc: String) = {
-      val bandStructs = array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          bandedBucket(col("va"), b, rowsPerBand, dim + 1)
-            .as("bucket"))): _*)
-      df.select(col(idc), col(vc), explode(bandStructs).as("bb"))
-        .select(col(idc), col(vc),
-          col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    }
-    val joined = banded(caug, "id_n", "v_n")
-      .join(broadcast(banded(paug, "id_q", "v_q")), Seq("band", "bucket"))
-      .filter(col("id_q") =!= col("id_n"))
-      .select(col("id_q"), col("id_n"),
-        round(dot(col("v_q"), col("v_n")), 6).as("dot"))
-      .distinct()
-    RelationalOps.topKPerGroup(joined, Seq("id_q"),
-      Seq(col("dot").desc, col("id_n").asc), k, rankCol = "rank")
-      .withColumn("rank", col("rank").cast("long"))
-  }
-
-  /** Route each vector to its `nProbe` nearest centroids by cosine
-    * (centroids broadcast; one narrow pass + a window). `nProbe = 1` is
-    * cell assignment; `nProbe > 1` is the probe-side fan-out that buys
-    * IVF recall back at the cell boundaries.
+  /** The one centroid router: every row of `vectors` ranks every
+    * centroid by `distance` (a function of one centroid struct, which
+    * carries the `centroids` columns by name, evaluated against the
+    * vector row — [[cosineDistance]], [[euclidDistance]]) ascending,
+    * centroid id (the first `centroids` column) breaking ties, and
+    * keeps its `k` nearest. Returns the `vectors` columns plus `cid`,
+    * `rk` (1 = nearest, long) and `dist`; callers project what they
+    * need — carrying the vector through spares a re-join of the source.
+    *
+    * ZERO corpus movement: the K centroids collapse to ONE array row
+    * (an O(K·dim) aggregate — trivial), that row is broadcast, and the
+    * ranking is in-row over (dist, cid) structs — struct ordering IS
+    * the (distance asc, id asc) tie-break, so no window and no shuffle
+    * of the vectors. k = 1 (cell assignment, every Lloyd step) is one
+    * `array_min`, no explode; k > 1 (IVF probe fan-out, soft
+    * assignment) is a sorted slice posexploded in-row — fan-out is
+    * exactly min(k, K)×. The first formulation here was a crossJoin +
+    * window argmin, which re-shuffled the entire corpus on id once per
+    * Lloyd round (plan-guarded against regression in PlanAuditSpec).
     */
   def routeToCentroids(vectors: DataFrame, centroids: DataFrame,
-      nProbe: Int, keepPayload: Boolean = false): DataFrame = {
-    // The K centroids collapse to ONE broadcast array row; the top-nProbe
-    // cells per vector are a narrow array computation — array_sort over
-    // (negated cos, centroid_id) structs IS the (cos desc, id asc)
-    // ranking — so routing never shuffles the vectors. The previous
-    // window formulation re-shuffled every routed corpus vector on id.
-    val centsRow = centroids.toDF("centroid_id", "v_c", "n2_c")
-      .agg(array_sort(collect_list(
-        struct(col("centroid_id"), col("v_c"), col("n2_c")))).as("cents"))
-    val top = slice(array_sort(transform(col("cents"), s =>
-      struct((-cosineFromParts(dot(col("v"), s.getField("v_c")),
-        col("n2"), s.getField("n2_c"))).as("negcos"),
-        s.getField("centroid_id").as("centroid_id")))), 1, nProbe)
-    val routed = vectors.toDF("id", "v", "n2")
-      .crossJoin(broadcast(centsRow))
-      .select(col("id"), col("v"), col("n2"),
-        explode(top).as("r"))
-    // keepPayload carries (v, n2) through the routing so callers don't
-    // have to re-join the source on id to get the vectors back — that
-    // join re-scans the source and adds a shuffle for nothing
-    if (keepPayload)
-      routed.select(col("id"), col("r.centroid_id").as("centroid_id"),
-        col("v"), col("n2"))
-    else routed.select(col("id"), col("r.centroid_id").as("centroid_id"))
+      k: Int)(distance: Column => Column): DataFrame = {
+    val centsRow = centroids.agg(array_sort(collect_list(
+      struct(centroids.columns.toSeq.map(col): _*))).as("cents"))
+    val scored = transform(col("cents"), c =>
+      struct(distance(c).as("dist"),
+        c.getField(centroids.columns.head).as("cid")))
+    val keep = vectors.columns.toSeq.map(col)
+    val routed = vectors.crossJoin(broadcast(centsRow))
+    if (k == 1)
+      routed.withColumn("r", array_min(scored))
+        .select(keep ++ Seq(col("r.cid").as("cid"), lit(1L).as("rk"),
+          col("r.dist").as("dist")): _*)
+    else
+      routed.select(keep :+
+          posexplode(slice(array_sort(scored), 1, k)).as(Seq("pos", "r")): _*)
+        .select(keep ++ Seq(col("r.cid").as("cid"),
+          (col("pos") + 1).cast("long").as("rk"),
+          col("r.dist").as("dist")): _*)
   }
 
-  /** [[routeToCentroids]] with the route RANK attached (1 = nearest
-    * cell): lets a multi-nProbe consumer (v19's operating curve) route
-    * ONCE at the largest nProbe and treat each smaller arm as a
-    * `rk <= np` filter over the same frame, instead of re-routing and
-    * re-joining per arm. Same broadcast-centroid narrow shape.
+  /** Router distance by cosine: the NEGATED unrounded cosine of the
+    * row's (v, n2) to a centroid's (v, n2) — the [[prepared]] shape on
+    * both sides — so nearest is most similar.
     */
-  def routeToCentroidsRanked(vectors: DataFrame, centroids: DataFrame,
-      nProbe: Int): DataFrame = {
-    val centsRow = centroids.toDF("centroid_id", "v_c", "n2_c")
-      .agg(array_sort(collect_list(
-        struct(col("centroid_id"), col("v_c"), col("n2_c")))).as("cents"))
-    val top = slice(array_sort(transform(col("cents"), s =>
-      struct((-cosineFromParts(dot(col("v"), s.getField("v_c")),
-        col("n2"), s.getField("n2_c"))).as("negcos"),
-        s.getField("centroid_id").as("centroid_id")))), 1, nProbe)
-    vectors.toDF("id", "v", "n2")
-      .crossJoin(broadcast(centsRow))
-      .select(col("id"), col("v"), col("n2"),
-        posexplode(top).as(Seq("pos", "r")))
-      .select(col("id"), col("r.centroid_id").as("centroid_id"),
-        (col("pos") + 1).cast("long").as("rk"), col("v"), col("n2"))
+  def cosineDistance(c: Column): Column =
+    -cosineFromParts(dot(col("v"), c.getField("v")), col("n2"),
+      c.getField("n2"))
+
+  /** Router distance by squared L2 ([[euclid2]]) of the row's `v` to a
+    * (cid, c) centroid — the k-means shape: one Lloyd ASSIGN step is
+    * `routeToCentroids(points, cents, 1)(euclidDistance)`.
+    */
+  def euclidDistance(c: Column): Column = euclid2(col("v"), c.getField("c"))
+
+  /** IVF candidate generation: the corpus assigned to its nearest cell,
+    * each probe routed to its `nProbe` nearest cells, joined on the
+    * cell — (centroid_id, id_n, v_n, n2_n, id_q, rk, v_q, n2_q) pair
+    * rows, `rk` the probe's route rank to the shared cell (so one
+    * routing at the largest nProbe serves every smaller arm as an
+    * `rk <= np` filter, v19). Probes broadcast into the cell join; the
+    * corpus is scanned ONCE — routing carries the vectors through, so
+    * neither side re-joins its own source. Never self-joined, never
+    * shuffled by pair; each corpus vector lives in exactly one cell, so
+    * no dedup step is needed.
+    */
+  def ivfCandidates(corpus: DataFrame, probes: DataFrame,
+      centroids: DataFrame, nProbe: Int): DataFrame = {
+    val corpusCells = routeToCentroids(corpus, centroids, 1)(cosineDistance)
+      .select(col("id").as("id_n"), col("cid").as("centroid_id"),
+        col("v").as("v_n"), col("n2").as("n2_n"))
+    val probeCells = routeToCentroids(probes, centroids, nProbe)(
+        cosineDistance)
+      .select(col("id").as("id_q"), col("cid").as("centroid_id"),
+        col("rk"), col("v").as("v_q"), col("n2").as("n2_q"))
+    corpusCells.join(broadcast(probeCells), Seq("centroid_id"))
   }
 
-  /** Full IVF ANN search: assign the corpus to cells (top-1 centroid),
-    * route each probe to its `nProbe` nearest cells, then compare probes
-    * only against the corpus vectors of their routed cells (equi-join on
-    * the cell id) and take the exact top-k of the survivors.
-    *
-    * Scale shape: centroids broadcast twice (routing passes), probes
-    * broadcast into the cell join; the corpus is scanned ONCE — the
-    * routing windows carry the vectors through (`keepPayload`), so
-    * neither side re-joins its own source to recover them. Never
-    * self-joined, never shuffled by pair. Cost per probe is
-    * O(nProbe × cellSize) instead of O(n); each corpus vector lives in
-    * exactly one cell, so no dedup step is needed.
+  /** Full IVF ANN search: the exact cosine top-k of each probe among
+    * its [[ivfCandidates]]. Cost per probe is O(nProbe × cellSize)
+    * instead of O(n).
     */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, centroids: DataFrame,
-      nProbe: Int, k: Int): DataFrame = {
-    val corpusCells = routeToCentroids(corpus, centroids, 1,
-      keepPayload = true).toDF("id_n", "centroid_id", "v_n", "n2_n")
-    val probeCells = routeToCentroids(probes, centroids, nProbe,
-      keepPayload = true).toDF("id_q", "centroid_id", "v_q", "n2_q")
-    val joined = corpusCells.join(broadcast(probeCells), Seq("centroid_id"))
-      .filter(col("id_q") =!= col("id_n"))
-      .withColumn("cos", cosineFromParts(dot(col("v_q"), col("v_n")),
-        col("n2_q"), col("n2_n")))
-      .select(col("id_q"), col("id_n"), round(col("cos"), 6).as("cos"))
-    RelationalOps.topKPerGroup(joined, Seq("id_q"),
-      Seq(col("cos").desc, col("id_n").asc), k, rankCol = "rank")
-      .withColumn("rank", col("rank").cast("long"))
-  }
+      nProbe: Int, k: Int): DataFrame =
+    rankPerProbe(ivfCandidates(corpus, probes, centroids, nProbe)
+      .select(col("id_q"), col("id_n"), Cosine.expr.as(Cosine.name)),
+      col(Cosine.name).desc, k)
 
-  /** IVF-style cell assignment: nearest centroid by cosine (centroids are
-    * broadcast; assignment is a per-row argmax, one narrow pass).
+  /** Symmetric per-vector int8 quantization of the [[prepared]] column
+    * `v` (v9, v11): adds `max_abs`, `scale` = 127/max|x_i| and
+    * `inv` = max|x_i|/127 — both 0 for an all-zero vector, so no 0/0 —
+    * and the codes `qs`, q_i = floor(x_i·scale + 0.5): round-half-up
+    * through floor, because round()'s half-even vs half-away behavior
+    * differs across engines.
     */
-  def assignToCentroids(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    // same narrow argmin as [[assignNearestEuclid]]: one broadcast
-    // centroid array row, array_min over (negated cos, centroid_id)
-    // structs — no window, no shuffle of the corpus
-    val centsRow = centroids.toDF("centroid_id", "v_c", "n2_c")
-      .agg(array_sort(collect_list(
-        struct(col("centroid_id"), col("v_c"), col("n2_c")))).as("cents"))
-    val best = array_min(transform(col("cents"), s =>
-      struct((-cosineFromParts(dot(col("v"), s.getField("v_c")),
-        col("n2"), s.getField("n2_c"))).as("negcos"),
-        s.getField("centroid_id").as("centroid_id"))))
-    corpus.toDF("id", "v", "n2")
-      .crossJoin(broadcast(centsRow))
-      .withColumn("best", best)
-      .select(col("id"), col("best.centroid_id").as("centroid_id"),
-        round(-col("best.negcos"), 6).as("cos"))
-  }
+  def int8Quantized(df: DataFrame): DataFrame =
+    df.withColumn("max_abs", array_max(transform(col("v"), x => abs(x))))
+      .withColumn("scale",
+        when(col("max_abs") > 0, lit(127.0) / col("max_abs"))
+          .otherwise(lit(0.0)))
+      .withColumn("inv",
+        when(col("max_abs") > 0, col("max_abs") / lit(127.0))
+          .otherwise(lit(0.0)))
+      .withColumn("qs",
+        transform(col("v"), x => floor(x * col("scale") + lit(0.5))))
 
   // ---- Product quantization (ADC search over compressed codes) -------
 
@@ -465,13 +457,11 @@ object VectorOps {
     val ad2 = aggregate(sequence(lit(0), lit(subs - 1)), lit(0.0),
       (a, s) => a + element_at(element_at(col("dtab"), s + 1),
         element_at(col("codes"), s + 1) + 1))
-    val joined = enc.crossJoin(broadcast(ptab))
-      .filter(col("id_q") =!= col("id_n"))
-      .select(col("id_q"), col("id_n"), ad2.as("ad2"))
-    RelationalOps.topKPerGroup(joined, Seq("id_q"),
-        Seq(col("ad2").asc, col("id_n").asc), k, rankCol = "rank")
-      .select(col("id_q"), col("id_n"), round(col("ad2"), 6).as("ad2"),
-        col("rank").cast("long").as("rank"))
+    // ranked on the RAW sum, rounded after
+    rankPerProbe(enc.crossJoin(broadcast(ptab))
+        .select(col("id_q"), col("id_n"), ad2.as("ad2")),
+        col("ad2").asc, k)
+      .withColumn("ad2", round(col("ad2"), 6))
   }
 
   // ---- Lloyd k-means (iterative clustering, bit-reproducible) ---------
@@ -484,53 +474,6 @@ object VectorOps {
   def euclid2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, e) => acc + e)
-
-  /** One Lloyd ASSIGN step: nearest centroid per point (min squared-L2,
-    * centroid_id tie-break). `points` = (id, v); `cents` = (cid, c).
-    *
-    * ZERO corpus movement: the K centroids collapse to ONE array row
-    * (an O(K·dim) aggregate — trivial), that row is broadcast, and the
-    * per-point argmin is `array_min` over (d2, cid) structs — struct
-    * ordering IS the (distance asc, centroid_id asc) tie-break, so no
-    * window, no shuffle of the points, just a narrow projection. The
-    * first formulation here was a crossJoin + window argmin, which
-    * re-shuffled the entire corpus on point id once per Lloyd round —
-    * exactly the kind of hidden exchange that turns an iterative
-    * algorithm quadratic-ish in wall-clock at 100 TB (plan-guarded
-    * against regression in PlanAuditSpec). Returns (id, v, cid, d2) —
-    * v is carried through because the UPDATE step consumes it next.
-    */
-  def assignNearestEuclid(points: DataFrame, cents: DataFrame): DataFrame = {
-    val centsRow = cents.agg(
-      array_sort(collect_list(struct(col("cid"), col("c")))).as("cents"))
-    val best = array_min(transform(col("cents"),
-      s => struct(euclid2(col("v"), s.getField("c")).as("d2"),
-        s.getField("cid").as("cid"))))
-    points.crossJoin(broadcast(centsRow))
-      .withColumn("best", best)
-      .select(col("id"), col("v"), col("best.cid").as("cid"),
-        col("best.d2").as("d2"))
-  }
-
-  /** Ranked EUCLIDEAN cell assignment: each point's `k` nearest
-    * centroids with their rank (1 = nearest) — [[assignNearestEuclid]]
-    * generalized for multi-probe membership (rk = 1 reproduces it
-    * exactly: same fold, same (d2, cid) struct-order tiebreak). Same
-    * zero-corpus-movement shape: one broadcast centroid row, a sorted
-    * slice, an in-row posexplode — fan-out is exactly k×, never a
-    * shuffle. Returns (id, v, cid, rk). */
-  def assignTopKEuclid(points: DataFrame, cents: DataFrame,
-      k: Int): DataFrame = {
-    val centsRow = cents.agg(
-      array_sort(collect_list(struct(col("cid"), col("c")))).as("cents"))
-    val top = slice(array_sort(transform(col("cents"),
-      s => struct(euclid2(col("v"), s.getField("c")).as("d2"),
-        s.getField("cid").as("cid")))), 1, k)
-    points.crossJoin(broadcast(centsRow))
-      .select(col("id"), col("v"), posexplode(top).as(Seq("pos", "r")))
-      .select(col("id"), col("v"), col("r.cid").as("cid"),
-        (col("pos") + 1).cast("long").as("rk"), col("r.d2").as("d2"))
-  }
 
   /** One Lloyd UPDATE step: elementwise mean of each cluster's vectors,
     * INTEGER-EXACT until one final division — components are scaled to

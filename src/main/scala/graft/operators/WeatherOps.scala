@@ -71,20 +71,8 @@ object WeatherOps {
       .drop("time_diff")
   }
 
-  // ---- P11: literal parameter columns (FULL:109-113) ----------------------
-
-  def withPeriodLiterals(df: DataFrame, start: String, end: String): DataFrame =
-    df.withColumn("start_date", lit(start))
-      .withColumn("end_date", lit(end))
-
   // ---- A1: weekly average (FULL:86-94) ------------------------------------
 
-  /** Group by (keys..., ISO week of `tsCol`), round(avg(valueCol), 2).
-    * Computed grouping expression aliased inside groupBy, exactly like the
-    * reference's `weekofyear` key (FULL:90). Plans as partial + final hash
-    * aggregate — map-side combine keeps the shuffle proportional to group
-    * cardinality, not row count.
-    */
   /** The A1/A2 2dp mean in EXACT integer arithmetic: observations
     * quantize to cents (exact recovery for the pipeline's P4-rounded
     * 2dp values; a raw double quantizes half-up at the cent), the
@@ -103,7 +91,14 @@ object WeatherOps {
     "CAST(CASE WHEN __c < 0 THEN -((-__c + __n DIV 2) DIV __n) " +
       s"ELSE (__c + __n DIV 2) DIV __n END AS DOUBLE) / 100.0 AS $outCol"
 
-  /** `__n` counts NON-NULL values (`count(valueCol)`, not `count(*)`) so
+  /** Group by (keys..., ISO week of `tsCol`), round(avg(valueCol), 2)
+    * computed exactly by [[centsMeanExpr]]. Computed grouping expression
+    * aliased inside groupBy, exactly like the reference's `weekofyear`
+    * key (FULL:90). Plans as partial + final hash aggregate — map-side
+    * combine keeps the shuffle proportional to group cardinality, not
+    * row count.
+    *
+    * `__n` counts NON-NULL values (`count(valueCol)`, not `count(*)`) so
     * the mean keeps `avg()`'s null-skipping semantics: NULL cents are
     * skipped by the sum, so counting them in the denominator would
     * silently shrink the mean. The oracle mirror counts the same column.

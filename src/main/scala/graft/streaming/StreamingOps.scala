@@ -46,6 +46,10 @@ final case class LateBy(key: Long, eventId: Long, lateByMicros: Long)
   */
 object StreamingOps {
 
+  /** Epoch micros of an event time — the state operators' time unit. */
+  private def micros(t: java.sql.Timestamp): Long =
+    t.getTime / 1000 * 1000000L + t.getNanos / 1000
+
   /** Tumbling event-time window aggregate (epoch-aligned).
     *
     * The average accumulates in FIXED POINT (values scaled to integer
@@ -137,8 +141,6 @@ object StreamingOps {
         (key, rows, state) =>
           def close(s: OpenSession) =
             ClosedSession(key, s.startMicros, s.lastMicros + gapMicros, s.n)
-          def micros(t: java.sql.Timestamp): Long =
-            t.getTime / 1000 * 1000000L + t.getNanos / 1000
           if (state.hasTimedOut) {
             // watermark passed last+gap: the open session can't grow
             val s = state.get
@@ -213,8 +215,6 @@ object StreamingOps {
       .flatMapGroupsWithState[Long, Admitted](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key, rows, state) =>
-          def micros(t: java.sql.Timestamp): Long =
-            t.getTime / 1000 * 1000000L + t.getNanos / 1000
           val sorted = rows.toArray.sortBy(r => (micros(r._2), r._3))
           var n = state.getOption.getOrElse(0L)
           val admitted = Seq.newBuilder[Admitted]
@@ -256,8 +256,6 @@ object StreamingOps {
       .flatMapGroupsWithState[Long, LateBy](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key, rows, state) =>
-          def micros(t: java.sql.Timestamp): Long =
-            t.getTime / 1000 * 1000000L + t.getNanos / 1000
           val sorted = rows.toArray.sortBy(_._3)
           var hwm = state.getOption.getOrElse(Long.MinValue)
           val outRows = Seq.newBuilder[LateBy]

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.VectorOps
 
@@ -91,28 +92,150 @@ class VectorOpsSpec extends SparkTestBase {
     assert(out(2)._2 == 0.0)
   }
 
-  test("assignToCentroids picks the nearest centroid") {
+  test("routeToCentroids at k = 1 picks the nearest centroid by cosine") {
     val centroids = prep.filter(col("id") < 2)
-    val out = VectorOps.assignToCentroids(prep, centroids)
-      .select("id", "centroid_id").as[(Long, Long)].collect().toMap
+    val out = VectorOps.routeToCentroids(prep, centroids, 1)(
+        VectorOps.cosineDistance)
+      .select("id", "cid").as[(Long, Long)].collect().toMap
     assert(out(0L) == 0L)
     assert(out(1L) == 1L)
     assert(out(3L) == 0L) // colinear with centroid 0
   }
 
-  test("assignTopKEuclid carries exact squared distances per rank") {
+  test("routeToCentroids carries exact squared distances per rank") {
     val pts = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(9.0, 0.0)))
       .toDF("id", "v")
     val cents = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 0.0)))
       .toDF("cid", "c")
-    val out = VectorOps.assignTopKEuclid(pts, cents, 2)
-      .select("id", "rk", "cid", "d2")
+    val out = VectorOps.routeToCentroids(pts, cents, 2)(
+        VectorOps.euclidDistance)
+      .select("id", "rk", "cid", "dist")
       .as[(Long, Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
     assert(out((1L, 1L)) == ((0L, 1.0)))   // (1-0)² nearest
     assert(out((1L, 2L)) == ((1L, 81.0)))  // (1-10)² runner-up
     assert(out((2L, 1L)) == ((1L, 1.0)))
     assert(out((2L, 2L)) == ((0L, 81.0)))
+  }
+
+  test("searches and the router keep the rank contract on edge data") {
+    type V = Seq[Double]
+    // 4 is the all-zero vector; 0 and 3 are colinear; 1, 4 and 5 all
+    // tie with probe 0 on dot. Cosine cases use the non-zero vectors: a
+    // zero norm fails a cosine search with DIVIDE_BY_ZERO (ANSI mode).
+    val all: Seq[(Long, Seq[Double])] = Seq(0L -> Seq(1.0, 0.0, 0.0),
+      1L -> Seq(0.0, 1.0, 0.0), 2L -> Seq(1.0, 1.0, 0.0),
+      3L -> Seq(2.0, 0.0, 0.0), 4L -> Seq(0.0, 0.0, 0.0),
+      5L -> Seq(0.0, 0.0, 1.0))
+    val nonZero = all.filter(_._1 != 4L)
+    def frame(rows: Seq[(Long, V)]) = VectorOps.prepared(
+      rows.map { case (i, v) => (i, v.map(_.toFloat)) }
+        .toDF("vec_id", "embedding"), "vec_id", "embedding")
+    def only(ids: Long*) = all.filter(r => ids.contains(r._1))
+
+    // the driver-side model: the same left folds, the same rounding
+    def dotD(a: V, b: V) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    def r6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def cosRaw(a: V, b: V) = dotD(a, b) / math.sqrt(dotD(a, a) * dotD(b, b))
+    def cosine(a: V, b: V) = r6(cosRaw(a, b))
+    def inner(a: V, b: V) = r6(dotD(a, b))
+    def euclid(a: V, b: V) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + (x - y) * (x - y) }
+    val (bands, rowsPerBand) = (4, 2)
+    def buckets(v: V) = (0 until bands).map(b => (0 until rowsPerBand).map {
+      j =>
+        val plane = v.indices.map(i =>
+          VectorOps.planeComponent(b * rowsPerBand + j, i))
+        if (dotD(v, plane) >= 0) 1L << j else 0L
+    }.sum)
+    def shareBand(a: V, b: V) =
+      buckets(a).zip(buckets(b)).exists { case (x, y) => x == y }
+    // MIPS-LSH bands the norm-augmented vectors of the corpus at hand
+    def augmentedShare(corpus: Seq[(Long, V)])(q: V, n: V) = {
+      val m2 = corpus.map(r => dotD(r._2, r._2)).max
+      shareBand(q :+ 0.0, n :+ math.sqrt(math.max(m2 - dotD(n, n), 0.0)))
+    }
+    // self pairs out, (score desc, id_n asc), top k, ranks from 1
+    def ranked(probes: Seq[(Long, V)], corpus: Seq[(Long, V)], k: Int,
+        score: (V, V) => Double,
+        cand: (V, V) => Boolean = (_, _) => true) =
+      probes.flatMap { case (q, vq) =>
+        corpus.filter { case (n, vn) => n != q && cand(vq, vn) }
+          .map { case (n, vn) => (n, score(vq, vn)) }
+          .sortBy { case (n, sc) => (-sc, n) }.take(k).zipWithIndex
+          .map { case ((n, sc), i) => (q, n, sc, i + 1L) }
+      }
+    def check(what: String, df: DataFrame, score: String,
+        want: Seq[(Long, Long, Double, Long)]): Unit = {
+      val got = df.select(col("id_q"), col("id_n"), col(score), col("rank"))
+        .as[(Long, Long, Double, Long)].collect().toSeq
+      assert(got.forall(r => r._1 != r._2), s"$what: self pair in $got")
+      got.groupBy(_._1).foreach { case (q, rs) =>
+        assert(rs.map(_._4).sorted == (1L to rs.size.toLong),
+          s"$what: probe $q ranks ${rs.map(_._4)}")
+      }
+      assert(got.sortBy(r => (r._1, r._4)) == want.sortBy(r => (r._1, r._4)),
+        s"$what: got $got, want $want")
+    }
+    import VectorOps.{Cosine, Dot}
+    val lsh = VectorOps.lshTopK(_: DataFrame, _: DataFrame, bands,
+      rowsPerBand, 3, _: Int, _: VectorOps.Score)
+
+    // k larger than the number of candidates: every candidate, ranked
+    val p0 = frame(only(0L))
+    check("exact cos, k > n", VectorOps.bruteForceTopK(frame(nonZero), p0,
+      10), "cos", ranked(only(0L), nonZero, 10, cosine))
+    check("exact dot, k > n", VectorOps.bruteForceTopK(frame(all), p0, 10,
+      Dot), "dot", ranked(only(0L), all, 10, inner))
+    check("lsh cos, k > n", lsh(frame(nonZero), p0, 10, Cosine), "cos",
+      ranked(only(0L), nonZero, 10, cosine, shareBand))
+    check("lsh dot, k > n", lsh(frame(all), p0, 10, Dot), "dot",
+      ranked(only(0L), all, 10, inner, augmentedShare(all)))
+    // nProbe beyond the 2 cells: the IVF candidates are the whole corpus
+    check("ivf, nProbe > cells, k > n", VectorOps.ivfTopK(frame(nonZero), p0,
+      frame(only(0L, 1L)), nProbe = 5, k = 10), "cos",
+      ranked(only(0L), nonZero, 10, cosine))
+
+    // a corpus of one row: one neighbor for another probe, none for itself
+    val one = only(3L)
+    val p03 = frame(only(0L, 3L))
+    check("exact cos, one row", VectorOps.bruteForceTopK(frame(one), p03, 5),
+      "cos", ranked(only(0L, 3L), one, 5, cosine))
+    check("exact dot, one row", VectorOps.bruteForceTopK(frame(one), p03, 5,
+      Dot), "dot", ranked(only(0L, 3L), one, 5, inner))
+    check("lsh cos, one row", lsh(frame(one), p03, 5, Cosine), "cos",
+      ranked(only(0L, 3L), one, 5, cosine, shareBand))
+    check("lsh dot, one row", lsh(frame(one), p03, 5, Dot), "dot",
+      ranked(only(0L, 3L), one, 5, inner, augmentedShare(one)))
+
+    // an all-zero probe: every dot ties at 0, so ids alone rank
+    val p4 = frame(only(4L))
+    check("exact dot, zero probe", VectorOps.bruteForceTopK(frame(all), p4,
+      3, Dot), "dot", ranked(only(4L), all, 3, inner))
+    check("lsh dot, zero probe", lsh(frame(all), p4, 10, Dot), "dot",
+      ranked(only(4L), all, 10, inner, augmentedShare(all)))
+
+    // router k larger than the number of centroids: every centroid,
+    // ranked by (distance, id)
+    def routed(df: DataFrame) = df.select("id", "cid", "rk", "dist")
+      .as[(Long, Long, Long, Double)].collect().toSeq
+      .sortBy(r => (r._1, r._3))
+    def route(vs: Seq[(Long, V)], cents: Seq[(Long, V)], k: Int,
+        dist: (V, V) => Double) = vs.flatMap { case (i, v) =>
+      cents.map { case (c, cv) => (dist(v, cv), c) }.sortBy(identity)
+        .take(k).zipWithIndex.map { case ((d, c), r) => (i, c, r + 1L, d) }
+    }
+    val cents = only(0L, 1L)
+    val pts = all.toDF("id", "v")
+    for (k <- Seq(1, 2, 5))
+      assert(routed(VectorOps.routeToCentroids(pts, cents.toDF("cid", "c"),
+        k)(VectorOps.euclidDistance)) == route(all, cents, k, euclid),
+        s"euclid router, k = $k")
+    assert(routed(VectorOps.routeToCentroids(frame(nonZero), frame(cents),
+      5)(VectorOps.cosineDistance)) ==
+      route(nonZero, cents, 5, (a, b) => -cosRaw(a, b)), "cosine router")
   }
 
   test("v20_silhouette: partition of the corpus, scores in [0,1]") {
@@ -155,13 +278,11 @@ class VectorOpsSpec extends SparkTestBase {
     }
     // zero vector: scale 0, codes 0, error 0 — no 0/0 NaN divergence
     val z = Seq((99L, Seq.fill(4)(0.0f))).toDF("vec_id", "embedding")
-    val prepZ = VectorOps.prepared(z, "vec_id", "embedding")
-    val maxAbs = array_max(transform(col("v"), x => abs(x)))
-    val qz = prepZ.withColumn("max_abs", maxAbs)
-      .select(when(col("max_abs") > 0, lit(127.0) / col("max_abs"))
-        .otherwise(lit(0.0)).as("scale"))
-      .as[Double].collect()
-    assert(qz.toSeq == Seq(0.0))
+    val qz = VectorOps.int8Quantized(
+        VectorOps.prepared(z, "vec_id", "embedding"))
+      .select("scale", "inv", "qs").as[(Double, Double, Seq[Long])]
+      .collect()
+    assert(qz.toSeq == Seq((0.0, 0.0, Seq.fill(4)(0L))))
   }
 
   test("ANN recall@10 stays above the tuned floor (v8 gate)") {
@@ -250,9 +371,9 @@ class VectorOpsSpec extends SparkTestBase {
     val x = pts.select(col("id"), col("v"))
     val init = pts.filter(col("id") % 5 === 0)
       .select(col("truth").as("cid"), col("v").as("c"))
-    val a1 = VectorOps.assignNearestEuclid(x,
-      VectorOps.centroidMeans(
-        VectorOps.assignNearestEuclid(x, init)))
+    def assign(cents: org.apache.spark.sql.DataFrame) =
+      VectorOps.routeToCentroids(x, cents, 1)(VectorOps.euclidDistance)
+    val a1 = assign(VectorOps.centroidMeans(assign(init)))
     val got = a1.select("id", "cid").as[(Long, Long)].collect().toMap
     pts.select("id", "truth").as[(Long, Long)].collect().foreach {
       case (id, truth) => assert(got(id) == truth,
@@ -346,8 +467,9 @@ class VectorOpsSpec extends SparkTestBase {
     val pts = prep2.select(col("id"), col("v"))
     val cent0 = pts.filter(col("id") < 16)
       .select(col("id").as("cid"), col("v").as("c"))
-    val a1 = VectorOps.assignNearestEuclid(pts,
-      VectorOps.centroidMeans(VectorOps.assignNearestEuclid(pts, cent0)))
+    def assign(cents: org.apache.spark.sql.DataFrame) =
+      VectorOps.routeToCentroids(pts, cents, 1)(VectorOps.euclidDistance)
+    val a1 = assign(VectorOps.centroidMeans(assign(cent0)))
     val cells = a1.select(col("id"), col("cid"), col("v"),
       VectorOps.norm2(col("v")).as("n2"))
     val cellOf = cells.filter(col("id") === 20L || col("id") === 999999L)
