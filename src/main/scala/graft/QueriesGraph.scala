@@ -108,8 +108,8 @@ object QueriesGraph {
     // k-core of the customer co-purchase graph (customers sharing ≥ 2
     // parts, per-part cap 16): iterative peeling to the unique maximal
     // subgraph of min-degree ≥ 4, reporting each survivor's within-core
-    // degree. The d7/d9 loop shape — one hash-agg + one probe + two
-    // anti-joins per round, lineage cut per round.
+    // degree. A `GraphOps.fixpoint` loop — one hash-agg + one probe +
+    // two anti-joins per round, lineage cut per round.
     Query("d11_kcore", (s, d) => {
       GraphOps.kCore(coPurchaseEdges(s, d), KCoreK, PeelRounds)
         .select(col("id").cast("long").as("custkey"), col("core_deg"))
@@ -192,8 +192,8 @@ object QueriesGraph {
     // platform runs from a suspect set. Seeds are the 5 smallest node
     // ids (deterministic); each of the 4 rounds moves O(frontier·deg)
     // KEYS through one equi-join + one anti-join (never payloads,
-    // never all-pairs), with per-round lineage cuts — BFS is the d7/
-    // d9/d11 iterative discipline applied to reachability. The oracle
+    // never all-pairs), each round lineage-cut — BFS is a fixed-round
+    // fold over `GraphOps.cut` rounds, like d9 and d13. The oracle
     // is a depth-bounded recursive closure with min(dist): first
     // discovery in the engine IS min distance in the closure.
     Query("d26_bfs_hops", (s, d) => {

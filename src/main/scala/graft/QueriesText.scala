@@ -1450,12 +1450,13 @@ object QueriesText {
     * (once in the pair-count argmax, once in the merge fold), so each
     * invocation re-ANALYZED a 2^R-copy tree (~6 s of pure Catalyst
     * analysis per x35/x37 call at ANY scale, measured: the x37 plan
-    * rendered 414 nested InMemoryRelations). The fix is the
-    * connectedComponents discipline: eagerly localCheckpoint each
-    * round (constant-size LogicalRDD plans) and share by OBJECT
-    * IDENTITY through [[SessionMemo]], since a LogicalRDD can't be
-    * found by plan equality. localCheckpoint is the single-process
-    * form; a resilient cluster deployment would use checkpoint() to
+    * rendered 414 nested InMemoryRelations). The fix is the graph
+    * loops' per-round lineage cut (`GraphOps.cut`), made EAGER here:
+    * [[SessionMemo.retain]] checkpoints each round (constant-size
+    * LogicalRDD plans), and the frames are shared by OBJECT IDENTITY
+    * through [[SessionMemo]], since a LogicalRDD can't be found by
+    * plan equality. localCheckpoint is the single-process form; a
+    * resilient cluster deployment would use checkpoint() to
     * durable storage — same shape, same truncation.
     */
   private lazy val bpeChainFrames = SharedFrame.memoized(

@@ -574,11 +574,11 @@ object QueriesVector {
     // few-shot sampling, result diversification): from v1's exact
     // top-10 per probe, select 5 greedily by score = 0.7·relevance −
     // 0.3·max-sim-to-already-selected. The greedy recursion is
-    // UNROLLED into 5 deterministic argmax stages (the kCore
-    // fixed-depth discipline, applied on both engines this time):
-    // every stage is an anti-join (candidates minus selected), a
-    // bounded sims join (pairwise candidate cosines, ≤ k² rows per
-    // probe, computed once and lineage-cut), and one windowed argmax
+    // UNROLLED to a fixed depth of 5 deterministic argmax steps on
+    // both engines (a fixed-round fold, like GraphOps.labelPropagation
+    // — no fixpoint probe): each step scores the remaining candidates
+    // against the bounded pairwise sims (candidate cosines, ≤ k² rows
+    // per probe, computed once and lineage-cut) and takes the argmax
     // with the id tiebreak. All scores derive from 6dp-rounded
     // cosines through the literal 0.7/0.3 weights in identical
     // operand order — bit-equal, so the greedy path cannot diverge.

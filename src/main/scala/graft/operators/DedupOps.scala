@@ -427,13 +427,12 @@ object DedupOps {
     */
   private def verifyJaccardPairs(cand: DataFrame, e: DataFrame,
       tNum: Int, tDen: Int): DataFrame = {
-    // SORTED packed sets + native merge-count (OPT r19, guide §1.2
-    // step 2): `size(array_intersect(...))` hash-builds and allocates
-    // the intersection array per candidate pair just to read its
-    // length — 326 task-seconds of d17's sf1 verify stage. Sorting
-    // once per DOC (amortized over all its pairs) lets a zero-
-    // allocation two-pointer merge produce the identical distinct
-    // count per pair.
+    // SORTED packed sets + native merge-count: `size(array_intersect)`
+    // hash-builds and allocates the intersection array per candidate
+    // pair just to read its length — 326 task-seconds of d17's sf1
+    // verify stage. Sorting once per DOC (amortized over all its pairs)
+    // lets a zero-allocation two-pointer merge produce the identical
+    // distinct count per pair.
     val packed = e.groupBy(col("id"), col("n"))
       .agg(array_sort(collect_set(col("s"))).as("ss"))
     val ea = packed.select(col("id").as("id_a"), col("n").as("n_a"),
@@ -461,105 +460,65 @@ object DedupOps {
     * label and its neighbors' labels; at fixpoint every node of a
     * component carries the component's minimum id.
     *
-    * Shape per round: one equi-join of the (persisted, symmetrized) edge
-    * list against the current labels + a hash aggregate — the standard
+    * Shape per round: one equi-join of the symmetrized edge list
+    * against the current labels + a hash aggregate — the standard
     * Pregel iteration, O(|E|) per round, converging in O(component
     * diameter) rounds. Near-dup clusters are band-collision cliques, so
     * their diameter is tiny (2–4) in practice; `maxIters` guards the
-    * adversarial chain case and the loop FAILS LOUDLY rather than return
-    * half-propagated labels. The per-round `count()`s are the convergence
-    * probe of the iterative algorithm (same as GraphX/Pregel) — they move
-    * one row to the driver, not data.
+    * adversarial chain case, and the [[GraphOps.fixpoint]] FAILS LOUDLY
+    * rather than return half-propagated labels. The per-round label-sum
+    * is the convergence probe of the iterative algorithm (same as
+    * GraphX/Pregel) — it moves one row to the driver, not data.
     *
     * Output: (id, cluster) — every node that appears in `pairs`, labeled
     * with the min id of its component. Docs in no pair are their own
     * cluster by definition and don't need rows.
     *
-    * Every round LOCAL-CHECKPOINTS its labels instead of persisting them:
-    * round i+1's plan references round i TWICE (once in the neighbor join,
-    * once in the merge), so under plain caching the logical plan doubles
-    * per round and — worse — plan-STRING rendering (the per-action SQL
-    * event) expands the shared DAG into a tree, growing 4× per round:
-    * measured 13 KB (round 1) → 261 MB (round 8) → heap OOM around round
-    * 9 on a plain 60-node chain. The lazy checkpoint truncates the plan
-    * to a LogicalRDD immediately (constant-size plans at any round
-    * count), and the round's single probe action materializes it —
-    * `doCheckpoint` computes any partitions the `limit(1)` probe skipped
-    * before truncating lineage, so no recompute can miss data. Nothing is
-    * registered in the CacheManager, so repeated calls leak no cache
-    * entries (the checkpoint blocks of dropped rounds — and of the
-    * returned frame, once the caller drops it — are freed by the
-    * ContextCleaner when their RDDs are garbage-collected).
+    * Round i+1's plan references round i TWICE (once in the neighbor
+    * join, once as the self-vote), which is why every round's labels
+    * go through [[GraphOps.cut]].
     */
   def connectedComponents(pairs: DataFrame, idACol: String, idBCol: String,
-      maxIters: Int = 50): DataFrame = {
-    val e = pairs.select(col(idACol).cast("long").as("src"),
-      col(idBCol).cast("long").as("dst"))
-    // symmetrize with a narrow in-row explode, not a self-union (OPT
-    // r19, guide §2.4): a union references the pair pipeline twice, and
-    // each reference is evaluated up to its last exchange (ReuseExchange
-    // dedups the exchanges themselves, but the pair-distinct final
-    // aggregate ran once per direction — d16 paid a full extra reduce
-    // pass). Same row multiset, one evaluation.
-    val sym = e.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-      .persist()
+      maxIters: Int = 50): DataFrame = GraphOps.withSymmetrized(
+      pairs.select(col(idACol).cast("long").as("src"),
+        col(idBCol).cast("long").as("dst")), "src", "dst") { sym =>
+    // labels are MONOTONE non-increasing (each round takes a min that
+    // includes the node's own previous label), so Σ labels strictly
+    // decreases iff ANY label changed — an O(1)-output aggregate, no
+    // next-vs-previous join. No overflow: Σ ≤ n · max_id ≪ Long range
+    // for every id space here (ids < 10^9, the GraphOps.OrientBase
+    // bound).
+    def labelSum(labels: DataFrame): Long =
+      labels.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
     // fuse round 1 into the init: every node starts at min(own id,
     // direct neighbors) — one fewer iteration for free
-    var labels = sym.groupBy(col("src"))
+    val init = GraphOps.cut(sym.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("label"))
-      .select(col("src").as("id"), col("label"))
-      .localCheckpoint(eager = false)
-    try {
-      var iter = 0
-      var converged = false
-      // Convergence probe (OPT r19, guide §2.4): labels are MONOTONE
-      // non-increasing (each round takes a min that includes the
-      // node's own previous label), so Σ labels strictly decreases
-      // iff ANY label changed — an O(1)-output aggregate replaces the
-      // old next-vs-previous join + limit probe (one join fewer per
-      // round). No overflow: Σ ≤ n · max_id ≪ Long range for every
-      // id space here (ids < 10^9, the GraphOps.OrientBase bound).
-      var prevSum = labels.agg(coalesce(sum(col("label")), lit(0L)))
-        .head().getLong(0)
-      while (!converged && iter < maxIters) {
-        // one round = ONE join + ONE aggregate: neighbor votes from
-        // the edge join, the node's own previous label unioned in as a
-        // self-vote — min over both IS least(own, min-neighbor), so
-        // the old separate merge join of `labels` against `nbrMin`
-        // disappears (round-for-round identical label frames)
-        val next = sym
-          .join(labels.select(col("id").as("dst"), col("label")),
-            Seq("dst"))
-          .select(col("src"), col("label"))
-          .unionAll(labels.select(col("id").as("src"), col("label")))
-          .groupBy(col("src")).agg(min(col("label")).as("label"))
-          .select(col("src").as("id"), col("label"))
-          .localCheckpoint(eager = false)
-        // ONE action per round: the sum probe materializes `next` into
-        // its checkpoint as a side effect
-        val s = next.agg(coalesce(sum(col("label")), lit(0L)))
-          .head().getLong(0)
-        labels = next
-        converged = s == prevSum
-        prevSum = s
-        iter += 1
-      }
-      require(converged,
-        s"connectedComponents did not converge in $maxIters rounds — " +
-          "component diameter exceeds the bound; raise maxIters")
-      // labels is a checkpointed LogicalRDD: this projection carries no
-      // dependency on anything this method persisted (sym is released in
-      // the finally), so callers hold exactly one output-sized frame
-      labels.select(col("id"), col("label").as("cluster"))
-    } finally sym.unpersist()
+      .select(col("src").as("id"), col("label")))
+    val ((labels, _), _) = GraphOps.fixpoint("connectedComponents",
+        (init, labelSum(init)), maxIters) { case (labels, prevSum) =>
+      // one round = ONE join + ONE aggregate: neighbor votes from the
+      // edge join, the node's own previous label unioned in as a
+      // self-vote — min over both IS least(own, min-neighbor)
+      val next = GraphOps.cut(sym
+        .join(labels.select(col("id").as("dst"), col("label")),
+          Seq("dst"))
+        .select(col("src"), col("label"))
+        .unionAll(labels.select(col("id").as("src"), col("label")))
+        .groupBy(col("src")).agg(min(col("label")).as("label"))
+        .select(col("src").as("id"), col("label")))
+      // ONE action per round: the sum probe materializes `next`
+      val s = labelSum(next)
+      ((next, s), s == prevSum)
+    }
+    // labels is checkpointed: this projection does not depend on `sym`,
+    // so callers hold exactly one output-sized frame
+    labels.select(col("id"), col("label").as("cluster"))
   }
 
-  /** Connected components by ALTERNATING STAR CONTRACTION (VERDICT r15
-    * #4 — the O(log n)-round alternative to [[connectedComponents]]'s
-    * O(diameter) min-label Pregel): the two-phase algorithm of
+  /** Connected components by ALTERNATING STAR CONTRACTION, the
+    * O(log n)-round alternative to [[connectedComponents]]'s
+    * O(diameter) min-label Pregel: the two-phase algorithm of
     * Kiveris et al., "Connected Components in MapReduce and Beyond"
     * (SoCC'14). Edges are kept oriented child→parent (src > dst);
     * each round applies
@@ -579,11 +538,11 @@ object DedupOps {
     * rounds where min-label pays 2^k (StarContractionSpec pins both).
     * That is the property that keeps the dedup-cluster step safe when
     * a 100× corpus contains CHAINED near-duplicates (A~B~C~…) instead
-    * of band-collision cliques. Per-round lineage is cut with the same
-    * lazy localCheckpoint discipline as min-label (each phase's plan
-    * references the previous frame twice — unchecked, the plan tree
-    * doubles per round); the fixpoint probe (symmetric difference,
-    * first row only) is the round's single action.
+    * of band-collision cliques. Each round is [[GraphOps.cut]] (each
+    * phase's plan references the previous frame twice — uncut, the
+    * plan tree doubles per round), and the [[GraphOps.fixpoint]]'s
+    * probe (symmetric difference, first row only) is the round's single
+    * action.
     *
     * Returns (labels, rounds): labels = (id, cluster) for every node
     * appearing in `pairs`, cluster = component min id.
@@ -592,14 +551,12 @@ object DedupOps {
       maxIters: Int = 50): (DataFrame, Int) = {
     val ab = pairs.select(col(idACol).cast("long").as("a"),
       col(idBCol).cast("long").as("b"))
-    val nodes = ab.select(col("a").as("id"))
-      .union(ab.select(col("b").as("id"))).distinct()
-      .localCheckpoint(eager = false)
-    var e = ab.filter(col("a") =!= col("b"))
+    val nodes = GraphOps.cut(ab.select(col("a").as("id"))
+      .union(ab.select(col("b").as("id"))).distinct())
+    val init = GraphOps.cut(ab.filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("src"),
         least(col("a"), col("b")).as("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
 
     // large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) ∀ v ∈ Γ(u), v > u.
     // Each oriented edge (c, p) is seen from BOTH endpoints' groups, so
@@ -623,27 +580,20 @@ object DedupOps {
         .distinct()
     }
 
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-      // single probe action per round: any edge in exactly one of the
-      // two sets means another round (materializes `next` as a side
-      // effect, same discipline as min-label's change probe)
+    val (e, rounds) = GraphOps.fixpoint("starContraction", init,
+        maxIters) { e =>
+      val next = GraphOps.cut(smallStar(largeStar(e)))
+      // the round's probe: any edge in exactly one of the two sets
+      // means another round (materializes `next` as a side effect)
       val changed = next.exceptAll(e).union(e.exceptAll(next))
         .limit(1).count() > 0
-      e = next
-      converged = !changed
-      iter += 1
+      (next, !changed)
     }
-    require(converged,
-      s"starContraction did not converge in $maxIters rounds — " +
-        "this bound should be ~log2(nodes); raise maxIters")
     val labels = nodes.join(
       e.select(col("src").as("id"), col("dst").as("cluster")),
       Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    (labels, iter)
+    (labels, rounds)
   }
 
   /** Integer PageRank over an undirected pair list: `iters` rounds of
@@ -657,44 +607,29 @@ object DedupOps {
     *
     * Shape per round: one equi-join (edges × ranks, on the 8-byte node
     * id) + one hash agg — identical movement pattern to one
-    * [[connectedComponents]] round, O(iters) rounds total, lineage cut
-    * per round via localCheckpoint. Isolated nodes don't appear (every
-    * node in a pair list has degree ≥ 1).
+    * [[connectedComponents]] round; a fold over `iters` rounds, each
+    * [[GraphOps.cut]]. `iters` = 0 returns every node at 10^6. Isolated
+    * nodes don't appear (every node in a pair list has degree ≥ 1).
     */
   def pageRank(pairs: DataFrame, idACol: String, idBCol: String,
-      iters: Int): DataFrame = {
-    val e = pairs.select(col(idACol).cast("long").as("src"),
-      col(idBCol).cast("long").as("dst"))
-    // symmetrize with a narrow in-row explode, not a self-union (OPT
-    // r19, guide §2.4): a union references the pair pipeline twice, and
-    // each reference is evaluated up to its last exchange (ReuseExchange
-    // dedups the exchanges themselves, but the pair-distinct final
-    // aggregate ran once per direction — d16 paid a full extra reduce
-    // pass). Same row multiset, one evaluation.
-    val sym = e.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-      .persist()
-    try {
-      val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      var ranks = deg.select(col("src").as("id"), col("deg"),
-        lit(1000000L).as("r"))
-        .localCheckpoint(eager = false)
-      for (_ <- 1 to iters) {
-        val contrib = sym
-          .join(ranks, sym("src") === ranks("id"))
-          .select(col("dst"), expr("r div deg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("in_sum"))
-        ranks = ranks.join(contrib, ranks("id") === contrib("dst"), "left")
-          .select(col("id"), col("deg"),
-            (lit(150000L) +
-              expr("(coalesce(in_sum, CAST(0 AS BIGINT)) * 17) div 20"))
-              .as("r"))
-          .localCheckpoint(eager = false)
-      }
-      ranks.select(col("id"), col("r").as("pagerank_micro"))
-    } finally sym.unpersist()
+      iters: Int): DataFrame = GraphOps.withSymmetrized(
+      pairs.select(col(idACol).cast("long").as("src"),
+        col(idBCol).cast("long").as("dst")), "src", "dst") { sym =>
+    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
+    val init = GraphOps.cut(deg.select(col("src").as("id"), col("deg"),
+      lit(1000000L).as("r")))
+    (1 to iters).foldLeft(init) { (ranks, _) =>
+      val contrib = sym
+        .join(ranks, sym("src") === ranks("id"))
+        .select(col("dst"), expr("r div deg").as("c"))
+        .groupBy("dst").agg(sum(col("c")).as("in_sum"))
+      GraphOps.cut(ranks.join(contrib, ranks("id") === contrib("dst"),
+          "left")
+        .select(col("id"), col("deg"),
+          (lit(150000L) +
+            expr("(coalesce(in_sum, CAST(0 AS BIGINT)) * 17) div 20"))
+            .as("r")))
+    }.select(col("id"), col("r").as("pagerank_micro"))
   }
 
   /** Mersenne prime 2^31-1: modulus of the Carter-Wegman hash family.
@@ -861,8 +796,8 @@ object DedupOps {
     // several chunks) collapse in the distinct; hamming is functionally
     // dependent on the pair so it dedups with it.
     //
-    // CHUNKED, SPREAD expansion (OPT r19, guide §2.5 skew): the naive
-    // explode² expands a whole bucket inside the ONE task that holds its
+    // CHUNKED, SPREAD expansion against skew: the naive explode²
+    // expands a whole bucket inside the ONE task that holds its
     // posting row — a maxChunkFreq-saturated bucket is C(10k,2) ≈ 50M
     // pairs of serial work, measured at sf1 as a 28 s single-straggler
     // wall on 72 task-seconds. Each bucket's pair space is first split

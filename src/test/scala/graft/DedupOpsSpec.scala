@@ -156,11 +156,22 @@ class DedupOpsSpec extends SparkTestBase {
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), "id_a", "id_b")
     assert(empty.count() == 0)
     // too-small iteration bound fails loudly, not silently
+    val chain6 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
       graft.operators.DedupOps.connectedComponents(
-        Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
-          .toDF("id_a", "id_b"), "id_a", "id_b", maxIters = 1)
+        chain6, "id_a", "id_b", maxIters = 1)
     }
+    // the exact bound: the fused init leaves node 6 four hops from
+    // label 1, and the fifth round confirms the fixpoint
+    val atBound = graft.operators.DedupOps.connectedComponents(
+      chain6, "id_a", "id_b", maxIters = 5).as[(Long, Long)].collect()
+    assert(atBound.toMap == (1L to 6L).map(_ -> 1L).toMap)
+    val short = intercept[IllegalArgumentException] {
+      graft.operators.DedupOps.connectedComponents(
+        chain6, "id_a", "id_b", maxIters = 4)
+    }
+    assert(short.getMessage.contains("did not converge"))
   }
 
   test("connectedComponents survives a 200-node path graph (lineage cut)") {
@@ -220,6 +231,28 @@ class DedupOpsSpec extends SparkTestBase {
     // rank mass check: total stays near N*1e6 (floor-div loss only)
     assert(got.values.sum <= 3000000L &&
       got.values.sum > 3000000L - 100L)
+  }
+
+  test("pageRank on edge-shaped inputs matches a model") {
+    import spark.implicits._
+    // driver-side integer PageRank over the symmetrized arcs (a
+    // self-pair is a loop listed twice); `iters` = 0 is the initial frame
+    def ranks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+      val arcs = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      val deg = arcs.groupBy(_._1).map { case (n, xs) => n -> xs.size }
+      (1 to iters).foldLeft(deg.map { case (n, _) => n -> 1000000L }) {
+        (r, _) => deg.map { case (n, _) =>
+          val in = arcs.collect { case (s, `n`) => r(s) / deg(s) }.sum
+          n -> (150000L + in * 17 / 20)
+        }
+      }
+    }
+    for (edges <- Seq(Seq.empty[(Long, Long)], Seq((1L, 2L)), Seq((5L, 5L)));
+         iters <- 0 to 2) {
+      val pr = DedupOps.pageRank(edges.toDF("id_a", "id_b"), "id_a", "id_b",
+        iters).as[(Long, Long)].collect().toMap
+      assert(pr == ranks(edges, iters), s"pageRank $edges iters=$iters")
+    }
   }
 
   test("shingleIndex drops shingles above the doc-frequency cap") {

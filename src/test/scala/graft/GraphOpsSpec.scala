@@ -102,6 +102,13 @@ class GraphOpsSpec extends SparkTestBase {
       GraphOps.kCore(k4chain, k = 2, maxRounds = 1).count()
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the exact bound: maxRounds counts peels, and the cascade takes 3
+    assert(GraphOps.kCore(k4chain, k = 2, maxRounds = 3)
+      .collect().map(_.getLong(0)).toSet == core2)
+    val atBound = intercept[IllegalArgumentException] {
+      GraphOps.kCore(k4chain, k = 2, maxRounds = 2).count()
+    }
+    assert(atBound.getMessage.contains("did not converge"))
   }
 
   test("labelPropagation: two triangles with a bridge, hand-unrolled") {
@@ -184,5 +191,73 @@ class GraphOpsSpec extends SparkTestBase {
     // counts sorted desc with id tiebreak (topKGlobal contract)
     val tri = rows.map(_.getLong(1))
     assert(tri.sameElements(tri.sortBy(-_)))
+  }
+
+  // Driver-side models of the iterative operators, for edge-shaped
+  // inputs. Every pair is one undirected edge; a self-pair (a, a) is a
+  // loop that lists a as its own neighbor twice, as the operators'
+  // symmetrized edge lists do.
+  private def arcs(edges: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+
+  private def modelKCore(edges: Seq[(Long, Long)], k: Int)
+      : Map[Long, Long] = {
+    val deg = arcs(edges).groupBy(_._1)
+      .map { case (n, xs) => n -> xs.size.toLong }
+    val bad = deg.filter(_._2 < k).keySet
+    if (bad.isEmpty) deg
+    else modelKCore(edges.filterNot { case (a, b) => bad(a) || bad(b) }, k)
+  }
+
+  private def modelLabelPropagation(edges: Seq[(Long, Long)],
+      rounds: Int): Map[Long, Long] = {
+    val nbrs = arcs(edges).groupBy(_._1)
+      .map { case (u, xs) => u -> xs.map(_._2) }
+    (1 to rounds).foldLeft(nbrs.map { case (u, _) => u -> u }) {
+      (labels, _) => nbrs.map { case (u, vs) =>
+        u -> vs.map(labels).groupBy(identity).toSeq
+          .map { case (l, ls) => (-ls.size, l) }.min._2
+      }
+    }
+  }
+
+  private def modelBfs(edges: Seq[(Long, Long)], sources: Set[Long],
+      rounds: Int): Map[Long, Long] = {
+    val nbrs = arcs(edges).groupBy(_._1)
+      .map { case (u, xs) => u -> xs.map(_._2).toSet }
+    (1 to rounds).foldLeft((sources.map(_ -> 0L).toMap, sources)) {
+      case ((dist, frontier), r) =>
+        val next = frontier.flatMap(nbrs.getOrElse(_, Set.empty[Long]))
+          .diff(dist.keySet)
+        (dist ++ next.map(_ -> r.toLong), next)
+    }._1
+  }
+
+  test("iterative graph operators on edge-shaped inputs match a model") {
+    import spark.implicits._
+    val inputs = Seq(
+      "empty" -> Seq.empty[(Long, Long)],
+      "one edge" -> Seq((1L, 2L)),
+      "self-pair" -> Seq((5L, 5L)))
+    for ((name, edges) <- inputs) {
+      val df = edges.toDF("a", "b")
+      for (k <- 1 to 3) {
+        val got = GraphOps.kCore(df, k)
+          .as[(Long, Long)].collect().toMap
+        assert(got == modelKCore(edges, k), s"kCore $name k=$k")
+      }
+      for (rounds <- 0 to 2) {
+        val lp = GraphOps.labelPropagation(df, rounds)
+          .as[(Long, Long)].collect().toMap
+        assert(lp == modelLabelPropagation(edges, rounds),
+          s"labelPropagation $name rounds=$rounds")
+        for (src <- Seq(Set.empty[Long], Set(1L, 5L))) {
+          val bfs = GraphOps.bfsDistances(df, src.toSeq.toDF("id"), rounds)
+            .as[(Long, Long)].collect().toMap
+          assert(bfs == modelBfs(edges, src, rounds),
+            s"bfsDistances $name sources=$src rounds=$rounds")
+        }
+      }
+    }
   }
 }

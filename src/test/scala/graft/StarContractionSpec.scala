@@ -30,6 +30,15 @@ class StarContractionSpec extends SparkTestBase {
     assert(star === pregel)
     assert(star(1L) === 1L && star(5L) === 1L && star(11L) === 10L)
     assert(star(20L) === 20L) // self-pair: own singleton component
+    // edge-shaped inputs: one round confirms each fixpoint
+    for ((edges, expected) <- Seq(
+        Seq.empty[(Long, Long)] -> Map.empty[Long, Long],
+        Seq((1L, 2L)) -> Map(1L -> 1L, 2L -> 1L),
+        Seq((5L, 5L)) -> Map(5L -> 5L))) {
+      val (star, pregel, rounds) = labelsOf(edges)
+      assert(star === expected && pregel === expected, s"pairs=$edges")
+      assert(rounds === 1, s"pairs=$edges")
+    }
   }
 
   test("randomized graphs: always identical to the min-label labels") {
@@ -62,6 +71,14 @@ class StarContractionSpec extends SparkTestBase {
     // O(log n): generous 2k+2 bound vs the 2^k min-label needs
     assert(rounds <= 2 * k + 2,
       s"expected ~log2($n)=$k rounds, got $rounds")
+    // the exact bound: `rounds` iterations suffice, one fewer fails
+    assert(rounds >= 2)
+    assert(DedupOps.starContraction(df, "id_a", "id_b",
+      maxIters = rounds)._2 === rounds)
+    val short = intercept[IllegalArgumentException] {
+      DedupOps.starContraction(df, "id_a", "id_b", maxIters = rounds - 1)
+    }
+    assert(short.getMessage.contains("did not converge"))
   }
 
   test("registry d34 equals d7 on the real corpus") {

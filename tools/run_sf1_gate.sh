@@ -4,7 +4,7 @@
 # then oracle-checks every query in DuckDB with the knobs the r13 run
 # proved out (threads/memory caps + a big-disk temp dir — the sf1
 # DuckDB pass spills; /tmp fills otherwise). Produces a
-# CORRECTNESS-equivalent log at tools/../SF1_GATE.log.
+# CORRECTNESS-equivalent log at benchdata/SF1_GATE.log (gitignored).
 #
 # Usage:  tools/run_sf1_gate.sh [--only=name1,name2]
 # Budget: ~20 min Spark side + ~75 min DuckDB side for the full
@@ -16,10 +16,11 @@ cd "$(dirname "$0")/.."
 SF1=benchdata/sf1
 OUT=/tmp/verify_sf1
 ONLY="${1:-}"
-# --only runs log to a side file: the committed SF1_GATE.log is the
-# FULL-registry artifact, and tee would truncate it (bit r15: a 1-query
-# spot-check wiped the 273-query log).
-if [ -n "$ONLY" ]; then LOG=SF1_GATE.only.log; else LOG=SF1_GATE.log; fi
+# --only runs log to a side file: SF1_GATE.log is the FULL-registry
+# log, and tee would truncate it (a 1-query spot-check would wipe it).
+mkdir -p benchdata
+if [ -n "$ONLY" ]; then LOG=benchdata/SF1_GATE.only.log
+else LOG=benchdata/SF1_GATE.log; fi
 
 if [ ! -d "$SF1" ]; then
   echo "[sf1-gate] building $SF1 (make_sf1.py)..."
